@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * {{{
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   *   // or: spark.sql.extensions=graft.expressions.GraftExtensions
-  *   spark.sql("SELECT simhash64(split(text, ' ')) FROM docs")
+  *   spark.sql("SELECT simhash60_portable(split(text, ' ')) FROM docs")
   *   spark.sql("SELECT minhash_sig(hashed_shingles(text, 5), 64) FROM docs")
   * }}}
   */
@@ -44,15 +44,12 @@ object GraftExtensions {
   /** Every native expression, by SQL name. Integer parameters arrive as
     * foldable literals (`minhash_sig(hs, 64)`). */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "simhash64" -> arity("simhash64", 1)(exprs => SimHash64Expr(exprs.head)),
     "minhash_sig" -> arity("minhash_sig", 2)(exprs =>
       MinHashSigExpr(exprs.head, intArg(exprs, 1, "minhash_sig"))),
     "hashed_shingles" -> arity("hashed_shingles", 2)(exprs =>
       HashedShinglesExpr(exprs.head, intArg(exprs, 1, "hashed_shingles"))),
     "word_shingle_hash" -> arity("word_shingle_hash", 2)(exprs =>
       WordShingleHashExpr(exprs.head, intArg(exprs, 1, "word_shingle_hash"))),
-    "span_hash" -> arity("span_hash", 2)(exprs =>
-      SpanHashExpr(exprs.head, intArg(exprs, 1, "span_hash"))),
     "jaccard_sorted" -> arity("jaccard_sorted", 2)(exprs =>
       JaccardSortedExpr(exprs(0), exprs(1))),
     "kmv_sketch" -> arity("kmv_sketch", 2)(exprs =>
@@ -191,10 +188,14 @@ object GraftExtensions {
     }
   }
 
-  /** Register on an already-built session (e.g. the driver-owned one). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an already-built session (e.g. the driver-owned one).
+    * Idempotent: a name the session already knows (an earlier call, or
+    * the extension hook) is left as it is rather than replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

@@ -10,19 +10,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * engine-PORTABLE token hash: the top 60 bits of md5 (the first 15 hex
   * digits parsed base-16).
   *
-  * [[SimHash64Expr]] is the production default (xxhash64 is ~10× cheaper
-  * per token), but xxhash64 exists only inside Spark — an external oracle
-  * cannot restate it. md5 is universal: DuckDB states the identical hash as
+  * xxhash64 exists only inside Spark — an external oracle cannot restate
+  * it. md5 is universal: DuckDB states the identical hash as
   * `('0x' || substring(md5(t), 1, 15))::BIGINT` and Spark's built-in
   * surface as `conv(substring(md5(binary(t)), 1, 15), 16, 10)`, so a
-  * simhash pipeline in oracle-compat mode is checkable bit-for-bit against
-  * a second engine (the q28/q38 correctness rows). 60 bits keep the value
-  * inside a signed 64-bit long with no unsigned edge cases anywhere.
+  * simhash pipeline is checkable bit-for-bit against a second engine (the
+  * q28/q38 correctness rows). 60 bits keep the value inside a signed
+  * 64-bit long with no unsigned edge cases anywhere.
   *
-  * Same single-pass shape as [[SimHash64Expr]]: bit b of the result is the
-  * sign of Σ_tokens ±1 by bit b of hash60(token). Null tokens are skipped
-  * (md5 of null is null — no vote), unlike the xxhash64 variant where a
-  * null hashes to the seed.
+  * Single pass: bit b of the result is the sign of Σ_tokens ±1 by bit b of
+  * hash60(token). Null tokens are skipped (md5 of null is null — no vote).
   */
 case class SimHashPortableExpr(child: Expression) extends UnaryExpression {
 

@@ -22,8 +22,7 @@ import org.apache.spark.sql.types._
   * UTF8String, a 32-char hex string, and a base-16 parse PER WINDOW; this
   * kernel allocates nothing per window beyond the digest's own state.
   *
-  * [[SpanHashExpr]] (xxhash64) is still the cheapest production kernel;
-  * this one is for pipelines that must stay bit-portable to a second
+  * The md5 hash keeps span-dedup pipelines bit-portable to a second
   * engine (the q74/q90 span-dedup correctness seam).
   *
   * Documents shorter than n tokens yield an empty array, matching

@@ -58,9 +58,9 @@ object Chunking {
   // near-identical blob revisions dedup at chunk granularity when
   // whole-doc hashing sees two distinct documents. Expected chunk
   // length ~= modulus chars. The boundary predicate is the
-  // oracle-restatable Sketches.hash60 of the w-gram; production swaps
-  // a true rolling hash (Rabin-Karp, O(1)/position) behind the same
-  // residue rule — the hash60Fast seam precedent. No min/max clamps:
+  // oracle-restatable Sketches.hash60 of the w-gram; a true rolling
+  // hash (Rabin-Karp, O(1)/position) could sit behind the same residue
+  // rule. No min/max clamps:
   // the plain residue rule keeps every position's verdict independent,
   // making chunking ONE ARRAY EXPRESSION per row (codegen projection,
   // no shuffle until the caller aggregates).

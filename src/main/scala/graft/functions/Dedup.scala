@@ -327,8 +327,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col(s"${idCol}_a"), col(s"${idCol}_b"), col("jaccard"))
       // materialize the pair list (tiny next to the corpus), then drop
-      // the heavyweight shingle cache — the ProbeMinhash pattern moved
-      // into the library so callers inherit the cleanup
+      // the heavyweight shingle cache, here in the library so every
+      // caller inherits the cleanup
       .localCheckpoint()
     signed.unpersist(blocking = true)
     result
@@ -385,30 +385,11 @@ object Dedup {
     result
   }
 
-  /** 64-bit SimHash over a token array — native single-pass Catalyst
-    * expression (see `graft.expressions.SimHash64Expr`). */
-  def simhash64(toks: Column): Column =
-    graft.expressions.SimHash64Expr.simhash64(toks)
-
-  /** Reference formulation with built-in higher-order functions: identical
-    * semantics to [[simhash64]] (pinned by DedupSpec equivalence test) but
-    * O(64·n) lambda traversals per row — kept as the executable spec the
-    * native expression is verified against. */
-  def simhash64Hof(toks: Column): Column = {
-    val bits = transform(sequence(lit(0), lit(63)), b => {
-      val vote = aggregate(toks, lit(0L), (acc, t) =>
-        acc + when((call_function("shiftright", xxhash64(t), b)
-          .bitwiseAND(lit(1L))) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))
-    })
-    aggregate(bits, lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** Portable 60-bit SimHash (md5-derived token hash) — the oracle-compat
-    * mode of [[simhash64]]: bit-identical restatement exists in DuckDB SQL,
-    * so simhash pipelines built on it get full hash-match correctness rows
-    * (q28/q38). Production default stays [[simhash64]] (xxhash64 is much
-    * cheaper per token); both run the same single-pass native kernel shape. */
+  /** 60-bit SimHash over a token array, with an md5-derived token hash —
+    * native single-pass Catalyst expression (see
+    * `graft.expressions.SimHashPortableExpr`). A DuckDB oracle restates it
+    * bit for bit, so simhash pipelines built on it get full hash-match
+    * correctness rows (q28/q38). */
   def simhash60Portable(toks: Column): Column =
     graft.expressions.SimHashPortableExpr.simhash60Portable(toks)
 

@@ -105,54 +105,13 @@ object Similarity {
       .toSeq
 
   /** Trained IVF centroids: Lloyd (k-means) iterations over a bounded,
-    * deterministic hash-ordered sample, initialized from the hash-sampled
-    * centroids [[ivfCentroids]] would return. The sample collect is the only
-    * driver-side data movement (sampleN rows, not the corpus), which is the
-    * standard coarse-quantizer training shape — FAISS trains IVF on a sample
-    * too. Empty cells keep their previous centroid; ties break to the lower
-    * centroid index, so training is fully deterministic. */
-  def ivfCentroidsTrained(df: DataFrame, vecCol: String, idCol: String,
-                          k: Int, iters: Int = 5,
-                          sampleN: Int = 4096): Seq[Seq[Double]] = {
-    val sample = df.select(col(idCol), col(vecCol))
-      .orderBy(pmod(xxhash64(col(idCol)), lit(1000003L)), col(idCol))
-      .limit(sampleN)
-      .collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    if (sample.isEmpty) return Seq.empty
-    val dim = sample.head.length
-    var centroids = sample.take(k).map(_.clone)
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      sample.foreach { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < centroids.length) {
-          var d = 0.0; var i = 0
-          while (i < dim) { val t = v(i) - centroids(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
-        counts(best) += 1
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old
-        else Array.tabulate(dim)(i => sums(c)(i) / counts(c))
-      }
-    }
-    centroids.map(_.toSeq).toSeq
-  }
-
-  /** Oracle-portable Lloyd training: same algorithm as
-    * [[ivfCentroidsTrained]], but every arithmetic step is restatable in
-    * ANSI-ish SQL so an external engine reproduces the centroids
-    * BIT-FOR-BIT (the q42 correctness row):
+    * deterministic md5-ordered driver sample — FAISS trains IVF on a
+    * sample too. Every arithmetic step is restatable in ANSI-ish SQL, so
+    * an external engine reproduces the centroids BIT-FOR-BIT (the q42
+    * correctness row):
     *
     *   - the bounded sample is ordered by (md5(id), id) — portable and
-    *     unbiased, vs the xxhash64 order of the production variant;
+    *     unbiased;
     *   - iteration runs in ascending-id order, so per-cell mean sums
     *     accumulate in the same sequence as a SQL `list(v ORDER BY id)` +
     *     sequential `list_sum`;
@@ -162,9 +121,8 @@ object Similarity {
     *   - distance ties break to the lowest centroid index (strict `<`),
     *     matching `ORDER BY dist, cell LIMIT 1`.
     *
-    * Training quality is unaffected (quantization at 1e-6 is far below
-    * embedding noise); the production variant remains the default where no
-    * external restatement is needed. */
+    * Quantization at 1e-6 is far below embedding noise, so training
+    * quality is unaffected. Empty cells keep their previous centroid. */
   def ivfCentroidsTrainedPortable(df: DataFrame, vecCol: String, idCol: String,
                                   k: Int, iters: Int = 3,
                                   sampleN: Int = 4096): Seq[Seq[Double]] = {
@@ -220,49 +178,6 @@ object Similarity {
       }
     }
     centroids.map(_.toSeq).toSeq
-  }
-
-  /** DISTRIBUTED Lloyd training — the sample-free 100 TB path: every
-    * iteration assigns all rows to their nearest centroid with the same
-    * codegen'd [[ivfCell]] expression the query path uses, then reduces
-    * per-cell dimension means with ordinary aggregates (64 `avg`s combine
-    * map-side; the shuffle carries k×dim doubles, nothing else). Only the
-    * k×dim centroid matrix ever reaches the driver. Use this when the
-    * corpus is too skewed for a bounded sample to see every mode;
-    * [[ivfCentroidsTrained]] (driver sample) is cheaper when a sample
-    * suffices, and the portable variant serves oracle parity. Mean
-    * accumulation order is partition-dependent, so training is
-    * deterministic in structure but not bit-reproducible across cluster
-    * layouts — acceptable for a production quantizer, not for an oracle. */
-  def ivfCentroidsTrainedDistributed(df: DataFrame, vecCol: String,
-                                     idCol: String, k: Int,
-                                     iters: Int = 3): Seq[Seq[Double]] = {
-    // init from the hash-ordered k rows (ivfCentroids) — id order would
-    // clump every initial centroid into whichever mode was ingested first,
-    // exactly the failure case this sample-free path exists for
-    var centroids = ivfCentroids(df, vecCol, idCol, k)
-    if (centroids.isEmpty) return Seq.empty
-    val dim = centroids.head.length
-    // dirty rows (null / wrong-dimension vectors) are excluded from
-    // training rather than crashing it; the query path filters them too
-    val clean = df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-    for (_ <- 0 until iters) {
-      val dims = (0 until dim).map(i =>
-        avg(element_at(col(vecCol), i + 1).cast("double")).as(s"d$i"))
-      val means = clean
-        .withColumn("_graft_cell", ivfCell(col(vecCol), centroids))
-        .groupBy(col("_graft_cell")).agg(dims.head, dims.tail: _*)
-        .collect()
-        .filterNot(_.isNullAt(0))
-        .map(r => r.getInt(0) -> (0 until dim).map(i => r.getDouble(i + 1)))
-        .toMap
-      // empty cells keep their previous centroid (same rule as the
-      // sample-based trainers); cells are 1-based
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        means.getOrElse(c + 1, old)
-      }
-    }
-    centroids
   }
 
   /** Mean squared distance of each sampled vector to its nearest centroid —

@@ -42,22 +42,6 @@ object Sketches {
   def hash60Sql(t: Column): Column =
     conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
 
-  /** Production 60-bit value hash: xxhash64 folded into the same
-    * non-negative [0, 2^60) space by an unsigned top-bits shift, so every
-    * consumer of the [[hash60]] seam ([[kmvEstimate]]'s `Hash60Width`
-    * uniformity math, HLL register math) works unchanged. ~10× cheaper per
-    * value than the md5 chain and whole-stage-codegen'd, but NOT
-    * restatable by an external engine — use [[hash60]] where a DuckDB
-    * oracle must replay the hash.
-    *
-    * Nulls are passed through as null (NOT hashed): Spark's xxhash64 skips
-    * null children and returns the seed, which would make a null column
-    * contribute one phantom distinct value — the md5 path yields null,
-    * which the sketch aggregates skip, and the two paths must agree on NDV
-    * (pinned by TableStatsSpec's null-column case). */
-  def hash60Fast(t: Column): Column =
-    when(t.isNotNull, shiftrightunsigned(xxhash64(t.cast("string")), 4))
-
   /** Aggregate: the sorted array of the `k` smallest distinct values of a
     * bigint hash column. Partial state is ≤ k longs — map-side combined.
     *

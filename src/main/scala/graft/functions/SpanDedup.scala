@@ -58,27 +58,37 @@ object SpanDedup {
   /** Per-document duplicated-span report: `(id, n_spans, n_dup_spans,
     * dup_span_frac, keep)`. Documents with fewer than n tokens have zero
     * windows and are kept (frac 0). `keep` = dup_span_frac <= maxDupFrac.
-    * This is the oracle-portable (md5) path; [[spanReportFast]] is the
-    * production kernel. */
+    * Spans hash with the oracle-portable md5 kernel ([[spanHashes]]). */
   def spanReport(df: DataFrame, idCol: String, textCol: String, n: Int,
-                 maxDupFrac: Double = 0.5): DataFrame =
-    reportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol), explode(spanHashes(col("_toks"), n)).as("h")),
-      maxDupFrac)
-
-  /** Production span report: the fused single-pass xxhash64 kernel
-    * (`span_hash`, graft.expressions.SpanHashExpr) instead of the md5 +
-    * hex-decode-per-window portable path — same report, pinned equal by
-    * SpanHashExprSpec. */
-  def spanReportFast(df: DataFrame, idCol: String, textCol: String, n: Int,
-                     maxDupFrac: Double = 0.5): DataFrame =
-    reportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol),
-          explode(graft.expressions.SpanHashExpr.spanHashes(col("_toks"), n))
-            .as("h")),
-      maxDupFrac)
+                 maxDupFrac: Double = 0.5): DataFrame = {
+    val spans = df
+      .select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
+      .select(col(idCol), explode(spanHashes(col("_toks"), n)).as("h"))
+    // (doc, hash) pre-aggregation is the map-side combine: repeated spans
+    // within one document collapse before the hash-keyed shuffle. NOT
+    // persisted: both consumers (totals, join) sit on the identical
+    // Exchange(id, h) subplan, which AQE reuses (ReusedExchange) — the
+    // explode runs once; a persist here only adds materialization cost
+    // (measured +0.4s at sf0.1)
+    val perDoc = spans.groupBy(col(idCol), col("h"))
+      .agg(count(lit(1)).as("cnt"))
+    val totals = perDoc.groupBy(col("h")).agg(sum(col("cnt")).as("total"))
+    val agg = perDoc.join(totals, "h")
+      .groupBy(col(idCol))
+      .agg(sum(col("cnt")).as("n_spans"),
+        sum(when(col("total") >= 2, col("cnt")).otherwise(lit(0L)))
+          .as("n_dup_spans"))
+    // short documents produce no windows — restore them via a left join
+    // from the (column-pruned) id scan so every input row reports
+    df.select(col(idCol)).join(agg, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+        coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
+      .withColumn("dup_span_frac",
+        col("n_dup_spans").cast("double") /
+          greatest(col("n_spans"), lit(1L)).cast("double"))
+      .withColumn("keep", col("dup_span_frac") <= lit(maxDupFrac))
+  }
 
   /** Winnowed fingerprint selection (Schleimer, Wilkerson & Aiken 2003 —
     * the MOSS algorithm): from a document's span-hash sequence, keep the
@@ -113,33 +123,11 @@ object SpanDedup {
     * winnowed subset — the exchange carries ~2/(w+1) of the span
     * volume. */
   def winnowReport(df: DataFrame, idCol: String, textCol: String, n: Int,
-                   w: Int): DataFrame =
-    winnowReportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol), spanHashes(col("_toks"), n).as("_spans"))
-        .select(col(idCol),
-          explode(winnowFromSpans(col("_spans"), w)).as("fp")))
-
-  /** Production winnow report: the fused single-pass xxhash64 span kernel
-    * (`span_hash`) instead of the md5 portable path. NOTE the two paths
-    * are NOT row-identical: winnowing keeps each window's MINIMUM hash, so
-    * the selected fingerprint subset depends on the hash's value order and
-    * exact counts differ slightly between kernels. What both preserve —
-    * pinned by SpanDedupSpec — are the MOSS invariants: the w+n−1 sharing
-    * guarantee, exact clones fully shared, disjoint docs share nothing,
-    * the ~2/(w+1) density bound, and zero fingerprints below n tokens. */
-  def winnowReportFast(df: DataFrame, idCol: String, textCol: String, n: Int,
-                       w: Int): DataFrame =
-    winnowReportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol),
-          graft.expressions.SpanHashExpr.spanHashes(col("_toks"), n)
-            .as("_spans"))
-        .select(col(idCol),
-          explode(winnowFromSpans(col("_spans"), w)).as("fp")))
-
-  private def winnowReportFrom(df: DataFrame, idCol: String,
-                               fps: DataFrame): DataFrame = {
+                   w: Int): DataFrame = {
+    val fps = df
+      .select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
+      .select(col(idCol), spanHashes(col("_toks"), n).as("_spans"))
+      .select(col(idCol), explode(winnowFromSpans(col("_spans"), w)).as("fp"))
     // fps feeds two branches (frequency derivation + the sharing join).
     // No materialization: a per-(id, fp) aggregation parks the expensive
     // tokenize/hash/winnow/explode pipeline below ONE Exchange((id, fp)),
@@ -248,33 +236,5 @@ object SpanDedup {
             transform(col("_toks"), (t, i) => struct(t.as("t"), i.as("i"))),
             s => !array_contains(col("_cov"), s("i"))),
           s => s("t"))).as("clean_text"))
-  }
-
-  private def reportFrom(df: DataFrame, idCol: String, spans: DataFrame,
-                         maxDupFrac: Double): DataFrame = {
-    // (doc, hash) pre-aggregation is the map-side combine: repeated spans
-    // within one document collapse before the hash-keyed shuffle. NOT
-    // persisted: both consumers (totals, join) sit on the identical
-    // Exchange(id, h) subplan, which AQE reuses (ReusedExchange) — the
-    // explode runs once; a persist here only adds materialization cost
-    // (measured +0.4s at sf0.1)
-    val perDoc = spans.groupBy(col(idCol), col("h"))
-      .agg(count(lit(1)).as("cnt"))
-    val totals = perDoc.groupBy(col("h")).agg(sum(col("cnt")).as("total"))
-    val agg = perDoc.join(totals, "h")
-      .groupBy(col(idCol))
-      .agg(sum(col("cnt")).as("n_spans"),
-        sum(when(col("total") >= 2, col("cnt")).otherwise(lit(0L)))
-          .as("n_dup_spans"))
-    // short documents produce no windows — restore them via a left join
-    // from the (column-pruned) id scan so every input row reports
-    df.select(col(idCol)).join(agg, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
-      .withColumn("dup_span_frac",
-        col("n_dup_spans").cast("double") /
-          greatest(col("n_spans"), lit(1L)).cast("double"))
-      .withColumn("keep", col("dup_span_frac") <= lit(maxDupFrac))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Frame-level VIDEO operators on the in-JDK multi-frame container
   * (animated GIF — `javax.imageio` reads and writes frame sequences
-  * pixel-exactly for ≤ 256-color content, probed by ProbeGif): a video
+  * pixel-exactly for ≤ 256-color content, pinned by VideoFramesSpec): a video
   * is fingerprinted as the dHashes of `k` EVENLY-SAMPLED frames, and
   * two videos near-duplicate when at least `minMatches` sampled
   * positions agree within a hamming fence — the standard

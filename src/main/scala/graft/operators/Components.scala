@@ -59,12 +59,13 @@ object Components {
     var converged = e.isEmpty
     var round = 0
     while (!converged && round < maxRounds) {
-      // ONE driver action per round: the tagged groupBy that dedups the
-      // round's output (smallStar's trailing set semantics) ALSO records,
-      // per edge, whether it came from the new round (_mx = 1) and/or the
-      // previous set (_mn = 0) — so the exact set-equality convergence
-      // check is a filter over the already-checkpointed frame instead of
-      // a second union+groupBy job re-shuffling both edge sets
+      // No shuffle job for the convergence check: the tagged groupBy that
+      // dedups the round's output (smallStar's trailing set semantics)
+      // ALSO records, per edge, whether it came from the new round
+      // (_mx = 1) and/or the previous set (_mn = 0) — so the exact
+      // set-equality check is a filter over the already-checkpointed frame
+      // (its own small job) instead of a second union+groupBy job
+      // re-shuffling both edge sets
       val tagged = smallStarRaw(largeStar(e)).withColumn("_t", lit(1))
         .union(e.select(col("u"), col("v"), lit(0).as("_t")))
         .groupBy("u", "v")

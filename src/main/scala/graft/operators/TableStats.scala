@@ -25,20 +25,37 @@ import graft.functions.Sketches
   */
 object TableStats {
 
-  /** Oracle-portable stats pass (md5 NDV hash — restatable in SQL, the
-    * q120 seam). Production callers should prefer [[columnStatsFast]]. */
-  def columnStats(df: DataFrame, cols: Seq[String], k: Int = 256): DataFrame =
-    statsFrom(df, cols, k, c => Sketches.hash60(col(c).cast("string")))
-
-  /** Production stats pass: same single-scan report on the xxhash64
-    * `hash60Fast` seam — whole-stage-codegen'd, ~10× cheaper per value
-    * than the md5 chain. NDV estimates agree with [[columnStats]] within
-    * KMV error (both hashes are uniform over the same 2^60 space; exact
-    * below k — pinned by TableStatsSpec); bounds and counts are
-    * hash-independent and identical. */
-  def columnStatsFast(df: DataFrame, cols: Seq[String], k: Int = 256)
-      : DataFrame =
-    statsFrom(df, cols, k, c => Sketches.hash60Fast(col(c).cast("string")))
+  /** The stats pass (md5 NDV hash — restatable in SQL, the q120 seam). */
+  def columnStats(df: DataFrame, cols: Seq[String], k: Int = 256)
+      : DataFrame = {
+    require(cols.nonEmpty, "columnStats: need at least one column")
+    // pre-project every hash into the codegen'd SELECT so the sketch
+    // agg's child is a plain field read rather than an md5 expression
+    // re-evaluated inside the (object) aggregation operator
+    val projected = df.select(
+      cols.map(col) ++ cols.map(c =>
+        Sketches.hash60(col(c).cast("string")).as(s"_graft_h_$c")): _*)
+    val aggs =
+      count(lit(1)).as("_graft_n") +:
+        cols.flatMap { c =>
+          Seq(
+            count(col(c)).as(s"_graft_nn_$c"),
+            Sketches.kmvSketch(col(s"_graft_h_$c"), k).as(s"_graft_sk_$c"),
+            min(col(c)).as(s"_graft_min_$c"),
+            max(col(c)).as(s"_graft_max_$c"))
+        }
+    val one = projected.agg(aggs.head, aggs.tail: _*)
+    one.select(explode(array(cols.map { c =>
+        struct(
+          lit(c).as("column_name"),
+          col("_graft_n").as("n_rows"),
+          (col("_graft_n") - col(s"_graft_nn_$c")).as("n_nulls"),
+          Sketches.kmvEstimate(col(s"_graft_sk_$c"), k).as("ndv_est"),
+          col(s"_graft_min_$c").cast("string").as("min_val"),
+          col(s"_graft_max_$c").cast("string").as("max_val"))
+      }: _*)).as("_graft_s"))
+      .select(col("_graft_s.*"))
+  }
 
   /** Equi-width histogram of a numeric column — the selectivity feed a
     * cost-based optimizer adds on top of [[columnStats]]' bounds/NDV:
@@ -132,36 +149,5 @@ object TableStats {
     import spark.implicits._
     rows.toDF("table_path", "n_files", "total_bytes", "avg_bytes",
       "min_bytes", "max_bytes", "n_small_files")
-  }
-
-  private def statsFrom(df: DataFrame, cols: Seq[String], k: Int,
-                        hash: String => org.apache.spark.sql.Column)
-      : DataFrame = {
-    require(cols.nonEmpty, "columnStats: need at least one column")
-    // pre-project every hash into the codegen'd SELECT so the sketch
-    // agg's child is a plain field read rather than an md5 expression
-    // re-evaluated inside the (object) aggregation operator
-    val projected = df.select(
-      cols.map(col) ++ cols.map(c => hash(c).as(s"_graft_h_$c")): _*)
-    val aggs =
-      count(lit(1)).as("_graft_n") +:
-        cols.flatMap { c =>
-          Seq(
-            count(col(c)).as(s"_graft_nn_$c"),
-            Sketches.kmvSketch(col(s"_graft_h_$c"), k).as(s"_graft_sk_$c"),
-            min(col(c)).as(s"_graft_min_$c"),
-            max(col(c)).as(s"_graft_max_$c"))
-        }
-    val one = projected.agg(aggs.head, aggs.tail: _*)
-    one.select(explode(array(cols.map { c =>
-        struct(
-          lit(c).as("column_name"),
-          col("_graft_n").as("n_rows"),
-          (col("_graft_n") - col(s"_graft_nn_$c")).as("n_nulls"),
-          Sketches.kmvEstimate(col(s"_graft_sk_$c"), k).as("ndv_est"),
-          col(s"_graft_min_$c").cast("string").as("min_val"),
-          col(s"_graft_max_$c").cast("string").as("max_val"))
-      }: _*)).as("_graft_s"))
-      .select(col("_graft_s.*"))
   }
 }

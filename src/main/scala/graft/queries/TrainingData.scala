@@ -81,8 +81,7 @@ object TrainingData {
 
   /** Portable-hash simhash (md5-derived 60-bit token hash): the DuckDB
     * oracle restates the identical hash, so this row is fully
-    * hash-matched. The xxhash64 production kernel (Dedup.simhash64) stays
-    * pinned against its HOF spec in DedupSpec. */
+    * hash-matched. */
   def simhashQ(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
       .select(col("doc_id"),

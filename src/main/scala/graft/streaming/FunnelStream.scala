@@ -101,7 +101,9 @@ object FunnelStream {
         def qualifies(e: org.apache.spark.sql.Column)
             : org.apache.spark.sql.Column = {
           val isStep = e.getField("_tp") === lit(step)
-          if (i == 0) isStep
+          // a null-ts event sorts FIRST in the array: it must not
+          // qualify, or it would mask the user's valid step-1 events
+          if (i == 0) isStep && e.getField("_ts").isNotNull
           else {
             val prev = col(cols(i - 1))
             // a null prev (step i−1 incomplete) nulls the predicate —

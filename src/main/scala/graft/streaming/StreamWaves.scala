@@ -37,10 +37,12 @@ object StreamWaves {
     * `partitionBy` wave into a sibling temp dir, then moved into `src`):
     * the per-wave coalesce(1) jobs this replaces serialized N scans of
     * the base frame plus N single-task writes behind N job submissions.
-    * File CONTENT is byte-identical to the per-wave path: a per-wave
-    * `monotonically_increasing_id` captures each wave frame's partition-
-    * order row sequence (exactly the order coalesce(1) concatenates),
-    * and the staged partition sorts by it before writing. */
+    * Each staged file holds the same ROW SET as the per-wave path; row
+    * order is best-effort: a per-wave `monotonically_increasing_id`
+    * captures each wave frame's partition-order row sequence and the
+    * staged partition sorts by it before writing, which matches what
+    * coalesce(1) concatenates unless a shuffle inside a wave's plan
+    * partitions differently between the two plans. */
   private val lastMtime = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Next staged-file mtime: recent enough that FileStreamSource's

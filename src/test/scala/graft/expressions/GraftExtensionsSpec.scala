@@ -1,5 +1,7 @@
 package graft.expressions
 
+import org.apache.spark.sql.functions.{lit, typedLit}
+
 import graft.SparkSpec
 
 /** SQL-surface completeness: every native expression/aggregate is
@@ -9,6 +11,36 @@ import graft.SparkSpec
   * resolve, type-check, and execute.) */
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
+
+  test("registered SQL functions evaluate (extensions hook)") {
+    GraftExtensions.register(spark)
+    val out = spark.sql(
+      "SELECT simhash60_portable(array('a','b')) = " +
+      "simhash60_portable(array('a','b')) AS eq, " +
+      "simhash60_portable(array('a','b')) <> " +
+      "simhash60_portable(array('x','y','z')) AS ne")
+      .as[(Boolean, Boolean)].head()
+    assert(out == ((true, true)))
+    // the whole native-expression surface is SQL-callable and agrees with
+    // the Column-level entry points
+    val sql = spark.sql(
+      """SELECT
+        | minhash_sig(hashed_shingles('hello world docs', 5), 16) AS sig,
+        | word_shingle_hash(array('a','b','c','d'), 3) AS ws,
+        | jaccard_sorted(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
+        | dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d""".stripMargin)
+      .collect().head
+    val viaColumns = spark.range(1).select(
+        graft.functions.Dedup.minhashSignatureFromHashes(
+          graft.functions.Dedup.hashedCharShingles(lit("hello world docs"), 5), 16).as("sig"),
+        graft.functions.Dedup.hashedWordShingles(
+          typedLit(Seq("a", "b", "c", "d")), 3).as("ws"))
+      .collect().head
+    assert(sql.getSeq[Long](0) == viaColumns.getSeq[Long](0))
+    assert(sql.getSeq[Long](1) == viaColumns.getSeq[Long](1))
+    assert(sql.getDouble(2) == 0.5)
+    assert(sql.getDouble(3) == 11.0)
+  }
 
   test("round-13 registrations resolve and execute from SQL: hash60, " +
        "span_hash60, bpe_token_count, bpe_segments, quantile_sketch, " +
@@ -87,5 +119,21 @@ class GraftExtensionsSpec extends SparkSpec {
       spark.sql("SELECT unigram_apply('a', 'not json at all')").collect()
     }
     assert(notJson.getMessage.contains("unigram_apply"), notJson.getMessage)
+  }
+
+  test("register is idempotent: a second call on the same session " +
+       "replaces nothing and every function still resolves") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def infos() = GraftExtensions.functions.map { case (name, _) =>
+      registry.lookupFunction(FunctionIdentifier(name))
+        .getOrElse(fail(s"$name is not registered"))
+    }
+    GraftExtensions.register(spark)
+    val first = infos()
+    GraftExtensions.register(spark)
+    assert(infos().zip(first).forall { case (a, b) => a eq b })
+    val h = spark.sql("SELECT hash60('abc')").head().getLong(0)
+    assert(h >= 0L && h < (1L << 60))
   }
 }

@@ -65,7 +65,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash: identical token arrays hash identically, near texts are close") {
     val sims = corpus.toDF("id", "text")
-      .select(Dedup.simhash64(TextAnalysis.tokens(lower($"text"))).as("s"))
+      .select(Dedup.simhash60Portable(TextAnalysis.tokens(lower($"text"))).as("s"))
       .as[Long].collect()
     assert(sims(0) == sims(1))
     val hammingNear = java.lang.Long.bitCount(sims(0) ^ sims(2))
@@ -75,8 +75,10 @@ class DedupSpec extends SparkSpec {
 
   test("simhashNearDups pairs exact dups at hamming 0") {
     val df = corpus.toDF("doc_id", "text")
-      .select($"doc_id", Dedup.simhash64(TextAnalysis.tokens(lower($"text"))).as("sh"))
-    val out = Dedup.simhashNearDups(df, "doc_id", "sh", maxDist = 3)
+      .select($"doc_id",
+        Dedup.simhash60Portable(TextAnalysis.tokens(lower($"text"))).as("sh"))
+    val out = Dedup.simhashNearDups(df, "doc_id", "sh", maxDist = 3,
+        simBits = 60)
       .select("doc_id_a", "doc_id_b", "hamming")
       .as[(Long, Long, Int)].collect().toSet
     assert(out.exists { case (a, b, h) => a == 1L && b == 2L && h == 0 })

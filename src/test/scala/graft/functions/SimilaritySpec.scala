@@ -116,8 +116,10 @@ class SimilaritySpec extends SparkSpec {
     }
     val df = data.toDF("id", "v")
     val untrained = Similarity.ivfCentroids(df, "v", "id", 4)
-    val trained = Similarity.ivfCentroidsTrained(df, "v", "id", 4, iters = 5)
-    assert(trained == Similarity.ivfCentroidsTrained(df, "v", "id", 4, iters = 5))
+    val trained =
+      Similarity.ivfCentroidsTrainedPortable(df, "v", "id", 4, iters = 5)
+    assert(trained ==
+      Similarity.ivfCentroidsTrainedPortable(df, "v", "id", 4, iters = 5))
     val vecs = data.map(_._2.map(_.toDouble))
     val errU = Similarity.quantizationError(vecs, untrained)
     val errT = Similarity.quantizationError(vecs, trained)
@@ -183,30 +185,6 @@ class SimilaritySpec extends SparkSpec {
           lit(1e-12)) >= 0.995)
       .select("vec_id_a", "vec_id_b").as[(Long, Long)].collect().toSet
     assert(blocked == allPairs)
-  }
-
-  test("distributed Lloyd training clusters without a driver-side sample") {
-    val rnd = new scala.util.Random(53)
-    val data = (0 until 240).map { i =>
-      val base = Seq(
-        Seq(4.0f, 0.0f, 0.0f), Seq(-4.0f, 0.0f, 0.0f),
-        Seq(0.0f, 4.0f, 0.0f), Seq(0.0f, -4.0f, 0.0f))(i % 4)
-      (i.toLong, base.map(_ + (rnd.nextFloat() - 0.5f) * 0.2f))
-    }
-    val df = data.toDF("id", "v").repartition(6)
-    val trained = Similarity.ivfCentroidsTrainedDistributed(df, "v", "id", 4)
-    assert(trained.size == 4 && trained.forall(_.size == 3))
-    // distributed reduction reaches the same quality as driver-side Lloyd
-    val vecs = data.map(_._2.map(_.toDouble))
-    val sampleTrained = Similarity.ivfCentroidsTrained(df, "v", "id", 4)
-    val err = Similarity.quantizationError(vecs, trained)
-    assert(err <= Similarity.quantizationError(vecs, sampleTrained) * 1.1)
-    // and 1-probe search over its cells still finds the right cluster
-    val brute = Similarity.bruteForceTopK(df, "v", "id", Seq(4.0, 0.0, 0.0), 10)
-      .select("id").as[Long].collect().toSet
-    val ivf = Similarity.ivfTopK(df, "v", "id", Seq(4.0, 0.0, 0.0), 10,
-      trained, nProbe = 1).select("id").as[Long].collect().toSet
-    assert(ivf == brute)
   }
 
   test("cosineNearDups finds identical pairs within blocks only") {

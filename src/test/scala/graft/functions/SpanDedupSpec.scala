@@ -147,11 +147,8 @@ class SpanDedupSpec extends SparkSpec {
     assert(rep(3L)._2 == 0L)
   }
 
-  test("winnowReportFast (fused xxhash64 kernel) preserves the MOSS " +
-       "invariants of the portable report") {
-    // winnowing keeps each window's MIN hash, so the selected fingerprint
-    // SUBSET is hash-order-dependent and the two kernels' counts may
-    // differ slightly — what must agree are the structural invariants
+  test("winnowReport preserves the MOSS invariants: clones fully shared, " +
+       "disjoint docs share nothing, sub-n and null docs report zero") {
     val docs = Seq(
       (1L, (1 to 40).map(i => s"tok${i % 13}").mkString(" ")),
       (2L, (1 to 40).map(i => s"tok${i % 13}").mkString(" ")), // clone of 1
@@ -159,21 +156,18 @@ class SpanDedupSpec extends SparkSpec {
       (4L, "short doc"), // fewer than n tokens: zero fingerprints
       (5L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    for (rep <- Seq(
-        SpanDedup.winnowReport(docs, "doc_id", "text", n = 8, w = 4),
-        SpanDedup.winnowReportFast(docs, "doc_id", "text", n = 8, w = 4))) {
-      val m = rep.select($"doc_id", $"n_fps", $"n_shared_fps")
-        .as[(Long, Long, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3)).toMap
-      assert(m.keySet == Set(1L, 2L, 3L, 4L, 5L))
-      // exact clones: every fingerprint shared, and identical text means
-      // identical fingerprint sets regardless of kernel
-      assert(m(1L)._1 > 0 && m(1L) == m(2L) && m(1L)._2 == m(1L)._1)
-      // disjoint doc shares nothing; winnowed set is a strict subset
-      assert(m(3L)._2 == 0L && m(3L)._1 > 0 && m(3L)._1 < 60 - 8 + 1)
-      // sub-n and null docs report zero, not a dropped row
-      assert(m(4L) == ((0L, 0L)) && m(5L) == ((0L, 0L)))
-    }
+    val m = SpanDedup.winnowReport(docs, "doc_id", "text", n = 8, w = 4)
+      .select($"doc_id", $"n_fps", $"n_shared_fps")
+      .as[(Long, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(m.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    // exact clones: every fingerprint shared, and identical text means
+    // identical fingerprint sets
+    assert(m(1L)._1 > 0 && m(1L) == m(2L) && m(1L)._2 == m(1L)._1)
+    // disjoint doc shares nothing; winnowed set is a strict subset
+    assert(m(3L)._2 == 0L && m(3L)._1 > 0 && m(3L)._1 < 60 - 8 + 1)
+    // sub-n and null docs report zero, not a dropped row
+    assert(m(4L) == ((0L, 0L)) && m(5L) == ((0L, 0L)))
   }
 
   /** Naive rewrite reference: global first occurrence by (id, pos),

@@ -42,46 +42,15 @@ class TableStatsSpec extends SparkSpec {
     assert(math.abs(est - 20000.0) / 20000.0 < 0.15, s"est=$est")
   }
 
-  test("fast (xxhash64) path: identical counts/bounds, NDV within KMV " +
-       "error of the portable path, exact below k") {
-    val df = spark.range(1, 5001).toDF("v")
-      .withColumn("w", $"v" % 37)
-      .withColumn("s", concat(lit("row"), $"v" % 11))
-    val portable = TableStats.columnStats(df, Seq("v", "w", "s"), k = 256)
-      .as[(String, Long, Long, Double, Option[String], Option[String])]
-      .collect().map(r => r._1 -> r).toMap
-    val fast = TableStats.columnStatsFast(df, Seq("v", "w", "s"), k = 256)
-      .as[(String, Long, Long, Double, Option[String], Option[String])]
-      .collect().map(r => r._1 -> r).toMap
-    for (c <- Seq("v", "w", "s")) {
-      // counts and typed bounds are hash-independent: exactly equal
-      assert(fast(c).copy(_4 = 0.0) == portable(c).copy(_4 = 0.0))
-    }
-    // below-k columns are EXACT in both paths (sketch not saturated)
-    assert(portable("w")._4 == 37.0 && fast("w")._4 == 37.0)
-    assert(portable("s")._4 == 11.0 && fast("s")._4 == 11.0)
-    // saturated column: both estimates inside the ~1/sqrt(k) KMV band
-    assert(math.abs(portable("v")._4 - 5000.0) / 5000.0 < 0.15)
-    assert(math.abs(fast("v")._4 - 5000.0) / 5000.0 < 0.15)
-  }
-
-  test("fast path agrees with portable path on null-bearing columns: " +
-       "nulls are no phantom distinct value") {
-    // xxhash64(null) returns the seed (non-null); a naive fast path would
-    // count one phantom NDV on any nullable column. Pin both paths.
+  test("null-bearing columns: nulls are no phantom distinct value") {
     val df = Seq(Some("a"), Some("b"), None, None, Some("a"))
       .toDF("s")
       .withColumn("allnull", lit(null).cast("string"))
-    val portable = TableStats.columnStats(df, Seq("s", "allnull"), k = 16)
+    val got = TableStats.columnStats(df, Seq("s", "allnull"), k = 16)
       .as[(String, Long, Long, Double, Option[String], Option[String])]
       .collect().map(r => r._1 -> r).toMap
-    val fast = TableStats.columnStatsFast(df, Seq("s", "allnull"), k = 16)
-      .as[(String, Long, Long, Double, Option[String], Option[String])]
-      .collect().map(r => r._1 -> r).toMap
-    assert(portable("s") == (("s", 5L, 2L, 2.0, Some("a"), Some("b"))))
-    assert(fast("s") == portable("s"))
-    assert(portable("allnull")._4 == 0.0 && fast("allnull")._4 == 0.0)
-    assert(fast("allnull") == portable("allnull"))
+    assert(got("s") == (("s", 5L, 2L, 2.0, Some("a"), Some("b"))))
+    assert(got("allnull") == (("allnull", 5L, 5L, 0.0, None, None)))
   }
 
   test("histogram: exact equi-width counts, complete bucket list, max " +
@@ -143,13 +112,5 @@ class TableStatsSpec extends SparkSpec {
     val got = TableStats.fileStats(spark, Seq(s"$base/t"))
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().head
     assert(got._2 == 2, got) // part-0 + the _gbucket=3 file only
-  }
-
-  test("fast path stays inside whole-stage codegen (no md5 in the plan)") {
-    val df = spark.range(1, 101).toDF("v")
-    val fastPlan = TableStats.columnStatsFast(df, Seq("v")).queryExecution
-      .executedPlan.toString
-    assert(!fastPlan.contains("md5"), fastPlan)
-    assert(fastPlan.contains("xxhash64"), fastPlan)
   }
 }

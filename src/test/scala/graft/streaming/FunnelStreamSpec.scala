@@ -153,4 +153,27 @@ class FunnelStreamSpec extends SparkSpec {
     assert(byUser(2L)._3.isEmpty)
     assert(byUser(5L)._4.isDefined)
   }
+
+  test("a null-timestamp step-1 event does not hide the user's valid " +
+      "step-1 event, matching the batch funnel") {
+    val dir = Files.createTempDirectory("fstreamn").toString
+    val src = s"$dir/landing"
+    // u6's null-ts view sorts first in the user's event array
+    val events = Seq(
+      (6L, null: Timestamp, "view"),
+      (6L, ts("2024-01-03 10:00:00"), "view"),
+      (6L, ts("2024-01-03 10:10:00"), "click"),
+      (7L, ts("2024-01-03 11:00:00"), "view"))
+    val df = events.toDF("user_id", "ts", "etype")
+    df.coalesce(1).write.parquet(src)
+    FunnelStream.runAvailableNow(spark, src, df.schema, "user_id", "ts",
+      "etype", steps, s"$dir/state", s"$dir/ckpt")
+    val want = Funnels.funnelTimes(df, "user_id", "ts", "etype", steps)
+      .orderBy("user_id")
+      .as[(Long, Option[Timestamp], Option[Timestamp], Option[Timestamp])]
+      .collect().toSeq
+    assert(standing(dir) == want)
+    assert(want.find(_._1 == 6L).get._3
+      .contains(ts("2024-01-03 10:10:00")))
+  }
 }
