@@ -26,12 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object LangModel {
 
-  /** Corpus unigram model: `(term, cnt)` over whitespace-lowercase tokens. */
-  def unigramCounts(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-        explode(TextAnalysis.tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-
   /** Per-document mean bit-length surprisal against the corpus' own unigram
     * counts: `(id, n_tokens, sum_bits, mean_bits)`. Empty documents report
     * zero tokens and 0.0 mean. */

@@ -139,15 +139,9 @@ object PipelineRunner {
             (System.nanoTime() - t0) / 1e9, Some(e.getMessage))
       }
     }
-    val entries = config.tablesFor(subjectArea)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(entries.size, 4)))
-    try entries.map { case (name, tc) =>
-        pool.submit(new java.util.concurrent.Callable[JobReport] {
-          override def call(): JobReport = runOne(name, tc)
-        })
-      }.map(_.get())
-    finally pool.shutdown()
+    graft.operators.Concurrent.all(config.tablesFor(subjectArea).map {
+      case (name, tc) => () => runOne(name, tc)
+    }, threads = 4)
   }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {

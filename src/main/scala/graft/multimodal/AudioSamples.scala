@@ -376,15 +376,6 @@ object AudioSamples {
       audioHashFrame(df, idCol, payloadCol).filter(col("ahash").isNotNull),
       idCol, "ahash", maxDist, numChunks = 8, chunkBits = 8, simBits = 64)
 
-  /** [[audioNearDups]] across ALL supported WAV variants (the
-    * cross-format pairing a format-diverse crawl needs). */
-  def audioNearDupsAny(df: DataFrame, idCol: String, payloadCol: String,
-                       maxDist: Int = 4): DataFrame =
-    graft.functions.Dedup.simhashNearDups(
-      audioHashFrameAny(df, idCol, payloadCol)
-        .filter(col("ahash").isNotNull),
-      idCol, "ahash", maxDist, numChunks = 8, chunkBits = 8, simBits = 64)
-
   // --- Deterministic fixture generation --------------------------------
   // Square-wave recordings whose amplitude is piecewise-constant on the
   // SAME 65-window grid the fingerprint reads (the ImagePixels

@@ -60,11 +60,6 @@ object Multimodal {
       .filter(length(col("frame")) > 0)
   }
 
-  /** Repartition media rows by id so one huge payload never skews a
-    * partition set — the pre-decode layout step at scale. */
-  def partitionForDecode(df: DataFrame, idCol: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(idCol))
-
   final case class DecodedMeta(n_bytes: Long, format: String,
                                width: Int, height: Int)
 

@@ -1,41 +1,68 @@
 package graft.operators
 
+import java.util.concurrent.{CancellationException, ExecutionException,
+  ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.sql.SparkSession
+
 /** Driver-side overlap of INDEPENDENT Spark work (optimization guide
   * §2.6): Spark happily schedules several jobs at once inside one
   * application — actions are only sequential because driver code calls
-  * them sequentially. Queries whose plans contain two or more independent
-  * legs that each materialize internally (iterative operators with
-  * per-round actions, `localCheckpoint`ed channel outputs) leave most of
-  * the machine idle during each leg's stage tails; evaluating the legs on
-  * a small driver pool lets the other leg's tasks back-fill those gaps.
-  * Results are unchanged — each leg is the same deterministic computation,
-  * just submitted from its own thread (job groups/descriptions are
-  * thread-local, so UI labels stay correct). The [[graft.jobs
-  * .PipelineRunner.runSubjectArea]] / [[graft.streaming.StreamWaves
-  * .stageAll]] pattern, factored for query-level reuse. */
+  * them sequentially. Work with two or more independent legs that each
+  * materialize internally (iterative operators with per-round actions,
+  * `localCheckpoint`ed channel outputs, per-class pipeline loads, per-
+  * directory stream staging) leaves most of the machine idle during each
+  * leg's stage tails; evaluating the legs on a small thread pool lets the
+  * other legs' tasks back-fill those gaps. Results are unchanged — each
+  * leg is the same deterministic computation, just submitted from its own
+  * thread. */
 object Concurrent {
 
-  /** Evaluate two independent thunks concurrently; rethrows the first
-    * failure. Each thunk must fully materialize its own work (run its
-    * driver loop / checkpoint its frame) for the overlap to be real. */
-  def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = a
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = b
-      })
-      (fa.get(), fb.get())
+  /** Evaluate independent legs, each on its own thread, at most `threads`
+    * at once; results come back in leg order. Completions are taken as
+    * they finish, so the first failure surfaces at once: the legs not yet
+    * started are skipped, the Spark jobs of the running ones are cancelled
+    * until those legs stop, and the failure is rethrown. The jobs are
+    * found through a job tag the legs add to their thread; a tag, unlike
+    * `setJobGroup`, leaves the job group a leg inherits (a stream's, when
+    * called inside `foreachBatch`) in place. Each leg must fully
+    * materialize its own work for the overlap to be real. */
+  def all[A](legs: Seq[() => A], threads: Int = Int.MaxValue): Seq[A] = {
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-legs-${java.util.UUID.randomUUID()}"
+    val failed = new AtomicBoolean(false)
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(legs.size, threads)))
+    val done = new ExecutorCompletionService[(Int, A)](pool)
+    legs.zipWithIndex.foreach { case (leg, i) =>
+      done.submit { () =>
+        if (failed.get) throw new CancellationException("a sibling leg failed")
+        sc.foreach(_.addJobTag(tag))
+        (i, leg())
+      }
+    }
+    pool.shutdown()
+    val out = new Array[Any](legs.size)
+    try legs.foreach { _ =>
+      val (i, a) = done.take().get()
+      out(i) = a
     } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally pool.shutdown()
+      case e: ExecutionException =>
+        failed.set(true)
+        // a running leg may start another job after a cancel: repeat
+        // until every leg thread has returned
+        do sc.foreach(_.cancelJobsWithTag(tag))
+        while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
+        throw e.getCause
+    }
+    out.toSeq.asInstanceOf[Seq[A]]
   }
 
-  /** Evaluate three independent thunks concurrently. */
-  def inParallel3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val ((ra, rb), rc) = inParallel(inParallel(a, b), c)
-    (ra, rb, rc)
+  /** Evaluate two independent thunks concurrently, as [[all]]. */
+  def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = all(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 }

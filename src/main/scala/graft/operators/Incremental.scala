@@ -39,11 +39,6 @@ object Incremental {
       + lit((cutoffHour - utcOffsetHours) * 3600L))
   }
 
-  /** Full-load reset semantics (reference `utilities/utilities.py:185-194`):
-    * modelled as overwrite — provided for API completeness; with file sinks
-    * this is simply `mode("overwrite")`. */
-  def fullLoadPlan(incoming: DataFrame): DataFrame = incoming
-
   /** Precomputed daily schedule ids (reference
     * `utilities/utilities.py:706-709`): `start + 86400·i`. */
   def scheduleIds(startEpoch: Long, days: Int): Seq[Long] =

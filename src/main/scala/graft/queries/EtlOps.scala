@@ -1918,94 +1918,6 @@ object EtlOps {
       .orderBy(col("l_suppkey"), col("bucket"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q186_funnel"        -> funnelQ _,
-    "q193_distinct_maintain" -> distinctMaintainQ _,
-    "q237_quantile_maintain" -> quantileMaintainQ _,
-    "q194_l_diversity"   -> lDiversityQ _,
-    "q202_t_closeness"   -> tClosenessQ _,
-    "q192_windowed_funnel" -> windowedFunnelQ _,
-    "q187_cohort"        -> cohortQ _,
-    "q188_k_anonymize"   -> kAnonymizeQ _,
-    "q190_agg_maintain"  -> aggMaintainQ _,
-    "q12_union_by_name"  -> unionByNameQ _,
-    "q13_upsert"         -> upsertQ _,
-    "q14_sentinel_fill"  -> sentinelFillQ _,
-    "q15_guard_amount"   -> guardAmountQ _,
-    "q16_guard_uuid"     -> guardUuidQ _,
-    "q17_kv_extract"     -> kvExtractQ _,
-    "q18_date_coerce"    -> dateCoerceQ _,
-    "q19_watermark"      -> watermarkQ _,
-    "q20_schema_drift"   -> schemaDriftQ _,
-    "q21_count_reconcile" -> countReconcileQ _,
-    "q45_merge_sql"       -> mergeSqlQ _,
-    "q47_skew_join"       -> skewJoinQ _,
-    "q50_asof_join"       -> asofJoinQ _,
-    "q51_range_join"      -> rangeJoinQ _,
-    "q52_percentiles"     -> percentilesQ _,
-    "q198_interval_overlap" -> intervalOverlapQ _,
-    "q201_graph_rank"     -> graphRankQ _,
-    "q206_label_prop"     -> labelPropQ _,
-    "q207_chi2_drift"     -> chiDriftQ _,
-    "q208_perceptron"     -> perceptronQ _,
-    "q209_gap_fill"       -> gapFillQ _,
-    "q211_sessionize"     -> sessionizeQ _,
-    "q212_ewma"           -> ewmaQ _,
-    "q213_cusum"          -> cusumQ _,
-    "q214_triangles"      -> trianglesQ _,
-    "q215_kcore"          -> kCoreQ _,
-    "q216_clustering"     -> clusteringQ _,
-    "q217_rendezvous"     -> rendezvousQ _,
-    "q218_transitions"    -> transitionsQ _,
-    "q219_top_paths"      -> topPathsQ _,
-    "q220_personalized_rank" -> personalizedRankQ _,
-    "q222_bfs"            -> bfsQ _,
-    "q223_model_predict"  -> perceptronPredictQ _,
-    "q224_weighted_paths" -> weightedPathsQ _,
-    "q226_merge_guard"    -> mergeGuardQ _,
-    "q229_snapshot_diff"  -> snapshotDiffQ _,
-    "q230_robust_outliers" -> robustOutliersQ _,
-    "q231_quantile_norm"  -> quantileNormQ _,
-    "q235_fd_audit"       -> fdAuditQ _,
-    "q236_ri_audit"       -> riAuditQ _,
-    "q238_benford"        -> benfordQ _,
-    "q239_twap"           -> twapQ _,
-    "q240_coverage"       -> coverageQ _,
-    "q241_streaks"        -> streaksQ _,
-    "q242_cooldown"       -> cooldownQ _,
-    "q243_rolling_range"  -> rollingRangeQ _,
-    "q244_zorder"         -> zorderQ _,
-    "q245_lateness"       -> latenessQ _,
-    "q265_join_cardinality" -> joinCardinalityQ _,
-    "q266_attribution"    -> attributionQ _,
-    "q270_correlation"    -> correlationQ _,
-    "q285_kll_monitor"    -> kllMonitorQ _,
-    "q272_exact_quantiles" -> nearestRankQuantilesQ _,
-    "q273_log2_histogram" -> log2HistogramQ _,
-    "q275_bitmap_retention" -> bitmapRetentionQ _,
-    "q276_tvd_drift"      -> tvdDriftQ _,
-    "q277_interval_intersect" -> intervalIntersectionQ _,
-    "q278_join_view_maintain" -> joinViewMaintainQ _,
-    "q281_basket_lift"    -> basketLiftQ _,
-    "q246_group_trend"    -> groupTrendQ _,
-    "q248_sliding_distinct" -> slidingDistinctQ _,
-    "q249_bitmap_distinct" -> bitmapDistinctQ _,
-    "q250_session_report" -> sessionReportQ _,
-    "q251_ab_audit"       -> abAuditQ _,
-    "q252_winsorize"      -> winsorizeQ _,
-    "q253_cat_profile"    -> categoricalProfileQ _,
-    "q254_conversion_latency" -> conversionLatencyQ _,
-    "q256_dau_wau"        -> dauWauQ _,
-    "q257_lift_table"     -> liftTableQ _,
-    "q259_path_tree"      -> weightedPathTreeQ _,
-    "q53_pivot"           -> pivotQ _,
-    "q114_skew_audit"     -> skewAuditQ _,
-    "q120_table_stats"    -> tableStatsQ _,
-    "q121_join_estimate"  -> joinEstimateQ _,
-    "q150_table_stats_fast" -> tableStatsFastQ _,
-    "q159_histogram"      -> histogramQ _,
-  )
-
   /** One column's stats row restated (q81's KMV pattern per column). */
   private def statsColSql(c: String): String =
     s"""SELECT '$c' AS column_name,
@@ -2024,10 +1936,10 @@ object EtlOps {
        | (SELECT CAST(min($c) AS VARCHAR) FROM lineitem) AS min_val,
        | (SELECT CAST(max($c) AS VARCHAR) FROM lineitem) AS max_val""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // chained per-user MINs, strict > at every hop, restated step by
     // step; counts are over the per-user frame, not the events
-    "q186_funnel" ->
+    Gate("q186_funnel", funnelQ _,
       """WITH ev AS (SELECT * FROM events WHERE event_id % 37 = 0),
         |s1 AS (SELECT user_id, min(ts) AS t1 FROM ev
         |       WHERE event_type = 'view' GROUP BY 1),
@@ -2045,11 +1957,11 @@ object EtlOps {
         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
         |UNION ALL SELECT 3, 'signup', (SELECT count(*) FROM s3)
         |UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)
-        |ORDER BY step_idx""".stripMargin,
+        |ORDER BY step_idx""".stripMargin),
     // the greedy windowed chain restated hop by hop: strict >, step gap
     // vs the previous MIN, total window vs the carried step-1 anchor
     // (t1 rides each CTE via any_value — functionally dependent on user)
-    "q192_windowed_funnel" ->
+    Gate("q192_windowed_funnel", windowedFunnelQ _,
       """WITH ev AS (SELECT * FROM events WHERE event_id % 7 = 0),
         |s1 AS (SELECT user_id, min(ts) AS t1 FROM ev
         |       WHERE event_type = 'view' GROUP BY 1),
@@ -2073,10 +1985,10 @@ object EtlOps {
         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
         |UNION ALL SELECT 3, 'signup', (SELECT count(*) FROM s3)
         |UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4)
-        |ORDER BY step_idx""".stripMargin,
+        |ORDER BY step_idx""".stripMargin),
     // first-week MIN, distinct (user, week), (cohort, offset) rollup —
     // week = floor(days-since-epochDay / 7), identical double division
-    "q187_cohort" ->
+    Gate("q187_cohort", cohortQ _,
       """WITH ev AS (SELECT * FROM events WHERE event_id % 37 = 0),
         |w AS (SELECT user_id,
         |  CAST(floor(date_diff('day', DATE '2024-01-01',
@@ -2086,10 +1998,10 @@ object EtlOps {
         |SELECT f.cohort_week, a.wk - f.cohort_week AS week_offset,
         |       count(*) AS n_users
         |FROM a JOIN f USING (user_id) GROUP BY 1, 2
-        |ORDER BY cohort_week, week_offset""".stripMargin,
+        |ORDER BY cohort_week, week_offset""".stripMargin),
     // exact group count over the string-normalized quasi tuple, CASE
     // to '*' strictly under k=10
-    "q188_k_anonymize" ->
+    Gate("q188_k_anonymize", kAnonymizeQ _,
       """WITH g AS (SELECT c_custkey,
         |  CAST(c_nationkey AS VARCHAR) AS nation,
         |  CAST(CAST(floor(c_acctbal / 1000) * 1000 AS BIGINT) AS VARCHAR)
@@ -2100,11 +2012,11 @@ object EtlOps {
         | CASE WHEN c.n < 10 THEN '*' ELSE g.nation END AS nation,
         | CASE WHEN c.n < 10 THEN '*' ELSE g.bal_band END AS bal_band
         |FROM g JOIN c USING (nation, bal_band)
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
     // exact distinct-sensitive count per quasi group, violating
     // strictly under l=3 with the all-star group exempt (no such group
     // in this raw release — the exemption still rides the CASE)
-    "q194_l_diversity" ->
+    Gate("q194_l_diversity", lDiversityQ _,
       """WITH g AS (SELECT c_custkey, c_mktsegment,
         |  CAST(c_nationkey AS VARCHAR) AS nation,
         |  CAST(CAST(floor(c_acctbal / 100) * 100 AS BIGINT) AS VARCHAR)
@@ -2116,10 +2028,10 @@ object EtlOps {
         | (count(DISTINCT c_mktsegment) < 3
         |   AND NOT (nation = '*' AND bal_band = '*')) AS violating
         |FROM g GROUP BY nation, bal_band
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // the naive full-grid TVD: every (group, segment) pair including
     // absent ones, |n_gs*N - n_s*n_g| summed, verdict at t = 1/5
-    "q202_t_closeness" ->
+    Gate("q202_t_closeness", tClosenessQ _,
       """WITH g AS (SELECT c_custkey, c_mktsegment,
         |  CAST(c_nationkey AS BIGINT) AS nation,
         |  CAST(floor(c_acctbal / 1000) * 1000 AS BIGINT) AS bal_band
@@ -2141,7 +2053,7 @@ object EtlOps {
         | CAST(2 * t.n_g * (SELECT n FROM tot) AS BIGINT) AS tvd_den,
         | (sum(t.term) * 5 > 2 * t.n_g * (SELECT n FROM tot)) AS violating
         |FROM terms t GROUP BY t.nation, t.bal_band, t.n_g
-        |ORDER BY t.nation, t.bal_band""".stripMargin,
+        |ORDER BY t.nation, t.bal_band""".stripMargin),
     // maintained HLL registers must be bit-identical to the one-shot
     // recompute: every register restated from the md5 hash60 of the
     // part key over the FULL lineitem (p=4: bucket = h // 2^56, rho =
@@ -2149,7 +2061,7 @@ object EtlOps {
     // the supplier x bucket grid
     // maintained sketch == one-shot: the 256 smallest-hash distinct
     // cents per type with exact full-table counts
-    "q237_quantile_maintain" ->
+    Gate("q237_quantile_maintain", quantileMaintainQ _,
       """WITH v AS (SELECT event_type, CAST(floor(value * 100) AS BIGINT)
         |    AS x FROM events),
         |vc AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
@@ -2160,8 +2072,8 @@ object EtlOps {
         |rk AS (SELECT *, row_number() OVER (PARTITION BY event_type
         |        ORDER BY hv) AS r FROM h)
         |SELECT event_type, x AS value, c AS count FROM rk
-        |WHERE r <= 256 ORDER BY event_type, value""".stripMargin,
-    "q193_distinct_maintain" ->
+        |WHERE r <= 256 ORDER BY event_type, value""".stripMargin),
+    Gate("q193_distinct_maintain", distinctMaintainQ _,
       """WITH h AS (SELECT DISTINCT l_suppkey,
         |  ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)), 1, 15))
         |    ::BIGINT AS h
@@ -2180,19 +2092,19 @@ object EtlOps {
         | coalesce(r.register, 0) AS register
         |FROM grid g LEFT JOIN regs r
         |  ON g.l_suppkey = r.l_suppkey AND g.bucket = r.bucket
-        |ORDER BY g.l_suppkey, g.bucket""".stripMargin,
+        |ORDER BY g.l_suppkey, g.bucket""".stripMargin),
     // the invariant IS the oracle: maintained state must equal the
     // one-shot recompute (decimal sum exact under any fold order)
-    "q190_agg_maintain" ->
+    Gate("q190_agg_maintain", aggMaintainQ _,
       """SELECT l_partkey, count(*) AS cnt,
         | CAST(sum(CAST(l_extendedprice AS DECIMAL(38,2))) AS DOUBLE)
         |   AS sum_v,
         | min(l_extendedprice) AS min_v, max(l_extendedprice) AS max_v
-        |FROM lineitem GROUP BY 1 ORDER BY l_partkey""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY l_partkey""".stripMargin),
     // the estimator restated verbatim: per-side bottom-256 sketches,
     // bottom-256 of their union, membership Jaccard, J x est_union -
     // plus the exact distinct intersection
-    "q121_join_estimate" ->
+    Gate("q121_join_estimate", joinEstimateQ _,
       """WITH ha AS (SELECT DISTINCT ('0x' ||
         |  substring(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT AS h
         | FROM orders),
@@ -2224,17 +2136,17 @@ object EtlOps {
         |SELECT e.est_union, e.est_jaccard,
         | e.est_jaccard * e.est_union AS est_intersection,
         | x.n_exact_intersection
-        |FROM e, x ORDER BY est_union""".stripMargin,
+        |FROM e, x ORDER BY est_union""".stripMargin),
     // typed bounds, per-column KMV NDV (q81's pattern), one UNION ALL
     // branch per column
-    "q120_table_stats" ->
+    Gate("q120_table_stats", tableStatsQ _,
       (Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
         "l_returnflag", "l_linestatus")
         .map(statsColSql).mkString("\nUNION ALL\n") +
-        "\nORDER BY column_name"),
+        "\nORDER BY column_name")),
     // the identical double chains: bucket = least(floor((v-lo)*16/(hi-lo)),
     // 15); bounds = lo + bucket*(hi-lo)/16
-    "q159_histogram" ->
+    Gate("q159_histogram", histogramQ _,
       """WITH b AS (SELECT min(l_extendedprice) AS lo,
         |                  max(l_extendedprice) AS hi FROM lineitem),
         |c AS (SELECT CAST(least(floor((l_extendedprice - lo) * 16
@@ -2247,11 +2159,11 @@ object EtlOps {
         | lo + a.bucket * (hi - lo) / 16 AS bucket_lo,
         | lo + (a.bucket + 1) * (hi - lo) / 16 AS bucket_hi,
         | coalesce(c.n, 0) AS n_rows
-        |FROM a LEFT JOIN c USING (bucket) ORDER BY bucket""".stripMargin,
+        |FROM a LEFT JOIN c USING (bucket) ORDER BY bucket""".stripMargin),
     // every column's NDV sits below the sketch capacity, where KMV is
     // exactly count(distinct) for ANY hash — restated without the
     // oracle needing the sketch's hash at all
-    "q150_table_stats_fast" ->
+    Gate("q150_table_stats_fast", tableStatsFastQ _,
       (Seq("l_linenumber", "l_returnflag", "l_linestatus", "l_qty_int")
         .map { c =>
           s"""SELECT '$c' AS column_name,
@@ -2266,10 +2178,10 @@ object EtlOps {
              |            FROM lineitem)
              |$u
              |ORDER BY column_name""".stripMargin
-        }),
+        })),
     // identical counts, shares, uniform ratios (all-double, same
     // multiply-then-divide order) and ceil salt factors
-    "q114_skew_audit" ->
+    Gate("q114_skew_audit", skewAuditQ _,
       """WITH c AS (SELECT user_id, count(*) AS cnt
         |           FROM events GROUP BY user_id),
         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
@@ -2279,16 +2191,16 @@ object EtlOps {
         | cnt::DOUBLE * n_keys::DOUBLE / total::DOUBLE AS skew_ratio,
         | CAST(ceil(cnt::DOUBLE / 1000.0::DOUBLE) AS BIGINT) AS salt_factor
         |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, user_id LIMIT 20""".stripMargin,
-    "q12_union_by_name" ->
+        |ORDER BY cnt DESC, user_id LIMIT 20""".stripMargin),
+    Gate("q12_union_by_name", unionByNameQ _,
       """SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice FROM (
         | SELECT o_custkey, o_orderkey, CAST(NULL AS VARCHAR) AS o_orderstatus, o_totalprice
         | FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         | UNION ALL
         | SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice
         | FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00') t
-        |ORDER BY o_orderkey""".stripMargin,
-    "q13_upsert" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Gate("q13_upsert", upsertQ _,
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM (
         | SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey ORDER BY p DESC) AS rn FROM (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS p FROM orders
@@ -2297,20 +2209,20 @@ object EtlOps {
         |   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice,
         |   1 AS p
         |  FROM orders WHERE o_orderstatus = 'O') u) v
-        |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-    "q14_sentinel_fill" ->
+        |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
+    Gate("q14_sentinel_fill", sentinelFillQ _,
       """SELECT event_id,
         | CASE WHEN event_id % 11 = 0 THEN TIMESTAMP '1900-01-01 00:00:00'
         |      ELSE date_trunc('second', ts) END AS ts,
         | CASE WHEN event_id % 3 = 0 THEN -99 ELSE user_id END AS user_id,
         | CASE WHEN event_id % 5 = 0 THEN '' ELSE event_type END AS event_type,
         | CASE WHEN event_id % 7 = 0 THEN -99.0 ELSE value END AS value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q15_guard_amount" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Gate("q15_guard_amount", guardAmountQ _,
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
         | CASE WHEN l_linenumber % 3 = 0 THEN 0.0 ELSE l_quantity END AS amount
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q16_guard_uuid" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("q16_guard_uuid", guardUuidQ _,
       """SELECT c_custkey,
         | CASE WHEN c_custkey % 4 = 0 THEN
         |  concat_ws('-', substring(md5(CAST(c_custkey AS VARCHAR)),1,8),
@@ -2319,15 +2231,15 @@ object EtlOps {
         |   substring(md5(CAST(c_custkey AS VARCHAR)),17,4),
         |   substring(md5(CAST(c_custkey AS VARCHAR)),21,12))
         | ELSE 'N/A' END AS guarded
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q17_kv_extract" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Gate("q17_kv_extract", kvExtractQ _,
       """SELECT o_orderkey, o_orderpriority AS fund_type
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q18_date_coerce" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Gate("q18_date_coerce", dateCoerceQ _,
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
         | CASE WHEN l_linenumber % 4 = 0 THEN NULL ELSE l_shipdate END AS coerced
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q19_watermark" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("q19_watermark", watermarkQ _,
       """WITH t AS (
         | SELECT event_id, ts - INTERVAL 6 HOUR AS local FROM events),
         |d AS (
@@ -2338,8 +2250,8 @@ object EtlOps {
         | FROM t)
         |SELECT CAST(epoch(eff_day) AS BIGINT) + 11 * 3600 AS inc_id,
         | COUNT(*) AS n, MIN(event_id) AS min_event, MAX(event_id) AS max_event
-        |FROM d GROUP BY 1 ORDER BY inc_id""".stripMargin,
-    "q20_schema_drift" ->
+        |FROM d GROUP BY 1 ORDER BY inc_id""".stripMargin),
+    Gate("q20_schema_drift", schemaDriftQ _,
       """WITH recs AS (
         | SELECT CASE WHEN event_id % 3 = 0 THEN 'k'
         |             WHEN event_id % 3 = 1 THEN 'extra,k'
@@ -2347,13 +2259,13 @@ object EtlOps {
         | FROM events)
         |SELECT CAST(DENSE_RANK() OVER (ORDER BY keyset) AS BIGINT) AS schema_version,
         | keyset, n FROM (SELECT keyset, COUNT(*) AS n FROM recs GROUP BY keyset) g
-        |ORDER BY keyset""".stripMargin,
-    "q21_count_reconcile" ->
+        |ORDER BY keyset""".stripMargin),
+    Gate("q21_count_reconcile", countReconcileQ _,
       """SELECT l_orderkey AS o_orderkey, COUNT(*) AS actual_count,
         | CAST(MAX(l_linenumber) AS BIGINT) AS declared_count,
         | COUNT(*) = MAX(l_linenumber) AS count_match
-        |FROM lineitem GROUP BY l_orderkey ORDER BY o_orderkey""".stripMargin,
-    "q45_merge_sql" ->
+        |FROM lineitem GROUP BY l_orderkey ORDER BY o_orderkey""".stripMargin),
+    Gate("q45_merge_sql", mergeSqlQ _,
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM (
         | SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey ORDER BY p DESC) AS rn FROM (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS p FROM orders
@@ -2362,13 +2274,13 @@ object EtlOps {
         |   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice,
         |   1 AS p
         |  FROM orders WHERE o_orderstatus = 'O') u) v
-        |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-    "q47_skew_join" ->
+        |WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
+    Gate("q47_skew_join", skewJoinQ _,
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
         | l_quantity, o_orderstatus
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q50_asof_join" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("q50_asof_join", asofJoinQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts, value
         | FROM events),
@@ -2380,8 +2292,8 @@ object EtlOps {
         |SELECT p.event_id, p.user_id, p.ts, q.quote
         |FROM probes p ASOF LEFT JOIN quotes q
         | ON p.user_id = q.user_id AND p.ts >= q.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q51_range_join" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Gate("q51_range_join", rangeJoinQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts FROM events),
         |iv AS (
@@ -2392,8 +2304,8 @@ object EtlOps {
         |SELECT iv.iv_id, pt.event_id, pt.user_id, pt.ts
         |FROM iv JOIN pt ON iv.user_id = pt.user_id
         | AND pt.ts BETWEEN iv.start_ts AND iv.end_ts
-        |ORDER BY iv_id, event_id""".stripMargin,
-    "q198_interval_overlap" ->
+        |ORDER BY iv_id, event_id""".stripMargin),
+    Gate("q198_interval_overlap", intervalOverlapQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts FROM events),
         |a AS (
@@ -2407,13 +2319,13 @@ object EtlOps {
         |SELECT a.a_id, b.b_id, a.user_id
         |FROM a JOIN b ON a.user_id = b.user_id
         | AND a.a_start <= b.b_end AND b.b_start <= a.a_end
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q201_graph_rank" -> graphRankOracle(5),
-    "q206_label_prop" -> labelPropOracle(4),
-    "q215_kcore" -> kCoreOracle(12, 5),
+        |ORDER BY a_id, b_id""".stripMargin),
+    Gate("q201_graph_rank", graphRankQ _, graphRankOracle(5)),
+    Gate("q206_label_prop", labelPropQ _, labelPropOracle(4)),
+    Gate("q215_kcore", kCoreQ _, kCoreOracle(12, 5)),
     // q214's triangle CTE normalized to the exact rational per node;
     // zero-fill for triangle-free nodes, cc_den 0 for degree-1 nodes
-    "q216_clustering" ->
+    Gate("q216_clustering", clusteringQ _,
       """WITH pe AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         |  FROM lineitem a JOIN lineitem b
         |    ON a.l_orderkey = b.l_orderkey
@@ -2433,10 +2345,10 @@ object EtlOps {
         | COALESCE(pn.t, 0) * 2 AS cc_num,
         | d.deg * (d.deg - 1) AS cc_den
         |FROM deg d LEFT JOIN pn USING (node)
-        |ORDER BY node""".stripMargin,
+        |ORDER BY node""".stripMargin),
     // exact rational chi-squared per category: d = ref_n·C − cur_n·R in
     // HUGEINT, verdict by cross-multiplication at t = 1/4
-    "q207_chi2_drift" ->
+    Gate("q207_chi2_drift", chiDriftQ _,
       """WITH r AS (SELECT event_type AS category, count(*) AS ref_n
         |           FROM events WHERE value <= 50 GROUP BY 1),
         |c AS (SELECT event_type AS category, count(*) AS cur_n
@@ -2452,11 +2364,11 @@ object EtlOps {
         | CAST(tr * tc * (ref_n + cur_n) AS BIGINT) AS chi_den,
         | ((ref_n*tc - cur_n*tr) * (ref_n*tc - cur_n*tr) * 4 >
         |   tr * tc * (ref_n + cur_n) * 1) AS drifted
-        |FROM j, t ORDER BY category""".stripMargin,
-    "q208_perceptron" -> perceptronOracle(4),
+        |FROM j, t ORDER BY category""".stripMargin),
+    Gate("q208_perceptron", perceptronQ _, perceptronOracle(4)),
     // densified per-cohort day grid via generate_series over each
     // cohort's span; gaps count 0 and carry the last observed type
-    "q209_gap_fill" ->
+    Gate("q209_gap_fill", gapFillQ _,
       """WITH daily AS (SELECT user_id % 25 AS k,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS n_events, max(event_type) AS last_type
@@ -2469,10 +2381,10 @@ object EtlOps {
         |   (PARTITION BY g.k ORDER BY g.day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_type
         |FROM grid g LEFT JOIN daily d USING (k, day)
-        |ORDER BY k, day""".stripMargin,
+        |ORDER BY k, day""".stripMargin),
     // lag-gap flags summed cumulatively per user; second-truncated
     // timestamps, micros-exact strict > 1800s, (ts, event_id) order
-    "q211_sessionize" ->
+    Gate("q211_sessionize", sessionizeQ _,
       """WITH e AS (SELECT event_id, user_id,
         |  date_trunc('second', ts) AS ts FROM events),
         |m AS (SELECT event_id, user_id, ts,
@@ -2484,10 +2396,10 @@ object EtlOps {
         | CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |   AS session_id
-        |FROM m ORDER BY event_id""".stripMargin,
+        |FROM m ORDER BY event_id""".stripMargin),
     // the integer recurrence replayed by list_reduce over each row's
     // ordered prefix; // truncates toward zero exactly like the scan
-    "q212_ewma" ->
+    Gate("q212_ewma", ewmaQ _,
       """WITH e AS (SELECT event_id, user_id % 25 AS k,
         |  date_trunc('second', ts) AS ts,
         |  CAST(floor(value * 100) AS BIGINT) AS xv FROM events),
@@ -2498,10 +2410,10 @@ object EtlOps {
         |SELECT event_id, k, xv,
         | CAST(list_reduce(xs, (acc, x) -> (1*x + 3*acc) // 4) AS BIGINT)
         |   AS ewma
-        |FROM p ORDER BY event_id""".stripMargin,
+        |FROM p ORDER BY event_id""".stripMargin),
     // the q209 densified grid, then the zero-seeded max(0, S+x−2)
     // recurrence replayed over each row's ordered prefix
-    "q213_cusum" ->
+    Gate("q213_cusum", cusumQ _,
       """WITH daily AS (SELECT user_id % 25 AS k,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS n FROM events WHERE event_id % 11 = 0 GROUP BY 1, 2),
@@ -2519,10 +2431,10 @@ object EtlOps {
         |   (acc, x) -> greatest(0, acc + x - 2)) AS BIGINT) AS cusum,
         | (list_reduce(list_prepend(0, xs),
         |   (acc, x) -> greatest(0, acc + x - 2)) > 3) AS alarm
-        |FROM p ORDER BY k, day""".stripMargin,
+        |FROM p ORDER BY k, day""".stripMargin),
     // the naive a < b < c three-way self-join over canonical co-order
     // edges; per-node credit via the three-vertex unpivot
-    "q214_triangles" ->
+    Gate("q214_triangles", trianglesQ _,
       """WITH pe AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         |  FROM lineitem a JOIN lineitem b
         |    ON a.l_orderkey = b.l_orderkey
@@ -2535,10 +2447,10 @@ object EtlOps {
         | (SELECT a AS node FROM tri
         |  UNION ALL SELECT b FROM tri
         |  UNION ALL SELECT c FROM tri)
-        |GROUP BY node ORDER BY node""".stripMargin,
+        |GROUP BY node ORDER BY node""".stripMargin),
     // every (key, shard) md5 hash replayed, both argmaxes by
     // (hash DESC, shard DESC), the removed-shard disruption as data
-    "q217_rendezvous" ->
+    Gate("q217_rendezvous", rendezvousQ _,
       """WITH k AS (SELECT p_partkey FROM part),
         |s7 AS (SELECT unnest(['s0','s1','s2','s3','s4','s5','s6'])
         |         AS shard),
@@ -2557,13 +2469,13 @@ object EtlOps {
         |SELECT k.p_partkey, w7.shard AS shard_old, w6.shard AS shard_new,
         | (w7.shard <> w6.shard) AS moved
         |FROM k JOIN w7 USING (p_partkey) JOIN w6 USING (p_partkey)
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin),
     // lag per user by (ts, event_id); first-in-key comes from '^start'
     // by POSITION (row_number = 1), NOT by COALESCE on the lag — a
     // genuinely-null previous event type must stay a null from_type
     // (the operator treats null as a state like any other), exactly the
     // conflation Paths.transitionCounts' docstring warns against
-    "q218_transitions" ->
+    Gate("q218_transitions", transitionsQ _,
       """WITH e AS (SELECT event_id, user_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |m AS (SELECT event_type AS to_type,
@@ -2571,10 +2483,10 @@ object EtlOps {
         |       ELSE lag(event_type) OVER w END AS from_type
         | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT from_type, to_type, count(*) AS n FROM m
-        |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin),
     // 15-min-gap sessions -> ordered type journey -> top 20 by count,
     // ties on the path string
-    "q219_top_paths" ->
+    Gate("q219_top_paths", topPathsQ _,
       """WITH e AS (SELECT event_id, user_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |m AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
@@ -2587,14 +2499,15 @@ object EtlOps {
         |  string_agg(event_type, '>' ORDER BY ts, event_id) AS path
         | FROM s GROUP BY 1, 2)
         |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q220_personalized_rank" -> personalizedRankOracle(4),
-    "q222_bfs" -> bfsOracle(3),
-    "q224_weighted_paths" -> weightedPathsOracle(4),
-    "q259_path_tree" -> weightedPathTreeOracle(4),
-    "q226_merge_guard" -> mergeGuardOracle,
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+    Gate("q220_personalized_rank", personalizedRankQ _,
+      personalizedRankOracle(4)),
+    Gate("q222_bfs", bfsQ _, bfsOracle(3)),
+    Gate("q224_weighted_paths", weightedPathsQ _, weightedPathsOracle(4)),
+    Gate("q259_path_tree", weightedPathTreeQ _, weightedPathTreeOracle(4)),
+    Gate("q226_merge_guard", mergeGuardQ _, mergeGuardOracle),
     // per-candidate: distinct lhs, fanning lhs, surplus rhs mappings
-    "q235_fd_audit" ->
+    Gate("q235_fd_audit", fdAuditQ _,
       """SELECT * FROM (
         | SELECT 'c_nationkey' AS lhs, 'c_mktsegment' AS rhs,
         |  CAST(count(*) AS BIGINT) AS n_lhs,
@@ -2624,9 +2537,9 @@ object EtlOps {
         |  sum(greatest(k - 1, 0)) = 0
         | FROM (SELECT o_orderkey, count(DISTINCT o_custkey) AS k
         |       FROM orders GROUP BY 1)
-        |) ORDER BY lhs, rhs""".stripMargin,
+        |) ORDER BY lhs, rhs""".stripMargin),
     // the truth itself: plain distinct counts per day and window
-    "q256_dau_wau" ->
+    Gate("q256_dau_wau", dauWauQ _,
       """WITH v AS (SELECT DISTINCT
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  user_id FROM events),
@@ -2638,9 +2551,9 @@ object EtlOps {
         | FROM days d JOIN v p ON p.day BETWEEN d.day - 6 AND d.day
         | GROUP BY d.day)
         |SELECT day, dau.dau, wau.wau FROM dau JOIN wau USING (day)
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin),
     // strict-> funnel steps, doubled-median over exact micro deltas
-    "q254_conversion_latency" ->
+    Gate("q254_conversion_latency", conversionLatencyQ _,
       """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
         |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2 FROM events e
@@ -2658,9 +2571,9 @@ object EtlOps {
         |      sum(CASE WHEN rn = n // 2 + 1 THEN delta END) AS BIGINT)
         |   AS med2_us,
         | CAST(max(delta) AS BIGINT) AS max_us
-        |FROM r GROUP BY k ORDER BY k""".stripMargin,
+        |FROM r GROUP BY k ORDER BY k""".stripMargin),
     // (count, value) struct argmax; Gini as (n^2 - sum c^2) / n^2
-    "q253_cat_profile" ->
+    Gate("q253_cat_profile", categoricalProfileQ _,
       """WITH vc AS (SELECT o_orderpriority AS g, o_orderstatus AS v,
         |  CAST(count(*) AS BIGINT) AS c FROM orders GROUP BY 1, 2),
         |agg AS (SELECT g, CAST(sum(c) AS BIGINT) AS n,
@@ -2671,9 +2584,9 @@ object EtlOps {
         | m.c AS mode_n,
         | CAST(n * n - ss AS BIGINT) AS gini_num,
         | CAST(n * n AS BIGINT) AS gini_den
-        |FROM agg ORDER BY o_orderpriority""".stripMargin,
+        |FROM agg ORDER BY o_orderpriority""".stripMargin),
     // exact p10/p90 order-stat clamps (rank = max(1, ceil(q*n)))
-    "q252_winsorize" ->
+    Gate("q252_winsorize", winsorizeQ _,
       """WITH v AS (SELECT event_type AS g,
         |  CAST(floor(value * 100) AS BIGINT) AS x FROM events),
         |r AS (SELECT g, x, row_number() OVER (PARTITION BY g ORDER BY x)
@@ -2690,9 +2603,9 @@ object EtlOps {
         | CAST(sum(greatest(c.lo, least(c.hi, v.x))) AS BIGINT)
         |   AS sum_winsorized
         |FROM v JOIN c USING (g) GROUP BY v.g
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // exact diff rationals vs the control variant, ppm cross-multiplied
-    "q251_ab_audit" ->
+    Gate("q251_ab_audit", abAuditQ _,
       """WITH u AS (SELECT user_id, CAST(user_id % 3 AS VARCHAR)
         |    AS variant,
         |  max(CASE WHEN event_type = 'purchase' AND value > 150
@@ -2706,9 +2619,9 @@ object EtlOps {
         | CAST(v.n * c.n0 AS BIGINT) AS diff_den,
         | (abs(v.k * c.n0 - c.k0 * v.n) * 1000000 >
         |   50000 * v.n * c.n0) AS shifted
-        |FROM v, c ORDER BY v.variant""".stripMargin,
+        |FROM v, c ORDER BY v.variant""".stripMargin),
     // q211's session construction + per-session then per-user rollup
-    "q250_session_report" ->
+    Gate("q250_session_report", sessionReportQ _,
       """WITH e AS (SELECT event_id, user_id,
         |  date_trunc('second', ts) AS ts FROM events),
         |m AS (SELECT event_id, user_id, ts,
@@ -2728,18 +2641,18 @@ object EtlOps {
         | CAST(count(*) FILTER (n = 1) AS BIGINT) AS n_bounces,
         | CAST(sum(dwell_us) AS BIGINT) AS total_dwell_us,
         | CAST(max(dwell_us) AS BIGINT) AS max_dwell_us
-        |FROM ses GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM ses GROUP BY user_id ORDER BY user_id""".stripMargin),
     // 63-bit bucket words: signed-shift-safe in both engines
-    "q249_bitmap_distinct" ->
+    Gate("q249_bitmap_distinct", bitmapDistinctQ _,
       """WITH b AS (SELECT event_type, user_id // 63 AS bucket,
         |  bit_or(CAST(1 AS BIGINT) << CAST(user_id % 63 AS INT)) AS bits
         | FROM events WHERE event_id % 4 = 0 GROUP BY 1, 2)
         |SELECT event_type, CAST(bucket AS BIGINT) AS bucket, bits,
         | CAST(bit_count(bits) AS BIGINT) AS n_bits
-        |FROM b ORDER BY event_type, bucket""".stripMargin,
+        |FROM b ORDER BY event_type, bucket""".stripMargin),
     // per-day trailing-window registers rebuilt from scratch (q193's
     // register formula, group = day, window = BETWEEN day-6 AND day)
-    "q248_sliding_distinct" ->
+    Gate("q248_sliding_distinct", slidingDistinctQ _,
       """WITH v AS (SELECT DISTINCT
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  user_id FROM events),
@@ -2762,10 +2675,10 @@ object EtlOps {
         | coalesce(r.register, 0) AS register
         |FROM grid g LEFT JOIN regs r
         |  ON g.day = r.day AND g.bucket = r.bucket
-        |ORDER BY g.day, g.bucket""".stripMargin,
+        |ORDER BY g.day, g.bucket""".stripMargin),
     // exact OLS sufficient statistics, re-based x, cross-multiplied
     // slope sign
-    "q246_group_trend" ->
+    Gate("q246_group_trend", groupTrendQ _,
       """WITH v AS (SELECT event_type AS g,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  CAST(floor(value * 100) AS BIGINT) AS y FROM events),
@@ -2780,10 +2693,10 @@ object EtlOps {
         | CAST(n * sxx - sx * sx AS BIGINT) AS slope_den,
         | CASE WHEN n * sxx - sx * sx = 0 THEN NULL
         |      ELSE (n * sxy - sx * sy > 0) END AS rising
-        |FROM s ORDER BY event_type""".stripMargin,
+        |FROM s ORDER BY event_type""".stripMargin),
     // distinct (basket, item) rows, basket-keyed pair join, exact
     // ppm by truncating division, cross-multiplied fence
-    "q281_basket_lift" ->
+    Gate("q281_basket_lift", basketLiftQ _,
       """WITH b AS (SELECT DISTINCT user_id,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  event_type AS it
@@ -2803,19 +2716,19 @@ object EtlOps {
         | p.c_ab::HUGEINT * n.nb * 10 >= a.c::HUGEINT * bb.c * 9 AS assoc
         |FROM p JOIN c1 a ON a.it = p.item_a
         | JOIN c1 bb ON bb.it = p.item_b CROSS JOIN n
-        |ORDER BY item_a, item_b""".stripMargin,
+        |ORDER BY item_a, item_b""".stripMargin),
     // the folded view equals the one-shot re-join (the gate asserts
     // the fold; the oracle states the target)
-    "q278_join_view_maintain" ->
+    Gate("q278_join_view_maintain", joinViewMaintainQ _,
       """SELECT o.o_custkey,
         | CAST(count(*) AS BIGINT) AS n_items,
         | CAST(sum(CAST(floor(l.l_extendedprice * 100) AS BIGINT))
         |   AS BIGINT) AS total
         |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY o_custkey""".stripMargin,
+        |GROUP BY 1 ORDER BY o_custkey""".stripMargin),
     // inclusive overlap join, clip to [max(s), min(e)), half-open
     // island sweep over the clips — restated with window functions
-    "q277_interval_intersect" ->
+    Gate("q277_interval_intersect", intervalIntersectionQ _,
       """WITH e AS (SELECT user_id AS k, event_id, epoch_us(ts) AS t
         |  FROM events),
         |a AS (SELECT k, event_id AS id, t AS s, t + 2400000000 AS e
@@ -2840,10 +2753,10 @@ object EtlOps {
         |        GROUP BY 1, 2)
         |SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n_islands,
         | CAST(sum(c) AS BIGINT) AS covered_us
-        |FROM cov GROUP BY k ORDER BY user_id""".stripMargin,
+        |FROM cov GROUP BY k ORDER BY user_id""".stripMargin),
     // exact TVD: |c_a*N_b - c_b*N_a| per bucket, cross-multiplied
     // verdict in HUGEINT, no division
-    "q276_tvd_drift" ->
+    Gate("q276_tvd_drift", tvdDriftQ _,
       """WITH e AS (SELECT user_id % 4 AS g, event_type AS bucket,
         |  day(CAST(ts AS DATE)) <= 15 AS is_a, event_id
         | FROM events),
@@ -2868,9 +2781,9 @@ object EtlOps {
         | CAST(v.num AS BIGINT) AS tvd_num,
         | v.num * 100 >= v.na::HUGEINT * v.nb * 2 * 3 AS drifted
         |FROM d JOIN v ON v.g = d.g
-        |ORDER BY cohort, event_type""".stripMargin,
+        |ORDER BY cohort, event_type""".stripMargin),
     // the bitmap AND restated as the exact distinct intersection join
-    "q275_bitmap_retention" ->
+    Gate("q275_bitmap_retention", bitmapRetentionQ _,
       """WITH du AS (SELECT DISTINCT
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  user_id
@@ -2894,21 +2807,21 @@ object EtlOps {
         |   AS jaccard_ppm
         |FROM p JOIN a ON a.g = p.g JOIN b ON b.g = p.g
         | LEFT JOIN c ON c.g = p.g
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin),
     // bucket = length(bin(v)) - 1, the exact binary-length log2
-    "q273_log2_histogram" ->
+    Gate("q273_log2_histogram", log2HistogramQ _,
       """WITH v AS (SELECT event_type AS g,
         |  CAST(floor(value * 100) AS BIGINT) AS v FROM events)
         |SELECT g AS event_type,
         | CAST(CASE WHEN v = 0 THEN -1 ELSE length(bin(v)) - 1 END
         |   AS BIGINT) AS bucket,
         | CAST(count(*) AS BIGINT) AS n, min(v) AS min_v, max(v) AS max_v
-        |FROM v GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
+        |FROM v GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin),
     // the exact nearest-rank quantiles (the q272 machinery) + the KLL
     // accuracy-contract flag: the gate asserts the sketch estimate's
     // rank interval intersects [ceil(p*n) +/- 2% n] IN-PROCESS and
     // fails loudly otherwise, so the oracle states the contract held
-    "q285_kll_monitor" ->
+    Gate("q285_kll_monitor", kllMonitorQ _,
       """WITH v AS (SELECT event_type AS g,
         |  CAST(floor(value * 100) AS BIGINT) AS x FROM events),
         |r AS (SELECT g, x,
@@ -2921,9 +2834,9 @@ object EtlOps {
         |      THEN x END) AS q_value,
         |  true AS within_eps
         |FROM r, ps GROUP BY g, n, p_num, p_den
-        |ORDER BY event_type, p_num""".stripMargin,
+        |ORDER BY event_type, p_num""".stripMargin),
     // the same ceil(p*n) nearest-rank convention as window ranks
-    "q272_exact_quantiles" ->
+    Gate("q272_exact_quantiles", nearestRankQuantilesQ _,
       """WITH v AS (SELECT event_type AS g,
         |  CAST(floor(value * 100) AS BIGINT) AS x FROM events),
         |r AS (SELECT g, x,
@@ -2935,10 +2848,10 @@ object EtlOps {
         |  max(CASE WHEN rn = greatest(1, (p_num * n + p_den - 1) // p_den)
         |      THEN x END) AS q_value
         |FROM r, ps GROUP BY g, n, p_num, p_den
-        |ORDER BY event_type, p_num""".stripMargin,
+        |ORDER BY event_type, p_num""".stripMargin),
     // the same sufficient sums; verdict by cross-multiplied HUGEINT
     // comparison, no division anywhere
-    "q270_correlation" ->
+    Gate("q270_correlation", correlationQ _,
       """WITH v AS (SELECT event_type AS g,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS x0,
         |  CAST(floor(value * 100) AS BIGINT) AS y FROM events),
@@ -2960,10 +2873,10 @@ object EtlOps {
         | CASE WHEN vx = 0 OR vy = 0 THEN NULL
         |      ELSE cov * cov * 100 * 100 >= vx * vy * 1 * 1 END
         |   AS related
-        |FROM d ORDER BY event_type""".stripMargin,
+        |FROM d ORDER BY event_type""".stripMargin),
     // segment at purchases via the prior-purchase running count,
     // windowed first/last touch per segment, direct when touchless
-    "q266_attribution" ->
+    Gate("q266_attribution", attributionQ _,
       """WITH e AS (SELECT event_id, user_id, event_type,
         |  epoch_us(ts) AS t, CAST(floor(value * 100) AS BIGINT) AS cents
         | FROM events WHERE event_type IN ('view', 'click', 'purchase')),
@@ -2991,10 +2904,10 @@ object EtlOps {
         |UNION ALL
         |SELECT 'last_touch', last_type, CAST(count(*) AS BIGINT),
         |  CAST(sum(cents) AS BIGINT) FROM j GROUP BY 2
-        |ORDER BY model, touch_type""".stripMargin,
+        |ORDER BY model, touch_type""".stripMargin),
     // exact per-key join contributions from two distinct-key-sized
     // aggregates; ppm by truncating integer division
-    "q265_join_cardinality" ->
+    Gate("q265_join_cardinality", joinCardinalityQ _,
       """WITH la AS (SELECT l_partkey AS join_key,
         |  CAST(count(*) AS BIGINT) AS n FROM lineitem GROUP BY 1),
         |m AS (SELECT a.join_key, a.n AS n_left, b.n AS n_right,
@@ -3004,9 +2917,9 @@ object EtlOps {
         |SELECT join_key, n_left, n_right, contrib,
         | CAST(tot AS BIGINT) AS total_rows, n_keys,
         | CAST(contrib * 1000000 // tot AS BIGINT) AS contrib_ppm
-        |FROM m, t ORDER BY contrib DESC, join_key LIMIT 15""".stripMargin,
+        |FROM m, t ORDER BY contrib DESC, join_key LIMIT 15""".stripMargin),
     // running high-water mark over arrival order, strict < for late
-    "q245_lateness" ->
+    Gate("q245_lateness", latenessQ _,
       """WITH e AS (SELECT user_id AS k, event_id,
         |  epoch_us(ts) - (event_id % 7) * 1800000000 AS t FROM events),
         |m AS (SELECT k, t, max(t) OVER (PARTITION BY k ORDER BY event_id
@@ -3017,9 +2930,9 @@ object EtlOps {
         |   AS n_late,
         | CAST(COALESCE(max(CASE WHEN hw IS NOT NULL AND t < hw
         |   THEN hw - t END), 0) AS BIGINT) AS max_late_us
-        |FROM m GROUP BY k ORDER BY user_id""".stripMargin,
+        |FROM m GROUP BY k ORDER BY user_id""".stripMargin),
     // value-based RANGE frame: sparse days age out by day arithmetic
-    "q243_rolling_range" ->
+    Gate("q243_rolling_range", rollingRangeQ _,
       """WITH daily AS (SELECT user_id % 25 AS k,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  CAST(count(*) AS BIGINT) AS n
@@ -3030,16 +2943,16 @@ object EtlOps {
         |FROM daily
         |WINDOW w AS (PARTITION BY k ORDER BY day
         |  RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY k, day""".stripMargin,
+        |ORDER BY k, day""".stripMargin),
     // the identical unrolled shift/mask chain, term for term
-    "q244_zorder" ->
+    Gate("q244_zorder", zorderQ _,
       s"""SELECT l_orderkey * 10 + l_linenumber AS rid,
          | l_partkey, l_suppkey,
          | CAST(${graft.functions.ZOrder.interleave2Sql("l_partkey",
             "l_suppkey", 16)} AS BIGINT) AS z
-         |FROM lineitem ORDER BY rid""".stripMargin,
+         |FROM lineitem ORDER BY rid""".stripMargin),
     // step-function gap attribution, (ts, event_id) tie order
-    "q239_twap" ->
+    Gate("q239_twap", twapQ _,
       """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS t,
         |  CAST(floor(value * 100) AS BIGINT) AS v, event_id FROM events),
         |l AS (SELECT k, t, v, lead(t) OVER (PARTITION BY k
@@ -3047,9 +2960,9 @@ object EtlOps {
         |SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n,
         | CAST(max(t) - min(t) AS BIGINT) AS span_us,
         | CAST(COALESCE(sum(v * (nt - t)), 0) AS BIGINT) AS twsum
-        |FROM l GROUP BY k ORDER BY user_id""".stripMargin,
+        |FROM l GROUP BY k ORDER BY user_id""".stripMargin),
     // running-max island sweep over half-open 45-min intervals
-    "q240_coverage" ->
+    Gate("q240_coverage", coverageQ _,
       """WITH iv AS (SELECT user_id AS k, epoch_us(ts) AS s,
         |  epoch_us(ts) + 2700000000 AS e, event_id FROM events),
         |m AS (SELECT k, s, e, event_id, max(e) OVER (PARTITION BY k
@@ -3065,9 +2978,9 @@ object EtlOps {
         |      FROM i GROUP BY k, island)
         |SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n_islands,
         | CAST(sum(cov) AS BIGINT) AS covered_us
-        |FROM c GROUP BY k ORDER BY user_id""".stripMargin,
+        |FROM c GROUP BY k ORDER BY user_id""".stripMargin),
     // day - row_number island trick over the distinct active days
-    "q241_streaks" ->
+    Gate("q241_streaks", streaksQ _,
       """WITH d AS (SELECT DISTINCT user_id % 25 AS k,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
         | FROM events WHERE event_id % 11 = 0),
@@ -3078,10 +2991,10 @@ object EtlOps {
         |SELECT k, CAST(count(*) AS BIGINT) AS n_streaks,
         | CAST(max(len) AS BIGINT) AS longest,
         | CAST(sum(len) AS BIGINT) AS n_days
-        |FROM s GROUP BY k ORDER BY k""".stripMargin,
+        |FROM s GROUP BY k ORDER BY k""".stripMargin),
     // the fold replayed per row: acc encodes lastEmitted*2 + flag; //
     // truncation is exact here (acc is even-negative only at the seed)
-    "q242_cooldown" ->
+    Gate("q242_cooldown", cooldownQ _,
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t
         |           FROM events),
         |p AS (SELECT event_id, user_id, t,
@@ -3093,10 +3006,10 @@ object EtlOps {
         |   (acc, t) -> CASE WHEN t - acc // 2 >= 21600000000
         |               THEN t * 2 + 1 ELSE (acc // 2) * 2 END) % 2 = 1)
         |   AS emitted
-        |FROM p ORDER BY event_id""".stripMargin,
+        |FROM p ORDER BY event_id""".stripMargin),
     // literal Benford ppm constants; first digit from the exact
     // integer's string form; all-integer deviations
-    "q238_benford" ->
+    Gate("q238_benford", benfordQ _,
       """WITH v AS (SELECT CAST(floor(l_extendedprice * 100) AS BIGINT)
         |    AS x FROM lineitem WHERE floor(l_extendedprice * 100) > 0),
         |d AS (SELECT CAST(substring(CAST(x AS VARCHAR), 1, 1) AS BIGINT)
@@ -3113,9 +3026,9 @@ object EtlOps {
         |   AS BIGINT) AS dev,
         | (abs(COALESCE(c.n, 0) * 1000000 - t.total * e.ppm) >
         |   20000 * t.total) AS off_digit
-        |FROM e LEFT JOIN c USING (digit), t ORDER BY e.digit""".stripMargin,
+        |FROM e LEFT JOIN c USING (digit), t ORDER BY e.digit""".stripMargin),
     // orphans per declared FK; the part parent misses every 3rd key
-    "q236_ri_audit" ->
+    Gate("q236_ri_audit", riAuditQ _,
       """WITH r AS (
         | SELECT 'events->customer' AS relation,
         |  CAST((SELECT count(*) FROM events WHERE user_id IS NOT NULL)
@@ -3138,10 +3051,10 @@ object EtlOps {
         |                   WHERE p.p_partkey % 3 <> 0
         |                     AND p.p_partkey = l.l_partkey)))
         |SELECT relation, n_child, n_orphans, (n_orphans = 0) AS intact
-        |FROM r ORDER BY relation""".stripMargin,
+        |FROM r ORDER BY relation""".stripMargin),
     // per-source rank -> ceil-scaled reference position -> reference
     // order statistic; ties broken by id in both engines
-    "q231_quantile_norm" ->
+    Gate("q231_quantile_norm", quantileNormQ _,
       """WITH v AS (SELECT event_id, event_type,
         |  CAST(floor(value * 100) AS BIGINT) AS cents FROM events),
         |rk AS (SELECT event_id, event_type, cents,
@@ -3154,11 +3067,11 @@ object EtlOps {
         |SELECT event_id, event_type, cents, x_norm
         |FROM rk, nr JOIN ref
         |  ON ref.p = (rk.r * nr.n_ref + rk.ng - 1) // rk.ng
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
     // doubled order statistics: med2 = sum of the two middle ranks,
     // dev2 = |2x - med2|, mad4 likewise over dev2; strict 3*MAD fence
     // cross-multiplied as 2*dev2 > 3*mad4
-    "q230_robust_outliers" ->
+    Gate("q230_robust_outliers", robustOutliersQ _,
       """WITH v AS (SELECT event_type AS g,
         |  CAST(floor(value * 100) AS BIGINT) AS x FROM events),
         |r AS (SELECT g, x, row_number() OVER (PARTITION BY g ORDER BY x)
@@ -3183,9 +3096,9 @@ object EtlOps {
         |      FROM d JOIN mm USING (g) GROUP BY d.g)
         |SELECT m.g AS event_type, m.n, m.med2, mm.mad4, o.n_outliers
         |FROM m JOIN mm USING (g) JOIN o USING (g)
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // the diff restated as one FULL JOIN with FILTERed counts
-    "q229_snapshot_diff" ->
+    Gate("q229_snapshot_diff", snapshotDiffQ _,
       """WITH old AS (SELECT o_orderkey AS k, o_custkey, o_orderstatus
         |  FROM orders WHERE o_orderkey % 5 <> 0),
         |new AS (SELECT o_orderkey AS k,
@@ -3215,22 +3128,22 @@ object EtlOps {
         | UNION ALL SELECT 'changed:o_orderstatus', count(*) FILTER
         |   (ok IS NOT NULL AND nk IS NOT NULL
         |    AND os IS DISTINCT FROM ns) FROM j
-        |) ORDER BY metric""".stripMargin,
-    "q223_model_predict" -> perceptronPredictOracle,
-    "q257_lift_table" -> liftTableOracle,
-    "q52_percentiles" ->
+        |) ORDER BY metric""".stripMargin),
+    Gate("q223_model_predict", perceptronPredictQ _, perceptronPredictOracle),
+    Gate("q257_lift_table", liftTableQ _, liftTableOracle),
+    Gate("q52_percentiles", percentilesQ _,
       """SELECT event_type,
         | quantile_cont(value, 0.5) AS p50,
         | quantile_cont(value, 0.95) AS p95,
         | COUNT(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q53_pivot" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Gate("q53_pivot", pivotQ _,
       """SELECT user_id,
         | CAST(SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS click,
         | CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS view,
         | CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase,
         | CAST(SUM(CASE WHEN event_type = 'signup' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS signup,
         | CAST(SUM(CASE WHEN event_type = 'error' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
   )
 }

@@ -73,32 +73,35 @@ object PipelineQueries {
       .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
         col("source"), col("n_chars").cast("long").as("n_chars"))
       .orderBy(col("doc_id")), "lakesimScanQ")
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_lakesim").toString
-    val objects = docs.grouped(math.max(docs.length / 5, 1)).zipWithIndex.toSeq
-    val index = objects.map { case (rows, i) =>
-      val ids = rows.map(_.getLong(0)); val chars = rows.map(_.getLong(3))
-      s"""{"file": "obj$i.ndjson", "count": ${rows.length},
-         | "ranges": {"doc_id": [${ids.min}, ${ids.max}],
-         |            "n_chars": [${chars.min}, ${chars.max}]}}""".stripMargin
-    }.mkString("{\"objects\": [", ",", "]}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$lakeDir/index.json"), index)
-    objects.foreach { case (rows, i) =>
-      val ndjson = rows.map(r =>
-        s"""{"doc_id": ${r.getLong(0)}, "lang": "${r.getString(1)}",
-           | "source": "${r.getString(2)}", "n_chars": ${r.getLong(3)}}"""
-          .stripMargin.replace("\n", "")).mkString("\n")
+    withTempDir("graft_q37") { base =>
+      val lakeDir = base.toString
+      val objects = docs.grouped(math.max(docs.length / 5, 1)).zipWithIndex.toSeq
+      val index = objects.map { case (rows, i) =>
+        val ids = rows.map(_.getLong(0)); val chars = rows.map(_.getLong(3))
+        s"""{"file": "obj$i.ndjson", "count": ${rows.length},
+           | "ranges": {"doc_id": [${ids.min}, ${ids.max}],
+           |            "n_chars": [${chars.min}, ${chars.max}]}}""".stripMargin
+      }.mkString("{\"objects\": [", ",", "]}")
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$lakeDir/obj$i.ndjson"), ndjson)
+        java.nio.file.Paths.get(s"$lakeDir/index.json"), index)
+      objects.foreach { case (rows, i) =>
+        val ndjson = rows.map(r =>
+          s"""{"doc_id": ${r.getLong(0)}, "lang": "${r.getString(1)}",
+             | "source": "${r.getString(2)}", "n_chars": ${r.getLong(3)}}"""
+            .stripMargin.replace("\n", "")).mkString("\n")
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$lakeDir/obj$i.ndjson"), ndjson)
+      }
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("lang", StringType),
+        StructField("source", StringType), StructField("n_chars", LongType)))
+      s.read.format(classOf[graft.sources.lakesim.LakeSimSource].getName)
+        .schema(schema).option("path", lakeDir).option("pageSize", "200").load()
+        .filter(col("n_chars") > 300 && col("lang") === "en")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
     }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("n_chars", LongType)))
-    s.read.format(classOf[graft.sources.lakesim.LakeSimSource].getName)
-      .schema(schema).option("path", lakeDir).option("pageSize", "200").load()
-      .filter(col("n_chars") > 300 && col("lang") === "en")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
   }
 
   /** Schema-registry persistence round-trip (reference `{bc}_schemas.json`,
@@ -115,15 +118,16 @@ object PipelineQueries {
       when(col("o_orderkey") % 2 === 0,
         to_json(struct(col("o_orderkey"), col("o_totalprice"))))
       .otherwise(to_json(struct(col("o_custkey"), col("o_orderkey")))).as("rec"))
-    val regPath = java.nio.file.Files.createTempDirectory("graft_reg_q44")
-      .resolve("orders_schemas.json").toString
     // registry-building needs only drift discovery (ingest step 1) — the
     // full first ingest parsed/cleansed 7500 records just to throw the
     // frame away, which made this the slowest benchmark query
     val first = graft.schema.SchemaRegistry.seed.observeSorted(
       graft.schema.SchemaRegistry.discoverKeysets(even, "rec"))
-    graft.schema.SchemaRegistry.save(s, first, regPath)
-    val loaded = graft.schema.SchemaRegistry.loadOrSeed(s, regPath)
+    val loaded = withTempDir("graft_q44") { base =>
+      val regPath = base.resolve("orders_schemas.json").toString
+      graft.schema.SchemaRegistry.save(s, first, regPath)
+      graft.schema.SchemaRegistry.loadOrSeed(s, regPath)
+    }
     graft.jobs.IngestPipeline.ingest(s, full, "rec", loaded).silver
       .withColumn("schema_version", col("schema_version").cast("long"))
       .withColumn("o_orderkey", col("o_orderkey").cast("long"))
@@ -140,31 +144,34 @@ object PipelineQueries {
       .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
         col("source"), col("n_chars").cast("long").as("n_chars"))
       .orderBy(col("doc_id")), "cursorScanQ")
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_cursorsim").toString
-    val pages = docs.grouped(math.max(docs.length / 4, 1)).toSeq
-    pages.zipWithIndex.foreach { case (rows, i) =>
-      val next = if (i + 1 < pages.length) s"page${i + 1}.json" else "terminal.json"
-      val header =
-        s"""{"_count": ${rows.length}, "_links": [{"href": "page$i.json"}, {"href": "$next"}]}"""
-      val recs = rows.map(r =>
-        s"""{"_fields": {"doc_id": ${r.getLong(0)}, "lang": "${r.getString(1)}",
-           | "source": "${r.getString(2)}", "n_chars": ${r.getLong(3)}}}"""
-          .stripMargin.replace("\n", ""))
+    withTempDir("graft_q46") { base =>
+      val lakeDir = base.toString
+      val pages = docs.grouped(math.max(docs.length / 4, 1)).toSeq
+      pages.zipWithIndex.foreach { case (rows, i) =>
+        val next = if (i + 1 < pages.length) s"page${i + 1}.json" else "terminal.json"
+        val header =
+          s"""{"_count": ${rows.length}, "_links": [{"href": "page$i.json"}, {"href": "$next"}]}"""
+        val recs = rows.map(r =>
+          s"""{"_fields": {"doc_id": ${r.getLong(0)}, "lang": "${r.getString(1)}",
+             | "source": "${r.getString(2)}", "n_chars": ${r.getLong(3)}}}"""
+            .stripMargin.replace("\n", ""))
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$lakeDir/page$i.json"),
+          (header +: recs).mkString("[", ",", "]"))
+      }
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$lakeDir/page$i.json"),
-        (header +: recs).mkString("[", ",", "]"))
+        java.nio.file.Paths.get(s"$lakeDir/terminal.json"),
+        """[{"_count": 0, "_links": [{"href": "terminal.json"}, {"href": "page0.json"}]}]""")
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("lang", StringType),
+        StructField("source", StringType), StructField("n_chars", LongType)))
+      s.read.format(classOf[graft.sources.lakesim.CursorSimSource].getName)
+        .schema(schema).option("path", lakeDir).option("start", "page0.json").load()
+        .filter(col("n_chars") <= 300 && col("source") === "src7")
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$lakeDir/terminal.json"),
-      """[{"_count": 0, "_links": [{"href": "terminal.json"}, {"href": "page0.json"}]}]""")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("n_chars", LongType)))
-    s.read.format(classOf[graft.sources.lakesim.CursorSimSource].getName)
-      .schema(schema).option("path", lakeDir).option("start", "page0.json").load()
-      .filter(col("n_chars") <= 300 && col("source") === "src7")
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .orderBy(col("doc_id"))
   }
 
   /** OAuth-authenticated cursor extraction under the gate (q227): the
@@ -431,21 +438,24 @@ object PipelineQueries {
     val fmt = classOf[graft.sources.lakesim.LakeSimSource].getName
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_lakewrite").toString
-    docs.filter(col("doc_id") <= 100).repartition(2)
-      .write.format(fmt).option("path", lakeDir).mode("overwrite").save()
-    docs.filter(col("doc_id") % 2 === 0).repartition(4)
-      .write.format(fmt).option("path", lakeDir).mode("overwrite").save()
-    docs.filter(col("doc_id") % 2 === 1).repartition(3)
-      .write.format(fmt).option("path", lakeDir).mode("append").save()
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("n_chars", LongType)))
-    s.read.format(fmt)
-      .schema(schema).option("path", lakeDir).option("pageSize", "200").load()
-      .filter(col("n_chars") > 300 && col("lang") === "en")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
+    withTempDir("graft_q105") { base =>
+      val lakeDir = base.toString
+      docs.filter(col("doc_id") <= 100).repartition(2)
+        .write.format(fmt).option("path", lakeDir).mode("overwrite").save()
+      docs.filter(col("doc_id") % 2 === 0).repartition(4)
+        .write.format(fmt).option("path", lakeDir).mode("overwrite").save()
+      docs.filter(col("doc_id") % 2 === 1).repartition(3)
+        .write.format(fmt).option("path", lakeDir).mode("append").save()
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("lang", StringType),
+        StructField("source", StringType), StructField("n_chars", LongType)))
+      s.read.format(fmt)
+        .schema(schema).option("path", lakeDir).option("pageSize", "200").load()
+        .filter(col("n_chars") > 300 && col("lang") === "en")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
+    }
   }
 
   /** Bloom-filter data skipping under the gate (q199): the documents
@@ -465,32 +475,35 @@ object PipelineQueries {
     val fmt = classOf[graft.sources.lakesim.LakeSimSource].getName
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_lakebloom").toString
-    // object count scales with the table so per-object distinct ids stay
-    // near the bloom's design capacity (~600 ids → FP well under 1%); a
-    // FIXED count would saturate the 8192-bit filters at larger SFs and
-    // false positives would erase the skipping this gate asserts
-    val nDocs = docs.count()
-    val nObjects = math.max(8L, (nDocs + 599) / 600).toInt
-    docs.repartition(nObjects, col("doc_id"))
-      .write.format(fmt).option("path", lakeDir)
-      .option("bloomfields", "doc_id,source").mode("overwrite").save()
-    val needles = Seq(42L, 137L, 443L)
-    val entries = graft.sources.lakesim.LakeIndex.load(lakeDir)
-    val kept = graft.sources.lakesim.LakeIndex.prune(entries,
-      Seq(org.apache.spark.sql.sources.In("doc_id",
-        needles.toArray[Any]))).size
-    // needle hits plus generous false-positive headroom — the signal is
-    // "pruning happened", not an exact object count
-    require(kept <= needles.size + math.max(1, entries.size / 10),
-      s"bloom skipping regressed: IN(${needles.mkString(",")}) kept " +
-      s"$kept of ${entries.size} objects (ranges alone keep all)")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("n_chars", LongType)))
-    s.read.format(fmt).schema(schema).option("path", lakeDir).load()
-      .filter(col("doc_id").isin(needles: _*))
-      .orderBy(col("doc_id"))
+    withTempDir("graft_q199") { base =>
+      val lakeDir = base.toString
+      // object count scales with the table so per-object distinct ids stay
+      // near the bloom's design capacity (~600 ids → FP well under 1%); a
+      // FIXED count would saturate the 8192-bit filters at larger SFs and
+      // false positives would erase the skipping this gate asserts
+      val nDocs = docs.count()
+      val nObjects = math.max(8L, (nDocs + 599) / 600).toInt
+      docs.repartition(nObjects, col("doc_id"))
+        .write.format(fmt).option("path", lakeDir)
+        .option("bloomfields", "doc_id,source").mode("overwrite").save()
+      val needles = Seq(42L, 137L, 443L)
+      val entries = graft.sources.lakesim.LakeIndex.load(lakeDir)
+      val kept = graft.sources.lakesim.LakeIndex.prune(entries,
+        Seq(org.apache.spark.sql.sources.In("doc_id",
+          needles.toArray[Any]))).size
+      // needle hits plus generous false-positive headroom — the signal is
+      // "pruning happened", not an exact object count
+      require(kept <= needles.size + math.max(1, entries.size / 10),
+        s"bloom skipping regressed: IN(${needles.mkString(",")}) kept " +
+        s"$kept of ${entries.size} objects (ranges alone keep all)")
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("lang", StringType),
+        StructField("source", StringType), StructField("n_chars", LongType)))
+      s.read.format(fmt).schema(schema).option("path", lakeDir).load()
+        .filter(col("doc_id").isin(needles: _*))
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
+    }
   }
 
   /** Schema-DRIFT warehouse evolution under the gate (q180), against
@@ -932,9 +945,8 @@ object PipelineQueries {
   /** Run `body` against a fresh temp directory, deleting the tree even on
     * failure (the walk stream holds directory handles and must close).
     * Package-visible: TrainingData's file-producing gates reuse it. */
-  private[queries] def withTempDir(prefix: String)
-      (body: java.nio.file.Path => DataFrame)
-      : DataFrame = {
+  private[queries] def withTempDir[T](prefix: String)
+      (body: java.nio.file.Path => T): T = {
     val base = java.nio.file.Files.createTempDirectory(prefix)
     try body(base)
     finally {
@@ -2238,86 +2250,13 @@ object PipelineQueries {
       .orderBy(col("user_id"), col("session_id"))
   }
 
-  /** Run a streaming gate under 8 state partitions (the
-    * [[graft.streaming.StreamState.withStatePartitions]] layout knob):
-    * per-key state at every gate SF is tiny, so state-store file IO per
-    * partition per batch is the cost floor — the q205 measurement
-    * (33.6 s → 11.5 s, while 10× data moved the 32-partition run by
-    * −12%) generalizes across the checkpointed-stream family. The gate's
-    * internal batch shuffles also run at 8, which is immaterial at gate
-    * data sizes and irrelevant to results. */
-  private def withSP(fn: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, dir) => graft.streaming.StreamState.withStatePartitions(s, 8) {
-      fn(s, dir)
-    }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q35_event_window"    -> eventWindowQ _,
-    "q43_sessionize"      -> sessionizeQ _,
-    "q36_ingest_pipeline" -> ingestPipelineQ _,
-    "q37_lakesim_scan"    -> lakesimScanQ _,
-    "q44_registry_roundtrip" -> registryRoundTripQ _,
-    "q46_cursor_scan"     -> cursorScanQ _,
-    "q227_cursor_oauth"   -> cursorOAuthQ _,
-    "q302_cursor_rotation" -> cursorRotationQ _,
-    "q54_nested_ingest"   -> nestedIngestQ _,
-    "q98_stream_ingest"   -> withSP(streamIngestQ _),
-    "q104_stream_dedup"   -> withSP(streamDedupQ _),
-    "q105_lakesim_write"  -> lakesimWriteQ _,
-    "q199_bloom_skip"     -> bloomSkipQ _,
-    "q205_stream_interval" -> streamIntervalJoinQ _,
-    "q134_lakesim_stream" -> withSP(lakesimStreamQ _),
-    "q139_csv_roundtrip"  -> csvRoundTripQ _,
-    "q140_jdbc_roundtrip" -> jdbcRoundTripQ _,
-    "q143_scd2_history"   -> scd2Q _,
-    "q176_scd2_retention" -> scd2RetainQ _,
-    "q178_lake_time_travel" -> lakeTimeTravelQ _,
-    "q180_jdbc_evolve"    -> jdbcEvolveQ _,
-    "q183_daily_pipeline" -> dailyPipelineQ _,
-    "q284_orchestration"  -> orchestrationQ _,
-    "q184_lake_agg_pushdown" -> lakeAggPushdownQ _,
-    "q144_expectations"   -> expectationsQ _,
-    "q145_lake_compact"   -> lakeCompactQ _,
-    "q148_jsonl_roundtrip" -> jsonlRoundTripQ _,
-    "q149_latest_by_key"  -> latestByKeyQ _,
-    "q173_orc_roundtrip"  -> orcRoundTripQ _,
-    "q106_stream_neardup" -> withSP(streamNearDupQ _),
-    "q128_stream_fuzzy"   -> withSP(streamFuzzyQ _),
-    "q112_bucketed_join"  -> bucketedJoinQ _,
-    "q119_stream_stats"   -> withSP(streamStatsQ _),
-    "q151_stream_asof"    -> withSP(streamAsofQ _),
-    "q156_scd2_lookup"    -> scd2LookupQ _,
-    "q157_scd2_stream"    -> withSP(scd2StreamQ _),
-    "q195_funnel_stream"  -> withSP(funnelStreamQ _),
-    "q210_stream_drift"   -> withSP(streamDriftQ _),
-    "q225_stream_heavy"   -> withSP(streamHeavyQ _),
-    "q232_stream_churn"   -> streamChurnQ _,
-    "q247_stream_lateness" -> withSP(streamLatenessQ _),
-    "q258_stream_bitmap"  -> withSP(streamBitmapQ _),
-    "q260_stream_quantile" -> withSP(streamQuantileQ _),
-    "q261_stream_components" -> withSP(streamComponentsQ _),
-    "q262_stream_left_interval" -> streamLeftIntervalQ _,
-    "q264_stream_reservoir" -> withSP(streamReservoirQ _),
-    "q279_stream_tvd"     -> withSP(streamTvdQ _),
-    "q221_stream_cusum"   -> withSP(streamCusumQ _),
-    "q160_dlq_routing"    -> dlqRoutingQ _,
-    "q163_index_append"   -> indexAppendQ _,
-    "q164_enrich_stream"  -> withSP(scd2EnrichStreamQ _),
-    "q165_scd2_compact"   -> withSP(scd2StreamCompactQ _),
-    "q169_scd2_deletes"   -> scd2DeletesQ _,
-    "q170_scd2_cdc"       -> withSP(scd2CdcStreamQ _),
-    "q152_stream_sessions" -> withSP(streamSessionsQ _),
-    "q153_dedup_eviction" -> withSP(streamDedupEvictionQ _),
-  )
-
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
     // the whole two-wave orchestration report restated from events:
     // per-wave loaded rows (incremental appends = the anti-joined
     // remainder; full load = wave B), the drift-version census (clicks/
     // views mint a second keyset in wave B, signups stay at one), the
     // poisoned class failing both waves, and final warehouse counts
-    "q284_orchestration" ->
+    Gate("q284_orchestration", orchestrationQ _,
       """WITH c AS (SELECT
         |  CAST(count(*) FILTER (event_type = 'click' AND event_id % 2 = 0)
         |    AS BIGINT) AS click_even,
@@ -2346,11 +2285,11 @@ object PipelineQueries {
         | UNION ALL SELECT 'bc_views', true, view_even,
         |  CAST(1 AS INTEGER), true, view_all, CAST(2 AS INTEGER),
         |  view_all FROM c)
-        |ORDER BY business_class""".stripMargin,
+        |ORDER BY business_class""".stripMargin),
     // the q50 ASOF shape with left_value = event_id so every emitted row
     // is uniquely keyed; right_ts rides along so the oracle pins WHICH
     // quote each probe joined, not just its value
-    "q151_stream_asof" ->
+    Gate("q151_stream_asof", streamAsofQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts, value
         | FROM events WHERE user_id % 3 = 0),
@@ -2364,10 +2303,10 @@ object PipelineQueries {
         | q.ts AS right_ts, q.right_value
         |FROM probes p ASOF LEFT JOIN quotes q
         | ON p.key = q.key AND p.ts >= q.ts
-        |ORDER BY p.key, p.left_value""".stripMargin,
+        |ORDER BY p.key, p.left_value""".stripMargin),
     // the q43 lag/gap session rule; session_end is last event + gap
     // (the session_window convention), totals sum as DECIMAL(18,2)
-    "q152_stream_sessions" ->
+    Gate("q152_stream_sessions", streamSessionsQ _,
       """WITH e AS (
         | SELECT user_id, date_trunc('second', ts) AS ts,
         |        CAST(value AS DECIMAL(18,2)) AS v
@@ -2390,24 +2329,24 @@ object PipelineQueries {
         |       count(*) AS n_events,
         |       CAST(sum(v) AS DOUBLE) AS total_value
         |FROM t GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
     // the three-wave construction restated directly: evens land in waves
     // 1 and 3 (their wave-1 state must have EVICTED), odds only in wave 2
     // (their state must have survived into wave 3)
-    "q153_dedup_eviction" ->
+    Gate("q153_dedup_eviction", streamDedupEvictionQ _,
       """SELECT doc_id, CAST(1 AS BIGINT) AS wave FROM documents
         | WHERE doc_id % 2 = 0
         |UNION ALL
         |SELECT doc_id, CAST(2 AS BIGINT) FROM documents WHERE doc_id % 2 = 1
         |UNION ALL
         |SELECT doc_id, CAST(3 AS BIGINT) FROM documents WHERE doc_id % 2 = 0
-        |ORDER BY doc_id, wave""".stripMargin,
-    "q35_event_window" ->
+        |ORDER BY doc_id, wave""".stripMargin),
+    Gate("q35_event_window", eventWindowQ _,
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         | COUNT(*) AS n,
         | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "q43_sessionize" ->
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
+    Gate("q43_sessionize", sessionizeQ _,
       """WITH tagged AS (
         | SELECT user_id, date_trunc('second', ts) AS ts, value,
         |  SUM(CASE WHEN prev_ts IS NULL
@@ -2423,27 +2362,27 @@ object PipelineQueries {
         | COUNT(*) AS n_events,
         | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM tagged GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q37_lakesim_scan" ->
+        |ORDER BY user_id, session_id""".stripMargin),
+    Gate("q37_lakesim_scan", lakesimScanQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE n_chars > 300 AND lang = 'en' ORDER BY doc_id""".stripMargin,
-    "q46_cursor_scan" ->
+        |WHERE n_chars > 300 AND lang = 'en' ORDER BY doc_id""".stripMargin),
+    Gate("q46_cursor_scan", cursorScanQ _,
       """SELECT doc_id, source, n_chars FROM documents
-        |WHERE n_chars <= 300 AND source = 'src7' ORDER BY doc_id""".stripMargin,
+        |WHERE n_chars <= 300 AND source = 'src7' ORDER BY doc_id""".stripMargin),
     // the re-authenticating walk must be invisible to the data: the
     // oracle is the plain table restatement of the q227 slice
-    "q227_cursor_oauth" ->
+    Gate("q227_cursor_oauth", cursorOAuthQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE n_chars <= 400 AND lang = 'en' ORDER BY doc_id""".stripMargin,
+        |WHERE n_chars <= 400 AND lang = 'en' ORDER BY doc_id""".stripMargin),
     // rotation, demotion, and re-grants must be invisible to the data:
     // the oracle is the plain table restatement of the q302 slice
-    "q302_cursor_rotation" ->
+    Gate("q302_cursor_rotation", cursorRotationQ _,
       """SELECT doc_id, source, n_chars FROM documents
-        |WHERE n_chars > 200 AND source = 'src3' ORDER BY doc_id""".stripMargin,
+        |WHERE n_chars > 200 AND source = 'src3' ORDER BY doc_id""".stripMargin),
     // the streamed per-source sketch state is a pure set function of
     // everything ingested, so the final monitor rows equal the one-shot
     // batch sketch — q110's whole-corpus restatement verbatim
-    "q119_stream_stats" ->
+    Gate("q119_stream_stats", streamStatsQ _,
       """WITH vc AS (SELECT source, n_chars AS v, count(*) AS c
         |            FROM documents GROUP BY source, n_chars),
         |h AS (SELECT source, v, c,
@@ -2468,22 +2407,22 @@ object PipelineQueries {
         |    mass::DOUBLE) AS BIGINT)) THEN v END) AS p99
         | FROM cum GROUP BY source)
         |SELECT t.source, t.sketch_size, t.sketch_mass, q.p50, q.p90, q.p99
-        |FROM tot t JOIN q USING (source) ORDER BY source""".stripMargin,
+        |FROM tot t JOIN q USING (source) ORDER BY source""".stripMargin),
     // bucketing must change the layout, never the answer: the oracle is
     // the same join/aggregate over the raw parquet tables
-    "q112_bucketed_join" ->
+    Gate("q112_bucketed_join", bucketedJoinQ _,
       """SELECT c_mktsegment, count(*) AS n_orders,
         | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // the truncate+append write waves reconstruct the table exactly, so
     // the oracle is the original table under the same pruning filter
-    "q105_lakesim_write" ->
+    Gate("q105_lakesim_write", lakesimWriteQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE n_chars > 300 AND lang = 'en' ORDER BY doc_id""".stripMargin,
+        |WHERE n_chars > 300 AND lang = 'en' ORDER BY doc_id""".stripMargin),
     // the streamed pair set equals the batch interval-overlap join:
     // q198's oracle verbatim over the same slices
-    "q205_stream_interval" ->
+    Gate("q205_stream_interval", streamIntervalJoinQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts FROM events),
         |a AS (
@@ -2497,10 +2436,10 @@ object PipelineQueries {
         |SELECT a.a_id, b.b_id, a.user_id
         |FROM a JOIN b ON a.user_id = b.user_id
         | AND a.a_start <= b.b_end AND b.b_start <= a.a_end
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
     // the standing report equals the one-shot TVD — q276's oracle
     // verbatim
-    "q279_stream_tvd" ->
+    Gate("q279_stream_tvd", streamTvdQ _,
       """WITH e AS (SELECT user_id % 4 AS g, event_type AS bucket,
         |  day(CAST(ts AS DATE)) <= 15 AS is_a, event_id
         | FROM events),
@@ -2525,10 +2464,10 @@ object PipelineQueries {
         | CAST(v.num AS BIGINT) AS tvd_num,
         | v.num * 100 >= v.na::HUGEINT * v.nb * 2 * 3 AS drifted
         |FROM d JOIN v ON v.g = d.g
-        |ORDER BY cohort, event_type""".stripMargin,
+        |ORDER BY cohort, event_type""".stripMargin),
     // the standing reservoir equals the one-shot bottom-k — q263's
     // exact integer rank restatement verbatim
-    "q264_stream_reservoir" ->
+    Gate("q264_stream_reservoir", streamReservoirQ _,
       """WITH h AS (SELECT doc_id, n_chars,
         |  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
         |    AS hv
@@ -2538,10 +2477,10 @@ object PipelineQueries {
         |  row_number() OVER (ORDER BY rnk, hv, doc_id) AS sample_rank
         | FROM r)
         |SELECT CAST(sample_rank AS BIGINT) AS sample_rank, doc_id, n_chars
-        |FROM s WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin,
+        |FROM s WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin),
     // the streamed left join equals the batch LEFT join under the same
     // bounds; unmatched left rows surface as b_id = -1
-    "q262_stream_left_interval" ->
+    Gate("q262_stream_left_interval", streamLeftIntervalQ _,
       """WITH e AS (
         | SELECT event_id, user_id, date_trunc('second', ts) AS ts FROM events),
         |a AS (
@@ -2555,34 +2494,34 @@ object PipelineQueries {
         |SELECT a.a_id, COALESCE(b.b_id, -1) AS b_id, a.user_id
         |FROM a LEFT JOIN b ON a.user_id = b.user_id
         | AND a.a_start <= b.b_end AND b.b_start <= a.a_end
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
     // the bloom-pruned point lookups return exactly the source rows
-    "q199_bloom_skip" ->
+    Gate("q199_bloom_skip", bloomSkipQ _,
       """SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE doc_id IN (42, 137, 443) ORDER BY doc_id""".stripMargin,
+        |WHERE doc_id IN (42, 137, 443) ORDER BY doc_id""".stripMargin),
     // the index-only aggregates restated over the source table
-    "q184_lake_agg_pushdown" ->
+    Gate("q184_lake_agg_pushdown", lakeAggPushdownQ _,
       """SELECT CAST(count(*) AS BIGINT) AS n,
         | min(doc_id) AS min_id, max(doc_id) AS max_id,
         | min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
     // the whole daily composition as one CASE: standing rows keep
     // their day-1 perturbed values (never re-extracted), new ids
     // arrive with day-2 values
-    "q183_daily_pipeline" ->
+    Gate("q183_daily_pipeline", dailyPipelineQ _,
       """SELECT doc_id, lang,
         | CASE WHEN doc_id % 3 = 0 THEN n_chars
         |      ELSE n_chars + 1000 END AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // drift membership restated: evens loaded before the column
     // existed (NULL), odds carried it
-    "q180_jdbc_evolve" ->
+    Gate("q180_jdbc_evolve", jdbcEvolveQ _,
       """SELECT doc_id, lang,
         | CASE WHEN doc_id % 2 = 0 THEN NULL ELSE n_chars END AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // each version's membership restated from the source table: v1 =
     // evens, v2 = everything, v3 = the truncate's lang slice
-    "q178_lake_time_travel" ->
+    Gate("q178_lake_time_travel", lakeTimeTravelQ _,
       """SELECT 1 AS version, doc_id, lang FROM documents
         |WHERE doc_id % 2 = 0
         |UNION ALL
@@ -2590,24 +2529,24 @@ object PipelineQueries {
         |UNION ALL
         |SELECT 3 AS version, doc_id, lang FROM documents
         |WHERE lang = 'en'
-        |ORDER BY version, doc_id""".stripMargin,
+        |ORDER BY version, doc_id""".stripMargin),
     // the admission-controlled AvailableNow drain reconstructs the table
     // exactly (every object, every page, exactly once across batches)
-    "q134_lakesim_stream" ->
+    Gate("q134_lakesim_stream", lakesimStreamQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the CSV write -> schema'd read round trip is value-faithful; the
     // sanitizer strips exactly ["\n] from the hostile-suffixed text
-    "q139_csv_roundtrip" ->
+    Gate("q139_csv_roundtrip", csvRoundTripQ _,
       ("SELECT doc_id, lang, n_chars,\n" +
        " regexp_replace(text || '\"x' || chr(10) || 'y', '[\"\\n]', '', 'g')" +
        " AS text_clean\n" +
-       "FROM documents ORDER BY doc_id"),
+       "FROM documents ORDER BY doc_id")),
     // the chunked JDBC load (append, then truncate-and-reload), live
     // introspection, and partitioned read-back are value-faithful
-    "q140_jdbc_roundtrip" ->
+    Gate("q140_jdbc_roundtrip", jdbcRoundTripQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // SCD2 compaction restated: run starts where the tracked attribute
     // null-safely differs from the previous observation (or rn = 1);
     // valid_to chains via lead over the run frame; event_id breaks ts
@@ -2615,7 +2554,7 @@ object PipelineQueries {
     // the q147 serving restatement with the TRAINING CTEs (sample,
     // coarse cells, residual codebooks) restricted to wave 1 (even
     // vec_ids); assignment/encode/probe run over the full corpus
-    "q163_index_append" ->
+    Gate("q163_index_append", indexAppendQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -2671,10 +2610,10 @@ object PipelineQueries {
         | WHERE b.cell0 IN (SELECT cell0 FROM probe)
         | GROUP BY b.vec_id)
         |SELECT vec_id, adc_dist FROM pervec
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
+        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin),
     // identical line construction by concatenation; routing on
     // json_valid — corrupt rows carry ONLY the raw-record hash
-    "q160_dlq_routing" ->
+    Gate("q160_dlq_routing", dlqRoutingQ _,
       """WITH d AS (SELECT doc_id, source, n_chars FROM documents),
         |l AS (SELECT doc_id AS _id,
         |  '{"doc_id":' || doc_id || ',"source":"' || source ||
@@ -2689,10 +2628,10 @@ object PipelineQueries {
         | CASE WHEN ok THEN CAST(line->>'n_chars' AS BIGINT) END AS n_chars,
         | CASE WHEN ok THEN 'main' ELSE 'dlq' END AS channel,
         | CASE WHEN NOT ok THEN md5(line) END AS raw_md5
-        |FROM r ORDER BY channel, doc_id, raw_md5""".stripMargin,
+        |FROM r ORDER BY channel, doc_id, raw_md5""".stripMargin),
     // the streaming funnel state must equal the batch chained-MIN
     // recompute over the full slice, per user
-    "q195_funnel_stream" ->
+    Gate("q195_funnel_stream", funnelStreamQ _,
       """WITH ev AS (SELECT user_id, date_trunc('second', ts) AS ts,
         |  event_type FROM events
         |  WHERE event_id % 7 = 0 AND user_id % 2 = 0),
@@ -2715,10 +2654,10 @@ object PipelineQueries {
         |FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
         |        LEFT JOIN s3 ON s1.user_id = s3.user_id
         |        LEFT JOIN s4 ON s1.user_id = s4.user_id
-        |ORDER BY s1.user_id""".stripMargin,
+        |ORDER BY s1.user_id""".stripMargin),
     // the full emitted day series must equal the batch densify+cusum
     // pipeline — the oracle IS q213's verbatim
-    "q221_stream_cusum" ->
+    Gate("q221_stream_cusum", streamCusumQ _,
       """WITH daily AS (SELECT user_id % 25 AS k,
         |  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
         |  count(*) AS n FROM events WHERE event_id % 11 = 0 GROUP BY 1, 2),
@@ -2736,10 +2675,10 @@ object PipelineQueries {
         |   (acc, x) -> greatest(0, acc + x - 2)) AS BIGINT) AS cusum,
         | (list_reduce(list_prepend(0, xs),
         |   (acc, x) -> greatest(0, acc + x - 2)) > 3) AS alarm
-        |FROM p ORDER BY k, day""".stripMargin,
+        |FROM p ORDER BY k, day""".stripMargin),
     // the streamed increments plus the derived removed row must equal
     // the batch columnChurn — the oracle IS q229's restatement verbatim
-    "q232_stream_churn" ->
+    Gate("q232_stream_churn", streamChurnQ _,
       """WITH old AS (SELECT o_orderkey AS k, o_custkey, o_orderstatus
         |  FROM orders WHERE o_orderkey % 5 <> 0),
         |new AS (SELECT o_orderkey AS k,
@@ -2769,10 +2708,10 @@ object PipelineQueries {
         | UNION ALL SELECT 'changed:o_orderstatus', count(*) FILTER
         |   (ok IS NOT NULL AND nk IS NOT NULL
         |    AND os IS DISTINCT FROM ns) FROM j
-        |) ORDER BY metric""".stripMargin,
+        |) ORDER BY metric""".stripMargin),
     // the standing per-user audit must equal the batch recompute —
     // the oracle IS q245's restatement verbatim
-    "q247_stream_lateness" ->
+    Gate("q247_stream_lateness", streamLatenessQ _,
       """WITH e AS (SELECT user_id AS k, event_id,
         |  epoch_us(ts) - (event_id % 7) * 1800000000 AS t FROM events),
         |m AS (SELECT k, t, max(t) OVER (PARTITION BY k ORDER BY event_id
@@ -2783,19 +2722,19 @@ object PipelineQueries {
         |   AS n_late,
         | CAST(COALESCE(max(CASE WHEN hw IS NOT NULL AND t < hw
         |   THEN hw - t END), 0) AS BIGINT) AS max_late_us
-        |FROM m GROUP BY k ORDER BY user_id""".stripMargin,
+        |FROM m GROUP BY k ORDER BY user_id""".stripMargin),
     // the standing words must equal the one-shot batch bitmap —
     // q249's construction over the full corpus
-    "q258_stream_bitmap" ->
+    Gate("q258_stream_bitmap", streamBitmapQ _,
       """WITH b AS (SELECT event_type, user_id // 63 AS bucket,
         |  bit_or(CAST(1 AS BIGINT) << CAST(user_id % 63 AS INT)) AS bits
         | FROM events GROUP BY 1, 2)
         |SELECT event_type, CAST(bucket AS BIGINT) AS bucket, bits,
         | CAST(bit_count(bits) AS BIGINT) AS n_bits
-        |FROM b ORDER BY event_type, bucket""".stripMargin,
+        |FROM b ORDER BY event_type, bucket""".stripMargin),
     // the standing assignment must equal min-label components over
     // the union of both waves — q56's recursive-CTE restatement
-    "q261_stream_components" ->
+    Gate("q261_stream_components", streamComponentsQ _,
       """WITH RECURSIVE base AS (SELECT doc_id FROM documents),
         |pairs AS (
         | SELECT doc_id AS a, doc_id + 100000 AS b FROM base
@@ -2814,10 +2753,10 @@ object PipelineQueries {
         | SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.id)
         |SELECT CAST(id AS BIGINT) AS id, CAST(min(lbl) AS BIGINT)
         |  AS cluster_id
-        |FROM reach GROUP BY id ORDER BY id""".stripMargin,
+        |FROM reach GROUP BY id ORDER BY id""".stripMargin),
     // the standing entries must equal the one-shot sketch — q237's
     // 256-smallest-hash restatement verbatim
-    "q260_stream_quantile" ->
+    Gate("q260_stream_quantile", streamQuantileQ _,
       """WITH v AS (SELECT event_type, CAST(floor(value * 100) AS BIGINT)
         |    AS x FROM events),
         |vc AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS c
@@ -2828,10 +2767,10 @@ object PipelineQueries {
         |rk AS (SELECT *, row_number() OVER (PARTITION BY event_type
         |        ORDER BY hv) AS r FROM h)
         |SELECT event_type, x AS value, c AS count FROM rk
-        |WHERE r <= 256 ORDER BY event_type, value""".stripMargin,
+        |WHERE r <= 256 ORDER BY event_type, value""".stripMargin),
     // the maintained grid serves the batch estimates — the oracle IS
     // q93's one-shot count-min construction verbatim
-    "q225_stream_heavy" ->
+    Gate("q225_stream_heavy", streamHeavyQ _,
       """WITH toks AS (
         | SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents WHERE doc_id % 2 = 0),
@@ -2853,10 +2792,10 @@ object PipelineQueries {
         |        FROM probe LEFT JOIN cells USING (depth, bucket) GROUP BY term)
         |SELECT t.term, t.cnt, e.est_count
         |FROM top t JOIN est e USING (term)
-        |ORDER BY cnt DESC, term""".stripMargin,
+        |ORDER BY cnt DESC, term""".stripMargin),
     // the streaming monitor's standing counts must equal the batch
     // recompute — the oracle IS q207's exact rational audit verbatim
-    "q210_stream_drift" ->
+    Gate("q210_stream_drift", streamDriftQ _,
       """WITH r AS (SELECT event_type AS category, count(*) AS ref_n
         |           FROM events WHERE value <= 50 GROUP BY 1),
         |c AS (SELECT event_type AS category, count(*) AS cur_n
@@ -2872,10 +2811,10 @@ object PipelineQueries {
         | CAST(tr * tc * (ref_n + cur_n) AS BIGINT) AS chi_den,
         | ((ref_n*tc - cur_n*tr) * (ref_n*tc - cur_n*tr) * 4 >
         |   tr * tc * (ref_n + cur_n) * 1) AS drifted
-        |FROM j, t ORDER BY category""".stripMargin,
+        |FROM j, t ORDER BY category""".stripMargin),
     // the streaming incremental history must equal the batch recompute —
     // the oracle IS q143's full-log restatement
-    "q157_scd2_stream" ->
+    Gate("q157_scd2_stream", scd2StreamQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events
         |  WHERE user_id % 2 = 0),
@@ -2891,10 +2830,10 @@ object PipelineQueries {
         | FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, event_type, valid_from, valid_to, version,
         | valid_to IS NULL AS is_current
-        |FROM runs ORDER BY user_id, version""".stripMargin,
+        |FROM runs ORDER BY user_id, version""".stripMargin),
     // the streaming CDC drain must equal the batch recompute with
     // deletes applied — the q169 oracle verbatim
-    "q170_scd2_cdc" ->
+    Gate("q170_scd2_cdc", scd2CdcStreamQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events
         |  WHERE user_id % 2 = 0),
@@ -2916,10 +2855,10 @@ object PipelineQueries {
         | r.version,
         | (r.valid_to IS NULL AND d.user_id IS NULL) AS is_current
         |FROM runs r LEFT JOIN dels d USING (user_id)
-        |ORDER BY r.user_id, r.version""".stripMargin,
+        |ORDER BY r.user_id, r.version""".stripMargin),
     // the q143 history with tombstone-close restated: every 7th user's
     // open interval ends at max(ts) + 1 hour, no successor version
-    "q169_scd2_deletes" ->
+    Gate("q169_scd2_deletes", scd2DeletesQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |o AS (SELECT user_id, ts, event_id, event_type,
@@ -2940,10 +2879,10 @@ object PipelineQueries {
         | r.version,
         | (r.valid_to IS NULL AND d.user_id IS NULL) AS is_current
         |FROM runs r LEFT JOIN dels d USING (user_id)
-        |ORDER BY r.user_id, r.version""".stripMargin,
+        |ORDER BY r.user_id, r.version""".stripMargin),
     // mid-chain + post-drain compaction must preserve the standing
     // history exactly — the q157 oracle verbatim
-    "q165_scd2_compact" ->
+    Gate("q165_scd2_compact", scd2StreamCompactQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events
         |  WHERE user_id % 2 = 0),
@@ -2959,10 +2898,10 @@ object PipelineQueries {
         | FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, event_type, valid_from, valid_to, version,
         | valid_to IS NULL AS is_current
-        |FROM runs ORDER BY user_id, version""".stripMargin,
+        |FROM runs ORDER BY user_id, version""".stripMargin),
     // per-wave streaming enrichment must union to the FULL-history batch
     // join — the q156 restatement verbatim
-    "q164_enrich_stream" ->
+    Gate("q164_enrich_stream", scd2EnrichStreamQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events
         |  WHERE user_id % 2 = 0),
@@ -2981,11 +2920,11 @@ object PipelineQueries {
         |FROM e f JOIN runs r ON f.user_id = r.user_id
         | AND f.ts >= r.valid_from
         | AND (r.valid_to IS NULL OR f.ts < r.valid_to)
-        |ORDER BY f.event_id""".stripMargin,
+        |ORDER BY f.event_id""".stripMargin),
     // the q143 history CTEs + the half-open point-in-time predicate (the
     // open interval unbounded above); each event matches exactly one
     // version of its user
-    "q156_scd2_lookup" ->
+    Gate("q156_scd2_lookup", scd2LookupQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |o AS (SELECT user_id, ts, event_id, event_type,
@@ -3003,8 +2942,8 @@ object PipelineQueries {
         |FROM e f JOIN runs r ON f.user_id = r.user_id
         | AND f.ts >= r.valid_from
         | AND (r.valid_to IS NULL OR f.ts < r.valid_to)
-        |ORDER BY f.event_id""".stripMargin,
-    "q143_scd2_history" ->
+        |ORDER BY f.event_id""".stripMargin),
+    Gate("q143_scd2_history", scd2Q _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |o AS (SELECT user_id, ts, event_id, event_type,
@@ -3019,10 +2958,10 @@ object PipelineQueries {
         | FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id))
         |SELECT user_id, event_type, valid_from, valid_to, version,
         | valid_to IS NULL AS is_current
-        |FROM runs ORDER BY user_id, version""".stripMargin,
+        |FROM runs ORDER BY user_id, version""".stripMargin),
     // the q143 build plus the retention predicate: open intervals and
     // closed versions still live at the horizon survive
-    "q176_scd2_retention" ->
+    Gate("q176_scd2_retention", scd2RetainQ _,
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts, event_type FROM events),
         |o AS (SELECT user_id, ts, event_id, event_type,
@@ -3039,11 +2978,11 @@ object PipelineQueries {
         | valid_to IS NULL AS is_current
         |FROM runs
         |WHERE valid_to IS NULL OR valid_to >= TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY user_id, version""".stripMargin,
+        |ORDER BY user_id, version""".stripMargin),
     // each expectation row restated: rates are one integer-count
     // division; the check names come from the operator's own name
     // formatting (kept in sync by the gate itself)
-    "q144_expectations" ->
+    Gate("q144_expectations", expectationsQ _,
       """WITH m AS (SELECT
         |  sum(CASE WHEN user_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*)::DOUBLE AS notnull_r,
@@ -3066,36 +3005,36 @@ object PipelineQueries {
         |  n >= 1.0 AND n <= 9.223372036854776e18 FROM m
         | UNION ALL SELECT 'unique(event_id)', uniq_r, 1.0,
         |  uniq_r >= 1.0 FROM u)
-        |ORDER BY "check"""".stripMargin,
+        |ORDER BY "check"""".stripMargin),
     // compaction rewrites the object layout, never the data
-    "q145_lake_compact" ->
+    Gate("q145_lake_compact", lakeCompactQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the to_json -> text -> schema'd json read chain is value-faithful
-    "q148_jsonl_roundtrip" ->
+    Gate("q148_jsonl_roundtrip", jsonlRoundTripQ _,
       """SELECT doc_id, lang, n_chars FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the partitioned-ORC write/read chain is value-faithful; the
     // filter restates the partition-prune + pushdown predicates
-    "q173_orc_roundtrip" ->
+    Gate("q173_orc_roundtrip", orcRoundTripQ _,
       """SELECT doc_id, lang, n_chars FROM documents
         |WHERE lang >= 'e' AND n_chars >= 100
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // newest row per key, ties broken by event_id — the max_by struct
     // order restated as a descending row_number
-    "q149_latest_by_key" ->
+    Gate("q149_latest_by_key", latestByKeyQ _,
       """WITH r AS (SELECT user_id, date_trunc('second', ts) AS ts,
         |  event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY date_trunc('second', ts) DESC, event_id DESC) AS rk
         | FROM events)
         |SELECT user_id, ts, event_id, event_type FROM r
-        |WHERE rk = 1 ORDER BY user_id""".stripMargin,
+        |WHERE rk = 1 ORDER BY user_id""".stripMargin),
     // batch restatement of the sequential wave filter: wave 1 is fully
     // accepted (empty index); a wave-2 doc is dropped iff it is
     // >= 0.95-Jaccard similar (7-char shingles, q27's exhaustive
     // formulation) to SOME wave-1 doc
-    "q128_stream_fuzzy" ->
+    Gate("q128_stream_fuzzy", streamFuzzyQ _,
       (s"WITH ${TrainingData.sparseTypoCte}\n" +
       """SELECT doc_id FROM n WHERE doc_id % 2 = 0
         |UNION ALL
@@ -3103,8 +3042,8 @@ object PipelineQueries {
         |WHERE c.doc_id % 2 = 1 AND NOT EXISTS (
         | SELECT 1 FROM n a
         | WHERE a.doc_id % 2 = 0 AND levenshtein(a.name, c.name) <= 1)
-        |ORDER BY doc_id""".stripMargin),
-    "q106_stream_neardup" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Gate("q106_stream_neardup", streamNearDupQ _,
       """WITH w1 AS (SELECT doc_id, lower(text) AS t FROM documents
         |  WHERE doc_id % 2 = 0),
         |w2 AS (SELECT doc_id + 100000 AS doc_id,
@@ -3128,41 +3067,41 @@ object PipelineQueries {
         |UNION ALL
         |SELECT doc_id FROM w2
         |WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-        |ORDER BY doc_id""".stripMargin,
-    "q36_ingest_pipeline" ->
+        |ORDER BY doc_id""".stripMargin),
+    Gate("q36_ingest_pipeline", ingestPipelineQ _,
       """SELECT o_orderkey,
         | CASE WHEN o_orderkey % 2 <> 0 THEN o_orderstatus END AS o_orderstatus,
         | CAST(o_totalprice AS VARCHAR) AS o_totalprice,
         | CAST(CASE WHEN o_orderkey % 2 <> 0 THEN 1 ELSE 2 END AS BIGINT) AS schema_version
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q54_nested_ingest" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Gate("q54_nested_ingest", nestedIngestQ _,
       """SELECT
         | CAST(o_custkey AS VARCHAR) AS meta_cust,
         | CASE WHEN o_orderkey % 2 <> 0 THEN o_orderstatus END AS meta_status,
         | o_orderkey,
         | CAST(CASE WHEN o_orderkey % 2 <> 0 THEN 1 ELSE 2 END AS BIGINT) AS schema_version
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
     // streaming dedup: every staged duplicate (within-batch AND
     // cross-batch via restored state) collapses, so the sink is exactly
     // the distinct corpus
-    "q104_stream_dedup" ->
-      """SELECT doc_id, source FROM documents ORDER BY doc_id""",
+    Gate("q104_stream_dedup", streamDedupQ _,
+      """SELECT doc_id, source FROM documents ORDER BY doc_id"""),
     // the incremental-wave assignment: evens land in micro-batch 0,
     // odds survive the history anti-join into micro-batch 1; replay adds
     // nothing — any duplication or loss breaks the hash
-    "q98_stream_ingest" ->
+    Gate("q98_stream_ingest", streamIngestQ _,
       """SELECT doc_id, source, n_chars,
         | CAST(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END AS BIGINT)
         |   AS batch_id
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // version 1 = the EVEN keyset even though the odd keyset sorts first:
     // only the persisted registry produces this assignment
-    "q44_registry_roundtrip" ->
+    Gate("q44_registry_roundtrip", registryRoundTripQ _,
       """SELECT
         | CASE WHEN o_orderkey % 2 <> 0 THEN CAST(o_custkey AS VARCHAR) END AS o_custkey,
         | o_orderkey,
         | CASE WHEN o_orderkey % 2 = 0 THEN CAST(o_totalprice AS VARCHAR) END AS o_totalprice,
         | CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS schema_version
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
   )
 }

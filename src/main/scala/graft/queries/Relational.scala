@@ -210,26 +210,8 @@ object Relational {
       .orderBy(col("event_type"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> pricingSummary _,
-    "q02_filter_topk"     -> filterTopK _,
-    "q03_join_topk"       -> joinTopK _,
-    "q04_nation_revenue"  -> nationRevenue _,
-    "q05_anti_join"       -> antiJoin _,
-    "q06_semi_join"       -> semiJoin _,
-    "q07_window_topn"     -> windowTopN _,
-    "q08_distinct_agg"    -> distinctAgg _,
-    "q09_rollup"          -> rollupAgg _,
-    "q10_intersect"       -> intersectKeys _,
-    "q11_except"          -> exceptKeys _,
-    "q39_cube"            -> cubeAgg _,
-    "q40_exists_subquery" -> existsSubquery _,
-    "q41_json_extract"    -> jsonExtract _,
-    "q59_bloom_join"      -> bloomJoin _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" ->
+  val gates: Seq[Gate] = Seq(
+    Gate("q01_pricing_summary", pricingSummary _,
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -237,81 +219,81 @@ object Relational {
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE) AS sum_charge,
         | COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_topk" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Gate("q02_filter_topk", filterTopK _,
       """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_extendedprice
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1999-01-01 00:00:00' AND l_discount > 0.06
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin,
-    "q03_join_topk" ->
+        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin),
+    Gate("q03_join_topk", joinTopK _,
       """SELECT o_orderkey,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         | o_orderdate
         |FROM customer, orders, lineitem
         |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
         |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00' AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY o_orderkey, o_orderdate ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q04_nation_revenue" ->
+        |GROUP BY o_orderkey, o_orderdate ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+    Gate("q04_nation_revenue", nationRevenue _,
       """SELECT n_name,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         | COUNT(*) AS n_items
         |FROM region, nation, customer, orders, lineitem
         |WHERE r_name = 'ASIA' AND n_regionkey = r_regionkey AND c_nationkey = n_nationkey
         |  AND o_custkey = c_custkey AND l_orderkey = o_orderkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q05_anti_join" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Gate("q05_anti_join", antiJoin _,
       """SELECT c_custkey, c_name FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q06_semi_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Gate("q06_semi_join", semiJoin _,
       """SELECT c_custkey, c_acctbal FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
-        |ORDER BY c_custkey""".stripMargin,
-    "q07_window_topn" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Gate("q07_window_topn", windowTopN _,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         | SELECT o_custkey, o_orderkey, o_totalprice,
         |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        | FROM orders) t WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "q08_distinct_agg" ->
+        | FROM orders) t WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+    Gate("q08_distinct_agg", distinctAgg _,
       """SELECT l_suppkey, COUNT(DISTINCT l_partkey) AS distinct_parts, COUNT(*) AS n
-        |FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-    "q09_rollup" ->
+        |FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin),
+    Gate("q09_rollup", rollupAgg _,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST""".stripMargin,
-    "q10_intersect" ->
+        |ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST""".stripMargin),
+    Gate("q10_intersect", intersectKeys _,
       """SELECT CAST(c_nationkey AS BIGINT) AS k FROM customer
-        |INTERSECT SELECT CAST(s_nationkey AS BIGINT) AS k FROM supplier ORDER BY k""".stripMargin,
-    "q11_except" ->
+        |INTERSECT SELECT CAST(s_nationkey AS BIGINT) AS k FROM supplier ORDER BY k""".stripMargin),
+    Gate("q11_except", exceptKeys _,
       """SELECT c_custkey AS k FROM customer
         |EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 450000.0
-        |ORDER BY k""".stripMargin,
-    "q39_cube" ->
+        |ORDER BY k""".stripMargin),
+    Gate("q39_cube", cubeAgg _,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST""".stripMargin,
-    "q40_exists_subquery" ->
+        |ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST""".stripMargin),
+    Gate("q40_exists_subquery", existsSubquery _,
       """SELECT o_orderkey, o_orderdate FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l
         |  WHERE l.l_orderkey = o.o_orderkey
         |    AND l.l_shipdate > o.o_orderdate + INTERVAL 100 DAY)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q41_json_extract" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Gate("q41_json_extract", jsonExtract _,
       """SELECT event_type, COUNT(*) AS n,
         | CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         | MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         | MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // the bloom prefilter is pure pruning — the oracle is the PLAIN join
-    "q59_bloom_join" ->
+    Gate("q59_bloom_join", bloomJoin _,
       """SELECT o_orderkey,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         | COUNT(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 300000.0
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin),
   )
 }

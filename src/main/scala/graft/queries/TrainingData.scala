@@ -3357,168 +3357,6 @@ object TrainingData {
         "word", "freq", ugVocab, shareDen = 50, maxWordChars = 12)
       .orderBy(col("token"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q204_vocab_utility"    -> vocabUtilityQ _,
-    "q203_unigram"          -> unigramQ _,
-    "q200_wordpiece"        -> wordpieceQ _,
-    "q197_bpe_tokenize"     -> bpeTokenizeQ _,
-    "q196_bpe_train"        -> bpeTrainQ _,
-    "q191_rank_eval"        -> rankEvalQ _,
-    "q228_max_coverage"     -> maxCoverageQ _,
-    "q233_kneser_ney"       -> kneserNeyQ _,
-    "q234_centroid_align"   -> centroidAlignQ _,
-    "q255_cluster_histogram" -> clusterHistogramQ _,
-    "q189_temperature_alloc" -> temperatureAllocQ _,
-    "q185_recall_by_label"  -> recallByLabelQ _,
-    "q182_mass_budget_lang" -> massBudgetByLangQ _,
-    "q181_mass_budget"      -> massBudgetQ _,
-    "q283_image_neardup"    -> imageNearDupQ _,
-    "q286_stream_image_dedup" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamState.withStatePartitions(s, 8) {
-        streamImageDedupQ(s, dir)
-      }),
-    "q287_pixel_dedup"      -> pixelDedupQ _,
-    "q288_audio_neardup"    -> audioNearDupQ _,
-    "q289_tar_image_dedup"  -> tarImageDedupQ _,
-    "q290_video_neardup"    -> videoNearDupQ _,
-    "q291_golden_images"    -> goldenImagesQ _,
-    "q292_video_delta"      -> videoDeltaCompositeQ _,
-    "q293_audio_crossfmt"   -> audioCrossFormatQ _,
-    "q295_stream_contam"    -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamState.withStatePartitions(s, 8) {
-        streamContaminationQ(s, dir)
-      }),
-    "q282_ivfpq_maintain"   -> ivfPqMaintainQ _,
-    "q294_ivfpq_rebalance"  -> ivfPqRebalanceQ _,
-    "q296_pair_curation"    -> pairCurationQ _,
-    "q297_warc_ingest"      -> warcIngestQ _,
-    "q298_crawl_curation"   -> crawlCurationQ _,
-    "q299_audio_crosscodec" -> audioCrossCodecQ _,
-    "q300_mp4_remux"        -> mp4RemuxDedupQ _,
-    "q301_stream_audio_dedup" -> streamAudioDedupQ _,
-    "q303_mp3_retag"        -> mp3RetagDedupQ _,
-    "q304_webm_remux"       -> webmRemuxDedupQ _,
-    "q179_index_delete"     -> indexDeleteQ _,
-    // 8 state partitions: the streaming-gate layout knob (see
-    // PipelineQueries.withSP — state-store IO is the family cost floor)
-    "q177_tar_stream"       -> ((s: SparkSession, dir: String) =>
-      graft.streaming.StreamState.withStatePartitions(s, 8) {
-        tarStreamExportQ(s, dir)
-      }),
-    "q175_binary_ingest"    -> binaryIngestQ _,
-    "q174_pca_moments"      -> pcaMomentsQ _,
-    "q172_tar_roundtrip"    -> tarRoundTripQ _,
-    "q171_tar_shards"       -> tarShardsQ _,
-    "q168_doc_chunks"       -> chunkDocsQ _,
-    "q167_recall_eval"      -> recallEvalQ _,
-    "q166_ivfpq_batch"      -> ivfPqBatchQ _,
-    "q147_ivfpq_topk"       -> ivfPqTopKQ _,
-    "q146_score_ntile"      -> scoreNtileQ _,
-    "q142_nfc_dedup"        -> nfcDedupQ _,
-    "q141_ivfpq_codes"      -> ivfPqCodesQ _,
-    "q138_pq_adc"           -> pqAdcQ _,
-    "q137_pq_codes"         -> pqCodesQ _,
-    "q136_hll_registers"    -> hllRegistersQ _,
-    "q135_perplexity_prune" -> perplexityPruneQ _,
-    "q133_byte_jaro_winkler" -> byteJaroWinklerQ _,
-    "q132_cross_token_fuzzy" -> crossTokenFuzzyQ _,
-    "q131_token_fuzzy"      -> tokenFuzzyQ _,
-    "q130_golden_records"   -> goldenRecordsQ _,
-    "q129_linkage_card"     -> linkageCardQ _,
-    "q127_fuzzy_incremental" -> fuzzyIncrementalQ _,
-    "q126_linkage_union"    -> linkageUnionQ _,
-    "q125_cluster_safe_split" -> clusterSafeSplitQ _,
-    "q124_fuzzy_d2"         -> fuzzyPairsD2Q _,
-    "q123_sorted_neighborhood" -> sortedNeighborhoodQ _,
-    "q122_fuzzy_pairs"      -> fuzzyPairsQ _,
-    "q118_sqrt_allocation"  -> sqrtAllocationQ _,
-    "q117_feature_hash"     -> featureHashRetrievalQ _,
-    "q116_ring_negatives"   -> ringNegativesQ _,
-    "q115_sketch_merge"     -> sketchMergeQ _,
-    "q113_bpe_merge_mine"   -> bpeMergeCandidatesQ _,
-    "q111_hybrid_retrieval" -> hybridRetrievalQ _,
-    "q110_quantile_sketch"  -> quantileSketchQ _,
-    "q109_url_dedup"        -> urlDedupQ _,
-    "q108_boilerplate"      -> boilerplateQ _,
-    "q107_weighted_sample"  -> weightedSampleQ _,
-    "q263_weighted_reservoir" -> weightedReservoirQ _,
-    "q267_largest_remainder" -> largestRemainderQ _,
-    "q268_rank_shift"       -> rankShiftQ _,
-    "q269_cluster_evolution" -> clusterEvolutionQ _,
-    "q271_cdc_chunks"       -> cdcChunksQ _,
-    "q274_group_reservoir"  -> weightedReservoirByGroupQ _,
-    "q280_dedup_weights"    -> dedupWeightsQ _,
-    "q103_epoch_shuffle"    -> epochShufflePackQ _,
-    "q102_grouped_pack"     -> groupedPackQ _,
-    "q101_top_terms"        -> topTermsQ _,
-    "q100_split_leakage"    -> splitLeakageQ _,
-    "q99_data_card"         -> dataCardQ _,
-    "q97_kmv_saturated"     -> kmvSaturatedQ _,
-    "q96_projected_recall"  -> projectedRecallQ _,
-    "q95_tokenizer_fertility" -> fertilityQ _,
-    "q94_cluster_composition" -> clusterCompositionQ _,
-    "q93_countmin"          -> countMinQ _,
-    "q92_sign_projection"   -> randomProjectionQ _,
-    "q91_bigram_surprisal"  -> bigramSurprisalQ _,
-    "q90_winnow"            -> winnowQ _,
-    "q154_span_removal"     -> spanRemovalQ _,
-    "q155_dedup_provenance" -> provenanceQ _,
-    "q158_hard_negatives"   -> hardNegativesQ _,
-    "q161_snapshot_patch"   -> snapshotPatchQ _,
-    "q162_canonical_select" -> canonicalSelectionQ _,
-    "q89_dataloader_prep"   -> dataloaderPrepQ _,
-    "q88_cross_corpus"      -> crossCorpusQ _,
-    "q87_robust_outliers"   -> robustOutlierQ _,
-    "q86_textrank"          -> textRankQ _,
-    "q81_kmv_distinct"      -> kmvDistinctQ _,
-    "q82_snapshot_diff"     -> snapshotDiffQ _,
-    "q83_seq_pack"          -> seqPackQ _,
-    "q84_quantize_int8"     -> quantizeQ _,
-    "q85_sparse_retrieval"  -> sparseRetrievalQ _,
-    "q78_corpus_stats"      -> corpusStatsQ _,
-    "q79_dup_rate_source"   -> dupRateBySourceQ _,
-    "q80_vocab_coverage"    -> vocabCoverageQ _,
-    "q74_span_dedup"        -> spanDedupQ _,
-    "q75_surprisal"         -> surprisalQ _,
-    "q76_semantic_dedup"    -> semanticDedupQ _,
-    "q77_hash_split"        -> hashSplitQ _,
-    "q66_decontam"          -> decontamQ _,
-    "q71_curation_full"     -> curationFullQ _,
-    "q72_chunking"          -> chunkingQ _,
-    "q73_oov_rate"          -> oovRateQ _,
-    "q67_pii_redact"        -> piiRedactQ _,
-    "q68_line_dedup"        -> lineDedupQ _,
-    "q69_quality_classifier" -> qualityClassifierQ _,
-    "q70_repetition"        -> repetitionQ _,
-    "q55_curation"          -> curationQ _,
-    "q56_dedup_clusters"    -> dedupClustersQ _,
-    "q57_bm25_terms"        -> bm25TermsQ _,
-    "q58_heavy_hitters"     -> heavyHittersQ _,
-    "q22_token_count"       -> tokenCountQ _,
-    "q23_quality_score"     -> qualityQ _,
-    "q24_langid"            -> langIdQ _,
-    "q25_fingerprint"       -> fingerprintQ _,
-    "q26_exact_dedup"       -> exactDedupQ _,
-    "q27_minhash_neardup"   -> minhashQ _,
-    "q28_simhash"           -> simhashQ _,
-    "q29_ngram_jaccard"     -> ngramJaccardQ _,
-    "q38_simhash_neardup"   -> simhashNearDupQ _,
-    "q42_ivf_topk"          -> ivfTopKQ _,
-    "q30_embedding_neardup" -> embeddingNearDupQ _,
-    "q31_cosine_topk"       -> cosineTopKQ _,
-    "q32_ann_topk"          -> annTopKQ _,
-    "q33_multimodal"        -> multimodalQ _,
-    "q34_frame_sample"      -> frameSampleQ _,
-    "q48_stratified_sample" -> stratifiedSampleQ _,
-    "q49_text_clean"        -> textCleanQ _,
-    "q60_group_sample"      -> groupSampleQ _,
-    "q61_zorder_key"        -> zorderKeyQ _,
-    "q62_collocations"      -> collocationsQ _,
-    "q63_incremental_dedup" -> incrementalDedupQ _,
-    "q64_shard_pack"        -> shardPackQ _,
-    "q65_mixture_sample"    -> mixtureSampleQ _,
-  )
-
   private val cosExpr =
     """list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
       | / greatest(
@@ -4106,29 +3944,30 @@ object TrainingData {
         |FROM usage u CROSS JOIN tot t
         |ORDER BY u.token""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q204_vocab_utility" -> vocabUtilityOracle(ugVocab, 12),
-    "q203_unigram" -> unigramOracle(ugVocab, 12),
-    "q196_bpe_train" -> bpeTrainOracle(),
-    "q197_bpe_tokenize" -> bpeTokenizeOracle(),
-    "q200_wordpiece" -> wordpieceOracle(wpVocab),
+  val gates: Seq[Gate] = Seq(
+    Gate("q204_vocab_utility", vocabUtilityQ _,
+      vocabUtilityOracle(ugVocab, 12)),
+    Gate("q203_unigram", unigramQ _, unigramOracle(ugVocab, 12)),
+    Gate("q196_bpe_train", bpeTrainQ _, bpeTrainOracle()),
+    Gate("q197_bpe_tokenize", bpeTokenizeQ _, bpeTokenizeOracle()),
+    Gate("q200_wordpiece", wordpieceQ _, wordpieceOracle(wpVocab)),
     // the q141 index chain + serving: probe = 4 nearest coarse cells to
     // the query (ties -> lowest cell), per-cell LUT over the RESIDUAL
     // query, per-vector distance = s-ordered list of its LUT reads
     // summed sequentially; only probed cells are scored
     // identity through synth -> files -> binaryFile -> header parse:
     // the dims written into each BMP restated from the doc fields
-    "q175_binary_ingest" ->
+    Gate("q175_binary_ingest", binaryIngestQ _,
       """SELECT doc_id, 'bmp' AS format,
         | CAST((n_chars % 640) + 1 AS INT) AS width,
         | CAST((doc_id % 480) + 1 AS INT) AS height
         |FROM documents WHERE doc_id % 10 = 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the same pairwise moment sums, same 0-based dims, same
     // floor(x·10⁶) integer quantization of identically-evaluated IEEE
     // products — BIGINT sums are order-free, so engine partitioning
     // can't move the hash
-    "q174_pca_moments" ->
+    Gate("q174_pca_moments", pcaMomentsQ _,
       """WITH idx AS (SELECT unnest(generate_series(1, 16)) AS p),
         |x AS (SELECT e.vec_id, CAST(i.p - 1 AS INT) AS i,
         |        e.embedding[i.p]::DOUBLE AS xv
@@ -4139,15 +3978,15 @@ object TrainingData {
         | CAST(sum(CAST(floor(a.xv * 1e6) AS BIGINT)) AS BIGINT) AS sx,
         | CAST(sum(CAST(floor(b.xv * 1e6) AS BIGINT)) AS BIGINT) AS sy
         |FROM x a JOIN x b ON a.vec_id = b.vec_id AND b.i >= a.i
-        |GROUP BY a.i, b.i ORDER BY i, j""".stripMargin,
+        |GROUP BY a.i, b.i ORDER BY i, j""".stripMargin),
     // the q181 rule PARTITIONed BY lang, each against its own total
     // the whole evaluation restated: sequential squared-diff list_sum
     // (l2TopKBatch's fold order), (dist, vec_id) ranking, same-label
     // relevance, cumulative-hit AP terms scaled by lcm(1..10)=2520
-    "q228_max_coverage" -> maxCoverageOracle(6),
+    Gate("q228_max_coverage", maxCoverageQ _, maxCoverageOracle(6)),
     // quantize-first exact centroid sums; cross-multiplied cosine at
     // 35/100 in HUGEINT
-    "q234_centroid_align" ->
+    Gate("q234_centroid_align", centroidAlignQ _,
       """WITH e AS (SELECT label, list_transform(embedding,
         |   x -> CAST(floor(x::DOUBLE * 1024) AS BIGINT)) AS q
         | FROM embeddings),
@@ -4167,10 +4006,10 @@ object TrainingData {
         |SELECT d.label, n.n, d.dot, d.na2, d.nb2,
         | (d.dot >= 0 AND CAST(d.dot AS HUGEINT) * d.dot * 100 * 100 >=
         |   CAST(d.na2 AS HUGEINT) * d.nb2 * 35 * 35) AS aligned
-        |FROM d JOIN n USING (label) ORDER BY d.label""".stripMargin,
+        |FROM d JOIN n USING (label) ORDER BY d.label""".stripMargin),
     // exact-rational interpolated KN at D=3/4: max(4c-3,0)*T + 3*fwd*back
     // over 4*c_a*T; continuation counts are TYPE counts
-    "q233_kneser_ney" ->
+    Gate("q233_kneser_ney", kneserNeyQ _,
       """WITH toks AS (SELECT doc_id,
         |  regexp_extract_all(lower(text), '\S+') AS t FROM documents),
         |bg AS (SELECT unnest(list_transform(range(1, len(t)),
@@ -4187,8 +4026,8 @@ object TrainingData {
         |   + 3 * n1p_fwd * n1p_back AS BIGINT) AS pkn_num,
         | CAST(4 * c_a * n_types AS BIGINT) AS pkn_den
         |FROM pc JOIN a USING (w1) JOIN b USING (w2), t
-        |ORDER BY w1, w2""".stripMargin,
-    "q191_rank_eval" ->
+        |ORDER BY w1, w2""".stripMargin),
+    Gate("q191_rank_eval", rankEvalQ _,
       """WITH q AS (SELECT vec_id AS qid, embedding, label
         | FROM embeddings WHERE vec_id % 25 = 0 AND vec_id < 2000),
         |c AS (SELECT vec_id, embedding, label FROM embeddings
@@ -4224,10 +4063,10 @@ object TrainingData {
         | CAST(coalesce(2520 // pq.first_rel_rank, 0) AS BIGINT)
         |   AS rr_scaled,
         | pq.ap_scaled
-        |FROM pq LEFT JOIN nr USING (qid) ORDER BY qid""".stripMargin,
+        |FROM pq LEFT JOIN nr USING (qid) ORDER BY qid""".stripMargin),
     // floor(sqrt(n)) weights, integer quota division, largest-remainder
     // hand-out with the lang tiebreak — exact arithmetic end to end
-    "q189_temperature_alloc" ->
+    Gate("q189_temperature_alloc", temperatureAllocQ _,
       """WITH c AS (SELECT lang, count(*) AS n_rows,
         |  CAST(floor(sqrt(count(*))) AS BIGINT) AS weight
         | FROM documents GROUP BY 1),
@@ -4241,8 +4080,8 @@ object TrainingData {
         |SELECT lang, n_rows, weight,
         | CAST(alloc_floor + CASE WHEN rk <= leftover THEN 1 ELSE 0 END
         |   AS BIGINT) AS alloc
-        |FROM r ORDER BY lang""".stripMargin,
-    "q182_mass_budget_lang" ->
+        |FROM r ORDER BY lang""".stripMargin),
+    Gate("q182_mass_budget_lang", massBudgetByLangQ _,
       """WITH w AS (SELECT doc_id, lang, n_chars,
         |  coalesce(sum(n_chars) OVER (PARTITION BY lang
         |    ORDER BY n_chars DESC, doc_id
@@ -4250,34 +4089,34 @@ object TrainingData {
         |  sum(n_chars) OVER (PARTITION BY lang) AS tot
         | FROM documents)
         |SELECT doc_id, lang, n_chars FROM w
-        |WHERE cw * 2 < tot * 1 ORDER BY doc_id""".stripMargin,
+        |WHERE cw * 2 < tot * 1 ORDER BY doc_id""".stripMargin),
     // exclusive prefix sum over (n_chars DESC, doc_id), boundary row
     // kept, exact integer comparison
-    "q181_mass_budget" ->
+    Gate("q181_mass_budget", massBudgetQ _,
       """WITH w AS (SELECT doc_id, n_chars,
         |  coalesce(sum(n_chars) OVER (ORDER BY n_chars DESC, doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cw,
         |  (SELECT sum(n_chars) FROM documents) AS tot
         | FROM documents)
         |SELECT doc_id, n_chars FROM w
-        |WHERE cw * 10 < tot * 6 ORDER BY doc_id""".stripMargin,
+        |WHERE cw * 10 < tot * 6 ORDER BY doc_id""".stripMargin),
     // streaming export identity: every payload exactly once across all
     // batch directories — the q172 oracle verbatim
-    "q177_tar_stream" ->
+    Gate("q177_tar_stream", tarStreamExportQ _,
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | md5(text) AS payload_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // identity: whatever went in must come out — size and md5 restated
     // straight off the source table
-    "q172_tar_roundtrip" ->
+    Gate("q172_tar_roundtrip", tarRoundTripQ _,
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | md5(text) AS payload_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // shard = exclusive-prefix byte sum (doc_id order) // budget — the
     // packShards assignment — rolled up per shard
-    "q171_tar_shards" ->
+    Gate("q171_tar_shards", tarShardsQ _,
       """WITH b AS (SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS w
         | FROM documents),
@@ -4288,10 +4127,10 @@ object TrainingData {
         |SELECT CAST(cw // 65536 AS BIGINT) AS shard_id,
         | CAST(count(*) AS BIGINT) AS n_samples,
         | CAST(sum(w) AS BIGINT) AS data_bytes
-        |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY shard_id""".stripMargin),
     // integer window count 1 + ceil(max(n-64,0)/48), 1-based slices of
     // the \S+ token list, md5 of the space-joined window
-    "q168_doc_chunks" ->
+    Gate("q168_doc_chunks", chunkDocsQ _,
       """WITH t AS (SELECT doc_id,
         |  regexp_extract_all(text, '\S+') AS toks FROM documents),
         |n AS (SELECT doc_id, toks, len(toks) AS n FROM t
@@ -4305,27 +4144,27 @@ object TrainingData {
         |   AS chunk_md5,
         | CAST(len(toks[chunk_id*48+1 : chunk_id*48+64]) AS BIGINT)
         |   AS n_tokens
-        |FROM k ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM k ORDER BY doc_id, chunk_id""".stripMargin),
     // both evaluation chains restated: approx = the q166 per-qid serving
     // chain; exact = per-qid squared-L2 row_number; recall = one
     // integer-count double division
-    "q167_recall_eval" -> (ivfPqEvalWith +
+    Gate("q167_recall_eval", recallEvalQ _, (ivfPqEvalWith +
       """SELECT q.qid, CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
         |  coalesce(h.n_hit, 0)::DOUBLE / CAST(10 AS DOUBLE) AS recall_at_k
         |FROM (SELECT DISTINCT qid FROM ex) q LEFT JOIN hits h USING (qid)
-        |ORDER BY qid""".stripMargin),
+        |ORDER BY qid""".stripMargin)),
     // the same evaluation chain sliced BY LABEL: integer counts only
     // (a summed-double recall would be order-sensitive)
-    "q185_recall_by_label" -> (ivfPqEvalWith +
+    Gate("q185_recall_by_label", recallByLabelQ _, (ivfPqEvalWith +
       """SELECT e2.label, CAST(count(*) AS BIGINT) AS n_queries,
         |  CAST(sum(coalesce(h.n_hit, 0)) AS BIGINT) AS total_hits
         |FROM (SELECT DISTINCT qid FROM ex) q
         |LEFT JOIN hits h USING (qid)
         |JOIN embeddings e2 ON e2.vec_id = q.qid
-        |GROUP BY e2.label ORDER BY label""".stripMargin),
+        |GROUP BY e2.label ORDER BY label""".stripMargin)),
     // the q147 chain generalized per-qid: probe/LUT/top-k each keyed by
     // the query id; one row_number per query replaces the global LIMIT
-    "q166_ivfpq_batch" ->
+    Gate("q166_ivfpq_batch", ivfPqBatchQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4390,12 +4229,12 @@ object TrainingData {
         |   row_number() OVER (PARTITION BY qid
         |     ORDER BY adc_dist, vec_id) AS rk
         |  FROM pervec) WHERE rk <= 10
-        |ORDER BY qid, adc_dist, vec_id""".stripMargin,
+        |ORDER BY qid, adc_dist, vec_id""".stripMargin),
     // the q147 chain (the maintained index ≡ the full encode — the
     // gate asserts that equality in-process) + per-cell occupancy from
     // the same assignment, skew ppm by truncating division, rebalance
     // by HUGEINT cross-multiplication at the 21/20 fence
-    "q282_ivfpq_maintain" ->
+    Gate("q282_ivfpq_maintain", ivfPqMaintainQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4466,14 +4305,14 @@ object TrainingData {
         | r.n_vecs, r.n_cells, r.total_vecs, r.skew_ppm, r.rebalance
         |FROM top t JOIN assign a USING (vec_id)
         | JOIN rep r ON r.cell0 = a.cell0
-        |ORDER BY t.adc_dist, t.vec_id""".stripMargin,
+        |ORDER BY t.adc_dist, t.vec_id""".stripMargin),
     // the whole post-split chain restated from scratch: synthetic
     // clustered vectors, argmin coarse assignment, the 21/20 fence
     // picking the hot cell, iters=0 sub-centroids (the hot cell's two
     // lowest-id rows), the spliced 5-centroid table, residual PQ codes,
     // probe/ADC serve for the lobe-1 query, and the quiet post-split
     // fence — the engine's spliced index must equal this full rebuild
-    "q294_ivfpq_rebalance" ->
+    Gate("q294_ivfpq_rebalance", ivfPqRebalanceQ _,
       """WITH ids AS (SELECT vec_id FROM embeddings
         | UNION ALL SELECT vec_id + 10000000 FROM embeddings
         | WHERE vec_id % 4 = 3),
@@ -4567,8 +4406,8 @@ object TrainingData {
         | r.n_vecs, r.n_cells, r.total_vecs, r.skew_ppm, r.rebalance
         |FROM top t JOIN assign1 a USING (vec_id)
         | JOIN rep r ON r.cellg = a.cellg
-        |ORDER BY t.adc_dist, t.vec_id""".stripMargin,
-    "q147_ivfpq_topk" ->
+        |ORDER BY t.adc_dist, t.vec_id""".stripMargin),
+    Gate("q147_ivfpq_topk", ivfPqTopKQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4624,11 +4463,11 @@ object TrainingData {
         | WHERE b.cell0 IN (SELECT cell0 FROM probe)
         | GROUP BY b.vec_id)
         |SELECT vec_id, adc_dist FROM pervec
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
+        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin),
     // the q147 chain with the tombstone membership filter: codebooks
     // and cells trained on the FULL corpus (deletion touches code rows
     // only), candidates restricted to survivors
-    "q179_index_delete" ->
+    Gate("q179_index_delete", indexDeleteQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4685,19 +4524,19 @@ object TrainingData {
         |   AND b.vec_id % 7 != 0
         | GROUP BY b.vec_id)
         |SELECT vec_id, adc_dist FROM pervec
-        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
+        |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin),
     // even-spread quantile bins: bin = (0-based rank over
     // (n_chars, doc_id)) * k integer-divided by n
-    "q146_score_ntile" ->
+    Gate("q146_score_ntile", scoreNtileQ _,
       """WITH r AS (SELECT doc_id, n_chars,
         |  row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS rk,
         |  count(*) OVER () AS n FROM documents)
         |SELECT doc_id, n_chars, CAST((rk * 4) // n AS BIGINT) AS bin
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin),
     // composed (U+00E9) and decomposed (e + U+0301) suffixes normalize
     // to the same NFC string, so md5-after-normalize pairs every clone
     // with its original and min-id keeps exactly the originals
-    "q142_nfc_dedup" ->
+    Gate("q142_nfc_dedup", nfcDedupQ _,
       """WITH c AS (
         | SELECT doc_id, text || ' caf' || chr(233) AS text FROM documents
         | UNION ALL
@@ -4706,12 +4545,12 @@ object TrainingData {
         |n AS (SELECT doc_id, md5(nfc_normalize(text)) AS fp FROM c),
         |k AS (SELECT fp, min(doc_id) AS keeper FROM n GROUP BY fp)
         |SELECT n.doc_id, n.doc_id = k.keeper AS keep
-        |FROM n JOIN k USING (fp) ORDER BY n.doc_id""".stripMargin,
+        |FROM n JOIN k USING (fp) ORDER BY n.doc_id""".stripMargin),
     // IVF-PQ: coarse = 8 lowest-id sample rows (cell = rank, 1-based in
     // the output to match ivfCell); residual r = v − coarse[cell];
     // residual codebook = residuals of the 16 lowest-id sample rows;
     // code = sequential-sum argmin per subspace, ties → lowest cid
-    "q141_ivfpq_codes" ->
+    Gate("q141_ivfpq_codes", ivfPqCodesQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4748,13 +4587,13 @@ object TrainingData {
         |  FROM d) WHERE rk = 1)
         |SELECT vec_id, CAST(cell0 + 1 AS BIGINT) AS cell,
         | CAST(s AS BIGINT) AS subspace, CAST(cid AS BIGINT) AS code
-        |FROM best ORDER BY vec_id, subspace""".stripMargin,
+        |FROM best ORDER BY vec_id, subspace""".stripMargin),
     // the q137 code chain + the ADC read: LUT(s, j) = sequential
     // squared-distance of the query's subvector s to centroid j; the
     // per-vector distance is the s-ORDERED list of its 8 LUT reads
     // summed sequentially (list(dd ORDER BY s) -> list_sum == the
     // engine's ascending-subspace reduce)
-    "q138_pq_adc" ->
+    Gate("q138_pq_adc", pqAdcQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4786,12 +4625,12 @@ object TrainingData {
         | FROM best b JOIN lut l ON b.s = l.s AND b.cid = l.cid
         | GROUP BY b.vec_id)
         |SELECT vec_id, adc_dist FROM pervec
-        |ORDER BY adc_dist, vec_id LIMIT 20""".stripMargin,
+        |ORDER BY adc_dist, vec_id LIMIT 20""".stripMargin),
     // iters=0 PQ: codebook s = subvectors [8s+1, 8s+8] of the 16
     // lowest-id rows of the md5-ordered 4096-sample (cid = id rank − 1);
     // code = argmin of the sequential squared-distance sum, ties to the
     // lowest cid — exactly pqEncode's array_position(min) convention
-    "q137_pq_codes" ->
+    Gate("q137_pq_codes", pqCodesQ _,
       """WITH sm AS (SELECT vec_id, embedding,
         |  row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
         |    vec_id) AS rn
@@ -4812,13 +4651,13 @@ object TrainingData {
         | FROM d)
         |SELECT vec_id, CAST(s AS BIGINT) AS subspace,
         | CAST(cid AS BIGINT) AS code
-        |FROM best WHERE rk = 1 ORDER BY vec_id, subspace""".stripMargin,
+        |FROM best WHERE rk = 1 ORDER BY vec_id, subspace""".stripMargin),
     // every HLL register restated from the md5 hash60: bucket = top 6
     // bits (integer division by 2^54), rho = 55 - bitlength of the
     // 54-bit remainder (55 for an all-zero tail), register = max rho,
     // unseen buckets 0 via the source x bucket grid; '__all__' is the
     // max over sources (element-wise register union = max over all rows)
-    "q136_hll_registers" ->
+    Gate("q136_hll_registers", hllRegistersQ _,
       """WITH toks AS (
         | SELECT source,
         |  unnest(regexp_extract_all(lower(text), '\S+')) AS term
@@ -4843,12 +4682,12 @@ object TrainingData {
         | coalesce(r.register, 0) AS register
         |FROM grid g LEFT JOIN regs r
         |  ON g.source = r.source AND g.bucket = r.bucket
-        |ORDER BY g.source, g.bucket""".stripMargin,
+        |ORDER BY g.source, g.bucket""".stripMargin),
     // per-language perplexity pruning: the q75 bits score, fixed-point
     // scaled by 2^20 with INTEGER division (exact in both engines), cut
     // at floor(0.7 · n_lang) via a row_number window — the engine's
     // groupedPrefixSum rank over (score_fx, doc_id) states identically
-    "q135_perplexity_prune" ->
+    Gate("q135_perplexity_prune", perplexityPruneQ _,
       (s"WITH $surprisalCte,\n" +
       """s AS (SELECT r.doc_id, d.lang,
         |  (sum_bits * 1048576) // greatest(n_tokens, 1) AS score_fx
@@ -4859,12 +4698,12 @@ object TrainingData {
         |  count(*) OVER (PARTITION BY lang) AS n FROM s)
         |SELECT doc_id, lang, CAST(score_fx AS BIGINT) AS score_fx
         |FROM k WHERE rk <= CAST(floor(0.7 * n) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
     // the byte-mode kernel is bit-exact vs DuckDB's byte-comparing
     // jaro_winkler_similarity, so raw doubles hash-compare even on the
     // multibyte corpus (the construction restates with char-based
     // substring/length, identical in both engines)
-    "q133_byte_jaro_winkler" ->
+    Gate("q133_byte_jaro_winkler", byteJaroWinklerQ _,
       """WITH n AS (
         | SELECT doc_id,
         |  CASE WHEN doc_id % 5 = 1 THEN substring(b, 1, length(b) - 1)
@@ -4877,9 +4716,9 @@ object TrainingData {
         |SELECT a.doc_id AS doc_id,
         | jaro_winkler_similarity(a.name, bb.name) AS jw_byte
         |FROM n a JOIN n bb ON bb.doc_id = a.doc_id + 1
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the bipartite form of q131: cross-parity pairs only
-    "q132_cross_token_fuzzy" ->
+    Gate("q132_cross_token_fuzzy", crossTokenFuzzyQ _,
       (s"WITH $titleTokensCte,\n" +
       s"""p AS (
          | SELECT a.doc_id AS corpus_id, c.doc_id AS batch_id,
@@ -4891,11 +4730,11 @@ object TrainingData {
          | CAST(sum(corpus_id) AS BIGINT) AS sum_corpus,
          | CAST(sum(batch_id) AS BIGINT) AS sum_batch,
          | CAST(sum(corpus_id * batch_id) AS BIGINT) AS sum_cross
-         |FROM p GROUP BY dist ORDER BY dist""".stripMargin),
+         |FROM p GROUP BY dist ORDER BY dist""".stripMargin)),
     // exhaustive all-pairs token-lev<=1 via the prefix+suffix cover
     // identity (list_position over per-position equality), the same
     // predicate the engine verifies candidates with
-    "q131_token_fuzzy" ->
+    Gate("q131_token_fuzzy", tokenFuzzyQ _,
       (s"WITH $titleTokensCte,\n" +
       s"""p AS (
          | SELECT a.doc_id AS id_a, c.doc_id AS id_b,
@@ -4907,9 +4746,9 @@ object TrainingData {
          | CAST(sum(id_a) AS BIGINT) AS sum_a,
          | CAST(sum(id_b) AS BIGINT) AS sum_b,
          | CAST(sum(id_a * id_b) AS BIGINT) AS sum_ab
-         |FROM p GROUP BY dist ORDER BY dist""".stripMargin),
+         |FROM p GROUP BY dist ORDER BY dist""".stripMargin)),
     // the q125 closure, aggregated per cluster
-    "q130_golden_records" ->
+    Gate("q130_golden_records", goldenRecordsQ _,
       (s"WITH RECURSIVE $sparseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS id_a, c.doc_id AS id_b
@@ -4928,11 +4767,11 @@ object TrainingData {
         | count(*) AS n_members,
         | CAST(sum(doc_id) AS BIGINT) AS sum_ids
         |FROM cl JOIN n USING (doc_id)
-        |GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
+        |GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)),
     // both passes + the set algebra restated; the dn branch is the
     // exhaustive lev<=1 join (complete-blocking equivalence) with the
     // same jw threshold the engine applies
-    "q129_linkage_card" ->
+    Gate("q129_linkage_card", linkageCardQ _,
       (s"WITH $sparseTypoCte,\n" +
       """r AS (
         | SELECT doc_id, name,
@@ -4966,10 +4805,10 @@ object TrainingData {
         | SELECT 'union', count(*),
         |  CAST(coalesce(sum(id_a), 0) AS BIGINT),
         |  CAST(coalesce(sum(id_b), 0) AS BIGINT) FROM u)
-        |ORDER BY pass""".stripMargin),
+        |ORDER BY pass""".stripMargin)),
     // exhaustive bipartite lev<=1 join: even ids (corpus) x odd ids
     // (batch) only - a within-side pair on either side breaks the hash
-    "q127_fuzzy_incremental" ->
+    Gate("q127_fuzzy_incremental", fuzzyIncrementalQ _,
       (s"WITH $sparseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS corpus_id, c.doc_id AS batch_id,
@@ -4980,12 +4819,12 @@ object TrainingData {
         | CAST(sum(corpus_id) AS BIGINT) AS sum_corpus,
         | CAST(sum(batch_id) AS BIGINT) AS sum_batch,
         | CAST(sum(corpus_id * batch_id) AS BIGINT) AS sum_cross
-        |FROM p GROUP BY dist ORDER BY dist""".stripMargin),
+        |FROM p GROUP BY dist ORDER BY dist""".stripMargin)),
     // both candidate branches restated: the rank-band self-join (sorted
     // neighborhood) and the exhaustive lev<=1 join (= the engine's
     // deletion-neighborhood blocking, complete for d<=1); UNION dedups
     // like the engine's distinct(), then each unordered pair scores once
-    "q126_linkage_union" ->
+    Gate("q126_linkage_union", linkageUnionQ _,
       (s"WITH $sparseTypoCte,\n" +
       """r AS (
         | SELECT doc_id, name,
@@ -5010,12 +4849,12 @@ object TrainingData {
         |SELECT jw_score, count(*) AS n_pairs,
         | CAST(sum(id_a) AS BIGINT) AS sum_a,
         | CAST(sum(id_b) AS BIGINT) AS sum_b
-        |FROM p GROUP BY jw_score ORDER BY jw_score""".stripMargin),
+        |FROM p GROUP BY jw_score ORDER BY jw_score""".stripMargin)),
     // components via recursive CTE over the exhaustive lev<=1 pair set,
     // then the md5 cut restated on the CLUSTER id (q77's seam)
     // the q125 recursive closure + per-cluster longest-doc argmax
     // (n_chars DESC, then doc_id)
-    "q162_canonical_select" ->
+    Gate("q162_canonical_select", canonicalSelectionQ _,
       (s"WITH RECURSIVE $sparseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS id_a, c.doc_id AS id_b
@@ -5036,8 +4875,8 @@ object TrainingData {
         |    ORDER BY d.n_chars DESC, cl.doc_id) AS rk
         | FROM cl JOIN documents d ON cl.doc_id = d.doc_id)
         |SELECT doc_id, cluster_id, n_chars, rk = 1 AS is_canonical
-        |FROM m ORDER BY doc_id""".stripMargin),
-    "q125_cluster_safe_split" ->
+        |FROM m ORDER BY doc_id""".stripMargin)),
+    Gate("q125_cluster_safe_split", clusterSafeSplitQ _,
       (s"WITH RECURSIVE $sparseTypoCte,\n" +
       s"""p AS (
          | SELECT a.doc_id AS id_a, c.doc_id AS id_b
@@ -5058,13 +4897,13 @@ object TrainingData {
          |      WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8)
          |        < '${graft.functions.Sampling.thresholdHex(0.8 + 0.1)}' THEN 'val'
          |      ELSE 'test' END AS split
-         |FROM cl ORDER BY doc_id""".stripMargin),
+         |FROM cl ORDER BY doc_id""".stripMargin)),
     // exhaustive all-pairs levenshtein <= 2 over the sparse typo corpus
     // the provenance report from the exhaustive pair set: exact keeper =
     // min identical-name smaller id; fuzzy keeper = closest (then
     // smallest) smaller-id neighbor — with maxDist 1 the closest
     // non-exact neighbor is always at distance 1
-    "q155_dedup_provenance" ->
+    Gate("q155_dedup_provenance", provenanceQ _,
       (s"WITH $sparseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS ka, c.doc_id AS kb,
@@ -5078,8 +4917,8 @@ object TrainingData {
         |      THEN 'exact' ELSE 'fuzzy' END AS reason,
         | CASE WHEN min(CASE WHEN d = 0 THEN ka END) IS NOT NULL
         |      THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END AS dist
-        |FROM p GROUP BY kb ORDER BY doc_id""".stripMargin),
-    "q124_fuzzy_d2" ->
+        |FROM p GROUP BY kb ORDER BY doc_id""".stripMargin)),
+    Gate("q124_fuzzy_d2", fuzzyPairsD2Q _,
       (s"WITH $sparseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS id_a, c.doc_id AS id_b,
@@ -5090,13 +4929,13 @@ object TrainingData {
         | CAST(sum(id_a) AS BIGINT) AS sum_a,
         | CAST(sum(id_b) AS BIGINT) AS sum_b,
         | CAST(sum(id_a * id_b) AS BIGINT) AS sum_ab
-        |FROM p GROUP BY dist ORDER BY dist""".stripMargin),
+        |FROM p GROUP BY dist ORDER BY dist""".stripMargin)),
     // the same sorted-neighborhood semantics via a row_number window and
     // a rank-band self-join; jaro_winkler_similarity is bit-identical to
     // the engine's native kernel on ASCII text (fuzz-pinned; DuckDB
     // compares UTF-8 bytes, the kernel UTF-16 code units — this corpus
     // is ASCII), so grouping by the raw double score is exact
-    "q123_sorted_neighborhood" ->
+    Gate("q123_sorted_neighborhood", sortedNeighborhoodQ _,
       (s"WITH $denseTypoCte,\n" +
       """r AS (
         | SELECT doc_id, name,
@@ -5109,11 +4948,11 @@ object TrainingData {
         |SELECT jw_score, count(*) AS n_pairs,
         | CAST(sum(id_a) AS BIGINT) AS sum_a,
         | CAST(sum(id_b) AS BIGINT) AS sum_b
-        |FROM p GROUP BY jw_score ORDER BY jw_score""".stripMargin),
+        |FROM p GROUP BY jw_score ORDER BY jw_score""".stripMargin)),
     // EXHAUSTIVE all-pairs levenshtein over the same deterministic typo
     // construction — the engine's deletion-neighborhood blocking must
     // reproduce it exactly or the hash breaks
-    "q122_fuzzy_pairs" ->
+    Gate("q122_fuzzy_pairs", fuzzyPairsQ _,
       (s"WITH $denseTypoCte,\n" +
       """p AS (
         | SELECT a.doc_id AS id_a, c.doc_id AS id_b,
@@ -5124,10 +4963,10 @@ object TrainingData {
         | CAST(sum(id_a) AS BIGINT) AS sum_a,
         | CAST(sum(id_b) AS BIGINT) AS sum_b,
         | CAST(sum(id_a * id_b) AS BIGINT) AS sum_ab
-        |FROM p GROUP BY dist ORDER BY dist""".stripMargin),
+        |FROM p GROUP BY dist ORDER BY dist""".stripMargin)),
     // the identical integer allocation (floor-sqrt weights, exact
     // integer sum and division) over the same md5-ranked pick
-    "q118_sqrt_allocation" ->
+    Gate("q118_sqrt_allocation", sqrtAllocationQ _,
       """WITH counts AS (
         | SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |wts AS (SELECT lang,
@@ -5142,12 +4981,12 @@ object TrainingData {
         |    AS rk
         | FROM documents)
         |SELECT doc_id, lang FROM ranked JOIN ks USING (lang)
-        |WHERE rk <= k ORDER BY doc_id""".stripMargin,
+        |WHERE rk <= k ORDER BY doc_id""".stripMargin),
     // the identical feature hashing (hash60 buckets, sign hash on
     // t||'#'), per-doc dense 64-vectors, the same dot/sqrt/divide
     // cosine shape — products and sums are integer-valued doubles, so
     // only sqrt and the final division round, identically
-    "q117_feature_hash" -> {
+    Gate("q117_feature_hash", featureHashRetrievalQ _, {
       def dot(a: String, b: String) =
         s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
       s"""WITH toks AS (
@@ -5175,10 +5014,10 @@ object TrainingData {
          |   AND ${dot("q.qvec", "q.qvec")} > 0)
          |SELECT doc_id, cosine_sim FROM sims
          |ORDER BY cosine_sim DESC, doc_id LIMIT 10""".stripMargin
-    },
+    }),
     // the identical ring: md5-coordinate rank (the oracle may window),
     // the same integer offsets 1 + (j·N)//5, modular partner lookup
-    "q116_ring_negatives" ->
+    Gate("q116_ring_negatives", ringNegativesQ _,
       """WITH rk AS (
         | SELECT doc_id, row_number() OVER (ORDER BY
         |   substring(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) - 1
@@ -5192,11 +5031,11 @@ object TrainingData {
         |SELECT t.anchor_id, CAST(t.neg_idx AS BIGINT) AS neg_idx,
         | b.doc_id AS neg_id
         |FROM t JOIN rk b ON b.rank = t.trank
-        |ORDER BY anchor_id, neg_idx""".stripMargin,
+        |ORDER BY anchor_id, neg_idx""".stripMargin),
     // merge(sketch(A), sketch(B)) ≡ sketch(A ∪ B): the oracle is q81's
     // whole-corpus bottom-k per source (no halves anywhere), plus the
     // half count the engine derives from non-empty (source, half) groups.
-    "q115_sketch_merge" ->
+    Gate("q115_sketch_merge", sketchMergeQ _,
       """WITH toks AS (
         | SELECT source, doc_id % 2 AS half,
         |  unnest(regexp_extract_all(lower(text), '\S+')) AS t
@@ -5215,11 +5054,11 @@ object TrainingData {
         |        (max(CASE WHEN rn = 256 THEN h END)::DOUBLE
         |          / 1152921504606846976.0::DOUBLE) END AS est_distinct
         |FROM r JOIN parts p USING (source)
-        |GROUP BY r.source, p.n_parts ORDER BY r.source""".stripMargin,
+        |GROUP BY r.source, p.n_parts ORDER BY r.source""".stripMargin),
     // q95's recursive longest-match segmentation extended to carry
     // (unit, prev) per step and emit adjacent pairs, weighted by the
     // distinct-run corpus counts — the same one-iteration BPE trainer.
-    "q113_bpe_merge_mine" ->
+    Gate("q113_bpe_merge_mine", bpeMergeCandidatesQ _,
       s"""WITH RECURSIVE bpe_vocab(v) AS (VALUES $bpeVocabValues),
          |pieces0 AS (
          | SELECT unnest(regexp_extract_all(lower(text),
@@ -5244,12 +5083,12 @@ object TrainingData {
          |SELECT unit_a, unit_b, CAST(sum(cnt) AS BIGINT) AS cnt
          |FROM wpairs JOIN pc ON wpairs.w = pc.piece
          |GROUP BY unit_a, unit_b
-         |ORDER BY cnt DESC, unit_a, unit_b LIMIT 20""".stripMargin,
+         |ORDER BY cnt DESC, unit_a, unit_b LIMIT 20""".stripMargin),
     // Both channels restated (q85's TF-IDF over the corpus-minus-query,
     // q27's shingle Jaccard against doc 0), then the identical
     // rank-based RRF arithmetic — 1.0/(60+rank) in the same fixed
     // sparse-then-char addition order.
-    "q111_hybrid_retrieval" ->
+    Gate("q111_hybrid_retrieval", hybridRetrievalQ _,
       """WITH q AS (
         | SELECT term, count(*)::DOUBLE AS qtf FROM (
         |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS term
@@ -5293,12 +5132,12 @@ object TrainingData {
         | coalesce(1.0::DOUBLE / (60 + rank_tfidf), 0.0::DOUBLE) +
         |  coalesce(1.0::DOUBLE / (60 + rank_char), 0.0::DOUBLE) AS rrf
         |FROM sp FULL OUTER JOIN ch USING (doc_id)
-        |ORDER BY rrf DESC, doc_id""".stripMargin,
+        |ORDER BY rrf DESC, doc_id""".stripMargin),
     // The whole sketch estimator restated: bottom-256 distinct values by
     // the portable hash60 with exact counts, quantile = smallest value
     // whose running count reaches ceil(q·mass) (::DOUBLE so both engines
     // IEEE-multiply; floored at rank 1).
-    "q110_quantile_sketch" ->
+    Gate("q110_quantile_sketch", quantileSketchQ _,
       """WITH vc AS (SELECT source, n_chars AS v, count(*) AS c
         |            FROM documents GROUP BY source, n_chars),
         |h AS (SELECT source, v, c,
@@ -5323,11 +5162,11 @@ object TrainingData {
         |    mass::DOUBLE) AS BIGINT)) THEN v END) AS p99
         | FROM cum GROUP BY source)
         |SELECT t.source, t.sketch_size, t.sketch_mass, q.p50, q.p90, q.p99
-        |FROM tot t JOIN q USING (source) ORDER BY source""".stripMargin,
+        |FROM tot t JOIN q USING (source) ORDER BY source""".stripMargin),
     // The identical ticket lottery: w tickets per doc via range, the same
     // numeric hash60 of "key:i", min-ticket priority, top-100 with the
     // same STRING tiebreak on the key the engine uses.
-    "q107_weighted_sample" ->
+    Gate("q107_weighted_sample", weightedSampleQ _,
       """WITH w AS (
         | SELECT doc_id, lang, 1 + (n_chars % 8) AS w FROM documents),
         |t AS (SELECT doc_id, unnest(range(0, w)) AS i FROM w),
@@ -5338,10 +5177,10 @@ object TrainingData {
         |win AS (SELECT doc_id FROM pri
         | ORDER BY priority, CAST(doc_id AS VARCHAR) LIMIT 100)
         |SELECT w.doc_id, w.lang, CAST(w.w AS BIGINT) AS w
-        |FROM w JOIN win USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM w JOIN win USING (doc_id) ORDER BY doc_id""".stripMargin),
     // min-label components over the chain pairs, size join, 10^6 //
     // size truncating weights; absent-from-pairs docs are singletons
-    "q280_dedup_weights" ->
+    Gate("q280_dedup_weights", dedupWeightsQ _,
       """WITH RECURSIVE base AS (SELECT doc_id FROM documents),
         |pairs AS (
         | SELECT doc_id AS a, doc_id + 1 AS b FROM base
@@ -5364,9 +5203,9 @@ object TrainingData {
         |SELECT l.doc_id, l.cluster_id, s.cluster_size,
         | CAST(1000000 // s.cluster_size AS BIGINT) AS weight_ppm
         |FROM lab l JOIN sz s USING (cluster_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the q263 rank with a per-lang row_number cutoff
-    "q274_group_reservoir" ->
+    Gate("q274_group_reservoir", weightedReservoirByGroupQ _,
       """WITH h AS (SELECT doc_id, lang, n_chars,
         |  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
         |    AS hv
@@ -5379,10 +5218,10 @@ object TrainingData {
         | FROM r)
         |SELECT lang, CAST(sample_rank AS BIGINT) AS sample_rank, doc_id,
         | n_chars
-        |FROM s WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin,
+        |FROM s WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin),
     // the same residue boundaries, span arithmetic, and 60-bit chunk
     // hashes; lag() rebuilds the spans the array expression builds
-    "q271_cdc_chunks" ->
+    Gate("q271_cdc_chunks", cdcChunksQ _,
       """WITH pos AS (
         | SELECT doc_id, source, text,
         |   unnest(range(8, length(text) + 1)) AS p
@@ -5410,10 +5249,10 @@ object TrainingData {
         | CAST(count(DISTINCT h) AS BIGINT) AS n_distinct,
         | CAST((count(*) - count(DISTINCT h)) * 1000000 // count(*)
         |   AS BIGINT) AS dup_ppm
-        |FROM chunks GROUP BY source ORDER BY source""".stripMargin,
+        |FROM chunks GROUP BY source ORDER BY source""".stripMargin),
     // both assignments via the q56 recursive-CTE min-label components,
     // overlap contingency + window-deterministic top source
-    "q269_cluster_evolution" ->
+    Gate("q269_cluster_evolution", clusterEvolutionQ _,
       """WITH RECURSIVE base AS (SELECT doc_id FROM documents),
         |o_pairs AS (
         | SELECT doc_id AS a, doc_id + 100000 AS b FROM base
@@ -5468,10 +5307,10 @@ object TrainingData {
         |      ELSE 'grown' END AS status
         |FROM agg a LEFT JOIN top t USING (new_c)
         | LEFT JOIN osz s ON t.top_source = s.old_c
-        |ORDER BY cluster_id""".stripMargin,
+        |ORDER BY cluster_id""".stripMargin),
     // the same (count DESC, term) leaderboards, full-outer diffed;
     // QUALIFY keeps each side's top-25 before the join
-    "q268_rank_shift" ->
+    Gate("q268_rank_shift", rankShiftQ _,
       """WITH tok AS (SELECT doc_id,
         |  unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -5492,10 +5331,10 @@ object TrainingData {
         |      WHEN nt.r < ot.r THEN 'up' ELSE 'down' END AS status,
         | CAST(CASE WHEN ot.r IS NOT NULL AND nt.r IS NOT NULL
         |      THEN ot.r - nt.r ELSE 0 END AS BIGINT) AS delta
-        |FROM ot FULL JOIN nt USING (term) ORDER BY term""".stripMargin,
+        |FROM ot FULL JOIN nt USING (term) ORDER BY term""".stripMargin),
     // Hamilton apportionment term for term: integer floor/remainder,
     // spare rows by (rem DESC, n DESC, lang), md5 pick within stratum
-    "q267_largest_remainder" ->
+    Gate("q267_largest_remainder", largestRemainderQ _,
       """WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY lang),
         |t AS (SELECT sum(n) AS nt FROM c),
@@ -5511,10 +5350,10 @@ object TrainingData {
         |      doc_id) AS rk
         |  FROM documents)
         |SELECT r.doc_id, r.lang FROM r JOIN a USING (lang)
-        |WHERE rk <= k ORDER BY doc_id""".stripMargin,
+        |WHERE rk <= k ORDER BY doc_id""".stripMargin),
     // The identical integer rank: hash60(doc_id) // n_chars (both
     // engines truncate toward zero), (rank, hash, id) total order
-    "q263_weighted_reservoir" ->
+    Gate("q263_weighted_reservoir", weightedReservoirQ _,
       """WITH h AS (SELECT doc_id, n_chars,
         |  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
         |    AS hv
@@ -5524,11 +5363,11 @@ object TrainingData {
         |  row_number() OVER (ORDER BY rnk, hv, doc_id) AS sample_rank
         | FROM r)
         |SELECT CAST(sample_rank AS BIGINT) AS sample_rank, doc_id, n_chars
-        |FROM s WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin,
+        |FROM s WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin),
     // Same boilerplate injection, same per-(source, line) distinct-doc
     // threshold, same drop-every-occurrence semantics and ordered
     // newline reassembly.
-    "q108_boilerplate" ->
+    Gate("q108_boilerplate", boilerplateQ _,
       """WITH d2 AS (
         | SELECT doc_id, source,
         |  'NAVIGATION MENU ' || source || chr(10) ||
@@ -5554,11 +5393,11 @@ object TrainingData {
         | coalesce(string_agg(CASE WHEN b.line IS NULL THEN l2.line END,
         |   chr(10) ORDER BY line_idx), '') AS clean_text
         |FROM l2 LEFT JOIN b USING (source, line)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // The canonicalization ALGORITHM restated generically (regexp parts,
     // default-port strip, trailing-slash strip, tracking-param filter,
     // bytewise param sort) over the same messy URL construction.
-    "q109_url_dedup" ->
+    Gate("q109_url_dedup", urlDedupQ _,
       """WITH u AS (
         | SELECT doc_id,
         |  CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Example'
@@ -5604,10 +5443,10 @@ object TrainingData {
         | FROM kf)
         |SELECT canonical_url, min(doc_id) AS doc_id, count(*) AS n_dupes
         |FROM canon GROUP BY canonical_url
-        |ORDER BY canonical_url""".stripMargin,
+        |ORDER BY canonical_url""".stripMargin),
     // q83's chunk construction, reordered by the identical
     // md5-epoch-permutation key, same manifest aggregation.
-    "q103_epoch_shuffle" ->
+    Gate("q103_epoch_shuffle", epochShufflePackQ _,
       """WITH tk AS (
         | SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
         | FROM documents),
@@ -5637,19 +5476,19 @@ object TrainingData {
         | CAST(sum(least(fin, (seq_id + 1) * 512 - 1)
         |   - greatest(st, seq_id * 512) + 1) AS BIGINT) AS n_tokens,
         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin),
     // The grouped prefix sum restated as the per-group window it equals.
-    "q102_grouped_pack" ->
+    Gate("q102_grouped_pack", groupedPackQ _,
       """SELECT source, doc_id,
         | CAST(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
         |   ROWS UNBOUNDED PRECEDING) - n_chars AS BIGINT) AS cum_weight,
         | CAST((sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
         |   ROWS UNBOUNDED PRECEDING) - n_chars) // 15000 AS BIGINT)
         |   AS shard_id
-        |FROM documents ORDER BY source, doc_id""".stripMargin,
+        |FROM documents ORDER BY source, doc_id""".stripMargin),
     // The aggregate's (weight DESC, item ASC) order restated as the
     // row_number window it provably equals (TopKAggSpec).
-    "q101_top_terms" ->
+    Gate("q101_top_terms", topTermsQ _,
       """WITH toks AS (
         | SELECT source, unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -5659,10 +5498,10 @@ object TrainingData {
         |        PARTITION BY source ORDER BY cnt DESC, term) AS rank
         |      FROM tf)
         |SELECT source, CAST(rank AS BIGINT) AS rank, term, cnt
-        |FROM r WHERE rank <= 3 ORDER BY source, rank""".stripMargin,
+        |FROM r WHERE rank <= 3 ORDER BY source, rank""".stripMargin),
     // The q27 exhaustive-pair recount joined to the q77 md5-cut split on
     // both pair sides; a pair leaks when its sides' splits differ.
-    "q100_split_leakage" ->
+    Gate("q100_split_leakage", splitLeakageQ _,
       s"""WITH c AS (
          | SELECT doc_id, lower(text) AS t FROM documents
          | UNION ALL SELECT doc_id + 100000 AS doc_id, lower(text) AS t
@@ -5695,11 +5534,11 @@ object TrainingData {
          |FROM prs
          | JOIN sp sa ON sa.doc_id = doc_id_a
          | JOIN sp sb ON sb.doc_id = doc_id_b
-         |ORDER BY doc_id_a, doc_id_b""".stripMargin,
+         |ORDER BY doc_id_a, doc_id_b""".stripMargin),
     // The composed card: q95's fertility sums + q81's KMV restatement +
     // q93's cell/probe construction + a deterministic per-source argmax,
     // joined per source.
-    "q99_data_card" ->
+    Gate("q99_data_card", dataCardQ _,
       s"""WITH RECURSIVE ${bpeCtes("source")},
         |toks AS (
         | SELECT source, unnest(regexp_extract_all(lower(text), '\\S+')) AS term
@@ -5758,10 +5597,10 @@ object TrainingData {
         | t.top_term, t.top_cnt, e.top_term_est
         |FROM fert f JOIN kmv k USING (source) JOIN top t USING (source)
         | JOIN est e ON e.term = t.top_term
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin),
     // Benchmark decontamination report: distinct 8-gram shingles per doc,
     // hits against the benchmark's (doc_id % 7 = 0) distinct shingle union.
-    "q66_decontam" ->
+    Gate("q66_decontam", decontamQ _,
       s"""WITH tk AS (
          | SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS toks
          | FROM documents),
@@ -5774,11 +5613,11 @@ object TrainingData {
          |SELECT doc_id, n_shingles, n_hits,
          | n_hits::DOUBLE / n_shingles::DOUBLE AS contam_frac,
          | n_hits > 0 AS contaminated
-         |FROM agg ORDER BY doc_id""".stripMargin,
+         |FROM agg ORDER BY doc_id""".stripMargin),
     // the q66 shingle-overlap machinery + the wave split and both
     // admission flags: wave = which landing batch carried the doc,
     // admitted ≡ zero benchmark hits (maxFrac = 0)
-    "q295_stream_contam" ->
+    Gate("q295_stream_contam", streamContaminationQ _,
       s"""WITH tk AS (
          | SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS toks
          | FROM documents),
@@ -5793,9 +5632,9 @@ object TrainingData {
          | n_shingles, n_hits,
          | n_hits::DOUBLE / n_shingles::DOUBLE AS contam_frac,
          | n_hits > 0 AS contaminated, n_hits = 0 AS admitted
-         |FROM agg ORDER BY doc_id""".stripMargin,
+         |FROM agg ORDER BY doc_id""".stripMargin),
     // PII injection restated, then the same three-regex redact + counts.
-    "q67_pii_redact" ->
+    Gate("q67_pii_redact", piiRedactQ _,
       s"""WITH p AS (
          | SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR) ||
          |  '@mail.example.com call ' || CAST(doc_id % 700 + 300 AS VARCHAR) ||
@@ -5806,10 +5645,10 @@ object TrainingData {
          | CAST(len(regexp_extract_all(text, '${Pii.emailPattern}')) AS BIGINT) AS n_email,
          | CAST(len(regexp_extract_all(text, '${Pii.phonePattern}')) AS BIGINT) AS n_phone,
          | CAST(len(regexp_extract_all(text, '${Pii.ipv4Pattern}')) AS BIGINT) AS n_ip
-         |FROM p ORDER BY doc_id""".stripMargin,
+         |FROM p ORDER BY doc_id""".stripMargin),
     // Corpus-wide first-occurrence line dedup over the clone corpus; the
     // window's (doc_id, line_idx) order is total, so row_number is exact.
-    "q68_line_dedup" ->
+    Gate("q68_line_dedup", lineDedupQ _,
       s"""WITH c AS (
          | SELECT doc_id, text FROM documents
          | UNION ALL SELECT doc_id + 100000, text FROM documents),
@@ -5822,17 +5661,17 @@ object TrainingData {
          |SELECT doc_id, count(*) AS n_lines,
          | count(*) FILTER (WHERE keep) AS n_kept,
          | coalesce(string_agg(line, ' ' ORDER BY line_idx) FILTER (WHERE keep), '') AS kept_text
-         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q69_quality_classifier" ->
+         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Gate("q69_quality_classifier", qualityClassifierQ _,
       s"""WITH tk AS (
          | SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS toks
          | FROM documents)
          |SELECT doc_id, ${logitSql("toks")} AS logit,
          | ${logitSql("toks")} > 0.0::DOUBLE AS keep
-         |FROM tk ORDER BY doc_id""".stripMargin,
+         |FROM tk ORDER BY doc_id""".stripMargin),
     // Gopher repetition rules: exact integer counts divided once — the
     // doubles restate bit-identically whatever the counting algorithm.
-    "q70_repetition" ->
+    Gate("q70_repetition", repetitionQ _,
       s"""WITH tk AS (
          | SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS toks
          | FROM documents),
@@ -5849,11 +5688,11 @@ object TrainingData {
          | FROM m)
          |SELECT doc_id, dup_token_frac, dup_line_frac, top_bigram_frac,
          | dup_line_frac <= 0.2::DOUBLE AND top_bigram_frac <= 0.2::DOUBLE AS keep
-         |FROM f ORDER BY doc_id""".stripMargin,
+         |FROM f ORDER BY doc_id""".stripMargin),
     // The whole round-6 curation chain restated stage-for-stage: PII redact
     // → first-occurrence line dedup → logit/repetition gates → strict
     // 8-gram decontamination (NOT IN the contaminated id set ≡ left anti).
-    "q71_curation_full" ->
+    Gate("q71_curation_full", curationFullQ _,
       s"""WITH d AS (SELECT doc_id, text FROM documents),
          |c AS (SELECT doc_id, text FROM d
          |      UNION ALL SELECT doc_id + 100000, text FROM d),
@@ -5886,11 +5725,11 @@ object TrainingData {
          | JOIN bs ON x.g = bs.g)
          |SELECT doc_id, CAST(n_toks AS BIGINT) AS n_tokens, logit
          |FROM g2 WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Fixed-budget sliding windows restated with the same start grid and
     // inclusive slices; chunk count = 1 for short docs, else
     // ceil((m - max) / stride) + 1.
-    "q72_chunking" ->
+    Gate("q72_chunking", chunkingQ _,
       s"""WITH tk AS (
          | SELECT doc_id, regexp_extract_all(text, '\\S+') AS toks
          | FROM documents),
@@ -5904,10 +5743,10 @@ object TrainingData {
          | FROM tk)
          |SELECT doc_id, CAST(s.chunk_idx AS INT) AS chunk_idx,
          | s.chunk_text AS chunk_text, CAST(s.n_tokens AS BIGINT) AS n_tokens
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
+         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
     // OOV against the deterministic top-50 vocabulary (q58's heavy-hitter
     // ordering: occurrences DESC, term — the tie cut is exact either side).
-    "q73_oov_rate" ->
+    Gate("q73_oov_rate", oovRateQ _,
       s"""WITH toks AS (
          | SELECT doc_id, unnest(regexp_extract_all(lower(text), '\\S+')) AS term
          | FROM documents),
@@ -5924,16 +5763,16 @@ object TrainingData {
          | GROUP BY t.doc_id)
          |SELECT doc_id, n_tokens, n_oov,
          | n_oov::DOUBLE / n_tokens::DOUBLE AS oov_rate
-         |FROM agg ORDER BY doc_id""".stripMargin,
+         |FROM agg ORDER BY doc_id""".stripMargin),
     // Portable simhash restated natively: md5-top-60-bit token hash, ±1
     // votes per bit, sign pack — identical long to SimHashPortableExpr.
-    "q28_simhash" ->
+    Gate("q28_simhash", simhashQ _,
       s"""WITH h AS (
          | SELECT doc_id, list_transform(regexp_extract_all(lower(text), '\\S+'),
          |   t -> $hash60Sql) AS hs
          | FROM documents)
          |SELECT doc_id, ${simhashSql("hs")} AS simhash
-         |FROM h ORDER BY doc_id""".stripMargin,
+         |FROM h ORDER BY doc_id""".stripMargin),
     // literal hashes -> pair fence -> transitive closure as a recursive
     // CTE with min-label clusters (the q56/q130 pattern): the planted
     // O~X~Y chain merges only through the closure
@@ -5941,7 +5780,7 @@ object TrainingData {
     // original's content id, so their extracted text is identical),
     // then every curation stage re-run in SQL: q24 lang scores, q23
     // quality formula, min-id window dedup, q66 shingle contamination
-    "q298_crawl_curation" ->
+    Gate("q298_crawl_curation", crawlCurationQ _,
       s"""WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 48),
          |recs AS (SELECT doc_id AS rec_id, doc_id AS content_id, text
          |          FROM d
@@ -6020,12 +5859,12 @@ object TrainingData {
          | k.keep_dedup AND ct.n_hits = 0 AND k.lang_pred = 'en'
          |   AS admitted
          |FROM kd k JOIN ct USING (rec_id)
-         |ORDER BY rec_id""".stripMargin,
+         |ORDER BY rec_id""".stripMargin),
     // the pages rebuilt in SQL (same HTTP wrap, same HTML, same planted
     // entities), then the IDENTICAL extraction chain: header split at
     // the first CRLFCRLF, script/style blocks whole, tags, the six
     // entities (&amp; last), whitespace collapse
-    "q297_warc_ingest" ->
+    Gate("q297_warc_ingest", warcIngestQ _,
       """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 48),
         |pg AS (SELECT doc_id,
         |  'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
@@ -6061,12 +5900,12 @@ object TrainingData {
         | 'https://example.com/doc/' || CAST(doc_id AS VARCHAR)
         |   AS target_uri,
         | md5(s) AS text_md5, CAST(length(s) AS BIGINT) AS n_chars
-        |FROM x5 ORDER BY doc_id""".stripMargin,
+        |FROM x5 ORDER BY doc_id""".stripMargin),
     // both modality pair sets in one statement — image hashes as
     // literals from the fixed fixture bytes, caption Jaccard from the
     // documents table via the q27 shingle machinery — then the joint
     // transitive closure and the min-id keep rule
-    "q296_pair_curation" -> {
+    Gate("q296_pair_curation", pairCurationQ _, {
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 24L).map(s =>
           s -> P.dHashOf(P.fixturePayload(s, 72, 64, "png")).get) ++
@@ -6112,8 +5951,8 @@ object TrainingData {
          |       FROM reach GROUP BY id)
          |SELECT pair_id, cluster_id, pair_id = cluster_id AS keep
          |FROM cl ORDER BY pair_id""".stripMargin
-    },
-    "q291_golden_images" -> {
+    }),
+    Gate("q291_golden_images", goldenImagesQ _, {
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 24L).map(s =>
           s -> P.dHashOf(P.fixturePayload(s, 72, 64, "png")).get) ++
@@ -6142,11 +5981,11 @@ object TrainingData {
          |       FROM reach GROUP BY id)
          |SELECT media_id, cluster_id, media_id = cluster_id AS canonical
          |FROM cl ORDER BY media_id""".stripMargin
-    },
+    }),
     // every (video, sampled position, frame dHash) restated as literals
     // from the fixed fixture bytes (decoded through the same ImageIO
     // reader), then the per-position hamming + match-count rule in SQL
-    "q290_video_neardup" -> {
+    Gate("q290_video_neardup", videoNearDupQ _, {
       val V = graft.multimodal.VideoFrames
       def hs(id: Long, seed: Long, w: Int, h: Int, shift: Int, rate: Int,
              div: Int): Seq[(Long, Int, Long)] =
@@ -6169,14 +6008,14 @@ object TrainingData {
          | GROUP BY 1, 2)
          |SELECT * FROM p WHERE n_matched >= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // every (video, sampled position, hash) restated from the CONTENT
     // frames directly — dHash64 over the deltaContentFrame render,
     // never through the GIF reader — so the composited decode of BOTH
     // the full-frame and the delta encode must land on the same
     // renderer-independent literal; the truncated payload keeps as the
     // one null row
-    "q292_video_delta" -> {
+    Gate("q292_video_delta", videoDeltaCompositeQ _, {
       val V = graft.multimodal.VideoFrames
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 10L).flatMap { seed =>
@@ -6195,11 +6034,11 @@ object TrainingData {
       s"""WITH h(media_id, n_frames, sample_idx, fhash) AS (VALUES $vals)
          |SELECT media_id, n_frames, sample_idx, fhash FROM h
          |ORDER BY media_id, sample_idx""".stripMargin
-    },
+    }),
     // every parsed (fingerprint, track count, duration) restated as
     // literals from the fixed fixture bytes (same EBML walk on the
     // driver) + the collision equi-join — the q300 SQL shape
-    "q304_webm_remux" -> {
+    Gate("q304_webm_remux", webmRemuxDedupQ _, {
       val M = graft.multimodal.WebmTracks
       def row(id: Long, seed: Long, remux: Boolean) = {
         val m = M.parse(M.webmPayload(seed, remux = remux)).get
@@ -6219,11 +6058,11 @@ object TrainingData {
          |FROM h a JOIN h b
          | ON a.stream_fp = b.stream_fp AND a.media_id < b.media_id
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // every walked (fingerprint, frame count, duration) restated as
     // literals from the fixed fixture bytes (same frame walk on the
     // driver) + the collision equi-join — the q300 SQL shape
-    "q303_mp3_retag" -> {
+    Gate("q303_mp3_retag", mp3RetagDedupQ _, {
       val M = graft.multimodal.Mp3Frames
       def row(id: Long, seed: Long, retag: Long) = {
         val m = M.parse(M.mp3Payload(seed, retagSeed = retag)).get
@@ -6243,11 +6082,11 @@ object TrainingData {
          |FROM h a JOIN h b
          | ON a.stream_fp = b.stream_fp AND a.media_id < b.media_id
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // every fixture hash restated as a literal (decoded by the same
     // WAV + FLAC codecs on the driver) + the greedy cross-wave drop
     // rule — the q286 SQL shape on the audio modality
-    "q301_stream_audio_dedup" -> {
+    Gate("q301_stream_audio_dedup", streamAudioDedupQ _, {
       val A = graft.multimodal.AudioSamples
       val F = graft.multimodal.FlacCodec
       def v(rows: Seq[(Long, Long)]): String = rows.map { case (id, h) =>
@@ -6267,11 +6106,11 @@ object TrainingData {
          | WHERE media_id NOT IN (SELECT media_id FROM drops)
          |UNION ALL SELECT CAST(999999 AS BIGINT), CAST(1 AS BIGINT)
          |ORDER BY media_id""".stripMargin
-    },
+    }),
     // every parsed (fingerprint, track count, duration) restated as
     // literals from the fixed fixture bytes (parsed by the same box
     // walk on the driver) + the collision equi-join in SQL
-    "q300_mp4_remux" -> {
+    Gate("q300_mp4_remux", mp4RemuxDedupQ _, {
       val M = graft.multimodal.Mp4Boxes
       def row(id: Long, seed: Long, remux: Boolean) = {
         val m = M.parse(M.mp4Payload(seed, remux = remux)).get
@@ -6291,11 +6130,11 @@ object TrainingData {
          |FROM h a JOIN h b
          | ON a.stream_fp = b.stream_fp AND a.media_id < b.media_id
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // the q283 literal-hash restatement verbatim: the tar round trip
     // is byte-exact, so the imported corpus decodes to the SAME hashes
     // and the same exhaustive pair set
-    "q289_tar_image_dedup" -> {
+    Gate("q289_tar_image_dedup", tarImageDedupQ _, {
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 24L).map(s =>
           s -> P.dHashOf(P.fixturePayload(s, 72, 64, "png")).get) ++
@@ -6309,13 +6148,13 @@ object TrainingData {
          |FROM h a JOIN h b ON a.media_id < b.media_id
          |WHERE bit_count(xor(a.dhash, b.dhash)) <= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // per-recording energy-envelope hashes restated as literals from
     // the SAME fixed WAV fixture bytes (decode -> mono mix -> 65-window
     // envelope on the driver; the q283 discipline), then the exhaustive
     // all-pairs hamming join — the 8x8-bit chunk stage is
     // pigeonhole-exact at maxDist 4
-    "q288_audio_neardup" -> {
+    Gate("q288_audio_neardup", audioNearDupQ _, {
       val A = graft.multimodal.AudioSamples
       val rows = (0L until 24L).map(s =>
           s -> A.audioHashOf(A.wavPayload(s, 65 * 60, 44100)).get) ++
@@ -6330,11 +6169,11 @@ object TrainingData {
          |FROM h a JOIN h b ON a.media_id < b.media_id
          |WHERE bit_count(xor(a.ahash, b.ahash)) <= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // fingerprint literals from the same fixture bytes — WAV through
     // the RIFF normalization, FLAC through the full subset decoder —
     // then the exhaustive pairs join: cross-CODEC clones collide at 0
-    "q299_audio_crosscodec" -> {
+    Gate("q299_audio_crosscodec", audioCrossCodecQ _, {
       val A = graft.multimodal.AudioSamples
       val F = graft.multimodal.FlacCodec
       val rows = (0L until 24L).map(s => s -> A.audioHashOfAny(
@@ -6353,12 +6192,12 @@ object TrainingData {
          |FROM h a JOIN h b ON a.media_id < b.media_id
          |WHERE bit_count(xor(a.ahash, b.ahash)) <= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // per-recording fingerprints restated as literals from the SAME
     // fixed multi-depth fixture bytes (driver-decoded through the same
     // canonical-domain normalization), then the exhaustive all-pairs
     // hamming join — every planted cross-format clone collides at 0
-    "q293_audio_crossfmt" -> {
+    Gate("q293_audio_crossfmt", audioCrossFormatQ _, {
       val A = graft.multimodal.AudioSamples
       def h(id: Long, seed: Long, n: Int, rate: Int, fmt: String,
             ch: Int = 1, ext: Boolean = false): (Long, Long) =
@@ -6380,12 +6219,12 @@ object TrainingData {
          |FROM h a JOIN h b ON a.media_id < b.media_id
          |WHERE bit_count(xor(a.ahash, b.ahash)) <= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // wave-1 and wave-2 dHash literals from the SAME fixed fixture
     // bytes + the greedy cross-wave drop rule (within-batch pairs are
     // deliberately not compared, matching the runner); the truncated
     // payload keeps via the null-hash path
-    "q286_stream_image_dedup" -> {
+    Gate("q286_stream_image_dedup", streamImageDedupQ _, {
       val P = graft.multimodal.ImagePixels
       def v(rows: Seq[(Long, Long)]): String = rows.map { case (id, h) =>
         s"(CAST($id AS BIGINT), CAST($h AS BIGINT))" }.mkString(", ")
@@ -6404,11 +6243,11 @@ object TrainingData {
          | WHERE media_id NOT IN (SELECT media_id FROM drops)
          |UNION ALL SELECT CAST(999999 AS BIGINT), CAST(1 AS BIGINT)
          |ORDER BY media_id""".stripMargin
-    },
+    }),
     // canonical-pixel fingerprints as literals from the fixed fixture
     // bytes: the BMP re-encode of each PNG shares its fingerprint, so
     // min-id keeps exactly the originals; NULL fp (truncated) keeps
-    "q287_pixel_dedup" -> {
+    Gate("q287_pixel_dedup", pixelDedupQ _, {
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 24L).flatMap { s =>
         val fp = P.pixelFingerprint(P.fixturePayload(s, 72, 64, "png")).get
@@ -6424,13 +6263,13 @@ object TrainingData {
          | (f.pixel_fp IS NULL OR f.media_id = k.keeper) AS keep
          |FROM f LEFT JOIN k ON k.pixel_fp = f.pixel_fp
          |ORDER BY f.media_id""".stripMargin
-    },
+    }),
     // per-image dHash values restated as literals from the SAME fixed
     // fixture bytes (render -> ImageIO encode -> decode -> dHash on the
     // driver; the q92 matrix-interpolation precedent), then the
     // exhaustive all-pairs hamming join — the engine's 8x8-bit-chunk
     // candidate stage is pigeonhole-exact at maxDist 4, so sets match
-    "q283_image_neardup" -> {
+    Gate("q283_image_neardup", imageNearDupQ _, {
       val P = graft.multimodal.ImagePixels
       val rows = (0L until 24L).map(s =>
           s -> P.dHashOf(P.fixturePayload(s, 72, 64, "png")).get) ++
@@ -6446,10 +6285,10 @@ object TrainingData {
          |FROM h a JOIN h b ON a.media_id < b.media_id
          |WHERE bit_count(xor(a.dhash, b.dhash)) <= 4
          |ORDER BY media_id_a, media_id_b""".stripMargin
-    },
+    }),
     // All-pairs hamming over the clone corpus: the engine's 15-bit-chunk
     // candidate stage is pigeonhole-exact, so the exhaustive SQL matches.
-    "q38_simhash_neardup" ->
+    Gate("q38_simhash_neardup", simhashNearDupQ _,
       s"""WITH c AS (
          | SELECT doc_id, lower(text) AS txt FROM documents
          | UNION ALL SELECT doc_id + 100000, lower(text) FROM documents),
@@ -6462,11 +6301,11 @@ object TrainingData {
          | CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hamming
          |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sim, b.sim)) <= 3
-         |ORDER BY doc_id_a, doc_id_b""".stripMargin,
-    "q42_ivf_topk" -> ivfOracle(),
-    "q76_semantic_dedup" -> semanticDedupOracle(),
+         |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+    Gate("q42_ivf_topk", ivfTopKQ _, ivfOracle()),
+    Gate("q76_semantic_dedup", semanticDedupQ _, semanticDedupOracle()),
     // the q76 cell machinery + per-vector different-label argmax
-    "q158_hard_negatives" ->
+    Gate("q158_hard_negatives", hardNegativesQ _,
       (s"""WITH ${lloydCtes("embeddings", 16, 3, 4096)},
           |assign AS (
           | SELECT vec_id, embedding, label, cell FROM (
@@ -6487,11 +6326,11 @@ object TrainingData {
           |SELECT a.vec_id, a.label, CAST(a.cell AS INT) AS cell,
           | b.neg_id, b.neg_label, b.cosine_sim
           |FROM assign a LEFT JOIN best b ON a.vec_id = b.vec_id
-          |ORDER BY a.vec_id""".stripMargin),
+          |ORDER BY a.vec_id""".stripMargin)),
     // Duplicated 8-token windows (stride 1) over the clone corpus: the
     // same portable span hash, (doc, hash) → (hash) counts, a window is
     // duplicated when its hash totals ≥ 2 anywhere in the corpus.
-    "q74_span_dedup" ->
+    Gate("q74_span_dedup", spanDedupQ _,
       s"""WITH c AS (
          | SELECT doc_id, text FROM documents
          | UNION ALL SELECT doc_id + 100000, text FROM documents),
@@ -6514,18 +6353,18 @@ object TrainingData {
          |SELECT doc_id, n_spans, n_dup_spans,
          | n_dup_spans::DOUBLE / greatest(n_spans, 1)::DOUBLE AS dup_span_frac,
          | n_dup_spans::DOUBLE / greatest(n_spans, 1)::DOUBLE <= 0.5::DOUBLE AS keep
-         |FROM r ORDER BY doc_id""".stripMargin,
+         |FROM r ORDER BY doc_id""".stripMargin),
     // Bit-length surprisal against the corpus' own unigram counts: exact
     // integer bits (unpadded-binary lengths agree between engines), one
     // double division at the end.
-    "q75_surprisal" ->
+    Gate("q75_surprisal", surprisalQ _,
       (s"WITH $surprisalCte\n" +
       """SELECT doc_id, n_tokens, sum_bits,
          | sum_bits::DOUBLE / greatest(n_tokens, 1)::DOUBLE AS mean_bits
-         |FROM r ORDER BY doc_id""".stripMargin),
+         |FROM r ORDER BY doc_id""".stripMargin)),
     // The q81 sketch construction, ungrouped and SATURATED (500 distinct
     // fingerprints > k): the CASE takes the true estimator branch.
-    "q97_kmv_saturated" ->
+    Gate("q97_kmv_saturated", kmvSaturatedQ _,
       """WITH fps AS (
         | SELECT md5(array_to_string(regexp_extract_all(lower(text), '\S+'),
         |   ' ')) AS fp
@@ -6540,10 +6379,10 @@ object TrainingData {
         |        (max(CASE WHEN rn = 256 THEN h END)::DOUBLE
         |          / 1152921504606846976.0::DOUBLE) END AS est_distinct,
         | CAST(min(m) AS BIGINT) AS n_exact
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin),
     // Projected-space cosine with the interpolated sign chains, the q31
     // exact-space CTE, and the deterministic overlap flag.
-    "q96_projected_recall" -> {
+    Gate("q96_projected_recall", projectedRecallQ _, {
       val signs = graft.functions.Similarity.signMatrix(64, 8)
       val chains = signs.map { row =>
         row.zipWithIndex.map { case (sgn, i) =>
@@ -6569,12 +6408,12 @@ object TrainingData {
          | e.vec_id IS NOT NULL AS in_exact_topk
          |FROM ptop p LEFT JOIN etop e USING (vec_id)
          |ORDER BY proj_sim DESC, p.vec_id""".stripMargin
-    },
+    }),
     // Exact integer volumes (the q22 token regexes) divided once.
     // fertility measured against the REAL embedded vocabulary: the bpe
     // CTEs restate the greedy longest-match segmentation over the same
     // generated lookup table the Spark expression compiles into a trie
-    "q95_tokenizer_fertility" ->
+    Gate("q95_tokenizer_fertility", fertilityQ _,
       s"""WITH RECURSIVE ${bpeCtes("lang")},
          |base AS (
          | SELECT lang, count(*) AS n_docs,
@@ -6590,10 +6429,10 @@ object TrainingData {
          |  / greatest(coalesce(c.n_bpe_tokens, 0), 1)::DOUBLE
          |   AS chars_per_token
          |FROM base b LEFT JOIN bpe_counts c USING (lang)
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
     // The q42/q76 Lloyd chain, assignment over the full table, then the
     // (cell, label) composition counts.
-    "q94_cluster_composition" -> {
+    Gate("q94_cluster_composition", clusterCompositionQ _, {
       s"""WITH ${lloydCtes("embeddings", 16, 3, 4096)},
          |assign AS (
          | SELECT vec_id, cell FROM (
@@ -6605,10 +6444,10 @@ object TrainingData {
          |FROM assign a JOIN embeddings e USING (vec_id)
          |GROUP BY a.cell, e.label
          |ORDER BY cell, label""".stripMargin
-    },
+    }),
     // The identical 4×1024 cell construction (md5 seam, depth-salted
     // bucket hash), exact top-20 probe, min-over-depth estimate.
-    "q93_countmin" ->
+    Gate("q93_countmin", countMinQ _,
       """WITH toks AS (
         | SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -6630,10 +6469,10 @@ object TrainingData {
         |        FROM probe LEFT JOIN cells USING (depth, bucket) GROUP BY term)
         |SELECT t.term, t.cnt, e.est_count
         |FROM top t JOIN est e USING (term)
-        |ORDER BY cnt DESC, term""".stripMargin,
+        |ORDER BY cnt DESC, term""".stripMargin),
     // The identical hash-derived sign matrix interpolated as explicit
     // left-associated addition chains (reduceLeft ≡ SQL left assoc).
-    "q92_sign_projection" -> {
+    Gate("q92_sign_projection", randomProjectionQ _, {
       val signs = graft.functions.Similarity.signMatrix(64, 8)
       val structs = signs.zipWithIndex.map { case (row, j) =>
         val chain = row.zipWithIndex.map { case (sgn, i) =>
@@ -6645,10 +6484,10 @@ object TrainingData {
          |           FROM embeddings)
          |SELECT vec_id, CAST(s.pdim AS INT) AS pdim, s.pval AS pval
          |FROM x ORDER BY vec_id, pdim""".stripMargin
-    },
+    }),
     // The q62 bigram CTE + the q75 bit-length seam, conditioned: bits =
     // len(bin(Σ_x c(a,x))) − len(bin(c(a,b))).
-    "q91_bigram_surprisal" ->
+    Gate("q91_bigram_surprisal", bigramSurprisalQ _,
       s"""WITH toks AS (
          | SELECT doc_id, regexp_extract_all(lower(text), '\\S+') AS t
          | FROM documents),
@@ -6673,10 +6512,10 @@ object TrainingData {
          | FROM documents d LEFT JOIN agg USING (doc_id))
          |SELECT doc_id, n_pairs, sum_bits,
          | sum_bits::DOUBLE / greatest(n_pairs, 1)::DOUBLE AS mean_bits
-         |FROM r ORDER BY doc_id""".stripMargin,
+         |FROM r ORDER BY doc_id""".stripMargin),
     // the whole rewrite restated: packed (doc_id*2^20 + pos) global-first
     // min per span hash, covered-position union, ordered token rejoin
-    "q154_span_removal" ->
+    Gate("q154_span_removal", spanRemovalQ _,
       s"""WITH c AS (
          | SELECT doc_id, text FROM documents
          | UNION ALL SELECT doc_id + 100000, text FROM documents),
@@ -6717,11 +6556,11 @@ object TrainingData {
          | CAST(len(tk.toks) - coalesce(agg.n_kept, 0) AS BIGINT) AS n_removed,
          | coalesce(agg.clean_text, '') AS clean_text
          |FROM tk LEFT JOIN agg USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // The q74 span CTEs plus the winnow selection: min of every 4-wide
     // hash window, deduplicated per document, then the same
     // document-frequency sharing count.
-    "q90_winnow" ->
+    Gate("q90_winnow", winnowQ _,
       s"""WITH c AS (
          | SELECT doc_id, text FROM documents
          | UNION ALL SELECT doc_id + 100000, text FROM documents),
@@ -6745,10 +6584,10 @@ object TrainingData {
          | FROM fp0 JOIN dfq USING (fp) GROUP BY doc_id)
          |SELECT c.doc_id, CAST(coalesce(n_fps, 0) AS BIGINT) AS n_fps,
          | CAST(coalesce(n_shared_fps, 0) AS BIGINT) AS n_shared_fps
-         |FROM c LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM c LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin),
     // The q87 gate CTEs feeding the q83 packing CTEs stage-for-stage —
     // the composed chain restated in one query.
-    "q89_dataloader_prep" ->
+    Gate("q89_dataloader_prep", dataloaderPrepQ _,
       """WITH med AS (
         | SELECT source, quantile_cont(n_chars, 0.5::DOUBLE) AS med
         | FROM documents GROUP BY source),
@@ -6784,11 +6623,11 @@ object TrainingData {
         | CAST(sum(least(fin, (seq_id + 1) * 512 - 1)
         |   - greatest(st, seq_id * 512) + 1) AS BIGINT) AS n_tokens,
         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin),
     // Exhaustive cross-pairs recount (the q27 oracle pattern, bipartite):
     // every (left, right) pair at exact Jaccard ≥ 0.95 on distinct char
     // 7-shingles — the engine's LSH candidates must cover them all.
-    "q88_cross_corpus" ->
+    Gate("q88_cross_corpus", crossCorpusQ _,
       """WITH l AS (SELECT doc_id, lower(text) AS t FROM documents),
         |r AS (SELECT doc_id + 100000 AS doc_id, lower(text) AS t
         |      FROM documents),
@@ -6811,10 +6650,10 @@ object TrainingData {
         |SELECT doc_id_a, doc_id_b,
         | CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) >= 0.95
-        |ORDER BY doc_id_a, doc_id_b""".stripMargin,
+        |ORDER BY doc_id_a, doc_id_b""".stripMargin),
     // Median/MAD restated with quantile_cont (≡ percentile, the q52/q78
     // seam); integer lengths keep every interpolated value exact.
-    "q87_robust_outliers" ->
+    Gate("q87_robust_outliers", robustOutlierQ _,
       """WITH med AS (
         | SELECT source, quantile_cont(n_chars, 0.5::DOUBLE) AS med
         | FROM documents GROUP BY source),
@@ -6825,11 +6664,11 @@ object TrainingData {
         | FROM m2 GROUP BY source)
         |SELECT m2.doc_id, m2.source, m2.n_chars, m2.med, mad.mad,
         | m2.dev <= 3.0::DOUBLE * mad.mad AS keep
-        |FROM m2 JOIN mad USING (source) ORDER BY m2.doc_id""".stripMargin,
+        |FROM m2 JOIN mad USING (source) ORDER BY m2.doc_id""".stripMargin),
     // Fixed-point PageRank unrolled: the q62 bigram CTE thresholded at 5,
     // symmetrized by UNION (dedup), then three integer-arithmetic rank
     // iterations — rank div deg contributions, (sum·17) div 20 damping.
-    "q86_textrank" ->
+    Gate("q86_textrank", textRankQ _,
       """WITH toks AS (
         | SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS t
         | FROM documents),
@@ -6869,11 +6708,11 @@ object TrainingData {
         |          AS rank
         |       FROM n0 LEFT JOIN s3 USING (node))
         |SELECT node AS term, rank FROM r3
-        |ORDER BY rank DESC, term LIMIT 100""".stripMargin,
+        |ORDER BY rank DESC, term LIMIT 100""".stripMargin),
     // The KMV sketch restated exactly: bottom-256 distinct md5-hash60
     // values per source (row_number ≤ k), estimate (k−1)/(h_k/2^60) with
     // the same IEEE double shape the engine computes.
-    "q81_kmv_distinct" ->
+    Gate("q81_kmv_distinct", kmvDistinctQ _,
       """WITH toks AS (
         | SELECT source, unnest(regexp_extract_all(lower(text), '\S+')) AS t
         | FROM documents),
@@ -6889,13 +6728,13 @@ object TrainingData {
         |        (max(CASE WHEN rn = 256 THEN h END)::DOUBLE
         |          / 1152921504606846976.0::DOUBLE) END AS est_distinct,
         | CAST(min(m) AS BIGINT) AS n_exact
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
+        |FROM r GROUP BY source ORDER BY source""".stripMargin),
     // Status classification restated as the full outer join the engine's
     // tagged-union aggregation is equivalent to (md5 fingerprints collide
     // only adversarially).
     // the applied table IS the new snapshot; via = whether the row left
     // the patch ('patched': added or changed id) or carried from old
-    "q161_snapshot_patch" ->
+    Gate("q161_snapshot_patch", snapshotPatchQ _,
       """WITH oldv AS (SELECT doc_id, text FROM documents),
         |newv AS (
         | SELECT doc_id,
@@ -6907,8 +6746,8 @@ object TrainingData {
         | CASE WHEN o.doc_id IS NULL OR o.text <> n.text
         |      THEN 'patched' ELSE 'carried' END AS via
         |FROM newv n LEFT JOIN oldv o ON o.doc_id = n.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-    "q82_snapshot_diff" ->
+        |ORDER BY n.doc_id""".stripMargin),
+    Gate("q82_snapshot_diff", snapshotDiffQ _,
       """WITH oldv AS (SELECT doc_id, text FROM documents),
         |newv AS (
         | SELECT doc_id,
@@ -6922,11 +6761,11 @@ object TrainingData {
         |      WHEN o.text = n.text THEN 'unchanged'
         |      ELSE 'changed' END AS status
         |FROM oldv o FULL OUTER JOIN newv n ON o.doc_id = n.doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // The q72 chunking CTE at stride 32 (disjoint), a single-window
     // prefix sum (the engine's distributed prefix sum is pinned equal to
     // this form by ShardingSpec), then the straddle explode.
-    "q83_seq_pack" ->
+    Gate("q83_seq_pack", seqPackQ _,
       """WITH tk AS (
         | SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
         | FROM documents),
@@ -6952,11 +6791,11 @@ object TrainingData {
         | CAST(sum(least(fin, (seq_id + 1) * 512 - 1)
         |   - greatest(st, seq_id * 512) + 1) AS BIGINT) AS n_tokens,
         | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+        |FROM x GROUP BY seq_id ORDER BY seq_id""".stripMargin),
     // Quantization audit restated: same calibration, same level formula,
     // only order-independent aggregates (min/max/integer sum) so double
     // accumulation order never matters.
-    "q84_quantize_int8" ->
+    Gate("q84_quantize_int8", quantizeQ _,
       """WITH x0 AS (
         | SELECT unnest(list_transform(generate_series(1, len(embedding)),
         |   i -> struct_pack(dim := i - 1,
@@ -6975,11 +6814,11 @@ object TrainingData {
         | CAST(sum(q) AS BIGINT) AS sum_q,
         | count(CASE WHEN q = 255 THEN 1 END) AS n_sat,
         | max(abs(mn + q::DOUBLE * scale - x)) AS max_abs_err
-        |FROM qq GROUP BY dim ORDER BY dim""".stripMargin,
+        |FROM qq GROUP BY dim ORDER BY dim""".stripMargin),
     // The inverted-index sparse dot product with the same scaled-integer
     // contributions (floor(qtf·tf·idf·2^20) — long sums commute, so the
     // shuffled aggregation order is irrelevant on both sides).
-    "q85_sparse_retrieval" ->
+    Gate("q85_sparse_retrieval", sparseRetrievalQ _,
       """WITH q AS (
         | SELECT term, count(*)::DOUBLE AS qtf FROM (
         |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS term
@@ -6999,20 +6838,20 @@ object TrainingData {
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS score_scaled,
         | count(*) AS n_terms
         |FROM sc GROUP BY doc_id
-        |ORDER BY score_scaled DESC, doc_id LIMIT 10""".stripMargin,
+        |ORDER BY score_scaled DESC, doc_id LIMIT 10""".stripMargin),
     // Data-card slices: integer volumes plus quantile_cont ≡ percentile
     // (identical linear interpolation, q52 precedent).
-    "q78_corpus_stats" ->
+    Gate("q78_corpus_stats", corpusStatsQ _,
       """SELECT source, lang, count(*) AS n_docs,
         | CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS n_tokens,
         | CAST(sum(n_chars) AS BIGINT) AS n_chars_total,
         | quantile_cont(n_chars, 0.5) AS p50_chars,
         | quantile_cont(n_chars, 0.95) AS p95_chars
         |FROM documents GROUP BY source, lang
-        |ORDER BY source, lang""".stripMargin,
+        |ORDER BY source, lang""".stripMargin),
     // The min-id keeper rule restated: a doc is unique iff it carries the
     // lowest id of its byte-identical text group.
-    "q79_dup_rate_source" ->
+    Gate("q79_dup_rate_source", dupRateBySourceQ _,
       """WITH c AS (
         | SELECT doc_id, text, source FROM documents
         | UNION ALL SELECT doc_id + 100000, text, source FROM documents),
@@ -7024,10 +6863,10 @@ object TrainingData {
         | count(*) - count(CASE WHEN keep THEN 1 END) AS n_dups,
         | (count(*) - count(CASE WHEN keep THEN 1 END))::DOUBLE
         |   / count(*)::DOUBLE AS dup_rate
-        |FROM k GROUP BY source ORDER BY source""".stripMargin,
+        |FROM k GROUP BY source ORDER BY source""".stripMargin),
     // Deterministic top-k vocabulary (occurrences DESC, term) with an
     // exact-integer prefix sum divided once by the exact total.
-    "q80_vocab_coverage" ->
+    Gate("q80_vocab_coverage", vocabCoverageQ _,
       """WITH toks AS (
         | SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -7040,24 +6879,24 @@ object TrainingData {
         | FROM cnts)
         |SELECT CAST(rank AS INT) AS rank, term, CAST(cnt AS BIGINT) AS cnt,
         | cum_cnt::DOUBLE / n_total::DOUBLE AS cum_coverage
-        |FROM r, tot WHERE rank <= 100 ORDER BY rank""".stripMargin,
+        |FROM r, tot WHERE rank <= 100 ORDER BY rank""".stripMargin),
     // The identical md5-prefix CASE, thresholds interpolated from the SAME
     // thresholdHex the engine uses (cumulative 0.8, 0.8+0.1).
-    "q77_hash_split" ->
+    Gate("q77_hash_split", hashSplitQ _,
       s"""SELECT doc_id, lang,
          | CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
          |        < '${graft.functions.Sampling.thresholdHex(0.8)}' THEN 'train'
          |      WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
          |        < '${graft.functions.Sampling.thresholdHex(0.8 + 0.1)}' THEN 'val'
          |      ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin),
     // BM25 restated step-for-step: identical token sets, identical
     // arithmetic shape (constants written as the same unfolded literals —
     // (1.2 + 1.0), not 2.2 — so both engines IEEE-add the same doubles).
     // Every fractional literal carries ::DOUBLE: DuckDB parses bare
     // decimals as DECIMAL and would otherwise run exact decimal arithmetic
     // (1 ulp off the engine's IEEE doubles) until a double operand joins.
-    "q57_bm25_terms" ->
+    Gate("q57_bm25_terms", bm25TermsQ _,
       """WITH toks AS (
         | SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -7080,8 +6919,8 @@ object TrainingData {
         |  row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rk
         | FROM scored)
         |SELECT doc_id, term, tf, score FROM r WHERE rk <= 3
-        |ORDER BY doc_id, score DESC, term""".stripMargin,
-    "q58_heavy_hitters" ->
+        |ORDER BY doc_id, score DESC, term""".stripMargin),
+    Gate("q58_heavy_hitters", heavyHittersQ _,
       """WITH toks AS (
         | SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS term
         | FROM documents),
@@ -7089,11 +6928,11 @@ object TrainingData {
         |SELECT term, CAST(sum(tf) AS BIGINT) AS occurrences,
         | count(*) AS doc_freq
         |FROM tf GROUP BY term
-        |ORDER BY occurrences DESC, term LIMIT 20""".stripMargin,
+        |ORDER BY occurrences DESC, term LIMIT 20""".stripMargin),
     // Independent transitive closure: min-label reachability via a
     // recursive CTE over the SAME chain + exact-text pair list.
     // q56's recursive closure rolled up to (size, n_clusters, n_docs)
-    "q255_cluster_histogram" ->
+    Gate("q255_cluster_histogram", clusterHistogramQ _,
       """WITH RECURSIVE base AS (SELECT doc_id, text FROM documents),
         |ids AS (
         | SELECT doc_id FROM base
@@ -7121,8 +6960,8 @@ object TrainingData {
         |         AS cluster_size FROM cl GROUP BY cluster_id)
         |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
         | CAST(cluster_size * count(*) AS BIGINT) AS n_docs
-        |FROM sz GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
-    "q56_dedup_clusters" ->
+        |FROM sz GROUP BY cluster_size ORDER BY cluster_size""".stripMargin),
+    Gate("q56_dedup_clusters", dedupClustersQ _,
       """WITH RECURSIVE base AS (SELECT doc_id, text FROM documents),
         |ids AS (
         | SELECT doc_id FROM base
@@ -7141,11 +6980,11 @@ object TrainingData {
         | UNION
         | SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.id)
         |SELECT id AS doc_id, CAST(min(lbl) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
     // The composed pipeline restated as one chain; filters before/after
     // dedup commute (all predicates are text-derived), min() aggregates
     // are exact on the identical clone rows.
-    "q55_curation" ->
+    Gate("q55_curation", curationQ _,
       """WITH c AS (
         | SELECT doc_id, text FROM documents
         | UNION ALL SELECT doc_id + 100000, text FROM documents),
@@ -7174,13 +7013,13 @@ object TrainingData {
         | FROM f GROUP BY text)
         |SELECT doc_id, len, quality FROM d
         |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000'
-        |ORDER BY doc_id""".stripMargin,
-    "q22_token_count" ->
+        |ORDER BY doc_id""".stripMargin),
+    Gate("q22_token_count", tokenCountQ _,
       """SELECT doc_id,
         | CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS ws_tokens,
         | CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]')) AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q23_quality_score" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q23_quality_score", qualityQ _,
       """WITH t AS (
         | SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
         |  len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
@@ -7192,8 +7031,8 @@ object TrainingData {
         |SELECT doc_id, len, punct_ratio, stopword_ratio,
         | 0.5 * least(len::DOUBLE / 1000.0, 1.0) + 0.3 * (1.0 - punct_ratio)
         |  + 0.2 * stopword_ratio AS quality
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q24_langid" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Gate("q24_langid", langIdQ _,
       """WITH s AS (
         | SELECT doc_id, lang,
         |  len(list_filter(regexp_extract_all(lower(text), '\S+'), x -> x IN ('the','and','of','is'))) AS s_en,
@@ -7209,22 +7048,22 @@ object TrainingData {
         | (CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
         |      WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
         |      WHEN s_de >= s_fr THEN 'de' ELSE 'fr' END) = lang AS is_match
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q25_fingerprint" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Gate("q25_fingerprint", fingerprintQ _,
       """SELECT doc_id,
         | md5(array_to_string(regexp_extract_all(lower(text), '\S+'), ' ')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q26_exact_dedup" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q26_exact_dedup", exactDedupQ _,
       """SELECT min(doc_id) AS doc_id, min(n_chars) AS n_chars FROM (
         | SELECT doc_id, text, n_chars FROM documents
         | UNION ALL SELECT doc_id + 100000, text, n_chars FROM documents) c
-        |GROUP BY text ORDER BY doc_id""".stripMargin,
+        |GROUP BY text ORDER BY doc_id""".stripMargin),
     // Exact restatement: jaccard over distinct char-7-shingle STRING sets
     // equals the engine's hashed-shingle jaccard (no 64-bit collisions on
     // this corpus — verified bit-identical), and the LSH candidate stage is
     // exhaustive here (every qualifying pair shares a band; checked against
     // this very all-pairs SQL at sf0.01 and sf0.001).
-    "q27_minhash_neardup" ->
+    Gate("q27_minhash_neardup", minhashQ _,
       """WITH c AS (
         | SELECT doc_id, lower(text) AS t FROM documents
         | UNION ALL SELECT doc_id + 100000 AS doc_id, lower(text) AS t FROM documents),
@@ -7242,10 +7081,10 @@ object TrainingData {
         |SELECT doc_id_a, doc_id_b,
         | CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) >= 0.95
-        |ORDER BY doc_id_a, doc_id_b""".stripMargin,
+        |ORDER BY doc_id_a, doc_id_b""".stripMargin),
     // Word-3-gram jaccard within (lang, length-band) blocks — the engine's
     // prefix-filter candidates are exact, so the all-pairs SQL matches.
-    "q29_ngram_jaccard" ->
+    Gate("q29_ngram_jaccard", ngramJaccardQ _,
       """WITH c AS (
         | SELECT doc_id, lang || '|' || CAST(n_chars // 32 AS VARCHAR) AS block,
         |  regexp_extract_all(lower(text), '\S+') AS toks
@@ -7267,24 +7106,24 @@ object TrainingData {
         |SELECT doc_id_a, doc_id_b,
         | CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) AS jaccard
         |FROM p WHERE CAST(inter AS DOUBLE) / greatest(la + lb - inter, 1) >= 0.9
-        |ORDER BY doc_id_a, doc_id_b""".stripMargin,
-    "q60_group_sample" ->
+        |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+    Gate("q60_group_sample", groupSampleQ _,
       """SELECT doc_id, lang FROM (
         | SELECT doc_id, lang,
         |  row_number() OVER (PARTITION BY lang
         |    ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id) AS rk
         | FROM documents)
-        |WHERE rk <= 50 ORDER BY doc_id""".stripMargin,
+        |WHERE rk <= 50 ORDER BY doc_id""".stripMargin),
     // bit interleave restated with plain shifts/masks: column 0 (n_chars)
     // owns even bits, column 1 (doc_id) odd bits, 16 bits each
-    "q61_zorder_key" ->
+    Gate("q61_zorder_key", zorderKeyQ _,
       """SELECT doc_id, CAST(list_sum(list_transform(range(0, 16), i ->
         |  ((((n_chars & 65535) >> i) & 1)::BIGINT << (2 * i)) +
         |  ((((doc_id & 65535) >> i) & 1)::BIGINT << (2 * i + 1)))) AS BIGINT) AS zkey
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // rational PMI with the engine's exact arithmetic shape:
     // (n_pairs · c_ab) / (c_a · c_b), all counts exact-integer doubles
-    "q62_collocations" ->
+    Gate("q62_collocations", collocationsQ _,
       """WITH toks AS (
         | SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS t FROM documents),
         |bg AS (
@@ -7300,9 +7139,9 @@ object TrainingData {
         |SELECT pc.w1, pc.w2, c_ab,
         | n.n_pairs * CAST(c_ab AS DOUBLE) / (CAST(c_a AS DOUBLE) * CAST(c_b AS DOUBLE)) AS pmi_ratio
         |FROM pc JOIN fa USING (w1) JOIN sb USING (w2), n
-        |ORDER BY pmi_ratio DESC, w1, w2 LIMIT 20""".stripMargin,
+        |ORDER BY pmi_ratio DESC, w1, w2 LIMIT 20""".stripMargin),
     // bloom prefilter is pruning only → oracle = dedup-then-anti-join
-    "q63_incremental_dedup" ->
+    Gate("q63_incremental_dedup", incrementalDedupQ _,
       """WITH corpus AS (SELECT md5(text) AS fp FROM documents),
         |batch AS (
         | SELECT doc_id + 100000 AS doc_id, md5(text) AS fp
@@ -7314,10 +7153,10 @@ object TrainingData {
         |deduped AS (SELECT min(doc_id) AS doc_id, fp FROM batch GROUP BY fp)
         |SELECT doc_id, fp FROM deduped
         |WHERE fp NOT IN (SELECT fp FROM corpus)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // feasible scale K = min_s(n_s/p_s); keep floor(K·p_s) per stratum by
     // the md5 coordinate — identical ÷/min/×/floor double arithmetic
-    "q65_mixture_sample" ->
+    Gate("q65_mixture_sample", mixtureSampleQ _,
       """WITH counts AS (
         | SELECT lang, count(*)::DOUBLE AS n FROM documents
         | WHERE lang IN ('en', 'es', 'de') GROUP BY lang),
@@ -7336,9 +7175,9 @@ object TrainingData {
         |WHERE rk <= CAST(floor(kk.k * CASE lang WHEN 'en' THEN 0.5::DOUBLE
         |                                        WHEN 'es' THEN 0.25::DOUBLE
         |                                        ELSE 0.25::DOUBLE END) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // the operator's distributed prefix sum provably equals this window
-    "q64_shard_pack" ->
+    Gate("q64_shard_pack", shardPackQ _,
       """WITH c AS (
         | SELECT doc_id,
         |  CAST(sum(n_chars) OVER (ORDER BY doc_id
@@ -7347,8 +7186,8 @@ object TrainingData {
         | FROM documents)
         |SELECT doc_id, cum_weight,
         | CAST(cum_weight // 50000 AS BIGINT) AS shard_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q48_stratified_sample" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Gate("q48_stratified_sample", stratifiedSampleQ _,
       """SELECT doc_id, lang,
         | substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS bucket
         |FROM documents
@@ -7356,14 +7195,14 @@ object TrainingData {
         | CASE WHEN lang = 'en' THEN '80000000'
         |      WHEN lang = 'es' THEN '40000000'
         |      ELSE '19999999' END
-        |ORDER BY doc_id""".stripMargin,
-    "q49_text_clean" ->
+        |ORDER BY doc_id""".stripMargin),
+    Gate("q49_text_clean", textCleanQ _,
       """SELECT doc_id,
         | trim(regexp_replace(regexp_replace(
         |   '<p class="x">' || text || '</p>' || chr(10) || '<br/>',
         |   '<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')) AS cleaned
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q34_frame_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Gate("q34_frame_sample", frameSampleQ _,
       """WITH f AS (
         | SELECT doc_id, text,
         |  greatest((length(text) - 16) / 4.0, 1.0) AS step
@@ -7372,27 +7211,27 @@ object TrainingData {
         | CAST(length(substring(text, CAST(floor(i * step + 1) AS INT), 16)) AS BIGINT) AS frame_bytes,
         | substring(text, CAST(floor(i * step + 1) AS INT), 16) AS frame_text
         |FROM f, range(0, 5) r(i)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "q30_embedding_neardup" ->
+        |ORDER BY doc_id, frame_idx""".stripMargin),
+    Gate("q30_embedding_neardup", embeddingNearDupQ _,
       s"""WITH c AS (
          | SELECT vec_id, embedding, label FROM embeddings
          | UNION ALL SELECT vec_id + 100000, embedding, label FROM embeddings)
          |SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b, $cosExpr AS cosine_sim
          |FROM c a JOIN c b ON a.label = b.label AND a.vec_id < b.vec_id
          |WHERE $cosExpr >= 0.99
-         |ORDER BY vec_id_a, vec_id_b""".stripMargin,
-    "q31_cosine_topk" ->
+         |ORDER BY vec_id_a, vec_id_b""".stripMargin),
+    Gate("q31_cosine_topk", cosineTopKQ _,
       s"""WITH b AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
          |SELECT a.vec_id, $cosExpr AS cosine_sim
          |FROM embeddings a, b
-         |ORDER BY cosine_sim DESC, a.vec_id LIMIT 10""".stripMargin,
-    "q32_ann_topk" -> annOracle,
-    "q33_multimodal" ->
+         |ORDER BY cosine_sim DESC, a.vec_id LIMIT 10""".stripMargin),
+    Gate("q32_ann_topk", annTopKQ _, annOracle),
+    Gate("q33_multimodal", multimodalQ _,
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | substring(hex(encode(text)), 1, 8) AS format,
         | ascii(substring(text, 1, 1)) % 64 * 16 + 16 AS width,
         | ascii(substring(text, 1, 1)) % 48 * 16 + 16 AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
   )
 }

@@ -13,10 +13,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * predicate pushdown reach the scan because the plan stays declarative.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Read one table from a scale-factor directory (e.g. /root/testdata/sf0.01).
     *
     * `events.ts` has been generated with two different parquet encodings
@@ -45,8 +41,4 @@ object Tables {
     } else {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
-
-  /** Register every table as a temp view so `spark.sql` queries resolve. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

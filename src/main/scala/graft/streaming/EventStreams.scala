@@ -18,22 +18,4 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
-
-  /** Watermarked streaming variant of tumblingAgg. */
-  def tumblingAggStream(events: DataFrame, tsCol: String, windowDur: String,
-                        lateness: String): DataFrame =
-    tumblingAgg(events.withWatermark(tsCol, lateness), tsCol, windowDur)
-
-  /** Streaming exact dedup by id with BOUNDED state:
-    * `dropDuplicatesWithinWatermark` keeps an id in state only until the
-    * watermark passes its event time + lateness, so state size tracks the
-    * lateness window instead of growing with the whole stream — the shape
-    * a 100 TB/day ingest needs (plain `dropDuplicates` on a stream retains
-    * every id ever seen). Duplicates arriving within the lateness bound of
-    * their first occurrence are dropped; later replays are the history
-    * anti-join's job (IncrementalIngest). */
-  def dedupStream(events: DataFrame, idCol: String, tsCol: String,
-                  lateness: String): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(idCol)
 }

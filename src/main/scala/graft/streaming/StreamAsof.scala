@@ -44,15 +44,6 @@ object StreamAsof {
   final case class AsofState(lefts: List[(Long, Double)],
                              rights: List[(Long, Double)])
 
-  /** Tag + union two typed streams into the single keyed input. */
-  def tagAndUnion(lefts: Dataset[(Long, java.sql.Timestamp, Double)],
-                  rights: Dataset[(Long, java.sql.Timestamp, Double)])
-      : Dataset[AsofInput] = {
-    implicit val enc = Encoders.product[AsofInput]
-    lefts.map { case (k, ts, v) => AsofInput(k, ts, "l", v) }
-      .union(rights.map { case (k, ts, v) => AsofInput(k, ts, "r", v) })
-  }
-
   /** The join itself. `input` must carry a watermark on `ts` (the spec and
     * [[start]] apply `.withWatermark` before calling). */
   def asofJoin(input: Dataset[AsofInput]): Dataset[AsofJoined] = {

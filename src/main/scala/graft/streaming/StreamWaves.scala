@@ -124,14 +124,10 @@ object StreamWaves {
     * detection diffs the listing per write. Cross-directory mtime
     * interleaving is irrelevant — each file source orders only its own
     * directory. */
-  def stageAll(dirs: Seq[(String, Seq[DataFrame])]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, dirs.size))
-    try dirs.map { case (d, ws) =>
-        pool.submit(new Runnable { override def run(): Unit = stage(d, ws) })
-      }.foreach(_.get())
-    finally pool.shutdown()
-  }
+  def stageAll(dirs: Seq[(String, Seq[DataFrame])]): Unit =
+    graft.operators.Concurrent.all(dirs.map { case (d, ws) =>
+      () => stage(d, ws)
+    })
 
   /** A schema'd parquet file-source reader with an optional
     * files-per-micro-batch cap. */

@@ -22,7 +22,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dimension joins broadcast the small side, not the fact side") {
-    val plan = graft.queries.Relational.queries("q04_nation_revenue")(spark, sfDir)
+    val plan = graft.SparkEntry.queries("q04_nation_revenue")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))
     // the broadcast exchanges sit on dimension scans (nation/region/customer
@@ -40,7 +40,7 @@ class PlanShapeSpec extends SparkSpec {
     // constant-size dims (nation: 25 rows, region: 5 rows) may carry
     // explicit hints; everything else is AQE's runtime decision.
     def hintedRelations(name: String): Seq[String] = {
-      val analyzed = graft.queries.Relational.queries(name)(spark, sfDir)
+      val analyzed = graft.SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.analyzed
       analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
@@ -329,7 +329,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("whole-stage codegen covers the text-analysis projections") {
-    val df = graft.queries.TrainingData.queries("q23_quality_score")(spark, sfDir)
+    val df = graft.SparkEntry.queries("q23_quality_score")(spark, sfDir)
     df.collect() // finalize the adaptive plan so codegen nodes materialize
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("isFinalPlan=true"))
@@ -368,7 +368,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("BPE pair mining aggregates distinct runs partially before its exchange") {
-    val df = graft.queries.TrainingData.queries("q113_bpe_merge_mine")(spark, sfDir)
+    val df = graft.SparkEntry.queries("q113_bpe_merge_mine")(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head

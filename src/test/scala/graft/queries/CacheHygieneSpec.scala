@@ -7,7 +7,8 @@ import graft.SparkSpec
   * leave NOTHING in the catalog cache — a non-bench caller composing
   * these queries would otherwise accumulate cache residue per call.
   * This sweep runs every persisting query on sf0.001 and pins
-  * cacheManager emptiness after each. */
+  * cacheManager emptiness after each. Gates that stage files likewise
+  * delete their staging directory before they return. */
 class CacheHygieneSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -34,5 +35,22 @@ class CacheHygieneSpec extends SparkSpec {
       assert(spark.sharedState.cacheManager.isEmpty,
         s"$name left cached frames behind")
     }
+  }
+
+  private val fileGates = Seq("q37_lakesim_scan", "q44_registry_roundtrip",
+    "q46_cursor_scan", "q105_lakesim_write", "q199_bloom_skip")
+
+  private def graftDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(_.filter(_.startsWith("graft_")).toSet)
+
+  test("file-staging gates leave no graft_* entry in java.io.tmpdir") {
+    val before = graftDirs()
+    val all = graft.SparkEntry.queries
+    fileGates.foreach { name =>
+      assert(all(name)(spark, sf).count() > 0, s"$name returned no rows")
+    }
+    val left = graftDirs() -- before
+    assert(left.isEmpty, s"left behind: ${left.mkString(", ")}")
   }
 }

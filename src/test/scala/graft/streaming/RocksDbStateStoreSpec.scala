@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -16,10 +15,10 @@ import graft.SparkSpec
   * outgrows the heap. `RocksDBStateStoreProvider` (bundled with Spark,
   * rocksdbjni on the classpath) keeps working state on local disk with
   * a block-cache budget, which is the documented deployment config for
-  * the `flatMapGroupsWithState` / `dropDuplicatesWithinWatermark` /
-  * `session_window` operators here (README deployment notes). These
-  * tests pin that switching providers changes WHERE state lives, never
-  * WHAT the operators answer. */
+  * the `flatMapGroupsWithState` (streaming as-of join) /
+  * `dropDuplicatesWithinWatermark` / `session_window` operators here
+  * (README deployment notes). These tests pin that switching providers
+  * changes WHERE state lives, never WHAT the operators answer. */
 class RocksDbStateStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -44,54 +43,6 @@ class RocksDbStateStoreSpec extends SparkSpec {
     assert(default.exceptAll(rocks).isEmpty && rocks.exceptAll(default).isEmpty,
       s"$label: RocksDB state store changed the answer")
     assert(default.count() > 0, s"$label: fixture produced no rows")
-  }
-
-  test("mapGroupsWithState running totals answer identically on RocksDB") {
-    bothProviders("runningUserTotals") {
-      implicit val sc = spark.sqlContext
-      val input = MemoryStream[StatefulOps.UserEvent]
-      val name = s"rut_${System.nanoTime()}"
-      val query = StatefulOps.startRunningTotals(input.toDS(), name)
-      try {
-        input.addData(StatefulOps.UserEvent(1, "click", 1.0),
-          StatefulOps.UserEvent(1, "error", 2.0),
-          StatefulOps.UserEvent(2, "view", 5.0))
-        query.processAllAvailable()
-        input.addData(StatefulOps.UserEvent(1, "click", 4.0),
-          StatefulOps.UserEvent(3, "view", 7.0))
-        query.processAllAvailable()
-        // latest emitted row per user = the standing totals
-        spark.table(name).groupBy($"user_id")
-          .agg(max_by(struct($"n_events", $"total_value", $"n_errors"),
-            $"n_events").as("t"))
-          .select($"user_id", $"t.*")
-      } finally query.stop()
-    }
-  }
-
-  test("flatMapGroupsWithState timeout sessions answer identically on " +
-      "RocksDB") {
-    bothProviders("closedSessions") {
-      implicit val sc = spark.sqlContext
-      def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-      val input = MemoryStream[StatefulOps.TimedEvent]
-      val name = s"cs_${System.nanoTime()}"
-      val query = StatefulOps.startClosedSessions(input.toDS(),
-        gapSeconds = 60, name)
-      try {
-        input.addData(StatefulOps.TimedEvent(1L, ts(100), 1.0),
-          StatefulOps.TimedEvent(1L, ts(130), 2.0),
-          StatefulOps.TimedEvent(2L, ts(110), 5.0))
-        query.processAllAvailable()
-        // far-future wave closes every open session via the watermark
-        input.addData(StatefulOps.TimedEvent(9L, ts(100000), 0.0))
-        query.processAllAvailable()
-        input.addData(StatefulOps.TimedEvent(9L, ts(200000), 0.0))
-        query.processAllAvailable()
-        spark.table(name).filter($"user_id" < 9L)
-          .select($"user_id", $"n_events", $"total_value")
-      } finally query.stop()
-    }
   }
 
   test("streaming as-of join answers identically on RocksDB") {
