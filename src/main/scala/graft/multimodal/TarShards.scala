@@ -123,24 +123,15 @@ object TarShards {
                                idCol: String, payloadCol: String,
                                outDir: String, checkpointPath: String,
                                shardBytes: Long,
-                               maxFilesPerTrigger: Option[Int] = None): Long = {
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val query = graft.streaming.StreamWaves
-      .reader(spark, schema, sourcePath, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
-        if (!batch.isEmpty)
-          writeTarShards(batch, idCol, payloadCol,
-            s"$outDir/batch_id=$batchId", shardBytes)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
-  }
+                               maxFilesPerTrigger: Option[Int] = None): Long =
+    graft.streaming.StreamState.drain(graft.streaming.StreamWaves
+        .reader(spark, schema, sourcePath, maxFilesPerTrigger),
+        checkpointPath)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      if (!batch.isEmpty)
+        writeTarShards(batch, idCol, payloadCol,
+          s"$outDir/batch_id=$batchId", shardBytes)
+      ()
+    })
 
   /** Read tar shards back as one row per SAMPLE — the loader side of
     * the round trip: `(shard_path, key, payload, meta_json)`, pairing

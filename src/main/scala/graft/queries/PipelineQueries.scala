@@ -759,15 +759,10 @@ object PipelineQueries {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("n_chars", LongType)))
-      val q = s.readStream.format(fmt)
-        .schema(schema).option("path", s"$base/lake")
-        .option("maxobjectsperbatch", "3").load()
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.StreamState.drain(s.readStream.format(fmt)
+          .schema(schema).option("path", s"$base/lake")
+          .option("maxobjectsperbatch", "3").load(), s"$base/ckpt")(
+        _.format("parquet").option("path", s"$base/sink"))
       // offset log: one entry per micro-batch — prove the drain was
       // admission-controlled (3 batches for 8 objects at <= 3 each)
       val batches = new java.io.File(s"$base/ckpt/offsets")
@@ -927,13 +922,10 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, Seq(
         narrow.filter(col("doc_id") % 2 === 0).drop("doc_id"),
         narrow.filter(col("doc_id") % 2 === 1).drop("doc_id")))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamStats.runAvailableNow(
-          s, src, narrow.drop("doc_id").schema, "source", "n_chars",
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
-      val sink = s.read.parquet(s"$base/sink")
-      val latest = sink.groupBy(col("g")).agg(max(col("batch_id")).as("batch_id"))
-      sink.join(latest, Seq("g", "batch_id"))
+      graft.streaming.StreamStats.runAvailableNow(
+        s, src, narrow.drop("doc_id").schema, "source", "n_chars",
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+      graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"), Seq("g"))
         .select(col("g").as("source"), col("sketch_size"), col("sketch_mass"),
           element_at(col("quantiles"), 1).as("p50"),
           element_at(col("quantiles"), 2).as("p90"),
@@ -974,10 +966,9 @@ object PipelineQueries {
       val src = s"$base/landing"
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
-      def run(): Unit = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.IncrementalIngest.runAvailableNow(
-          s, src, docs.schema, "doc_id", s"$base/sink", s"$base/history",
-          s"$base/ckpt") }
+      def run(): Unit = graft.streaming.IncrementalIngest.runAvailableNow(
+        s, src, docs.schema, "doc_id", s"$base/sink", s"$base/history",
+        s"$base/ckpt")
       docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
       run()
       docs.write.mode("append").parquet(src) // evens again + the odds
@@ -1018,18 +1009,11 @@ object PipelineQueries {
       // restart/replay safety is StreamDedupSpec's pin.
       graft.streaming.StreamWaves.stage(src,
         Seq(third.unionAll(third), docs))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        val q = graft.streaming.StreamDedup
+      graft.streaming.StreamState.drain(graft.streaming.StreamDedup
           .dedupByFingerprint(
             graft.streaming.StreamWaves.reader(s, docs.schema, src, Some(1)),
-            "ts", "text", watermarkDelay = "30 days")
-          .writeStream.format("parquet")
-          .option("path", s"$base/sink")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            "ts", "text", watermarkDelay = "30 days"), s"$base/ckpt")(
+        _.format("parquet").option("path", s"$base/sink"))
       s.read.parquet(s"$base/sink")
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
@@ -1067,10 +1051,9 @@ object PipelineQueries {
       // deduped); fail loudly rather than diverge if that ever breaks.
       // Replay safety is StreamNearDupSpec's pin.
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamNearDup.runAvailableNow(
-          s, src, wave1.schema, "doc_id", "text",
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.StreamNearDup.runAvailableNow(
+        s, src, wave1.schema, "doc_id", "text",
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 2,
         s"streamNearDupQ: expected 2 micro-batches, source produced $n" +
         " - the one-batch-per-wave oracle assumption no longer holds")
@@ -1100,10 +1083,9 @@ object PipelineQueries {
       // greedy two-wave oracle assumption, asserted); replay safety is
       // StreamFuzzyDedupSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamFuzzyDedup.runAvailableNow(
-          s, src, wave1.schema, "doc_id", "name",
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.StreamFuzzyDedup.runAvailableNow(
+        s, src, wave1.schema, "doc_id", "name",
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 2,
         s"streamFuzzyQ: expected 2 micro-batches, source produced $n" +
         " - the one-batch-per-wave oracle assumption no longer holds")
@@ -1154,23 +1136,13 @@ object PipelineQueries {
       // inside ONE AvailableNow lifecycle
       graft.streaming.StreamWaves.stage(src, Seq(wave,
         sentinel("2030-01-01 00:00:00"), sentinel("2030-06-01 00:00:00")))
-      // gate-scale state layout: per-key buffered probes are tiny, so 4
-      // state partitions cut the per-micro-batch store-commit file IO
-      // (see StreamState.withStatePartitions)
-      val n1 = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        val q = graft.streaming.StreamAsof.asofJoin(
+      val n1 = graft.streaming.StreamState.drain(
+          graft.streaming.StreamAsof.asofJoin(
             graft.streaming.StreamWaves.reader(s, wave.schema, src, Some(1))
               .as[graft.streaming.StreamAsof.AsofInput]
-              .withWatermark("ts", "60 seconds"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/sink")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.count(_.numInputRows > 0)
-      }
+              .withWatermark("ts", "60 seconds")).toDF(), s"$base/ckpt")(
+        _.format("parquet").option("path", s"$base/sink")
+          .outputMode("append"))
       require(n1 == 3, s"streamAsofQ: expected 3 data micro-batches " +
         s"(corpus + two sentinels), ran $n1 - the no-late-drop premise " +
         "no longer holds")
@@ -1211,19 +1183,13 @@ object PipelineQueries {
       // advanced between micro-batches — passes their close)
       graft.streaming.StreamWaves.stage(src, Seq(e,
         sentinel("2030-01-01 00:00:00"), sentinel("2030-06-01 00:00:00")))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        val q = graft.streaming.Sessionize.sessionsStream(
+      graft.streaming.StreamState.drain(graft.streaming.Sessionize
+          .sessionsStream(
             graft.streaming.StreamWaves.reader(s, e.schema, src, Some(1))
               .withWatermark("ts", "60 seconds"),
-            "user_id", "ts", "30 minutes", col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/sink")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            "user_id", "ts", "30 minutes", col("value")), s"$base/ckpt")(
+        _.format("parquet").option("path", s"$base/sink")
+          .outputMode("append"))
       s.read.parquet(s"$base/sink")
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("session_start"), col("session_end"),
@@ -1256,19 +1222,11 @@ object PipelineQueries {
         df.withColumn("ts", to_timestamp(lit(ts)))
       val evens = docs.filter(col("doc_id") % 2 === 0)
       val odds = docs.filter(col("doc_id") % 2 === 1)
-      def run(): Unit = graft.streaming.StreamState
-        .withStatePartitions(s, 4) {
-          val q = graft.streaming.StreamDedup
-            .dedupByFingerprint(
-              s.readStream.schema(at(evens, t1).schema).parquet(src),
-              "ts", "text", watermarkDelay = "1 hour")
-            .writeStream.format("parquet")
-            .option("path", s"$base/sink")
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+      def run(): Unit = graft.streaming.StreamState.drain(
+          graft.streaming.StreamDedup.dedupByFingerprint(
+            s.readStream.schema(at(evens, t1).schema).parquet(src),
+            "ts", "text", watermarkDelay = "1 hour"), s"$base/ckpt")(
+        _.format("parquet").option("path", s"$base/sink"))
       at(evens, t1).coalesce(1).write.mode("append").parquet(src)
       run() // wave 1: all accepted, state expires at t1 + 1h
       at(odds, t2).coalesce(1).write.mode("append").parquet(src)
@@ -1367,11 +1325,10 @@ object PipelineQueries {
       val d = dayofmonth(col("ts"))
       graft.streaming.StreamWaves.stage(src, Seq(
         e.filter(d <= 10), e.filter(d > 10 && d <= 20), e.filter(d > 20)))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.Scd2Stream.runAvailableNow(
-          s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
-          Seq("event_id"), s"$base/state", s"$base/ckpt",
-          maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.Scd2Stream.runAvailableNow(
+        s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
+        Seq("event_id"), s"$base/state", s"$base/ckpt",
+        maxFilesPerTrigger = Some(1))
       require(n == 3, s"scd2StreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.Scd2Stream.currentHistory(s, s"$base/state")
         .select(col("user_id"), col("event_type"), col("valid_from"),
@@ -1398,10 +1355,9 @@ object PipelineQueries {
       // replay safety is StreamDriftSpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(w =>
         cur.filter(col("event_id") % 3 === w)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamDrift.runAvailableNow(
-          s, src, cur.schema, "event_type", s"$base/sink", s"$base/ckpt",
-          maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamDrift.runAvailableNow(
+        s, src, cur.schema, "event_type", s"$base/sink", s"$base/ckpt",
+        maxFilesPerTrigger = Some(1))
       val refCounts = e.filter(col("value") <= 50)
         .groupBy(col("event_type").as("category"))
         .agg(count(lit(1)).as("ref_n"))
@@ -1441,10 +1397,9 @@ object PipelineQueries {
         days.filter(col("day") <= cut1),
         days.filter(col("day") > cut1 && col("day") <= cut2),
         days.filter(col("day") > cut2)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamCusum.runAvailableNow(
-          s, src, days.schema, "k", "day", drift = 2,
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamCusum.runAvailableNow(
+        s, src, days.schema, "k", "day", drift = 2,
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       graft.streaming.StreamCusum.emittedSeries(s, s"$base/sink")
         .withColumn("alarm", col("cusum") > 3)
         .orderBy(col("k"), col("day"))
@@ -1461,7 +1416,7 @@ object PipelineQueries {
     * (StreamSketchSpec's pin), and the top-20 heavy hitters
     * SERVED off the maintained grid must hash-equal the batch
     * estimates — q93's oracle verbatim. A no-data fourth drain must
-    * leave the sink untouched. [[graft.streaming.StreamSinkCompact]]
+    * leave the sink untouched. [[graft.streaming.StreamState.compact]]
     * runs MID-CHAIN (after wave 2) and again before serving: the
     * folded `batch_id=-1` snapshot must be a valid maintenance
     * substrate and leave the served grid identical, while bounding the
@@ -1474,10 +1429,9 @@ object PipelineQueries {
         .select(col("doc_id"),
           explode(graft.functions.TextAnalysis.tokens(lower(col("text"))))
             .as("term"))
-      def run(): Unit = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamSketch.runAvailableNow(
-          s, src, toks.select("term").schema, "term",
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      def run(): Unit = graft.streaming.StreamSketch.runAvailableNow(
+        s, src, toks.select("term").schema, "term",
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       def wave(wv: Int) = toks.filter(col("doc_id") % 3 === wv)
         .select("term")
       // waves 0-1 in one lifecycle (one micro-batch each), then the
@@ -1487,7 +1441,7 @@ object PipelineQueries {
       // is StreamSketchSpec's pin.
       graft.streaming.StreamWaves.stage(src, Seq(wave(0), wave(1)))
       run()
-      graft.streaming.StreamSinkCompact.compactLatest(
+      graft.streaming.StreamState.compact(
         s, s"$base/sink", Seq("depth", "bucket"))
       graft.streaming.StreamWaves.stage(src, Seq(wave(2)))
       run()
@@ -1536,10 +1490,9 @@ object PipelineQueries {
       // StreamChurnSpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(wv =>
         nw.filter(col("k") % 3 === wv)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamChurn.runAvailableNow(
-          s, src, nw.schema, oldFps, "k", cols, s"$base/sink", s"$base/ckpt",
-          maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamChurn.runAvailableNow(
+        s, src, nw.schema, oldFps, "k", cols, s"$base/sink", s"$base/ckpt",
+        maxFilesPerTrigger = Some(1))
       graft.streaming.StreamChurn.currentChurn(s, s"$base/sink", nOld)
         .orderBy(col("metric"))
         .localCheckpoint()
@@ -1568,10 +1521,9 @@ object PipelineQueries {
         e.filter(col("event_id") <= c1),
         e.filter(col("event_id") > c1 && col("event_id") <= c2),
         e.filter(col("event_id") > c2)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamLateness.runAvailableNow(
-          s, src, e.schema, "user_id", "event_id", "et_us",
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamLateness.runAvailableNow(
+        s, src, e.schema, "user_id", "event_id", "et_us",
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       graft.streaming.StreamLateness.currentAudit(s, s"$base/sink")
         .select(col("k").as("user_id"), col("n"), col("n_late"),
           col("max_late_us"))
@@ -1601,10 +1553,9 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src,
         (0 to 2).map(wv => e.filter(col("event_id") % 3 === wv ||
           col("event_id") % 7 === wv)) :+ e)
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamBitmap.runAvailableNow(
-          s, src, e.schema, "event_type", "user_id",
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamBitmap.runAvailableNow(
+        s, src, e.schema, "event_type", "user_id",
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       // standing ≡ the batch Bitmap.bitmaps is StreamBitmapSpec's pin;
       // the oracle restates the expected words, so the gate no longer
       // rebuilds the batch bitmap per bench run
@@ -1636,10 +1587,9 @@ object PipelineQueries {
       // StreamQuantileSpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(wv =>
         e.filter(col("event_id") % 3 === wv)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamQuantile.runAvailableNow(
-          s, src, e.schema, "event_type", "cents", 256,
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamQuantile.runAvailableNow(
+        s, src, e.schema, "event_type", "cents", 256,
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       // standing ≡ the one-shot AggMaintain.quantileState is
       // StreamQuantileSpec's pin; the oracle restates the maintained
       // histogram, so the gate no longer rebuilds the batch sketch
@@ -1689,10 +1639,9 @@ object PipelineQueries {
       // two staged waves, one lifecycle; replay safety is
       // StreamComponentsSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(w1, w2))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamComponents.runAvailableNow(
-          s, src, w1.schema, "a", "b", s"$base/sink", s"$base/ckpt",
-          maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamComponents.runAvailableNow(
+        s, src, w1.schema, "a", "b", s"$base/sink", s"$base/ckpt",
+        maxFilesPerTrigger = Some(1))
       // standing ≡ one-shot connectedComponents over w1 ∪ w2 is
       // StreamComponentsSpec's pin; the oracle's recursive-CTE closure
       // independently restates the assignment, so the gate no longer
@@ -1727,10 +1676,9 @@ object PipelineQueries {
         d.filter(col("doc_id") % 3 === wv ||
           (lit(wv) === 1 && col("doc_id") % 3 === 0 &&
             col("doc_id") % 5 === 0))))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamReservoir.runAvailableNow(
-          s, src, d.schema, "doc_id", "n_chars", 100,
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamReservoir.runAvailableNow(
+        s, src, d.schema, "doc_id", "n_chars", 100,
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       graft.streaming.StreamReservoir
         .currentReservoir(s, s"$base/sink")
         .select(col("sample_rank").cast("long").as("sample_rank"),
@@ -1765,10 +1713,9 @@ object PipelineQueries {
       // StreamReplaySpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(wv =>
         cur.filter(col("event_id") % 3 === wv)))
-      graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamTvd.runAvailableNow(
-          s, src, cur.schema, "cohort", "event_type",
-          s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      graft.streaming.StreamTvd.runAvailableNow(
+        s, src, cur.schema, "cohort", "event_type",
+        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       graft.streaming.StreamTvd.currentDrift(
           s, s"$base/sink", ref, "cohort", "event_type", 3L, 100L)
         .orderBy(col("cohort"), col("event_type")).localCheckpoint()
@@ -1797,10 +1744,9 @@ object PipelineQueries {
       // micro-batch per wave); replay safety is FunnelStreamSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(
         e.filter(d <= 10), e.filter(d > 10 && d <= 20), e.filter(d > 20)))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.FunnelStream.runAvailableNow(
-          s, src, e.schema, "user_id", "ts", "event_type", steps,
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.FunnelStream.runAvailableNow(
+        s, src, e.schema, "user_id", "ts", "event_type", steps,
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 3, s"funnelStreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.FunnelStream.currentTimes(s, s"$base/state",
           "user_id", steps, e.schema("user_id"))
@@ -1848,10 +1794,10 @@ object PipelineQueries {
         s, aDir, bDir, a.schema, b.schema,
         aLenSec = 7200L, bLenSec = 2700L, delay = "2 hours",
         outDir = s"$base/out", checkpointPath = s"$base/ckpt",
-        // per-user in-window row counts are tiny at every gate SF; 8
+        // per-user in-window row counts are tiny at every gate SF; 2
         // state partitions cut the 4-stores-per-partition-per-side
         // file-IO floor that dominated under 32 (33.6 s → see STATUS)
-        statePartitions = Some(2), maxFilesPerTrigger = Some(1))
+        statePartitions = 2, maxFilesPerTrigger = Some(1))
       s.read.parquet(s"$base/out")
         .select(col("a_id"), col("b_id"), col("user_id"))
         .orderBy(col("a_id"), col("b_id"))
@@ -1906,7 +1852,7 @@ object PipelineQueries {
         s, aDir, bDir, a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
         outDir = s"$base/out", checkpointPath = s"$base/ckpt",
-        statePartitions = Some(2), joinType = "left_outer",
+        statePartitions = 2, joinType = "left_outer",
         maxFilesPerTrigger = Some(1))
       s.read.parquet(s"$base/out")
         .filter(col("a_id") >= 0)
@@ -1934,11 +1880,10 @@ object PipelineQueries {
         // proves them at half the fold cost (oracle mirrors the slice)
         .select(col("user_id"), date_trunc("second", col("ts")).as("ts"),
           col("event_id"), col("event_type"))
-      def run(): Long = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.Scd2Stream.runAvailableNow(
-          s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
-          Seq("event_id"), s"$base/state", s"$base/ckpt",
-          maxFilesPerTrigger = Some(1)) }
+      def run(): Long = graft.streaming.Scd2Stream.runAvailableNow(
+        s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
+        Seq("event_id"), s"$base/state", s"$base/ckpt",
+        maxFilesPerTrigger = Some(1))
       val d = dayofmonth(col("ts"))
       // waves 1-2 drain in one lifecycle (one micro-batch each), then the
       // MID-CHAIN compaction; wave 3 folds on top of the compacted state
@@ -1991,11 +1936,10 @@ object PipelineQueries {
         asCdc(e.filter(d <= 10)),
         asCdc(e.filter(d > 10 && d <= 20)),
         asCdc(e.filter(d > 20)).unionByName(tombstones)))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.Scd2Stream.runAvailableNow(
-          s, src, schema, Seq("user_id"), "ts", Seq("event_type"),
-          Seq("event_id"), s"$base/state", s"$base/ckpt",
-          opCol = Some("op"), maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.Scd2Stream.runAvailableNow(
+        s, src, schema, Seq("user_id"), "ts", Seq("event_type"),
+        Seq("event_id"), s"$base/state", s"$base/ckpt",
+        opCol = Some("op"), maxFilesPerTrigger = Some(1))
       require(n == 3, s"scd2CdcStreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.Scd2Stream.currentHistory(s, s"$base/state")
         .select(col("user_id"), col("event_type"), col("valid_from"),
@@ -2117,11 +2061,10 @@ object PipelineQueries {
       // safety is Scd2StreamSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(
         e.filter(d <= 10), e.filter(d > 10 && d <= 20), e.filter(d > 20)))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.Scd2Stream.runEnrichAvailableNow(
-          s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
-          Seq("event_id"), factCols = Seq("event_id", "user_id", "ts"),
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.Scd2Stream.runEnrichAvailableNow(
+        s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
+        Seq("event_id"), factCols = Seq("event_id", "user_id", "ts"),
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 3,
         s"scd2EnrichStreamQ: expected 3 micro-batches, ran $n")
       s.read.parquet(s"$base/state/enriched")

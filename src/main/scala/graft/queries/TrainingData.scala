@@ -2221,10 +2221,9 @@ object TrainingData {
       // greedy cross-wave drop rule); replay safety is
       // StreamImageDedupSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(originals, wave2))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamImageDedup.runAvailableNow(
-          s, src, originals.schema, "media_id", "payload",
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.StreamImageDedup.runAvailableNow(
+        s, src, originals.schema, "media_id", "payload",
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 2L, s"streamImageDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))
@@ -2260,10 +2259,9 @@ object TrainingData {
         // two staged waves, one lifecycle (one micro-batch per wave);
         // replay safety is StreamContaminationSpec's pin
         graft.streaming.StreamWaves.stage(src, Seq(w1, w2))
-        val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-          graft.streaming.StreamContamination
-            .runAvailableNow(s, src, w1.schema, "doc_id", "text",
-              s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+        val n = graft.streaming.StreamContamination
+          .runAvailableNow(s, src, w1.schema, "doc_id", "text",
+            s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
         require(n == 2L, s"streamContaminationQ: expected 2 batches, ran $n")
         val reports = s.read.parquet(s"$base/state/reports")
           .localCheckpoint()
@@ -2422,10 +2420,9 @@ object TrainingData {
         .unionByName(F.fixtureFrame(ids.filter(col("doc_id") === 0),
           "doc_id", 65 * 2, 8000, idOffset = 999999L, truncateTo = 40))
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.streaming.StreamAudioDedup.runAvailableNow(
-          s, src, wave1.schema, "media_id", "payload",
-          s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1)) }
+      val n = graft.streaming.StreamAudioDedup.runAvailableNow(
+        s, src, wave1.schema, "media_id", "payload",
+        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
       require(n == 2L, s"streamAudioDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))
@@ -3104,11 +3101,10 @@ object TrainingData {
       // batch_id shard dir); replay safety is StreamReplaySpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(w =>
         payloads.filter(third === w)))
-      val n = graft.streaming.StreamState.withStatePartitions(s, 4) {
-        graft.multimodal.TarShards.streamExportAvailableNow(
-          s, src, payloads.schema, "doc_id", "payload",
-          s"$base/shards", s"$base/ckpt", shardBytes = 65536L,
-          maxFilesPerTrigger = Some(1)) }
+      val n = graft.multimodal.TarShards.streamExportAvailableNow(
+        s, src, payloads.schema, "doc_id", "payload",
+        s"$base/shards", s"$base/ckpt", shardBytes = 65536L,
+        maxFilesPerTrigger = Some(1))
       require(n == 3, s"tarStreamExportQ: expected 3 micro-batches, ran $n")
       graft.multimodal.TarShards.readTarShards(s, s"$base/shards/batch_id=*")
         .select(col("key").cast("long").as("doc_id"),

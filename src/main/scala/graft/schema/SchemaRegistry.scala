@@ -66,8 +66,10 @@ object SchemaRegistry {
     * any data scale. */
   def save(spark: org.apache.spark.sql.SparkSession,
            registry: SchemaRegistry, path: String): Unit = {
+    // Jackson escapes each name, so any key `load` can parse round-trips
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val json = registry.versions.toSeq.sortBy(_._1).map { case (id, ks) =>
-      ks.toSeq.sorted.map(c => "\"" + c.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      ks.toSeq.sorted.map(mapper.writeValueAsString)
         .mkString(s""""$id": [""", ", ", "]")
     }.mkString("{", ", ", "}")
     val p = new org.apache.hadoop.fs.Path(path)

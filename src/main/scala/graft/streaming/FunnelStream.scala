@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.operators.Funnels
@@ -31,15 +30,15 @@ import graft.operators.Funnels
   * batch touched, with their full (user, step_1_ts..step_k_ts) row — the
   * write is batch-user-sized, never state-sized. The current state is
   * resolved per user as the row from the LATEST batch that touched them
-  * (one `max_by(struct, batch_id)` aggregation — map-side combinable,
-  * user-cardinality-sized). Replay safety: a replayed batch reads state
+  * ([[StreamState.latest]]). Replay safety: a replayed batch reads state
   * EXCLUDING its own batch_id directory and overwrites it — exactly-once
-  * from at-least-once, the [[IncrementalIngest]] discipline.
+  * from at-least-once, the [[StreamState]] discipline.
   */
 object FunnelStream {
 
   /** Drain `sourcePath` with AvailableNow, folding each micro-batch into
-    * the standing funnel state. Returns the number of micro-batches. */
+    * the standing funnel state. Returns the number of micro-batches
+    * ([[StreamState.drain]]). */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, userCol: String, tsCol: String,
                       typeCol: String, steps: Seq[String],
@@ -52,20 +51,12 @@ object FunnelStream {
     // stream to reject exactly the windows the batch recompute rejects
     require(maxStepGapSec.forall(_ > 0) && maxTotalSec.forall(_ > 0),
       "conversion windows must be positive")
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, userCol, tsCol, typeCol, steps,
           statePath, maxStepGapSec, maxTotalSec)
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
+    })
   }
 
   private def stepCols(steps: Seq[String]): Seq[String] =
@@ -80,8 +71,8 @@ object FunnelStream {
     val cols = stepCols(steps)
     val stateSchema = StructType(
       batch.schema(userCol) +: cols.map(c => StructField(c, TimestampType)))
-    val standing = readResolved(session, statePath, excludeBatch = batchId,
-      userCol, stateSchema)
+    val standing = StreamState.latest(StreamState.read(session,
+      s"$statePath/delta", batchId, stateSchema), Seq(userCol))
     // ONE aggregation of the batch side: each user's events as a
     // ts-sorted array, so the chained-MIN fold runs as per-row column
     // expressions over (sorted events × standing step times) — a
@@ -90,7 +81,11 @@ object FunnelStream {
     // earliest qualifying event after the just-updated previous step"
     // is the FIRST qualifying element of the ts-sorted array; ties in
     // ts carry the same ts value either way)
+    // only events that can complete a step ride the array: `qualifies`
+    // rejects a non-step type or a null ts anyway, and a hot user's
+    // array is bounded by its funnel events, not all of its traffic
     val evs = batch
+      .filter(col(typeCol).isin(steps: _*) && col(tsCol).isNotNull)
       .select(user, struct(col(tsCol).as("_ts"), col(typeCol).as("_tp"))
         .as("_e"))
       .groupBy(user).agg(array_sort(collect_list(col("_e"))).as("_evs"))
@@ -124,106 +119,27 @@ object FunnelStream {
         acc.withColumn(cur, coalesce(col(cur), firstQualifying))
     }
     // users whose events never opened the funnel carry no information
-    folded.filter(col(cols.head).isNotNull)
-      .select(user +: cols.map(col): _*)
-      .write.mode("overwrite")
-      .parquet(s"$statePath/delta/batch_id=$batchId")
-  }
-
-  /** The standing per-user state: each user's row from the latest batch
-    * that touched them (the compacted base rides as batch −1). Pass
-    * `Long.MinValue` to read everything — NOT −1, which would exclude
-    * the base; a folding batch passes its own id so a replay never
-    * reads its previous attempt. */
-  private def readResolved(spark: SparkSession, statePath: String,
-                           excludeBatch: Long, userCol: String,
-                           empty: StructType): DataFrame = {
-    require(excludeBatch != -1L,
-      "readResolved: -1 is the compacted base; pass Long.MinValue to " +
-        "read everything")
-    val all = StreamState.readExcludingKeepBatchId(spark,
-      s"$statePath/delta", excludeBatch, empty)
-    if (!all.columns.contains("batch_id")) all // empty fallback
-    else {
-      val valueCols = empty.fieldNames.filterNot(_ == userCol)
-      all.groupBy(col(userCol))
-        .agg(max_by(struct(valueCols.map(col): _*), col("batch_id"))
-          .as("_s"))
-        .select(col(userCol) +: valueCols.map(c => col(s"_s.$c")): _*)
-    }
+    StreamState.writeBatch(folded.filter(col(cols.head).isNotNull)
+      .select(user +: cols.map(col): _*), s"$statePath/delta", batchId)
   }
 
   /** The standing per-user funnel times (all committed batches,
-    * including a compacted base). */
+    * including a compacted base): each user's row from the latest batch
+    * that touched them. */
   def currentTimes(spark: SparkSession, statePath: String, userCol: String,
                    steps: Seq[String],
                    userField: StructField): DataFrame =
-    readResolved(spark, statePath, excludeBatch = Long.MinValue, userCol,
-      StructType(userField +:
-        stepCols(steps).map(c => StructField(c, TimestampType))))
+    StreamState.latest(StreamState.read(spark, s"$statePath/delta",
+      Long.MinValue, StructType(userField +:
+        stepCols(steps).map(c => StructField(c, TimestampType)))),
+      Seq(userCol))
 
   /** Fold the per-batch delta directories into one bounded
-    * `batch_id=-1` base — the [[IncrementalIngest.compact]] swap
-    * discipline, but RESOLVING while absorbing: a user touched by
-    * several absorbed batches keeps only the latest row (plain row
-    * union would hand `max_by` two rows with no batch order left). The
-    * base carries batch_id -1, so later deltas still override it at
-    * read time, and the newest batch stays un-absorbed (it may be an
-    * uncommitted replay candidate — same reasoning as the other
-    * runners; the fold is idempotent, so even that absorption would be
-    * benign, but the shared discipline stays uniform). */
-  def compact(spark: SparkSession, statePath: String, userCol: String,
-              numFiles: Int = 1): Unit = {
-    val path = s"$statePath/delta"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val idDirs = fs.listStatus(p)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("batch_id=") &&
-        s.getPath.getName != "batch_id=-1")
-      .map(s => s.getPath.getName.stripPrefix("batch_id=").toLong ->
-        s.getPath)
-      .sortBy(_._1)
-    val prior = new org.apache.hadoop.fs.Path(p, "batch_id=-1")
-    val retired = new org.apache.hadoop.fs.Path(path + "_retired")
-    // self-heal a crash between the two swap renames below: the retired
-    // base still exists and the new one never landed — restore it (the
-    // absorbed dirs were not yet deleted, so the answer is intact)
-    if (!fs.exists(prior) && fs.exists(retired))
-      require(fs.rename(retired, prior),
-        s"FunnelStream.compact: could not restore $retired to $prior")
-    val absorb = idDirs.dropRight(1) // newest stays, as everywhere
-    if (absorb.isEmpty) return
-    val keptNewest = idDirs.last._1
-    // resolve while absorbing through the same reader the fold uses:
-    // the partition-discovered batch_id already orders the base (-1)
-    // below every absorbed id, and a user touched by several absorbed
-    // batches must keep only the latest row (a plain row union would
-    // hand max_by two rows with no batch order left)
-    val schema = StructType(
-      spark.read.parquet(absorb.head._2.toString).schema.fields.toSeq)
-    val resolved = readResolved(spark, statePath,
-        excludeBatch = keptNewest, userCol, schema)
-      .coalesce(numFiles)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compacting")
-    resolved.write.mode("overwrite").parquet(tmp.toString)
-    // swap, never leaving the tree without a readable base: retire the
-    // old base, land the new one, and only then drop retired + absorbed.
-    // Hadoop rename reports failure by RETURNING false — unchecked, a
-    // failed landing would delete the absorbed dirs and lose state.
-    if (fs.exists(retired)) fs.delete(retired, true)
-    if (fs.exists(prior))
-      require(fs.rename(prior, retired),
-        s"FunnelStream.compact: could not retire $prior")
-    if (!fs.rename(tmp, prior)) {
-      if (fs.exists(retired)) fs.rename(retired, prior) // roll back
-      throw new java.io.IOException(
-        s"FunnelStream.compact: could not publish $tmp to $prior")
-    }
-    fs.delete(retired, true)
-    absorb.foreach { case (_, dir) => fs.delete(dir, true) }
-  }
+    * `batch_id=-1` base, resolving while absorbing: a user touched by
+    * several folded batches keeps only the latest row, and later deltas
+    * still override the base at read time. */
+  def compact(spark: SparkSession, statePath: String, userCol: String): Unit =
+    StreamState.compact(spark, s"$statePath/delta", Seq(userCol))
 
   /** The standing funnel report — [[Funnels.funnel]]'s shape from the
     * maintained state instead of a full-log recompute. */

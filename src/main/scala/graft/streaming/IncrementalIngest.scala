@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming restatement of the reference's incremental extract
@@ -27,87 +25,25 @@ object IncrementalIngest {
     * At scale: the history table holds only ids (narrow), so the anti-join
     * broadcasts while the history fits and shuffle-joins beyond that; the
     * data path appends partition-parallel with no wide transform. Run
-    * [[compact]] periodically to keep the per-batch file sets bounded.
+    * [[StreamState.compact]] on sink and history together (the same
+    * committed batch set) to keep the per-batch file sets bounded.
     */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, sinkPath: String,
-                      historyPath: String, checkpointPath: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(sourcePath)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
-        val history: DataFrame =
-          if (tableExists(session, historyPath))
-            session.read.parquet(historyPath)
-              // a replayed batch must not anti-join against its own
-              // previous attempt's ids, or the overwrite would empty it
-              .filter(col("batch_id") =!= batchId)
-          else session.createDataFrame(
-            session.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(batch.schema.filter(_.name == idCol)))
-        val fresh = batch
-          .dropDuplicates(idCol)
-          .join(history.select(idCol), Seq(idCol), "left_anti")
-          .cache()
-        try {
-          fresh.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-          fresh.select(idCol).write.mode("overwrite")
-            .parquet(s"$historyPath/batch_id=$batchId")
-        } finally fresh.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Compact a batch-partitioned table (sink or history) into one bounded
-    * file set under `batch_id=-1`, removing the per-batch directories it
-    * absorbed. Keeps the per-batch read cost and file count flat across
-    * arbitrarily many ingest runs.
-    *
-    * The HIGHEST batch_id directory is never absorbed: if the last batch
-    * wrote sink+history but crashed before its checkpoint committed, the
-    * replay recomputes `fresh` by anti-joining history EXCLUDING its own
-    * batch directory — were that directory's ids already folded into
-    * `batch_id=-1`, the replay would see them as "already extracted",
-    * compute an empty `fresh`, and overwrite the batch directory with
-    * nothing: permanent row loss. Leaving the newest batch in place makes
-    * compaction safe at ANY point between runs, crashed or committed.
-    * Compact sink and history together (same committed batch set) so the
-    * two stay mutually consistent. */
-  def compact(spark: SparkSession, path: String, numFiles: Int = 1): Unit = {
-    if (!tableExists(spark, path)) return
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idDirs = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
-        s.getPath.getName != "batch_id=-1")  // prior compaction: replaced via target swap
-      .map(s => s.getPath.getName.stripPrefix("batch_id=").toLong -> s.getPath)
-      .sortBy(_._1)
-    if (idDirs.isEmpty) return
-    // the newest batch may be an uncommitted replay candidate — keep it
-    val absorb = idDirs.dropRight(1).map(_._2)
-    if (absorb.isEmpty) return
-    val prior = new org.apache.hadoop.fs.Path(p, "batch_id=-1")
-    val sources = (if (fs.exists(prior)) Seq(prior) else Nil) ++ absorb
-    val tmp = new org.apache.hadoop.fs.Path(path + "_compacting")
-    // read the absorbed directories directly (no partition column appears;
-    // the compacted set is batch-agnostic by construction)
-    spark.read.parquet(sources.map(_.toString): _*).coalesce(numFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // swap: new compacted snapshot in, absorbed per-batch dirs out
-    if (fs.exists(prior)) fs.delete(prior, true)
-    fs.rename(tmp, prior)
-    absorb.foreach(fs.delete(_, true))
-  }
-
-  private def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.getPath.getName.startsWith("batch_id=") ||
-        s.getPath.getName.endsWith(".parquet"))
-  }
+                      historyPath: String, checkpointPath: String): Long =
+    StreamState.drain(spark.readStream.schema(schema).parquet(sourcePath),
+        checkpointPath)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      // a replayed batch must not anti-join against its own previous
+      // attempt's ids, or the overwrite would empty it
+      val history = StreamState.readExcluding(batch.sparkSession,
+        historyPath, batchId, StructType(batch.schema.filter(_.name == idCol)))
+      val fresh = batch
+        .dropDuplicates(idCol)
+        .join(history.select(idCol), Seq(idCol), "left_anti")
+        .cache()
+      try {
+        StreamState.writeBatch(fresh, sinkPath, batchId)
+        StreamState.writeBatch(fresh.select(idCol), historyPath, batchId)
+      } finally fresh.unpersist()
+    })
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Scd2
@@ -44,7 +43,7 @@ import graft.operators.Scd2
   * so a replayed batch (failure between state write and checkpoint commit)
   * re-reads its original input state and overwrites its own delta + its
   * own manifest — exactly-once output from at-least-once delivery, the
-  * [[IncrementalIngest]] discipline. Superseded bucket versions accumulate
+  * [[StreamState]] discipline. Superseded bucket versions accumulate
   * until [[compact]] folds them into the `batch_id=-1` base.
   *
   * Ordering contract (same as [[Scd2.merge]]): a batch's events must be
@@ -113,22 +112,14 @@ object Scd2Stream {
                       nBuckets: Int = Adaptive,
                       targetRowsPerBucket: Long = TargetRowsPerBucket,
                       opCol: Option[String] = None,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val query = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, keyCols, tsCol, attrCols, tieCols,
           statePath, nBuckets, targetRowsPerBucket, opCol)
         ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
-  }
+    })
 
   /** Streaming fact ENRICHMENT against the evolving dimension — the
     * warehouse fact-loader loop: each micro-batch first folds into the
@@ -157,12 +148,10 @@ object Scd2Stream {
                             bucketSeconds: Long = 86400L,
                             nBuckets: Int = Adaptive,
                             targetRowsPerBucket: Long = TargetRowsPerBucket,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val query = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val affected = foldBatch(batch, batchId, keyCols, tsCol, attrCols,
           tieCols, statePath, nBuckets, targetRowsPerBucket, None)
@@ -180,19 +169,12 @@ object Scd2Stream {
           (keyCols.map(col) :+ col("valid_from") :+ col("valid_to") :+
             col("version")) ++
             attrCols.map(a => col(a).as(s"${a}_at_time")): _*)
-        Scd2.pointInTime(batch.select(factCols.map(col): _*), dim,
+        StreamState.writeBatch(
+          Scd2.pointInTime(batch.select(factCols.map(col): _*), dim,
             keyCols, tsCol, bucketSeconds,
-            dimCols = attrCols.map(a => s"${a}_at_time"))
-          .write.mode("overwrite")
-          .parquet(s"$statePath/enriched/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
-  }
+            dimCols = attrCols.map(a => s"${a}_at_time")),
+          s"$statePath/enriched", batchId)
+    })
 
   /** Merge one micro-batch into the bucketed snapshot: read ONLY the
     * affected buckets' current versions, re-compact them with the batch,
@@ -305,7 +287,7 @@ object Scd2Stream {
 
   /** Fold every bucket version SUPERSEDED before the newest batch into
     * the `batch_id=-1` base and drop the absorbed delta directories and
-    * stale manifests — the [[IncrementalIngest.compact]] analog. Bounds
+    * stale manifests — the [[StreamState.compact]] analog. Bounds
     * the snapshot chain's file count across arbitrarily many batches.
     *
     * The NEWEST batch's delta and manifest are never absorbed: if that
@@ -314,7 +296,7 @@ object Scd2Stream {
     * prior manifest to point into the base, so the replay reads the
     * identical rows from the folded location and overwrites its own
     * delta. Run between drains (not concurrently with one) — same
-    * offline contract as [[IncrementalIngest.compact]].
+    * offline contract as [[StreamState.compact]].
     *
     * Crash-recoverable swap: the new base is written to `_compacting`,
     * the old base is renamed ASIDE (`.base_old`) — never deleted while

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.functions.Dedup
@@ -19,7 +18,7 @@ import graft.multimodal.AudioSamples
   * same bipartite 8×8-bit chunk-pigeonhole join (exact for hamming ≤ 7,
   * never all-pairs); undecodable payloads are accepted but never
   * indexed (the telemetry keep path); state is batch_id-keyed with the
-  * [[IncrementalIngest]] overwrite discipline (replay-safe, and
+  * [[StreamState]] overwrite discipline (replay-safe, and
   * [[compact]]-able to a bounded base). */
 object StreamAudioDedup {
 
@@ -32,11 +31,9 @@ object StreamAudioDedup {
                       maxFilesPerTrigger: Option[Int] = None): Long = {
     require(maxDist >= 0 && maxDist < 8,
       s"maxDist must be in [0, 8) for the 8x8-bit chunk grid, got $maxDist")
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val hashes = AudioSamples
           .audioHashFrameAny(batch, idCol, payloadCol)
@@ -54,26 +51,17 @@ object StreamAudioDedup {
           .select(batch.columns.map(col): _*)
           .cache()
         try {
-          accepted.write.mode("overwrite")
-            .parquet(s"$statePath/accepted/batch_id=$batchId")
-          hashes.filter(col("ahash").isNotNull)
-            .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$statePath/hashes/batch_id=$batchId")
+          StreamState.writeBatch(accepted, s"$statePath/accepted", batchId)
+          StreamState.writeBatch(hashes.filter(col("ahash").isNotNull)
+            .join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+            s"$statePath/hashes", batchId)
         } finally accepted.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
+    })
   }
 
   /** Fold old per-batch state dirs into a bounded base — the
     * [[StreamNearDup.compact]] discipline, both tables together. */
-  def compact(spark: SparkSession, statePath: String,
-              numFiles: Int = 1): Unit =
+  def compact(spark: SparkSession, statePath: String): Unit =
     Seq("accepted", "hashes").foreach(d =>
-      IncrementalIngest.compact(spark, s"$statePath/$d", numFiles))
+      StreamState.compact(spark, s"$statePath/$d"))
 }

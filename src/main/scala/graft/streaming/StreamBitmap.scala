@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming EXACT distinct-count maintenance —
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * only TOUCHED buckets ever materialize.
   *
   * Emission is one row per UPDATED (group, bucket) per batch,
-  * batch_id-keyed with the [[IncrementalIngest]] overwrite discipline;
+  * batch_id-keyed with the [[StreamState]] overwrite discipline;
   * a word is a pure set function of everything ingested, so the
   * standing words are IDENTICAL to a one-shot batch
   * [[graft.functions.Bitmap.bitmaps]] — the q258 gate invariant. */
@@ -28,7 +28,7 @@ object StreamBitmap {
                       schema: StructType, groupCol: String,
                       valueCol: String, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     val cells = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
       .select(col(groupCol).cast("string").as("g"),
@@ -54,26 +54,13 @@ object StreamBitmap {
           Iterator.single((key._1, key._2, bits))
       }
       .toDF("g", "bucket", "bits")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The standing words: each (group, bucket)'s newest batch row —
     * shaped like [[graft.functions.Bitmap.bitmaps]] output. */
-  def currentBitmap(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val latest = sink.groupBy(col("g").as("_lg"), col("bucket").as("_lb"))
-      .agg(max(col("batch_id")).as("_lbid"))
-    sink.join(latest, col("g") === col("_lg") &&
-        col("bucket") === col("_lb") && col("batch_id") === col("_lbid"))
-      .select(col("g"), col("bucket"), col("bits"))
-  }
+  def currentBitmap(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("g", "bucket"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming churn monitor — [[graft.operators.SnapshotDiff.columnChurn]]
@@ -13,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * Shape: each micro-batch classifies its rows against the STATIC old
   * snapshot's fingerprints (a stream-static join — the old side never
   * re-scans per row, only per batch) and appends one increment row per
-  * metric, batch_id-keyed with the [[IncrementalIngest]] overwrite
+  * metric, batch_id-keyed with the [[StreamState]] overwrite
   * discipline. Snapshot semantics make every id arrive ONCE, so the
   * increments are disjoint and the standing report is a pure SUM over
   * batches — no keyed state at all, the cheapest possible monitor
@@ -38,10 +37,10 @@ object StreamChurn {
                       schema: StructType, oldFps: DataFrame, idCol: String,
                       compareCols: Seq[String], sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val fresh = batch.select(col(idCol).as("_id") +:
           compareCols.map(c => md5(col(c).cast("string")).as(s"_nfp_$c")): _*)
         val j = fresh.join(
@@ -61,18 +60,11 @@ object StreamChurn {
               cnt(ch).as(s"changed:$c")
             }: _*)
         val metrics = agg.columns
-        agg.select(explode(array(metrics.map(m =>
+        StreamState.writeBatch(agg.select(explode(array(metrics.map(m =>
             struct(lit(m).as("metric"), col(s"`$m`").as("n")))
             .toIndexedSeq: _*)).as("kv"))
-          .select(col("kv.metric"), col("kv.n"))
-          .write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+          .select(col("kv.metric"), col("kv.n")), sinkPath, batchId)
+    })
 
   /** The standing report: increments summed across batches, plus the
     * derived `removed` row (`nOld` is the old snapshot's row count —

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** STREAMING connected-components maintenance — the dedup-cluster
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * union commutes.
   *
   * Components are a GLOBAL iterative computation, so the state lives
-  * in the sink (the [[IncrementalIngest]] batch_id discipline), not in
+  * in the sink (the [[StreamState]] batch_id discipline), not in
   * a keyed state store: `foreachBatch` reads the standing assignment
   * EXCLUDING its own batch directory (replay-safe), folds, and
   * overwrites `batch_id=N` with the DELTA — ids that are new or whose
@@ -25,9 +24,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * forest already encodes them); cluster-merging edges relabel exactly
   * the members of the losing clusters, so per-wave write volume is
   * bounded by the churn, not the standing table. Serving reads
-  * latest-row-per-id ([[currentAssignment]]); run
-  * [[IncrementalIngest.compact]]-style maintenance via
-  * [[StreamSinkCompact]] to keep the per-batch directory count flat.
+  * latest-row-per-id ([[currentAssignment]]); `StreamState.compact`
+  * keyed on `id` keeps the per-batch directory count flat.
   */
 object StreamComponents {
 
@@ -39,50 +37,29 @@ object StreamComponents {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, aCol: String, bCol: String,
                       sinkPath: String, checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         // a replayed batch must fold against the assignment as it
         // stood BEFORE its first attempt, or the delta would be empty
         // and the overwrite would lose the wave's relabels
-        val standing = assignmentExcluding(session, sinkPath, batchId)
+        val standing = StreamState.latest(StreamState.read(
+          batch.sparkSession, sinkPath, batchId, assignmentSchema), Seq("id"))
         val next = graft.operators.Components
           .maintainClusters(standing, batch, aCol, bCol)
         val prev = standing.select(col("id").as("_pid"),
           col("cluster_id").as("_pcid"))
-        val delta = next.join(prev, col("id") === col("_pid"), "left")
-          .filter(col("_pid").isNull || col("cluster_id") =!= col("_pcid"))
-          .select(col("id"), col("cluster_id"))
-        delta.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+        StreamState.writeBatch(
+          next.join(prev, col("id") === col("_pid"), "left")
+            .filter(col("_pid").isNull || col("cluster_id") =!= col("_pcid"))
+            .select(col("id"), col("cluster_id")),
+          sinkPath, batchId)
+    })
 
-  /** The standing assignment: each id's newest delta row. `batch_id`
-    * is unique per id within a batch, so max_by is deterministic (the
-    * compacted `batch_id=-1` snapshot sorts below every live batch). */
+  /** The standing assignment: each id's newest delta row (one row per id
+    * per batch; the compacted `batch_id=-1` snapshot sorts below every
+    * live batch). */
   def currentAssignment(spark: SparkSession, sinkPath: String): DataFrame =
-    assignmentFrom(spark.read.parquet(sinkPath))
-
-  private def assignmentExcluding(spark: SparkSession, sinkPath: String,
-                                  batchId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(sinkPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        assignmentSchema)
-    else
-      assignmentFrom(spark.read.parquet(sinkPath)
-        .filter(col("batch_id") =!= batchId))
-  }
-
-  private def assignmentFrom(sink: DataFrame): DataFrame =
-    sink.groupBy(col("id"))
-      .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("id"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Contamination
@@ -27,7 +26,7 @@ import graft.functions.Contamination
   * q295 gate asserts this against the batch operator.
   *
   * State layout under `statePath` (batch_id-keyed overwrites, the
-  * [[IncrementalIngest]] replay-safe discipline):
+  * [[StreamState]] replay-safe discipline):
   * `bench_shingles/` (seeded once), `admitted/batch_id=N/`,
   * `quarantined/batch_id=N/`, `reports/batch_id=N/`. */
 object StreamContamination {
@@ -48,12 +47,10 @@ object StreamContamination {
                       schema: StructType, idCol: String, textCol: String,
                       statePath: String, checkpointPath: String,
                       n: Int = 8, maxFrac: Double = 0.0,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val bench = session.read.parquet(s"$statePath/bench_shingles")
         val report = Contamination.overlapReportFromShingles(
@@ -62,28 +59,17 @@ object StreamContamination {
         val dirty = report.filter(col("contam_frac") > maxFrac)
           .select(col(idCol))
         val cols = batch.columns.map(col).toSeq
-        batch.join(dirty, Seq(idCol), "left_anti").select(cols: _*)
-          .write.mode("overwrite")
-          .parquet(s"$statePath/admitted/batch_id=$batchId")
-        batch.join(dirty, Seq(idCol), "left_semi").select(cols: _*)
-          .write.mode("overwrite")
-          .parquet(s"$statePath/quarantined/batch_id=$batchId")
-        report.write.mode("overwrite")
-          .parquet(s"$statePath/reports/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
-  }
+        StreamState.writeBatch(batch.join(dirty, Seq(idCol), "left_anti").select(cols: _*),
+          s"$statePath/admitted", batchId)
+        StreamState.writeBatch(batch.join(dirty, Seq(idCol), "left_semi").select(cols: _*),
+          s"$statePath/quarantined", batchId)
+        StreamState.writeBatch(report, s"$statePath/reports", batchId)
+    })
 
   /** Fold old per-batch dirs into a bounded base — the
     * [[StreamImageDedup.compact]] discipline across all three
     * tables. */
-  def compact(spark: SparkSession, statePath: String,
-              numFiles: Int = 1): Unit =
+  def compact(spark: SparkSession, statePath: String): Unit =
     Seq("admitted", "quarantined", "reports").foreach(d =>
-      IncrementalIngest.compact(spark, s"$statePath/$d", numFiles))
+      StreamState.compact(spark, s"$statePath/$d"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming CUSUM monitor: [[graft.operators.SortedFold.cusum]]'s
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * honors): waves are day-ordered and a calendar day never spans two
   * batches — a split day would fold as two partial counts. Emission is
   * one row per (key, day) — gap days included — written batch_id-keyed
-  * with the [[IncrementalIngest]] overwrite discipline (replay
+  * with the [[StreamState]] overwrite discipline (replay
   * recomputes identical rows); each (key, day) is emitted exactly once
   * across batches by construction.
   */
@@ -34,7 +34,7 @@ object StreamCusum {
                       schema: StructType, keyCol: String, dayCol: String,
                       drift: Long, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
       .select(col(keyCol).cast("long").as("k"),
@@ -73,16 +73,9 @@ object StreamCusum {
           }
       }
       .toDF("k", "day", "x", "cusum")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The monitor's full emitted series: every (k, day, x, cusum) row

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming drift monitor: the per-category counts of a continuously-
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * over the same rows, which is how the gate states its invariant
   * (q210's audit must hash-equal the batch q207 audit). Emission is one
   * row per UPDATED category per batch, written batch_id-keyed with the
-  * [[IncrementalIngest]] overwrite discipline — a replayed batch
+  * [[StreamState]] overwrite discipline — a replayed batch
   * recomputes identical rows, so restarts never double-count.
   */
 object StreamDrift {
@@ -32,7 +32,7 @@ object StreamDrift {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, catCol: String,
                       sinkPath: String, checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
       .select(col(catCol).cast("string").as("c")).as[String]
@@ -45,27 +45,14 @@ object StreamDrift {
           Iterator.single((cat, n))
       }
       .toDF("category", "cur_n")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The monitor's current counts: each category's row from its LATEST
     * batch (counts are cumulative, so the newest row is the state).
     * Null-safe on the category — the null group keeps its count. */
-  def currentCounts(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val latest = sink.groupBy(col("category").as("_lc"))
-      .agg(max(col("batch_id")).as("_lb"))
-    sink.join(latest,
-        col("category") <=> col("_lc") && col("batch_id") === col("_lb"))
-      .select(col("category"), col("cur_n"))
-  }
+  def currentCounts(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("category"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import graft.functions.FuzzyDedup
@@ -18,7 +17,7 @@ import graft.functions.FuzzyDedup
   * rows plus one equi-join against stored narrow (id, hash) state.
   *
   * State layout under `statePath` (batch_id-keyed for exactly-once, the
-  * [[IncrementalIngest]] overwrite discipline):
+  * [[StreamState]] overwrite discipline):
   *   - `accepted/batch_id=N/` — accepted input rows (the sink);
   *   - `variants/batch_id=N/` — (id, h) deletion-variant hashes;
   *   - `names/batch_id=N/`    — (id, t) key strings, the verification
@@ -50,11 +49,9 @@ object StreamFuzzyDedup {
                       maxFilesPerTrigger: Option[Int] = None): Long = {
     require(maxDist == 1 || maxDist == 2,
       "StreamFuzzyDedup: maxDist must be 1 or 2")
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val base = batch
           .select(col(idCol), col(textCol).cast("string").as("_graft_t"))
@@ -103,36 +100,28 @@ object StreamFuzzyDedup {
             // the accepted write materializes the cache; the two index
             // writes then only re-read it and are independent of each
             // other — overlap them (guide §2.6)
-            accepted.write.mode("overwrite")
-              .parquet(s"$statePath/accepted/batch_id=$batchId")
+            StreamState.writeBatch(accepted, s"$statePath/accepted", batchId)
             graft.operators.Concurrent.inParallel(
-              base.select(col(idCol), col("_graft_t"))
-                .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-                .write.mode("overwrite")
-                .parquet(s"$statePath/names/batch_id=$batchId"),
-              bv.join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-                .write.mode("overwrite")
-                .parquet(s"$statePath/variants/batch_id=$batchId"))
+              StreamState.writeBatch(base.select(col(idCol), col("_graft_t"))
+                .join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+                s"$statePath/names", batchId),
+              StreamState.writeBatch(
+                bv.join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+                s"$statePath/variants", batchId))
           } finally accepted.unpersist()
         } finally bv.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
+    })
   }
 
   /** Fold the standing index's per-batch directories into one bounded
-    * `batch_id=-1` base per state table — the [[IncrementalIngest.compact]]
+    * `batch_id=-1` base per state table — the [[StreamState.compact]]
     * discipline, applied to all three tables together so they keep the
     * same committed batch set. Run between drains. The newest batch stays
     * un-absorbed: a replayed batch excludes its own directories when
     * probing, and folding them into the base would make the replay see
     * its own prior output as standing corpus and drop its own rows. */
-  def compact(spark: SparkSession, statePath: String,
-              numFiles: Int = 1): Unit =
+  def compact(spark: SparkSession, statePath: String): Unit =
     Seq("accepted", "names", "variants").foreach(d =>
-      IncrementalIngest.compact(spark, s"$statePath/$d", numFiles))
+      StreamState.compact(spark, s"$statePath/$d"))
 }

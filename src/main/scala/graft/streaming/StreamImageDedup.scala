@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.functions.Dedup
@@ -26,7 +25,7 @@ import graft.multimodal.ImagePixels
   * hash it can neither match nor be matched.
   *
   * State layout under `statePath` (batch_id-keyed, the
-  * [[IncrementalIngest]] overwrite discipline — replay-safe):
+  * [[StreamState]] overwrite discipline — replay-safe):
   * `accepted/batch_id=N/` (accepted input rows) and
   * `hashes/batch_id=N/` (media_id, dhash of accepted DECODABLE rows).
   * Within-batch pairs are deliberately not compared (the probe
@@ -42,11 +41,9 @@ object StreamImageDedup {
                       maxFilesPerTrigger: Option[Int] = None): Long = {
     require(maxDist >= 0 && maxDist < 8,
       s"maxDist must be in [0, 8) for the 8x8-bit chunk grid, got $maxDist")
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val hashes = ImagePixels.dhashFrame(batch, idCol, payloadCol)
           .select(col(idCol), col("dhash"))
@@ -63,26 +60,17 @@ object StreamImageDedup {
           .select(batch.columns.map(col): _*)
           .cache()
         try {
-          accepted.write.mode("overwrite")
-            .parquet(s"$statePath/accepted/batch_id=$batchId")
-          hashes.filter(col("dhash").isNotNull)
-            .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-            .write.mode("overwrite")
-            .parquet(s"$statePath/hashes/batch_id=$batchId")
+          StreamState.writeBatch(accepted, s"$statePath/accepted", batchId)
+          StreamState.writeBatch(hashes.filter(col("dhash").isNotNull)
+            .join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+            s"$statePath/hashes", batchId)
         } finally accepted.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
+    })
   }
 
   /** Fold old per-batch state dirs into a bounded base — the
     * [[StreamNearDup.compact]] discipline, both tables together. */
-  def compact(spark: SparkSession, statePath: String,
-              numFiles: Int = 1): Unit =
+  def compact(spark: SparkSession, statePath: String): Unit =
     Seq("accepted", "hashes").foreach(d =>
-      IncrementalIngest.compact(spark, s"$statePath/$d", numFiles))
+      StreamState.compact(spark, s"$statePath/$d"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** NATIVE watermarked stream-stream interval join — the streaming
@@ -45,7 +44,8 @@ object StreamIntervalJoin {
   /** Drain both landing dirs with Trigger.AvailableNow, appending
     * matched `(a_id, b_id, user_id)` rows to `outDir`. Schemas:
     * `aDir` parquet = (a_id, user_id, a_start), `bDir` parquet =
-    * (b_id, b_user_id, b_start). Returns micro-batches that saw rows.
+    * (b_id, b_user_id, b_start). Returns the micro-batch count
+    * ([[StreamState.drain]]).
     *
     * `statePartitions` sizes the join's state layout (a stream-stream
     * join carries FOUR state stores per partition per side, so partition
@@ -59,7 +59,7 @@ object StreamIntervalJoin {
                       aSchema: StructType, bSchema: StructType,
                       aLenSec: Long, bLenSec: Long, delay: String,
                       outDir: String, checkpointPath: String,
-                      statePartitions: Option[Int] = None,
+                      statePartitions: Int = 4,
                       joinType: String = "inner",
                       maxFilesPerTrigger: Option[Int] = None): Long = {
     val a = StreamWaves.reader(spark, aSchema, aDir, maxFilesPerTrigger)
@@ -72,19 +72,7 @@ object StreamIntervalJoin {
         col("b_start") <= col("a_start") + expr(s"INTERVAL $aLenSec SECONDS"),
       joinType)
       .select(col("a_id"), col("b_id"), col("user_id"))
-    def go(): Long = {
-      val query = joined.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      query.recentProgress.count(_.numInputRows > 0)
-    }
-    statePartitions match {
-      case Some(n) => StreamState.withStatePartitions(spark, n)(go())
-      case None => go()
-    }
+    StreamState.drain(joined, checkpointPath, statePartitions)(
+      _.format("parquet").option("path", outDir))
   }
 }

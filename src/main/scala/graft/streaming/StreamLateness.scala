@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming lateness monitor:
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   * wave's arrival ids all exceed the previous wave's — the append-log
   * shape), enforced loudly per key. Emission is one standing-audit row
   * per touched key per batch, batch_id-keyed with the
-  * [[IncrementalIngest]] overwrite discipline; the newest row per key
+  * [[StreamState]] overwrite discipline; the newest row per key
   * IS the state, and once the stream drains it must equal the batch
   * audit row for row — the q247 gate invariant.
   */
@@ -38,7 +38,7 @@ object StreamLateness {
                       schema: StructType, keyCol: String, arrivalCol: String,
                       tsMicrosCol: String, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
       .select(col(keyCol).cast("long").as("k"),
@@ -76,26 +76,14 @@ object StreamLateness {
           }
       }
       .toDF("k", "last_arrival", "n", "n_late", "max_late_us")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The standing audit: each key's newest batch row (state is
     * cumulative), shaped like the batch operator's output. */
-  def currentAudit(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val latest = sink.groupBy(col("k").as("_lk"))
-      .agg(max(col("batch_id")).as("_lb"))
-    sink.join(latest,
-        col("k") === col("_lk") && col("batch_id") === col("_lb"))
+  def currentAudit(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("k"))
       .select(col("k"), col("n"), col("n_late"), col("max_late_us"))
-  }
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField,
+  StructType}
 
 import graft.functions.Dedup
 
@@ -18,7 +18,7 @@ import graft.functions.Dedup
   * the index side precomputed once per doc instead of per wave).
   *
   * State layout under `statePath` (all batch_id-keyed for exactly-once,
-  * the [[IncrementalIngest]] overwrite discipline):
+  * the [[StreamState]] overwrite discipline):
   *   - `accepted/batch_id=N/` — accepted input rows (the sink);
   *   - `bands/batch_id=N/`    — (id, band_idx, band_sig, size_band) of
   *     accepted docs; `size_band` is the geometric shingle-count band
@@ -62,11 +62,9 @@ object StreamNearDup {
                       maxBucket: Int = 1 << 16,
                       maxFilesPerTrigger: Option[Int] = None): Long = {
     val rowsPerBand = numHashes / bands
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nBatches.incrementAndGet()
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         // one persisted frame carries shingles + signature (the
         // minhashNearDups cache discipline — wide rows, columnar persist)
@@ -81,24 +79,15 @@ object StreamNearDup {
           val batchBands = Dedup.lshBands(
             signed.select(col(idCol), col("size_band"), col("sig")), idCol,
             "sig", bands, rowsPerBand, carry = Seq("size_band"))
-          val standingBands = readState(session, s"$statePath/bands", batchId,
-            StructType(Seq(
-              batch.schema(idCol),
-              org.apache.spark.sql.types.StructField("band_idx",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("band_sig",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType)),
-              org.apache.spark.sql.types.StructField("size_band",
-                org.apache.spark.sql.types.IntegerType))), idCol)
-          val standingHs = readState(session, s"$statePath/shingles", batchId,
-            StructType(Seq(
-              batch.schema(idCol),
-              org.apache.spark.sql.types.StructField("hs",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.LongType)),
-              org.apache.spark.sql.types.StructField("n_hs",
-                org.apache.spark.sql.types.IntegerType))), idCol)
+          val standingBands = StreamState.readExcluding(session,
+            s"$statePath/bands", batchId, StructType(Seq(batch.schema(idCol),
+              StructField("band_idx", IntegerType),
+              StructField("band_sig", ArrayType(LongType)),
+              StructField("size_band", IntegerType))))
+          val standingHs = StreamState.readExcluding(session,
+            s"$statePath/shingles", batchId, StructType(Seq(
+              batch.schema(idCol), StructField("hs", ArrayType(LongType)),
+              StructField("n_hs", IntegerType))))
           // bipartite band probe, both sides agg-capped (never a window);
           // the batch side probes its size band ± 1 (exact — a J ≥ t
           // pair's bands differ by ≤ 1), so far-size collisions never
@@ -142,44 +131,31 @@ object StreamNearDup {
             // the accepted write materializes the cache; the two index
             // writes then only re-read it and are independent of each
             // other — overlap them (guide §2.6)
-            accepted.write.mode("overwrite")
-              .parquet(s"$statePath/accepted/batch_id=$batchId")
+            StreamState.writeBatch(accepted, s"$statePath/accepted", batchId)
             graft.operators.Concurrent.inParallel(
-              batchBands
-                .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-                .write.mode("overwrite")
-                .parquet(s"$statePath/bands/batch_id=$batchId"),
-              signed.select(col(idCol), col("hs"), size(col("hs")).as("n_hs"))
-                .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-                .write.mode("overwrite")
-                .parquet(s"$statePath/shingles/batch_id=$batchId"))
+              StreamState.writeBatch(batchBands
+                .join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+                s"$statePath/bands", batchId),
+              StreamState.writeBatch(
+                signed.select(col(idCol), col("hs"), size(col("hs")).as("n_hs"))
+                  .join(accepted.select(col(idCol)), Seq(idCol), "left_semi"),
+                s"$statePath/shingles", batchId))
           } finally accepted.unpersist()
         } finally signed.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    nBatches.get()
+    })
   }
 
   /** Fold the standing index's per-batch directories into one bounded
-    * `batch_id=-1` base per state table — the [[IncrementalIngest.compact]]
-    * discipline, applied to all three tables together so they keep the
+    * `batch_id=-1` base per state table — [[StreamState.compact]],
+    * applied to all three tables together so they keep the
     * same committed batch set. Run between drains. The newest batch stays
     * un-absorbed in each table: a replayed batch excludes its own
     * directories when probing, and folding them into the base would make
     * the replay see its own prior output as standing corpus and drop its
     * own documents. `readExcluding`'s partition-discovery read picks the
     * base up as `batch_id=-1`, which no real batch id equals. */
-  def compact(spark: SparkSession, statePath: String,
-              numFiles: Int = 1): Unit =
+  def compact(spark: SparkSession, statePath: String): Unit =
     Seq("accepted", "bands", "shingles").foreach(d =>
-      IncrementalIngest.compact(spark, s"$statePath/$d", numFiles))
-
-  /** See [[StreamState.readExcluding]] (shared with the other runners). */
-  private def readState(spark: SparkSession, path: String, batchId: Long,
-                        empty: StructType, idCol: String): DataFrame =
-    StreamState.readExcluding(spark, path, batchId, empty)
+      StreamState.compact(spark, s"$statePath/$d"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Sketches
@@ -24,7 +24,7 @@ import graft.functions.Sketches
   * is a value→weight map capped at `capacity`; the standing entries
   * are ENTRY-IDENTICAL to a one-shot batch recompute — the q260 gate
   * invariant. Emission is the full (small) sketch per touched group
-  * per batch, batch_id-keyed with the [[IncrementalIngest]] overwrite
+  * per batch, batch_id-keyed with the [[StreamState]] overwrite
   * discipline. */
 object StreamQuantile {
 
@@ -34,7 +34,7 @@ object StreamQuantile {
                       schema: StructType, groupCol: String,
                       valueCol: String, capacity: Int, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     require(capacity >= 1, "capacity must be positive")
     val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
@@ -71,27 +71,14 @@ object StreamQuantile {
           }
       }
       .toDF("g", "value", "count")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The standing entries: each group's NEWEST batch emission (the
     * full sketch rides every emission, so the latest batch per group
     * is the state). */
-  def currentEntries(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val latest = sink.groupBy(col("g").as("_lg"))
-      .agg(max(col("batch_id")).as("_lb"))
-    sink.join(latest,
-        col("g") === col("_lg") && col("batch_id") === col("_lb"))
-      .select(col("g"), col("value"), col("count"))
-  }
+  def currentEntries(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("g"))
 }

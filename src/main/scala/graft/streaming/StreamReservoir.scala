@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** STREAMING weighted reservoir maintenance — the sampling family's
   * maintenance member: a corpus stream drains through `foreachBatch`,
@@ -18,57 +16,31 @@ import org.apache.spark.sql.types.StructType
   * (the q264 gate invariant), and re-delivered rows are idempotent.
   *
   * Like [[StreamComponents]], the fold needs the whole standing set,
-  * so state lives in the sink under the [[IncrementalIngest]] batch_id
+  * so state lives in the sink under the [[StreamState]] batch_id
   * discipline (k rows per batch — full-rewrite is bounded by k, not
   * the stream), not in a keyed state store; `foreachBatch` reads the
   * standing reservoir EXCLUDING its own batch directory (replay-safe).
-  * Serve with [[currentReservoir]]; [[StreamSinkCompact]] with an
-  * all-rows key bounds the directory count. */
+  * Serve with [[currentReservoir]]. */
 object StreamReservoir {
 
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, keyCol: String,
                       weightCol: String, k: Int, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val query = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
-        val standing = standingExcluding(session, sinkPath, batchId, batch)
-        val next = graft.functions.Sampling.weightedReservoirMaintain(
-          standing, batch, keyCol, weightCol, k)
-        next.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        val standing = StreamState.latest(StreamState.read(
+          batch.sparkSession, sinkPath, batchId,
+          batch.schema.add(StructField("sample_rank", IntegerType))), Nil)
+        StreamState.writeBatch(
+          graft.functions.Sampling.weightedReservoirMaintain(
+            standing, batch, keyCol, weightCol, k),
+          sinkPath, batchId)
+    })
 
   /** The standing reservoir: the newest batch's k rows. */
-  def currentReservoir(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val newest = sink.agg(max(col("batch_id")).as("_nb"))
-    sink.join(broadcast(newest), col("batch_id") === col("_nb"))
-      .drop("batch_id", "_nb")
-  }
-
-  private def standingExcluding(spark: SparkSession, sinkPath: String,
-                                batchId: Long,
-                                like: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(sinkPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val empty = like.limit(0)
-      .withColumn("sample_rank", lit(1).cast("int"))
-    if (!fs.exists(p)) empty
-    else {
-      val prior = spark.read.parquet(sinkPath)
-        .filter(col("batch_id") =!= batchId)
-      val newest = prior.agg(max(col("batch_id")).as("_nb"))
-      prior.join(broadcast(newest), col("batch_id") === col("_nb"))
-        .drop("batch_id", "_nb")
-    }
-  }
+  def currentReservoir(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Nil)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Sketches
@@ -25,7 +25,7 @@ import graft.functions.Sketches
   * item expands to its d cells BEFORE the shuffle, so the per-batch
   * state update is one map-side-combinable count per touched cell.
   * Emission is one row per UPDATED cell per batch, written
-  * batch_id-keyed with the [[IncrementalIngest]] overwrite discipline —
+  * batch_id-keyed with the [[StreamState]] overwrite discipline —
   * a replayed batch recomputes identical rows, so restarts never
   * double-count.
   */
@@ -40,7 +40,7 @@ object StreamSketch {
                       schema: StructType, itemCol: String,
                       sinkPath: String, checkpointPath: String,
                       d: Int = 4, w: Int = 1024,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     require(d >= 1 && w >= 1, s"need d,w >= 1, got d=$d w=$w")
     val cells = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
@@ -60,29 +60,15 @@ object StreamSketch {
           Iterator.single((cell._1, cell._2, n))
       }
       .toDF("depth", "bucket", "c")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 
   /** The monitor's standing grid: each cell's row from its LATEST batch
     * (counts are cumulative, so the newest row is the state). Shape
     * matches [[Sketches.countMinCells]] — feed it straight to
     * [[Sketches.countMinEstimate]] to serve point estimates. */
-  def currentCells(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = spark.read.parquet(sinkPath)
-    val latest = sink.groupBy(col("depth").as("_ld"), col("bucket").as("_lk"))
-      .agg(max(col("batch_id")).as("_lb"))
-    sink.join(latest,
-        col("depth") === col("_ld") && col("bucket") === col("_lk") &&
-          col("batch_id") === col("_lb"))
-      .select(col("depth"), col("bucket"), col("c"))
-  }
+  def currentCells(spark: SparkSession, sinkPath: String): DataFrame =
+    StreamState.latest(spark.read.parquet(sinkPath), Seq("depth", "bucket"))
 }

@@ -1,54 +1,180 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, max}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Shared batch_id-keyed state reads for the foreachBatch incremental
-  * runners ([[StreamNearDup]], [[StreamFuzzyDedup]]): standing state is a
-  * directory of `batch_id=N/` parquet partitions, each written atomically
-  * in overwrite mode, so replaying a batch overwrites its own partitions
-  * and recomputes the identical result. */
+/** The one owner of the `batch_id` state layout every incremental runner
+  * keeps its standing state in: a directory of `batch_id=N/` parquet
+  * partitions, one per micro-batch, each written in overwrite mode, plus
+  * an optional compacted `batch_id=-1` snapshot of everything older.
+  *
+  * The protocol, in the order a runner meets it:
+  *  - [[drain]] runs one AvailableNow lifecycle of a stream;
+  *  - inside `foreachBatch`, [[readExcluding]] reads the standing state
+  *    WITHOUT the current batch's own directory, so a replayed batch
+  *    (crash between its writes and its checkpoint commit) recomputes
+  *    from the same input as its first attempt, and [[writeBatch]]
+  *    overwrites that directory — exactly-once output from
+  *    at-least-once delivery;
+  *  - serving reads resolve each key's newest batch with [[latest]];
+  *  - between drains, [[compact]] folds all but the newest batch into
+  *    `batch_id=-1`, which sorts below every live batch.
+  */
 object StreamState {
 
+  /** Run `stream` to the end of its currently available input
+    * (`Trigger.AvailableNow`), checkpointed at `checkpointPath`, through
+    * the sink that `sink` configures (a `foreachBatch`, or a format and
+    * path). Returns the number of micro-batches this run executed that
+    * consumed source offsets: an empty staged file counts, a no-data
+    * batch that only advances the watermark does not. The count comes
+    * from the query's progress history, which keeps the newest
+    * `spark.sql.streaming.numRecentProgressUpdates` (100) batches.
+    *
+    * `statePartitions` is the state layout: a stateful query keeps one
+    * state store per shuffle partition per stateful operator (four per
+    * partition per side for a stream-stream join), each committing files
+    * every micro-batch, so the count is pure per-batch overhead until
+    * state outgrows it. It is baked into the checkpoint at first start;
+    * a restart keeps the checkpointed count. */
+  def drain(stream: DataFrame, checkpointPath: String,
+            statePartitions: Int = 4)
+           (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Long = {
+    val query = withStatePartitions(stream.sparkSession, statePartitions) {
+      val q = sink(stream.writeStream)
+        .option("checkpointLocation", checkpointPath)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
+    query.recentProgress.count(_.sources.exists(s =>
+      s.startOffset != s.endOffset)).toLong
+  }
+
   /** Run `body` with `spark.sql.shuffle.partitions` = `n`, restoring the
-    * previous value after. This is the streaming STATE-LAYOUT knob: a
-    * stateful query carries one state store per shuffle partition per
-    * stateful operator (four per partition per side for a stream-stream
-    * join), each committing delta/snapshot files every micro-batch, so
-    * partition count is pure per-batch file-IO overhead until state
-    * actually outgrows it — the q205 measurement (33.6 s → 11.5 s at 8
-    * partitions, while 10× data moved the 32-partition run by −12%) is
-    * the family-wide shape. The count bakes into the checkpoint at first
-    * start (Scd2Stream's adaptive-bucket contract); size it from expected
-    * CONCURRENT state rows, not input size. */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    require(n > 0, "withStatePartitions: n must be positive")
+    * previous value after, also when `body` throws. */
+  private def withStatePartitions[T](spark: SparkSession, n: Int)
+                                    (body: => T): T = {
+    require(n > 0, "statePartitions must be positive")
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, saved)
   }
 
-  /** The standing state excluding the current batch's own directories —
-    * a replayed batch must not probe (or anti-join) against its previous
-    * attempt's output. */
+  /** Write one micro-batch's rows as `path/batch_id=N`, replacing what a
+    * previous attempt of the same batch wrote. */
+  def writeBatch(df: DataFrame, path: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+
+  /** The standing state at `path` without batch `batchId`'s own
+    * directory, `batch_id` column dropped; `empty`-shaped when nothing
+    * was written yet. */
   def readExcluding(spark: SparkSession, path: String, batchId: Long,
                     empty: StructType): DataFrame =
-    readExcludingKeepBatchId(spark, path, batchId, empty).drop("batch_id")
+    read(spark, path, batchId, empty).drop("batch_id")
 
-  /** [[readExcluding]] with the `batch_id` partition column retained —
-    * for runners whose state resolution needs it (e.g. [[FunnelStream]]'s
-    * latest-batch-wins `max_by`). The empty fallback carries no batch_id
-    * column (nothing to resolve). */
-  def readExcludingKeepBatchId(spark: SparkSession, path: String,
-                               batchId: Long, empty: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  /** [[readExcluding]] keeping the `batch_id` column, as [[latest]]
+    * needs. */
+  def read(spark: SparkSession, path: String, excluding: Long,
+           empty: StructType): DataFrame = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(
         _.getPath.getName.startsWith("batch_id=")))
-      spark.read.parquet(path).filter(col("batch_id") =!= batchId)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
+      spark.read.parquet(path).filter(col("batch_id") =!= excluding)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      empty.add(StructField("batch_id", LongType)))
   }
+
+  /** For each value of `keys`, every row of the newest batch that
+    * carries it (a per-group sink re-emits its whole group each batch, so
+    * all of the newest batch's rows are the state). Null keys resolve as
+    * one group. With `keys = Nil`, the newest batch overall. Drops the
+    * `batch_id` column. */
+  def latest(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val newest = df.groupBy(keys.map(k => col(k).as(s"_latest_$k")): _*)
+      .agg(max(col("batch_id")).as("_latest_b"))
+    df.join(if (keys.isEmpty) broadcast(newest) else newest,
+        (keys.map(k => col(k) <=> col(s"_latest_$k")) :+
+          (col("batch_id") === col("_latest_b"))).reduce(_ && _))
+      .select(df.columns.filter(_ != "batch_id").map(col): _*)
+  }
+
+  private val Marker = "_absorbed_through_"
+
+  /** Fold every batch directory but the newest into the `batch_id=-1`
+    * snapshot and delete the folded directories, so reads scan the state
+    * plus one live batch, not one directory per batch elapsed. With
+    * `keys`, the snapshot keeps only each key's [[latest]] rows; without,
+    * it is the union of the folded rows.
+    *
+    * The newest batch is never folded: if its checkpoint did not commit,
+    * its replay reads the state excluding its own directory, and that
+    * state must not already hold its rows. Run between drains.
+    *
+    * The swap is retire → land → delete: the old snapshot is renamed
+    * aside to `<path>_retired`, the new one renamed into place, and only
+    * then are the retired snapshot and the folded directories deleted.
+    * Every rename is checked; a failed landing renames the old snapshot
+    * back and throws. The next call heals a crash at any step: a retired
+    * snapshot with none in place is restored, and folded directories
+    * left behind by a crash after the landing are deleted, which the
+    * snapshot's `_absorbed_through_N` marker names. */
+  def compact(spark: SparkSession, path: String,
+              keys: Seq[String] = Nil): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return
+    val prior = new Path(p, "batch_id=-1")
+    val retired = new Path(path + "_retired")
+    if (!fs.exists(prior) && fs.exists(retired))
+      renameOrThrow(fs, retired, prior)
+    val absorbedThrough = if (!fs.exists(prior)) Long.MinValue
+      else fs.listStatus(prior).map(_.getPath.getName)
+        .collectFirst { case n if n.startsWith(Marker) =>
+          n.stripPrefix(Marker).toLong }
+        .getOrElse(Long.MinValue)
+    val (stale, live) = batchDirs(fs, p).partition(_._1 <= absorbedThrough)
+    stale.foreach { case (_, d) => fs.delete(d, true) }
+    val absorb = live.dropRight(1)
+    if (absorb.isEmpty) return
+    val sources = (if (fs.exists(prior)) Seq(prior) else Nil) ++
+      absorb.map(_._2)
+    // basePath keeps the batch_id partition column, so newest-wins
+    // resolution runs across the folded set (the snapshot counts as -1)
+    val folded = spark.read.option("basePath", path)
+      .parquet(sources.map(_.toString): _*)
+    val tmp = new Path(path + "_compacting")
+    (if (keys.isEmpty) folded.drop("batch_id") else latest(folded, keys))
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    fs.create(new Path(tmp, s"$Marker${absorb.last._1}")).close()
+    if (fs.exists(retired)) fs.delete(retired, true)
+    if (fs.exists(prior)) renameOrThrow(fs, prior, retired)
+    if (!fs.rename(tmp, prior)) {
+      if (fs.exists(retired)) fs.rename(retired, prior)
+      throw new java.io.IOException(
+        s"StreamState.compact: could not land $tmp as $prior")
+    }
+    fs.delete(retired, true)
+    absorb.foreach { case (_, d) => fs.delete(d, true) }
+  }
+
+  /** The live `batch_id=N` directories (N ≥ 0) under `p`, oldest first. */
+  private def batchDirs(fs: FileSystem, p: Path): Seq[(Long, Path)] =
+    fs.listStatus(p).toSeq
+      .map(s => s.getPath.getName -> s)
+      .collect { case (n, s) if s.isDirectory && n.startsWith("batch_id=") &&
+          n != "batch_id=-1" =>
+        n.stripPrefix("batch_id=").toLong -> s.getPath }
+      .sortBy(_._1)
+
+  private def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(
+        s"StreamState.compact: could not rename $from to $to")
 }

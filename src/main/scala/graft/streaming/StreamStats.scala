@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 import graft.expressions.QuantileSketchAgg
@@ -20,7 +20,7 @@ import graft.expressions.QuantileSketchAgg
   * monitor's final per-group quantiles are IDENTICAL to running the batch
   * aggregate over the whole corpus at once — which is exactly how q119's
   * oracle states it. Emission is one row per updated group per batch,
-  * written batch_id-keyed with the [[IncrementalIngest]] overwrite
+  * written batch_id-keyed with the [[StreamState]] overwrite
   * discipline (replay recomputes the identical rows); the latest batch's
   * row per group is the current state of the world.
   */
@@ -54,7 +54,7 @@ object StreamStats {
                       sinkPath: String, checkpointPath: String,
                       capacity: Int = 256,
                       qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
+                      maxFilesPerTrigger: Option[Int] = None): Long = {
     import spark.implicits._
     require(qs.nonEmpty, "need at least one quantile")
     val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
@@ -94,16 +94,8 @@ object StreamStats {
             qs.map(q => quantileOf(byValue, mass, q))))
       }
       .toDF("g", "sketch_size", "sketch_mass", "quantiles")
-    val query = updates.writeStream
-      .outputMode("update")
+    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite")
-          .parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        StreamState.writeBatch(batch, sinkPath, batchId) })
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming TOTAL-VARIATION-DISTANCE monitor —
@@ -32,20 +31,15 @@ object StreamTvd {
                       schema: StructType, groupCol: String,
                       bucketCol: String, sinkPath: String,
                       checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col(groupCol).as("_g"), col(bucketCol).as("_b"))
-          .agg(count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$sinkPath/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
+        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        StreamState.writeBatch(
+          batch.groupBy(col(groupCol).as("_g"), col(bucketCol).as("_b"))
+            .agg(count(lit(1)).as("c")),
+          sinkPath, batchId)
+    })
 
   /** The standing drift report: summed current-side counts vs the
     * static reference — [[graft.functions.Drift.tvdDrift]]'s output

@@ -41,6 +41,16 @@ class SchemaRegistrySpec extends SparkSpec {
     assert(back.get.observe(Seq(Set("0_first"))).versionOf(Set("0_first")).contains(3))
   }
 
+  test("save/load round-trips column names with a tab, a newline, a " +
+      "quote and a backslash") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reg_esc").toString
+    val path = s"$dir/esc_schemas.json"
+    val r = SchemaRegistry.seed.observe(Seq(
+      Set("a\tb", "line\nbreak"), Set("say \"hi\"", "back\\slash", "plain")))
+    SchemaRegistry.save(spark, r, path)
+    assert(SchemaRegistry.load(spark, path).contains(r))
+  }
+
   test("discover + assign tags rows with their keyset version") {
     import spark.implicits._
     val df = Seq(

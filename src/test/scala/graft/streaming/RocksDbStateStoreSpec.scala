@@ -59,19 +59,12 @@ class RocksDbStateStoreSpec extends SparkSpec {
       StreamWaves.stage(src, Seq(wave,
         Seq(sentinels.head).toDF("key", "ts", "side", "value"),
         Seq(sentinels(1)).toDF("key", "ts", "side", "value")))
-      StreamState.withStatePartitions(spark, 2) {
-        val q = StreamAsof.asofJoin(
-            StreamWaves.reader(spark, wave.schema, src, Some(1))
-              .as[StreamAsof.AsofInput]
-              .withWatermark("ts", "60 seconds"))
-          .writeStream.format("parquet")
-          .option("path", s"$dir/sink")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      StreamState.drain(StreamAsof.asofJoin(
+          StreamWaves.reader(spark, wave.schema, src, Some(1))
+            .as[StreamAsof.AsofInput]
+            .withWatermark("ts", "60 seconds")).toDF(), s"$dir/ckpt",
+        statePartitions = 2)(_.format("parquet")
+          .option("path", s"$dir/sink").outputMode("append"))
       spark.read.parquet(s"$dir/sink").filter($"key" >= 0)
         .select($"key", $"left_value", $"right_value")
     }
@@ -87,17 +80,10 @@ class RocksDbStateStoreSpec extends SparkSpec {
         .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
       StreamWaves.stage(src, Seq(rows.filter($"doc_id" <= 15),
         rows.filter($"doc_id" > 15)))
-      StreamState.withStatePartitions(spark, 2) {
-        val q = StreamDedup.dedupByFingerprint(
-            StreamWaves.reader(spark, rows.schema, src, Some(1)),
-            "ts", "text", watermarkDelay = "30 days")
-          .writeStream.format("parquet")
-          .option("path", s"$dir/sink")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      StreamState.drain(StreamDedup.dedupByFingerprint(
+          StreamWaves.reader(spark, rows.schema, src, Some(1)),
+          "ts", "text", watermarkDelay = "30 days"), s"$dir/ckpt",
+        statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink"))
       spark.read.parquet(s"$dir/sink").select($"doc_id")
     }
   }
@@ -118,19 +104,12 @@ class RocksDbStateStoreSpec extends SparkSpec {
         rows.filter($"user_id" < 0 && year($"ts") === 2030 &&
           month($"ts") === 1),
         rows.filter($"user_id" < 0 && month($"ts") === 6)))
-      StreamState.withStatePartitions(spark, 2) {
-        val q = Sessionize.sessionsStream(
-            StreamWaves.reader(spark, rows.schema, src, Some(1))
-              .withWatermark("ts", "60 seconds"),
-            "user_id", "ts", "30 minutes", col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$dir/sink")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      StreamState.drain(Sessionize.sessionsStream(
+          StreamWaves.reader(spark, rows.schema, src, Some(1))
+            .withWatermark("ts", "60 seconds"),
+          "user_id", "ts", "30 minutes", col("value")), s"$dir/ckpt",
+        statePartitions = 2)(_.format("parquet")
+          .option("path", s"$dir/sink").outputMode("append"))
       spark.read.parquet(s"$dir/sink").filter($"user_id" > 0)
         .select($"user_id", $"n_events",
           $"total_value".cast("double").as("total_value"))
@@ -154,7 +133,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
         spark, s"$dir/a", s"$dir/b", a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
         outDir = s"$dir/out", checkpointPath = s"$dir/ckpt",
-        statePartitions = Some(2))
+        statePartitions = 2)
       spark.read.parquet(s"$dir/out")
     }
   }

@@ -42,4 +42,23 @@ class StreamBitmapSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().toSet
     assert(got == want)
   }
+
+  test("a null group survives the newest-per-key read and compaction") {
+    val dir = Files.createTempDirectory("sbitmap3").toString
+    val src = s"$dir/landing"
+    val rows = Seq[(String, Long)]((null, 1L), ("a", 2L), (null, 70L),
+      ("b", 3L), (null, 1L), ("a", 64L)).toDF("g", "v")
+    StreamWaves.stage(src, Seq(rows.limit(2), rows.filter($"v" === 70L ||
+      $"v" === 3L), rows.filter($"v" === 64L || ($"v" === 1L))))
+    StreamBitmap.runAvailableNow(spark, src, rows.schema, "g", "v",
+      s"$dir/sink", s"$dir/ckpt", maxFilesPerTrigger = Some(1))
+    val want = graft.functions.Bitmap.bitmaps(rows, "g", "v")
+      .as[(String, Long, Long)].collect().toSet
+    assert(want.exists(_._1 == null))
+    def served = StreamBitmap.currentBitmap(spark, s"$dir/sink")
+      .as[(String, Long, Long)].collect().toSet
+    assert(served == want)
+    StreamState.compact(spark, s"$dir/sink", Seq("g", "bucket"))
+    assert(served == want)
+  }
 }

@@ -37,7 +37,7 @@ class StreamIntervalJoinSpec extends SparkSpec {
     StreamIntervalJoin.runAvailableNow(spark, aDir, bDir,
       a.schema, b.schema, aLenSec = 3600L, bLenSec = 1800L,
       delay = "1 hour", outDir = s"$dir/out",
-      checkpointPath = s"$dir/ckpt", statePartitions = Some(2),
+      checkpointPath = s"$dir/ckpt", statePartitions = 2,
       joinType = "left_outer", maxFilesPerTrigger = Some(1))
     val got = spark.read.parquet(s"$dir/out")
       .filter($"a_id" >= 0)

@@ -102,7 +102,7 @@ class StreamReplaySpec extends SparkSpec {
         spark, s"$dir/a", s"$dir/b", a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
         outDir = s"$dir/out", checkpointPath = s"$dir/ckpt",
-        statePartitions = Some(2), joinType = jt,
+        statePartitions = 2, joinType = jt,
         maxFilesPerTrigger = Some(1))
       StreamWaves.stage(s"$dir/a", Seq(a))
       StreamWaves.stage(s"$dir/b", Seq(b))
@@ -143,17 +143,10 @@ class StreamReplaySpec extends SparkSpec {
     val rows = (1L to 30L).map(i => (i, s"text ${i % 10}"))
       .toDF("doc_id", "text")
       .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
-    def run(): Unit = StreamState.withStatePartitions(spark, 2) {
-      val q = StreamDedup.dedupByFingerprint(
-          StreamWaves.reader(spark, rows.schema, src, Some(1)),
-          "ts", "text", watermarkDelay = "30 days")
-        .writeStream.format("parquet")
-        .option("path", s"$dir/sink")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def run(): Unit = StreamState.drain(StreamDedup.dedupByFingerprint(
+        StreamWaves.reader(spark, rows.schema, src, Some(1)),
+        "ts", "text", watermarkDelay = "30 days"), s"$dir/ckpt",
+      statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink"))
     StreamWaves.stage(src, Seq(rows.filter($"doc_id" <= 15),
       rows.filter($"doc_id" > 15)))
     run()
@@ -176,19 +169,12 @@ class StreamReplaySpec extends SparkSpec {
         at(-1L, "2030-01-01 00:00:00", "0.00"),
         at(-1L, "2030-06-01 00:00:00", "0.00"))
       .toDF("user_id", "ts", "value")
-    def run(): Unit = StreamState.withStatePartitions(spark, 2) {
-      val q = Sessionize.sessionsStream(
-          StreamWaves.reader(spark, rows.schema, src, Some(1))
-            .withWatermark("ts", "60 seconds"),
-          "user_id", "ts", "30 minutes", col("value"))
-        .writeStream.format("parquet")
-        .option("path", s"$dir/sink")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def run(): Unit = StreamState.drain(Sessionize.sessionsStream(
+        StreamWaves.reader(spark, rows.schema, src, Some(1))
+          .withWatermark("ts", "60 seconds"),
+        "user_id", "ts", "30 minutes", col("value")), s"$dir/ckpt",
+      statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink")
+        .outputMode("append"))
     StreamWaves.stage(src, Seq(rows.filter($"user_id" > 0),
       rows.filter($"user_id" < 0 && year($"ts") === 2030 &&
         month($"ts") === 1),

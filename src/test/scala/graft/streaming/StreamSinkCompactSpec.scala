@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Monitor-sink compaction: serving results are identical before and
-  * after folding, the newest live batch survives (replay safety), and
-  * per-group granularity drops evicted values with their batch. */
+/** Monitor-sink compaction through [[StreamState.compact]] with keys:
+  * serving results are identical before and after folding, the newest
+  * live batch survives (replay safety), and per-group granularity drops
+  * evicted values with their batch. */
 class StreamSinkCompactSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,14 +33,14 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.parquet(s"$sink/batch_id=2")
     val before = StreamSketch.currentCells(spark, sink)
       .as[(Int, Long, Long)].collect().toSet
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     val after = StreamSketch.currentCells(spark, sink)
       .as[(Int, Long, Long)].collect().toSet
     assert(after == before)
     assert(after == Set((0, 1L, 12L), (0, 2L, 3L), (1, 1L, 4L)))
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=2"))
     // idempotent: nothing left to absorb
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     assert(StreamSketch.currentCells(spark, sink)
       .as[(Int, Long, Long)].collect().toSet == after)
   }
@@ -62,7 +63,7 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.parquet(s"$sink/batch_id=2")
     val before = StreamQuantile.currentEntries(spark, sink)
       .as[(String, Long, Long)].collect().toSet
-    StreamSinkCompact.compactLatest(spark, sink, Seq("g"))
+    StreamState.compact(spark, sink, Seq("g"))
     val after = StreamQuantile.currentEntries(spark, sink)
       .as[(String, Long, Long)].collect().toSet
     assert(after == before)
@@ -78,7 +79,7 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.parquet(s"$sink/batch_id=0")
     Seq((0, 1L, 9L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=1")
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     // cell (0,2) now lives ONLY in batch_id=-1 (its source dir is gone)
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=1"))
     val before = StreamSketch.currentCells(spark, sink)
@@ -92,7 +93,7 @@ class StreamSinkCompactSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(sink + "_retired")))
     Seq((0, 1L, 12L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=2")
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     val after = StreamSketch.currentCells(spark, sink)
       .as[(Int, Long, Long)].collect().toSet
     // (0,2)=3 survived the crash; (0,1) advanced to batch 2's value
@@ -107,15 +108,15 @@ class StreamSinkCompactSpec extends SparkSpec {
     val sink = s"$dir/sink"
     Seq((0, 1L, 5L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=0")
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     assert(dirs(sink) == Set("batch_id=0")) // nothing to absorb
     Seq((0, 1L, 8L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=1")
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=1"))
     Seq((0, 2L, 2L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=2")
-    StreamSinkCompact.compactLatest(spark, sink, Seq("depth", "bucket"))
+    StreamState.compact(spark, sink, Seq("depth", "bucket"))
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=2"))
     assert(StreamSketch.currentCells(spark, sink)
       .as[(Int, Long, Long)].collect().toSet ==

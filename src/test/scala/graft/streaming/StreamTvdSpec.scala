@@ -25,11 +25,9 @@ class StreamTvdSpec extends SparkSpec {
     // three waves, one lifecycle
     StreamWaves.stage(src, (0 to 2).map(w =>
       cur.filter($"id" % 3 === w).drop("id")))
-    StreamState.withStatePartitions(spark, 2) {
-      StreamTvd.runAvailableNow(spark, src, cur.drop("id").schema,
-        "cohort", "bucket", s"$dir/sink", s"$dir/ckpt",
-        maxFilesPerTrigger = Some(1))
-    }
+    StreamTvd.runAvailableNow(spark, src, cur.drop("id").schema,
+      "cohort", "bucket", s"$dir/sink", s"$dir/ckpt",
+      maxFilesPerTrigger = Some(1))
     val got = StreamTvd.currentDrift(spark, s"$dir/sink", ref,
       "cohort", "bucket", 3L, 100L)
     val want = graft.functions.Drift.tvdDrift(ref, cur.drop("id"),
