@@ -98,7 +98,7 @@ object CorpusStats {
           greatest(col("n_bpe_tokens"), lit(1L)).cast("double"))
 
   /** Robust per-group length-outlier gate: median + MAD (median absolute
-    * deviation) per group, keep rows with deviation ≤ zMax·MAD — the
+    * deviation) per group, keep rows with deviation ≤ 3·MAD — the
     * outlier rule that survives the heavy-tailed length distributions a
     * mean/stddev z-score is wrecked by (one book among tweets drags the
     * mean; it cannot drag the median).
@@ -114,7 +114,7 @@ object CorpusStats {
     * so every interpolated double is EXACT and the keep flag restates
     * bit-for-bit externally. */
   def lengthOutlierReport(df: DataFrame, idCol: String, groupCol: String,
-                          lenCol: String, zMax: Double = 3.0): DataFrame = {
+                          lenCol: String): DataFrame = {
     val med = df.groupBy(col(groupCol))
       .agg(expr(s"percentile($lenCol, 0.5)").as("med"))
     val withDev = df.select(col(idCol), col(groupCol), col(lenCol))
@@ -123,7 +123,7 @@ object CorpusStats {
     val mad = withDev.groupBy(col(groupCol))
       .agg(expr("percentile(dev, 0.5)").as("mad"))
     withDev.join(broadcast(mad), groupCol)
-      .withColumn("keep", col("dev") <= lit(zMax) * col("mad"))
+      .withColumn("keep", col("dev") <= lit(3.0) * col("mad"))
       .select(col(idCol), col(groupCol), col(lenCol),
         col("med"), col("mad"), col("keep"))
   }

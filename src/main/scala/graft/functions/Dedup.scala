@@ -160,35 +160,6 @@ object Dedup {
         pmod(p.getField("_1") * x + p.getField("_2"), lit(P)))))
   }
 
-  /** MinHash signature (array of numHashes longs) over a shingle array. */
-  def minhashSignature(shingles: Column, numHashes: Int = 64): Column =
-    minhashSignatureFromHashes(hashedShingles(shingles), numHashes)
-
-  /** Candidate probability of a pair at Jaccard `s` under (b, r) banding:
-    * `1 − (1 − s^r)^b` — the LSH S-curve. */
-  def lshCandidateProb(s: Double, bands: Int, rowsPerBand: Int): Double =
-    1.0 - math.pow(1.0 - math.pow(s, rowsPerBand), bands)
-
-  /** Pick the (bands, rowsPerBand) factorization of `numHashes` whose
-    * S-curve threshold `(1/b)^(1/r)` sits closest to the target
-    * similarity — the parameter question every LSH deployment answers
-    * before it runs (Leskovec/Rajaraman/Ullman, MMDS ch. 3). Exhaustive
-    * over the divisors of numHashes (at most a handful), driver-side
-    * arithmetic only. Returns (bands, rowsPerBand); ties prefer MORE
-    * bands (higher recall at equal threshold distance — candidate cost is
-    * bounded by the bucket cap anyway). */
-  def lshPlan(numHashes: Int, targetThreshold: Double): (Int, Int) = {
-    require(numHashes >= 2, s"lshPlan: need >= 2 hashes, got $numHashes")
-    require(targetThreshold > 0.0 && targetThreshold < 1.0,
-      s"lshPlan: threshold must be in (0, 1), got $targetThreshold")
-    val options = (1 to numHashes).filter(numHashes % _ == 0)
-      .map(r => (numHashes / r, r))
-      .filter { case (b, r) => b >= 1 && r >= 1 }
-    options.minBy { case (b, r) =>
-      (math.abs(math.pow(1.0 / b, 1.0 / r) - targetThreshold), -b)
-    }
-  }
-
   /** LSH banding: explode a signature into (band_idx, band_sig) rows.
     * Docs sharing any full band agree on r consecutive minhashes —
     * the classic (b, r) S-curve candidate filter. */
@@ -349,8 +320,7 @@ object Dedup {
   def crossCorpusNearDups(left: DataFrame, right: DataFrame, idCol: String,
                           textCol: String, shingleSize: Int = 5,
                           numHashes: Int = 64, bands: Int = 16,
-                          threshold: Double = 0.8,
-                          maxBucket: Int = 64): DataFrame = {
+                          threshold: Double = 0.8): DataFrame = {
     val rowsPerBand = numHashes / bands
     // one columnar-persisted frame per side holding shingle hashes AND
     // signature (see minhashNearDups for why persist beats an RDD
@@ -363,7 +333,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def banded(s: DataFrame) = lshBands(s, idCol, "sig", bands, rowsPerBand)
     // the shared agg + semi-join cap — never a window (see capBuckets)
-    def capped(b: DataFrame) = capBuckets(b, idCol, maxBucket)
+    def capped(b: DataFrame) = capBuckets(b, idCol, 64)
     val sl = shingled(left)
     val sr = shingled(right)
     val cands = capped(banded(sl)).toDF(s"${idCol}_a", "band_idx", "band_sig")

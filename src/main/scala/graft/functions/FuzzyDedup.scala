@@ -364,8 +364,8 @@ object FuzzyDedup {
     * Scale shape: [[nearDupPairs]]' blocked candidate generation plus one
     * partial-agg groupBy over the pair list. No windows, no driver data. */
   def provenance(df: DataFrame, idCol: String, textCol: String,
-                 maxBucket: Int = 256, maxDist: Int = 1): DataFrame =
-    nearDupPairs(df, idCol, textCol, maxBucket, maxDist)
+                 maxDist: Int = 1): DataFrame =
+    nearDupPairs(df, idCol, textCol, 256, maxDist)
       .groupBy(col("id_b").as(idCol))
       .agg(
         min(when(col("dist") === 0, col("id_a"))).as("_exact_keeper"),

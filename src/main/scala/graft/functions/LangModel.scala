@@ -98,6 +98,10 @@ object LangModel {
           greatest(col("n_pairs"), lit(1L)).cast("double"))
   }
 
+  /** The absolute discount D = 3/4 as an integer rational. */
+  private val DNum = 3L
+  private val DDen = 4L
+
   /** Interpolated Kneser–Ney bigram model, EXACT: one row per distinct
     * bigram with its smoothed conditional probability as a reduced-free
     * integer rational —
@@ -107,12 +111,12 @@ object LangModel {
     *            + (D · N1+(w1·) / c(w1·)) · (N1+(·w2) / N1+(··))
     * }}}
     *
-    * with discount `D = dNum/dDen`, cleared to the common denominator
-    * `pkn_den = dDen · c(w1·) · N1+(··)`:
+    * with discount `D = DNum/DDen`, cleared to the common denominator
+    * `pkn_den = DDen · c(w1·) · N1+(··)`:
     *
     * {{{
-    *   pkn_num = max(c·dDen − dNum, 0) · N1+(··)
-    *           + dNum · N1+(w1·) · N1+(·w2)
+    *   pkn_num = max(c·DDen − DNum, 0) · N1+(··)
+    *           + DNum · N1+(w1·) · N1+(·w2)
     * }}}
     *
     * The continuation distribution N1+(·w2)/N1+(··) is what separates
@@ -124,13 +128,10 @@ object LangModel {
     * Scale shape: one corpus scan into per-occurrence pairs, then
     * map-side-combinable aggregates on bigram types; the fan-out
     * frames (per-w1, per-w2, 1-row type total) are type-cardinality
-    * and broadcast back. Long bound: `c(w1·) · N1+(··) · dDen` must
+    * and broadcast back. Long bound: `c(w1·) · N1+(··) · DDen` must
     * ride a Long — pre-aggregate per shard or widen to DECIMAL(38,0)
     * past ~10¹⁴ pair occurrences against ~10⁴ types. */
-  def kneserNeyBigrams(df: DataFrame, idCol: String, textCol: String,
-                       dNum: Long = 3, dDen: Long = 4): DataFrame = {
-    require(dNum >= 0 && dDen > 0 && dNum < dDen,
-      s"discount $dNum/$dDen must sit in [0, 1)")
+  def kneserNeyBigrams(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val pc = TermStats.bigramPairs(df, idCol, textCol)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_ab"))
@@ -143,8 +144,8 @@ object LangModel {
       .crossJoin(broadcast(types))
       .select(col("w1"), col("w2"), col("c_ab"), col("c_a"),
         col("n1p_fwd"), col("n1p_back"), col("n_types"),
-        (greatest(col("c_ab") * dDen - dNum, lit(0L)) * col("n_types") +
-          lit(dNum) * col("n1p_fwd") * col("n1p_back")).as("pkn_num"),
-        (lit(dDen) * col("c_a") * col("n_types")).as("pkn_den"))
+        (greatest(col("c_ab") * DDen - DNum, lit(0L)) * col("n_types") +
+          lit(DNum) * col("n1p_fwd") * col("n1p_back")).as("pkn_num"),
+        (lit(DDen) * col("c_a") * col("n_types")).as("pkn_den"))
   }
 }

@@ -65,48 +65,6 @@ object Linkage {
       .select(col("id_a"), col("id_b"), col("jw_score"))
   }
 
-  /** Phonetic blocking: rows sharing a Soundex code (Spark's codegen'd
-    * built-in) are candidates, scored and thresholded like the other
-    * passes — catches sound-alike spellings ("Robert"/"Rupert",
-    * "Smith"/"Smyth") that are several edits apart, the classic third
-    * pass next to sorted-neighborhood and deletion-neighborhood.
-    * Degenerate hot codes (every name mapping to one code) are dropped
-    * by the same partial-aggregating cap as [[FuzzyDedup]] — a
-    * `groupBy(code).count` + semi-join, never a window. No DuckDB
-    * soundex exists, so this family is spec-gated rather than
-    * oracle-gated. */
-  def phoneticPairs(df: DataFrame, idCol: String, textCol: String,
-                    minScore: Double, maxBucket: Int = 256): DataFrame = {
-    require(maxBucket >= 2, "phoneticPairs: maxBucket must admit a pair")
-    val base = df.select(col(idCol).cast("long").as("id"),
-        col(textCol).cast("string").as("t"))
-      .filter(col("t").isNotNull)
-      .withColumn("_graft_code", soundex(col("t")))
-    val surviving = base.groupBy(col("_graft_code"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxBucket && col("_n") >= 2)
-      .select(col("_graft_code"))
-    val capped = base.join(surviving, Seq("_graft_code"), "left_semi")
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a._graft_code") === col("b._graft_code") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        JaroWinklerExpr.jaroWinkler(col("a.t"), col("b.t")).as("jw_score"))
-      .filter(col("jw_score") >= minScore)
-  }
-
-  /** Keep-min-id fuzzy dedup over any scored pair frame: every id that
-    * appears as the larger member of a pair at/above `minScore` is
-    * dropped — the [[FuzzyDedup.dedup]] convention for linkage output. */
-  def dedupByScore(df: DataFrame, idCol: String, pairs: DataFrame,
-                   minScore: Double): DataFrame = {
-    val dupIds = pairs.filter(col("jw_score") >= minScore)
-      .select(col("id_b").cast(df.schema(idCol).dataType).as(idCol))
-      .distinct()
-    df.join(dupIds, Seq(idCol), "left_anti")
-  }
-
   /** Two-pass linkage: sorted-neighborhood UNION deletion-neighborhood
     * (d ≤ 1) candidates, each pair scored once — the standard remedy for
     * the leading-character blind spot of a single sort pass. Pair identity

@@ -70,22 +70,8 @@ object Pca {
       depth = 2)
   }
 
-  /** Additive moment merge — the INCREMENTAL-refit primitive: the
-    * moments of corpus A ∪ B are the element-wise sums, so a periodic
-    * refit keeps one ~17 KB moment set per ingest batch, merges, and
-    * re-solves — it never re-reads old partitions' floats. */
-  def mergeMoments(a: (Long, Array[Double], Array[Double]),
-                   b: (Long, Array[Double], Array[Double]))
-      : (Long, Array[Double], Array[Double]) = {
-    require(a._2.length == b._2.length && a._3.length == b._3.length,
-      "Pca.mergeMoments: dimension mismatch")
-    (a._1 + b._1,
-      a._2.zip(b._2).map { case (x, y) => x + y },
-      a._3.zip(b._3).map { case (x, y) => x + y })
-  }
-
-  /** Solve a model from sufficient statistics (see [[moments]] /
-    * [[mergeMoments]]) without touching data. */
+  /** Solve a model from sufficient statistics (see [[moments]]) without
+    * touching data. */
   def fitFromMoments(d: Int, n: Long, sums: Array[Double],
                      gram: Array[Double]): PcaModel = {
     require(n > 1, s"Pca.fitFromMoments: needs >1 rows, got $n")
@@ -163,12 +149,6 @@ object Pca {
       rows.map(_._4).toArray,
       rows.map(_._3.toArray).toArray,
       rows.map(_._2).toArray)
-  }
-
-  /** Fraction of total variance the top-k components capture. */
-  def explainedVariance(model: PcaModel, k: Int): Double = {
-    val total = model.eigenvalues.sum
-    if (total <= 0) 0.0 else model.eigenvalues.take(k).sum / total
   }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix: returns

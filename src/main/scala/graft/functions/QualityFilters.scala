@@ -46,8 +46,8 @@ object QualityFilters {
 
   /** Mean token logit under the hashed linear model — the document's
     * quality score. */
-  def linearScore(textCol: Column, buckets: Int = 1024): Column =
-    linearScoreFromTokens(TextAnalysis.tokens(lower(textCol)), buckets)
+  def linearScore(textCol: Column): Column =
+    linearScoreFromTokens(TextAnalysis.tokens(lower(textCol)), 1024)
 
   /** Fraction of tokens that are repeats of an earlier token. */
   def dupTokenFrac(toks: Column): Column =
@@ -58,8 +58,8 @@ object QualityFilters {
     * `toks` must be a MATERIALIZED token-array column (see
     * [[LineDedup.linesFromTokens]] — the line lambda captures it, and a
     * captured inline tokenization re-runs per lambda element, O(m²)). */
-  def dupLineFrac(toks: Column, lineTokens: Int = 5): Column = {
-    val ls = LineDedup.linesFromTokens(toks, lineTokens)
+  def dupLineFrac(toks: Column): Column = {
+    val ls = LineDedup.linesFromTokens(toks, 5)
     (size(ls) - size(array_distinct(ls))).cast("double") /
       greatest(size(ls), lit(1)).cast("double")
   }

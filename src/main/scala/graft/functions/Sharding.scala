@@ -286,16 +286,6 @@ object Sharding {
         min(col(docCol)).as("first_doc"),
         max(col(docCol)).as("last_doc"))
 
-  /** Shard manifest: per-shard document count, total weight, and key range
-    * — what a downstream trainer reads to schedule file loads. */
-  def shardManifest(packed: DataFrame, keyCol: String,
-                    weightCol: String): DataFrame =
-    packed.groupBy(col("shard_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col(weightCol).cast("long")).as("total_weight"),
-        min(col(keyCol)).as("first_key"), max(col(keyCol)).as("last_key"))
-      .orderBy(col("shard_id"))
-
   /** Rendezvous (highest-random-weight) shard routing (Thaler & Ravishankar
     * 1996): every key goes to the shard maximizing `hash60(key # shard)` —
     * KEY-AFFINE like hash-mod, but with the property hash-mod lacks:

@@ -43,8 +43,8 @@ object Similarity {
       .limit(k)
 
   /** Deterministic random hyperplanes for LSH bucketing. */
-  def hyperplanes(numPlanes: Int, dim: Int, seed: Long = 7L): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
+  def hyperplanes(numPlanes: Int, dim: Int): Seq[Seq[Double]] = {
+    val rnd = new scala.util.Random(7L)
     Seq.fill(numPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
@@ -90,19 +90,6 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------ IVF
-
-  /** IVF coarse centroids: a deterministic hash-ordered sample of the data
-    * itself (a valid coarse quantizer without a k-means dependency; swap in
-    * trained centroids when ml is available). Driver-side collect of k
-    * vectors only. */
-  def ivfCentroids(df: DataFrame, vecCol: String, idCol: String,
-                   k: Int): Seq[Seq[Double]] =
-    df.select(col(idCol), col(vecCol))
-      .orderBy(pmod(xxhash64(col(idCol)), lit(1000003L)), col(idCol))
-      .limit(k)
-      .collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq)
-      .toSeq
 
   /** Trained IVF centroids: Lloyd (k-means) iterations over a bounded,
     * deterministic md5-ordered driver sample — FAISS trains IVF on a
@@ -179,15 +166,6 @@ object Similarity {
     }
     centroids.map(_.toSeq).toSeq
   }
-
-  /** Mean squared distance of each sampled vector to its nearest centroid —
-    * the quantization error Lloyd iterations minimize (diagnostic). */
-  def quantizationError(vectors: Seq[Seq[Double]],
-                        centroids: Seq[Seq[Double]]): Double =
-    if (vectors.isEmpty) 0.0
-    else vectors.map { v =>
-      centroids.map(c => c.zip(v).map { case (x, y) => (x - y) * (x - y) }.sum).min
-    }.sum / vectors.size
 
   /** Squared-L2 distances to every centroid (array, centroid order). */
   private def centroidDists(vec: Column, centroids: Seq[Seq[Double]]): Column =
@@ -833,10 +811,10 @@ object Similarity {
     * centroids + sequential-accumulation cosine, so the whole mine
     * restates in SQL (q158). */
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
-                    labelCol: String, k: Int, iters: Int = 3,
+                    labelCol: String, k: Int,
                     sampleN: Int = 4096): DataFrame = {
     val centroids = ivfCentroidsTrainedPortable(df, vecCol, idCol, k,
-      iters, sampleN)
+      3, sampleN)
     // assigned feeds both self-join sides and the restore join —
     // localCheckpoint so the k×dim distance battery runs once
     val assigned = df.select(col(idCol), col(vecCol), col(labelCol))

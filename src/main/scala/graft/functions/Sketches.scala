@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.expressions.{KllMergeAgg, KllSketchAgg, KmvMergeAgg, KmvSketchAgg, QuantileSketchAgg}
+import graft.expressions.{KllSketchAgg, KmvMergeAgg, KmvSketchAgg, QuantileSketchAgg}
 
 /** Mergeable cardinality sketches for corpus observability at 100 TB:
   * "how many distinct tokens / urls / fingerprints per source" without an
@@ -131,25 +131,6 @@ object Sketches {
       .otherwise(raw)
   }
 
-  /** Per-group HLL register report over a value column: (group, bucket,
-    * register) rows — the full register file, restatable in SQL from the
-    * md5 hash (`bucket = h // 2^(60−p)`,
-    * `ρ = 60−p+1 − bitlength(h mod 2^(60−p))`, register = max ρ, unseen
-    * buckets 0). One bounded-state aggregation; the explode is m rows
-    * per group. */
-  def hllRegisters(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                   p: Int): DataFrame = {
-    val hashed = df.select(
-      groupCols.map(col) :+ hash60(col(valueCol)).as("_h"): _*)
-    hashed.groupBy(groupCols.map(col): _*)
-      .agg(hllSketch(col("_h"), p).as("_regs"))
-      .select(groupCols.map(col) :+
-        posexplode(col("_regs")).as(Seq("bucket", "register")): _*)
-      .select(groupCols.map(col) ++ Seq(
-        col("bucket").cast("long").as("bucket"),
-        col("register").cast("long").as("register")): _*)
-  }
-
   /** Count-min sketch cells over an item-occurrence frame (one row per
     * occurrence): `d` deterministic hash rows × `w` buckets, each cell the
     * total count of items landing in it. The sketch is a TINY (≤ d·w)-row
@@ -274,13 +255,6 @@ object Sketches {
   def kllSketch(value: Column, k: Int): Column =
     ColumnBridge.column(
       KllSketchAgg(ColumnBridge.expression(value), k).toAggregateExpression())
-
-  /** Aggregate: roll stored [[kllSketch]] summaries up into one sketch —
-    * per-shard quantile state unions without rescanning any shard, the
-    * [[kmvMerge]] pattern with level structure preserved. */
-  def kllMerge(sketch: Column, k: Int): Column =
-    ColumnBridge.column(
-      KllMergeAgg(ColumnBridge.expression(sketch), k).toAggregateExpression())
 
   /** Total mass of a KLL sketch: Σ 2^level over its entries — EXACTLY
     * the number of inserted values (compaction is weight-preserving;

@@ -57,10 +57,9 @@ object SpanDedup {
 
   /** Per-document duplicated-span report: `(id, n_spans, n_dup_spans,
     * dup_span_frac, keep)`. Documents with fewer than n tokens have zero
-    * windows and are kept (frac 0). `keep` = dup_span_frac <= maxDupFrac.
+    * windows and are kept (frac 0). `keep` = dup_span_frac <= 0.5.
     * Spans hash with the oracle-portable md5 kernel ([[spanHashes]]). */
-  def spanReport(df: DataFrame, idCol: String, textCol: String, n: Int,
-                 maxDupFrac: Double = 0.5): DataFrame = {
+  def spanReport(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val spans = df
       .select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
       .select(col(idCol), explode(spanHashes(col("_toks"), n)).as("h"))
@@ -87,7 +86,7 @@ object SpanDedup {
       .withColumn("dup_span_frac",
         col("n_dup_spans").cast("double") /
           greatest(col("n_spans"), lit(1L)).cast("double"))
-      .withColumn("keep", col("dup_span_frac") <= lit(maxDupFrac))
+      .withColumn("keep", col("dup_span_frac") <= lit(0.5))
   }
 
   /** Winnowed fingerprint selection (Schleimer, Wilkerson & Aiken 2003 —

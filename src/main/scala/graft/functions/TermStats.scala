@@ -41,12 +41,14 @@ object TermStats {
   def docFrequencies(tf: DataFrame): DataFrame =
     tf.groupBy("term").agg(count(lit(1)).as("df"))
 
+  private val K1 = 1.2
+  private val B = 0.75
+
   /** Top-`k` most salient terms per document by BM25 scoring
-    * (k1, b are the standard Robertson defaults). Ties break on the term
+    * (K1, B are the standard Robertson constants). Ties break on the term
     * itself so the output is deterministic. Output: (id, term, tf, score),
     * one row per kept term. */
   def bm25TopTerms(df: DataFrame, idCol: String, textCol: String, k: Int,
-                   k1: Double = 1.2, b: Double = 0.75,
                    logIdf: Boolean = true): DataFrame = {
     val tf = termFrequencies(df, idCol, textCol)
     val dfreq = docFrequencies(tf)
@@ -56,8 +58,8 @@ object TermStats {
       .crossJoin(lens.agg(avg(col("len")).as("avg_len")))
     val idfRaw = (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))
     val idf = if (logIdf) log(idfRaw + lit(1.0)) else idfRaw
-    val core = col("tf").cast("double") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("avg_len")))
+    val core = col("tf").cast("double") * lit(K1 + 1.0) /
+      (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("len") / col("avg_len")))
     val scored = tf.join(dfreq, "term")
       .join(lens, idCol)
       .crossJoin(broadcast(stats))

@@ -168,14 +168,4 @@ object TextAnalysis {
     }
     trim(regexp_replace(decoded, "\\s+", " "))
   }
-
-
-  private val P = 1000000007L
-
-  /** Order-sensitive rolling token hash (polynomial, mod 1e9+7). ANSI-safe:
-    * every intermediate stays far below Long.MaxValue. Spark-native
-    * (xxhash64-based); used for shingle hashing, not oracle-compared. */
-  def rollingHash(c: Column): Column =
-    aggregate(tokens(c), lit(0L),
-      (acc, t) => pmod(acc * lit(31L) + pmod(xxhash64(t), lit(P)), lit(P)))
 }

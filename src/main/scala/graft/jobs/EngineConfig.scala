@@ -30,9 +30,6 @@ final case class EngineConfig(
   def tablesFor(subjectArea: String): Seq[(String, TableConfig)] =
     subjectAreas.getOrElse(subjectArea, Seq.empty)
       .flatMap(name => tables.get(name).map(name -> _))
-
-  def isIncremental(configName: String): Boolean =
-    tables.get(configName).exists(_.incremental)
 }
 
 object EngineConfig {

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cleanse, UnionBySchema, Upsert, Validation}
+import graft.operators.{Cleanse, UnionBySchema, Validation}
 import graft.schema.SchemaRegistry
 
 /** The reference's full pipeline (SURVEY.md §3.1) as one driver program:
@@ -169,9 +169,4 @@ object IngestPipeline {
     val cleansed = UnionBySchema.sortColumns(Cleanse.cleanNames(flat))
     IngestResult(updated, cleansed, declared)
   }
-
-  /** Staging→warehouse merge (reference stored-proc MERGE, J1). */
-  def warehouseMerge(warehouse: DataFrame, staging: DataFrame,
-                     keys: Seq[String]): DataFrame =
-    Upsert(warehouse, staging, keys)
 }

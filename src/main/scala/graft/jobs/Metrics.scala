@@ -36,8 +36,4 @@ object Metrics {
       case l: java.lang.Long => l.longValue()
       case other => other.toString.toLong
     }
-
-  /** Null-count aggregate for a column, for use as an `extra` metric. */
-  def nullCount(c: String): Column =
-    count(when(col(c).isNull, lit(1))).as(s"${c}_nulls")
 }

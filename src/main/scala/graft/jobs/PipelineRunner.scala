@@ -1,7 +1,6 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.sinks.Sinks
 
@@ -147,15 +146,5 @@ object PipelineRunner {
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** A8: append job reports to a metrics table (the reference's
-    * `job_tracker` insert, `utilities/helpers/report_job.py:64-92`). */
-  def recordReports(spark: SparkSession, reports: Seq[JobReport],
-                    table: String): Unit = {
-    import spark.implicits._
-    reports.toDF()
-      .withColumn("reported_at", current_timestamp())
-      .write.mode("append").saveAsTable(table)
   }
 }

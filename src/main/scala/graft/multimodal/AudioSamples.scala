@@ -368,14 +368,6 @@ object AudioSamples {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Perceptual audio near-dup pairs at hamming ≤ `maxDist` — the
-    * [[ImagePixels.imageNearDups]] shape on the audio fingerprint. */
-  def audioNearDups(df: DataFrame, idCol: String, payloadCol: String,
-                    maxDist: Int = 4): DataFrame =
-    graft.functions.Dedup.simhashNearDups(
-      audioHashFrame(df, idCol, payloadCol).filter(col("ahash").isNotNull),
-      idCol, "ahash", maxDist, numChunks = 8, chunkBits = 8, simBits = 64)
-
   // --- Deterministic fixture generation --------------------------------
   // Square-wave recordings whose amplitude is piecewise-constant on the
   // SAME 65-window grid the fingerprint reads (the ImagePixels

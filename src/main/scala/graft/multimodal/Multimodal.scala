@@ -17,17 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical multimodal record schema: opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", LongType),
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType))), nullable = true)))
-
   /** Wrap a string column as a binary payload (utf-8), the shape ingest
     * produces when reading raw media bytes. */
   def asPayload(c: Column): Column = encode(c, "UTF-8")

@@ -212,19 +212,9 @@ object VideoFrames {
     * positions pair per-index through the chunk-pigeonhole join at
     * hamming ≤ `maxDist`, and a video pair qualifies when ≥
     * `minMatches` of the k positions match (default ⌈k/2⌉ — a
-    * half-overlapping cut sits exactly at the fence). */
-  def videoNearDups(df: DataFrame, idCol: String, payloadCol: String,
-                    k: Int = 8, maxDist: Int = 4,
-                    minMatchesOpt: Option[Int] = None,
-                    composite: Boolean = true): DataFrame =
-    videoNearDupsFromHashes(
-      videoHashFrame(df, idCol, payloadCol, k, composite)
-        .filter(col("fhash").isNotNull)
-        .localCheckpoint(), // decode once: both join sides read it
-      idCol, k, maxDist, minMatchesOpt)
-
-  /** The pairing half of [[videoNearDups]] over an already-computed
-    * `(idCol, sample_idx, fhash)` frame (null-hash rows excluded). */
+    * half-overlapping cut sits exactly at the fence). Reads an
+    * already-computed `(idCol, sample_idx, fhash)` frame from
+    * [[videoHashFrame]], null-hash rows excluded. */
   def videoNearDupsFromHashes(hashes: DataFrame, idCol: String,
                               k: Int = 8, maxDist: Int = 4,
                               minMatchesOpt: Option[Int] = None): DataFrame = {

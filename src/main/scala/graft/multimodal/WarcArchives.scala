@@ -168,21 +168,9 @@ object WarcArchives {
     out.result()
   }
 
-  /** The body of an HTTP message payload (after the first blank line);
-    * the whole payload when no header block is present. */
-  def httpBody(payload: Array[Byte]): Array[Byte] = {
-    var j = 0
-    while (j + 3 < payload.length &&
-      !(payload(j) == '\r' && payload(j + 1) == '\n' &&
-        payload(j + 2) == '\r' && payload(j + 3) == '\n')) j += 1
-    if (j + 3 < payload.length)
-      java.util.Arrays.copyOfRange(payload, j + 4, payload.length)
-    else payload
-  }
-
-  /** Column form of [[httpBody]] over a UTF-8 HTTP payload: the text
-    * after the first blank line (whole payload when none) — codegen'd
-    * builtins, restated verbatim by the oracle. */
+  /** The body of a UTF-8 HTTP payload: the text after the first blank
+    * line (whole payload when none) — codegen'd builtins, restated
+    * verbatim by the oracle. */
   def httpBodyText(payload: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     val s = decode(payload, "UTF-8")

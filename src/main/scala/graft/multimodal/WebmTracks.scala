@@ -113,7 +113,7 @@ object WebmTracks {
 
   // element ids
   private val EBML = 0x1A45DFA3L
-  private val SEGMENT = 0x18538067L
+  private[multimodal] val SEGMENT = 0x18538067L
   private val INFO = 0x1549A966L
   private val TIMESTAMP_SCALE = 0x2AD7B1L
   private val DURATION = 0x4489L
@@ -123,8 +123,8 @@ object WebmTracks {
   private val TRACK_TYPE = 0x83L
   private val CODEC_ID = 0x86L
   private val CODEC_PRIVATE = 0x63A2L
-  private val CLUSTER = 0x1F43B675L
-  private val SIMPLE_BLOCK = 0xA3L
+  private[multimodal] val CLUSTER = 0x1F43B675L
+  private[multimodal] val SIMPLE_BLOCK = 0xA3L
   private val BLOCK_GROUP = 0xA0L
   private val BLOCK = 0xA1L
 
@@ -352,7 +352,7 @@ object WebmTracks {
       .map(j => ((id >> (8 * j)) & 0xFF).toByte).toArray
   }
 
-  private def sizeBytes(v: Long): Array[Byte] = {
+  private[multimodal] def sizeBytes(v: Long): Array[Byte] = {
     var w = 1
     while (w <= 8 && v >= (1L << (7 * w)) - 1) w += 1
     val marked = v | (1L << (7 * w))
@@ -360,12 +360,12 @@ object WebmTracks {
       .map(j => ((marked >> (8 * j)) & 0xFF).toByte).toArray
   }
 
-  private def el(id: Long, payload: Array[Byte]*): Array[Byte] = {
+  private[multimodal] def el(id: Long, payload: Array[Byte]*): Array[Byte] = {
     val body = payload.flatten.toArray
     idBytes(id) ++ sizeBytes(body.length.toLong) ++ body
   }
 
-  private def uintEl(id: Long, v: Long): Array[Byte] = {
+  private[multimodal] def uintEl(id: Long, v: Long): Array[Byte] = {
     var w = 1
     while (w < 8 && (v >>> (8 * w)) != 0) w += 1
     el(id, (0 until w).reverseIterator
@@ -422,7 +422,7 @@ object WebmTracks {
 
   /** Shared fixture container assembly: EBML header, segment Info at
     * `scale`, and the two-track Tracks element. */
-  private def containerParts(seed: Long, durationSec: Int, scale: Long)
+  private[multimodal] def containerParts(seed: Long, durationSec: Int, scale: Long)
       : (Array[Byte], Array[Byte], Array[Byte]) = {
     val durTicks = durationSec * 1000.0 * 1000000.0 / scale
     val header = el(EBML, Array.emptyByteArray)
@@ -444,28 +444,9 @@ object WebmTracks {
     (header, info, tracksEl)
   }
 
-  private def simpleBlock(track: Long, frame: Array[Byte]): Array[Byte] =
+  private[multimodal] def simpleBlock(track: Long, frame: Array[Byte]): Array[Byte] =
     el(SIMPLE_BLOCK, sizeBytes(track),
       Array[Byte](0, 0, 0x80.toByte), frame) // timecode 0, keyframe
-
-  /** [[webmPayload]]'s non-remux layout with every AUDIO frame in its own
-    * SINGLE-FRAME EBML-LACED SimpleBlock (lacing bits 11, lace-count byte
-    * 0, ZERO size fields — Matroska encodes nFrames−1 sizes): the minimal
-    * legal EBML lace a re-muxer that always sets the lacing flag emits.
-    * Same frames as the unlaced form, so fingerprints must collide. */
-  def webmPayloadEbmlSingle(seed: Long, nFrames: Int = 12,
-                            durationSec: Int = 10): Array[Byte] = {
-    val (vid, aud) = fixtureFrames(seed, nFrames)
-    val (header, info, tracksEl) = containerParts(seed, durationSec, 1000000L)
-    def ebmlSingle(track: Long, frame: Array[Byte]): Array[Byte] =
-      el(SIMPLE_BLOCK, sizeBytes(track),
-        Array[Byte](0, 0, 0x86.toByte), // keyframe + EBML lacing (11)
-        Array[Byte](0), frame)          // lace count 0 → one frame, no sizes
-    val body = (0 until nFrames).flatMap(f =>
-      el(CLUSTER, uintEl(0xE7L, f.toLong * 100L),
-        simpleBlock(1L, vid(f)), ebmlSingle(2L, aud(f)))).toArray
-    header ++ el(SEGMENT, info, tracksEl, body)
-  }
 
   /** `(media_id, payload)` fixture frame on the executors. */
   def fixtureFrame(ids: DataFrame, idCol: String, nFrames: Int = 12,

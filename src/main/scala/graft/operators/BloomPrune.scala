@@ -83,10 +83,10 @@ object BloomPrune {
     * that might match. */
   def join(probe: DataFrame, probeKey: String,
            build: DataFrame, buildKey: String,
-           expectedItems: Long, fpp: Double = 0.03): DataFrame = {
+           expectedItems: Long): DataFrame = {
     // frame-qualified refs: col(...) === col(...) would be ambiguous (or a
     // trivially-true self-reference) when both sides name the key alike
-    val pruned = prune(probe, probeKey, build, buildKey, expectedItems, fpp)
+    val pruned = prune(probe, probeKey, build, buildKey, expectedItems, 0.03)
     pruned.join(build, pruned(probeKey) === build(buildKey))
   }
 

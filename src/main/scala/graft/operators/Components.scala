@@ -38,14 +38,17 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
+  /** Round cap: the alternating stars converge in O(log n) rounds, so a
+    * run past 30 is a bug and fails loudly. */
+  private val MaxRounds = 30
+
   /** Connected components of the undirected graph given as a pair list.
     * Returns one row per node appearing in `pairs`: (`id`, `cluster_id`)
     * where `cluster_id` is the MINIMUM node id of the component — the
     * deterministic canonical-representative convention the dedup keepers
     * already use (`Dedup.exactDedup` keeps the min id).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxRounds: Int = 30): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     var e = pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
@@ -58,7 +61,7 @@ object Components {
       .union(e.select(col("v").as("id"))).distinct()
     var converged = e.isEmpty
     var round = 0
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxRounds) {
       // No shuffle job for the convergence check: the tagged groupBy that
       // dedups the round's output (smallStar's trailing set semantics)
       // ALSO records, per edge, whether it came from the new round
@@ -78,7 +81,7 @@ object Components {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds")
+        s"connectedComponents did not converge in $MaxRounds rounds")
     // at the fixpoint every edge points from a node to its component min;
     // min() collapses any residual multi-edges. Roots carry no out-edge —
     // they label themselves via the left join.
@@ -240,15 +243,6 @@ object Components {
         coalesce(col("cluster_id"), col(idCol).cast("long")))
   }
 
-  /** Keep ONE row per duplicate cluster (minimum id wins — the same
-    * convention as `Dedup.exactDedup`), dropping every other member. */
-  def keepClusterRepresentatives(df: DataFrame, idCol: String,
-                                 pairs: DataFrame, aCol: String,
-                                 bCol: String): DataFrame =
-    assignClusters(df, idCol, pairs, aCol, bCol)
-      .filter(col(idCol).cast("long") === col("cluster_id"))
-      .drop("cluster_id")
-
   /** Dedup telemetry off a cluster-labeled frame (the
     * [[assignClusters]] output): the cluster-SIZE histogram
     * `(cluster_size, n_clusters, n_docs)` — the release-note numbers a
@@ -257,9 +251,8 @@ object Components {
     * giant; the latter is usually a join-key bug, not data). Dup rate
     * derives as `1 − Σn_clusters / Σn_docs`. Two map-side-combinable
     * aggregations, cluster-cardinality intermediate. */
-  def clusterSizeHistogram(clustered: DataFrame,
-                           clusterCol: String = "cluster_id"): DataFrame =
-    clustered.groupBy(col(clusterCol))
+  def clusterSizeHistogram(clustered: DataFrame): DataFrame =
+    clustered.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"))

@@ -18,6 +18,10 @@ object Incremental {
                    idCol: String): DataFrame =
     lakeIds.join(history.select(idCol), Seq(idCol), "left_anti")
 
+  /** The reference's watermark: 05:00 local at a fixed UTC−6 offset. */
+  private val CutoffHour = 5
+  private val UtcOffsetHours = -6
+
   /** Daily watermark id (reference `utilities/utilities.py:792-808`):
     * the epoch second of 05:00 local time (fixed-offset UTC−6) of the
     * effective day — the previous day when local time is before the cutoff
@@ -25,18 +29,14 @@ object Incremental {
     * fixed 21600 s subtraction) but yielding the same id values.
     *
     * @param ts timestamp column (UTC)
-    * @param cutoffHour local hour before which the id still belongs to the
-    *                   previous day (reference default 5)
-    * @param utcOffsetHours fixed local-zone offset, e.g. -6
     */
-  def incrementalId(ts: Column, cutoffHour: Int = 5,
-                    utcOffsetHours: Int = -6): Column = {
-    val local = ts + expr(s"INTERVAL $utcOffsetHours HOURS")
-    val effectiveDay = when(hour(local) < cutoffHour,
+  def incrementalId(ts: Column): Column = {
+    val local = ts + expr(s"INTERVAL $UtcOffsetHours HOURS")
+    val effectiveDay = when(hour(local) < CutoffHour,
       date_sub(to_date(local), 1)).otherwise(to_date(local))
-    // local cutoffHour:00 on day D = epoch(D midnight UTC) + cutoff − offset
+    // local CutoffHour:00 on day D = epoch(D midnight UTC) + cutoff − offset
     (unix_timestamp(effectiveDay.cast("timestamp"))
-      + lit((cutoffHour - utcOffsetHours) * 3600L))
+      + lit((CutoffHour - UtcOffsetHours) * 3600L))
   }
 
   /** Precomputed daily schedule ids (reference

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * the term co-occurrence graph is TextRank (Mihalcea & Tarau 2004) —
   * corpus keyword salience without supervision.
   *
-  * Numeric contract: ranks are FIXED-POINT longs (micro-units of `scale`),
-  * damping is the rational `dampNum/dampDen`, and every step is integer
+  * Numeric contract: ranks are FIXED-POINT longs (micro-units of `Scale`),
+  * damping is the rational `DampNum/DampDen`, and every step is integer
   * arithmetic — `contrib = rank div deg`, `rank' = base + (Σ contrib ·
-  * dampNum) div dampDen`. Long sums commute, so the shuffled aggregation
+  * DampNum) div DampDen`. Long sums commute, so the shuffled aggregation
   * order is irrelevant and the whole iteration restates exactly in an
   * external engine (floating-point PageRank cannot be hash-compared across
   * engines; this one can). The floor losses bound total mass drift by one
@@ -37,16 +37,19 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** Fixed-point 1.0: ranks are micro-units. */
+  private val Scale = 1000000L
+  /** Damping 0.85 as the rational DampNum / DampDen. */
+  private val DampNum = 17L
+  private val DampDen = 20L
+
   /** Ranks after `iters` rounds over a directed edge list. Every node
-    * starts at `scale` (fixed-point 1.0). Nodes = src ∪ dst; a node with
+    * starts at `Scale` (fixed-point 1.0). Nodes = src ∪ dst; a node with
     * no out-edges (dangling) leaks its mass — symmetrize the edge list if
     * conservation matters (the TextRank path does). Output: (node, rank). */
-  def pagerank(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-               dampNum: Long = 17L, dampDen: Long = 20L,
-               scale: Long = 1000000L): DataFrame = {
+  def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
+               iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
-      s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     // materialize the caller's edge derivation ONCE: ed and nodes below
     // each used to recompute it from scratch (two scans + distincts of
     // the upstream plan); they now both read this checkpoint, and their
@@ -64,8 +67,8 @@ object PageRank {
       e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
         .distinct().localCheckpoint())
-    val base = scale * (dampDen - dampNum) / dampDen
-    var ranks = nodes.withColumn("rank", lit(scale))
+    val base = Scale * (DampDen - DampNum) / DampDen
+    var ranks = nodes.withColumn("rank", lit(Scale))
     for (_ <- 1 to iters) {
       val sums = ed.join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div deg").as("c"))
@@ -73,7 +76,7 @@ object PageRank {
       ranks = nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
           (lit(base) +
-            expr(s"coalesce(s, bigint(0)) * $dampNum div $dampDen"))
+            expr(s"coalesce(s, bigint(0)) * $DampNum div $DampDen"))
             .as("rank"))
         .localCheckpoint(eager = false)
     }
@@ -87,17 +90,14 @@ object PageRank {
     * "accounts near these known-bad actors" primitive. Same integer
     * contract as [[pagerank]] (micro-unit ranks, rational damping,
     * truncating division — restates exactly in SQL); seeds start at
-    * `scale`, everything else at 0, and only seeds receive the restart
+    * `Scale`, everything else at 0, and only seeds receive the restart
     * term. Seeds ride the node table as a 0/1 flag (one broadcast-sized
     * semi-join at setup; iterations move only the node-sized rank
     * frame). */
   def personalizedPagerank(edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: DataFrame, seedCol: String, iters: Int,
-                           dampNum: Long = 17L, dampDen: Long = 20L,
-                           scale: Long = 1000000L): DataFrame = {
+                           seeds: DataFrame, seedCol: String,
+                           iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
-    require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
-      s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     // same setup shape as [[pagerank]]: one edge checkpoint feeds both
     // legs, which materialize concurrently
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -113,9 +113,9 @@ object PageRank {
         .join(seedSet, Seq("node"), "left")
         .select(col("node"), coalesce(col("_s"), lit(0L)).as("seed"))
         .localCheckpoint())
-    val base = scale * (dampDen - dampNum) / dampDen
+    val base = Scale * (DampDen - DampNum) / DampDen
     var ranks = nodes.select(col("node"),
-      (col("seed") * scale).as("rank"))
+      (col("seed") * Scale).as("rank"))
     for (_ <- 1 to iters) {
       val sums = ed.join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div deg").as("c"))
@@ -123,7 +123,7 @@ object PageRank {
       ranks = nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
           (col("seed") * base +
-            expr(s"coalesce(s, bigint(0)) * $dampNum div $dampDen"))
+            expr(s"coalesce(s, bigint(0)) * $DampNum div $DampDen"))
             .as("rank"))
         .localCheckpoint(eager = false)
     }

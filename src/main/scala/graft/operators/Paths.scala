@@ -22,20 +22,19 @@ object Paths {
 
   /** First-order transition counts `(from_type, to_type, n)` over each
     * key's event-ordered stream; each key's first event counts from
-    * `startToken` (the Markov chain's entry state). A NULL event type is
+    * `^start` (the Markov chain's entry state). A NULL event type is
     * a state like any other (it lags through a sentinel internally, so
     * first-in-key and null-valued-previous stay distinct — a
     * null-from-lag coalesce would silently fold null states into the
     * entry state). */
   def transitionCounts(df: DataFrame, keyCol: String,
-                       orderCols: Seq[String], typeCol: String,
-                       startToken: String = "^start"): DataFrame = {
+                       orderCols: Seq[String], typeCol: String): DataFrame = {
     val sentinel = "\u0000null"
     val tagged = df.withColumn("_tt",
       coalesce(col(typeCol).cast("string"), lit(sentinel)))
     SortedFold.lagged(tagged, keyCol, orderCols, "_tt", as = "_prev")
       .groupBy(
-        when(col("_prev").isNull, lit(startToken))
+        when(col("_prev").isNull, lit("^start"))
           .when(col("_prev") === sentinel, lit(null).cast("string"))
           .otherwise(col("_prev")).as("from_type"),
         col(typeCol).cast("string").as("to_type"))
@@ -43,16 +42,15 @@ object Paths {
   }
 
   /** One row per (key, session): the session's ordered event-type path
-    * as a `sep`-joined string, with its length. Ties in `tsCol` order
+    * as a `>`-joined string, with its length. Ties in `tsCol` order
     * deterministically on `idCol` (the [[SortedFold.sessionize]]
     * contract). */
   def sessionPaths(df: DataFrame, keyCol: String, tsCol: String,
-                   idCol: String, typeCol: String, gapSec: Long,
-                   sep: String = ">"): DataFrame =
+                   idCol: String, typeCol: String, gapSec: Long): DataFrame =
     SortedFold.sessionize(df, keyCol, tsCol, idCol, gapSec)
       .groupBy(col(keyCol), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
-        concat_ws(sep,
+        concat_ws(">",
           transform(
             sort_array(collect_list(
               struct(col(tsCol), col(idCol), col(typeCol).as("_t")))),

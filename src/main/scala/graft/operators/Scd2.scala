@@ -228,37 +228,6 @@ object Scd2 {
       .drop(b, "_graft_to", "valid_from")
   }
 
-  /** [[pointInTime]] with `bucketSeconds` derived from the dimension's own
-    * interval statistics: the median CLOSED-interval duration (clamped to
-    * [60 s, 30 d]) makes the typical version span ~1-2 buckets — bounded
-    * fan-out — while each fact still probes exactly one bucket. Dimensions
-    * with no closed history yet (every key on its first version) fall back
-    * to 1/1024 of the dimension's `valid_from` span, then 86400 s. The
-    * two statistics aggregates collect one row each — driver-bounded. */
-  def pointInTimeAuto(facts: DataFrame, dim: DataFrame, keyCols: Seq[String],
-                      ptCol: String, dimCols: Seq[String],
-                      maxBucketsPerVersion: Long = 1000000L): DataFrame = {
-    val MinBucket = 60L
-    val MaxBucket = 30L * 86400L
-    val med = dim.filter(col("valid_to").isNotNull)
-      .agg(percentile_approx(
-        col("valid_to").cast("long") - col("valid_from").cast("long"),
-        lit(0.5), lit(10000)).as("med"))
-      .collect()(0)
-    val derived: Long =
-      if (!med.isNullAt(0) && med.getLong(0) > 0) med.getLong(0)
-      else {
-        val span = dim.agg(
-          (max(col("valid_from")).cast("long") -
-            min(col("valid_from")).cast("long")).as("span")).collect()(0)
-        if (!span.isNullAt(0) && span.getLong(0) > 0) span.getLong(0) / 1024L
-        else 86400L
-      }
-    pointInTime(facts, dim, keyCols, ptCol,
-      math.min(MaxBucket, math.max(MinBucket, derived)), dimCols,
-      maxBucketsPerVersion)
-  }
-
   /** History RETENTION (the vacuum/GDPR story): keep every open
     * interval and every closed interval still live at `cutoff`; older
     * versions drop. The invariant (gated by q176, pinned by Scd2Spec):
@@ -268,7 +237,6 @@ object Scd2 {
     * numbers are preserved (provenance), never renumbered. A pure
     * partition-local filter: no shuffle, and under a `valid_to`-
     * partitioned layout the drop prunes whole directories. */
-  def retain(dim: DataFrame, cutoff: Column,
-             validToCol: String = "valid_to"): DataFrame =
-    dim.where(col(validToCol).isNull || col(validToCol) >= cutoff)
+  def retain(dim: DataFrame, cutoff: Column): DataFrame =
+    dim.where(col("valid_to").isNull || col("valid_to") >= cutoff)
 }

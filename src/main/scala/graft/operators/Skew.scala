@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-handling utilities for hot join keys (SURVEY.md §7.4 item 6 —
@@ -32,21 +32,5 @@ object Skew {
     // saltN-times-larger broadcast build for nothing.
     salted.join(replicated.hint("shuffle_hash"), keys :+ "_graft_salt")
       .drop("_graft_salt")
-  }
-
-  /** Two-phase aggregation with an explicit salt — useful when a custom
-    * aggregate has no partial implementation (Spark's built-ins already
-    * combine map-side; this is for expensive buffers like collect_set over
-    * a hot key). `partial` aggregates per (key, salt); `finalAgg` folds the
-    * partials per key. */
-  def saltedAgg(df: DataFrame, keys: Seq[String], distCol: String,
-                saltN: Int)(
-                partial: Seq[Column], finalAgg: Seq[Column]): DataFrame = {
-    val salted = df.withColumn("_graft_salt",
-      pmod(xxhash64(col(distCol)), lit(saltN.toLong)))
-    salted.groupBy((keys :+ "_graft_salt").map(col): _*)
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(keys.map(col): _*)
-      .agg(finalAgg.head, finalAgg.tail: _*)
   }
 }

@@ -96,58 +96,4 @@ object TableStats {
       .select(col("bucket"), col("bucket_lo"), col("bucket_hi"),
         coalesce(col("n_rows"), lit(0L)).as("n_rows"))
   }
-
-  /** Files-per-table hygiene report — the observable that says WHEN
-    * [[graft.sources.lakesim.LakeOptimize.compact]] /
-    * [[graft.streaming.Scd2Stream.compact]] are needed, the ops-tooling
-    * analog of the reference's log scanner (A6): one row per table path
-    * with file count, byte totals, and the small-file count under
-    * `smallFileBytes` (default 32 MiB — well under a right-sized 128 MiB
-    * scan split). Driver-side streaming aggregation over the recursive
-    * listing (O(files) time, O(1) memory — never materializes per-file
-    * rows); hidden files (`_`/`.` prefixed: commit markers, checkpoints)
-    * are excluded, matching what a scan would read. */
-  def fileStats(spark: org.apache.spark.sql.SparkSession,
-                paths: Seq[String],
-                smallFileBytes: Long = 32L << 20): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val rows = paths.map { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var n = 0L; var small = 0L; var total = 0L
-      var minB = Long.MaxValue; var maxB = 0L
-      if (fs.exists(hp)) {
-        val it = fs.listFiles(hp, true)
-        // Spark's file index prunes hidden path SEGMENTS, not just leaf
-        // names — a file under .checkpoints/ is invisible to a scan even
-        // if its own name is clean, so test every segment below the root
-        def visible(path: Path): Boolean = {
-          var cur = path
-          while (cur != null && cur.toUri.getPath != hp.toUri.getPath) {
-            val seg = cur.getName
-            // partition dirs like `_gbucket=3` stay visible (Spark's
-            // hidden-path rule exempts `=`-bearing segments)
-            if ((seg.startsWith("_") || seg.startsWith(".")) &&
-                !seg.contains("=")) return false
-            cur = cur.getParent
-          }
-          true
-        }
-        while (it.hasNext) {
-          val st = it.next()
-          if (visible(st.getPath)) {
-            n += 1; total += st.getLen
-            if (st.getLen < smallFileBytes) small += 1
-            minB = math.min(minB, st.getLen)
-            maxB = math.max(maxB, st.getLen)
-          }
-        }
-      }
-      (p, n, total, if (n > 0) total / n else 0L,
-        if (n > 0) minB else 0L, maxB, small)
-    }
-    import spark.implicits._
-    rows.toDF("table_path", "n_files", "total_bytes", "avg_bytes",
-      "min_bytes", "max_bytes", "n_small_files")
-  }
 }

@@ -36,9 +36,8 @@ object Triangles {
   /** Every triangle of the undirected graph, exactly once, as
     * `(a, b, c)` ordered by the (degree, id) total order. `edges` must
     * be canonical (u < v, distinct — see [[canonicalEdges]]). */
-  def triangles(edges: DataFrame, uCol: String = "u", vCol: String = "v")
-      : DataFrame = {
-    val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
+  def triangles(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("u"), col("v"))
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

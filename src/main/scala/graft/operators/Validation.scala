@@ -23,19 +23,9 @@ object Validation {
     * counts and flag mismatches. Both sides aggregate before the join, so
     * the join input is one row per key. */
   def reconcileCounts(actual: DataFrame, declared: DataFrame,
-                      keyCol: String, actualCnt: String = "actual_count",
-                      declaredCnt: String = "declared_count"): DataFrame =
+                      keyCol: String): DataFrame =
     declared.join(actual, Seq(keyCol), "full_outer")
-      .withColumn(actualCnt, coalesce(col(actualCnt), lit(0L)))
-      .withColumn(declaredCnt, coalesce(col(declaredCnt), lit(0L)))
-      .withColumn("count_match", col(actualCnt) === col(declaredCnt))
-
-  /** Column drift between a frame and its metadata: (missing-from-data,
-    * unknown-to-metadata). */
-  def columnDrift(dataCols: Seq[String], metaCols: Set[String]): (Seq[String], Seq[String]) = {
-    val dataSet = dataCols.map(_.toLowerCase).toSet
-    val metaLower = metaCols.map(_.toLowerCase)
-    (metaCols.toSeq.sorted.filterNot(c => dataSet.contains(c.toLowerCase)),
-     dataCols.filterNot(c => metaLower.contains(c.toLowerCase)))
-  }
+      .withColumn("actual_count", coalesce(col("actual_count"), lit(0L)))
+      .withColumn("declared_count", coalesce(col("declared_count"), lit(0L)))
+      .withColumn("count_match", col("actual_count") === col("declared_count"))
 }

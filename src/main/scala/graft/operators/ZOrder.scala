@@ -44,6 +44,19 @@ object ZOrder {
     terms.reduce(_ bitwiseOR _)
   }
 
+  /** [[zValue]] of two columns as ANSI SQL, for oracles: masked inputs,
+    * one `((x >> i) & 1) * 2^p` term per bit, summed — `+` of disjoint
+    * powers of two equals the engine's OR-fold. */
+  def interleave2Sql(a: String, b: String, bits: Int): String = {
+    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
+    val mask = (1L << bits) - 1
+    val terms = (0 until bits).flatMap { i =>
+      Seq(s"((($a & $mask) >> $i) & 1) * ${1L << (2 * i)}",
+        s"((($b & $mask) >> $i) & 1) * ${1L << (2 * i + 1)}")
+    }
+    terms.mkString("(", " + ", ")")
+  }
+
   /** Equi-width bucket of a numeric column into [0, 2^bits) given its
     * (driver-known) min/max — the simplest rank proxy; exact ranks via
     * ntile/percent_rank work too but cost a shuffle. */

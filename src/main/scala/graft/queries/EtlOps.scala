@@ -1331,7 +1331,7 @@ object EtlOps {
 
   /** Z-order clustering keys under the gate (q244): Morton-interleaved
     * (l_partkey, l_suppkey) low-16-bit keys per lineitem
-    * ([[graft.functions.ZOrder.interleave2]]) — a static unrolled
+    * ([[graft.operators.ZOrder.zValue]]) — a static unrolled
     * bit-arithmetic chain (codegen-friendly, no UDF) whose oracle
     * restates every shift/mask term; one swapped bit lane or a
     * dropped mask moves rows. Per-row output. */
@@ -1339,8 +1339,8 @@ object EtlOps {
     Tables.load(s, dir, "lineitem")
       .select((col("l_orderkey") * 10 + col("l_linenumber")).as("rid"),
         col("l_partkey"), col("l_suppkey"),
-        graft.functions.ZOrder.interleave2(col("l_partkey"),
-          col("l_suppkey"), 16).as("z"))
+        graft.operators.ZOrder.zValue(
+          Seq(col("l_partkey"), col("l_suppkey")), 16).as("z"))
       .orderBy(col("rid"))
 
   /** First/last-touch attribution under the gate (q266): user
@@ -2948,7 +2948,7 @@ object EtlOps {
     Gate("q244_zorder", zorderQ _,
       s"""SELECT l_orderkey * 10 + l_linenumber AS rid,
          | l_partkey, l_suppkey,
-         | CAST(${graft.functions.ZOrder.interleave2Sql("l_partkey",
+         | CAST(${graft.operators.ZOrder.interleave2Sql("l_partkey",
             "l_suppkey", 16)} AS BIGINT) AS z
          |FROM lineitem ORDER BY rid""".stripMargin),
     // step-function gap attribution, (ts, event_id) tie order

@@ -455,7 +455,7 @@ object TrainingData {
         TextAnalysis.tokens(lower(col("text"))).as("_toks"))
       .select(col("doc_id"),
         QualityFilters.dupTokenFrac(col("_toks")).as("dup_token_frac"),
-        QualityFilters.dupLineFrac(col("_toks"), 5).as("dup_line_frac"),
+        QualityFilters.dupLineFrac(col("_toks")).as("dup_line_frac"),
         QualityFilters.topBigramFrac(col("_toks")).as("top_bigram_frac"))
       .withColumn("keep",
         col("dup_line_frac") <= lit(0.2) && col("top_bigram_frac") <= lit(0.2))
@@ -670,7 +670,7 @@ object TrainingData {
     val d = docs(s, dir).persist() // median pass + deviation pass
     releasing(d) {
       graft.functions.CorpusStats.lengthOutlierReport(
-          d, "doc_id", "source", "n_chars", zMax = 3.0)
+          d, "doc_id", "source", "n_chars")
         .orderBy(col("doc_id"))
     }
   }
@@ -697,7 +697,7 @@ object TrainingData {
   def dataloaderPrepQ(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).persist() // gate stats + survivor text branches
     val kept = graft.functions.CorpusStats
-      .lengthOutlierReport(d, "doc_id", "source", "n_chars", zMax = 3.0)
+      .lengthOutlierReport(d, "doc_id", "source", "n_chars")
       .filter(col("keep")).select(col("doc_id"))
     val survivors = d.join(kept, "doc_id")
     val chunks = graft.functions.Chunking.chunkDocuments(survivors,
@@ -3221,7 +3221,7 @@ object TrainingData {
     * build time). */
   def kneserNeyQ(s: SparkSession, dir: String): DataFrame =
     graft.functions.LangModel.kneserNeyBigrams(docs(s, dir),
-        "doc_id", "text", dNum = 3, dDen = 4)
+        "doc_id", "text")
       .orderBy(col("w1"), col("w2"))
 
   /** Embedding centroid alignment under the gate (q234): each label
@@ -3543,23 +3543,23 @@ object TrainingData {
        |  '${Pii.phonePattern}', '<PHONE>', 'g'),
        | '${Pii.ipv4Pattern}', '<IP>', 'g')""".stripMargin
 
-  /** Fixed-width token lines of a token-list expression (plain strings). */
-  private def lineListSql(toks: String, lt: Int = 5): String =
-    s"""list_transform(range(0, CAST(ceil(len($toks) / $lt.0) AS BIGINT)),
-       |  i -> array_to_string($toks[i*$lt+1 : i*$lt+$lt], ' '))""".stripMargin
+  /** Fixed-width 5-token lines of a token-list expression (plain strings). */
+  private def lineListSql(toks: String): String =
+    s"""list_transform(range(0, CAST(ceil(len($toks) / 5.0) AS BIGINT)),
+       |  i -> array_to_string($toks[i*5+1 : i*5+5], ' '))""".stripMargin
 
   /** Fixed-width token lines as (line_idx, line) structs (posexplode). */
-  private def lineStructsSql(toks: String, lt: Int = 5): String =
-    s"""list_transform(range(0, CAST(ceil(len($toks) / $lt.0) AS BIGINT)),
+  private def lineStructsSql(toks: String): String =
+    s"""list_transform(range(0, CAST(ceil(len($toks) / 5.0) AS BIGINT)),
        |  i -> struct_pack(line_idx := i,
-       |    line := array_to_string($toks[i*$lt+1 : i*$lt+$lt], ' ')))""".stripMargin
+       |    line := array_to_string($toks[i*5+1 : i*5+5], ' ')))""".stripMargin
 
-  /** Distinct word n-gram shingles with the short-document fallback (one
+  /** Distinct word 8-gram shingles with the short-document fallback (one
     * all-tokens shingle), mirroring Dedup.wordShingles. */
-  private def shinglesSql(toks: String, n: Int = 8): String =
-    s"""list_distinct(CASE WHEN len($toks) >= $n
-       |  THEN list_transform(range(1, len($toks) - ${n - 2}),
-       |    i -> array_to_string($toks[i : i+${n - 1}], ' '))
+  private def shinglesSql(toks: String): String =
+    s"""list_distinct(CASE WHEN len($toks) >= 8
+       |  THEN list_transform(range(1, len($toks) - 6),
+       |    i -> array_to_string($toks[i : i+7], ' '))
        |  ELSE [array_to_string($toks, ' ')] END)""".stripMargin
 
   /** The hashed-linear-model mean logit of a token list (q69/q71): the

@@ -130,16 +130,11 @@ object SchemaRegistry {
       .map(s => if (s.isEmpty) Set.empty[String] else s.split(",").toSet)
       .toSeq
 
-  /** NESTED canonical keyset: sorted comma-joined dotted LEAF paths (native
-    * JsonLeafKeysExpr — one Jackson parse per record). Same canonical form
-    * as the flat keyset, so the same registry/lookup machinery serves both:
-    * a flat record's leaf paths ARE its top-level keys. */
-  def nestedKeysetExpr(rawJson: Column): Column =
-    graft.expressions.JsonLeafKeysExpr.jsonLeafKeys(rawJson)
-
-  /** Distinct nested keysets (leaf-path sets) in a raw JSON column —
-    * fused streaming kernel, identical canonical string to
-    * [[nestedKeysetExpr]] (pinned by JsonKeysetTupleExprSpec). */
+  /** Distinct nested keysets in a raw JSON column: sorted comma-joined
+    * dotted LEAF paths, the same canonical form as the flat keyset (a flat
+    * record's leaf paths ARE its top-level keys). Fused streaming kernel,
+    * identical canonical string to `JsonLeafKeysExpr` (pinned by
+    * JsonKeysetTupleExprSpec). */
   def discoverKeysetsNested(df: DataFrame, rawJsonCol: String): Seq[Set[String]] =
     df.select(graft.expressions.JsonKeysetTupleExpr.keysetField(
         graft.expressions.JsonKeysetTupleExpr
@@ -150,31 +145,10 @@ object SchemaRegistry {
                 else s.split(",").toSet)
       .toSeq
 
-  /** Tag each record with its nested-keyset schema version.
-    *
-    * Uses the SAME streaming kernel as [[discoverKeysetsNested]] /
-    * `ingestNested` — not [[nestedKeysetExpr]]'s readTree kernel, whose
-    * duplicate-key collapse (last object wins) can canonicalize a
-    * pathological record differently than the kernel that discovered it,
-    * resolving its version to null. One kernel is canonical end-to-end. */
-  def assignVersionsNested(df: DataFrame, rawJsonCol: String,
-                           registry: SchemaRegistry): DataFrame =
-    df.withColumn("schema_version",
-      lookupExpr(registry,
-        graft.expressions.JsonKeysetTupleExpr.keysetField(
-          graft.expressions.JsonKeysetTupleExpr
-            .jsonLeafKeysetTuple(col(rawJsonCol), Nil))))
-
   /** Tag each record with its schema version via a broadcast lookup of the
-    * registry (keyset string → id). Unknown keysets get null — callers
-    * should `observe` first. */
-  def assignVersions(df: DataFrame, rawJsonCol: String,
-                     registry: SchemaRegistry): DataFrame =
-    df.withColumn("schema_version",
-      lookupExpr(registry, keysetExpr(col(rawJsonCol))))
-
-  /** Variant over a pre-computed keyset column (avoids re-parsing the JSON
-    * when the keyset is needed downstream anyway). */
+    * registry (keyset string → id) over a pre-computed keyset column — the
+    * one the ingest kernel already produced, so the JSON is parsed once.
+    * Unknown keysets get null. */
   def assignVersionsByKeyset(df: DataFrame, keysetCol: String,
                              registry: SchemaRegistry): DataFrame =
     df.withColumn("schema_version", lookupExpr(registry, col(keysetCol)))

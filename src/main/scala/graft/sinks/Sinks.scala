@@ -22,11 +22,10 @@ object Sinks {
     * per incremental batch when `incId` is set), the layout the reference
     * builds by hand with versioned filenames + inc-id folders. */
   def writeVersioned(df: DataFrame, path: String,
-                     versionCol: String = "schema_version",
                      incId: Option[Long] = None,
                      format: String = "parquet"): Unit = {
     val withInc = incId.map(id => df.withColumn("inc_id", lit(id))).getOrElse(df)
-    val parts = versionCol +: incId.map(_ => "inc_id").toSeq
+    val parts = "schema_version" +: incId.map(_ => "inc_id").toSeq
     val w = withInc.write.partitionBy(parts: _*).mode(SaveMode.Append)
       .format(format)
     (if (format == "csv") w.option("header", "true") else w).save(path)

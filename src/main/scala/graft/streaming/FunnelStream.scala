@@ -140,21 +140,4 @@ object FunnelStream {
     * still override the base at read time. */
   def compact(spark: SparkSession, statePath: String, userCol: String): Unit =
     StreamState.compact(spark, s"$statePath/delta", Seq(userCol))
-
-  /** The standing funnel report — [[Funnels.funnel]]'s shape from the
-    * maintained state instead of a full-log recompute. */
-  def currentReport(spark: SparkSession, statePath: String, userCol: String,
-                    steps: Seq[String], userField: StructField): DataFrame = {
-    val times = currentTimes(spark, statePath, userCol, steps, userField)
-    val counts = steps.indices.map(i =>
-      count(col(s"step_${i + 1}_ts")).as(s"_c${i + 1}"))
-    val rows = steps.zipWithIndex.map { case (step, i) =>
-      struct(lit(i + 1).as("step_idx"), lit(step).as("step_name"),
-        col(s"_c${i + 1}").as("users_reached"))
-    }
-    times.agg(counts.head, counts.tail: _*)
-      .select(explode(array(rows: _*)).as("_r"))
-      .select(col("_r.step_idx"), col("_r.step_name"),
-        col("_r.users_reached"))
-  }
 }

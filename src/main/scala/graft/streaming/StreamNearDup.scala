@@ -50,6 +50,14 @@ import graft.functions.Dedup
   */
 object StreamNearDup {
 
+  /** Char 7-shingles, 32 minhashes in 8 bands of 4, Jaccard ≥ 0.95, and
+    * the LSH bucket cap that drops degenerate bands. */
+  private val ShingleSize = 7
+  private val NumHashes = 32
+  private val Bands = 8
+  private val Threshold = 0.95
+  private val MaxBucket = 1 << 16
+
   /** Runs the AvailableNow drain and returns the number of micro-batches
     * it processed — callers whose downstream semantics assume "one wave =
     * one batch" (cross-batch-only dedup) can assert on it instead of
@@ -57,28 +65,25 @@ object StreamNearDup {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, textCol: String,
                       statePath: String, checkpointPath: String,
-                      shingleSize: Int = 7, numHashes: Int = 32,
-                      bands: Int = 8, threshold: Double = 0.95,
-                      maxBucket: Int = 1 << 16,
                       maxFilesPerTrigger: Option[Int] = None): Long = {
-    val rowsPerBand = numHashes / bands
+    val rowsPerBand = NumHashes / Bands
     StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
         maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         // one persisted frame carries shingles + signature (the
         // minhashNearDups cache discipline — wide rows, columnar persist)
-        val bounds = Dedup.sizeBandBounds(threshold)
+        val bounds = Dedup.sizeBandBounds(Threshold)
         val signed = batch.select(col(idCol),
-            Dedup.hashedCharShingles(lower(col(textCol)), shingleSize).as("hs"))
+            Dedup.hashedCharShingles(lower(col(textCol)), ShingleSize).as("hs"))
           .withColumn("sig",
-            Dedup.minhashSignatureFromHashes(col("hs"), numHashes))
+            Dedup.minhashSignatureFromHashes(col("hs"), NumHashes))
           .withColumn("size_band", Dedup.sizeBand(size(col("hs")), bounds))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val batchBands = Dedup.lshBands(
             signed.select(col(idCol), col("size_band"), col("sig")), idCol,
-            "sig", bands, rowsPerBand, carry = Seq("size_band"))
+            "sig", Bands, rowsPerBand, carry = Seq("size_band"))
           val standingBands = StreamState.readExcluding(session,
             s"$statePath/bands", batchId, StructType(Seq(batch.schema(idCol),
               StructField("band_idx", IntegerType),
@@ -92,12 +97,12 @@ object StreamNearDup {
           // the batch side probes its size band ± 1 (exact — a J ≥ t
           // pair's bands differ by ≤ 1), so far-size collisions never
           // leave the join
-          val cands = Dedup.capBuckets(batchBands, idCol, maxBucket,
+          val cands = Dedup.capBuckets(batchBands, idCol, MaxBucket,
               carry = Seq("size_band"))
             .toDF(s"${idCol}_new", "band_idx", "band_sig", "size_band")
             .withColumn("size_band", explode(array(
               col("size_band") - 1, col("size_band"), col("size_band") + 1)))
-            .join(Dedup.capBuckets(standingBands, idCol, maxBucket,
+            .join(Dedup.capBuckets(standingBands, idCol, MaxBucket,
                 carry = Seq("size_band"))
               .toDF(s"${idCol}_old", "band_idx", "band_sig", "size_band"),
               Seq("band_idx", "band_sig", "size_band"))
@@ -112,8 +117,8 @@ object StreamNearDup {
             .join(standingHs.select(col(idCol).as(s"${idCol}_old"),
               col("n_hs").as("n_old")), s"${idCol}_old")
             .filter(
-              col("n_new").cast("double") >= lit(threshold) * col("n_old") &&
-              col("n_old").cast("double") >= lit(threshold) * col("n_new"))
+              col("n_new").cast("double") >= lit(Threshold) * col("n_old") &&
+              col("n_old").cast("double") >= lit(Threshold) * col("n_new"))
             .select(col(s"${idCol}_new"), col(s"${idCol}_old"))
           // exact-Jaccard confirmation against the STORED shingle sets —
           // the standing corpus text is never touched
@@ -122,7 +127,7 @@ object StreamNearDup {
               col("hs").as("hs_new")), s"${idCol}_new")
             .join(standingHs.select(col(idCol).as(s"${idCol}_old"),
               col("hs").as("hs_old")), s"${idCol}_old")
-            .filter(Dedup.jaccardSorted(col("hs_new"), col("hs_old")) >= threshold)
+            .filter(Dedup.jaccardSorted(col("hs_new"), col("hs_old")) >= Threshold)
             .select(col(s"${idCol}_new").as(idCol)).distinct()
           val accepted = batch.join(dropped, Seq(idCol), "left_anti")
             .select(batch.columns.map(col): _*)

@@ -46,7 +46,10 @@ class JsonKeysetTupleExprSpec extends SparkSpec {
       """{"a": {"x": 1}}""").toDF("rec")
     val reg = SchemaRegistry.seed.observeSorted(
       SchemaRegistry.discoverKeysetsNested(nested, "rec"))
-    val versions = SchemaRegistry.assignVersionsNested(nested, "rec", reg)
+    // the tagging ingestNested runs: the same streaming kernel's keyset
+    val versions = SchemaRegistry.assignVersionsByKeyset(
+        nested.withColumn("ks", JsonKeysetTupleExpr.keysetField(
+          JsonKeysetTupleExpr.jsonLeafKeysetTuple($"rec", Nil))), "ks", reg)
       .select("schema_version").collect().map(r => Option(r.get(0)))
     assert(versions.forall(_.isDefined), versions.toSeq.toString)
   }

@@ -91,7 +91,8 @@ class KllSketchAggSpec extends SparkSpec {
       .toDF("shard", "v")
     val shards = df.groupBy($"shard")
       .agg(Sketches.kllSketch($"v", K).as("sk"))
-    val merged = shards.agg(Sketches.kllMerge($"sk", K).as("sk"))
+    GraftExtensions.register(spark)
+    val merged = shards.agg(expr(s"kll_merge(sk, $K)").as("sk"))
       .withColumn("n", Sketches.kllMass($"sk"))
     val got = merged.select($"n",
         Sketches.kllQuantile($"sk", $"n", 1, 2).as("p50"),

@@ -27,7 +27,8 @@ class MinHashSigExprSpec extends SparkSpec {
 
   test("signature values stay in [0, P)") {
     val out = texts.toDF("t")
-      .select(Dedup.minhashSignature(Dedup.charShingles($"t", 3), 32).as("s"))
+      .select(Dedup.minhashSignatureFromHashes(
+        Dedup.hashedShingles(Dedup.charShingles($"t", 3)), 32).as("s"))
       .as[Seq[Long]].collect().flatten
     assert(out.forall(v => v >= 0 && v < 2147483647L))
   }

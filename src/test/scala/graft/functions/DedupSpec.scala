@@ -46,8 +46,8 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signatures of identical shingle sets are identical") {
     val df = Seq("a b c d e f g h", "a b c d e f g h", "z y x w v u t s")
-      .toDF("t").select(Dedup.minhashSignature(
-        Dedup.charShingles($"t", 3), 16).as("sig")).as[Seq[Long]].collect()
+      .toDF("t").select(Dedup.minhashSignatureFromHashes(
+        Dedup.hashedShingles(Dedup.charShingles($"t", 3)), 16).as("sig")).as[Seq[Long]].collect()
     assert(df(0) == df(1) && df(0) != df(2))
     assert(df(0).size == 16)
     assert(df.flatten.forall(h => h >= 0 && h < 2147483647L))
@@ -201,8 +201,8 @@ class DedupSpec extends SparkSpec {
     val clones = (1 to 70).map(i => (i.toLong, "identical saturated text"))
       .toDF("doc_id", "text")
     val bands = Dedup.lshBands(
-      clones.select($"doc_id", Dedup.minhashSignature(
-        Dedup.charShingles(lower($"text"), 4), 16).as("sig")),
+      clones.select($"doc_id", Dedup.minhashSignatureFromHashes(
+        Dedup.hashedShingles(Dedup.charShingles(lower($"text"), 4)), 16).as("sig")),
       "doc_id", "sig", bands = 4, rowsPerBand = 4)
     assert(Dedup.lshCandidates(bands, "doc_id", maxBucket = 64).count() == 0L)
     assert(Dedup.lshCandidates(bands, "doc_id", maxBucket = 70).count() ==
@@ -226,25 +226,6 @@ class DedupSpec extends SparkSpec {
     Dedup.ngramJaccardNearDups(blocked, "doc_id", "text", "lang",
       n = 2, threshold = 0.9).collect()
     assert(spark.sharedState.cacheManager.isEmpty)
-  }
-
-  test("lshPlan picks the divisor pair whose S-curve threshold is " +
-       "closest to the target; the S-curve is monotone through it") {
-    // 64 hashes, target 0.95: (8, 8) has threshold (1/8)^(1/8) ≈ 0.771,
-    // (4, 16) ≈ 0.917, (2, 32) ≈ 0.979 — 0.95 sits nearest (2, 32)
-    assert(Dedup.lshPlan(64, 0.95) == ((2, 32)))
-    // a loose target prefers wide bands (high recall at low threshold)
-    val (bLoose, rLoose) = Dedup.lshPlan(64, 0.5)
-    assert(math.pow(1.0 / bLoose, 1.0 / rLoose) < 0.65 && bLoose > 4)
-    // the planned curve separates: well-above-target pairs are near-
-    // certain candidates, well-below-target pairs are near-certain not
-    val (b, r) = Dedup.lshPlan(64, 0.9)
-    assert(Dedup.lshCandidateProb(0.98, b, r) > 0.95)
-    assert(Dedup.lshCandidateProb(0.5, b, r) < 0.05)
-    // invariants: factorization exact, guards loud
-    assert(b * r == 64)
-    intercept[IllegalArgumentException] { Dedup.lshPlan(1, 0.9) }
-    intercept[IllegalArgumentException] { Dedup.lshPlan(64, 1.0) }
   }
 
   test("simhashCrossPairs: bipartite only (within-side pairs never " +

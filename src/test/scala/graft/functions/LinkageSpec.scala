@@ -84,68 +84,22 @@ class LinkageSpec extends SparkSpec {
     assert(both.contains((1L, 2L)) && both.contains((1L, 3L)))
   }
 
-  test("phonetic blocking pairs sound-alikes several edits apart and " +
-      "respects the bucket cap") {
-    val rows = Seq(1L -> "Robert", 2L -> "Rupert", 3L -> "Smith",
-      4L -> "Smyth", 5L -> "Jones")
-    val got = Linkage.phoneticPairs(rows.toDF("id", "n"), "id", "n",
-        minScore = 0.0)
-      .as[(Long, Long, Double)].collect()
-    val pairs = got.map(p => (p._1, p._2)).toSet
-    // Robert/Rupert share R163, Smith/Smyth share S530 - lev distance 2
-    // and 1 respectively; Jones pairs with nobody
-    assert(pairs == Set((1L, 2L), (3L, 4L)))
-    got.foreach(p => assert(p._3 > 0.7 && p._3 < 1.0))
-    // a threshold tight enough drops the weaker sound-alike
-    // (jw(Smith,Smyth)=0.8933..., jw(Robert,Rupert)=0.80)
-    val strict = Linkage.phoneticPairs(rows.toDF("id", "n"), "id", "n",
-        minScore = 0.89)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    assert(strict == Set((3L, 4L)))
-    // degenerate hot code: all clones drop under the cap, return above it
-    val clones = (1L to 10L).map(i => i -> "Robert")
-    assert(Linkage.phoneticPairs(clones.toDF("id", "n"), "id", "n", 0.0,
-      maxBucket = 2).count() == 0)
-    assert(Linkage.phoneticPairs(clones.toDF("id", "n"), "id", "n", 0.0,
-      maxBucket = 16).count() == 45)
-  }
-
-  test("dedupByScore keeps the min id of each linked group and every " +
-      "unlinked row") {
-    val rows = Seq(1L -> "martha", 2L -> "marthax", 3L -> "zzz")
-    val df = rows.toDF("id", "n")
-    val pairs = Linkage.linkagePairs(df, "id", "n", 2, 0.8)
-    val kept = Linkage.dedupByScore(df, "id", pairs, 0.8)
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(1L, 3L))
-  }
-
   test("null and empty names: nulls pair nowhere in any pass, empties " +
-       "do not crash the sort/phonetic/union blocks") {
+       "do not crash the sort/union blocks") {
     val df = Seq(
       (1L, Some("robert")), (2L, None), (3L, Some("rupert")),
       (4L, Some("")), (5L, Some("")), (6L, Some("robbert")))
       .toDF("id", "n")
     val sn = Linkage.sortedNeighborhoodPairs(df, "id", "n", 3, 0.0)
       .as[(Long, Long, Double)].collect()
-    val ph = Linkage.phoneticPairs(df, "id", "n", 0.0)
-      .as[(Long, Long, Double)].collect()
     val un = Linkage.linkagePairs(df, "id", "n", 3, 0.0)
       .as[(Long, Long, Double)].collect()
-    for (pairs <- Seq(sn, ph, un)) {
+    for (pairs <- Seq(sn, un)) {
       assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L), pairs.toSeq)
       assert(pairs.forall(p => p._1 != p._2))
     }
-    // the real sound-alikes still surface in the phonetic pass (robert/
-    // rupert/robbert share R163) and the union pass scores them
-    assert(ph.map(p => (p._1, p._2)).toSet
-      .contains((1L, 3L)) || un.map(p => (p._1, p._2)).toSet
-      .contains((1L, 3L)))
-    // empties never crash dedupByScore either; null row survives
-    val kept = Linkage.dedupByScore(df, "id",
-        Linkage.linkagePairs(df, "id", "n", 3, 0.9), 0.9)
-      .select($"id").as[Long].collect().toSet
-    assert(kept.contains(2L) && kept.contains(1L))
+    // the real near-spellings still surface: the union pass scores them
+    assert(un.map(p => (p._1, p._2)).toSet.contains((1L, 3L)))
   }
 
   test("null keys drop; the rank is the distributed form, never a " +

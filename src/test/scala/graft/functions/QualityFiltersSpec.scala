@@ -13,7 +13,7 @@ class QualityFiltersSpec extends SparkSpec {
       .select(col("id"), TextAnalysis.tokens(lower(col("text"))).as("_toks"))
       .select(col("id"),
         QualityFilters.dupTokenFrac(col("_toks")).as("dtf"),
-        QualityFilters.dupLineFrac(col("_toks"), 5).as("dlf"),
+        QualityFilters.dupLineFrac(col("_toks")).as("dlf"),
         QualityFilters.topBigramFrac(col("_toks")).as("tbf"),
         QualityFilters.topBigramCount(col("_toks")).as("tbc"),
         size(col("_toks")).as("m"))

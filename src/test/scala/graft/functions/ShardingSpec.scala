@@ -195,18 +195,4 @@ class ShardingSpec extends SparkSpec {
       }.toMap
     assert(got == ref)
   }
-
-  test("shardManifest totals reconcile with the input") {
-    val packed = Sharding.packShards(docs, "id", "toks", 200, 4)
-    val manifest = Sharding.shardManifest(packed, "id", "toks")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    assert(manifest.map(_._2).sum == 500)
-    assert(manifest.map(_._3).sum ==
-      docs.agg(sum("toks")).as[Long].head())
-    // key ranges are disjoint and ordered
-    val ranges = manifest.sortBy(_._1).map(m => (m._4, m._5))
-    ranges.zip(ranges.tail).foreach { case ((_, lastA), (firstB, _)) =>
-      assert(lastA < firstB)
-    }
-  }
 }

@@ -13,6 +13,23 @@ class SimilaritySpec extends SparkSpec {
     (3L, Seq(0.0f, 1.0f, 0.0f)),   // orthogonal
     (4L, Seq(-1.0f, 0.0f, 0.0f)))  // opposite
 
+  /** Untrained IVF baseline: k rows of a hash-ordered sample used as
+    * centroids as they are. */
+  private def hashSampledCentroids(df: org.apache.spark.sql.DataFrame,
+                                   k: Int): Seq[Seq[Double]] =
+    df.select($"id", $"v")
+      .orderBy(pmod(xxhash64($"id"), lit(1000003L)), $"id")
+      .limit(k).collect()
+      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
+
+  /** Mean squared distance of each vector to its nearest centroid — the
+    * quantization error Lloyd iterations minimize. */
+  private def quantizationError(vectors: Seq[Seq[Double]],
+                                centroids: Seq[Seq[Double]]): Double =
+    vectors.map { v =>
+      centroids.map(c => c.zip(v).map { case (x, y) => (x - y) * (x - y) }.sum).min
+    }.sum / vectors.size
+
   test("cosine: identical=1, orthogonal=0, opposite=-1") {
     val df = vecs.toDF("id", "v")
     val out = df.select(Similarity.cosine($"v", typedLit(Seq(1.0, 0.0, 0.0))).as("c"))
@@ -85,10 +102,10 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Seq(base + i * 0.001f, base, 0.1f * (i % 3)))
     }
     val df = data.toDF("id", "v")
-    val centroids = Similarity.ivfCentroids(df, "v", "id", 4)
+    val centroids = hashSampledCentroids(df, 4)
     assert(centroids.size == 4)
     // deterministic across calls
-    assert(centroids == Similarity.ivfCentroids(df, "v", "id", 4))
+    assert(centroids == hashSampledCentroids(df, 4))
     val cells = df.select(Similarity.ivfCell($"v", centroids).as("c"))
       .as[Int].collect()
     assert(cells.forall(c => c >= 1 && c <= 4))
@@ -115,14 +132,14 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, base.map(_ + (rnd.nextFloat() - 0.5f) * 0.2f))
     }
     val df = data.toDF("id", "v")
-    val untrained = Similarity.ivfCentroids(df, "v", "id", 4)
+    val untrained = hashSampledCentroids(df, 4)
     val trained =
       Similarity.ivfCentroidsTrainedPortable(df, "v", "id", 4, iters = 5)
     assert(trained ==
       Similarity.ivfCentroidsTrainedPortable(df, "v", "id", 4, iters = 5))
     val vecs = data.map(_._2.map(_.toDouble))
-    val errU = Similarity.quantizationError(vecs, untrained)
-    val errT = Similarity.quantizationError(vecs, trained)
+    val errU = quantizationError(vecs, untrained)
+    val errT = quantizationError(vecs, trained)
     assert(errT < errU)
     // single-probe recall vs brute force improves with trained cells
     val q = Seq(4.0, 0.1, 0.0)
@@ -156,9 +173,9 @@ class SimilaritySpec extends SparkSpec {
       assert(x == math.floor(x * 1e6) / 1e6, s"unquantized coord $x"))
     // quantization is cosmetic: error comparable to hash-seeded centroids
     val vecs = data.map(_._2.map(_.toDouble))
-    val untrained = Similarity.ivfCentroids(df, "v", "id", 4)
-    assert(Similarity.quantizationError(vecs, p1) <=
-      Similarity.quantizationError(vecs, untrained))
+    val untrained = hashSampledCentroids(df, 4)
+    assert(quantizationError(vecs, p1) <=
+      quantizationError(vecs, untrained))
   }
 
   test("blocking axes track variance; concentrated-first-dims corpus still exact") {

@@ -46,13 +46,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(0) == out(1) && out(0) != out(2))
   }
 
-  test("rollingHash is order-sensitive and stable") {
-    val out = Seq("a b c", "c b a", "a b c").toDF("t")
-      .select(TextAnalysis.rollingHash($"t").as("h")).as[Long].collect()
-    assert(out(0) == out(2) && out(0) != out(1))
-    assert(out.forall(h => h >= 0 && h < 1000000007L))
-  }
-
   test("chunkDocuments: full coverage, overlap, short tail, " +
        "single-chunk short doc, empty/null docs dropped, guards") {
     val ten = (1 to 10).map(i => s"t$i").mkString(" ")

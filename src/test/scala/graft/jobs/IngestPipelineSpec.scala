@@ -41,14 +41,6 @@ class IngestPipelineSpec extends SparkSpec {
     assert(r2.registry.withoutSeed.versions.size == 2)
   }
 
-  test("warehouseMerge upserts staging into warehouse") {
-    val wh = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "v", "amt")
-    val st = Seq((2L, "b2", 9.0), (3L, "c", 3.0)).toDF("k", "v", "amt")
-    val out = IngestPipeline.warehouseMerge(wh, st, Seq("k"))
-      .orderBy("k").as[(Long, String, Double)].collect().toSeq
-    assert(out == Seq((1L, "a", 1.0), (2L, "b2", 9.0), (3L, "c", 3.0)))
-  }
-
   test("parseWithDlq routes every line: typed mains, raw-carrying DLQ, " +
        "missing fields stay main with nulls, nothing dropped") {
     import org.apache.spark.sql.types._

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -15,7 +14,7 @@ class MetricsSpec extends SparkSpec {
     val df = (1 to 500).map(i =>
         (i.toLong, if (i % 5 == 0) null else s"v$i", "1"))
       .toDF("id", "v", "schema_version")
-    val dir = Files.createTempDirectory("metrics_w").toString
+    val dir = tempDir("metrics_w").toString
 
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
@@ -25,7 +24,7 @@ class MetricsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val (observed, obs) = Metrics.observed(df, "test_bc",
-        Metrics.nullCount("v"))
+        count(when($"v".isNull, lit(1))).as("v_nulls"))
       Sinks.writeVersioned(observed, dir)
       // obs.get blocks until the write job's metrics arrive — the listener
       // events for that job are fully delivered by then

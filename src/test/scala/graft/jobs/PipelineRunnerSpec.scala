@@ -34,8 +34,8 @@ class PipelineRunnerSpec extends SparkSpec {
   test("config parses tables, areas, naming and incremental flags") {
     val cfg = EngineConfig.fromJson(tableJson, subjectAreaJson)
     assert(cfg.tables.size == 3)
-    assert(cfg.isIncremental("gl_transaction_detail"))
-    assert(!cfg.isIncremental("account"))
+    assert(cfg.tables("gl_transaction_detail").incremental)
+    assert(!cfg.tables("account").incremental)
     assert(cfg.tables("gl_transaction_detail").warehouseTableName ==
       "luma_gl_transaction_detail")
     assert(cfg.tablesFor("general_ledger").map(_._1) ==
@@ -43,7 +43,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("subject-area run ingests each class, isolates failures, reports jobs") {
-    val base = Files.createTempDirectory("graft_runner").toString
+    val base = tempDir("graft_runner").toString
     val (lake, bronze, silver) = (s"$base/lake", s"$base/bronze", s"$base/silver")
     Files.createDirectories(Paths.get(lake))
     Files.writeString(Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"),
@@ -85,7 +85,7 @@ class PipelineRunnerSpec extends SparkSpec {
       |}""".stripMargin
 
   test("incremental re-run loads only new keys and keeps registry ids stable") {
-    val base = Files.createTempDirectory("graft_runner_inc").toString
+    val base = tempDir("graft_runner_inc").toString
     val (lake, bronze, silver, reg) =
       (s"$base/lake", s"$base/bronze", s"$base/silver", s"$base/registry")
     Files.createDirectories(Paths.get(lake))
@@ -129,7 +129,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("incremental diff reads the key history, not the silver table") {
-    val base = Files.createTempDirectory("graft_runner_hist").toString
+    val base = tempDir("graft_runner_hist").toString
     val (lake, bronze, silver) = (s"$base/lake", s"$base/bronze", s"$base/silver")
     Files.createDirectories(Paths.get(lake))
     Files.writeString(Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"),
@@ -162,7 +162,7 @@ class PipelineRunnerSpec extends SparkSpec {
   }
 
   test("silver predating the history backfills it PERSISTENTLY (no re-append)") {
-    val base = Files.createTempDirectory("graft_runner_bf").toString
+    val base = tempDir("graft_runner_bf").toString
     val (lake, bronze, silver) = (s"$base/lake", s"$base/bronze", s"$base/silver")
     Files.createDirectories(Paths.get(lake))
     // pre-existing silver from an older deployment, no key history

@@ -67,8 +67,8 @@ class AudioSamplesSpec extends SparkSpec {
     assert(minDist > 8, s"cross-seed min hamming $minDist too small")
   }
 
-  test("audioNearDups equals the exhaustive driver recount on a planted " +
-      "clone corpus and drops only undecodable rows") {
+  test("q288's near-dup composition equals the exhaustive driver recount " +
+      "on a planted clone corpus and drops only undecodable rows") {
     val ids = (0L until 24L).toDF("id")
     val media = AudioSamples.fixtureFrame(ids, "id", 65 * 60, 44100)
       .unionByName(AudioSamples.fixtureFrame(
@@ -76,8 +76,13 @@ class AudioSamplesSpec extends SparkSpec {
         gainShift = 1, idOffset = 100000L))
       .unionByName(AudioSamples.fixtureFrame(ids.filter($"id" === 0),
         "id", 65 * 2, 8000, idOffset = 999999L, truncateTo = 20))
-    val got = AudioSamples.audioNearDups(media, "media_id", "payload",
-        maxDist = 4)
+    // the pairing q288 runs: fingerprint, drop undecodable rows, then the
+    // pigeonhole join over eight 8-bit chunks
+    val got = graft.functions.Dedup.simhashNearDups(
+        AudioSamples.audioHashFrame(media, "media_id", "payload")
+          .filter($"ahash".isNotNull),
+        "media_id", "ahash", maxDist = 4, numChunks = 8, chunkBits = 8,
+        simBits = 64)
       .as[(Long, Long, Int)].collect().toSet
     val hs = ((0L until 24L).map(s => s -> AudioSamples.audioHashOf(
         AudioSamples.wavPayload(s, 65 * 60, 44100)).get)

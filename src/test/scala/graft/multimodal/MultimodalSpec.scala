@@ -45,10 +45,4 @@ class MultimodalSpec extends SparkSpec {
     val widths = frames.select(length($"frame")).as[Int].collect()
     assert(widths.forall(_ <= 8) && widths.head == 8)
   }
-
-  test("mediaSchema round-trips through a DataFrame") {
-    val df = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Multimodal.mediaSchema)
-    assert(df.schema == Multimodal.mediaSchema)
-  }
 }

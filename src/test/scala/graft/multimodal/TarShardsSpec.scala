@@ -40,7 +40,7 @@ class TarShardsSpec extends SparkSpec {
   test("tar shards round-trip: every sample lands exactly once as a " +
        ".bin/.json pair in key order, shards respect the byte budget, " +
        "the manifest matches the files, and a re-export is byte-identical") {
-    val base = Files.createTempDirectory("graft_tar").toString
+    val base = tempDir("graft_tar").toString
     val docs = (1L to 20L)
       .map(i => (i, s"payload-$i-${"x" * (i.toInt * 10)}".getBytes(UTF_8)))
       .toDF("media_id", "payload")
@@ -106,7 +106,7 @@ class TarShardsSpec extends SparkSpec {
 
   test("null payloads export as empty entries; an over-budget payload " +
        "lands alone instead of failing") {
-    val base = Files.createTempDirectory("graft_tar2").toString
+    val base = tempDir("graft_tar2").toString
     val docs = Seq(
       (1L, Some("small".getBytes(UTF_8))),
       (2L, None),
@@ -127,7 +127,7 @@ class TarShardsSpec extends SparkSpec {
   test("streaming export ships each wave as its own batch_id dir; the " +
        "glob re-import equals the corpus exactly once; a no-data drain " +
        "adds nothing") {
-    val base = Files.createTempDirectory("graft_tar4").toString
+    val base = tempDir("graft_tar4").toString
     val docs = (1L to 9L)
       .map(i => (i, s"payload-$i".getBytes(UTF_8))).toDF("media_id", "payload")
     def run(): Long = TarShards.streamExportAvailableNow(spark,
@@ -152,7 +152,7 @@ class TarShardsSpec extends SparkSpec {
 
   test("a shard violating the .bin/.json pairing contract fails LOUDLY " +
        "on read — never a silent partial-sample drop") {
-    val base = Files.createTempDirectory("graft_tar3").toString
+    val base = tempDir("graft_tar3").toString
     TarShards.writeTarShards(
       Seq((1L, "a".getBytes(UTF_8)), (2L, "bb".getBytes(UTF_8)))
         .toDF("media_id", "payload"),

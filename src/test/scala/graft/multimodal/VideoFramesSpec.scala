@@ -53,8 +53,10 @@ class VideoFramesSpec extends SparkSpec {
         "id", 12, 144, 128, shift = 3, rate = 2, idOffset = 100L))
       .unionByName(VideoFrames.fixtureFrame(ids.filter($"id" === 1),
         "id", 12, 72, 64, idOffset = 200L, divergeFrom = 6))
-    val got = VideoFrames.videoNearDups(media, "media_id", "payload",
-        k = 8, maxDist = 4)
+    val got = VideoFrames.videoNearDupsFromHashes(
+        VideoFrames.videoHashFrame(media, "media_id", "payload", k = 8)
+          .filter($"fhash".isNotNull),
+        "media_id", k = 8, maxDist = 4)
       .as[(Long, Long, Long)].collect().toSet
     // driver recount over all decodable videos
     val specs = (0L until 6L).map(s => s -> (s, 72, 64, 0, 1, Int.MaxValue)) ++

@@ -17,7 +17,7 @@ class WarcArchivesSpec extends SparkSpec {
 
   test("gzip and plain WARC files round-trip through one scan; every " +
       "record is its own gzip member behind a warcinfo leader") {
-    val dir = Files.createTempDirectory("warc").toString
+    val dir = tempDir("warc").toString
     val rows = (0L until 10L).map(i => page(i, s"body $i"))
       .toDF("doc_id", "uri", "payload")
     val m1 = WarcArchives.writeWarcFiles(rows.filter($"doc_id" < 8),
@@ -38,13 +38,12 @@ class WarcArchivesSpec extends SparkSpec {
     val recs = WarcArchives.readWarcRecords(spark, dir)
     assert(recs.filter($"warc_type" === "warcinfo").count() == 3)
     val resp = recs.filter($"warc_type" === "response")
-      .select($"target_uri", $"payload").as[(String, Array[Byte])]
-      .collect().toMap
+      .select($"target_uri", WarcArchives.httpBodyText($"payload"))
+      .as[(String, String)].collect().toMap
     assert(resp.keySet == (0L until 10L)
       .map(i => s"https://example.com/doc/$i").toSet)
     (0L until 10L).foreach { i =>
-      assert(new String(WarcArchives.httpBody(
-        resp(s"https://example.com/doc/$i")), "UTF-8")
+      assert(resp(s"https://example.com/doc/$i")
         == s"<html><body><p>body $i</p></body></html>")
     }
   }

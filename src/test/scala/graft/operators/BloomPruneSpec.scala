@@ -14,7 +14,7 @@ class BloomPruneSpec extends SparkSpec {
     val plain = probe.join(build, $"pk" === $"bk")
       .select("pk", "pv", "bv").as[(Long, String, String)].collect().toSet
     val pruned = BloomPrune.join(probe, "pk", build, "bk",
-        expectedItems = 200, fpp = 0.03)
+        expectedItems = 200)
       .select("pk", "pv", "bv").as[(Long, String, String)].collect().toSet
     assert(pruned == plain)
     assert(plain.size == 200)

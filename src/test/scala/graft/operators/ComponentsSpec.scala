@@ -69,14 +69,6 @@ class ComponentsSpec extends SparkSpec {
     assert(out == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L))
   }
 
-  test("keepClusterRepresentatives keeps exactly the component minima") {
-    val docs = (1L to 6L).map(i => (i, s"d$i")).toDF("id", "t")
-    val kept = Components.keepClusterRepresentatives(docs, "id",
-        Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b"), "a", "b")
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(1L, 4L, 5L))
-  }
-
   test("cluster labels are idempotent (label of a label is itself)") {
     val rnd = new scala.util.Random(11)
     val pairs = (0 until 150).map(_ =>

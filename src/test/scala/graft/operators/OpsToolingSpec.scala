@@ -10,7 +10,7 @@ class OpsToolingSpec extends SparkSpec {
   import spark.implicits._
 
   test("summarizeLogs extracts duration and failure lines per file") {
-    val dir = Files.createTempDirectory("graft_logs").toString
+    val dir = tempDir("graft_logs").toString
     Files.writeString(Paths.get(s"$dir/day1.log"),
       Seq("starting", "LOAD DURATION: 12.5s", "gl load failed: timeout",
         "LOAD DURATION: 3.1s", "done").mkString("\n"))
@@ -39,7 +39,7 @@ class OpsToolingSpec extends SparkSpec {
   }
 
   test("readCsv uses the supplied schema, no inference") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     Files.writeString(Paths.get(s"$dir/data.csv"), "id,amount\n1,2.5\nx,3.5")
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("amount", DoubleType)))

@@ -205,36 +205,6 @@ class Scd2Spec extends SparkSpec {
     assert(messages(e).exists(_.contains("raise bucketSeconds")))
   }
 
-  test("pointInTimeAuto derives a bucket width from the dimension's " +
-       "closed-interval median and matches the explicit-bucket answer") {
-    val dim = hist.select($"user_id", $"event_type".as("type_at_time"),
-      $"valid_from", $"valid_to", $"version")
-    val facts = Seq(
-      (100L, 1L, "2024-01-01 12:00:00"),
-      (101L, 1L, "2024-01-03 00:00:00"),
-      (102L, 1L, "2024-01-30 00:00:00"),
-      (103L, 2L, "2024-01-04 00:00:00"))
-      .toDF("fact_id", "user_id", "ts_s")
-      .select($"fact_id", $"user_id", to_timestamp($"ts_s").as("ts"))
-    val auto = Scd2.pointInTimeAuto(facts, dim, Seq("user_id"), "ts",
-        dimCols = Seq("type_at_time"))
-      .select($"fact_id", $"version", $"type_at_time")
-      .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    val explicit = Scd2.pointInTime(facts, dim, Seq("user_id"), "ts",
-        bucketSeconds = 86400L, dimCols = Seq("type_at_time"))
-      .select($"fact_id", $"version", $"type_at_time")
-      .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    assert(auto == explicit)
-    // all-open dimension (no closed intervals) still derives a width
-    val openDim = dim.filter($"valid_to".isNull)
-    val openOut = Scd2.pointInTimeAuto(facts, openDim, Seq("user_id"), "ts",
-        dimCols = Seq("type_at_time"))
-      .select($"fact_id", $"version").as[(Long, Long)]
-      .collect().sortBy(_._1).toSeq
-    // facts before each key's open-version start drop; the rest match
-    assert(openOut == Seq((102L, 3L), (103L, 1L)))
-  }
-
   test("pointInTime plans an equi-join on (key, bucket) — no nested-loop " +
        "or cartesian fallback") {
     val dim = hist.select($"user_id", $"event_type".as("type_at_time"),

@@ -19,14 +19,4 @@ class SkewSpec extends SparkSpec {
     assert(salted == plain)
     assert(salted.count(_._1 == 1L) == 1000)
   }
-
-  test("saltedAgg equals the plain aggregation") {
-    val plain = big.groupBy("k").agg(count(lit(1)).as("n"), sum($"row_id").as("s"))
-      .orderBy("k").as[(Long, Long, Long)].collect().toSeq
-    val salted = Skew.saltedAgg(big, Seq("k"), "row_id", 8)(
-      Seq(count(lit(1)).as("pn"), sum($"row_id").as("ps")),
-      Seq(sum($"pn").cast("long").as("n"), sum($"ps").cast("long").as("s")))
-      .orderBy("k").as[(Long, Long, Long)].collect().toSeq
-    assert(salted == plain)
-  }
 }

@@ -73,44 +73,4 @@ class TableStatsSpec extends SparkSpec {
       .as[(Long, Double, Double, Long)].collect().sortBy(_._1).toSeq
     assert(got.map(_._4) == Seq(3L, 0L, 0L, 0L))
   }
-
-  test("fileStats reports per-table file counts and flags small files; " +
-       "hidden commit/checkpoint files are excluded; compaction shrinks " +
-       "the report") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fstats")
-    val frag = s"$base/frag"
-    val tidy = s"$base/tidy"
-    val df = spark.range(0, 1000).toDF("id")
-    df.repartition(16).write.parquet(frag) // 16 small files + _SUCCESS
-    df.coalesce(1).write.parquet(tidy)
-    val got = TableStats.fileStats(spark, Seq(frag, tidy, s"$base/nope"))
-      .as[(String, Long, Long, Long, Long, Long, Long)]
-      .collect().map(r => r._1 -> r).toMap
-    val (_, nF, totF, avgF, minF, maxF, smallF) = got(frag)
-    assert(nF == 16 && smallF == 16) // every fragment is < 32 MiB
-    assert(totF > 0 && avgF == totF / 16 && minF > 0 && maxF >= minF)
-    assert(got(tidy)._2 == 1)
-    // a missing path reports zeros rather than failing the whole sweep
-    assert(got(s"$base/nope")._2 == 0)
-    // after compaction the same report shows the need is gone
-    assert(got(frag)._2 > got(tidy)._2)
-  }
-
-  test("fileStats hides whole HIDDEN SUBTREES like a Spark scan does, " +
-       "but keeps `=`-bearing partition dirs with a _ prefix") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fstats2")
-    def put(rel: String): Unit = {
-      val p = base.resolve(rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, "x".getBytes)
-    }
-    put("t/part-0.parquet")                 // visible
-    put("t/.checkpoints/part-1.parquet")    // hidden dir → invisible
-    put("t/_staging/deep/part-2.parquet")   // hidden dir, nested file
-    put("t/_gbucket=3/part-3.parquet")      // partition dir → visible
-    put("t/_SUCCESS")                       // hidden leaf
-    val got = TableStats.fileStats(spark, Seq(s"$base/t"))
-      .as[(String, Long, Long, Long, Long, Long, Long)].collect().head
-    assert(got._2 == 2, got) // part-0 + the _gbucket=3 file only
-  }
 }

@@ -19,10 +19,4 @@ class ValidationSpec extends SparkSpec {
       .as[(String, Long, Long, Boolean)].collect().toSeq
     assert(out == Seq(("a", 2L, 2L, true), ("b", 3L, 0L, false), ("c", 0L, 1L, false)))
   }
-
-  test("columnDrift reports missing and unknown columns") {
-    val (missing, unknown) = Validation.columnDrift(Seq("a", "x"), Set("a", "b"))
-    assert(missing == Seq("b"))
-    assert(unknown == Seq("x"))
-  }
 }

@@ -14,7 +14,7 @@ class OrcRoundTripSpec extends SparkSpec {
 
   test("partitioned ORC read-back prunes partitions AND pushes the " +
        "row filter into the reader") {
-    val base = java.nio.file.Files.createTempDirectory("graft_orcspec")
+    val base = tempDir("graft_orcspec")
     try {
       val df = Seq(
         (1L, "en", 500L), (2L, "de", 50L), (3L, "en", 120L),

@@ -20,7 +20,7 @@ class PairCurationSpec extends SparkSpec {
     df.filter(col("pair_id_a") === a && col("pair_id_b") === b).count() == 1
 
   test("q296 geometry: shard round-trip, cross-modal triple, closure") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q296_spec")
+    val base = tempDir("graft_q296_spec")
       .toString
     try {
       val (imported, imgPairs, txtPairs, clusters) =

@@ -29,7 +29,7 @@ class SchemaRegistrySpec extends SparkSpec {
   }
 
   test("save/load round-trips version ids; loadOrSeed seeds when missing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reg").toString
+    val dir = tempDir("graft_reg").toString
     val path = s"$dir/FSM_Account_schemas.json"
     assert(SchemaRegistry.loadOrSeed(spark, path) == SchemaRegistry.seed)
     val r = SchemaRegistry.seed.observe(Seq(Set("b", "a"), Set("a")))
@@ -43,7 +43,7 @@ class SchemaRegistrySpec extends SparkSpec {
 
   test("save/load round-trips column names with a tab, a newline, a " +
       "quote and a backslash") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reg_esc").toString
+    val dir = tempDir("graft_reg_esc").toString
     val path = s"$dir/esc_schemas.json"
     val r = SchemaRegistry.seed.observe(Seq(
       Set("a\tb", "line\nbreak"), Set("say \"hi\"", "back\\slash", "plain")))
@@ -59,7 +59,8 @@ class SchemaRegistrySpec extends SparkSpec {
       """{"a": 1}""").toDF("rec")
     val reg = SchemaRegistry.seed
       .observeSorted(SchemaRegistry.discoverKeysets(df, "rec"))
-    val out = SchemaRegistry.assignVersions(df, "rec", reg)
+    val out = SchemaRegistry.assignVersionsByKeyset(
+        df.withColumn("ks", SchemaRegistry.keysetExpr($"rec")), "ks", reg)
       .select("schema_version").as[Int].collect().toSeq
     // sorted keysets: "a" < "a,b" → versions 1 and 2
     assert(out == Seq(2, 2, 1))

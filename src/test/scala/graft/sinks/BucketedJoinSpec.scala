@@ -11,7 +11,7 @@ class BucketedJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private val dbDir =
-    java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    tempDir("graft_bkt").toString
 
   private def withJoinConf[A](body: => A): A = {
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -30,7 +29,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeVersioned partitions by schema version (and inc id when set)") {
-    val dir = Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink").toString
     val df = Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 2))
       .toDF("id", "v", "schema_version")
     Sinks.writeVersioned(df, s"$dir/bc", incId = Some(1705276800L))
@@ -46,7 +45,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeMerged overwrites; single-file mode emits one part file") {
-    val dir = Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink").toString
     val df = spark.range(100).toDF("id").repartition(4)
     Sinks.writeMerged(df, s"$dir/merged", singleFile = true)
     val parts = new java.io.File(s"$dir/merged").listFiles()
@@ -56,7 +55,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("csv interchange format round-trips through both sinks (K1/K2)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val base = tempDir("graft_csv").toString
     val df = Seq((1L, "a", 2), (2L, "b", 2), (3L, "c", 3))
       .toDF("k", "v", "schema_version")
     Sinks.writeVersioned(df, s"$base/versioned", format = "csv")

@@ -36,7 +36,7 @@ class CursorSimSpec extends SparkSpec {
       .schema(schema).option("path", dir).option("start", start).load()
 
   test("cursor chain is followed to the zero-count terminal; all records read") {
-    val dir = Files.createTempDirectory("graft_cursor").toString
+    val dir = tempDir("graft_cursor").toString
     writePages(dir)
     val out = scan(dir).orderBy("id")
       .as[(Long, Double, String)].collect().toSeq
@@ -47,7 +47,7 @@ class CursorSimSpec extends SparkSpec {
   }
 
   test("a cyclic chain without a terminal page stops at the visited guard") {
-    val dir = Files.createTempDirectory("graft_cursor_cycle").toString
+    val dir = tempDir("graft_cursor_cycle").toString
     def page(file: String, next: String, ids: Seq[Int]): Unit = {
       val header =
         s"""{"_count": ${ids.length}, "_links": [{"href": "$file"}, {"href": "$next"}]}"""
@@ -62,7 +62,7 @@ class CursorSimSpec extends SparkSpec {
   }
 
   test("filter and column pushdown reach the cursor reader") {
-    val dir = Files.createTempDirectory("graft_cursor_push").toString
+    val dir = tempDir("graft_cursor_push").toString
     writePages(dir)
     val out = scan(dir).filter($"id" > 2).select("id", "status").orderBy("id")
     assert(out.collect().map(_.getLong(0)).toSeq == Seq(3L, 4L, 5L))
@@ -71,7 +71,7 @@ class CursorSimSpec extends SparkSpec {
   }
 
   test("declared count header total reconciles with the scan (A2/A3)") {
-    val dir = Files.createTempDirectory("graft_cursor_count").toString
+    val dir = tempDir("graft_cursor_count").toString
     writePages(dir)
     val declared = CursorIndex.declaredTotal(dir, "page0.json")
     val check = graft.operators.Validation.reconcile(scan(dir).count(), declared)

@@ -1,6 +1,5 @@
 package graft.sources.lakesim
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
@@ -15,7 +14,7 @@ class LakeOptimizeSpec extends SparkSpec {
     StructField("y", LongType)))
 
   private def freshLake(nObjects: Int): String = {
-    val dir = Files.createTempDirectory("lakesim_opt").toString
+    val dir = tempDir("lakesim_opt").toString
     (0 until 1024).map(i => (i.toLong, (i % 32).toLong, (i / 32).toLong))
       .toDF("id", "x", "y")
       .repartition(nObjects)
@@ -45,7 +44,7 @@ class LakeOptimizeSpec extends SparkSpec {
   test("compaction preserves bloomed-ness: bloom fields are lake state, " +
        "so a maintenance rewrite that never heard of the option keeps " +
        "computing them") {
-    val dir = Files.createTempDirectory("lakesim_opt_bloom").toString
+    val dir = tempDir("lakesim_opt_bloom").toString
     (0 until 1024).map(i => (i.toLong, (i % 32).toLong, (i / 32).toLong))
       .toDF("id", "x", "y").repartition(16)
       .write.format(classOf[LakeSimSource].getName)

@@ -14,7 +14,7 @@ class LakeSimSourceSpec extends SparkSpec {
   /** Three data objects with disjoint amount ranges, like the reference's
     * split-query chunks. */
   lazy val lakeDir: String = {
-    val dir = Files.createTempDirectory("lakesim").toString
+    val dir = tempDir("lakesim").toString
     def write(name: String, lines: Seq[String]): Unit =
       Files.write(Paths.get(s"$dir/$name"),
         lines.mkString("\n").getBytes("UTF-8"))
@@ -90,7 +90,7 @@ class LakeSimSourceSpec extends SparkSpec {
     assert(lake.filter($"amount" > 100).agg(max($"amount"))
       .head().getDouble(0) == 300.0)
     // an object lacking the field's range → full scan, same answer
-    val dir2 = Files.createTempDirectory("lakesim_aggfb").toString
+    val dir2 = tempDir("lakesim_aggfb").toString
     Files.write(Paths.get(s"$dir2/obj1.ndjson"),
       """{"id": 1, "region": "A", "amount": 10}""".getBytes("UTF-8"))
     Files.write(Paths.get(s"$dir2/index.json"),

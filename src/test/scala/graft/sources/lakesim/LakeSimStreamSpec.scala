@@ -34,7 +34,7 @@ class LakeSimStreamSpec extends SparkSpec {
 
   test("AvailableNow is admission-controlled: maxObjectsPerBatch bounds " +
       "each micro-batch and the drain still covers everything") {
-    val base = Files.createTempDirectory("lakestream_an").toString
+    val base = tempDir("lakestream_an").toString
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
     (0 until 5).foreach { i =>
       writeObject(base, s"obj$i.ndjson", (i * 10 + 1) to (i * 10 + 10)) }
@@ -70,7 +70,7 @@ class LakeSimStreamSpec extends SparkSpec {
   }
 
   test("micro-batches cover new objects exactly once across restarts") {
-    val base = Files.createTempDirectory("lakestream").toString
+    val base = tempDir("lakestream").toString
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
     writeObject(base, "obj0.ndjson", 1 to 10)
     writeIndex(base, Seq("obj0.ndjson" -> 10))

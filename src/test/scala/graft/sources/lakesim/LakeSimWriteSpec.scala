@@ -20,7 +20,7 @@ class LakeSimWriteSpec extends SparkSpec {
       .schema(schema).option("path", dir).load()
 
   test("write then scan returns exactly the written rows (round trip)") {
-    val dir = Files.createTempDirectory("lakesim_w").toString
+    val dir = tempDir("lakesim_w").toString
     val df = (1 to 25).map(i => (i.toLong, if (i % 2 == 0) "A" else "B",
       i * 10.0)).toDF("id", "region", "amount")
     df.repartition(3).write.format(classOf[LakeSimSource].getName)
@@ -38,7 +38,7 @@ class LakeSimWriteSpec extends SparkSpec {
 
   test("publish=copy (the rename-free object-store primitive set) runs " +
        "the full commit/truncate protocol: round trip, no temp litter") {
-    val dir = Files.createTempDirectory("lakesim_w_os").toString
+    val dir = tempDir("lakesim_w_os").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
         .coalesce(1).write.format(classOf[LakeSimSource].getName)
@@ -57,7 +57,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("append extends the lake; overwrite truncates it") {
-    val dir = Files.createTempDirectory("lakesim_w2").toString
+    val dir = tempDir("lakesim_w2").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
         .coalesce(1).write.format(classOf[LakeSimSource].getName)
@@ -75,7 +75,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("a truncate commit failing before the index swap leaves the old lake intact") {
-    val dir = Files.createTempDirectory("lakesim_w5").toString
+    val dir = tempDir("lakesim_w5").toString
     (1 to 5).map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
       .coalesce(1).write.format(classOf[LakeSimSource].getName)
       .option("path", dir).mode("overwrite").save()
@@ -94,7 +94,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("a commit detects a concurrent writer and aborts without publishing") {
-    val dir = Files.createTempDirectory("lakesim_w7").toString
+    val dir = tempDir("lakesim_w7").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
         .coalesce(1).write.format(classOf[LakeSimSource].getName)
@@ -117,7 +117,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("truncate publishes new objects under names that never collide with live ones") {
-    val dir = Files.createTempDirectory("lakesim_w6").toString
+    val dir = tempDir("lakesim_w6").toString
     def write(ids: Range): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
         .coalesce(1).write.format(classOf[LakeSimSource].getName)
@@ -135,7 +135,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("written index ranges drive split pruning on read-back") {
-    val dir = Files.createTempDirectory("lakesim_w3").toString
+    val dir = tempDir("lakesim_w3").toString
     // two partitions with disjoint id ranges → two objects with tight ranges
     val df = ((1 to 10) ++ (101 to 110)).map(i => (i.toLong, "A", i * 1.0))
       .toDF("id", "region", "amount")
@@ -154,7 +154,7 @@ class LakeSimWriteSpec extends SparkSpec {
   test("bloomfields: equality lookups prune objects whose RANGES overlap " +
        "but whose value SETS are disjoint; un-bloomed lakes never prune on " +
        "blooms") {
-    val dir = Files.createTempDirectory("lakesim_wb").toString
+    val dir = tempDir("lakesim_wb").toString
     // two appended objects with fully-overlapping id ranges (evens 2..100,
     // odds 1..99) — range pruning is useless here by construction
     def write(ids: Seq[Int], region: String): Unit =
@@ -196,7 +196,7 @@ class LakeSimWriteSpec extends SparkSpec {
     assert(readLake(dir).filter($"id".isin(42L, 43L, 9999L))
       .select("id").as[Long].collect().toSet == Set(42L, 43L))
     // a lake written WITHOUT bloomfields has no blooms and keeps both
-    val plain = Files.createTempDirectory("lakesim_wp").toString
+    val plain = tempDir("lakesim_wp").toString
     Seq((1L, "A", 1.0)).toDF("id", "region", "amount")
       .coalesce(1).write.format(classOf[LakeSimSource].getName)
       .option("path", plain).mode("overwrite").save()
@@ -206,7 +206,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("empty partitions publish no objects") {
-    val dir = Files.createTempDirectory("lakesim_w4").toString
+    val dir = tempDir("lakesim_w4").toString
     Seq((1L, "A", 1.0)).toDF("id", "region", "amount")
       .repartition(8).write.format(classOf[LakeSimSource].getName)
       .option("path", dir).mode("overwrite").save()
@@ -217,7 +217,7 @@ class LakeSimWriteSpec extends SparkSpec {
   test("versioned commits time-travel: each commit is a readable " +
        "version, truncate keeps old objects for old versions, vacuum " +
        "reclaims them and only them") {
-    val dir = Files.createTempDirectory("lakesim_tt").toString
+    val dir = tempDir("lakesim_tt").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
         .coalesce(1).write.format(classOf[LakeSimSource].getName)
@@ -269,7 +269,7 @@ class LakeSimWriteSpec extends SparkSpec {
   test("versioning invariants survive hostile sequences: name reuse " +
        "never clobbers history, a forgetful maintenance write preserves " +
        "it, and a phantom version self-repairs") {
-    val dir = Files.createTempDirectory("lakesim_tt2").toString
+    val dir = tempDir("lakesim_tt2").toString
     def write(ids: Range, mode: String, versionedOpt: Boolean): Unit = {
       val w = ids.map(i => (i.toLong, "A", i * 1.0))
         .toDF("id", "region", "amount")

@@ -126,7 +126,7 @@ class LakeTransportSpec extends SparkSpec {
   }
 
   test("FileTransport is byte-identical to direct file reads") {
-    val dir = Files.createTempDirectory("graft_transport").toString
+    val dir = tempDir("graft_transport").toString
     Files.writeString(Paths.get(s"$dir/x.json"), """{"a": 1}""")
     val got = new String(
       LakeTransport.readAll(FileTransport(dir), "x.json"), UTF_8)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -11,7 +10,7 @@ class IncrementalIngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("overlapping batches land exactly once; later runs pick up only new ids") {
-    val base = Files.createTempDirectory("graft_stream").toString
+    val base = tempDir("graft_stream").toString
     val (src, sink, hist, ckpt) =
       (s"$base/src", s"$base/sink", s"$base/hist", s"$base/ckpt")
 
@@ -34,7 +33,7 @@ class IncrementalIngestSpec extends SparkSpec {
   }
 
   test("compaction bounds the file count across runs without changing content") {
-    val base = Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     val (src, sink, hist, ckpt) =
       (s"$base/src", s"$base/sink", s"$base/hist", s"$base/ckpt")
     val schema = Seq((0L, "x")).toDF("dl_id", "payload").schema

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -47,7 +46,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
 
   test("streaming as-of join answers identically on RocksDB") {
     bothProviders("streamAsof") {
-      val dir = Files.createTempDirectory("rocks_asof").toString
+      val dir = tempDir("rocks_asof").toString
       val src = s"$dir/landing"
       def row(k: Long, sec: Long, side: String, v: Double) =
         (k, new java.sql.Timestamp(sec * 1000L), side, v)
@@ -73,7 +72,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark dedup answers identically on " +
       "RocksDB") {
     bothProviders("streamDedup") {
-      val dir = Files.createTempDirectory("rocks_dedup").toString
+      val dir = tempDir("rocks_dedup").toString
       val src = s"$dir/landing"
       val rows = (1L to 30L).map(i => (i, s"text ${i % 10}"))
         .toDF("doc_id", "text")
@@ -90,7 +89,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
 
   test("session_window aggregation answers identically on RocksDB") {
     bothProviders("sessionWindow") {
-      val dir = Files.createTempDirectory("rocks_sess").toString
+      val dir = tempDir("rocks_sess").toString
       val src = s"$dir/landing"
       def at(u: Long, t: String, v: String) =
         (u, java.sql.Timestamp.valueOf(t), new java.math.BigDecimal(v))
@@ -119,7 +118,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
   test("watermarked stream-stream interval join answers identically on " +
       "RocksDB") {
     bothProviders("streamIntervalJoin") {
-      val dir = Files.createTempDirectory("rocks_sij").toString
+      val dir = tempDir("rocks_sij").toString
       val a = Seq((1L, 100L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
           (2L, 100L, java.sql.Timestamp.valueOf("2024-01-01 00:30:00")),
           (3L, 200L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00")))

@@ -12,7 +12,7 @@ class Scd2StreamSpec extends SparkSpec {
         $"event_type")
 
   private def withBase(f: java.nio.file.Path => Unit): Unit = {
-    val base = java.nio.file.Files.createTempDirectory("scd2stream")
+    val base = tempDir("scd2stream")
     try f(base)
     finally {
       val walk = java.nio.file.Files.walk(base)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -11,7 +10,7 @@ class StreamBitmapSpec extends SparkSpec {
   import spark.implicits._
 
   test("a negative id fails the stream loudly, like the batch contract") {
-    val dir = Files.createTempDirectory("sbitmap").toString
+    val dir = tempDir("sbitmap").toString
     val src = s"$dir/landing"
     val rows = Seq(("k", 5L), ("k", -1L))
     val schema = rows.toDF("g", "v").schema
@@ -27,7 +26,7 @@ class StreamBitmapSpec extends SparkSpec {
   }
 
   test("non-negative ids maintain words identical to the batch bitmap") {
-    val dir = Files.createTempDirectory("sbitmap2").toString
+    val dir = tempDir("sbitmap2").toString
     val src = s"$dir/landing"
     val rows = Seq(("a", 0L), ("a", 62L), ("a", 63L), ("b", 5L),
       ("a", 62L))
@@ -44,7 +43,7 @@ class StreamBitmapSpec extends SparkSpec {
   }
 
   test("a null group survives the newest-per-key read and compaction") {
-    val dir = Files.createTempDirectory("sbitmap3").toString
+    val dir = tempDir("sbitmap3").toString
     val src = s"$dir/landing"
     val rows = Seq[(String, Long)]((null, 1L), ("a", 2L), (null, 70L),
       ("b", 3L), (null, 1L), ("a", 64L)).toDF("g", "v")

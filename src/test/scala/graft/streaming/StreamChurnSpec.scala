@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.operators.SnapshotDiff
@@ -19,7 +18,7 @@ class StreamChurnSpec extends SparkSpec {
     (5L, "e", 50L)).toDF("id", "v", "w")      // added; 4 removed
 
   test("waved increments sum to the batch columnChurn; replay is a no-op") {
-    val dir = Files.createTempDirectory("schurn").toString
+    val dir = tempDir("schurn").toString
     val src = s"$dir/landing"
     val fps = StreamChurn.oldFingerprints(oldSnap, "id", Seq("v", "w"))
     def run(): Unit = StreamChurn.runAvailableNow(spark, src,
@@ -43,7 +42,7 @@ class StreamChurnSpec extends SparkSpec {
   }
 
   test("a wave with only additions still emits zero rows for the rest") {
-    val dir = Files.createTempDirectory("schurn2").toString
+    val dir = tempDir("schurn2").toString
     val src = s"$dir/landing"
     val fps = StreamChurn.oldFingerprints(oldSnap, "id", Seq("v", "w"))
     Seq((9L, "z", 90L)).toDF("id", "v", "w")

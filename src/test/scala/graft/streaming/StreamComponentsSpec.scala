@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.operators.Components
@@ -19,7 +18,7 @@ class StreamComponentsSpec extends SparkSpec {
     .connectedComponents((waveA ++ waveB).toDF("a", "b"), "a", "b")
 
   private def drain(waves: Seq[Seq[(Long, Long)]]): Set[(Long, Long)] = {
-    val dir = Files.createTempDirectory("scomp").toString
+    val dir = tempDir("scomp").toString
     val src = s"$dir/landing"
     val schema = waveA.toDF("a", "b").schema
     waves.foreach { w =>

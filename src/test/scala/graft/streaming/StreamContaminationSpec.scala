@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -29,7 +28,7 @@ class StreamContaminationSpec extends SparkSpec {
 
   test("contaminated docs quarantine by wave, clean docs admit, the " +
       "streamed reports equal the batch operator, replay is a no-op") {
-    val dir = Files.createTempDirectory("contam").toString
+    val dir = tempDir("contam").toString
     val src = s"$dir/landing"
     StreamContamination.seedBenchmark(spark, bench, "text", s"$dir/state")
     def run(): Long = StreamContamination.runAvailableNow(spark, src,
@@ -63,7 +62,7 @@ class StreamContaminationSpec extends SparkSpec {
 
   test("maxFrac > 0 admits lightly-touching docs and still quarantines " +
       "heavy overlap") {
-    val dir = Files.createTempDirectory("contam_frac").toString
+    val dir = tempDir("contam_frac").toString
     val src = s"$dir/landing"
     // n = 4 so doc 4's fragment counts as a hit; doc 1 is mostly hits
     StreamContamination.seedBenchmark(spark, bench, "text",

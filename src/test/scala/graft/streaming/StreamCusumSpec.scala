@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -10,7 +9,7 @@ class StreamCusumSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(prefix: String) = {
-    val dir = Files.createTempDirectory(prefix).toString
+    val dir = tempDir(prefix).toString
     val run = () => StreamCusum.runAvailableNow(
       spark, s"$dir/landing", Seq((1L, 1L)).toDF("k", "day").schema,
       "k", "day", drift = 2, s"$dir/sink", s"$dir/ckpt")

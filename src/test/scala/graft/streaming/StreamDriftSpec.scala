@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -12,7 +11,7 @@ class StreamDriftSpec extends SparkSpec {
   import spark.implicits._
 
   test("counts accumulate across batches and survive replay") {
-    val dir = Files.createTempDirectory("sdr").toString
+    val dir = tempDir("sdr").toString
     val src = s"$dir/landing"
     val schema = Seq("x").toDF("cat").schema
     def run(): Unit = StreamDrift.runAvailableNow(
@@ -36,7 +35,7 @@ class StreamDriftSpec extends SparkSpec {
   }
 
   test("null categories are first-class state keys") {
-    val dir = Files.createTempDirectory("sdrn").toString
+    val dir = tempDir("sdrn").toString
     val src = s"$dir/landing"
     val schema = Seq(Option("x")).toDF("cat").schema
     def run(): Unit = StreamDrift.runAvailableNow(
@@ -53,7 +52,7 @@ class StreamDriftSpec extends SparkSpec {
   }
 
   test("standing counts feed the batch audit identically") {
-    val dir = Files.createTempDirectory("sdra").toString
+    val dir = tempDir("sdra").toString
     val src = s"$dir/landing"
     val cur = Seq("a", "a", "b", "b", "b").toDF("cat")
     val ref = Seq("a", "a", "a", "b").toDF("cat")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -12,7 +11,7 @@ class StreamFuzzyDedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("wave-2 typos of wave-1 names are dropped via the stored index") {
-    val dir = Files.createTempDirectory("sfd").toString
+    val dir = tempDir("sfd").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "name").schema
     def run(): Unit = StreamFuzzyDedup.runAvailableNow(
@@ -53,7 +52,7 @@ class StreamFuzzyDedupSpec extends SparkSpec {
 
   test("maxDist=2 widens the stored-index drop to double typos; " +
       "no cache residue outlives a run") {
-    val dir = Files.createTempDirectory("sfd2").toString
+    val dir = tempDir("sfd2").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "name").schema
     def run(): Unit = StreamFuzzyDedup.runAvailableNow(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -18,7 +17,7 @@ class StreamImageDedupSpec extends SparkSpec {
 
   test("a re-encoded resized clone drops against the STORED index, fresh " +
       "patterns and corrupt payloads are kept, replay is a no-op") {
-    val dir = Files.createTempDirectory("img_dedup").toString
+    val dir = tempDir("img_dedup").toString
     val src = s"$dir/landing"
     val schema = fixture(Seq(1L), 36, 32, "png").schema
     def run(): Long = StreamImageDedup.runAvailableNow(spark, src, schema,
@@ -53,7 +52,7 @@ class StreamImageDedupSpec extends SparkSpec {
   test("a clone arriving in the SAME wave as nothing it matches is kept " +
       "(within-batch pairs deliberately not compared) and caught on the " +
       "NEXT wave probe") {
-    val dir = Files.createTempDirectory("img_dedup2").toString
+    val dir = tempDir("img_dedup2").toString
     val src = s"$dir/landing"
     val schema = fixture(Seq(1L), 36, 32, "png").schema
     def run(): Long = StreamImageDedup.runAvailableNow(spark, src, schema,

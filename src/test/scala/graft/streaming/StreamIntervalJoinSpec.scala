@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ class StreamIntervalJoinSpec extends SparkSpec {
 
   test("left-outer stream interval join equals the batch left range " +
       "join, including null-extended expiries") {
-    val dir = Files.createTempDirectory("sivj").toString
+    val dir = tempDir("sivj").toString
     val (aDir, bDir) = (s"$dir/a", s"$dir/b")
     def ts(min: Long) = new Timestamp(1700000000000L + min * 60000L)
     // keys 1-3; a 2 matches, a 1/3 expire unmatched; one b never matches

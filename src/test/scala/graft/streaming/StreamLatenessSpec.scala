@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -11,7 +10,7 @@ class StreamLatenessSpec extends SparkSpec {
   import spark.implicits._
 
   test("standing audit equals the batch audit; replay is a no-op") {
-    val dir = Files.createTempDirectory("slate").toString
+    val dir = tempDir("slate").toString
     val src = s"$dir/landing"
     // key 1: t = 10, 30, 20 (late 10), 25 (late 5) across two waves —
     // the high-water mark must SURVIVE the batch boundary
@@ -36,7 +35,7 @@ class StreamLatenessSpec extends SparkSpec {
   }
 
   test("an arrival-order violation across waves fails loudly") {
-    val dir = Files.createTempDirectory("slatev").toString
+    val dir = tempDir("slatev").toString
     val src = s"$dir/landing"
     val w1 = Seq((1L, 10L, 100L)).toDF("k", "a", "t")
     def run(): Unit = StreamLateness.runAvailableNow(spark, src,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -18,7 +17,7 @@ class StreamNearDupSpec extends SparkSpec {
       base + base.reverse
 
   test("wave-2 near-dups of wave-1 docs are dropped via the stored index") {
-    val dir = Files.createTempDirectory("snd").toString
+    val dir = tempDir("snd").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "text").schema
     def run(): Unit = StreamNearDup.runAvailableNow(
@@ -57,7 +56,7 @@ class StreamNearDupSpec extends SparkSpec {
   }
 
   test("no cache residue outlives a run") {
-    val dir = Files.createTempDirectory("snd2").toString
+    val dir = tempDir("snd2").toString
     val schema = Seq((1L, "x")).toDF("id", "text").schema
     Seq((1L, doc(3))).toDF("id", "text")
       .write.mode("append").parquet(s"$dir/landing")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -25,7 +24,7 @@ class StreamQuantileSpec extends SparkSpec {
   test("standing entries equal the one-shot sketch across waves, " +
       "SATURATED — an evicted value re-arriving cannot re-enter with " +
       "partial weight") {
-    val dir = Files.createTempDirectory("squant").toString
+    val dir = tempDir("squant").toString
     val src = s"$dir/landing"
     // capacity 3 over 6 distinct values: wave 2 re-delivers rows of
     // values wave 1 already saw (weights must ACCUMULATE) and brings
@@ -50,7 +49,7 @@ class StreamQuantileSpec extends SparkSpec {
   }
 
   test("quantiles served off the standing entries match the batch path") {
-    val dir = Files.createTempDirectory("squant2").toString
+    val dir = tempDir("squant2").toString
     val src = s"$dir/landing"
     val rows = (1 to 100).map(i => ("k", i.toLong))
     val schema = rows.toDF("g", "v").schema

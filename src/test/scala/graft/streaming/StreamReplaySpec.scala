@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,7 +22,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("StreamBitmap: a no-data restart appends no words") {
-    val dir = Files.createTempDirectory("sbr").toString
+    val dir = tempDir("sbr").toString
     val src = s"$dir/landing"
     val rows = (1L to 40L).map(i => (s"t${i % 3}", i)).toDF("g", "v")
     def run(): Unit = StreamBitmap.runAvailableNow(
@@ -42,7 +41,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("StreamComponents: a no-data restart leaves the assignment") {
-    val dir = Files.createTempDirectory("scr").toString
+    val dir = tempDir("scr").toString
     val src = s"$dir/landing"
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     def run(): Unit = StreamComponents.runAvailableNow(
@@ -58,7 +57,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("StreamReservoir: a no-data restart leaves the sample") {
-    val dir = Files.createTempDirectory("srr").toString
+    val dir = tempDir("srr").toString
     val src = s"$dir/landing"
     val rows = (1L to 50L).map(i => (i, i % 7 + 1)).toDF("k", "w")
     def run(): Unit = StreamReservoir.runAvailableNow(
@@ -74,7 +73,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("StreamTvd: a no-data restart appends no count increments") {
-    val dir = Files.createTempDirectory("stv").toString
+    val dir = tempDir("stv").toString
     val src = s"$dir/landing"
     val rows = (1L to 60L).map(i => (i % 2, s"e${i % 3}")).toDF("g", "c")
     def run(): Unit = StreamTvd.runAvailableNow(
@@ -90,7 +89,7 @@ class StreamReplaySpec extends SparkSpec {
   test("StreamIntervalJoin: a no-data restart emits no pairs (inner " +
       "and left_outer)") {
     Seq("inner", "left_outer").foreach { jt =>
-      val dir = Files.createTempDirectory(s"sij_$jt").toString
+      val dir = tempDir(s"sij_$jt").toString
       val a = Seq((1L, 100L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
           (2L, 100L, java.sql.Timestamp.valueOf("2024-01-01 00:30:00")),
           (3L, 200L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00")))
@@ -115,7 +114,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("TarShards stream export: a no-data restart ships nothing twice") {
-    val dir = Files.createTempDirectory("tsr").toString
+    val dir = tempDir("tsr").toString
     val src = s"$dir/landing"
     val rows = (1L to 20L)
       .map(i => (i, s"payload $i".getBytes("UTF-8")))
@@ -138,7 +137,7 @@ class StreamReplaySpec extends SparkSpec {
 
   test("native streaming dedup file sink: a no-data restart appends " +
       "no rows") {
-    val dir = Files.createTempDirectory("sdr").toString
+    val dir = tempDir("sdr").toString
     val src = s"$dir/landing"
     val rows = (1L to 30L).map(i => (i, s"text ${i % 10}"))
       .toDF("doc_id", "text")
@@ -159,7 +158,7 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("session_window file sink: a no-data restart appends no sessions") {
-    val dir = Files.createTempDirectory("ssr").toString
+    val dir = tempDir("ssr").toString
     val src = s"$dir/landing"
     def at(u: Long, t: String, v: String) =
       (u, java.sql.Timestamp.valueOf(t), new java.math.BigDecimal(v))

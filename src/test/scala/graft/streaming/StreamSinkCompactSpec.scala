@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class StreamSinkCompactSpec extends SparkSpec {
 
   test("per-cell sink: served cells identical, old dirs absorbed, " +
       "newest batch kept") {
-    val dir = Files.createTempDirectory("compact1").toString
+    val dir = tempDir("compact1").toString
     val sink = s"$dir/sink"
     // three batches of cumulative per-cell counts; cell (0,1) updates
     // every batch, (0,2) only in batch 0, (1,1) only in batch 2
@@ -47,7 +46,7 @@ class StreamSinkCompactSpec extends SparkSpec {
 
   test("per-group sink: a value evicted between batches dies with its " +
       "batch instead of resurfacing from an older directory") {
-    val dir = Files.createTempDirectory("compact2").toString
+    val dir = tempDir("compact2").toString
     val sink = s"$dir/sink"
     // batch 0 carries values {10, 20}; batch 1 re-emits the FULL
     // standing sketch {10, 30} — 20 was evicted. Per-(g,value)
@@ -73,7 +72,7 @@ class StreamSinkCompactSpec extends SparkSpec {
 
   test("a crash between retiring the old snapshot and landing the new " +
       "one self-heals: serving is identical on the next invocation") {
-    val dir = Files.createTempDirectory("compact4").toString
+    val dir = tempDir("compact4").toString
     val sink = s"$dir/sink"
     Seq((0, 1L, 5L), (0, 2L, 3L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=0")
@@ -104,7 +103,7 @@ class StreamSinkCompactSpec extends SparkSpec {
 
   test("a single live batch is never absorbed and a fresh fold extends " +
       "a prior batch_id=-1 snapshot") {
-    val dir = Files.createTempDirectory("compact3").toString
+    val dir = tempDir("compact3").toString
     val sink = s"$dir/sink"
     Seq((0, 1L, 5L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=0")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -16,7 +15,7 @@ class StreamSketchSpec extends SparkSpec {
   private val w = 64 // small grid: collisions certain, parity still exact
 
   test("cells accumulate across batches and survive replay") {
-    val dir = Files.createTempDirectory("ssk").toString
+    val dir = tempDir("ssk").toString
     val src = s"$dir/landing"
     val schema = Seq("x").toDF("term").schema
     def run(): Unit = StreamSketch.runAvailableNow(
@@ -41,7 +40,7 @@ class StreamSketchSpec extends SparkSpec {
   }
 
   test("estimates served off the maintained grid are the batch estimates") {
-    val dir = Files.createTempDirectory("sske").toString
+    val dir = tempDir("sske").toString
     val src = s"$dir/landing"
     val terms = (1 to 50).flatMap(i => Seq.fill(i % 7 + 1)(s"t$i"))
     val schema = Seq("x").toDF("term").schema

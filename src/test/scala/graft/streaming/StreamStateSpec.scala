@@ -33,7 +33,7 @@ class StreamStateSpec extends SparkSpec {
   private val partitionsKey = "spark.sql.shuffle.partitions"
 
   test("drain counts every staged wave, an empty one included") {
-    val dir = Files.createTempDirectory("ss_drain").toString
+    val dir = tempDir("ss_drain").toString
     val src = s"$dir/landing"
     val rows = (1L to 6L).toDF("id")
     StreamWaves.stage(src, Seq(rows.filter($"id" <= 3), rows.limit(0),
@@ -54,7 +54,7 @@ class StreamStateSpec extends SparkSpec {
 
   test("drain does not count a no-data batch that only advances the " +
       "watermark") {
-    val dir = Files.createTempDirectory("ss_nodata").toString
+    val dir = tempDir("ss_nodata").toString
     val src = s"$dir/landing"
     def at(u: Long, t: String) = (u, java.sql.Timestamp.valueOf(t), 1L)
     val rows = Seq(at(1L, "2024-01-01 00:00:00"), at(-1L, "2030-01-01 00:00:00"),
@@ -75,7 +75,7 @@ class StreamStateSpec extends SparkSpec {
 
   test("a throwing foreachBatch surfaces its exception and restores the " +
       "session's shuffle partitions") {
-    val dir = Files.createTempDirectory("ss_throw").toString
+    val dir = tempDir("ss_throw").toString
     val src = s"$dir/landing"
     val rows = (1L to 3L).toDF("id")
     StreamWaves.stage(src, Seq(rows))
@@ -100,7 +100,7 @@ class StreamStateSpec extends SparkSpec {
     val prior = spark.conf.get(partitionsKey)
     spark.conf.set(partitionsKey, "3")
     try Seq(2, 4).foreach { n =>
-      val dir = Files.createTempDirectory(s"ss_parts$n").toString
+      val dir = tempDir(s"ss_parts$n").toString
       val src = s"$dir/landing"
       val rows = Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("g", "v")
       StreamWaves.stage(src, Seq(rows))
@@ -118,7 +118,7 @@ class StreamStateSpec extends SparkSpec {
 
   test("latest keeps every row of each key's newest batch; null keys " +
       "form one group; no keys keeps the newest batch") {
-    val dir = Files.createTempDirectory("ss_latest").toString
+    val dir = tempDir("ss_latest").toString
     val sink = s"$dir/sink"
     // per-group emissions: each batch re-emits the group's whole sketch
     StreamState.writeBatch(Seq[(String, Long, Long)](("k", 10L, 1L),
@@ -140,7 +140,7 @@ class StreamStateSpec extends SparkSpec {
       "previously compacted row") {
     spark.sparkContext.hadoopConfiguration.set("fs.failrename.impl",
       classOf[FailingRenameFileSystem].getName)
-    val dir = Files.createTempDirectory("ss_rename").toString
+    val dir = tempDir("ss_rename").toString
     val path = s"failrename://$dir/table"
     def batch(i: Long): Unit = StreamState.writeBatch(
       Seq((i, s"row $i"), (i + 100, s"row ${i + 100}")).toDF("id", "payload"),
@@ -165,7 +165,7 @@ class StreamStateSpec extends SparkSpec {
 
   test("folded directories left behind by a crash after the landing are " +
       "deleted by the next compaction, not folded twice") {
-    val dir = Files.createTempDirectory("ss_stale").toString
+    val dir = tempDir("ss_stale").toString
     val path = s"$dir/table"
     def batch(i: Long): Unit = StreamState.writeBatch(
       Seq((i, s"row $i")).toDF("id", "payload"), path, i)

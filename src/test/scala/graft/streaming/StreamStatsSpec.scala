@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -12,7 +11,7 @@ class StreamStatsSpec extends SparkSpec {
   import spark.implicits._
 
   test("state restores across runs and converges to the batch sketch") {
-    val dir = Files.createTempDirectory("sst").toString
+    val dir = tempDir("sst").toString
     val src = s"$dir/landing"
     val schema = Seq(("a", 1L)).toDF("g", "v").schema
     def run(): Unit = StreamStats.runAvailableNow(

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -14,7 +13,7 @@ class StreamTvdSpec extends SparkSpec {
 
   test("standing drift report equals the one-shot batch TVD under " +
       "wave slicing") {
-    val dir = Files.createTempDirectory("stvd").toString
+    val dir = tempDir("stvd").toString
     val src = s"$dir/landing"
     // reference mix: 2 cohorts × 3 buckets; current mix drops one
     // bucket from cohort 0 so the report discriminates
