@@ -64,8 +64,9 @@ object Dedup {
     * .fingerprint]] / `md5`); collisions there are content-dedup semantics,
     * not an artifact of this operator. */
   def incrementalDedup(batch: DataFrame, corpus: DataFrame, fpCol: String,
-                       idCol: String,
-                       corpusItems: Long = 10000000L): DataFrame = {
+                       idCol: String): DataFrame = {
+    // the corpus bloom filter is sized for 100k fingerprints
+    val corpusItems = 100000L
     // null fingerprints mean "couldn't fingerprint", not "identical" —
     // they bypass both the batch collapse and the corpus check
     val nullFp = batch.filter(col(fpCol).isNull)
@@ -113,9 +114,10 @@ object Dedup {
   /** Prime modulus 2^31−1: products a·x stay ≤ 2^62 (no ANSI overflow). */
   private val P = 2147483647L
 
-  /** Deterministic universal-hash seeds (a, b) from a fixed PRNG seed. */
-  def seeds(numHashes: Int, seed: Long = 42L): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
+  /** Deterministic universal-hash seeds (a, b) from the fixed PRNG seed
+    * 42 (`MinHashSigExpr` draws the same sequence). */
+  def seeds(numHashes: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(42L)
     Seq.fill(numHashes)((1L + rnd.nextLong(P - 1), rnd.nextLong(P)))
   }
 
@@ -222,8 +224,8 @@ object Dedup {
     * (tiny vocabularies, boilerplate corpora) random band collisions
     * between very-different-length docs grow superlinearly, and this
     * kills them before the join emits them. */
-  def sizeBandBounds(threshold: Double, maxN: Long = Int.MaxValue.toLong)
-      : Seq[Long] = {
+  def sizeBandBounds(threshold: Double): Seq[Long] = {
+    val maxN = Int.MaxValue.toLong
     require(threshold > 0.0 && threshold < 1.0,
       s"sizeBandBounds: threshold must be in (0,1), got $threshold")
     val num = math.floor(threshold * 10000).toLong
@@ -261,12 +263,13 @@ object Dedup {
   }
 
   /** End-to-end MinHash-LSH near-dup detection: shingle → sign → band →
-    * candidate join → exact-Jaccard verify. Returns (id_a, id_b, jaccard)
-    * for pairs with similarity ≥ threshold. */
+    * candidate join → exact-Jaccard verify, over 32 hashes in 8 bands.
+    * Returns (id_a, id_b, jaccard) for pairs with similarity ≥
+    * threshold. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      shingleSize: Int = 5, numHashes: Int = 64,
-                      bands: Int = 16, threshold: Double = 0.8,
+                      shingleSize: Int = 5, threshold: Double = 0.8,
                       maxBucket: Int = 64): DataFrame = {
+    val (numHashes, bands) = (32, 8)
     val rowsPerBand = numHashes / bands
     // ONE cached frame carries both expensive computes — the hashed
     // shingles AND the minhash signature: it feeds four plan branches
@@ -418,17 +421,14 @@ object Dedup {
     * self-join (the [[crossCorpusNearDups]] semantics for hash
     * fingerprints — within-side pairs are never generated, so a batch
     * probing a standing index never re-pairs the index with itself).
-    * Both sides chunk-explode; candidates meet on an equal chunk
-    * (exact for maxDist < numChunks). */
+    * Both sides chunk-explode into 8 chunks of 8 bits, covering all 64
+    * simhash bits; candidates meet on an equal chunk (exact for
+    * maxDist < 8). */
   def simhashCrossPairs(newDf: DataFrame, oldDf: DataFrame, idCol: String,
-                        simCol: String, maxDist: Int = 3,
-                        numChunks: Int = 4, chunkBits: Int = 16,
-                        simBits: Int = 64): DataFrame = {
+                        simCol: String, maxDist: Int = 3): DataFrame = {
+    val (numChunks, chunkBits) = (8, 8)
     require(maxDist < numChunks,
       s"pigeonhole needs maxDist < numChunks, got $maxDist >= $numChunks")
-    require(numChunks * chunkBits >= simBits,
-      s"chunk grid covers only ${numChunks * chunkBits} of $simBits simhash " +
-        "bits - uncovered bits would silently lose qualifying pairs")
     def chunks(df: DataFrame, side: String) =
       df.select(col(idCol), col(simCol),
         posexplode(transform(sequence(lit(0), lit(numChunks - 1)), i =>

@@ -55,8 +55,9 @@ object LineDedup {
     * lines, so the report is winners re-keyed by document joined to
     * per-document totals summed off the same within-doc frame — both
     * sides one narrow row per document on an unskewed id key. */
-  def dedupLines(df: DataFrame, idCol: String, textCol: String,
-                 lineTokens: Int = 5): DataFrame = {
+  def dedupLines(df: DataFrame, idCol: String,
+                 textCol: String): DataFrame = {
+    val lineTokens = 5
     // tokenize into a real column first: the line lambda then slices a
     // bound attribute (O(lineTokens) per element) instead of re-running
     // the regex tokenization per line (the O(m²) trap)

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
-
-import graft.expressions.MatVecExpr
 
 /** Distributed PCA / whitening over an embedding column — the
   * data-adaptive complement to the data-oblivious JL sign projection
@@ -18,10 +16,9 @@ import graft.expressions.MatVecExpr
   * so the driver sees O(executors^(1/depth)) messages of fixed size,
   * never rows. The eigensolve is driver-side cyclic Jacobi on the d×d
   * covariance — d is a model constant (64-1024), so this is
-  * microseconds and needs no distributed linear algebra. `project` is
-  * a single codegen'd [[MatVecExpr]] per row (k·d flops, no
-  * intermediate arrays), broadcast-free: the (k×d) matrix rides the
-  * expression as a reference object.
+  * microseconds and needs no distributed linear algebra. Projecting
+  * onto the model is one codegen'd [[graft.expressions.MatVecExpr]] per
+  * row over the top-k `components` and the `mean`.
   *
   * The moment math is gated end-to-end by q174 (an SQL-expressible
   * integer-quantized restatement of the same sums, checked against
@@ -101,23 +98,6 @@ object Pca {
       .head().getInt(0)
     val (n, sums, gram) = moments(df, embCol, d)
     fitFromMoments(d, n, sums, gram)
-  }
-
-  /** Projects onto the top-k components: `y = C_k (x - mean)`, with
-    * optional whitening (each component scaled to unit variance). One
-    * codegen'd kernel per row. */
-  def project(vec: Column, model: PcaModel, k: Int,
-              whiten: Boolean = false): Column = {
-    require(k >= 1 && k <= model.dim,
-      s"Pca.project: k=$k outside 1..${model.dim}")
-    val rows = (0 until k).map { i =>
-      if (!whiten) model.components(i).toSeq
-      else {
-        val s = 1.0 / math.sqrt(math.max(model.eigenvalues(i), 1e-12))
-        model.components(i).map(_ * s).toSeq
-      }
-    }
-    MatVecExpr.matVec(vec, rows, model.mean.toSeq)
   }
 
   /** Persist the model as one small single-file parquet (d rows: one

@@ -31,8 +31,8 @@ object QualityFilters {
     * feature buckets, then a Knuth-multiplicative integer mix mapped onto
     * [-1, 1) in steps of 1/2048 — exactly representable doubles, so the
     * identical value is statable in any engine. */
-  def tokenWeight(t: Column, buckets: Int = 1024): Column =
-    ((pmod(hash60(t), lit(buckets.toLong)) * lit(2654435761L)) % lit(4096L)
+  def tokenWeight(t: Column): Column =
+    ((pmod(hash60(t), lit(1024L)) * lit(2654435761L)) % lit(4096L)
       - lit(2048L)).cast("double") / lit(2048.0)
 
   /** Mean token logit over an already-lowercased token-array column.
@@ -40,14 +40,14 @@ object QualityFilters {
     * over the token order). Safe with inline token expressions too: the
     * array is the `aggregate` ARGUMENT (evaluated once per row), never
     * captured inside the lambda. */
-  def linearScoreFromTokens(toks: Column, buckets: Int = 1024): Column =
-    aggregate(toks, lit(0.0), (acc, t) => acc + tokenWeight(t, buckets)) /
+  def linearScoreFromTokens(toks: Column): Column =
+    aggregate(toks, lit(0.0), (acc, t) => acc + tokenWeight(t)) /
       greatest(size(toks), lit(1)).cast("double")
 
   /** Mean token logit under the hashed linear model — the document's
     * quality score. */
   def linearScore(textCol: Column): Column =
-    linearScoreFromTokens(TextAnalysis.tokens(lower(textCol)), 1024)
+    linearScoreFromTokens(TextAnalysis.tokens(lower(textCol)))
 
   /** Fraction of tokens that are repeats of an earlier token. */
   def dupTokenFrac(toks: Column): Column =

@@ -42,12 +42,16 @@ object Quantize {
       .otherwise(floor((x - mn) / ((mx - mn) / lit(levels.toDouble)) + lit(0.5))
         .cast("long"))
 
+  /** Quantization levels: 8-bit codes 0..255. */
+  private val Levels = 255
+
   /** Per-dimension quantization audit over the calibrated ranges:
     * (dim, mn, mx, sum_q, n_sat, max_abs_err) where `sum_q` is the exact
     * integer checksum of assigned levels, `n_sat` counts values pinned to
     * the top level, and `max_abs_err` is the worst reconstruction error
     * (bounded by scale/2 by construction). */
-  def quantReport(df: DataFrame, vecCol: String, levels: Int = 255): DataFrame = {
+  def quantReport(df: DataFrame, vecCol: String): DataFrame = {
+    val levels = Levels
     val stats = dimStats(df, vecCol)
     df.select(posexplode(col(vecCol)).as(Seq("dim", "_xf")))
       .withColumn("x", col("_xf").cast("double"))
@@ -67,8 +71,9 @@ object Quantize {
     * (dims-sized collect — bounded by the embedding width): adds
     * `qCol` = array<int> of levels. The production representation for a
     * quantized ANN index. */
-  def quantizeVectors(df: DataFrame, vecCol: String, qCol: String,
-                      levels: Int = 255): DataFrame = {
+  def quantizeVectors(df: DataFrame, vecCol: String,
+                      qCol: String): DataFrame = {
+    val levels = Levels
     val stats = dimStats(df, vecCol).orderBy(col("dim"))
       .collect().map(r => (r.getDouble(1), r.getDouble(2)))
     val mns = array(stats.map(s => lit(s._1)).toIndexedSeq: _*)

@@ -216,12 +216,13 @@ object Sampling {
     * global top-k is a TakeOrdered (per-partition heads, never a full
     * sort). Full rows rejoin by key, so keys must be unique and
     * non-null, and weights non-null and ≥ 1 — both guarded with a
-    * distributed fail-fast rather than a silent drop. `maxWeight` bounds
-    * the ticket blow-up; rescale weights (they only matter relatively)
-    * rather than raising it. */
+    * distributed fail-fast rather than a silent drop. Weights are capped
+    * at 1000 to bound the ticket blow-up; rescale weights (they only
+    * matter relatively) to stay under it. */
   def weightedSample(df: DataFrame, keyCol: String, weightCol: String,
-                     k: Int, maxWeight: Long = 1000L): DataFrame = {
+                     k: Int): DataFrame = {
     require(k > 0, "k must be positive")
+    val maxWeight = 1000L
     val wGuard = when(col(weightCol).isNull || col(weightCol) < 1,
         raise_error(concat(lit(s"weightedSample: weight column '$weightCol' " +
           "must be non-null and >= 1, got "), col(weightCol).cast("string")))
@@ -515,8 +516,8 @@ object Sampling {
     * quality score orders at full precision); ties at equal priority
     * break by `idCol`; ids must be unique. */
   def massBudgetSelect(df: DataFrame, idCol: String, priorityCol: String,
-                       weightCol: String, fracNum: Long, fracDen: Long,
-                       descending: Boolean = true): DataFrame = {
+                       weightCol: String, fracNum: Long,
+                       fracDen: Long): DataFrame = {
     require(fracNum >= 0 && fracDen > 0 && fracNum <= fracDen,
       s"massBudgetSelect: need 0 <= fracNum <= fracDen, got $fracNum/$fracDen")
     require(!df.columns.contains("cum_weight") &&
@@ -524,7 +525,7 @@ object Sampling {
       "massBudgetSelect: input already has a cum_weight/shard_id column" +
         " - rename it first")
     val keyed = df.withColumn("_graft_mass_key",
-      struct(orderKey(priorityCol, descending, "massBudgetSelect").as("p"),
+      struct(orderKey(priorityCol, "massBudgetSelect").as("p"),
         col(idCol).as("k")))
     val packed = Sharding.packShards(keyed, "_graft_mass_key", weightCol,
       budget = Long.MaxValue)
@@ -551,12 +552,12 @@ object Sampling {
     * contract). */
   def massBudgetSelectBy(df: DataFrame, groupCols: Seq[String],
                          idCol: String, priorityCol: String,
-                         weightCol: String, fracNum: Long, fracDen: Long,
-                         descending: Boolean = true): DataFrame = {
+                         weightCol: String, fracNum: Long,
+                         fracDen: Long): DataFrame = {
     require(fracNum >= 0 && fracDen > 0 && fracNum <= fracDen,
       s"massBudgetSelectBy: need 0 <= fracNum <= fracDen, got $fracNum/$fracDen")
     val keyed = df.withColumn("_graft_negp",
-      orderKey(priorityCol, descending, "massBudgetSelectBy"))
+      orderKey(priorityCol, "massBudgetSelectBy"))
     val prefixed = Sharding.groupedPrefixSum(keyed, groupCols,
       Seq("_graft_negp", idCol), weightCol)
     // per-group totals from the pinned prefix output (one small agg, no
@@ -578,16 +579,15 @@ object Sampling {
         groupCols.map(c => s"_graft_g_$c"): _*)
   }
 
-  /** Numeric, loudly-null-checked ordering key; negated for descending
-    * (type preserved — no silent cast-to-long truncation of a double
-    * score). */
-  private def orderKey(priorityCol: String, descending: Boolean,
-                       fn: String): Column = {
+  /** Numeric, loudly-null-checked ordering key, negated so the highest
+    * priority sorts first (type preserved — no silent cast-to-long
+    * truncation of a double score). */
+  private def orderKey(priorityCol: String, fn: String): Column = {
     val p = col(priorityCol)
     val guarded = when(p.isNull, raise_error(lit(
       s"$fn: null $priorityCol - null priorities have no defined rank; " +
         "filter or coalesce them first"))).otherwise(p)
-    if (descending) guarded * lit(-1) else guarded
+    guarded * lit(-1)
   }
 
   private def guardBudgetOverflow(tot: Long, fracNum: Long, fracDen: Long,

@@ -189,11 +189,12 @@ object Similarity {
     * billion-vector ANN indexes fit at 100 TB scale. `iters = 0` keeps
     * the codebook at the sample-init rows (id-ordered), fully
     * SQL-restatable for the q137 gate; production callers train with
-    * iters > 0. Returns [subspace][centroid][subdim]. */
+    * iters > 0. Trains on a 4096-vector portable sample. Returns
+    * [subspace][centroid][subdim]. */
   def pqCodebooks(df: DataFrame, vecCol: String, idCol: String,
-                  m: Int, ksub: Int, iters: Int = 3,
-                  sampleN: Int = 4096): Seq[Seq[Seq[Double]]] = {
-    val sample = portableSample(df, vecCol, idCol, sampleN)
+                  m: Int, ksub: Int,
+                  iters: Int = 3): Seq[Seq[Seq[Double]]] = {
+    val sample = portableSample(df, vecCol, idCol, 4096)
     if (sample.isEmpty) return Seq.empty
     val dim = sample.head.length
     require(dim % m == 0, s"pqCodebooks: dim $dim not divisible by m = $m")
@@ -480,13 +481,16 @@ object Similarity {
     * ids, a corpus fraction, never a full scan). Returns
     * `(coarse', index')`; recount with [[ivfPqCellCounts]].
     *
+    * The split's sub-centroids are the sample-init rows (no Lloyd
+    * rounds), so the split is SQL-restatable like the q137 codebooks.
+    *
     * At 100 TB: work is (hot-cell rows) × encode + one bounded driver
     * sample per split — proportional to the skew, not the index. */
   def ivfPqRebalance(index: DataFrame, idCol: String, cellCol: String,
                      codesCol: String, source: DataFrame, vecCol: String,
                      coarse: Seq[Seq[Double]],
                      codebooks: Seq[Seq[Seq[Double]]],
-                     hotCells: Seq[Int], splitK: Int, iters: Int = 3,
+                     hotCells: Seq[Int], splitK: Int,
                      sampleN: Int = 4096)
       : (Seq[Seq[Double]], DataFrame) = {
     require(splitK >= 2, s"ivfPqRebalance: splitK must be >= 2, got $splitK")
@@ -501,7 +505,7 @@ object Similarity {
       val rows = index.filter(col(cellCol) === c).select(col(idCol))
         .join(src, Seq(idCol))
       val subs = ivfCentroidsTrainedPortable(rows, vecCol, idCol, splitK,
-        iters, sampleN)
+        iters = 0, sampleN)
       require(subs.nonEmpty,
         s"ivfPqRebalance: hot cell $c has no source vectors to train on")
       val base = coarseNew.size
@@ -714,8 +718,9 @@ object Similarity {
   }
 
   def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
-                     blockCol: String, threshold: Double,
-                     nAxes: Int = 2, sampleN: Int = 2048): DataFrame = {
+                     blockCol: String, threshold: Double): DataFrame = {
+    // block on the 2 highest-variance axes of a 2048-vector sample
+    val (nAxes, sampleN) = (2, 2048)
     val r = math.sqrt(2.0 * math.max(1.0 - threshold, 1e-9))
     // axis choice is pure performance tuning: the 3^k neighborhood probe is
     // exact on ANY axes, so the result set is identical whatever the sample
@@ -775,10 +780,8 @@ object Similarity {
     * (portable centroids, sequential-accumulation cosine) restates
     * bit-for-bit in SQL, so the whole operator is oracle-checkable. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int, threshold: Double, iters: Int = 3,
-                    sampleN: Int = 4096): DataFrame = {
-    val centroids = ivfCentroidsTrainedPortable(df, vecCol, idCol, k,
-      iters, sampleN)
+                    k: Int, threshold: Double): DataFrame = {
+    val centroids = ivfCentroidsTrainedPortable(df, vecCol, idCol, k)
     // assigned feeds both self-join sides and the final flag join —
     // materialize so the scan + k×64-dim distance battery runs once.
     // localCheckpoint: ContextCleaner-reclaimed, no cache residue

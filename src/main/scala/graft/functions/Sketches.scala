@@ -131,8 +131,15 @@ object Sketches {
       .otherwise(raw)
   }
 
+  /** Count-min sketch depth d: hash rows per item. */
+  val CountMinDepth = 4
+
+  /** Count-min sketch width w: buckets per hash row. */
+  val CountMinWidth = 1024
+
   /** Count-min sketch cells over an item-occurrence frame (one row per
-    * occurrence): `d` deterministic hash rows × `w` buckets, each cell the
+    * occurrence): `d` = [[CountMinDepth]] deterministic hash rows × `w` =
+    * [[CountMinWidth]] buckets, each cell the
     * total count of items landing in it. The sketch is a TINY (≤ d·w)-row
     * frame — merge sketches of two corpora by unioning cells and summing;
     * at 100 TB the sketch build is ONE map-side-combining aggregation with
@@ -143,17 +150,15 @@ object Sketches {
     * Determinism: row r's bucket is `hash60(r || ':' || item) mod w` on
     * the md5 seam — no seed, so an external engine rebuilds the identical
     * cells. */
-  def countMinCells(occurrences: DataFrame, itemCol: String,
-                    d: Int = 4, w: Int = 1024): DataFrame = {
-    require(d >= 1 && w >= 1, s"need d,w >= 1, got d=$d w=$w")
+  def countMinCells(occurrences: DataFrame, itemCol: String): DataFrame =
     occurrences
-      .select(explode(sequence(lit(0), lit(d - 1))).as("depth"),
+      .select(explode(sequence(lit(0), lit(CountMinDepth - 1))).as("depth"),
         col(itemCol).as("_it"))
       .withColumn("bucket",
-        pmod(hash60(concat_ws(":", col("depth"), col("_it"))), lit(w.toLong)))
+        pmod(hash60(concat_ws(":", col("depth"), col("_it"))),
+          lit(CountMinWidth.toLong)))
       .groupBy(col("depth"), col("bucket"))
       .agg(count(lit(1)).as("c"))
-  }
 
   /** Point estimates from count-min cells: for each distinct item in
     * `items(itemCol)`, the minimum of its d cells — an overestimate of
@@ -164,14 +169,14 @@ object Sketches {
     * so an item the corpus never saw reports `est_count = 0` rather than
     * vanishing from the output — and min-over-all-d-cells is the true CMS
     * estimate, not min-over-the-cells-that-happened-to-collide. */
-  def countMinEstimate(cells: DataFrame, items: DataFrame, itemCol: String,
-                       d: Int = 4, w: Int = 1024): DataFrame =
+  def countMinEstimate(cells: DataFrame, items: DataFrame,
+                       itemCol: String): DataFrame =
     items.select(col(itemCol)).distinct()
       .select(col(itemCol),
-        explode(sequence(lit(0), lit(d - 1))).as("depth"))
+        explode(sequence(lit(0), lit(CountMinDepth - 1))).as("depth"))
       .withColumn("bucket",
         pmod(hash60(concat_ws(":", col("depth"), col(itemCol))),
-          lit(w.toLong)))
+          lit(CountMinWidth.toLong)))
       .join(broadcast(cells), Seq("depth", "bucket"), "left")
       .groupBy(col(itemCol))
       .agg(min(coalesce(col("c"), lit(0L))).as("est_count"))

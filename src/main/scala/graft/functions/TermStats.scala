@@ -121,8 +121,8 @@ object TermStats {
     * monotone, so ranking uses the RATIONAL inner term — every step is
     * IEEE ×/÷ on exact-integer-valued doubles, bit-identical across engines
     * (ln is not guaranteed correctly rounded and differs between libm and
-    * the JVM). `minCount` drops rare pairs whose PMI is spuriously high —
-    * the standard collocation-extraction guard. Unigram counts are taken on
+    * the JVM). A min count of 5 drops rare pairs whose PMI is spuriously
+    * high — the standard collocation-extraction guard. Unigram counts are taken on
     * the bigram event space — c(a) counts a as a FIRST element, c(b) counts
     * b as a SECOND — so numerator and denominator probabilities are over the
     * same N draws.
@@ -130,8 +130,9 @@ object TermStats {
     * Scale: two map-side-combining aggregations (pair counts, unigram
     * counts) + one join keyed on w1/w2 — vocabulary-sized tables, fact
     * table never re-shuffled wider than its distinct pairs. */
-  def collocations(df: DataFrame, idCol: String, textCol: String, k: Int,
-                   minCount: Long = 5): DataFrame = {
+  def collocations(df: DataFrame, idCol: String, textCol: String,
+                   k: Int): DataFrame = {
+    val minCount = 5L
     // ONE corpus scan: the unfiltered pair-count table is the sufficient
     // statistic — unigram counts and the grand total are sums over it, so
     // the expensive tokenize+explode never re-runs per branch. The table is

@@ -78,9 +78,10 @@ object TextAnalysis {
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
   /** Ratio of stopword tokens to all tokens. */
-  def stopwordRatio(c: Column, stopwords: Seq[String] = defaultStopwords): Column = {
+  def stopwordRatio(c: Column): Column = {
     val toks = tokens(c)
-    size(filter(toks, t => lower(t).isInCollection(stopwords))).cast("double") /
+    size(filter(toks, t => lower(t).isInCollection(defaultStopwords)))
+      .cast("double") /
       greatest(size(toks), lit(1)).cast("double")
   }
 

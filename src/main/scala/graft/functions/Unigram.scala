@@ -22,12 +22,12 @@ object Unigram {
     * segmentations resolve by taking the longest token at each
     * backtrack position (spec-pinned, oracle-shared). */
   def applyVocab(word: Column, vocab: Seq[(String, Long)],
-                 unk: String = "[UNK]", maxWordChars: Int = 100): Column = {
+                 maxWordChars: Int = 100): Column = {
     require(vocab.nonEmpty, "unigram: vocabulary must be non-empty")
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.expressions.UnigramApplyExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(word),
-        vocab, unk, maxWordChars))
+        vocab, "[UNK]", maxWordChars))
   }
 
   /** Vocabulary UTILITY for pruning (the SentencePiece curation step):
@@ -45,11 +45,11 @@ object Unigram {
     * no window, no second corpus scan. */
   def vocabUtility(words: DataFrame, wordCol: String, freqCol: String,
                    vocab: Seq[(String, Long)], shareDen: Long,
-                   unk: String = "[UNK]", maxWordChars: Int = 100): DataFrame = {
+                   maxWordChars: Int = 100): DataFrame = {
     require(shareDen > 0, "unigram: shareDen must be positive")
     val toks = words.select(col(freqCol).as("_freq"),
       explode(filter(
-        split(applyVocab(col(wordCol), vocab, unk, maxWordChars), "\\|"),
+        split(applyVocab(col(wordCol), vocab, maxWordChars), "\\|"),
         x => x =!= "")).as("token"))
     val usage = toks.groupBy(col("token")).agg(sum(col("_freq")).as("usage"))
     val tot = usage.agg(sum(col("usage")).as("_total"))

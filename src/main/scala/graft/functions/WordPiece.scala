@@ -21,12 +21,12 @@ object WordPiece {
     * `|`-delimited token string (`|play|##ing`), or `|[UNK]` when the
     * word has an unmatchable position or exceeds `maxWordChars`
     * codepoints (HF WordPiece semantics). */
-  def applyVocab(word: Column, vocab: Seq[String], unk: String = "[UNK]",
+  def applyVocab(word: Column, vocab: Seq[String],
                  maxWordChars: Int = 100): Column = {
     require(vocab.nonEmpty, "wordpiece: vocabulary must be non-empty")
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.expressions.WordPieceApplyExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(word),
-        vocab, unk, maxWordChars))
+        vocab, "[UNK]", maxWordChars))
   }
 }

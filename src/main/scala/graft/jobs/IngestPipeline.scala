@@ -141,10 +141,9 @@ object IngestPipeline {
     * truly-nested lake and the reference's pre-flattened dotted world land
     * in the same warehouse shape. Callers who want the structs themselves
     * can `Nested.unflatten` the silver frame losslessly. */
-  def ingestNested(spark: SparkSession, raw: DataFrame, recordCol: String,
-                   registry: SchemaRegistry = SchemaRegistry.seed,
-                   declared: Option[Long] = None): IngestResult = {
-    val updated = registry.observeSorted(
+  def ingestNested(spark: SparkSession, raw: DataFrame,
+                   recordCol: String): IngestResult = {
+    val updated = SchemaRegistry.seed.observeSorted(
       SchemaRegistry.discoverKeysetsNested(raw, recordCol))
     // same fused one-parse shape as the flat ingest: leaf keyset (version
     // lookup) + every leaf value from a single streaming pass
@@ -167,6 +166,6 @@ object IngestPipeline {
         ksAlias, updated)
       .drop(ksAlias)
     val cleansed = UnionBySchema.sortColumns(Cleanse.cleanNames(flat))
-    IngestResult(updated, cleansed, declared)
+    IngestResult(updated, cleansed, None)
   }
 }

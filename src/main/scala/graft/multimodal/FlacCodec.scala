@@ -543,7 +543,7 @@ object FlacCodec {
     * different container, IDENTICAL canonical samples, so the
     * fingerprint collides across codecs by construction. */
   def flacPayload(seed: Long, nSamples: Int, sampleRate: Int,
-                  channels: Int = 1, blockSize: Int = 4096,
+                  channels: Int = 1,
                   order: Int = 0, partitionOrder: Int = 0,
                   stereoMode: String = "independent",
                   truncateTo: Int = -1): Array[Byte] = {
@@ -560,7 +560,7 @@ object FlacCodec {
     // envelope — the fingerprint still collides with the WAV twin
     val right = if (stereoMode == "independent") None
       else Some(samples.map(_ / 2))
-    val bytes = encode(samples, sampleRate, channels, blockSize, order,
+    val bytes = encode(samples, sampleRate, channels, 4096, order,
       partitionOrder, right, stereoMode)
     if (truncateTo >= 0) bytes.take(truncateTo) else bytes
   }
@@ -569,8 +569,7 @@ object FlacCodec {
     * [[AudioSamples.fixtureFrameDepth]] shape on the FLAC container. */
   def fixtureFrame(df: org.apache.spark.sql.DataFrame, idCol: String,
                    nSamples: Int, sampleRate: Int, channels: Int = 1,
-                   blockSize: Int = 4096, order: Int = 0,
-                   partitionOrder: Int = 0,
+                   order: Int = 0, partitionOrder: Int = 0,
                    stereoMode: String = "independent",
                    idOffset: Long = 0L,
                    truncateTo: Int = -1): org.apache.spark.sql.DataFrame = {
@@ -584,8 +583,8 @@ object FlacCodec {
       it.map { r =>
         val id = r.getLong(0)
         org.apache.spark.sql.Row(id + idOffset,
-          flacPayload(id, nSamples, sampleRate, channels, blockSize,
-            order, partitionOrder, stereoMode, truncateTo))
+          flacPayload(id, nSamples, sampleRate, channels, order,
+            partitionOrder, stereoMode, truncateTo))
       }
     }
     spark.createDataFrame(rdd, outSchema)

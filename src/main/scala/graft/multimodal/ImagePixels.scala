@@ -220,11 +220,11 @@ object ImagePixels {
     * hamming ≤ `maxDist`: real pixel decode → dHash → the SimHash
     * chunk-pigeonhole join (8 chunks of 8 bits — exact for maxDist ≤ 7,
     * never all-pairs). Undecodable payloads drop from pairing only. */
-  def imageNearDups(df: DataFrame, idCol: String, payloadCol: String,
-                    maxDist: Int = 4): DataFrame =
+  def imageNearDups(df: DataFrame, idCol: String,
+                    payloadCol: String): DataFrame =
     graft.functions.Dedup.simhashNearDups(
       dhashFrame(df, idCol, payloadCol).filter(col("dhash").isNotNull),
-      idCol, "dhash", maxDist, numChunks = 8, chunkBits = 8, simBits = 64)
+      idCol, "dhash", 4, numChunks = 8, chunkBits = 8, simBits = 64)
 
   // --- Deterministic fixture generation (gates + specs) ---------------
   // Real PNG/BMP bytes without any corpus of image files: a per-seed

@@ -197,8 +197,9 @@ object Mp3Frames {
     if (truncateTo >= 0) out.take(truncateTo) else out
   }
 
-  /** `(media_id, payload)` fixture frame on the executors. */
-  def fixtureFrame(ids: DataFrame, idCol: String, nFrames: Int = 24,
+  /** `(media_id, payload)` fixture frame on the executors, 24 frames
+    * per payload. */
+  def fixtureFrame(ids: DataFrame, idCol: String,
                    retagSeed: Long = 0L, idOffset: Long = 0L,
                    truncateTo: Int = -1): DataFrame = {
     val spark = ids.sparkSession
@@ -208,7 +209,7 @@ object Mp3Frames {
     val rdd = ids.select(col(idCol)).rdd.map { r =>
       val seed = r.getLong(0)
       Row(seed + idOffset,
-        mp3Payload(seed, nFrames, retagSeed, truncateTo))
+        mp3Payload(seed, 24, retagSeed, truncateTo))
     }
     spark.createDataFrame(rdd, outSchema)
   }

@@ -258,13 +258,14 @@ object Mp4Boxes {
     * order, a doubled timescale (duration ticks scaled to the identical
     * wall duration), shifted chunk offsets, and a free-space pad box —
     * leaving the sample tables untouched, exactly what a real re-mux
-    * does. `truncateTo` cuts the payload for the keep path. */
-  def mp4Payload(seed: Long, nSamples: Int = 48, durationSec: Int = 10,
+    * does. `truncateTo` cuts the payload for the keep path. The movie
+    * lasts 10 s. */
+  def mp4Payload(seed: Long, nSamples: Int = 48,
                  remux: Boolean = false, truncateTo: Int = -1)
       : Array[Byte] = {
     val (vid, aud) = sampleSizes(seed, nSamples)
     val timescale = if (remux) 1200L else 600L
-    val duration = durationSec * timescale
+    val duration = 10 * timescale
     val ftyp = box("ftyp", "isom".getBytes("US-ASCII"), be32(512L),
       "isom".getBytes("US-ASCII"), "mp41".getBytes("US-ASCII"))
     def mvhd = box("mvhd", Array[Byte](0, 0, 0, 0), be32(0L), be32(0L),
@@ -294,8 +295,9 @@ object Mp4Boxes {
   }
 
   /** `(idCol, payload)` fixture frame on the executors (driver holds
-    * only ids — the [[ImagePixels]] fixtureFrame discipline). */
-  def fixtureFrame(ids: DataFrame, idCol: String, nSamples: Int = 48,
+    * only ids — the [[ImagePixels]] fixtureFrame discipline), 48 samples
+    * per track. */
+  def fixtureFrame(ids: DataFrame, idCol: String,
                    remux: Boolean = false, idOffset: Long = 0L,
                    truncateTo: Int = -1): DataFrame = {
     val spark = ids.sparkSession
@@ -305,7 +307,7 @@ object Mp4Boxes {
     val rdd = ids.select(col(idCol)).rdd.map { r =>
       val seed = r.getLong(0)
       Row(seed + idOffset,
-        mp4Payload(seed, nSamples, remux = remux, truncateTo = truncateTo))
+        mp4Payload(seed, 48, remux = remux, truncateTo = truncateTo))
     }
     spark.createDataFrame(rdd, outSchema)
   }

@@ -122,10 +122,9 @@ object TarShards {
                                sourcePath: String, schema: StructType,
                                idCol: String, payloadCol: String,
                                outDir: String, checkpointPath: String,
-                               shardBytes: Long,
-                               maxFilesPerTrigger: Option[Int] = None): Long =
+                               shardBytes: Long): Long =
     graft.streaming.StreamState.drain(graft.streaming.StreamWaves
-        .reader(spark, schema, sourcePath, maxFilesPerTrigger),
+        .reader(spark, schema, sourcePath),
         checkpointPath)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty)
         writeTarShards(batch, idCol, payloadCol,

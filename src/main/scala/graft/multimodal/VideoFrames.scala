@@ -189,7 +189,7 @@ object VideoFrames {
     * all-null row. Decode runs per partition; `composite` as in
     * [[sampledHashes]]. */
   def videoHashFrame(df: DataFrame, idCol: String, payloadCol: String,
-                     k: Int = 8, composite: Boolean = true): DataFrame = {
+                     k: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val outSchema = StructType(Seq(
       StructField(idCol, LongType),
@@ -198,7 +198,7 @@ object VideoFrames {
       StructField("fhash", LongType)))
     val rdd = df.select(col(idCol), col(payloadCol)).rdd.mapPartitions { it =>
       it.flatMap { r =>
-        sampledHashes(r.getAs[Array[Byte]](1), k, composite) match {
+        sampledHashes(r.getAs[Array[Byte]](1), k) match {
           case Some((n, hs)) =>
             hs.zipWithIndex.map { case (h, j) => Row(r.getLong(0), n, j, h) }
           case None => Seq(Row(r.getLong(0), null, null, null))
@@ -210,17 +210,15 @@ object VideoFrames {
 
   /** Video near-dup pairs `(idCol_a, idCol_b, n_matched)`: sampled
     * positions pair per-index through the chunk-pigeonhole join at
-    * hamming ≤ `maxDist`, and a video pair qualifies when ≥
-    * `minMatches` of the k positions match (default ⌈k/2⌉ — a
-    * half-overlapping cut sits exactly at the fence). Reads an
-    * already-computed `(idCol, sample_idx, fhash)` frame from
-    * [[videoHashFrame]], null-hash rows excluded. */
-  def videoNearDupsFromHashes(hashes: DataFrame, idCol: String,
-                              k: Int = 8, maxDist: Int = 4,
-                              minMatchesOpt: Option[Int] = None): DataFrame = {
-    require(maxDist >= 0 && maxDist < 8,
-      s"maxDist must be in [0, 8) for the 8x8-bit chunk grid, got $maxDist")
-    val minMatches = minMatchesOpt.getOrElse((k + 1) / 2)
+    * hamming ≤ 4, and a video pair qualifies when ≥ 4 of its 8 sampled
+    * positions match (half — a half-overlapping cut sits exactly at the
+    * fence). Reads an already-computed `(idCol, sample_idx, fhash)`
+    * frame from [[videoHashFrame]] at k = 8, null-hash rows
+    * excluded. */
+  def videoNearDupsFromHashes(hashes: DataFrame,
+                              idCol: String): DataFrame = {
+    // 8 sampled frames; a pair needs a majority of them within hamming 4
+    val (maxDist, minMatches) = (4, 4)
     val chunks = hashes.select(col(idCol), col("sample_idx"), col("fhash"),
         posexplode(transform(sequence(lit(0), lit(7)), i =>
           call_function("shiftright", col("fhash"), i * lit(8))

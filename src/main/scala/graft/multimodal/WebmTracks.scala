@@ -383,13 +383,14 @@ object WebmTracks {
     * container decisions: one big cluster instead of many, Xiph-laced
     * audio blocks instead of one block per frame, a doubled
     * TimestampScale with the Duration float rescaled to the identical
-    * wall time, and a trailing Void pad — the frames are untouched. */
-  def webmPayload(seed: Long, nFrames: Int = 12, durationSec: Int = 10,
+    * wall time, and a trailing Void pad — the frames are untouched. The
+    * segment lasts 10 s. */
+  def webmPayload(seed: Long, nFrames: Int = 12,
                   remux: Boolean = false, truncateTo: Int = -1)
       : Array[Byte] = {
     val (vid, aud) = fixtureFrames(seed, nFrames)
     val scale = if (remux) 2000000L else 1000000L
-    val (header, info, tracksEl) = containerParts(seed, durationSec, scale)
+    val (header, info, tracksEl) = containerParts(seed, 10, scale)
     def xiphBlock(track: Long, frames: Seq[Array[Byte]]): Array[Byte] = {
       val laceSizes = frames.init.flatMap { f =>
         val full = f.length / 255
@@ -448,8 +449,9 @@ object WebmTracks {
     el(SIMPLE_BLOCK, sizeBytes(track),
       Array[Byte](0, 0, 0x80.toByte), frame) // timecode 0, keyframe
 
-  /** `(media_id, payload)` fixture frame on the executors. */
-  def fixtureFrame(ids: DataFrame, idCol: String, nFrames: Int = 12,
+  /** `(media_id, payload)` fixture frame on the executors, 12 frames
+    * per track. */
+  def fixtureFrame(ids: DataFrame, idCol: String,
                    remux: Boolean = false, idOffset: Long = 0L,
                    truncateTo: Int = -1): DataFrame = {
     val spark = ids.sparkSession
@@ -459,7 +461,7 @@ object WebmTracks {
     val rdd = ids.select(col(idCol)).rdd.map { r =>
       val seed = r.getLong(0)
       Row(seed + idOffset,
-        webmPayload(seed, nFrames, remux = remux, truncateTo = truncateTo))
+        webmPayload(seed, 12, remux = remux, truncateTo = truncateTo))
     }
     spark.createDataFrame(rdd, outSchema)
   }

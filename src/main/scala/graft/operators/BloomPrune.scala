@@ -68,13 +68,14 @@ object BloomPrune {
       Literal(filter, BinaryType), new XxHash64(Seq(expression(key)))))
 
   /** Prune `probe` to rows whose `probeKey` might match a `buildKey` of
-    * `build`, then the caller joins as usual. Null probe keys are dropped
-    * (they can never equi-match). */
+    * `build` (a bloom filter at a 3% false-positive rate), then the
+    * caller joins as usual. Null probe keys are dropped (they can never
+    * equi-match). */
   def prune(probe: DataFrame, probeKey: String,
             build: DataFrame, buildKey: String,
-            expectedItems: Long, fpp: Double = 0.03): DataFrame = {
+            expectedItems: Long): DataFrame = {
     val bf = buildFilter(build.filter(col(buildKey).isNotNull), buildKey,
-      expectedItems, fpp)
+      expectedItems, 0.03)
     probe.filter(mightContain(bf, col(probeKey)))
   }
 
@@ -86,7 +87,7 @@ object BloomPrune {
            expectedItems: Long): DataFrame = {
     // frame-qualified refs: col(...) === col(...) would be ambiguous (or a
     // trivially-true self-reference) when both sides name the key alike
-    val pruned = prune(probe, probeKey, build, buildKey, expectedItems, 0.03)
+    val pruned = prune(probe, probeKey, build, buildKey, expectedItems)
     pruned.join(build, pruned(probeKey) === build(buildKey))
   }
 
@@ -94,8 +95,8 @@ object BloomPrune {
     * build-side match — same exactness argument as [[join]]. */
   def semiJoin(probe: DataFrame, probeKey: String,
                build: DataFrame, buildKey: String,
-               expectedItems: Long, fpp: Double = 0.03): DataFrame = {
-    val pruned = prune(probe, probeKey, build, buildKey, expectedItems, fpp)
+               expectedItems: Long): DataFrame = {
+    val pruned = prune(probe, probeKey, build, buildKey, expectedItems)
     pruned.join(build, pruned(probeKey) === build(buildKey), "left_semi")
   }
 }

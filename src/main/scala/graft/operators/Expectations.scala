@@ -42,12 +42,11 @@ object Expectations {
     val name = s"bounds($column,$lo,$hi)"; val threshold = minRate
   }
 
-  /** Distinct (keys) count over row count must be >= `minRate`
-    * (1.0 = the key is unique). Rows with any null key column count as
-    * rows but their keysets still group (null-safe grouping). */
-  final case class Unique(columns: Seq[String], minRate: Double = 1.0)
-      extends Check {
-    val name = s"unique(${columns.mkString(",")})"; val threshold = minRate
+  /** Distinct (keys) count over row count must be 1: the key is
+    * unique. Rows with any null key column count as rows but their
+    * keysets still group (null-safe grouping). */
+  final case class Unique(columns: Seq[String]) extends Check {
+    val name = s"unique(${columns.mkString(",")})"; val threshold = 1.0
   }
 
   /** Total row count must lie in [lo, hi]; metric is the count itself. */
@@ -93,16 +92,16 @@ object Expectations {
         row.select(explode(array(branches: _*)).as("r")).select($"r.*")
       }
 
-    val uniqueReports = checks.collect { case u @ Unique(cols0, minRate) =>
+    val uniqueReports = checks.collect { case u @ Unique(cols0) =>
       val keyed = df.groupBy(cols0.map(col): _*).agg(count(lit(1)).as("_n"))
         .agg(count(lit(1)).as("_distinct"), sum(col("_n")).as("_rows"))
       keyed.select(
         lit(u.name).as("check"),
         (col("_distinct").cast("double") / col("_rows").cast("double"))
           .as("metric"),
-        lit(minRate).as("threshold"),
+        lit(u.threshold).as("threshold"),
         (col("_distinct").cast("double") / col("_rows").cast("double") >=
-          lit(minRate)).as("pass"))
+          lit(u.threshold)).as("pass"))
     }
 
     (rowReport +: uniqueReports)

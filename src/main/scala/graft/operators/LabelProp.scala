@@ -71,11 +71,4 @@ object LabelProp {
     }
     labels
   }
-
-  /** Community roll-up: one row per surviving label with its member count —
-    * the summary a curation report keys on. Output: (label, n_members). */
-  def communities(edges: DataFrame, srcCol: String, dstCol: String,
-                  iters: Int): DataFrame =
-    propagate(edges, srcCol, dstCol, iters)
-      .groupBy(col("label")).agg(count(lit(1)).as("n_members"))
 }

@@ -43,9 +43,9 @@ object Nested {
     }
 
   /** Flatten nested structs to top-level columns (`a.b.c` → `a_b_c`). */
-  def flatten(df: DataFrame, sep: String = "_"): DataFrame =
+  def flatten(df: DataFrame): DataFrame =
     df.select(leafPaths(df.schema).map(p =>
-      pathCol(p).as(p.split('.').mkString(sep))): _*)
+      pathCol(p).as(p.split('.').mkString("_"))): _*)
 
   /** Rebuild struct nesting from `sep`-joined column names; columns without
     * the separator pass through. Sibling order inside each struct is the

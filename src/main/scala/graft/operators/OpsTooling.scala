@@ -55,9 +55,9 @@ object OpsTooling {
   /** S9: CSV read with an externally supplied schema — never inference
     * (reference `lambda_function.py:114-165` builds dtypes from the catalog
     * before reading). */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              header: Boolean = true): DataFrame =
-    spark.read.schema(schema).option("header", header.toString).csv(path)
+  def readCsv(spark: SparkSession, path: String,
+              schema: StructType): DataFrame =
+    spark.read.schema(schema).option("header", "true").csv(path)
 
   /** S12: staging-schema introspection — column → sink type map (reference
     * `get_sql_types` via `sp_columns`). */

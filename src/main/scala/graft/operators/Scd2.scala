@@ -37,13 +37,12 @@ object Scd2 {
     * @param attrCols tracked attributes: a new version starts when any differs
     *                 (null-safe compare) from the previous observation
     * @param tieCols  deterministic order within equal timestamps
-    * @param firstVersion version number of each key's first emitted run
     * @return (keys ++ attrs ++ valid_from, valid_to, version, is_current),
     *         `valid_to` null on the open (current) interval
     */
   def fromChangeLog(log: DataFrame, keyCols: Seq[String], tsCol: String,
-                    attrCols: Seq[String], tieCols: Seq[String] = Nil,
-                    firstVersion: Int = 1): DataFrame = {
+                    attrCols: Seq[String],
+                    tieCols: Seq[String] = Nil): DataFrame = {
     require(keyCols.nonEmpty && attrCols.nonEmpty,
       "fromChangeLog: need key and attribute columns")
     val ord = (col(tsCol) +: tieCols.map(col)).map(_.asc)
@@ -64,7 +63,7 @@ object Scd2 {
       .withColumn("valid_from", col(tsCol))
       .withColumn("valid_to", lead(col(tsCol), 1).over(wRuns))
       .withColumn("version",
-        (row_number().over(wRuns) + lit(firstVersion - 1)).cast("long"))
+        row_number().over(wRuns).cast("long"))
       .withColumn("is_current", col("valid_to").isNull)
       .select((keyCols ++ attrCols ++ metaCols).map(col): _*)
   }

@@ -18,10 +18,11 @@ object Skew {
   /** Salted equi-join: `big` is the skewed side, `small` the replicated
     * side. `distCol` is any big-side column with per-row variety (a row id,
     * line number, payload hash) — the salt must NOT be derived from the
-    * join key or the hot key stays on one reducer.
-    * Result rows equal the plain inner join exactly. */
+    * join key or the hot key stays on one reducer. The salt has 16
+    * values. Result rows equal the plain inner join exactly. */
   def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 distCol: String, saltN: Int = 16): DataFrame = {
+                 distCol: String): DataFrame = {
+    val saltN = 16
     val salted = big.withColumn("_graft_salt",
       pmod(xxhash64(col(distCol)), lit(saltN.toLong)))
     val replicated = small.withColumn("_graft_salt",

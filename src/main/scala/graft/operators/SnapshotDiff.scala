@@ -53,14 +53,7 @@ object SnapshotDiff {
       .select(col(idCol), col("status"))
   }
 
-  /** Churn summary: row counts per status (the number a release gate
-    * thresholds on). */
-  def summary(oldDf: DataFrame, newDf: DataFrame, idCol: String,
-              compareCols: Seq[String]): DataFrame =
-    diff(oldDf, newDf, idCol, compareCols)
-      .groupBy(col("status")).agg(count(lit(1)).as("n_rows"))
-
-  /** Column-attributed churn: [[summary]]'s row accounting PLUS one
+  /** Column-attributed churn: [[diff]]'s row counts per status PLUS one
     * `changed:<col>` count per compared column — WHICH column drove the
     * churn (the release-gate follow-up question: 9 % changed rows is
     * fine if it's all `last_seen_ts`, alarming if it's `text`). A row

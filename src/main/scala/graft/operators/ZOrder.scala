@@ -57,22 +57,6 @@ object ZOrder {
     terms.mkString("(", " + ", ")")
   }
 
-  /** Equi-width bucket of a numeric column into [0, 2^bits) given its
-    * (driver-known) min/max — the simplest rank proxy; exact ranks via
-    * ntile/percent_rank work too but cost a shuffle. */
-  def bucketize(c: Column, min: Double, max: Double, bits: Int = 16): Column = {
-    val buckets = (1L << bits).toDouble
-    val span = math.max(max - min, Double.MinPositiveValue)
-    // clamp BOTH ends: a below-min value (stale driver-known min) would
-    // floor to a negative bucket that zValue's bit mask wraps to the TOP of
-    // the range, silently clustering it with the max rows. NULLs get bucket
-    // 0 explicitly — least()/greatest() SKIP nulls, so a null coordinate
-    // would otherwise also land in the top bucket
-    when(c.isNull, lit(0L)).otherwise(
-      greatest(least(floor((c.cast("double") - lit(min)) / lit(span) * lit(buckets)),
-        lit((1L << bits) - 1L)), lit(0L)).cast("long"))
-  }
-
   /** Cluster `df` for writing: range-repartition + local sort by the
     * z-value of the given coordinate columns. `numFiles` controls output
     * granularity (files ≈ partitions under a per-partition writer). */

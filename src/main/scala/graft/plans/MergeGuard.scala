@@ -33,7 +33,8 @@ object MergeGuard {
     * "keys that never meet") and the KMV intersection estimate over
     * the composite merge key. */
   def overlapReport(target: DataFrame, source: DataFrame,
-                    keys: Seq[String], k: Int = 256): DataFrame = {
+                    keys: Seq[String]): DataFrame = {
+    val k = 256
     require(keys.nonEmpty, "merge guard needs at least one key column")
     def sketch(df: DataFrame, as: String) = {
       val h =

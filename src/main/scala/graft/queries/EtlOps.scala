@@ -176,7 +176,7 @@ object EtlOps {
     val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
     graft.operators.Skew.saltedJoin(l, o, Seq("l_orderkey"),
-        distCol = "l_linenumber", saltN = 16)
+        distCol = "l_linenumber")
       .orderBy(col("l_orderkey"), col("l_linenumber"))
   }
 

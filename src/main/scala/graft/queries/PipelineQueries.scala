@@ -744,7 +744,7 @@ object PipelineQueries {
     * ([[graft.sources.lakesim.LakeSimMicroBatchStream]]
     * SupportsTriggerAvailableNow): the target offset pins at query
     * start and the drain commits in ceil(8/3) = 3 bounded micro-batches
-    * (asserted from the checkpoint's offset log), not one giant batch.
+    * (asserted on the drain's batch count), not one giant batch.
     * The sink must hold exactly the table — any dropped/duplicated
     * object or page breaks the hash. */
   def lakesimStreamQ(s: SparkSession, dir: String): DataFrame =
@@ -759,17 +759,15 @@ object PipelineQueries {
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
         StructField("n_chars", LongType)))
-      graft.streaming.StreamState.drain(s.readStream.format(fmt)
-          .schema(schema).option("path", s"$base/lake")
+      val batches = graft.streaming.StreamState.drain(s.readStream
+          .format(fmt).schema(schema).option("path", s"$base/lake")
           .option("maxobjectsperbatch", "3").load(), s"$base/ckpt")(
         _.format("parquet").option("path", s"$base/sink"))
-      // offset log: one entry per micro-batch — prove the drain was
-      // admission-controlled (3 batches for 8 objects at <= 3 each)
-      val batches = new java.io.File(s"$base/ckpt/offsets")
-        .listFiles().count(f => f.getName.forall(_.isDigit))
+      // the drain was admission-controlled: 3 batches for 8 objects at
+      // <= 3 each
       require(batches == 3,
         s"lakesimStreamQ: expected 3 admission-controlled micro-batches " +
-        s"for 8 objects at maxobjectsperbatch=3, offset log shows $batches")
+        s"for 8 objects at maxobjectsperbatch=3, the drain ran $batches")
       s.read.parquet(s"$base/sink")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -901,7 +899,7 @@ object PipelineQueries {
 
   /** STREAMING quantile monitor under the oracle gate: the documents
     * table arrives in two disjoint waves (evens, then odds — staged
-    * files, one micro-batch each under maxFilesPerTrigger=1) and
+    * files, one micro-batch each under [[graft.streaming.StreamWaves]]) and
     * [[graft.streaming.StreamStats]] maintains per-source quantile
     * sketches as flatMapGroupsWithState STATE across the micro-batches —
     * wave 2's report must reflect wave-1 state committed to and loaded
@@ -915,8 +913,8 @@ object PipelineQueries {
       val src = s"$base/landing"
       val docs = Tables.load(s, dir, "documents")
       val narrow = docs.select(col("doc_id"), col("source"), col("n_chars"))
-      // two waves, one lifecycle: maxFilesPerTrigger=1 drains each staged
-      // wave as its own micro-batch (state-store fold between batches is
+      // two waves, one lifecycle: the one-file-per-micro-batch source
+      // drains each staged wave as its own micro-batch (state-store fold between batches is
       // identical to separate drains); restart/replay safety is pinned by
       // StreamStatsSpec
       graft.streaming.StreamWaves.stage(src, Seq(
@@ -924,7 +922,7 @@ object PipelineQueries {
         narrow.filter(col("doc_id") % 2 === 1).drop("doc_id")))
       graft.streaming.StreamStats.runAvailableNow(
         s, src, narrow.drop("doc_id").schema, "source", "n_chars",
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"), Seq("g"))
         .select(col("g").as("source"), col("sketch_size"), col("sketch_mass"),
           element_at(col("quantiles"), 1).as("p50"),
@@ -1011,7 +1009,7 @@ object PipelineQueries {
         Seq(third.unionAll(third), docs))
       graft.streaming.StreamState.drain(graft.streaming.StreamDedup
           .dedupByFingerprint(
-            graft.streaming.StreamWaves.reader(s, docs.schema, src, Some(1)),
+            graft.streaming.StreamWaves.reader(s, docs.schema, src),
             "ts", "text", watermarkDelay = "30 days"), s"$base/ckpt")(
         _.format("parquet").option("path", s"$base/sink"))
       s.read.parquet(s"$base/sink")
@@ -1045,7 +1043,7 @@ object PipelineQueries {
           .otherwise(substring_index_half(col("text"), col("n_chars")))
           .as("text"))
       // two staged waves, one lifecycle: each wave is ONE file, so the
-      // maxFilesPerTrigger=1 source drains exactly one wave per
+      // one-file-per-micro-batch source drains exactly one wave per
       // micro-batch — the oracle's greedy two-wave semantics assume one
       // wave = one micro-batch (intra-wave pairs deliberately not
       // deduped); fail loudly rather than diverge if that ever breaks.
@@ -1053,7 +1051,7 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
       val n = graft.streaming.StreamNearDup.runAvailableNow(
         s, src, wave1.schema, "doc_id", "text",
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 2,
         s"streamNearDupQ: expected 2 micro-batches, source produced $n" +
         " - the one-batch-per-wave oracle assumption no longer holds")
@@ -1085,7 +1083,7 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
       val n = graft.streaming.StreamFuzzyDedup.runAvailableNow(
         s, src, wave1.schema, "doc_id", "name",
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 2,
         s"streamFuzzyQ: expected 2 micro-batches, source produced $n" +
         " - the one-batch-per-wave oracle assumption no longer holds")
@@ -1128,8 +1126,8 @@ object PipelineQueries {
       def sentinel(tsLit: String) =
         Seq((-1L, java.sql.Timestamp.valueOf(tsLit), "r", 0.0))
           .toDF("key", "ts", "side", "value")
-      // the whole corpus is micro-batch 0 (one staged file under
-      // maxFilesPerTrigger=1, so no probe/quote can be dropped by the
+      // the whole corpus is micro-batch 0 (one staged file, one file per
+      // micro-batch, so no probe/quote can be dropped by the
       // late filter mid-stream), followed by two sentinel flush batches:
       // the watermark computed at the end of one micro-batch emits
       // buffered probes (via event-time timeout) in the NEXT — all
@@ -1138,7 +1136,7 @@ object PipelineQueries {
         sentinel("2030-01-01 00:00:00"), sentinel("2030-06-01 00:00:00")))
       val n1 = graft.streaming.StreamState.drain(
           graft.streaming.StreamAsof.asofJoin(
-            graft.streaming.StreamWaves.reader(s, wave.schema, src, Some(1))
+            graft.streaming.StreamWaves.reader(s, wave.schema, src)
               .as[graft.streaming.StreamAsof.AsofInput]
               .withWatermark("ts", "60 seconds")).toDF(), s"$base/ckpt")(
         _.format("parquet").option("path", s"$base/sink")
@@ -1185,7 +1183,7 @@ object PipelineQueries {
         sentinel("2030-01-01 00:00:00"), sentinel("2030-06-01 00:00:00")))
       graft.streaming.StreamState.drain(graft.streaming.Sessionize
           .sessionsStream(
-            graft.streaming.StreamWaves.reader(s, e.schema, src, Some(1))
+            graft.streaming.StreamWaves.reader(s, e.schema, src)
               .withWatermark("ts", "60 seconds"),
             "user_id", "ts", "30 minutes", col("value")), s"$base/ckpt")(
         _.format("parquet").option("path", s"$base/sink")
@@ -1327,8 +1325,7 @@ object PipelineQueries {
         e.filter(d <= 10), e.filter(d > 10 && d <= 20), e.filter(d > 20)))
       val n = graft.streaming.Scd2Stream.runAvailableNow(
         s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
-        Seq("event_id"), s"$base/state", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
+        Seq("event_id"), s"$base/state", s"$base/ckpt")
       require(n == 3, s"scd2StreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.Scd2Stream.currentHistory(s, s"$base/state")
         .select(col("user_id"), col("event_type"), col("valid_from"),
@@ -1356,8 +1353,7 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(w =>
         cur.filter(col("event_id") % 3 === w)))
       graft.streaming.StreamDrift.runAvailableNow(
-        s, src, cur.schema, "event_type", s"$base/sink", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
+        s, src, cur.schema, "event_type", s"$base/sink", s"$base/ckpt")
       val refCounts = e.filter(col("value") <= 50)
         .groupBy(col("event_type").as("category"))
         .agg(count(lit(1)).as("ref_n"))
@@ -1399,7 +1395,7 @@ object PipelineQueries {
         days.filter(col("day") > cut2)))
       graft.streaming.StreamCusum.runAvailableNow(
         s, src, days.schema, "k", "day", drift = 2,
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamCusum.emittedSeries(s, s"$base/sink")
         .withColumn("alarm", col("cusum") > 3)
         .orderBy(col("k"), col("day"))
@@ -1431,7 +1427,7 @@ object PipelineQueries {
             .as("term"))
       def run(): Unit = graft.streaming.StreamSketch.runAvailableNow(
         s, src, toks.select("term").schema, "term",
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       def wave(wv: Int) = toks.filter(col("doc_id") % 3 === wv)
         .select("term")
       // waves 0-1 in one lifecycle (one micro-batch each), then the
@@ -1491,8 +1487,7 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(wv =>
         nw.filter(col("k") % 3 === wv)))
       graft.streaming.StreamChurn.runAvailableNow(
-        s, src, nw.schema, oldFps, "k", cols, s"$base/sink", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
+        s, src, nw.schema, oldFps, "k", cols, s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamChurn.currentChurn(s, s"$base/sink", nOld)
         .orderBy(col("metric"))
         .localCheckpoint()
@@ -1523,7 +1518,7 @@ object PipelineQueries {
         e.filter(col("event_id") > c2)))
       graft.streaming.StreamLateness.runAvailableNow(
         s, src, e.schema, "user_id", "event_id", "et_us",
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamLateness.currentAudit(s, s"$base/sink")
         .select(col("k").as("user_id"), col("n"), col("n_late"),
           col("max_late_us"))
@@ -1555,7 +1550,7 @@ object PipelineQueries {
           col("event_id") % 7 === wv)) :+ e)
       graft.streaming.StreamBitmap.runAvailableNow(
         s, src, e.schema, "event_type", "user_id",
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       // standing ≡ the batch Bitmap.bitmaps is StreamBitmapSpec's pin;
       // the oracle restates the expected words, so the gate no longer
       // rebuilds the batch bitmap per bench run
@@ -1589,7 +1584,7 @@ object PipelineQueries {
         e.filter(col("event_id") % 3 === wv)))
       graft.streaming.StreamQuantile.runAvailableNow(
         s, src, e.schema, "event_type", "cents", 256,
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       // standing ≡ the one-shot AggMaintain.quantileState is
       // StreamQuantileSpec's pin; the oracle restates the maintained
       // histogram, so the gate no longer rebuilds the batch sketch
@@ -1640,8 +1635,7 @@ object PipelineQueries {
       // StreamComponentsSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(w1, w2))
       graft.streaming.StreamComponents.runAvailableNow(
-        s, src, w1.schema, "a", "b", s"$base/sink", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
+        s, src, w1.schema, "a", "b", s"$base/sink", s"$base/ckpt")
       // standing ≡ one-shot connectedComponents over w1 ∪ w2 is
       // StreamComponentsSpec's pin; the oracle's recursive-CTE closure
       // independently restates the assignment, so the gate no longer
@@ -1678,7 +1672,7 @@ object PipelineQueries {
             col("doc_id") % 5 === 0))))
       graft.streaming.StreamReservoir.runAvailableNow(
         s, src, d.schema, "doc_id", "n_chars", 100,
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamReservoir
         .currentReservoir(s, s"$base/sink")
         .select(col("sample_rank").cast("long").as("sample_rank"),
@@ -1715,7 +1709,7 @@ object PipelineQueries {
         cur.filter(col("event_id") % 3 === wv)))
       graft.streaming.StreamTvd.runAvailableNow(
         s, src, cur.schema, "cohort", "event_type",
-        s"$base/sink", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/sink", s"$base/ckpt")
       graft.streaming.StreamTvd.currentDrift(
           s, s"$base/sink", ref, "cohort", "event_type", 3L, 100L)
         .orderBy(col("cohort"), col("event_type")).localCheckpoint()
@@ -1746,7 +1740,7 @@ object PipelineQueries {
         e.filter(d <= 10), e.filter(d > 10 && d <= 20), e.filter(d > 20)))
       val n = graft.streaming.FunnelStream.runAvailableNow(
         s, src, e.schema, "user_id", "ts", "event_type", steps,
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 3, s"funnelStreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.FunnelStream.currentTimes(s, s"$base/state",
           "user_id", steps, e.schema("user_id"))
@@ -1793,11 +1787,7 @@ object PipelineQueries {
       graft.streaming.StreamIntervalJoin.runAvailableNow(
         s, aDir, bDir, a.schema, b.schema,
         aLenSec = 7200L, bLenSec = 2700L, delay = "2 hours",
-        outDir = s"$base/out", checkpointPath = s"$base/ckpt",
-        // per-user in-window row counts are tiny at every gate SF; 2
-        // state partitions cut the 4-stores-per-partition-per-side
-        // file-IO floor that dominated under 32 (33.6 s → see STATUS)
-        statePartitions = 2, maxFilesPerTrigger = Some(1))
+        outDir = s"$base/out", checkpointPath = s"$base/ckpt")
       s.read.parquet(s"$base/out")
         .select(col("a_id"), col("b_id"), col("user_id"))
         .orderBy(col("a_id"), col("b_id"))
@@ -1852,8 +1842,7 @@ object PipelineQueries {
         s, aDir, bDir, a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
         outDir = s"$base/out", checkpointPath = s"$base/ckpt",
-        statePartitions = 2, joinType = "left_outer",
-        maxFilesPerTrigger = Some(1))
+        joinType = "left_outer")
       s.read.parquet(s"$base/out")
         .filter(col("a_id") >= 0)
         .select(col("a_id"), coalesce(col("b_id"), lit(-1L)).as("b_id"),
@@ -1882,8 +1871,7 @@ object PipelineQueries {
           col("event_id"), col("event_type"))
       def run(): Long = graft.streaming.Scd2Stream.runAvailableNow(
         s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
-        Seq("event_id"), s"$base/state", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
+        Seq("event_id"), s"$base/state", s"$base/ckpt")
       val d = dayofmonth(col("ts"))
       // waves 1-2 drain in one lifecycle (one micro-batch each), then the
       // MID-CHAIN compaction; wave 3 folds on top of the compacted state
@@ -1939,7 +1927,7 @@ object PipelineQueries {
       val n = graft.streaming.Scd2Stream.runAvailableNow(
         s, src, schema, Seq("user_id"), "ts", Seq("event_type"),
         Seq("event_id"), s"$base/state", s"$base/ckpt",
-        opCol = Some("op"), maxFilesPerTrigger = Some(1))
+        opCol = Some("op"))
       require(n == 3, s"scd2CdcStreamQ: expected 3 micro-batches, ran $n")
       graft.streaming.Scd2Stream.currentHistory(s, s"$base/state")
         .select(col("user_id"), col("event_type"), col("valid_from"),
@@ -2064,7 +2052,7 @@ object PipelineQueries {
       val n = graft.streaming.Scd2Stream.runEnrichAvailableNow(
         s, src, e.schema, Seq("user_id"), "ts", Seq("event_type"),
         Seq("event_id"), factCols = Seq("event_id", "user_id", "ts"),
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 3,
         s"scd2EnrichStreamQ: expected 3 micro-batches, ran $n")
       s.read.parquet(s"$base/state/enriched")

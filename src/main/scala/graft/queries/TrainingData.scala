@@ -76,7 +76,7 @@ object TrainingData {
     * SFs, at half the signature compute of the former 64-hash config. */
   def minhashQ(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashNearDups(cloneCorpus(s, dir), "doc_id", "text",
-        shingleSize = 7, numHashes = 32, bands = 8, threshold = 0.95)
+        shingleSize = 7, threshold = 0.95)
       .orderBy(col("doc_id_a"), col("doc_id_b"))
 
   /** Portable-hash simhash (md5-derived 60-bit token hash): the DuckDB
@@ -348,7 +348,7 @@ object TrainingData {
     * information with a min-count guard. */
   def collocationsQ(s: SparkSession, dir: String): DataFrame =
     graft.functions.TermStats.collocations(docs(s, dir), "doc_id", "text",
-      k = 20, minCount = 5)
+      k = 20)
 
   /** Incremental corpus dedup: a batch of half re-crawled dups (even ids,
     * verbatim text) and half genuinely new docs (odd ids, suffixed text)
@@ -365,8 +365,7 @@ object TrainingData {
           concat(col("text"), lit(" fresh "),
             (col("doc_id") + 200000).cast("string")).as("text")))
       .select(col("doc_id"), md5(col("text")).as("fp"))
-    graft.functions.Dedup.incrementalDedup(batch, corpus, "fp", "doc_id",
-        corpusItems = 100000)
+    graft.functions.Dedup.incrementalDedup(batch, corpus, "fp", "doc_id")
       .orderBy(col("doc_id"))
   }
 
@@ -429,7 +428,7 @@ object TrainingData {
     * lines are repeats of the original's, so clones keep 0 lines; originals
     * lose exactly the lines some earlier document already used. */
   def lineDedupQ(s: SparkSession, dir: String): DataFrame =
-    LineDedup.dedupLines(cloneCorpus(s, dir), "doc_id", "text", lineTokens = 5)
+    LineDedup.dedupLines(cloneCorpus(s, dir), "doc_id", "text")
       .orderBy(col("doc_id"))
 
   /** Hashed-linear-model quality scoring (fasttext-style inference with
@@ -473,7 +472,7 @@ object TrainingData {
     val corpus = d.unionByName(d.withColumn("doc_id", col("doc_id") + 100000))
     val redacted = corpus.select(col("doc_id"),
       Pii.redact(col("text")).as("text"))
-    val survivors = LineDedup.dedupLines(redacted, "doc_id", "text", 5)
+    val survivors = LineDedup.dedupLines(redacted, "doc_id", "text")
       .filter(col("n_kept") > 0)
       .select(col("doc_id"), col("kept_text").as("text"))
     val gated = survivors
@@ -639,7 +638,7 @@ object TrainingData {
   def quantizeQ(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings").persist() // calibrate + audit
     releasing(e) {
-      graft.functions.Quantize.quantReport(e, "embedding", levels = 255)
+      graft.functions.Quantize.quantReport(e, "embedding")
         .orderBy(col("dim"))
     }
   }
@@ -956,8 +955,7 @@ object TrainingData {
     // scale factors. The audit variant trades the cap for oracle
     // exactness; production callers keep the default capped entry point.
     Dedup.minhashNearDups(corpus, "doc_id", "text",
-        shingleSize = 7, numHashes = 32, bands = 8, threshold = 0.95,
-        maxBucket = 1 << 16)
+        shingleSize = 7, threshold = 0.95, maxBucket = 1 << 16)
       .select(col("doc_id_a"), col("doc_id_b"))
       .join(split.toDF("doc_id_a", "split_a"), "doc_id_a")
       .join(split.toDF("doc_id_b", "split_b"), "doc_id_b")
@@ -2130,7 +2128,7 @@ object TrainingData {
     val source = base.unionByName(wave).localCheckpoint()
     val (coarse2, idx2) = Similarity.ivfPqRebalance(idx1c, "vec_id",
       "cell", "codes", source, "embedding", coarse, cbs, flagged,
-      splitK = 2, iters = 0, sampleN = bigN)
+      splitK = 2, sampleN = bigN)
     require(coarse2.size == 5, "ivfPqRebalanceQ: 4 cells must become 5")
     val idx2c = idx2.localCheckpoint()
     // untouched-cells byte-identity and spliced ≡ full-rebuild are
@@ -2223,7 +2221,7 @@ object TrainingData {
       graft.streaming.StreamWaves.stage(src, Seq(originals, wave2))
       val n = graft.streaming.StreamImageDedup.runAvailableNow(
         s, src, originals.schema, "media_id", "payload",
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 2L, s"streamImageDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))
@@ -2261,7 +2259,7 @@ object TrainingData {
         graft.streaming.StreamWaves.stage(src, Seq(w1, w2))
         val n = graft.streaming.StreamContamination
           .runAvailableNow(s, src, w1.schema, "doc_id", "text",
-            s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+            s"$base/state", s"$base/ckpt")
         require(n == 2L, s"streamContaminationQ: expected 2 batches, ran $n")
         val reports = s.read.parquet(s"$base/state/reports")
           .localCheckpoint()
@@ -2422,7 +2420,7 @@ object TrainingData {
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
       val n = graft.streaming.StreamAudioDedup.runAvailableNow(
         s, src, wave1.schema, "media_id", "payload",
-        s"$base/state", s"$base/ckpt", maxFilesPerTrigger = Some(1))
+        s"$base/state", s"$base/ckpt")
       require(n == 2L, s"streamAudioDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))
@@ -2505,7 +2503,7 @@ object TrainingData {
     require(hashes.filter(col("fhash").isNull).count() == 1,
       "videoNearDupQ: the corrupt payload must survive as one null row")
     V.videoNearDupsFromHashes(hashes.filter(col("fhash").isNotNull),
-        "media_id", k = 8, maxDist = 4)
+        "media_id")
       .orderBy(col("media_id_a"), col("media_id_b"))
   }
 
@@ -2817,7 +2815,7 @@ object TrainingData {
         .select(col("key").cast("long").as("media_id"), col("payload"))
       require(imported.count() == 32L,
         "tarImageDedupQ: expected all 32 samples back from the shards")
-      P.imageNearDups(imported, "media_id", "payload", maxDist = 4)
+      P.imageNearDups(imported, "media_id", "payload")
         .orderBy(col("media_id_a"), col("media_id_b"))
         .localCheckpoint()
     }
@@ -3040,13 +3038,12 @@ object TrainingData {
       .localCheckpoint() // both modality passes read it
     d.unpersist(blocking = true) // nothing below touches the docs scan
     val (imgPairs, txtPairs) = graft.operators.Concurrent.inParallel(
-      P.imageNearDups(imported, "pair_id", "payload", maxDist = 4)
+      P.imageNearDups(imported, "pair_id", "payload")
         .localCheckpoint(),
       // minhashNearDups materializes internally (localCheckpoint)
       Dedup.minhashNearDups(
         imported.select(col("pair_id"), col("caption")), "pair_id",
-        "caption", shingleSize = 7, numHashes = 32, bands = 8,
-        threshold = 0.95))
+        "caption", shingleSize = 7, threshold = 0.95))
     val edges = imgPairs.select(col("pair_id_a"), col("pair_id_b"))
       .unionByName(txtPairs.select(col("pair_id_a"), col("pair_id_b")))
     val clusters = graft.operators.Components.assignClusters(
@@ -3103,8 +3100,7 @@ object TrainingData {
         payloads.filter(third === w)))
       val n = graft.multimodal.TarShards.streamExportAvailableNow(
         s, src, payloads.schema, "doc_id", "payload",
-        s"$base/shards", s"$base/ckpt", shardBytes = 65536L,
-        maxFilesPerTrigger = Some(1))
+        s"$base/shards", s"$base/ckpt", shardBytes = 65536L)
       require(n == 3, s"tarStreamExportQ: expected 3 micro-batches, ran $n")
       graft.multimodal.TarShards.readTarShards(s, s"$base/shards/batch_id=*")
         .select(col("key").cast("long").as("doc_id"),
@@ -3486,8 +3482,8 @@ object TrainingData {
   /** q42's oracle: the Lloyd chain over the embeddings table, then cell
     * assignment over the full table and a 4-probe cosine top-10 (mirrors
     * Similarity.ivfTopK). */
-  private def ivfOracle(k: Int = 16, iters: Int = 3, sampleN: Int = 4096,
-                        nProbe: Int = 4): String = {
+  private def ivfOracle(): String = {
+    val (k, iters, sampleN, nProbe) = (16, 3, 4096, 4)
     def dist(vec: String, cent: String): String = distSql(vec, cent)
     s"""WITH ${lloydCtes("embeddings", k, iters, sampleN)},
        |qv AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
@@ -3511,9 +3507,8 @@ object TrainingData {
     * — a vector keeps iff no lower-id same-cell neighbor sits at cosine ≥
     * threshold (mirrors Similarity.semanticDedup; same cosExpr
     * accumulation, ties → lowest cell). */
-  private def semanticDedupOracle(k: Int = 16, iters: Int = 3,
-                                  sampleN: Int = 4096,
-                                  threshold: Double = 0.99): String =
+  private def semanticDedupOracle(): String = {
+    val (k, iters, sampleN, threshold) = (16, 3, 4096, 0.99)
     s"""WITH corp AS (
        | SELECT vec_id, embedding FROM embeddings
        | UNION ALL SELECT vec_id + 100000, embedding FROM embeddings),
@@ -3533,6 +3528,7 @@ object TrainingData {
        | d.vec_id IS NULL AS keep
        |FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id
        |ORDER BY a.vec_id""".stripMargin
+  }
 
   /** DuckDB restatement of the PII pass: the SAME pattern literals
     * (interpolated from [[Pii]], so the two engines can never drift) in the
@@ -3788,7 +3784,9 @@ object TrainingData {
     head + iters
   }
 
-  private def bpeTrainOracle(n: Int = 8): String = {
+  /** q196's oracle over the 8 merges the gate trains. */
+  private def bpeTrainOracle(): String = {
+    val n = 8
     val sel = (0 until n).map { k =>
       (if (k > 0) "UNION ALL " else "") +
         s"""SELECT CAST(${k + 1} AS BIGINT) AS "rank", a AS "left",
@@ -3798,8 +3796,9 @@ object TrainingData {
     bpeTrainCtes(n) + "\n" + sel + "\nORDER BY \"rank\""
   }
 
-  private def bpeTokenizeOracle(n: Int = 8): String =
-    bpeTrainCtes(n) + s"\nSELECT word, s AS tokens FROM w$n ORDER BY word"
+  /** q197's oracle: tokenize with the 8 trained merges. */
+  private def bpeTokenizeOracle(): String =
+    bpeTrainCtes(8) + "\nSELECT word, s AS tokens FROM w8 ORDER BY word"
 
   /** q200's oracle: the greedy longest-match walk restated — `best`
     * precomputes the longest vocabulary match at every (word, position)

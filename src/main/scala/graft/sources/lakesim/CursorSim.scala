@@ -85,9 +85,6 @@ object CursorIndex {
       links.lift(1).map(_.get("href").asText()))
   }
 
-  def header(dir: String, file: String): PageHeader =
-    header(FileTransport(dir), file)
-
   /** Walk the cursor chain from `start`: pages with records, in order.
     * Stops on `_count = 0`, a missing next link, or a cycle (the
     * reference's base-URL loop guard generalized to a visited set). */
@@ -103,16 +100,10 @@ object CursorIndex {
     out.result()
   }
 
-  def walk(dir: String, start: String): Seq[PageHeader] =
-    walk(FileTransport(dir), start)
-
   /** Sum of the per-page `_count` headers — the reference's counts.csv
     * totals (A2's declared count for reconciliation). */
   def declaredTotal(t: LakeTransport, start: String): Long =
     walk(t, start).map(_.count).sum
-
-  def declaredTotal(dir: String, start: String): Long =
-    declaredTotal(FileTransport(dir), start)
 
   /** Record value maps of one page: skip the header element, flatten each
     * record's `_fields`. */
@@ -121,9 +112,6 @@ object CursorIndex {
     root.elements().asScala.drop(1).flatMap(rec =>
       Option(rec.get("_fields")).map(JsonRecords.valueMap))
   }
-
-  def pageRecords(dir: String, file: String): Iterator[Map[String, Any]] =
-    pageRecords(FileTransport(dir), file)
 }
 
 class CursorSimTable(transport: LakeTransport, start: String,

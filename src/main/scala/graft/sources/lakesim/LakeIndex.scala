@@ -27,8 +27,7 @@ object LakeIndex {
   /** Time-travel variant: a versioned lake keeps every commit's index
     * as `index_vN.json` alongside the `index.json` latest pointer —
     * loading version N reads the lake exactly as commit N left it
-    * (objects are immutable; only [[LakeOptimize.vacuumVersions]]
-    * reclaims them). */
+    * (objects are immutable). */
   def load(dir: String, versionAsOf: Int): Seq[ObjectEntry] =
     load(FileTransport(dir), indexFileFor(versionAsOf))
 

@@ -26,7 +26,7 @@ object LakeOptimize {
 
   /** Compact `dir` to ~`targetRows` rows per object. Returns (objects
     * before, objects after). `zorderBy` takes bounded non-negative integer
-    * coordinate columns (see ZOrder.bucketize for mapping raw values). */
+    * coordinate columns. */
   def compact(spark: SparkSession, dir: String, schema: StructType,
               targetRows: Long, zorderBy: Seq[Column] = Nil,
               zBits: Int = 16): (Int, Int) = {
@@ -46,37 +46,5 @@ object LakeOptimize {
     arranged.write.format(classOf[LakeSimSource].getName)
       .option("path", dir).mode("overwrite").save()
     (before, LakeIndex.load(dir).size)
-  }
-
-  /** Reclaim a VERSIONED lake: keep the newest `keepLast` commit
-    * versions (plus whatever the latest index references), drop older
-    * `index_vN.json` files and every data object no retained index
-    * names. Returns (versions dropped, objects deleted). Offline
-    * contract like [[compact]]: run between writer jobs, not
-    * concurrently with one. */
-  def vacuumVersions(dir: String, keepLast: Int): (Int, Int) = {
-    require(keepLast >= 1, "vacuumVersions: keepLast must be >= 1")
-    val d = new java.io.File(dir)
-    val versions = LakeSimWrite.listVersions(d)
-    val (dropV, keepV) = versions.splitAt(math.max(0, versions.size - keepLast))
-    // one index read per version; both liveness sets derive from it
-    val filesOf: Map[Int, Seq[String]] =
-      versions.map(v => v -> LakeIndex.load(dir, v).map(_.file)).toMap
-    val retained: Set[String] =
-      (LakeIndex.load(dir).map(_.file) ++ keepV.flatMap(filesOf)).toSet
-    val referencedEver: Set[String] = versions.flatMap(filesOf).toSet
-    // only ever delete objects some dropped version referenced — never
-    // an unindexed stray (could be another writer's in-flight publish)
-    val doomed = (referencedEver -- retained).toSeq.sorted
-    val deleted = doomed.filter(f => new java.io.File(d, f).delete())
-    // drop version files ONLY once every object they exclusively
-    // referenced is really gone — a failed delete (held handle) keeps
-    // the version, so the object stays referenced and the NEXT vacuum
-    // can reclaim it instead of stranding an unindexed stray forever
-    val droppedVersions =
-      if (deleted.size == doomed.size)
-        dropV.count(v => new java.io.File(d, LakeIndex.indexFileFor(v)).delete())
-      else 0
-    (droppedVersions, deleted.size)
   }
 }

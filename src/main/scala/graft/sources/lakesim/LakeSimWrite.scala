@@ -163,7 +163,7 @@ class LakeSimBatchWrite(path: String, schema: StructType,
     // `versioned=true` every commit ALSO lands as `index_vN.json`
     // BEFORE the swap (invisible to latest-readers until then), and
     // truncate keeps the superseded objects on disk — older versions
-    // still reference them; [[LakeOptimize.vacuumVersions]] reclaims.
+    // still reference them.
     if (effVersioned) {
       val next = 1 + LakeSimWrite.listVersions(dir).foldLeft(0)(math.max)
       writeIndex(dir, existing ++ published,

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
-import graft.operators.Funnels
-
 /** Incremental streaming funnel — the live counterpart of
   * [[graft.operators.Funnels.funnelTimes]]: each micro-batch of events
   * folds into a standing per-user step-times table, so the funnel report
@@ -22,9 +20,8 @@ import graft.operators.Funnels
   * the fold is: keep every completed step; for each incomplete step i,
   * in order, take the earliest qualifying batch event after the (possibly
   * just-updated) step i-1 time — within-batch chains complete in one
-  * fold because the steps evaluate sequentially. Conversion windows
-  * (`maxStepGapSec` / `maxTotalSec`, [[Funnels.funnelTimes]] semantics)
-  * ride the same qualification predicate.
+  * fold because the steps evaluate sequentially. Like the q195 gate's
+  * batch twin, the fold has no conversion window.
   *
   * State layout under `statePath/delta/batch_id=N/`: ONLY the users the
   * batch touched, with their full (user, step_1_ts..step_k_ts) row — the
@@ -42,20 +39,12 @@ object FunnelStream {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, userCol: String, tsCol: String,
                       typeCol: String, steps: Seq[String],
-                      statePath: String, checkpointPath: String,
-                      maxStepGapSec: Option[Long] = None,
-                      maxTotalSec: Option[Long] = None,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      statePath: String, checkpointPath: String): Long = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    // mirror Funnels.funnelTimes: the batch≡stream invariant needs the
-    // stream to reject exactly the windows the batch recompute rejects
-    require(maxStepGapSec.forall(_ > 0) && maxTotalSec.forall(_ > 0),
-      "conversion windows must be positive")
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, userCol, tsCol, typeCol, steps,
-          statePath, maxStepGapSec, maxTotalSec)
+        foldBatch(batch, batchId, userCol, tsCol, typeCol, steps, statePath)
     })
   }
 
@@ -64,8 +53,7 @@ object FunnelStream {
 
   private def foldBatch(batch: DataFrame, batchId: Long, userCol: String,
                         tsCol: String, typeCol: String, steps: Seq[String],
-                        statePath: String, maxStepGapSec: Option[Long],
-                        maxTotalSec: Option[Long]): Unit = {
+                        statePath: String): Unit = {
     val session = batch.sparkSession
     val user = col(userCol)
     val cols = stepCols(steps)
@@ -98,20 +86,10 @@ object FunnelStream {
           val isStep = e.getField("_tp") === lit(step)
           // a null-ts event sorts FIRST in the array: it must not
           // qualify, or it would mask the user's valid step-1 events
+          // a null prev (step i−1 incomplete) nulls the predicate —
+          // filter() drops the element, so cur stays null
           if (i == 0) isStep && e.getField("_ts").isNotNull
-          else {
-            val prev = col(cols(i - 1))
-            // a null prev (step i−1 incomplete) nulls the predicate —
-            // filter() drops the element, so cur stays null, exactly
-            // the old `prev.isNotNull` gate
-            Seq(
-              maxStepGapSec.map(g => e.getField("_ts") <=
-                prev + expr(s"INTERVAL $g SECOND")),
-              maxTotalSec.map(w => e.getField("_ts") <=
-                col(cols.head) + expr(s"INTERVAL $w SECOND")))
-              .flatten
-              .foldLeft(isStep && e.getField("_ts") > prev)(_ && _)
-          }
+          else isStep && e.getField("_ts") > col(cols(i - 1))
         }
         // get() is out-of-bounds-null (no ANSI throw on the empty array)
         val firstQualifying =

@@ -111,10 +111,9 @@ object Scd2Stream {
                       statePath: String, checkpointPath: String,
                       nBuckets: Int = Adaptive,
                       targetRowsPerBucket: Long = TargetRowsPerBucket,
-                      opCol: Option[String] = None,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      opCol: Option[String] = None): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, keyCols, tsCol, attrCols, tieCols,
           statePath, nBuckets, targetRowsPerBucket, opCol)
@@ -138,23 +137,21 @@ object Scd2Stream {
     * missing path.
     *
     * `factCols` are the batch columns carried into the enriched sink
-    * (must include the key and ts columns). Returns the number of
-    * micro-batches processed. */
+    * (must include the key and ts columns). The snapshot buckets adapt
+    * as in [[runAvailableNow]]; the point-in-time join buckets by day.
+    * Returns the number of micro-batches processed. */
   def runEnrichAvailableNow(spark: SparkSession, sourcePath: String,
                             schema: StructType, keyCols: Seq[String],
                             tsCol: String, attrCols: Seq[String],
                             tieCols: Seq[String], factCols: Seq[String],
-                            statePath: String, checkpointPath: String,
-                            bucketSeconds: Long = 86400L,
-                            nBuckets: Int = Adaptive,
-                            targetRowsPerBucket: Long = TargetRowsPerBucket,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                            statePath: String,
+                            checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val affected = foldBatch(batch, batchId, keyCols, tsCol, attrCols,
-          tieCols, statePath, nBuckets, targetRowsPerBucket, None)
+          tieCols, statePath, Adaptive, TargetRowsPerBucket, None)
         // enrich from the WRITTEN delta — one computation of the merge,
         // and only the batch's own buckets are read back; an empty batch
         // enriches an empty frame so the per-batch directory still lands
@@ -171,7 +168,7 @@ object Scd2Stream {
             attrCols.map(a => col(a).as(s"${a}_at_time")): _*)
         StreamState.writeBatch(
           Scd2.pointInTime(batch.select(factCols.map(col): _*), dim,
-            keyCols, tsCol, bucketSeconds,
+            keyCols, tsCol, 86400L,
             dimCols = attrCols.map(a => s"${a}_at_time")),
           s"$statePath/enriched", batchId)
     })

@@ -22,17 +22,16 @@ import graft.multimodal.AudioSamples
   * [[compact]]-able to a bounded base). */
 object StreamAudioDedup {
 
+  /** Hamming radius within which a batch hash drops against the index. */
+  private val MaxDist = 4
+
   /** Runs the AvailableNow drain; returns the number of micro-batches
     * processed (callers with one-wave-per-batch oracles assert on it). */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, payloadCol: String,
-                      statePath: String, checkpointPath: String,
-                      maxDist: Int = 4,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    require(maxDist >= 0 && maxDist < 8,
-      s"maxDist must be in [0, 8) for the 8x8-bit chunk grid, got $maxDist")
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      statePath: String, checkpointPath: String): Long = {
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val hashes = AudioSamples
@@ -45,7 +44,7 @@ object StreamAudioDedup {
             StructField("ahash", LongType))))
         val dropped = Dedup.simhashCrossPairs(
             hashes.filter(col("ahash").isNotNull), standing,
-            idCol, "ahash", maxDist, numChunks = 8, chunkBits = 8)
+            idCol, "ahash", MaxDist)
           .select(col(s"${idCol}_new").as(idCol)).distinct()
         val accepted = batch.join(dropped, Seq(idCol), "left_anti")
           .select(batch.columns.map(col): _*)

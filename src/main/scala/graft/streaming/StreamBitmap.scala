@@ -27,10 +27,9 @@ object StreamBitmap {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, groupCol: String,
                       valueCol: String, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      checkpointPath: String): Long = {
     import spark.implicits._
-    val cells = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val cells = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("long").as("v"))
       // mirror the batch Bitmap.bitmaps contract: a negative id would

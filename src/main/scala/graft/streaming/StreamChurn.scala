@@ -36,10 +36,9 @@ object StreamChurn {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, oldFps: DataFrame, idCol: String,
                       compareCols: Seq[String], sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val fresh = batch.select(col(idCol).as("_id") +:
           compareCols.map(c => md5(col(c).cast("string")).as(s"_nfp_$c")): _*)

@@ -36,10 +36,9 @@ object StreamComponents {
     * batch's pairs into the standing assignment. */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, aCol: String, bCol: String,
-                      sinkPath: String, checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      sinkPath: String, checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         // a replayed batch must fold against the assignment as it
         // stood BEFORE its first attempt, or the delta would be empty

@@ -13,8 +13,8 @@ import graft.functions.Contamination
   * ([[Contamination.benchShingleSet]], persisted once under
   * `statePath/bench_shingles` — eval suites are small, so the probe is
   * a broadcast membership join; the corpus side never shuffles for
-  * it). Documents sharing more than `maxFrac` of their distinct
-  * word-n-gram shingles with the benchmark QUARANTINE by wave —
+  * it). Documents sharing any of their distinct word-8-gram shingles
+  * with the benchmark QUARANTINE by wave —
   * written, never silently dropped: a leaked benchmark document is an
   * audit artifact — and clean documents admit. The per-document
   * report (n_shingles, n_hits, contam_frac) lands beside both.
@@ -35,9 +35,8 @@ object StreamContamination {
     * benchmark refresh; overwrite is atomic-enough under the parquet
     * commit protocol, and in-flight batches read a consistent copy). */
   def seedBenchmark(spark: SparkSession, bench: DataFrame,
-                    benchTextCol: String, statePath: String,
-                    n: Int = 8): Unit =
-    Contamination.benchShingleSet(bench, benchTextCol, n)
+                    benchTextCol: String, statePath: String): Unit =
+    Contamination.benchShingleSet(bench, benchTextCol, 8)
       .withColumnRenamed("_g_sh", "shingle")
       .write.mode("overwrite").parquet(s"$statePath/bench_shingles")
 
@@ -45,18 +44,16 @@ object StreamContamination {
     * processed (one-wave-per-batch oracles assert on it). */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, textCol: String,
-                      statePath: String, checkpointPath: String,
-                      n: Int = 8, maxFrac: Double = 0.0,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      statePath: String, checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val bench = session.read.parquet(s"$statePath/bench_shingles")
         val report = Contamination.overlapReportFromShingles(
-            batch, idCol, textCol, bench, "shingle", n)
+            batch, idCol, textCol, bench, "shingle", 8)
           .localCheckpoint() // probe once: report + both splits read it
-        val dirty = report.filter(col("contam_frac") > maxFrac)
+        val dirty = report.filter(col("contam_frac") > 0.0)
           .select(col(idCol))
         val cols = batch.columns.map(col).toSeq
         StreamState.writeBatch(batch.join(dirty, Seq(idCol), "left_anti").select(cols: _*),

@@ -33,10 +33,9 @@ object StreamCusum {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, keyCol: String, dayCol: String,
                       drift: Long, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      checkpointPath: String): Long = {
     import spark.implicits._
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val stream = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(keyCol).cast("long").as("k"),
         col(dayCol).cast("long").as("d"))
       .as[(Long, Long)]

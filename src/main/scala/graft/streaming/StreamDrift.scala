@@ -31,10 +31,9 @@ object StreamDrift {
     * categories' rows to `sinkPath/batch_id=N` (overwrite — replay-safe). */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, catCol: String,
-                      sinkPath: String, checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      sinkPath: String, checkpointPath: String): Long = {
     import spark.implicits._
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val stream = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(catCol).cast("string").as("c")).as[String]
     val updates = stream.groupByKey(Option(_))
       .flatMapGroupsWithState[Long, (Option[String], Long)](

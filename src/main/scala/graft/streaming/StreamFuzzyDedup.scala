@@ -37,20 +37,22 @@ import graft.functions.FuzzyDedup
   */
 object StreamFuzzyDedup {
 
+  /** Hot-variant cap: a variant hash shared by more standing and batch
+    * rows than this is dropped from the probe. */
+  private val MaxBucket: Int = 1 << 16
+
   /** Runs the AvailableNow drain and returns the number of micro-batches
     * it processed — callers whose downstream semantics assume "one wave =
     * one batch" (greedy cross-batch-only dedup) can assert on it instead
-    * of silently diverging if the file source ever splits a wave (e.g.
-    * under maxFilesPerTrigger). */
+    * of silently diverging if the file source ever splits a wave. */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, textCol: String,
                       statePath: String, checkpointPath: String,
-                      maxDist: Int = 1, maxBucket: Int = 1 << 16,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      maxDist: Int = 1): Long = {
     require(maxDist == 1 || maxDist == 2,
       "StreamFuzzyDedup: maxDist must be 1 or 2")
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val base = batch
@@ -74,7 +76,7 @@ object StreamFuzzyDedup {
           val surviving = bv.select(col("h"))
             .unionAll(standingV.select(col("h")))
             .groupBy(col("h")).agg(count(lit(1)).as("_n"))
-            .filter(col("_n") <= maxBucket && col("_n") >= 2)
+            .filter(col("_n") <= MaxBucket && col("_n") >= 2)
             .select(col("h"))
           // explicit aliases, never positional toDF: using-column joins
           // front-load the key, so a positional rename after the semi

@@ -13,7 +13,7 @@ import graft.multimodal.ImagePixels
   * `javax.imageio` pixels) and probes a persisted index of every
   * accepted image's 64-bit dHash via the bipartite chunk-pigeonhole
   * join ([[Dedup.simhashCrossPairs]], 8 chunks × 8 bits — exact for
-  * hamming ≤ 7, never all-pairs); batch images within `maxDist` of an
+  * hamming ≤ 7, never all-pairs); batch images within [[MaxDist]] of an
   * indexed image drop, survivors append to the accepted sink and the
   * index. A re-encoded, cell-aligned-resized, or brightness-shifted
   * copy of an already-accepted image is caught WITHOUT ever re-reading
@@ -32,17 +32,16 @@ import graft.multimodal.ImagePixels
   * question is "is this image already in the corpus"). */
 object StreamImageDedup {
 
+  /** Hamming radius within which a batch hash drops against the index. */
+  private val MaxDist = 4
+
   /** Runs the AvailableNow drain; returns the number of micro-batches
     * processed (callers with one-wave-per-batch oracles assert on it). */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, payloadCol: String,
-                      statePath: String, checkpointPath: String,
-                      maxDist: Int = 4,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    require(maxDist >= 0 && maxDist < 8,
-      s"maxDist must be in [0, 8) for the 8x8-bit chunk grid, got $maxDist")
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      statePath: String, checkpointPath: String): Long = {
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val hashes = ImagePixels.dhashFrame(batch, idCol, payloadCol)
@@ -54,7 +53,7 @@ object StreamImageDedup {
             StructField("dhash", LongType))))
         val dropped = Dedup.simhashCrossPairs(
             hashes.filter(col("dhash").isNotNull), standing,
-            idCol, "dhash", maxDist, numChunks = 8, chunkBits = 8)
+            idCol, "dhash", MaxDist)
           .select(col(s"${idCol}_new").as(idCol)).distinct()
         val accepted = batch.join(dropped, Seq(idCol), "left_anti")
           .select(batch.columns.map(col): _*)

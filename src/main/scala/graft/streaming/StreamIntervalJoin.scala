@@ -41,30 +41,31 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamIntervalJoin {
 
+  /** State partitions of the join: a stream-stream join carries FOUR
+    * state stores per partition per side, so the partition count is pure
+    * per-batch file-IO overhead until state actually outgrows it (the
+    * measured gate cost is lifecycle-fixed: 33.6 s at sf0.1 vs 29.6 s at
+    * 10× data under 32 partitions). The count is baked into the
+    * checkpoint at first start, like [[Scd2Stream]]'s adaptive buckets;
+    * it is sized from expected concurrent in-window rows per key-window,
+    * not from input size. */
+  private val StatePartitions = 2
+
   /** Drain both landing dirs with Trigger.AvailableNow, appending
     * matched `(a_id, b_id, user_id)` rows to `outDir`. Schemas:
     * `aDir` parquet = (a_id, user_id, a_start), `bDir` parquet =
     * (b_id, b_user_id, b_start). Returns the micro-batch count
     * ([[StreamState.drain]]).
     *
-    * `statePartitions` sizes the join's state layout (a stream-stream
-    * join carries FOUR state stores per partition per side, so partition
-    * count is pure per-batch file-IO overhead until state actually
-    * outgrows it — the measured gate cost is lifecycle-fixed: 33.6 s at
-    * sf0.1 vs 29.6 s at 10× data under 32 partitions). The count is
-    * baked into the checkpoint at first start, exactly like
-    * [[Scd2Stream]]'s adaptive buckets; pick it from expected concurrent
-    * in-window rows per key-window, not from input size. */
+    * The join's state layout is [[StatePartitions]] partitions. */
   def runAvailableNow(spark: SparkSession, aDir: String, bDir: String,
                       aSchema: StructType, bSchema: StructType,
                       aLenSec: Long, bLenSec: Long, delay: String,
                       outDir: String, checkpointPath: String,
-                      statePartitions: Int = 4,
-                      joinType: String = "inner",
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val a = StreamWaves.reader(spark, aSchema, aDir, maxFilesPerTrigger)
+                      joinType: String = "inner"): Long = {
+    val a = StreamWaves.reader(spark, aSchema, aDir)
       .withWatermark("a_start", delay)
-    val b = StreamWaves.reader(spark, bSchema, bDir, maxFilesPerTrigger)
+    val b = StreamWaves.reader(spark, bSchema, bDir)
       .withWatermark("b_start", delay)
     val joined = a.join(b,
       col("user_id") === col("b_user_id") &&
@@ -72,7 +73,7 @@ object StreamIntervalJoin {
         col("b_start") <= col("a_start") + expr(s"INTERVAL $aLenSec SECONDS"),
       joinType)
       .select(col("a_id"), col("b_id"), col("user_id"))
-    StreamState.drain(joined, checkpointPath, statePartitions)(
+    StreamState.drain(joined, checkpointPath, StatePartitions)(
       _.format("parquet").option("path", outDir))
   }
 }

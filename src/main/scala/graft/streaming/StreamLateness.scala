@@ -37,10 +37,9 @@ object StreamLateness {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, keyCol: String, arrivalCol: String,
                       tsMicrosCol: String, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      checkpointPath: String): Long = {
     import spark.implicits._
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val stream = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(keyCol).cast("long").as("k"),
         col(arrivalCol).cast("long").as("a"),
         col(tsMicrosCol).cast("long").as("t"))

@@ -64,11 +64,10 @@ object StreamNearDup {
     * silently diverging if the file source ever splits a wave. */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, textCol: String,
-                      statePath: String, checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      statePath: String, checkpointPath: String): Long = {
     val rowsPerBand = NumHashes / Bands
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         // one persisted frame carries shingles + signature (the

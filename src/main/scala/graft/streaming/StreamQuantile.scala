@@ -33,11 +33,10 @@ object StreamQuantile {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, groupCol: String,
                       valueCol: String, capacity: Int, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      checkpointPath: String): Long = {
     import spark.implicits._
     require(capacity >= 1, "capacity must be positive")
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val stream = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("long").as("v"))
       .as[(String, Long)]

@@ -17,24 +17,25 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *
   * Like [[StreamComponents]], the fold needs the whole standing set,
   * so state lives in the sink under the [[StreamState]] batch_id
-  * discipline (k rows per batch — full-rewrite is bounded by k, not
-  * the stream), not in a keyed state store; `foreachBatch` reads the
-  * standing reservoir EXCLUDING its own batch directory (replay-safe).
-  * Serve with [[currentReservoir]]. */
+  * discipline, not in a keyed state store: each batch writes the full
+  * k-row reservoir as a snapshot ([[StreamState.writeSnapshot]]), so
+  * the sink holds at most the two newest batches — k rows each, however
+  * long the stream runs. `foreachBatch` reads the standing reservoir
+  * EXCLUDING its own batch directory (replay-safe). Serve with
+  * [[currentReservoir]]. */
 object StreamReservoir {
 
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, keyCol: String,
                       weightCol: String, k: Int, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val standing = StreamState.latest(StreamState.read(
           batch.sparkSession, sinkPath, batchId,
           batch.schema.add(StructField("sample_rank", IntegerType))), Nil)
-        StreamState.writeBatch(
+        StreamState.writeSnapshot(
           graft.functions.Sampling.weightedReservoirMaintain(
             standing, batch, keyCol, weightCol, k),
           sinkPath, batchId)

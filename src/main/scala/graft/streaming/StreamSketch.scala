@@ -38,17 +38,15 @@ object StreamSketch {
     * grid and the batch grid agree cell for cell. */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, itemCol: String,
-                      sinkPath: String, checkpointPath: String,
-                      d: Int = 4, w: Int = 1024,
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      sinkPath: String, checkpointPath: String): Long = {
     import spark.implicits._
-    require(d >= 1 && w >= 1, s"need d,w >= 1, got d=$d w=$w")
-    val cells = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val cells = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(itemCol).cast("string").as("_it"))
-      .select(explode(sequence(lit(0), lit(d - 1))).as("depth"), col("_it"))
+      .select(explode(sequence(lit(0), lit(Sketches.CountMinDepth - 1)))
+        .as("depth"), col("_it"))
       .withColumn("bucket",
         pmod(Sketches.hash60(concat_ws(":", col("depth"), col("_it"))),
-          lit(w.toLong)))
+          lit(Sketches.CountMinWidth.toLong)))
       .select(col("depth").cast("int"), col("bucket")).as[(Int, Long)]
     val updates = cells.groupByKey(identity)
       .flatMapGroupsWithState[Long, (Int, Long, Long)](

@@ -19,6 +19,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    from the same input as its first attempt, and [[writeBatch]]
   *    overwrites that directory — exactly-once output from
   *    at-least-once delivery;
+  *  - a snapshot sink, whose every batch holds the whole state, writes
+  *    with [[writeSnapshot]] instead, which keeps only the two newest
+  *    batches;
   *  - serving reads resolve each key's newest batch with [[latest]];
   *  - between drains, [[compact]] folds all but the newest batch into
   *    `batch_id=-1`, which sorts below every live batch.
@@ -70,6 +73,19 @@ object StreamState {
     * previous attempt of the same batch wrote. */
   def writeBatch(df: DataFrame, path: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+
+  /** [[writeBatch]] for a snapshot sink, where every batch writes the
+    * whole state: once batch N has landed, the directories of the batches
+    * below N − 1 are deleted. N − 1 stays, because a replay of N reads
+    * the state excluding N's own directory. Serve with [[latest]] and no
+    * keys. */
+  def writeSnapshot(df: DataFrame, path: String, batchId: Long): Unit = {
+    writeBatch(df, path, batchId)
+    val p = new Path(path)
+    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    batchDirs(fs, p).takeWhile(_._1 < batchId - 1)
+      .foreach { case (_, d) => fs.delete(d, true) }
+  }
 
   /** The standing state at `path` without batch `batchId`'s own
     * directory, `batch_id` column dropped; `empty`-shaped when nothing

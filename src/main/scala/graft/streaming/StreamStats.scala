@@ -45,19 +45,21 @@ object StreamStats {
     ans
   }
 
+  /** Sketch capacity: the distinct values each group's sketch keeps. */
+  private val Capacity = 256
+
+  /** The quantiles each report row carries. */
+  private val Quantiles: Seq[Double] = Seq(0.5, 0.9, 0.99)
+
   /** Run the monitor over `sourcePath` with AvailableNow semantics. Each
     * batch updates per-group sketch state and appends one report row per
     * UPDATED group to `sinkPath/batch_id=N` (overwrite — replay-safe);
     * read the max-batch_id row per group for the current distribution. */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, groupCol: String, valueCol: String,
-                      sinkPath: String, checkpointPath: String,
-                      capacity: Int = 256,
-                      qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
-                      maxFilesPerTrigger: Option[Int] = None): Long = {
+                      sinkPath: String, checkpointPath: String): Long = {
     import spark.implicits._
-    require(qs.nonEmpty, "need at least one quantile")
-    val stream = StreamWaves.reader(spark, schema, sourcePath, maxFilesPerTrigger)
+    val stream = StreamWaves.reader(spark, schema, sourcePath)
       // null values are SKIPPED, matching the batch aggregate's
       // semantics (QuantileSketchAgg.update) — without the filter the
       // non-nullable encoder would kill the whole monitor on one null
@@ -76,7 +78,7 @@ object StreamStats {
           }
           rows.foreach { case (_, v) =>
             QuantileSketchAgg.add(buf, QuantileSketchAgg.hash60OfLong(v),
-              v, 1L, capacity)
+              v, 1L, Capacity)
           }
           val persisted = {
             val b = Seq.newBuilder[(Long, Long, Long)]
@@ -91,7 +93,7 @@ object StreamStats {
           val byValue = persisted.map(e => (e._2, e._3)).sortBy(_._1)
           val mass = byValue.map(_._2).sum
           Iterator.single((g, byValue.size.toLong, mass,
-            qs.map(q => quantileOf(byValue, mass, q))))
+            Quantiles.map(q => quantileOf(byValue, mass, q))))
       }
       .toDF("g", "sketch_size", "sketch_mass", "quantiles")
     StreamState.drain(updates, checkpointPath)(_.outputMode("update")

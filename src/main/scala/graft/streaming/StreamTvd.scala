@@ -30,10 +30,9 @@ object StreamTvd {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, groupCol: String,
                       bucketCol: String, sinkPath: String,
-                      checkpointPath: String,
-                      maxFilesPerTrigger: Option[Int] = None): Long =
-    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath,
-        maxFilesPerTrigger), checkpointPath)(_.foreachBatch {
+                      checkpointPath: String): Long =
+    StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
+        checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         StreamState.writeBatch(
           batch.groupBy(col(groupCol).as("_g"), col(bucketCol).as("_b"))

@@ -4,15 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
 import org.apache.spark.sql.types.StructType
 
-/** Wave staging + rate-limited file-source plumbing shared by the
-  * multi-wave streaming gates.
+/** Wave staging + the one-file-per-micro-batch file source shared by
+  * every streaming runner: every runner drains one staged file per
+  * micro-batch.
   *
   * Why: an `AvailableNow` query lifecycle (start, checkpoint/state load,
   * drain, stop) carries a fixed ~1-2 s cost that dwarfs the data work at
   * gate scale. A gate whose invariant is *per-micro-batch* (cross-batch
   * state folds, watermark advance between batches) doesn't need one
-  * lifecycle per wave: the file source splits pre-staged files into
-  * micro-batches under `maxFilesPerTrigger`, and state/watermark
+  * lifecycle per wave: [[reader]] splits pre-staged files into
+  * micro-batches, one file each, and state/watermark
   * semantics across micro-batches inside ONE lifecycle are identical to
   * those across separate drains. Gates whose invariant is *restart*
   * semantics (checkpoint state reload, exactly-once replay — q98, q153)
@@ -29,8 +30,8 @@ object StreamWaves {
 
   /** Stage each wave as exactly ONE parquet part-file in `src`, with
     * strictly increasing modification times (wave i at now − 1 h + i
-    * min), so a `maxFilesPerTrigger=1` source drains one wave per
-    * micro-batch in staging order.
+    * min), so a [[reader]] drains one wave per micro-batch in staging
+    * order.
     *
     * Multi-wave sets stage in ONE Spark job (the waves union, tagged by
     * index, repartitioned so every wave's rows land in one task, written
@@ -129,12 +130,11 @@ object StreamWaves {
       () => stage(d, ws)
     })
 
-  /** A schema'd parquet file-source reader with an optional
-    * files-per-micro-batch cap. */
-  def reader(spark: SparkSession, schema: StructType, path: String,
-             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
+  /** A schema'd parquet file source that admits one file per
+    * micro-batch: over a directory [[stage]] filled, one wave per
+    * micro-batch, in staging order. */
+  def reader(spark: SparkSession, schema: StructType,
+             path: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(path)
-  }
 }

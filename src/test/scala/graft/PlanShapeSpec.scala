@@ -60,7 +60,7 @@ class PlanShapeSpec extends SparkSpec {
     val o = graft.sources.Tables.load(spark, sfDir, "orders")
       .select($"o_orderkey".as("l_orderkey"), $"o_orderstatus")
     val plan = graft.operators.Skew.saltedJoin(l, o, Seq("l_orderkey"),
-        distCol = "l_linenumber", saltN = 16)
+        distCol = "l_linenumber")
       .queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"))
   }
@@ -712,7 +712,7 @@ class PlanShapeSpec extends SparkSpec {
       .select($"vec_id", $"cell", $"codes").localCheckpoint()
     val (_, out) = S.ivfPqRebalance(idx, "vec_id", "cell", "codes",
       src, "embedding", coarse, cbs, hotCells = Seq(4), splitK = 2,
-      iters = 0, sampleN = 1 << 20)
+      sampleN = 1 << 20)
     out.collect()
     val plan = out.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head

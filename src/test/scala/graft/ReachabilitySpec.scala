@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `perfbench/src/main/scala` must be reached: its name appears in another
   * main file, or again in its own file outside its definition. A member
   * that is neither is either deleted or listed, with its reason, in the
-  * "Reachability keep list" section of STATUS.md. The rule is one level
-  * deep and matches names, so a call from an unreached caller, a shared
-  * name, or a doc comment still counts as reached. */
+  * "Reachability keep list" section of STATUS.md. Comments do not count:
+  * names are matched in the code with its `//` and `/* */` comments
+  * removed. The rule is one level deep and matches names, so a call from
+  * an unreached caller or a shared name still counts as reached. */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
@@ -34,11 +35,48 @@ class ReachabilitySpec extends AnyFunSuite {
   private def tokens(lines: Seq[String]): Map[String, Int] =
     lines.flatMap(l => Token.findAllIn(l)).groupMapReduce(identity)(_ => 1)(_ + _)
 
+  /** `text` with its comments blanked out, line breaks kept so line
+    * numbers stay; string and character literals are left as they are. */
+  private def stripComments(text: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def blank(until: Int): Unit = {
+      out ++= text.substring(i, until).map(c => if (c == '\n') c else ' ')
+      i = until
+    }
+    def copyTo(until: Int): Unit = {
+      out ++= text.substring(i, until)
+      i = until
+    }
+    def endOf(close: String, from: Int): Int = {
+      val j = text.indexOf(close, from)
+      if (j < 0) text.length else j + close.length
+    }
+    while (i < text.length) {
+      if (text.startsWith("//", i)) {
+        val j = text.indexOf('\n', i)
+        blank(if (j < 0) text.length else j)
+      } else if (text.startsWith("/*", i)) blank(endOf("*/", i + 2))
+      else if (text.startsWith("\"\"\"", i)) copyTo(endOf("\"\"\"", i + 3))
+      else if (text(i) == '"') {
+        var j = i + 1
+        while (j < text.length && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        copyTo(j + 1 min text.length)
+      } else if (text.startsWith("'\"'", i)) copyTo(i + 3)
+      else copyTo(i + 1)
+    }
+    out.result()
+  }
+
   private lazy val files: Map[Path, Vector[String]] = mainDirs.flatMap { d =>
     val s = Files.walk(root.resolve(d))
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
     finally s.close()
-  }.map(p => p -> Files.readAllLines(p).asScala.toVector).toMap
+  }.map { p =>
+    p -> stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+      .split("\n", -1).toVector
+  }.toMap
 
   /** Public members of top-level objects; a member's definition runs to
     * the next member line or the object's closing brace. */

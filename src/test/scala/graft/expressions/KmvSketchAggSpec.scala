@@ -101,9 +101,9 @@ class KmvSketchAggSpec extends SparkSpec {
     val occurrences = (1 to 500).map(i => s"t${i % 7}").toDF("term")
     val exact = occurrences.groupBy("term").count()
       .as[(String, Long)].collect().toMap
-    val cells = Sketches.countMinCells(occurrences, "term", d = 4, w = 1024)
+    val cells = Sketches.countMinCells(occurrences, "term")
     val est = Sketches.countMinEstimate(cells, occurrences.distinct(),
-        "term", d = 4, w = 1024)
+        "term")
       .as[(String, Long)].collect().toMap
     exact.foreach { case (t, c) => assert(est(t) >= c) }
     // 7 items in 1024 buckets across 4 rows: some row is collision-free
@@ -113,12 +113,12 @@ class KmvSketchAggSpec extends SparkSpec {
 
   test("count-min probe of an unseen item reports est_count 0, not no row") {
     val occurrences = (1 to 500).map(i => s"t${i % 7}").toDF("term")
-    val cells = Sketches.countMinCells(occurrences, "term", d = 4, w = 1024)
+    val cells = Sketches.countMinCells(occurrences, "term")
     // "zzz_never_seen" hashes to cells the sparse frame never built —
     // the left join must surface it at 0 rather than dropping it, and
     // an absent cell reads as count 0 in the min (the true CMS answer)
     val probe = Seq("t1", "zzz_never_seen").toDF("term")
-    val est = Sketches.countMinEstimate(cells, probe, "term", d = 4, w = 1024)
+    val est = Sketches.countMinEstimate(cells, probe, "term")
       .as[(String, Long)].collect().toMap
     assert(est.keySet == Set("t1", "zzz_never_seen"))
     assert(est("zzz_never_seen") == 0L)

@@ -55,8 +55,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhashNearDups finds the near-dup pair, not the distinct pair") {
     val out = Dedup.minhashNearDups(corpus.toDF("doc_id", "text"),
-        "doc_id", "text", shingleSize = 5, numHashes = 32, bands = 8,
-        threshold = 0.5)
+        "doc_id", "text", shingleSize = 5, threshold = 0.5)
       .select("doc_id_a", "doc_id_b").as[(Long, Long)].collect().toSet
     assert(out.contains((1L, 2L))) // exact dup always found
     assert(out.contains((1L, 3L)) || out.contains((2L, 3L))) // near dup
@@ -136,8 +135,7 @@ class DedupSpec extends SparkSpec {
     val naive = Dedup.exactDedup(batch, "fp", "doc_id")
       .join(corpus.select($"fp"), Seq("fp"), "left_anti")
       .select("doc_id").as[Long].collect().toSet
-    val out = Dedup.incrementalDedup(batch, corpus, "fp", "doc_id",
-        corpusItems = 1000)
+    val out = Dedup.incrementalDedup(batch, corpus, "fp", "doc_id")
       .select("doc_id").as[Long].collect().toSet
     assert(out == naive)
     // all fresh docs survive (min-id keeper for the internal clone pair)
@@ -149,7 +147,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "fp")
     val batch = Seq((10L, Some("a")), (11L, None), (12L, Some("b")))
       .toDF("doc_id", "fp")
-    val out = Dedup.incrementalDedup(batch, corpus, "fp", "doc_id", 100)
+    val out = Dedup.incrementalDedup(batch, corpus, "fp", "doc_id")
       .select("doc_id").as[Long].collect().toSet
     // 10 is a known dup; 11 (null fp) and 12 (new) survive
     assert(out == Set(11L, 12L))
@@ -216,7 +214,7 @@ class DedupSpec extends SparkSpec {
     spark.catalog.clearCache()
     val df = corpus.toDF("doc_id", "text")
     Dedup.minhashNearDups(df, "doc_id", "text", shingleSize = 5,
-      numHashes = 32, bands = 8, threshold = 0.5).collect()
+      threshold = 0.5).collect()
     assert(spark.sharedState.cacheManager.isEmpty)
     Dedup.crossCorpusNearDups(df, df.withColumn("doc_id", $"doc_id" + 100L),
       "doc_id", "text", shingleSize = 5, numHashes = 32, bands = 8,
@@ -239,7 +237,7 @@ class DedupSpec extends SparkSpec {
       (11L, 0x00FF00FF00FF00F8L), // 3 low bits flipped vs old 2
       (12L, -1L)).toDF("id", "sim")
     val got = Dedup.simhashCrossPairs(newSide, oldSide, "id", "sim",
-        maxDist = 3, numChunks = 8, chunkBits = 8)
+        maxDist = 3)
       .as[(Long, Long, Int)].collect().toSet
     val oldRows = Seq((1L, 0x1111222233334444L),
       (2L, 0x00FF00FF00FF00FFL), (3L, 0x7777777777777777L))
@@ -253,17 +251,16 @@ class DedupSpec extends SparkSpec {
     assert(want == Set((10L, 1L, 0), (11L, 2L, 3)))
     // within-side pairs never appear even for identical hashes
     val self = Dedup.simhashCrossPairs(newSide, newSide.limit(0), "id",
-      "sim", 3, 8, 8)
+      "sim", 3)
     assert(self.count() == 0L)
     intercept[IllegalArgumentException](
-      Dedup.simhashCrossPairs(newSide, oldSide, "id", "sim", maxDist = 8,
-        numChunks = 8, chunkBits = 8))
+      Dedup.simhashCrossPairs(newSide, oldSide, "id", "sim", maxDist = 8))
   }
 
   test("size bands: integer boundaries grow by >= 1/t and ANY ratio->t " +
       "pair lands within one band (probe +-1 is exact)") {
     val t = 0.95
-    val bounds = Dedup.sizeBandBounds(t, maxN = 2000000L)
+    val bounds = Dedup.sizeBandBounds(t)
     // boundary growth: strictly increasing, factor >= 10000/9500
     bounds.sliding(2).foreach { case Seq(a, b2) =>
       assert(b2 > a && b2 >= math.max(a + 1, (a * 10000L + 9499) / 9500))

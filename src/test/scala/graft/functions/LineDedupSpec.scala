@@ -53,7 +53,7 @@ class LineDedupSpec extends SparkSpec {
       // within-doc repeat: two identical lines, first kept only
       (50L, "alpha beta gamma delta eps alpha beta gamma delta eps"))
     val got = LineDedup.dedupLines(docs.toDF("doc_id", "text"),
-        "doc_id", "text", 5)
+        "doc_id", "text")
       .select($"doc_id", $"n_lines", $"n_kept", $"kept_text")
       .as[(Long, Long, Long, String)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
@@ -69,7 +69,7 @@ class LineDedupSpec extends SparkSpec {
       (2L, "z z z z z m m m m m"),
       (1L, "a b c d e z z z z z"))
     val got = LineDedup.dedupLines(docs.toDF("doc_id", "text"),
-        "doc_id", "text", 5)
+        "doc_id", "text")
       .select($"doc_id", $"n_kept").as[(Long, Long)].collect().toMap
     assert(got(1L) == 2L) // both its lines are first occurrences
     assert(got(2L) == 1L) // loses "z z z z z" to doc 1, keeps "m m m m m"

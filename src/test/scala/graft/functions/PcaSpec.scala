@@ -9,6 +9,15 @@ import graft.SparkSpec
 class PcaSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `y = C_k (x - mean)` over the model's top-k components, each scaled
+    * to unit variance when `whiten`: one MatVecExpr per row. */
+  private def project(vec: org.apache.spark.sql.Column, model: Pca.PcaModel,
+                      k: Int, whiten: Boolean = false) =
+    graft.expressions.MatVecExpr.matVec(vec, (0 until k).map { i =>
+      val s = if (whiten) 1.0 / math.sqrt(model.eigenvalues(i)) else 1.0
+      model.components(i).map(_ * s).toSeq
+    }, model.mean.toSeq)
+
   // anisotropic synthetic data: variance concentrated on two known
   // directions, fixed seed
   private lazy val synthetic: Seq[Seq[Double]] = {
@@ -58,7 +67,7 @@ class PcaSpec extends SparkSpec {
        "unit variance per kept component") {
     val df = synthetic.toDF("embedding")
     val m = Pca.fit(df, "embedding")
-    val proj = df.select(Pca.project($"embedding", m, 2).as("y"))
+    val proj = df.select(project($"embedding", m, 2).as("y"))
       .as[Seq[Double]].collect()
     assert(proj.forall(_.size == 2))
     // row 0 by hand
@@ -74,7 +83,7 @@ class PcaSpec extends SparkSpec {
       val v = proj.map(p => (p(i) - mu) * (p(i) - mu)).sum / n
       assert(math.abs(v - m.eigenvalues(i)) < 1e-6 * math.max(1, m.eigenvalues(i)))
     }
-    val white = df.select(Pca.project($"embedding", m, 2, whiten = true).as("y"))
+    val white = df.select(project($"embedding", m, 2, whiten = true).as("y"))
       .as[Seq[Double]].collect()
     for (i <- 0 until 2) {
       val mu = white.map(_(i)).sum / n
@@ -116,9 +125,9 @@ class PcaSpec extends SparkSpec {
       assert(m2.eigenvalues.toSeq == m.eigenvalues.toSeq)
       assert(m2.components.map(_.toSeq).toSeq ==
         m.components.map(_.toSeq).toSeq)
-      val a = df.select(Pca.project($"embedding", m, 2).as("y"))
+      val a = df.select(project($"embedding", m, 2).as("y"))
         .as[Seq[Double]].collect().toSeq
-      val b = df.select(Pca.project($"embedding", m2, 2).as("y"))
+      val b = df.select(project($"embedding", m2, 2).as("y"))
         .as[Seq[Double]].collect().toSeq
       assert(a == b)
     } finally {
@@ -140,7 +149,7 @@ class PcaSpec extends SparkSpec {
     val signs = Similarity.signMatrix(inDim = 64, outDim = 16)
     val rows = df.select($"vec_id",
         $"embedding".cast("array<double>").as("full"),
-        Pca.project($"embedding", m, 16).as("pca"),
+        project($"embedding", m, 16).as("pca"),
         Similarity.signProject($"embedding", signs).as("jl"))
       .as[(Long, Seq[Double], Seq[Double], Seq[Double])].collect()
 

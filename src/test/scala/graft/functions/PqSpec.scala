@@ -52,8 +52,9 @@ class PqSpec extends SparkSpec {
   test("iters=0 codebooks are the id-ordered sample-init rows") {
     val data = df(100)
     val cbs = Similarity.pqCodebooks(data, "embedding", "vec_id",
-      m = m, ksub = 8, iters = 0, sampleN = 4096)
-    // sampleN covers everything -> init = subvectors of vec_id 0..7
+      m = m, ksub = 8, iters = 0)
+    // the 4096-vector sample covers everything -> init = subvectors of
+    // vec_id 0..7
     val first = vectors(100).take(8).map(_._2)
     (0 until m).foreach { s =>
       val expected = first.map(_.slice(s * sub, (s + 1) * sub)
@@ -281,7 +282,7 @@ class PqSpec extends SparkSpec {
       val source = base.unionByName(waves.reduce(_.unionByName(_)))
       val (coarse2, ix2) = Similarity.ivfPqRebalance(ix.localCheckpoint(),
         "vec_id", "cell", "codes", source, "embedding", coarse, cbs,
-        flagged, splitK = 2, iters = 0, sampleN = big)
+        flagged, splitK = 2, sampleN = big)
       (ix.localCheckpoint(), coarse2, ix2.localCheckpoint(), source)
     }
     val (pre, coarse2, spliced, source) = rebalanced(Seq(waveA, waveB))
@@ -335,7 +336,7 @@ class PqSpec extends SparkSpec {
       when($"vec_id" === 5L, lit(null).cast("int")).otherwise($"cell"))
     val e = intercept[Exception] {
       Similarity.ivfPqRebalance(poisoned, "vec_id", "cell", "codes",
-        src, "embedding", coarse, cbs, Seq(1), splitK = 2, iters = 0,
+        src, "embedding", coarse, cbs, Seq(1), splitK = 2,
         sampleN = 1 << 20)._2.count()
     }
     def messages(t: Throwable): Seq[String] =

@@ -60,7 +60,7 @@ class TermStatsSpec extends SparkSpec {
     // "new york" always co-occurs; "the" pairs with everything
     val d = (1 to 20).map(i =>
       (i.toLong, s"the city of new york hosts the game $i")).toDF("doc_id", "text")
-    val top = TermStats.collocations(d, "doc_id", "text", k = 5, minCount = 5)
+    val top = TermStats.collocations(d, "doc_id", "text", k = 5)
       .as[(String, String, Long, Double)].collect().toSeq
     assert(top.nonEmpty)
     val topPairs = top.map(t => (t._1, t._2))
@@ -75,11 +75,11 @@ class TermStatsSpec extends SparkSpec {
   }
 
   test("collocations minCount suppresses one-off pairs") {
-    val d = Seq((1L, "rare pair rare pair x y"), (2L, "unrelated text here"))
+    val d = Seq((1L, "rare pair " * 5 + "x y"), (2L, "unrelated text here"))
       .toDF("doc_id", "text")
-    val out = TermStats.collocations(d, "doc_id", "text", k = 10, minCount = 2)
+    val out = TermStats.collocations(d, "doc_id", "text", k = 10)
       .as[(String, String, Long, Double)].collect().toSeq
-    assert(out.forall(_._3 >= 2))
+    assert(out.forall(_._3 >= 5))
     assert(out.map(t => (t._1, t._2)).contains(("rare", "pair")))
     assert(!out.map(t => (t._1, t._2)).contains(("x", "y")))
   }

@@ -125,8 +125,7 @@ class ImagePixelsSpec extends SparkSpec {
       ids.filter($"id" === 0), "id", 36, 32, "png",
       idOffset = 999999L, truncateTo = 12)
     val media = originals.unionByName(clones).unionByName(corrupt)
-    val got = ImagePixels.imageNearDups(media, "media_id", "payload",
-        maxDist = 4)
+    val got = ImagePixels.imageNearDups(media, "media_id", "payload")
       .as[(Long, Long, Int)].collect().toSet
     // driver recount over every decodable payload
     val hs = ((0L until 24L).map(s => s ->

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.streaming.StreamWaves
 
 class TarShardsSpec extends SparkSpec {
   import spark.implicits._
@@ -133,13 +134,11 @@ class TarShardsSpec extends SparkSpec {
     def run(): Long = TarShards.streamExportAvailableNow(spark,
       s"$base/landing", docs.schema, "media_id", "payload",
       s"$base/out", s"$base/ckpt", shardBytes = 1L << 20)
-    docs.filter($"media_id" <= 4).coalesce(1)
-      .write.mode("append").parquet(s"$base/landing")
-    run()
-    docs.filter($"media_id" > 4).coalesce(1)
-      .write.mode("append").parquet(s"$base/landing")
-    run()
-    assert(run() <= 1) // replay drain: no new batch dirs with samples
+    StreamWaves.stage(s"$base/landing", Seq(docs.filter($"media_id" <= 4)))
+    assert(run() == 1L)
+    StreamWaves.stage(s"$base/landing", Seq(docs.filter($"media_id" > 4)))
+    assert(run() == 1L)
+    assert(run() == 0L) // replay drain: no new batch dirs with samples
     import scala.jdk.CollectionConverters._
     val batchDirs = Files.list(Paths.get(s"$base/out")).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("batch_id=")).toSeq

@@ -56,7 +56,7 @@ class VideoFramesSpec extends SparkSpec {
     val got = VideoFrames.videoNearDupsFromHashes(
         VideoFrames.videoHashFrame(media, "media_id", "payload", k = 8)
           .filter($"fhash".isNotNull),
-        "media_id", k = 8, maxDist = 4)
+        "media_id")
       .as[(Long, Long, Long)].collect().toSet
     // driver recount over all decodable videos
     val specs = (0L until 6L).map(s => s -> (s, 72, 64, 0, 1, Int.MaxValue)) ++

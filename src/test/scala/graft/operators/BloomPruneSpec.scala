@@ -30,7 +30,7 @@ class BloomPruneSpec extends SparkSpec {
 
   test("the prefilter actually prunes: survivors ≈ matches + fpp of the rest") {
     val survivors = BloomPrune.prune(probe, "pk", build, "bk",
-      expectedItems = 200, fpp = 0.03).count()
+      expectedItems = 200).count()
     // 200 true matches; false positives bounded well below the probe size
     assert(survivors >= 200)
     assert(survivors <= 200 + (10000 * 0.10).toLong,

@@ -25,7 +25,7 @@ class ExpectationsSpec extends SparkSpec {
       NotNull("cat"),                                     // 5/5 PASS
       AcceptedValues("cat", Seq("a", "b"), minRate = 0.8), // 4/5 = .8 PASS
       Bounds("v", 0.0, 100.0, minRate = 0.5),             // 3/5 = .6 PASS
-      Unique(Seq("id"), minRate = 1.0),                   // 4 distinct / 5
+      Unique(Seq("id")),                                  // 4 distinct / 5
       RowCount(5L, 5L)))                                  // exactly 5 PASS
     assert(got("not_null(id)") == ((0.8, 0.9, false)))
     assert(got("not_null(cat)") == ((1.0, 1.0, true)))

@@ -79,9 +79,10 @@ class LabelPropSpec extends SparkSpec {
     // two triangles: {1,2,3} and {10,11,12}
     def tri(a: Long, b: Long, c: Long) =
       Seq((a, b), (b, c), (a, c)).flatMap(e => Seq(e, e.swap))
-    val out = LabelProp.communities(
+    val out = LabelProp.propagate(
         (tri(1, 2, 3) ++ tri(10, 11, 12)).toDF("src", "dst"),
         "src", "dst", iters = 3)
+      .groupBy($"label").count()
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 3L, 10L -> 3L))
   }

@@ -14,7 +14,7 @@ class SkewSpec extends SparkSpec {
   test("saltedJoin equals the plain inner join") {
     val plain = big.join(small, "k").orderBy("k", "row_id", "v")
       .as[(Long, Long, String)].collect().toSeq
-    val salted = Skew.saltedJoin(big, small, Seq("k"), "row_id", saltN = 8)
+    val salted = Skew.saltedJoin(big, small, Seq("k"), "row_id")
       .orderBy("k", "row_id", "v").as[(Long, Long, String)].collect().toSeq
     assert(salted == plain)
     assert(salted.count(_._1 == 1L) == 1000)

@@ -46,7 +46,8 @@ class SnapshotDiffSpec extends SparkSpec {
   }
 
   test("summary counts per status") {
-    val got = SnapshotDiff.summary(oldSnap, newSnap, "id", Seq("text", "tag"))
+    val got = SnapshotDiff.diff(oldSnap, newSnap, "id", Seq("text", "tag"))
+      .groupBy($"status").count()
       .as[(String, Long)].collect().toMap
     assert(got == Map("unchanged" -> 1L, "changed" -> 2L,
       "removed" -> 1L, "added" -> 1L))

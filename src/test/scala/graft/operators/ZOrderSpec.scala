@@ -78,19 +78,6 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
-  test("bucketize maps the numeric range onto [0, 2^bits), clamping BOTH ends") {
-    val got = Seq(0.0, 50.0, 100.0).toDF("x")
-      .select(ZOrder.bucketize($"x", 0.0, 100.0, 4).as("b"))
-      .as[Long].collect().toSeq
-    assert(got.head == 0L && got.last == 15L)
-    assert(got.forall(b => b >= 0 && b < 16))
-    // out-of-range values (stale driver-known min/max) clamp, never wrap
-    val oob = Seq(-10.0, 500.0).toDF("x")
-      .select(ZOrder.bucketize($"x", 0.0, 100.0, 4).as("b"))
-      .as[Long].collect().toSeq
-    assert(oob == Seq(0L, 15L))
-  }
-
   test("z-ordered lake write prunes on BOTH columns; single-sort only on one") {
     def writeLake(df: org.apache.spark.sql.DataFrame): String = {
       val dir = tempDir("lakesim_z").toString

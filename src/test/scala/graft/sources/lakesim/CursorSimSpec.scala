@@ -57,7 +57,8 @@ class CursorSimSpec extends SparkSpec {
     }
     page("a.json", "b.json", Seq(1))
     page("b.json", "a.json", Seq(2)) // loops back, like the reference's base-URL guard
-    assert(CursorIndex.walk(dir, "a.json").map(_.file) == Seq("a.json", "b.json"))
+    assert(CursorIndex.walk(FileTransport(dir), "a.json").map(_.file) ==
+      Seq("a.json", "b.json"))
     assert(scan(dir, start = "a.json").count() == 2)
   }
 
@@ -73,7 +74,7 @@ class CursorSimSpec extends SparkSpec {
   test("declared count header total reconciles with the scan (A2/A3)") {
     val dir = tempDir("graft_cursor_count").toString
     writePages(dir)
-    val declared = CursorIndex.declaredTotal(dir, "page0.json")
+    val declared = CursorIndex.declaredTotal(FileTransport(dir), "page0.json")
     val check = graft.operators.Validation.reconcile(scan(dir).count(), declared)
     assert(declared == 5L && check.matches)
   }

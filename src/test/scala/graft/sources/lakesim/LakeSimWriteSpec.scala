@@ -215,8 +215,7 @@ class LakeSimWriteSpec extends SparkSpec {
   }
 
   test("versioned commits time-travel: each commit is a readable " +
-       "version, truncate keeps old objects for old versions, vacuum " +
-       "reclaims them and only them") {
+       "version, truncate keeps old objects for old versions") {
     val dir = tempDir("lakesim_tt").toString
     def write(ids: Range, mode: String): Unit =
       ids.map(i => (i.toLong, "A", i * 1.0)).toDF("id", "region", "amount")
@@ -254,16 +253,6 @@ class LakeSimWriteSpec extends SparkSpec {
     assert(chain(err).exists(_.getMessage != null) &&
       chain(err).exists(c => Option(c.getMessage).exists(
         _.contains("versionAsOf is batch-only"))), err)
-    // vacuum to the last 1 version: v1/v2 dropped, their exclusive
-    // objects deleted, latest untouched
-    val (dropped, deleted) = LakeOptimize.vacuumVersions(dir, keepLast = 1)
-    assert(dropped == 2 && deleted >= 1)
-    assert(LakeSimWrite.listVersions(new java.io.File(dir)) == Seq(3))
-    assert(readV(3) == Set(20L, 21L))
-    assert(readLake(dir).select($"id").as[Long].collect().toSet
-      == Set(20L, 21L))
-    val errV = intercept[Exception] { readV(1) }
-    assert(errV != null) // pre-vacuum versions are gone
   }
 
   test("versioning invariants survive hostile sequences: name reuse " +

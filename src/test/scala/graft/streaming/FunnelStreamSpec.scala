@@ -40,17 +40,14 @@ class FunnelStreamSpec extends SparkSpec {
     (2L, ts("2024-01-21 09:00:00"), "buy"),
     (3L, ts("2024-01-21 10:00:00"), "error"))
 
-  private def drain(dir: String, gap: Option[Long] = None,
-                    total: Option[Long] = None): Long = {
+  private def drain(dir: String): Long = {
     val src = s"$dir/landing"
     val schema = wave1.toDF("user_id", "ts", "etype").schema
     def run(): Long = FunnelStream.runAvailableNow(spark, src, schema,
-      "user_id", "ts", "etype", steps, s"$dir/state", s"$dir/ckpt",
-      gap, total)
+      "user_id", "ts", "etype", steps, s"$dir/state", s"$dir/ckpt")
     Seq(wave1, wave2, wave3).foreach { w =>
-      w.toDF("user_id", "ts", "etype").coalesce(1)
-        .write.mode("append").parquet(src)
-      run()
+      StreamWaves.stage(src, Seq(w.toDF("user_id", "ts", "etype")))
+      assert(run() == 1L)
     }
     run() // no-data replay
   }
@@ -65,9 +62,7 @@ class FunnelStreamSpec extends SparkSpec {
   test("drained state equals the batch funnel over the full log; " +
       "no-data replay is a no-op") {
     val dir = tempDir("fstream").toString
-    val replayBatches = drain(dir)
-    assert(replayBatches <= 1,
-      s"no-data replay ran $replayBatches folding batches")
+    assert(drain(dir) == 0L, "a no-data replay ran a folding batch")
     val got = standing(dir)
     val full = (wave1 ++ wave2 ++ wave3).toDF("user_id", "ts", "etype")
     val want = Funnels.funnelTimes(full, "user_id", "ts", "etype", steps)
@@ -97,9 +92,8 @@ class FunnelStreamSpec extends SparkSpec {
         .filter(_.startsWith("batch_id=")).toSet
     }
     Seq(wave1, wave2).foreach { w =>
-      w.toDF("user_id", "ts", "etype").coalesce(1)
-        .write.mode("append").parquet(src)
-      run()
+      StreamWaves.stage(src, Seq(w.toDF("user_id", "ts", "etype")))
+      assert(run() == 1L)
     }
     val before = standing(dir)
     // mid-chain compact: batch 0 absorbs into the base, batch 1 stays
@@ -109,9 +103,8 @@ class FunnelStreamSpec extends SparkSpec {
     FunnelStream.compact(spark, s"$dir/state", "user_id") // no-op
     assert(standing(dir) == before)
     // the compacted base is a valid fold input, not just a valid read
-    wave3.toDF("user_id", "ts", "etype").coalesce(1)
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(wave3.toDF("user_id", "ts", "etype")))
+    assert(run() == 1L)
     FunnelStream.compact(spark, s"$dir/state", "user_id")
     val want = Funnels.funnelTimes(
         (wave1 ++ wave2 ++ wave3).toDF("user_id", "ts", "etype"),
@@ -126,25 +119,6 @@ class FunnelStreamSpec extends SparkSpec {
       .contains(ts("2024-01-21 09:00:00")))
   }
 
-  test("conversion windows ride the fold: a cross-wave chain expiring " +
-      "the step gap stays open, matching the windowed batch funnel") {
-    val dir = tempDir("fstreamw").toString
-    // 7-day step gap: u2's view(Jan 2) -> click(Jan 11) gap is 9 days —
-    // expired; u5's 30-minute hops survive
-    drain(dir, gap = Some(7L * 86400))
-    val got = standing(dir)
-    val full = (wave1 ++ wave2 ++ wave3).toDF("user_id", "ts", "etype")
-    val want = Funnels.funnelTimes(full, "user_id", "ts", "etype", steps,
-        maxStepGapSec = Some(7L * 86400))
-      .orderBy("user_id")
-      .as[(Long, Option[Timestamp], Option[Timestamp], Option[Timestamp])]
-      .collect().toSeq
-    assert(got == want)
-    val byUser = got.map(r => r._1 -> r).toMap
-    assert(byUser(2L)._3.isEmpty)
-    assert(byUser(5L)._4.isDefined)
-  }
-
   test("a null-timestamp step-1 event does not hide the user's valid " +
       "step-1 event, matching the batch funnel") {
     val dir = tempDir("fstreamn").toString
@@ -156,9 +130,9 @@ class FunnelStreamSpec extends SparkSpec {
       (6L, ts("2024-01-03 10:10:00"), "click"),
       (7L, ts("2024-01-03 11:00:00"), "view"))
     val df = events.toDF("user_id", "ts", "etype")
-    df.coalesce(1).write.parquet(src)
-    FunnelStream.runAvailableNow(spark, src, df.schema, "user_id", "ts",
-      "etype", steps, s"$dir/state", s"$dir/ckpt")
+    StreamWaves.stage(src, Seq(df))
+    assert(FunnelStream.runAvailableNow(spark, src, df.schema, "user_id",
+      "ts", "etype", steps, s"$dir/state", s"$dir/ckpt") == 1L)
     val want = Funnels.funnelTimes(df, "user_id", "ts", "etype", steps)
       .orderBy("user_id")
       .as[(Long, Option[Timestamp], Option[Timestamp], Option[Timestamp])]

@@ -59,7 +59,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
         Seq(sentinels.head).toDF("key", "ts", "side", "value"),
         Seq(sentinels(1)).toDF("key", "ts", "side", "value")))
       StreamState.drain(StreamAsof.asofJoin(
-          StreamWaves.reader(spark, wave.schema, src, Some(1))
+          StreamWaves.reader(spark, wave.schema, src)
             .as[StreamAsof.AsofInput]
             .withWatermark("ts", "60 seconds")).toDF(), s"$dir/ckpt",
         statePartitions = 2)(_.format("parquet")
@@ -80,7 +80,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
       StreamWaves.stage(src, Seq(rows.filter($"doc_id" <= 15),
         rows.filter($"doc_id" > 15)))
       StreamState.drain(StreamDedup.dedupByFingerprint(
-          StreamWaves.reader(spark, rows.schema, src, Some(1)),
+          StreamWaves.reader(spark, rows.schema, src),
           "ts", "text", watermarkDelay = "30 days"), s"$dir/ckpt",
         statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink"))
       spark.read.parquet(s"$dir/sink").select($"doc_id")
@@ -104,7 +104,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
           month($"ts") === 1),
         rows.filter($"user_id" < 0 && month($"ts") === 6)))
       StreamState.drain(Sessionize.sessionsStream(
-          StreamWaves.reader(spark, rows.schema, src, Some(1))
+          StreamWaves.reader(spark, rows.schema, src)
             .withWatermark("ts", "60 seconds"),
           "user_id", "ts", "30 minutes", col("value")), s"$dir/ckpt",
         statePartitions = 2)(_.format("parquet")
@@ -131,8 +131,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
       StreamIntervalJoin.runAvailableNow(
         spark, s"$dir/a", s"$dir/b", a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
-        outDir = s"$dir/out", checkpointPath = s"$dir/ckpt",
-        statePartitions = 2)
+        outDir = s"$dir/out", checkpointPath = s"$dir/ckpt")
       spark.read.parquet(s"$dir/out")
     }
   }

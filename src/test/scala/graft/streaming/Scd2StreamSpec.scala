@@ -46,12 +46,12 @@ class Scd2StreamSpec extends SparkSpec {
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt")
       def wave(lo: Int, hi: Int) =
-        mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))
-          .coalesce(1).write.mode("append").parquet(src)
+        StreamWaves.stage(src,
+          Seq(mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))))
       wave(1, 2); assert(run() == 1L)
       wave(3, 4); assert(run() == 1L)
       wave(5, 6); assert(run() == 1L)
-      assert(run() <= 1L) // no new files
+      assert(run() == 0L) // no new files
       val got = histOf(Scd2Stream.currentHistory(spark, s"$base/state"))
       val want = histOf(graft.operators.Scd2.fromChangeLog(log,
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id")))
@@ -71,7 +71,7 @@ class Scd2StreamSpec extends SparkSpec {
       def run(): Long = Scd2Stream.runAvailableNow(spark, src, log.schema,
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt", nBuckets = 256)
-      mkLog(all).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(all)))
       assert(run() == 1L)
       val before = histOf(Scd2Stream.currentHistory(spark, s"$base/state"))
       // rewrite every manifest in the legacy format (entry lines only)
@@ -96,8 +96,8 @@ class Scd2StreamSpec extends SparkSpec {
       // legacy 256 so the new wave's buckets align with the standing
       // layout. The wave updates EXISTING key 1 — a K drift would
       // look for its open interval in the wrong bucket and duplicate it
-      mkLog(Seq((1L, "2024-02-01 00:00:00", 9L, "Z")))
-        .coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src,
+        Seq(mkLog(Seq((1L, "2024-02-01 00:00:00", 9L, "Z")))))
       assert(Scd2Stream.runAvailableNow(spark, src, log.schema,
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt") == 1L)
@@ -118,8 +118,7 @@ class Scd2StreamSpec extends SparkSpec {
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt", nBuckets = 64)
       // wave 1: both keys land (keys 1 and 2 → two buckets at nBuckets=64)
-      mkLog(all.take(2) :+ all(3)).coalesce(1)
-        .write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(all.take(2) :+ all(3))))
       assert(run() == 1L)
       val b0 = new java.io.File(s"$base/state/snap/batch_id=0")
       val b0Buckets = b0.listFiles().filter(_.getName.startsWith("_gbucket="))
@@ -130,7 +129,7 @@ class Scd2StreamSpec extends SparkSpec {
       val mtimes = b0Buckets.flatMap(_.listFiles())
         .map(f => f.getPath -> f.lastModified()).toMap
       // wave 2 touches ONLY key 1 → only key 1's bucket in the new delta
-      mkLog(Seq(all(4))).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(Seq(all(4)))))
       assert(run() == 1L)
       val b1 = new java.io.File(s"$base/state/snap/batch_id=1")
       val b1Buckets = b1.listFiles().filter(_.getName.startsWith("_gbucket="))
@@ -159,8 +158,8 @@ class Scd2StreamSpec extends SparkSpec {
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt", nBuckets = 8)
       def wave(lo: Int, hi: Int) =
-        mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))
-          .coalesce(1).write.mode("append").parquet(src)
+        StreamWaves.stage(src,
+          Seq(mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))))
       wave(1, 2); assert(run() == 1L)
       wave(3, 4); assert(run() == 1L)
       val before = histOf(Scd2Stream.currentHistory(spark, s"$base/state"))
@@ -213,18 +212,18 @@ class Scd2StreamSpec extends SparkSpec {
         spark.read.parquet(s"$base/state/snap/batch_id=$id")
           .select($"user_id").distinct().collect().map(_.getLong(0)).toSet
       // wave 1: 3 events → K = 1 (ceil(3/4)): exactly one bucket dir
-      mkLog(w1).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(w1)))
       assert(run() == 1L)
       assert(snapDirs(0) == Seq("_gbucket=0"), snapDirs(0))
       // wave 2: est = 3 history rows + 2 → K = 2: REBUILD re-shards
       // EVERYTHING — key 2's rows land in batch 1 though it wasn't in
       // the batch
-      mkLog(w2).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(w2)))
       assert(run() == 1L)
       assert(keysIn(1) == Set(1L, 2L), keysIn(1))
       // wave 3: est stays under 2 buckets' worth → K holds at 2 →
       // INCREMENTAL again: only key 1's bucket in the new delta
-      mkLog(w3).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(w3)))
       assert(run() == 1L)
       assert(keysIn(2) == Set(1L), keysIn(2))
       assert(snapDirs(2).size == 1, snapDirs(2))
@@ -254,11 +253,11 @@ class Scd2StreamSpec extends SparkSpec {
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt", nBuckets = 8)
       def wave(lo: Int, hi: Int) =
-        mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))
-          .coalesce(1).write.mode("append").parquet(src)
-      wave(1, 2); run(); wave(3, 4); run()
+        StreamWaves.stage(src,
+          Seq(mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))))
+      wave(1, 2); assert(run() == 1L); wave(3, 4); assert(run() == 1L)
       Scd2Stream.compact(spark, s"$base/state")
-      wave(5, 6); run()
+      wave(5, 6); assert(run() == 1L)
       val want = histOf(Scd2Stream.currentHistory(spark, s"$base/state"))
       // simulate the crash window of a SECOND compaction: new base fully
       // written to _compacting, old base renamed aside, then crash
@@ -308,10 +307,10 @@ class Scd2StreamSpec extends SparkSpec {
         log.schema, Seq("user_id"), "ts", Seq("event_type"),
         Seq("event_id"), factCols = Seq("event_id", "user_id", "ts"),
         s"$base/state", s"$base/ckpt")
-      mkLog(all.take(2)).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(all.take(2))))
       assert(run() == 1L)
       // an all-null-free but EMPTY wave: a zero-row parquet file
-      mkLog(Seq.empty).coalesce(1).write.mode("append").parquet(src)
+      StreamWaves.stage(src, Seq(mkLog(Seq.empty)))
       assert(run() == 1L)
       val e1 = spark.read.parquet(s"$base/state/enriched/batch_id=1")
       assert(e1.count() == 0)
@@ -336,19 +335,17 @@ class Scd2StreamSpec extends SparkSpec {
         Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
         s"$base/state", s"$base/ckpt", opCol = Some("op"))
       // wave 1: upserts for keys 1 and 2
-      mkCdc(Seq(
+      StreamWaves.stage(src, Seq(mkCdc(Seq(
         (1L, "2024-01-01 00:00:00", 1L, "A", "u"),
         (1L, "2024-01-02 00:00:00", 2L, "B", "u"),
-        (2L, "2024-01-03 00:00:00", 3L, "C", "u")))
-        .coalesce(1).write.mode("append").parquet(src)
+        (2L, "2024-01-03 00:00:00", 3L, "C", "u")))))
       assert(run() == 1L)
       // wave 2: an update AND a later tombstone for key 1 in ONE batch,
       // plus a tombstone for an unknown key (no-op)
-      mkCdc(Seq(
+      StreamWaves.stage(src, Seq(mkCdc(Seq(
         (1L, "2024-01-10 00:00:00", 4L, "C", "u"),
         (1L, "2024-01-12 00:00:00", 5L, null, "d"),
-        (9L, "2024-01-12 00:00:00", 6L, null, "d")))
-        .coalesce(1).write.mode("append").parquet(src)
+        (9L, "2024-01-12 00:00:00", 6L, null, "d")))))
       assert(run() == 1L)
       val got = histOf(Scd2Stream.currentHistory(spark, s"$base/state"))
       val want = histOf(graft.operators.Scd2.applyDeletes(

@@ -14,7 +14,7 @@ class StreamBitmapSpec extends SparkSpec {
     val src = s"$dir/landing"
     val rows = Seq(("k", 5L), ("k", -1L))
     val schema = rows.toDF("g", "v").schema
-    rows.toDF("g", "v").write.mode("append").parquet(src)
+    StreamWaves.stage(src, Seq(rows.toDF("g", "v")))
     val e = intercept[Exception] {
       StreamBitmap.runAvailableNow(spark, src, schema, "g", "v",
         s"$dir/sink", s"$dir/ckpt")
@@ -31,9 +31,9 @@ class StreamBitmapSpec extends SparkSpec {
     val rows = Seq(("a", 0L), ("a", 62L), ("a", 63L), ("b", 5L),
       ("a", 62L))
     val schema = rows.toDF("g", "v").schema
-    rows.toDF("g", "v").write.mode("append").parquet(src)
-    StreamBitmap.runAvailableNow(spark, src, schema, "g", "v",
-      s"$dir/sink", s"$dir/ckpt")
+    StreamWaves.stage(src, Seq(rows.toDF("g", "v")))
+    assert(StreamBitmap.runAvailableNow(spark, src, schema, "g", "v",
+      s"$dir/sink", s"$dir/ckpt") == 1L)
     val got = StreamBitmap.currentBitmap(spark, s"$dir/sink")
       .as[(String, Long, Long)].collect().toSet
     val want = graft.functions.Bitmap.bitmaps(
@@ -49,8 +49,9 @@ class StreamBitmapSpec extends SparkSpec {
       ("b", 3L), (null, 1L), ("a", 64L)).toDF("g", "v")
     StreamWaves.stage(src, Seq(rows.limit(2), rows.filter($"v" === 70L ||
       $"v" === 3L), rows.filter($"v" === 64L || ($"v" === 1L))))
-    StreamBitmap.runAvailableNow(spark, src, rows.schema, "g", "v",
-      s"$dir/sink", s"$dir/ckpt", maxFilesPerTrigger = Some(1))
+    // one micro-batch per staged wave
+    assert(StreamBitmap.runAvailableNow(spark, src, rows.schema, "g", "v",
+      s"$dir/sink", s"$dir/ckpt") == 3L)
     val want = graft.functions.Bitmap.bitmaps(rows, "g", "v")
       .as[(String, Long, Long)].collect().toSet
     assert(want.exists(_._1 == null))

@@ -21,13 +21,13 @@ class StreamChurnSpec extends SparkSpec {
     val dir = tempDir("schurn").toString
     val src = s"$dir/landing"
     val fps = StreamChurn.oldFingerprints(oldSnap, "id", Seq("v", "w"))
-    def run(): Unit = StreamChurn.runAvailableNow(spark, src,
+    def run(): Long = StreamChurn.runAvailableNow(spark, src,
       newSnap.schema, fps, "id", Seq("v", "w"), s"$dir/sink", s"$dir/ckpt")
     // two waves split by id parity
-    newSnap.filter($"id" % 2 === 0).write.mode("append").parquet(src)
-    run()
-    newSnap.filter($"id" % 2 =!= 0).write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(newSnap.filter($"id" % 2 === 0)))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(newSnap.filter($"id" % 2 =!= 0)))
+    assert(run() == 1L)
     val got = StreamChurn.currentChurn(spark, s"$dir/sink", oldSnap.count())
       .as[(String, Long)].collect().toMap
     val want = SnapshotDiff.columnChurn(oldSnap, newSnap, "id",
@@ -37,7 +37,7 @@ class StreamChurnSpec extends SparkSpec {
     assert(got("removed") == 1L && got("changed") == 2L)
 
     val before = spark.read.parquet(s"$dir/sink").count()
-    run() // no new files
+    assert(run() == 0L) // no new files
     assert(spark.read.parquet(s"$dir/sink").count() == before)
   }
 
@@ -45,10 +45,9 @@ class StreamChurnSpec extends SparkSpec {
     val dir = tempDir("schurn2").toString
     val src = s"$dir/landing"
     val fps = StreamChurn.oldFingerprints(oldSnap, "id", Seq("v", "w"))
-    Seq((9L, "z", 90L)).toDF("id", "v", "w")
-      .write.mode("append").parquet(src)
-    StreamChurn.runAvailableNow(spark, src, newSnap.schema, fps, "id",
-      Seq("v", "w"), s"$dir/sink", s"$dir/ckpt")
+    StreamWaves.stage(src, Seq(Seq((9L, "z", 90L)).toDF("id", "v", "w")))
+    assert(StreamChurn.runAvailableNow(spark, src, newSnap.schema, fps,
+      "id", Seq("v", "w"), s"$dir/sink", s"$dir/ckpt") == 1L)
     val got = StreamChurn.currentChurn(spark, s"$dir/sink", oldSnap.count())
       .as[(String, Long)].collect().toMap
     assert(got("added") == 1L && got("changed") == 0L)

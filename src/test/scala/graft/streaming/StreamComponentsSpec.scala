@@ -22,9 +22,9 @@ class StreamComponentsSpec extends SparkSpec {
     val src = s"$dir/landing"
     val schema = waveA.toDF("a", "b").schema
     waves.foreach { w =>
-      w.toDF("a", "b").coalesce(1).write.mode("append").parquet(src)
-      StreamComponents.runAvailableNow(spark, src, schema, "a", "b",
-        s"$dir/sink", s"$dir/ckpt")
+      StreamWaves.stage(src, Seq(w.toDF("a", "b")))
+      assert(StreamComponents.runAvailableNow(spark, src, schema, "a", "b",
+        s"$dir/sink", s"$dir/ckpt") == 1L)
     }
     StreamComponents.currentAssignment(spark, s"$dir/sink")
       .as[(Long, Long)].collect().toSet

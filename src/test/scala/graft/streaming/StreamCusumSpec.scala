@@ -19,9 +19,9 @@ class StreamCusumSpec extends SparkSpec {
   test("folds counts in day order, synthesizing silent days") {
     val (dir, run) = setup("scu")
     // day 10: 5 events; day 11: 1; day 14: 4 (days 12, 13 silent)
-    (Seq.fill(5)((7L, 10L)) ++ Seq((7L, 11L)) ++ Seq.fill(4)((7L, 14L)))
-      .toDF("k", "day").write.mode("append").parquet(s"$dir/landing")
-    run()
+    StreamWaves.stage(s"$dir/landing", Seq((Seq.fill(5)((7L, 10L)) ++
+      Seq((7L, 11L)) ++ Seq.fill(4)((7L, 14L))).toDF("k", "day")))
+    assert(run() == 1L)
     val got = StreamCusum.emittedSeries(spark, s"$dir/sink")
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._2 -> ((r._3, r._4))).toMap
@@ -33,13 +33,13 @@ class StreamCusumSpec extends SparkSpec {
 
   test("state restores across drains; cross-wave gaps synthesize") {
     val (dir, run) = setup("scu2")
-    Seq.fill(6)((1L, 20L)).toDF("k", "day")
-      .write.mode("append").parquet(s"$dir/landing")
-    run() // S(20) = 4
+    StreamWaves.stage(s"$dir/landing",
+      Seq(Seq.fill(6)((1L, 20L)).toDF("k", "day")))
+    assert(run() == 1L) // S(20) = 4
     // wave 2 arrives at day 23: days 21, 22 must decay S inside the fold
-    Seq.fill(3)((1L, 23L)).toDF("k", "day")
-      .write.mode("append").parquet(s"$dir/landing")
-    run()
+    StreamWaves.stage(s"$dir/landing",
+      Seq(Seq.fill(3)((1L, 23L)).toDF("k", "day")))
+    assert(run() == 1L)
     val got = StreamCusum.emittedSeries(spark, s"$dir/sink")
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._2 -> r._4).toMap
@@ -48,19 +48,17 @@ class StreamCusumSpec extends SparkSpec {
     // every (key, day) exactly once
     assert(StreamCusum.emittedSeries(spark, s"$dir/sink").count() == 4L)
     // replay with no new files leaves the sink untouched
-    run()
+    assert(run() == 0L)
     assert(StreamCusum.emittedSeries(spark, s"$dir/sink").count() == 4L)
   }
 
   test("an out-of-order wave fails loudly instead of corrupting state") {
     val (dir, run) = setup("scu4")
-    Seq((1L, 20L)).toDF("k", "day")
-      .write.mode("append").parquet(s"$dir/landing")
-    run()
+    StreamWaves.stage(s"$dir/landing", Seq(Seq((1L, 20L)).toDF("k", "day")))
+    assert(run() == 1L)
     // a late file reaching back to an already-folded day must raise,
     // not silently drop events and rewind lastDay
-    Seq((1L, 19L)).toDF("k", "day")
-      .write.mode("append").parquet(s"$dir/landing")
+    StreamWaves.stage(s"$dir/landing", Seq(Seq((1L, 19L)).toDF("k", "day")))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       run()
     }
@@ -75,10 +73,10 @@ class StreamCusumSpec extends SparkSpec {
     val rows = Seq.fill(300)((rng.nextInt(4).toLong,
       (10 + rng.nextInt(15)).toLong))
     val (w1, w2) = rows.partition(_._2 <= 17)
-    w1.toDF("k", "day").write.mode("append").parquet(s"$dir/landing")
-    run()
-    w2.toDF("k", "day").write.mode("append").parquet(s"$dir/landing")
-    run()
+    StreamWaves.stage(s"$dir/landing", Seq(w1.toDF("k", "day")))
+    assert(run() == 1L)
+    StreamWaves.stage(s"$dir/landing", Seq(w2.toDF("k", "day")))
+    assert(run() == 1L)
     val streamed = StreamCusum.emittedSeries(spark, s"$dir/sink")
       .as[(Long, Long, Long, Long)].collect().toSet
     val daily = rows.toDF("k", "day").groupBy("k", "day")

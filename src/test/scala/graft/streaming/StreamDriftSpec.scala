@@ -14,21 +14,21 @@ class StreamDriftSpec extends SparkSpec {
     val dir = tempDir("sdr").toString
     val src = s"$dir/landing"
     val schema = Seq("x").toDF("cat").schema
-    def run(): Unit = StreamDrift.runAvailableNow(
+    def run(): Long = StreamDrift.runAvailableNow(
       spark, src, schema, "cat", s"$dir/sink", s"$dir/ckpt")
 
-    Seq("a", "a", "b").toDF("cat").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq("a", "a", "b").toDF("cat")))
+    assert(run() == 1L)
     // wave 2: only a moves — b's standing row must stay batch 0's
-    Seq("a").toDF("cat").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq("a").toDF("cat")))
+    assert(run() == 1L)
     val got = StreamDrift.currentCounts(spark, s"$dir/sink")
       .as[(String, Long)].collect().toMap
     assert(got == Map("a" -> 3L, "b" -> 1L))
 
     // replay with no new files: the sink must not gain rows
     val before = spark.read.parquet(s"$dir/sink").count()
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == before)
     // batch 1 emitted ONLY the updated category
     assert(spark.read.parquet(s"$dir/sink/batch_id=1").count() == 1L)
@@ -38,14 +38,12 @@ class StreamDriftSpec extends SparkSpec {
     val dir = tempDir("sdrn").toString
     val src = s"$dir/landing"
     val schema = Seq(Option("x")).toDF("cat").schema
-    def run(): Unit = StreamDrift.runAvailableNow(
+    def run(): Long = StreamDrift.runAvailableNow(
       spark, src, schema, "cat", s"$dir/sink", s"$dir/ckpt")
-    Seq(Some("a"), None, None).toDF("cat")
-      .write.mode("append").parquet(src)
-    run()
-    Seq[Option[String]](None).toDF("cat")
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq(Some("a"), None, None).toDF("cat")))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(Seq[Option[String]](None).toDF("cat")))
+    assert(run() == 1L)
     val got = StreamDrift.currentCounts(spark, s"$dir/sink")
       .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
     assert(got == Map(Some("a") -> 1L, None -> 3L))
@@ -56,10 +54,10 @@ class StreamDriftSpec extends SparkSpec {
     val src = s"$dir/landing"
     val cur = Seq("a", "a", "b", "b", "b").toDF("cat")
     val ref = Seq("a", "a", "a", "b").toDF("cat")
-    def run(): Unit = StreamDrift.runAvailableNow(
+    def run(): Long = StreamDrift.runAvailableNow(
       spark, src, cur.schema, "cat", s"$dir/sink", s"$dir/ckpt")
-    cur.write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(cur))
+    assert(run() == 1L)
     val refCounts = ref.groupBy(col("cat").as("category"))
       .agg(count(lit(1)).as("ref_n"))
     val streamed = graft.functions.Drift.chiSquaredAuditFromCounts(

@@ -14,13 +14,13 @@ class StreamFuzzyDedupSpec extends SparkSpec {
     val dir = tempDir("sfd").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "name").schema
-    def run(): Unit = StreamFuzzyDedup.runAvailableNow(
+    def run(): Long = StreamFuzzyDedup.runAvailableNow(
       spark, src, schema, "id", "name", s"$dir/state", s"$dir/ckpt")
 
     val wave1 = Seq((1L, "martha"), (2L, "jonathan"), (3L, "elisabeth"))
       .toDF("id", "name")
-    wave1.write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(wave1))
+    assert(run() == 1L)
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == Set(1L, 2L, 3L))
     assert(spark.read.parquet(s"$dir/state/variants").count() > 0)
@@ -30,22 +30,21 @@ class StreamFuzzyDedupSpec extends SparkSpec {
     // 13 = DISTANCE-2 typo of 3 (must survive at maxDist=1), 14 = fresh
     val wave2 = Seq((11L, "martha"), (12L, "jonathen"),
       (13L, "elizabth"), (14L, "winston")).toDF("id", "name")
-    wave2.write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(wave2))
+    assert(run() == 1L)
     val accepted = spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet
     assert(accepted == Set(1L, 2L, 3L, 13L, 14L),
       s"typos within distance 1 must drop via the stored index: $accepted")
 
     // the survivors joined the index: a wave-3 typo of 14 drops
-    Seq((21L, "winstonx")).toDF("id", "name")
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq((21L, "winstonx")).toDF("id", "name")))
+    assert(run() == 1L)
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == Set(1L, 2L, 3L, 13L, 14L))
 
     // replay with no new files: accepted set unchanged
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == Set(1L, 2L, 3L, 13L, 14L))
   }
@@ -55,19 +54,18 @@ class StreamFuzzyDedupSpec extends SparkSpec {
     val dir = tempDir("sfd2").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "name").schema
-    def run(): Unit = StreamFuzzyDedup.runAvailableNow(
+    def run(): Long = StreamFuzzyDedup.runAvailableNow(
       spark, src, schema, "id", "name", s"$dir/state", s"$dir/ckpt",
       maxDist = 2)
 
-    Seq((1L, "martha"), (2L, "gilbert")).toDF("id", "name")
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src,
+      Seq(Seq((1L, "martha"), (2L, "gilbert")).toDF("id", "name")))
+    assert(run() == 1L)
     // 11 = two substitutions off 1 (drops at maxDist=2); 12 = three
     // edits off 2 (survives)
-    Seq((11L, "nartha_".dropRight(1).updated(5, 'x')),
-      (12L, "gilbzzz")).toDF("id", "name")
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq((11L, "nartha_".dropRight(1).updated(5, 'x')),
+      (12L, "gilbzzz")).toDF("id", "name")))
+    assert(run() == 1L)
     val accepted = spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet
     assert(accepted == Set(1L, 2L, 12L), accepted.toString)

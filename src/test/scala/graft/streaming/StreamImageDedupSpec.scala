@@ -23,8 +23,7 @@ class StreamImageDedupSpec extends SparkSpec {
     def run(): Long = StreamImageDedup.runAvailableNow(spark, src, schema,
       "media_id", "payload", s"$dir/state", s"$dir/ckpt")
     // wave 1: four originals
-    fixture(Seq(0L, 1L, 2L, 3L), 72, 64, "png")
-      .coalesce(1).write.mode("append").parquet(src)
+    StreamWaves.stage(src, Seq(fixture(Seq(0L, 1L, 2L, 3L), 72, 64, "png")))
     assert(run() == 1L)
     def accepted(): Set[Long] = spark.read
       .parquet(s"$dir/state/accepted").select($"media_id")
@@ -33,10 +32,10 @@ class StreamImageDedupSpec extends SparkSpec {
     // wave 2: clones of 0 and 2 (resized BMP re-encode, brightness
     // shift — hamming 0 by construction), one fresh pattern, one
     // truncated payload
-    fixture(Seq(0L, 2L), 144, 128, "bmp", shift = 3, off = 100L)
+    StreamWaves.stage(src, Seq(
+      fixture(Seq(0L, 2L), 144, 128, "bmp", shift = 3, off = 100L)
       .unionByName(fixture(Seq(7L), 72, 64, "png", off = 200L))
-      .unionByName(fixture(Seq(0L), 36, 32, "png", off = 999L, trunc = 10))
-      .coalesce(1).write.mode("append").parquet(src)
+      .unionByName(fixture(Seq(0L), 36, 32, "png", off = 999L, trunc = 10))))
     assert(run() == 1L)
     assert(accepted() == Set(0L, 1L, 2L, 3L, 207L, 999L))
     // the index holds only decodable accepted hashes
@@ -44,8 +43,7 @@ class StreamImageDedupSpec extends SparkSpec {
       .select($"media_id").as[Long].collect().toSet
     assert(indexed == Set(0L, 1L, 2L, 3L, 207L))
     // replay with no new files: nothing changes
-    val n3 = run()
-    assert(n3 <= 1L)
+    assert(run() == 0L)
     assert(accepted() == Set(0L, 1L, 2L, 3L, 207L, 999L))
   }
 
@@ -59,17 +57,15 @@ class StreamImageDedupSpec extends SparkSpec {
       "media_id", "payload", s"$dir/state", s"$dir/ckpt")
     // original + its clone land TOGETHER: both accepted (cross-batch
     // semantics), like StreamNearDup
-    fixture(Seq(5L), 72, 64, "png")
-      .unionByName(fixture(Seq(5L), 144, 128, "bmp", shift = 2, off = 50L))
-      .coalesce(1).write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(fixture(Seq(5L), 72, 64, "png")
+      .unionByName(fixture(Seq(5L), 144, 128, "bmp", shift = 2, off = 50L))))
+    assert(run() == 1L)
     val a1 = spark.read.parquet(s"$dir/state/accepted")
       .select($"media_id").as[Long].collect().toSet
     assert(a1 == Set(5L, 55L))
     // a third copy next wave drops against BOTH stored hashes
-    fixture(Seq(5L), 72, 64, "bmp", off = 90L)
-      .coalesce(1).write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(fixture(Seq(5L), 72, 64, "bmp", off = 90L)))
+    assert(run() == 1L)
     val a2 = spark.read.parquet(s"$dir/state/accepted")
       .select($"media_id").as[Long].collect().toSet
     assert(a2 == Set(5L, 55L))

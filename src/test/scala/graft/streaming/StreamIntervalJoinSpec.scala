@@ -33,11 +33,10 @@ class StreamIntervalJoinSpec extends SparkSpec {
     StreamWaves.stage(bDir, Seq(
       b.filter($"b_start" < ts(100)), b.filter($"b_start" >= ts(100)),
       Seq((-1L, -998L, far)).toDF("b_id", "b_user_id", "b_start")))
-    StreamIntervalJoin.runAvailableNow(spark, aDir, bDir,
+    val batches = StreamIntervalJoin.runAvailableNow(spark, aDir, bDir,
       a.schema, b.schema, aLenSec = 3600L, bLenSec = 1800L,
       delay = "1 hour", outDir = s"$dir/out",
-      checkpointPath = s"$dir/ckpt", statePartitions = 2,
-      joinType = "left_outer", maxFilesPerTrigger = Some(1))
+      checkpointPath = s"$dir/ckpt", joinType = "left_outer")
     val got = spark.read.parquet(s"$dir/out")
       .filter($"a_id" >= 0)
       .select($"a_id", coalesce($"b_id", lit(-1L)).as("b_id"), $"user_id")
@@ -49,6 +48,8 @@ class StreamIntervalJoinSpec extends SparkSpec {
         bucketSeconds = 3600L, leftIdCol = "a_id")
       .select($"a_id", coalesce($"b_id", lit(-1L)).as("b_id"), $"user_id")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // one micro-batch per staged wave: each side's wave i lands in batch i
+    assert(batches == 3L)
     // the unmatched lefts really surface
     assert(got.filter($"b_id" === -1L).count() == 2L)
   }

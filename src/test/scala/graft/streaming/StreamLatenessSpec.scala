@@ -16,12 +16,12 @@ class StreamLatenessSpec extends SparkSpec {
     // the high-water mark must SURVIVE the batch boundary
     val all = Seq((1L, 1L, 10L), (1L, 2L, 30L), (1L, 3L, 20L),
       (1L, 4L, 25L), (2L, 5L, 7L)).toDF("k", "a", "t")
-    def run(): Unit = StreamLateness.runAvailableNow(spark, src,
+    def run(): Long = StreamLateness.runAvailableNow(spark, src,
       all.schema, "k", "a", "t", s"$dir/sink", s"$dir/ckpt")
-    all.filter($"a" <= 2).write.mode("append").parquet(src)
-    run()
-    all.filter($"a" > 2).write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(all.filter($"a" <= 2)))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(all.filter($"a" > 2)))
+    assert(run() == 1L)
     val got = StreamLateness.currentAudit(spark, s"$dir/sink")
       .as[(Long, Long, Long, Long)].collect().toSet
     val want = graft.operators.TimeSeries.latenessAudit(all, "k", "a", "t", "a")
@@ -30,7 +30,7 @@ class StreamLatenessSpec extends SparkSpec {
     assert(got.contains((1L, 4L, 2L, 10L)))
 
     val before = spark.read.parquet(s"$dir/sink").count()
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == before)
   }
 
@@ -38,12 +38,12 @@ class StreamLatenessSpec extends SparkSpec {
     val dir = tempDir("slatev").toString
     val src = s"$dir/landing"
     val w1 = Seq((1L, 10L, 100L)).toDF("k", "a", "t")
-    def run(): Unit = StreamLateness.runAvailableNow(spark, src,
+    def run(): Long = StreamLateness.runAvailableNow(spark, src,
       w1.schema, "k", "a", "t", s"$dir/sink", s"$dir/ckpt")
-    w1.write.mode("append").parquet(src)
-    run()
-    Seq((1L, 5L, 50L)).toDF("k", "a", "t") // arrival 5 < folded 10
-      .write.mode("append").parquet(src)
+    StreamWaves.stage(src, Seq(w1))
+    assert(run() == 1L)
+    // arrival 5 < folded 10
+    StreamWaves.stage(src, Seq(Seq((1L, 5L, 50L)).toDF("k", "a", "t")))
     val e = intercept[Exception] { run() }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>

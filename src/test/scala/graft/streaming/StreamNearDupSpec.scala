@@ -20,12 +20,12 @@ class StreamNearDupSpec extends SparkSpec {
     val dir = tempDir("snd").toString
     val src = s"$dir/landing"
     val schema = Seq((1L, "x")).toDF("id", "text").schema
-    def run(): Unit = StreamNearDup.runAvailableNow(
+    def run(): Long = StreamNearDup.runAvailableNow(
       spark, src, schema, "id", "text", s"$dir/state", s"$dir/ckpt")
 
     val wave1 = (1L to 5L).map(i => (i, doc(i.toInt))).toDF("id", "text")
-    wave1.write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(wave1))
+    assert(run() == 1L)
     // every wave-1 doc accepted (empty index), state dirs populated
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == (1L to 5L).toSet)
@@ -36,21 +36,21 @@ class StreamNearDupSpec extends SparkSpec {
     // stored bands and verify at jaccard 1.0); id 13 is a fresh doc
     val wave2 = Seq((11L, doc(1)), (12L, doc(2)), (13L, doc(99)))
       .toDF("id", "text")
-    wave2.write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(wave2))
+    assert(run() == 1L)
     val accepted = spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet
     assert(accepted == (1L to 5L).toSet + 13L,
       s"clones must be dropped via the stored index, got $accepted")
 
     // the fresh doc's state joined the index (wave-3 clone of it drops)
-    Seq((21L, doc(99))).toDF("id", "text").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq((21L, doc(99))).toDF("id", "text")))
+    assert(run() == 1L)
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == (1L to 5L).toSet + 13L)
 
     // replay with no new files: accepted set unchanged
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/state/accepted")
       .select("id").as[Long].collect().toSet == (1L to 5L).toSet + 13L)
   }
@@ -58,11 +58,10 @@ class StreamNearDupSpec extends SparkSpec {
   test("no cache residue outlives a run") {
     val dir = tempDir("snd2").toString
     val schema = Seq((1L, "x")).toDF("id", "text").schema
-    Seq((1L, doc(3))).toDF("id", "text")
-      .write.mode("append").parquet(s"$dir/landing")
-    StreamNearDup.runAvailableNow(
+    StreamWaves.stage(s"$dir/landing", Seq(Seq((1L, doc(3))).toDF("id", "text")))
+    assert(StreamNearDup.runAvailableNow(
       spark, s"$dir/landing", schema, "id", "text",
-      s"$dir/state", s"$dir/ckpt")
+      s"$dir/state", s"$dir/ckpt") == 1L)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

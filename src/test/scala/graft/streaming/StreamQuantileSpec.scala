@@ -35,16 +35,16 @@ class StreamQuantileSpec extends SparkSpec {
     val w2 = Seq(("k", 10L), ("k", 50L), ("k", 60L), ("k", 20L),
       ("k", 40L))
     val schema = w1.toDF("g", "v").schema
-    def run(): Unit = StreamQuantile.runAvailableNow(spark, src, schema,
+    def run(): Long = StreamQuantile.runAvailableNow(spark, src, schema,
       "g", "v", 3, s"$dir/sink", s"$dir/ckpt")
-    w1.toDF("g", "v").write.mode("append").parquet(src)
-    run()
-    w2.toDF("g", "v").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(w1.toDF("g", "v")))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(w2.toDF("g", "v")))
+    assert(run() == 1L)
     assert(entries(spark, s"$dir/sink") == oneShot(w1 ++ w2, 3))
 
     val before = spark.read.parquet(s"$dir/sink").count()
-    run() // no new files
+    assert(run() == 0L) // no new files
     assert(spark.read.parquet(s"$dir/sink").count() == before)
   }
 
@@ -53,10 +53,10 @@ class StreamQuantileSpec extends SparkSpec {
     val src = s"$dir/landing"
     val rows = (1 to 100).map(i => ("k", i.toLong))
     val schema = rows.toDF("g", "v").schema
-    def run(): Unit = StreamQuantile.runAvailableNow(spark, src, schema,
+    def run(): Long = StreamQuantile.runAvailableNow(spark, src, schema,
       "g", "v", 256, s"$dir/sink", s"$dir/ckpt")
-    rows.toDF("g", "v").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(rows.toDF("g", "v")))
+    assert(run() == 1L)
     val st = StreamQuantile.currentEntries(spark, s"$dir/sink")
     // unsaturated: the standing histogram is the full value table
     val total = st.agg(sum($"count")).as[Long].head()

@@ -25,15 +25,14 @@ class StreamReplaySpec extends SparkSpec {
     val dir = tempDir("sbr").toString
     val src = s"$dir/landing"
     val rows = (1L to 40L).map(i => (s"t${i % 3}", i)).toDF("g", "v")
-    def run(): Unit = StreamBitmap.runAvailableNow(
-      spark, src, rows.schema, "g", "v", s"$dir/sink", s"$dir/ckpt",
-      maxFilesPerTrigger = Some(1))
+    def run(): Long = StreamBitmap.runAvailableNow(
+      spark, src, rows.schema, "g", "v", s"$dir/sink", s"$dir/ckpt")
     StreamWaves.stage(src, Seq(rows.filter($"v" <= 20), rows.filter($"v" > 20)))
-    run()
+    assert(run() == 2L)
     val before = StreamBitmap.currentBitmap(spark, s"$dir/sink")
       .localCheckpoint()
     val sinkRows = spark.read.parquet(s"$dir/sink").count()
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == sinkRows,
       "StreamBitmap: replay appended sink rows")
     unchanged("StreamBitmap", before,
@@ -44,14 +43,13 @@ class StreamReplaySpec extends SparkSpec {
     val dir = tempDir("scr").toString
     val src = s"$dir/landing"
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    def run(): Unit = StreamComponents.runAvailableNow(
-      spark, src, edges.schema, "a", "b", s"$dir/sink", s"$dir/ckpt",
-      maxFilesPerTrigger = Some(1))
+    def run(): Long = StreamComponents.runAvailableNow(
+      spark, src, edges.schema, "a", "b", s"$dir/sink", s"$dir/ckpt")
     StreamWaves.stage(src, Seq(edges, Seq((3L, 10L)).toDF("a", "b")))
-    run()
+    assert(run() == 2L)
     val before = StreamComponents.currentAssignment(spark, s"$dir/sink")
       .localCheckpoint()
-    run()
+    assert(run() == 0L)
     unchanged("StreamComponents", before,
       StreamComponents.currentAssignment(spark, s"$dir/sink"))
   }
@@ -60,14 +58,13 @@ class StreamReplaySpec extends SparkSpec {
     val dir = tempDir("srr").toString
     val src = s"$dir/landing"
     val rows = (1L to 50L).map(i => (i, i % 7 + 1)).toDF("k", "w")
-    def run(): Unit = StreamReservoir.runAvailableNow(
-      spark, src, rows.schema, "k", "w", 10, s"$dir/sink", s"$dir/ckpt",
-      maxFilesPerTrigger = Some(1))
+    def run(): Long = StreamReservoir.runAvailableNow(
+      spark, src, rows.schema, "k", "w", 10, s"$dir/sink", s"$dir/ckpt")
     StreamWaves.stage(src, Seq(rows.filter($"k" <= 25), rows.filter($"k" > 25)))
-    run()
+    assert(run() == 2L)
     val before = StreamReservoir.currentReservoir(spark, s"$dir/sink")
       .localCheckpoint()
-    run()
+    assert(run() == 0L)
     unchanged("StreamReservoir", before,
       StreamReservoir.currentReservoir(spark, s"$dir/sink"))
   }
@@ -76,13 +73,12 @@ class StreamReplaySpec extends SparkSpec {
     val dir = tempDir("stv").toString
     val src = s"$dir/landing"
     val rows = (1L to 60L).map(i => (i % 2, s"e${i % 3}")).toDF("g", "c")
-    def run(): Unit = StreamTvd.runAvailableNow(
-      spark, src, rows.schema, "g", "c", s"$dir/sink", s"$dir/ckpt",
-      maxFilesPerTrigger = Some(1))
+    def run(): Long = StreamTvd.runAvailableNow(
+      spark, src, rows.schema, "g", "c", s"$dir/sink", s"$dir/ckpt")
     StreamWaves.stage(src, Seq(rows.limit(30), rows.orderBy($"c".desc).limit(30)))
-    run()
+    assert(run() == 2L)
     val before = spark.read.parquet(s"$dir/sink").localCheckpoint()
-    run()
+    assert(run() == 0L)
     unchanged("StreamTvd", before, spark.read.parquet(s"$dir/sink"))
   }
 
@@ -97,17 +93,15 @@ class StreamReplaySpec extends SparkSpec {
       val b = Seq((7L, 100L, java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
           (8L, 300L, java.sql.Timestamp.valueOf("2024-01-01 02:00:00")))
         .toDF("b_id", "b_user_id", "b_start")
-      def run(): Unit = StreamIntervalJoin.runAvailableNow(
+      def run(): Long = StreamIntervalJoin.runAvailableNow(
         spark, s"$dir/a", s"$dir/b", a.schema, b.schema,
         aLenSec = 3600L, bLenSec = 1800L, delay = "1 hour",
-        outDir = s"$dir/out", checkpointPath = s"$dir/ckpt",
-        statePartitions = 2, joinType = jt,
-        maxFilesPerTrigger = Some(1))
+        outDir = s"$dir/out", checkpointPath = s"$dir/ckpt", joinType = jt)
       StreamWaves.stage(s"$dir/a", Seq(a))
       StreamWaves.stage(s"$dir/b", Seq(b))
-      run()
+      assert(run() == 1L)
       val before = spark.read.parquet(s"$dir/out").localCheckpoint()
-      run()
+      assert(run() == 0L)
       unchanged(s"StreamIntervalJoin($jt)", before,
         spark.read.parquet(s"$dir/out"))
     }
@@ -121,14 +115,14 @@ class StreamReplaySpec extends SparkSpec {
       .toDF("doc_id", "payload")
     def run(): Long = graft.multimodal.TarShards.streamExportAvailableNow(
       spark, src, rows.schema, "doc_id", "payload", s"$dir/shards",
-      s"$dir/ckpt", shardBytes = 4096L, maxFilesPerTrigger = Some(1))
+      s"$dir/ckpt", shardBytes = 4096L)
     StreamWaves.stage(src, Seq(rows.filter($"doc_id" <= 10),
       rows.filter($"doc_id" > 10)))
     assert(run() == 2L)
     val before = graft.multimodal.TarShards
       .readTarShards(spark, s"$dir/shards/batch_id=*")
       .select($"key", md5($"payload").as("m")).localCheckpoint()
-    assert(run() <= 1L, "replay drained data batches")
+    assert(run() == 0L, "replay drained data batches")
     unchanged("TarShards", before, graft.multimodal.TarShards
       .readTarShards(spark, s"$dir/shards/batch_id=*")
       .select($"key", md5($"payload").as("m")))
@@ -143,7 +137,7 @@ class StreamReplaySpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
     def run(): Unit = StreamState.drain(StreamDedup.dedupByFingerprint(
-        StreamWaves.reader(spark, rows.schema, src, Some(1)),
+        StreamWaves.reader(spark, rows.schema, src),
         "ts", "text", watermarkDelay = "30 days"), s"$dir/ckpt",
       statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink"))
     StreamWaves.stage(src, Seq(rows.filter($"doc_id" <= 15),
@@ -169,7 +163,7 @@ class StreamReplaySpec extends SparkSpec {
         at(-1L, "2030-06-01 00:00:00", "0.00"))
       .toDF("user_id", "ts", "value")
     def run(): Unit = StreamState.drain(Sessionize.sessionsStream(
-        StreamWaves.reader(spark, rows.schema, src, Some(1))
+        StreamWaves.reader(spark, rows.schema, src)
           .withWatermark("ts", "60 seconds"),
         "user_id", "ts", "30 minutes", col("value")), s"$dir/ckpt",
       statePartitions = 2)(_.format("parquet").option("path", s"$dir/sink")

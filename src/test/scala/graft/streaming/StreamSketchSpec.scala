@@ -11,32 +11,31 @@ import graft.functions.Sketches
 class StreamSketchSpec extends SparkSpec {
   import spark.implicits._
 
-  private val d = 4
-  private val w = 64 // small grid: collisions certain, parity still exact
 
   test("cells accumulate across batches and survive replay") {
     val dir = tempDir("ssk").toString
     val src = s"$dir/landing"
     val schema = Seq("x").toDF("term").schema
-    def run(): Unit = StreamSketch.runAvailableNow(
-      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt", d, w)
+    def run(): Long = StreamSketch.runAvailableNow(
+      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt")
 
-    Seq("a", "a", "b").toDF("term").write.mode("append").parquet(src)
-    run()
-    Seq("a", "c").toDF("term").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(Seq("a", "a", "b").toDF("term")))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(Seq("a", "c").toDF("term")))
+    assert(run() == 1L)
     val got = StreamSketch.currentCells(spark, s"$dir/sink")
     val batch = Sketches.countMinCells(
-      Seq("a", "a", "a", "b", "c").toDF("term"), "term", d, w)
+      Seq("a", "a", "a", "b", "c").toDF("term"), "term")
     // register for register, both directions
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
 
     // replay with no new files: the sink must not gain rows
     val before = spark.read.parquet(s"$dir/sink").count()
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == before)
     // batch 1 touched only a's and c's cells: at most 2·d updated rows
-    assert(spark.read.parquet(s"$dir/sink/batch_id=1").count() <= 2L * d)
+    assert(spark.read.parquet(s"$dir/sink/batch_id=1").count() <=
+      2L * Sketches.CountMinDepth)
   }
 
   test("estimates served off the maintained grid are the batch estimates") {
@@ -44,20 +43,20 @@ class StreamSketchSpec extends SparkSpec {
     val src = s"$dir/landing"
     val terms = (1 to 50).flatMap(i => Seq.fill(i % 7 + 1)(s"t$i"))
     val schema = Seq("x").toDF("term").schema
-    def run(): Unit = StreamSketch.runAvailableNow(
-      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt", d, w)
+    def run(): Long = StreamSketch.runAvailableNow(
+      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt")
     val (w1, w2) = terms.splitAt(terms.size / 2)
-    w1.toDF("term").write.mode("append").parquet(src)
-    run()
-    w2.toDF("term").write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src, Seq(w1.toDF("term")))
+    assert(run() == 1L)
+    StreamWaves.stage(src, Seq(w2.toDF("term")))
+    assert(run() == 1L)
     val probe = terms.distinct.toDF("term")
     val served = Sketches.countMinEstimate(
-        StreamSketch.currentCells(spark, s"$dir/sink"), probe, "term", d, w)
+        StreamSketch.currentCells(spark, s"$dir/sink"), probe, "term")
       .as[(String, Long)].collect().toMap
     val batch = Sketches.countMinEstimate(
-        Sketches.countMinCells(terms.toDF("term"), "term", d, w),
-        probe, "term", d, w)
+        Sketches.countMinCells(terms.toDF("term"), "term"),
+        probe, "term")
       .as[(String, Long)].collect().toMap
     assert(served == batch)
     // and the sketch never undercounts the truth

@@ -39,7 +39,7 @@ class StreamStateSpec extends SparkSpec {
     StreamWaves.stage(src, Seq(rows.filter($"id" <= 3), rows.limit(0),
       rows.filter($"id" > 3)))
     val n = StreamState.drain(
-        StreamWaves.reader(spark, rows.schema, src, Some(1)), s"$dir/ckpt")(
+        StreamWaves.reader(spark, rows.schema, src), s"$dir/ckpt")(
       _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         StreamState.writeBatch(batch, s"$dir/sink", batchId) })
     assert(n == 3L)
@@ -47,7 +47,7 @@ class StreamStateSpec extends SparkSpec {
       .sorted.toSeq == Seq("batch_id=0", "batch_id=1", "batch_id=2"))
     // a restart with no new input executes nothing
     assert(StreamState.drain(
-        StreamWaves.reader(spark, rows.schema, src, Some(1)), s"$dir/ckpt")(
+        StreamWaves.reader(spark, rows.schema, src), s"$dir/ckpt")(
       _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         StreamState.writeBatch(batch, s"$dir/sink", batchId) }) == 0L)
   }
@@ -63,7 +63,7 @@ class StreamStateSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2030-01-01 00:00:00")), rows.filter(
       $"ts" === java.sql.Timestamp.valueOf("2030-06-01 00:00:00"))))
     val n = StreamState.drain(Sessionize.sessionsStream(
-        StreamWaves.reader(spark, rows.schema, src, Some(1))
+        StreamWaves.reader(spark, rows.schema, src)
           .withWatermark("ts", "60 seconds"),
         "user_id", "ts", "30 minutes", col("value")), s"$dir/ckpt")(
       _.format("parquet").option("path", s"$dir/sink").outputMode("append"))

@@ -14,34 +14,33 @@ class StreamStatsSpec extends SparkSpec {
     val dir = tempDir("sst").toString
     val src = s"$dir/landing"
     val schema = Seq(("a", 1L)).toDF("g", "v").schema
-    def run(): Unit = StreamStats.runAvailableNow(
-      spark, src, schema, "g", "v", s"$dir/sink", s"$dir/ckpt",
-      capacity = 64, qs = Seq(0.5))
+    def run(): Long = StreamStats.runAvailableNow(
+      spark, src, schema, "g", "v", s"$dir/sink", s"$dir/ckpt")
 
-    // wave 1: group a sees 1..10 → p50 = 5
-    (1L to 10L).map(("a", _)).toDF("g", "v")
-      .write.mode("append").parquet(src)
-    run()
+    // wave 1: group a sees 1..10 → p50 = 5, p90 = 9, p99 = 10
+    StreamWaves.stage(src, Seq((1L to 10L).map(("a", _)).toDF("g", "v")))
+    assert(run() == 1L)
     val b0 = spark.read.parquet(s"$dir/sink/batch_id=0")
       .as[(String, Long, Long, Seq[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(b0("a") == ((10L, 10L, Seq(5L))))
+    assert(b0("a") == ((10L, 10L, Seq(5L, 9L, 10L))))
 
     // wave 2: group a sees 11..30 (state must carry the first 10: mass
-    // 30, p50 = 15 — a stateless recompute of wave 2 alone would say 20)
+    // 30, p50 = 15, p90 = 27, p99 = 30 — a stateless recompute of wave 2
+    // alone would say p50 = 20)
     // and group b appears for the first time
-    ((11L to 30L).map(("a", _)) ++ Seq(("b", 7L))).toDF("g", "v")
-      .write.mode("append").parquet(src)
-    run()
+    StreamWaves.stage(src,
+      Seq(((11L to 30L).map(("a", _)) ++ Seq(("b", 7L))).toDF("g", "v")))
+    assert(run() == 1L)
     val b1 = spark.read.parquet(s"$dir/sink/batch_id=1")
       .as[(String, Long, Long, Seq[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(b1("a") == ((30L, 30L, Seq(15L))))
-    assert(b1("b") == ((1L, 1L, Seq(7L))))
+    assert(b1("a") == ((30L, 30L, Seq(15L, 27L, 30L))))
+    assert(b1("b") == ((1L, 1L, Seq(7L, 7L, 7L))))
 
     // replay with no new files: the sink must not gain batches
     val before = spark.read.parquet(s"$dir/sink").count()
-    run()
+    assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == before)
   }
 

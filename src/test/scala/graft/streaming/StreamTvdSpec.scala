@@ -24,9 +24,9 @@ class StreamTvdSpec extends SparkSpec {
     // three waves, one lifecycle
     StreamWaves.stage(src, (0 to 2).map(w =>
       cur.filter($"id" % 3 === w).drop("id")))
-    StreamTvd.runAvailableNow(spark, src, cur.drop("id").schema,
-      "cohort", "bucket", s"$dir/sink", s"$dir/ckpt",
-      maxFilesPerTrigger = Some(1))
+    // one micro-batch per staged wave
+    assert(StreamTvd.runAvailableNow(spark, src, cur.drop("id").schema,
+      "cohort", "bucket", s"$dir/sink", s"$dir/ckpt") == 3L)
     val got = StreamTvd.currentDrift(spark, s"$dir/sink", ref,
       "cohort", "bucket", 3L, 100L)
     val want = graft.functions.Drift.tvdDrift(ref, cur.drop("id"),
