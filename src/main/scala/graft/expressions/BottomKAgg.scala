@@ -55,7 +55,7 @@ case class BottomKAgg(
       case (LongType, DoubleType) => TypeCheckResult.TypeCheckSuccess
       case (i, s) => TypeCheckResult.TypeCheckFailure(
         s"bottom_k_by_score requires (bigint id, double score), got " +
-          s"(${i.simpleString(100)}, ${s.simpleString(100)})")
+          s"(${i.simpleString}, ${s.simpleString})")
     }
 
   override def createAggregationBuffer(): java.util.TreeSet[BottomKAgg.Entry] =

@@ -36,7 +36,7 @@ case class BpeSegmentsExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_segments requires string, got ${other.simpleString(40)}")
+          s"bpe_segments requires string, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

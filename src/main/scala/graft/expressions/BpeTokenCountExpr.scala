@@ -43,7 +43,7 @@ case class BpeTokenCountExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_token_count requires string, got ${other.simpleString(40)}")
+          s"bpe_token_count requires string, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

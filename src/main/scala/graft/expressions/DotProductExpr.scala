@@ -36,8 +36,8 @@ case class DotProductExpr(left: Expression, right: Expression)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"dot requires numeric arrays, got ${left.dataType.simpleString(40)}" +
-          s" / ${right.dataType.simpleString(40)}")
+        s"dot requires numeric arrays, got ${left.dataType.simpleString}" +
+          s" / ${right.dataType.simpleString}")
 
   @transient private lazy val leftElem =
     left.dataType.asInstanceOf[ArrayType].elementType

@@ -27,7 +27,7 @@ case class HashedShinglesExpr(child: Expression, k: Int)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_shingles requires string, got ${other.simpleString(40)}")
+          s"hashed_shingles requires string, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

@@ -47,7 +47,7 @@ case class HllSketchAgg(
     child.dataType match {
       case LongType => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"hll_sketch requires a bigint hash column, got ${other.simpleString(100)}")
+        s"hll_sketch requires a bigint hash column, got ${other.simpleString}")
     }
 
   override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
@@ -122,7 +122,7 @@ case class HllMergeAgg(
       case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
         s"hll_merge requires an array<int> register column, got " +
-          other.simpleString(100))
+          other.simpleString)
     }
 
   override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)

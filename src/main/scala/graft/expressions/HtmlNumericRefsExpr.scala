@@ -34,7 +34,7 @@ case class HtmlNumericRefsExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"html_numeric_refs requires string, got ${other.simpleString(40)}")
+          s"html_numeric_refs requires string, got ${other.simpleString}")
     }
 
   override def nullSafeEval(s: Any): Any =

@@ -27,8 +27,8 @@ case class JaccardSortedExpr(left: Expression, right: Expression)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"jaccard_sorted requires two array<long>, got ${l.simpleString(40)}" +
-            s" / ${r.simpleString(40)}")
+          s"jaccard_sorted requires two array<long>, got ${l.simpleString}" +
+            s" / ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any =

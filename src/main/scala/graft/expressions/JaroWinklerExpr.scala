@@ -50,7 +50,7 @@ case class JaroWinklerExpr(left: Expression, right: Expression,
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"jaro_winkler requires (string, string), got " +
-            s"${l.simpleString(40)} / ${r.simpleString(40)}")
+            s"${l.simpleString} / ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any =

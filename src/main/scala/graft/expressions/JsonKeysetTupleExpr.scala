@@ -42,7 +42,7 @@ case class JsonKeysetTupleExpr(child: Expression, fields: Seq[String],
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"json_keyset_tuple requires string, got ${other.simpleString(100)}")
+          s"json_keyset_tuple requires string, got ${other.simpleString}")
     }
 
   @transient private lazy val kernel = new JsonKeysetTuple(fields.toArray, nested)

@@ -34,7 +34,7 @@ case class JsonLeafKeysExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"json_leaf_keys requires string, got ${other.simpleString(100)}")
+          s"json_leaf_keys requires string, got ${other.simpleString}")
     }
 
   override def nullable: Boolean = true

@@ -43,8 +43,7 @@ import org.apache.spark.sql.types._
   *
   * Input: one bigint value child. Nulls are skipped. Output:
   * `array<struct<level:int, value:bigint>>` ordered (level, value) —
-  * feed to [[graft.functions.Sketches.kllQuantile]] for estimates, or
-  * to [[KllMergeAgg]] to roll per-shard sketches up without rescan. */
+  * feed to [[graft.functions.Sketches.kllQuantile]] for estimates. */
 case class KllSketchAgg(
     value: Expression,
     k: Int,
@@ -61,7 +60,7 @@ case class KllSketchAgg(
   override def checkInputDataTypes(): TypeCheckResult = value.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"kll_sketch requires a bigint value, got ${other.simpleString(100)}")
+      s"kll_sketch requires a bigint value, got ${other.simpleString}")
   }
 
   override def createAggregationBuffer(): KllSketchAgg.State =
@@ -94,72 +93,6 @@ case class KllSketchAgg(
       newChildren: IndexedSeq[Expression]): KllSketchAgg =
     copy(value = newChildren(0))
   override def prettyName: String = "kll_sketch"
-}
-
-/** Roll-up of stored [[KllSketchAgg]] summaries (the
-  * `array<struct<level,value>>` rows a per-shard stats pass persisted)
-  * into one sketch without rescanning any shard — level structure is
-  * preserved, so the merged sketch carries the same error contract. */
-case class KllMergeAgg(
-    sketch: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllSketchAgg.State] {
-
-  require(k >= 4 && k % 2 == 0, s"kll_merge: k must be even and >= 4, got $k")
-
-  override def children: Seq[Expression] = Seq(sketch)
-  override def nullable: Boolean = false
-  override def dataType: DataType = KllSketchAgg.outType
-
-  override def checkInputDataTypes(): TypeCheckResult = sketch.dataType match {
-    case t if DataType.equalsStructurally(t, KllSketchAgg.outType,
-      ignoreNullability = true) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "kll_merge requires an array<struct<level int, value bigint>> " +
-        s"sketch, got ${other.simpleString(100)}")
-  }
-
-  override def createAggregationBuffer(): KllSketchAgg.State =
-    new KllSketchAgg.State()
-
-  override def update(buffer: KllSketchAgg.State,
-                      input: InternalRow): KllSketchAgg.State = {
-    val arr = sketch.eval(input)
-    if (arr != null) {
-      val a = arr.asInstanceOf[ArrayData]
-      var i = 0
-      while (i < a.numElements()) {
-        val s = a.getStruct(i, 2)
-        KllSketchAgg.addAtLevel(buffer, s.getInt(0), s.getLong(1))
-        i += 1
-      }
-      KllSketchAgg.cascade(buffer, k)
-    }
-    buffer
-  }
-
-  override def merge(buffer: KllSketchAgg.State,
-                     other: KllSketchAgg.State): KllSketchAgg.State =
-    KllSketchAgg.mergeInto(buffer, other, k)
-
-  override def eval(buffer: KllSketchAgg.State): Any =
-    KllSketchAgg.evalState(buffer)
-
-  override def serialize(buffer: KllSketchAgg.State): Array[Byte] =
-    KllSketchAgg.ser(buffer)
-  override def deserialize(bytes: Array[Byte]): KllSketchAgg.State =
-    KllSketchAgg.deser(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): KllMergeAgg =
-    copy(sketch = newChildren(0))
-  override def prettyName: String = "kll_merge"
 }
 
 object KllSketchAgg {

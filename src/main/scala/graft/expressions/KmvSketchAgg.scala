@@ -48,7 +48,7 @@ case class KmvSketchAgg(
     child.dataType match {
       case LongType => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"kmv_sketch requires a bigint hash column, got ${other.simpleString(100)}")
+        s"kmv_sketch requires a bigint hash column, got ${other.simpleString}")
     }
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
@@ -145,7 +145,7 @@ case class KmvMergeAgg(
     child.dataType match {
       case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"kmv_merge requires array<bigint> sketches, got ${other.simpleString(100)}")
+        s"kmv_merge requires array<bigint> sketches, got ${other.simpleString}")
     }
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =

@@ -17,8 +17,7 @@ import org.apache.spark.sql.types._
   * limits (whole-stage codegen bails to interpreted eval) and slow to
   * even compile. This kernel is one reference-carried matrix and a
   * primitive loop: stays inside codegen at any (k, d), and is the hot
-  * path for PCA projection ([[graft.functions.Pca]]) and sign
-  * projection ([[graft.functions.Similarity.signProject]]).
+  * path for sign projection ([[graft.functions.Similarity.signProject]]).
   *
   * Inputs shorter than d contribute their available prefix (missing
   * tail treated as `shift`, i.e. centered-zero); library callers
@@ -42,7 +41,7 @@ case class MatVecExpr(child: Expression,
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"matvec requires a numeric array, got ${other.simpleString(40)}")
+          s"matvec requires a numeric array, got ${other.simpleString}")
     }
 
   @transient private lazy val elemCode: Int =

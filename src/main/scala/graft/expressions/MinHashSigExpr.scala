@@ -30,7 +30,7 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig requires array<long> of shingle hashes, got ${other.simpleString(100)}")
+          s"minhash_sig requires array<long> of shingle hashes, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

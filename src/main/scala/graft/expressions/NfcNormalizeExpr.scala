@@ -30,7 +30,7 @@ case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nfc_normalize requires string, got ${other.simpleString(40)}")
+          s"nfc_normalize requires string, got ${other.simpleString}")
     }
 
   override def nullSafeEval(s: Any): Any =

@@ -69,8 +69,8 @@ case class QuantileSketchAgg(
       case (LongType, LongType, LongType) => TypeCheckResult.TypeCheckSuccess
       case (h, v, w) => TypeCheckResult.TypeCheckFailure(
         s"quantile_sketch requires (bigint hash, bigint value, bigint " +
-          s"weight), got (${h.simpleString(100)}, ${v.simpleString(100)}, " +
-          s"${w.simpleString(100)})")
+          s"weight), got (${h.simpleString}, ${v.simpleString}, " +
+          s"${w.simpleString})")
     }
 
   override def createAggregationBuffer(): java.util.TreeMap[java.lang.Long, Array[Long]] =

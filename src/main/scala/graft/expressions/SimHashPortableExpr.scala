@@ -31,7 +31,7 @@ case class SimHashPortableExpr(child: Expression) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash60_portable requires array<string>, got ${other.simpleString(100)}")
+          s"simhash60_portable requires array<string>, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

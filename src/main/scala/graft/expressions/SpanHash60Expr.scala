@@ -43,7 +43,7 @@ case class SpanHash60Expr(child: Expression, n: Int) extends UnaryExpression {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"span_hash60 requires array<string>, got ${other.simpleString(40)}")
+          s"span_hash60 requires array<string>, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

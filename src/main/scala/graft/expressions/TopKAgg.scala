@@ -58,7 +58,7 @@ case class TopKAgg(
       case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
       case (i, w) => TypeCheckResult.TypeCheckFailure(
         s"top_k requires (string item, bigint weight), got " +
-          s"(${i.simpleString(100)}, ${w.simpleString(100)})")
+          s"(${i.simpleString}, ${w.simpleString})")
     }
 
   override def createAggregationBuffer(): java.util.TreeSet[TopKAgg.Entry] =

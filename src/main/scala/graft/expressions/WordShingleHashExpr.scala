@@ -35,7 +35,7 @@ case class WordShingleHashExpr(child: Expression, n: Int)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingle_hash requires array<string>, got ${other.simpleString(40)}")
+          s"word_shingle_hash requires array<string>, got ${other.simpleString}")
     }
 
   override def nullSafeEval(input: Any): Any =

@@ -35,14 +35,6 @@ object Bitmap {
       .agg(bit_or(col("b")).as("bits"))
       .select(col("g").as(groupCol), col("bucket"), col("bits"))
 
-  /** OR-merge two bitmap frames (idempotent — overlap and re-delivery
-    * are free), the incremental-maintenance fold. */
-  def merge(a: DataFrame, b: DataFrame, groupCol: String): DataFrame =
-    a.select(col(groupCol), col("bucket"), col("bits"))
-      .unionByName(b.select(col(groupCol), col("bucket"), col("bits")))
-      .groupBy(col(groupCol), col("bucket"))
-      .agg(bit_or(col("bits")).as("bits"))
-
   /** Exact distinct counts off a bitmap frame: `(groupCol,
     * n_distinct)`. */
   def distinctCounts(bm: DataFrame, groupCol: String): DataFrame =

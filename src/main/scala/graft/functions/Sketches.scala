@@ -31,16 +31,10 @@ object Sketches {
   /** Portable 60-bit value hash (md5 top 15 hex digits), non-negative.
     * DuckDB: `('0x' || substring(md5(t), 1, 15))::BIGINT`. Computed by the
     * fused [[graft.expressions.Hash60Expr]] kernel — bit-exact with
-    * [[hash60Sql]] (pinned by Hash60ExprSpec) without the per-value hex
-    * render + base-16 re-parse. */
+    * `conv(substring(md5(t), 1, 15), 16, 10)` (pinned by Hash60ExprSpec)
+    * without the per-value hex render + base-16 re-parse. */
   def hash60(t: Column): Column =
     graft.expressions.Hash60Expr.hash60(t.cast("binary"))
-
-  /** The built-ins-only reference chain of [[hash60]] — the exact
-    * expression the DuckDB oracles restate; kept as the fused kernel's
-    * equality pin. */
-  def hash60Sql(t: Column): Column =
-    conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long")
 
   /** Aggregate: the sorted array of the `k` smallest distinct values of a
     * bigint hash column. Partial state is ≤ k longs — map-side combined.

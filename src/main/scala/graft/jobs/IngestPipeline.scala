@@ -134,13 +134,12 @@ object IngestPipeline {
   }
 
   /** Nested-record variant of [[ingest]] (SURVEY.md §1.1): drift identity
-    * is the set of dotted LEAF paths (native JsonLeafKeysExpr), the parse
+    * is the set of dotted LEAF paths (the fused `JsonKeysetTupleExpr` nested kernel), the parse
     * is ONE `from_json` against the union-of-keysets nested all-string
     * schema, and silver carries the flattened `_`-joined leaf columns the
     * reference's sinks expect (`utilities/utilities.py:109-115`) — so a
     * truly-nested lake and the reference's pre-flattened dotted world land
-    * in the same warehouse shape. Callers who want the structs themselves
-    * can `Nested.unflatten` the silver frame losslessly. */
+    * in the same warehouse shape. */
   def ingestNested(spark: SparkSession, raw: DataFrame,
                    recordCol: String): IngestResult = {
     val updated = SchemaRegistry.seed.observeSorted(

@@ -66,8 +66,13 @@ object PipelineRunner {
     def runOne(name: String, tc: TableConfig): JobReport = {
       val t0 = System.nanoTime()
       try {
-        val raw = spark.read.text(s"$lakeRoot/${tc.businessClassName}.ndjson")
-          .withColumnRenamed("value", "rec")
+        // a missing extract fails the class before any read: a read of a
+        // missing path fails in analysis, and Spark's Observation listener
+        // re-raises that failure as an ERROR line of its own
+        val lakeFile = s"$lakeRoot/${tc.businessClassName}.ndjson"
+        if (!pathExists(spark, lakeFile))
+          throw new java.io.FileNotFoundException(s"no extract at $lakeFile")
+        val raw = spark.read.text(lakeFile).withColumnRenamed("value", "rec")
         val registryPath = registryRoot.map(r =>
           s"$r/${tc.businessClassName}_schemas.json")
         val prior = registryPath.map(graft.schema.SchemaRegistry.loadOrSeed(spark, _))

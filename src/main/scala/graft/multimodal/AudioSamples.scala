@@ -22,8 +22,7 @@ import org.apache.spark.sql.types._
   * pair uniformly — both invariances are BY CONSTRUCTION, not tuned.
   *
   * Undecodable payloads (truncated, not RIFF, compressed codecs)
-  * return None — the keep path; [[AudioHeaders]] still classifies
-  * them. Scale shape: decode + hash run per partition
+  * return None — the keep path. Scale shape: decode + hash run per partition
   * ([[Multimodal.decodePartitions]] contract); pairing reuses the
   * SimHash chunk-pigeonhole join. */
 object AudioSamples {

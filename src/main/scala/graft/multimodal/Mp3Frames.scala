@@ -6,8 +6,7 @@ import org.apache.spark.sql.types._
 
 /** MP3 FRAME-WALK identity — the audio format a crawl yields most that
   * [[AudioSamples]] cannot sample-decode (full MPEG audio decode
-  * dependency-free is a poor effort/return trade — [[AudioHeaders]]
-  * reads only the first frame header). Identity instead rides the
+  * dependency-free is a poor effort/return trade). Identity instead rides the
   * complete frame walk: skip the ID3v2 tag (synchsafe size, optional
   * footer), walk every MPEG frame by its header-derived length, and
   * hash the FRAME BYTES — headers and payloads, tags excluded. The

@@ -90,13 +90,4 @@ object BloomPrune {
     val pruned = prune(probe, probeKey, build, buildKey, expectedItems)
     pruned.join(build, pruned(probeKey) === build(buildKey))
   }
-
-  /** Bloom-pruned left-semi join (EXISTS): the probe rows with at least one
-    * build-side match — same exactness argument as [[join]]. */
-  def semiJoin(probe: DataFrame, probeKey: String,
-               build: DataFrame, buildKey: String,
-               expectedItems: Long): DataFrame = {
-    val pruned = prune(probe, probeKey, build, buildKey, expectedItems)
-    pruned.join(build, pruned(probeKey) === build(buildKey), "left_semi")
-  }
 }

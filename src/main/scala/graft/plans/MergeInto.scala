@@ -125,7 +125,7 @@ class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions` entry point (composes with GraftExtensions). */
+/** `spark.sql.extensions` entry point for the `MERGE INTO` rule. */
 class GraftMergeExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
     e.injectResolutionRule(new GraftMergeRule(_))

@@ -775,15 +775,10 @@ object TrainingData {
   }
 
   /** PCA sufficient statistics under the gate: the per-dimension-pair
-    * sums [[graft.functions.Pca.moments]]'s one-pass treeAggregate
-    * computes, restated SQL-expressibly — each addend quantized to an
-    * exact integer (`floor(x·10⁶)` of an IEEE product both engines
-    * evaluate identically) so BIGINT sums are order-independent and
-    * hash-stable. PcaSpec ties the engine's double-precision moment
-    * pass to this same computation; the eigensolve downstream is
-    * driver-side d×d math. The explode² here is the GATE's shape only
-    * — the engine path carries a fixed ~17 KB accumulator, never
-    * d² rows. */
+    * moment sums a PCA fit starts from, over the first 16 dimensions,
+    * each addend quantized to an exact integer (`floor(x·10⁶)` of an
+    * IEEE product both engines evaluate identically) so BIGINT sums are
+    * order-independent and hash-stable. */
   def pcaMomentsQ(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("embedding"))
@@ -2190,7 +2185,7 @@ object TrainingData {
 
   /** STREAMING image dedup under the gate (q286): the multimodal
     * sibling of q106 — binary image payloads drain through
-    * [[graft.streaming.StreamImageDedup]] (real pixel decode → dHash →
+    * [[graft.streaming.StreamMediaDedup]] (real pixel decode → dHash →
     * bipartite chunk-pigeonhole probe of the PERSISTED hash index).
     * Wave 1 lands 24 originals (index empty — all accepted). Wave 2
     * lands a resized brightness-shifted BMP re-encode of every EVEN
@@ -2219,9 +2214,9 @@ object TrainingData {
       // greedy cross-wave drop rule); replay safety is
       // StreamImageDedupSpec's pin
       graft.streaming.StreamWaves.stage(src, Seq(originals, wave2))
-      val n = graft.streaming.StreamImageDedup.runAvailableNow(
+      val n = graft.streaming.StreamMediaDedup.runAvailableNow(
         s, src, originals.schema, "media_id", "payload",
-        s"$base/state", s"$base/ckpt")
+        s"$base/state", s"$base/ckpt", P.dhashFrame, "dhash")
       require(n == 2L, s"streamImageDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))
@@ -2398,8 +2393,8 @@ object TrainingData {
     * original's bytes ever being re-read), six fresh WAV recordings
     * (accepted), and one truncated FLAC (accepted via the null-hash
     * keep path, never indexed). One lifecycle, one micro-batch per
-    * staged wave ([[graft.streaming.StreamAudioDedup]]); replay safety
-    * is the batch_id-keyed overwrite discipline its Scaladoc pins. The
+    * staged wave ([[graft.streaming.StreamMediaDedup]] over the audio
+    * hash frame); replay safety is StreamImageDedupSpec's pin. The
     * oracle restates every fixture hash as a literal (decoded by the
     * same codecs on the driver) and the greedy cross-wave drop rule. */
   def streamAudioDedupQ(s: SparkSession, dir: String): DataFrame =
@@ -2418,9 +2413,9 @@ object TrainingData {
         .unionByName(F.fixtureFrame(ids.filter(col("doc_id") === 0),
           "doc_id", 65 * 2, 8000, idOffset = 999999L, truncateTo = 40))
       graft.streaming.StreamWaves.stage(src, Seq(wave1, wave2))
-      val n = graft.streaming.StreamAudioDedup.runAvailableNow(
+      val n = graft.streaming.StreamMediaDedup.runAvailableNow(
         s, src, wave1.schema, "media_id", "payload",
-        s"$base/state", s"$base/ckpt")
+        s"$base/state", s"$base/ckpt", A.audioHashFrameAny, "ahash")
       require(n == 2L, s"streamAudioDedupQ: expected 2 batches, ran $n")
       s.read.parquet(s"$base/state/accepted")
         .select(col("media_id"), col("batch_id").cast("long").as("wave"))

@@ -111,11 +111,4 @@ object FunnelStream {
       Long.MinValue, StructType(userField +:
         stepCols(steps).map(c => StructField(c, TimestampType)))),
       Seq(userCol))
-
-  /** Fold the per-batch delta directories into one bounded
-    * `batch_id=-1` base, resolving while absorbing: a user touched by
-    * several folded batches keeps only the latest row, and later deltas
-    * still override the base at read time. */
-  def compact(spark: SparkSession, statePath: String, userCol: String): Unit =
-    StreamState.compact(spark, s"$statePath/delta", Seq(userCol))
 }

@@ -317,7 +317,7 @@ object Scd2Stream {
     } else if (fs.exists(tmp) && fs.exists(aside)) {
       // crash between rename-aside and rename-into-place: the tmp was
       // fully written before the old base moved aside — finish the swap
-      renameOrDie(fs, tmp, base)
+      StreamState.renameOrThrow(fs, tmp, base)
       fs.delete(aside, true)
     } else if (fs.exists(tmp)) {
       // first-ever compaction crashed mid-write: deltas + manifests are
@@ -325,7 +325,7 @@ object Scd2Stream {
       fs.delete(tmp, true)
     } else if (fs.exists(aside)) {
       // defensive (unreachable by the protocol order): restore
-      renameOrDie(fs, aside, base)
+      StreamState.renameOrThrow(fs, aside, base)
     }
     val ids = manifestIds(spark, maniRoot)
     if (ids.size < 2) return // nothing superseded below the newest batch
@@ -350,11 +350,11 @@ object Scd2Stream {
         .parquet(tmp.toString)
       if (fs.exists(base)) {
         if (fs.exists(aside)) fs.delete(aside, true)
-        renameOrDie(fs, base, aside)
+        StreamState.renameOrThrow(fs, base, aside)
       }
       // a failed rename here leaves aside intact — the recovery branch
       // above restores it on the next run; NOTHING below may run first
-      renameOrDie(fs, tmp, base)
+      StreamState.renameOrThrow(fs, tmp, base)
       if (fs.exists(aside)) fs.delete(aside, true)
     }
     // republish: the pre-newest state lives wholly in the base; the
@@ -399,19 +399,9 @@ object Scd2Stream {
 
   /** Manifest format: header `#k=<buckets>,t=<observedRows>`, then one
     * `bucket,batchId` line per bucket. Written to a temp name then
-    * renamed — readers never observe a partial manifest. */
-  /** Hadoop rename signals failure by RETURN VALUE; in the compaction
-    * swap a silently failed rename followed by the protocol's deletes
-    * would destroy the only copy of the standing history. Abort with
-    * state intact instead — the recovery branch completes the swap on
-    * the next run. */
-  private def renameOrDie(fs: org.apache.hadoop.fs.FileSystem,
-                          from: Path, to: Path): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(
-        s"Scd2Stream.compact: rename $from -> $to failed; " +
-          "state left untouched for recovery")
-
+    * renamed — readers never observe a partial manifest, and a failed
+    * rename fails the batch instead of leaving the previous manifest
+    * published over this batch's delta. */
   private def writeManifest(spark: SparkSession, maniRoot: String,
                             batchId: Long, m: Manifest): Unit = {
     val fs = new Path(maniRoot).getFileSystem(
@@ -425,7 +415,7 @@ object Scd2Stream {
     finally out.close()
     val dst = new Path(s"$maniRoot/manifest_$batchId")
     if (fs.exists(dst)) fs.delete(dst, false) // replayed batch: own retry
-    fs.rename(tmp, dst)
+    StreamState.renameOrThrow(fs, tmp, dst)
   }
 
   private def readManifest(spark: SparkSession, maniRoot: String,

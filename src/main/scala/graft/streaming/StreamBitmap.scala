@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming EXACT distinct-count maintenance —
@@ -10,8 +9,9 @@ import org.apache.spark.sql.types.StructType
   * per-group distinct-user count stays exact while ingestion runs,
   * because the OR-monoid is idempotent (a replayed or duplicated event
   * sets a bit that is already set). The exact sibling of the HLL-based
-  * monitors for machine-bounded id domains; state is one long per
-  * touched (group, bucket) — domain/63 words per group at worst, and
+  * monitors for machine-bounded id domains; state is one `bit_or` word
+  * per touched (group, bucket), Spark's streaming `groupBy` in update
+  * mode — domain/63 words per group at worst, and
   * only TOUCHED buckets ever materialize.
   *
   * Emission is one row per UPDATED (group, bucket) per batch,
@@ -28,8 +28,7 @@ object StreamBitmap {
                       schema: StructType, groupCol: String,
                       valueCol: String, sinkPath: String,
                       checkpointPath: String): Long = {
-    import spark.implicits._
-    val cells = StreamWaves.reader(spark, schema, sourcePath)
+    val updates = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("long").as("v"))
       // mirror the batch Bitmap.bitmaps contract: a negative id would
@@ -41,18 +40,8 @@ object StreamBitmap {
             "domain first"))).as("v"))
       .select(col("g"), expr("v div 63").as("bucket"),
         expr("shiftleft(cast(1 as bigint), cast(v % 63 as int))").as("b"))
-      .as[(String, Long, Long)]
-    val updates = cells.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[Long, (String, Long, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Long), rows: Iterator[(String, Long, Long)],
-         state: GroupState[Long]) =>
-          var bits = state.getOption.getOrElse(0L)
-          rows.foreach { case (_, _, b) => bits |= b }
-          state.update(bits)
-          Iterator.single((key._1, key._2, bits))
-      }
-      .toDF("g", "bucket", "bits")
+      .groupBy(col("g"), col("bucket"))
+      .agg(bit_or(col("b")).as("bits"))
     StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         StreamState.writeBatch(batch, sinkPath, batchId) })

@@ -8,7 +8,7 @@ import graft.functions.Contamination
 
 /** Streaming benchmark-contamination gate — the admission control a
   * crawl pipeline runs BEFORE a document ever reaches the training
-  * corpus (the [[StreamImageDedup]] shape on text shingles): each
+  * corpus (the [[StreamMediaDedup]] shape on text shingles): each
   * micro-batch of documents probes the STANDING benchmark shingle set
   * ([[Contamination.benchShingleSet]], persisted once under
   * `statePath/bench_shingles` — eval suites are small, so the probe is
@@ -62,11 +62,4 @@ object StreamContamination {
           s"$statePath/quarantined", batchId)
         StreamState.writeBatch(report, s"$statePath/reports", batchId)
     })
-
-  /** Fold old per-batch dirs into a bounded base — the
-    * [[StreamImageDedup.compact]] discipline across all three
-    * tables. */
-  def compact(spark: SparkSession, statePath: String): Unit =
-    Seq("admitted", "quarantined", "reports").foreach(d =>
-      StreamState.compact(spark, s"$statePath/$d"))
 }

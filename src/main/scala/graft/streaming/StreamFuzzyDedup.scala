@@ -115,15 +115,4 @@ object StreamFuzzyDedup {
         ()
     })
   }
-
-  /** Fold the standing index's per-batch directories into one bounded
-    * `batch_id=-1` base per state table — the [[StreamState.compact]]
-    * discipline, applied to all three tables together so they keep the
-    * same committed batch set. Run between drains. The newest batch stays
-    * un-absorbed: a replayed batch excludes its own directories when
-    * probing, and folding them into the base would make the replay see
-    * its own prior output as standing corpus and drop its own rows. */
-  def compact(spark: SparkSession, statePath: String): Unit =
-    Seq("accepted", "names", "variants").foreach(d =>
-      StreamState.compact(spark, s"$statePath/$d"))
 }

@@ -149,17 +149,4 @@ object StreamNearDup {
         ()
     })
   }
-
-  /** Fold the standing index's per-batch directories into one bounded
-    * `batch_id=-1` base per state table — [[StreamState.compact]],
-    * applied to all three tables together so they keep the
-    * same committed batch set. Run between drains. The newest batch stays
-    * un-absorbed in each table: a replayed batch excludes its own
-    * directories when probing, and folding them into the base would make
-    * the replay see its own prior output as standing corpus and drop its
-    * own documents. `readExcluding`'s partition-discovery read picks the
-    * base up as `batch_id=-1`, which no real batch id equals. */
-  def compact(spark: SparkSession, statePath: String): Unit =
-    Seq("accepted", "bands", "shingles").foreach(d =>
-      StreamState.compact(spark, s"$statePath/$d"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Sketches
@@ -14,10 +13,10 @@ import graft.functions.Sketches
   * look like right now" is a broadcast-join against at most d·w
   * standing rows instead of a rescan of everything ever ingested.
   *
-  * State is ONE long per (depth, bucket) cell (`flatMapGroupsWithState`)
-  * — bounded by the SKETCH size (≤ d·w entries, ~4096 at the defaults),
-  * not by the stream's cardinality; that bound is the entire point of
-  * sketched serving. A cell count is a pure set function of every item
+  * State is ONE count per (depth, bucket) cell (Spark's streaming
+  * `groupBy` count in update mode) — bounded by the SKETCH size (≤ d·w
+  * entries, ~4096 at the defaults), not by the stream's cardinality;
+  * that bound is the entire point of sketched serving. A cell count is a pure set function of every item
   * ingested, so the standing grid is IDENTICAL, register for register,
   * to a one-shot [[Sketches.countMinCells]] over the same rows — the
   * invariant the q225 gate states (and point estimates served off the
@@ -39,25 +38,15 @@ object StreamSketch {
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, itemCol: String,
                       sinkPath: String, checkpointPath: String): Long = {
-    import spark.implicits._
-    val cells = StreamWaves.reader(spark, schema, sourcePath)
+    val updates = StreamWaves.reader(spark, schema, sourcePath)
       .select(col(itemCol).cast("string").as("_it"))
       .select(explode(sequence(lit(0), lit(Sketches.CountMinDepth - 1)))
         .as("depth"), col("_it"))
       .withColumn("bucket",
         pmod(Sketches.hash60(concat_ws(":", col("depth"), col("_it"))),
           lit(Sketches.CountMinWidth.toLong)))
-      .select(col("depth").cast("int"), col("bucket")).as[(Int, Long)]
-    val updates = cells.groupByKey(identity)
-      .flatMapGroupsWithState[Long, (Int, Long, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (cell: (Int, Long), rows: Iterator[(Int, Long)],
-         state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + rows.size
-          state.update(n)
-          Iterator.single((cell._1, cell._2, n))
-      }
-      .toDF("depth", "bucket", "c")
+      .groupBy(col("depth").cast("int").as("depth"), col("bucket"))
+      .agg(count(lit(1)).as("c"))
     StreamState.drain(updates, checkpointPath)(_.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         StreamState.writeBatch(batch, sinkPath, batchId) })

@@ -126,7 +126,7 @@ object StreamState {
   /** Fold every batch directory but the newest into the `batch_id=-1`
     * snapshot and delete the folded directories, so reads scan the state
     * plus one live batch, not one directory per batch elapsed. With
-    * `keys`, the snapshot keeps only each key's [[latest]] rows; without,
+    * `keys`, the snapshot keeps only each key's [[latest]] rows; with `Nil`,
     * it is the union of the folded rows.
     *
     * The newest batch is never folded: if its checkpoint did not commit,
@@ -141,8 +141,7 @@ object StreamState {
     * snapshot with none in place is restored, and folded directories
     * left behind by a crash after the landing are deleted, which the
     * snapshot's `_absorbed_through_N` marker names. */
-  def compact(spark: SparkSession, path: String,
-              keys: Seq[String] = Nil): Unit = {
+  def compact(spark: SparkSession, path: String, keys: Seq[String]): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
@@ -189,8 +188,10 @@ object StreamState {
         n.stripPrefix("batch_id=").toLong -> s.getPath }
       .sortBy(_._1)
 
-  private def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
+  /** Hadoop's rename reports failure by its return value; a state swap
+    * or publish that went on after a failed rename would lose or orphan
+    * state, so the caller stops here with the state as it was. */
+  private[streaming] def renameOrThrow(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to))
-      throw new java.io.IOException(
-        s"StreamState.compact: could not rename $from to $to")
+      throw new java.io.IOException(s"could not rename $from to $to")
 }

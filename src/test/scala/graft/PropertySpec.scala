@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.operators.{Cleanse, Nested}
+import graft.operators.Cleanse
 import graft.schema.SchemaRegistry
 
 /** The SURVEY §5 property-based layer (scalacheck driving the pure schema
@@ -62,25 +62,6 @@ class PropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       first.forall(ks => r2.versionOf(ks) == r1.versionOf(ks)) &&
         // ids only grow (monotone minting)
         r1.versions.forall { case (id, ks) => r2.versions.get(id).contains(ks) }
-    })
-  }
-
-  private val pathSeg: Gen[String] =
-    Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.take(4).mkString)
-  private val leafPath: Gen[String] =
-    Gen.choose(1, 3).flatMap(n =>
-      Gen.listOfN(n, pathSeg).map(_.mkString(".")))
-
-  test("structFromPaths ∘ leafPaths is the identity on leaf-path sets (§1.1)") {
-    // paths where no path is a prefix of another (the valid keyset shape)
-    val validPaths: Gen[Set[String]] = Gen.listOf(leafPath).map { ps =>
-      val set = ps.toSet
-      set.filterNot(p => set.exists(q =>
-        q != p && (q.startsWith(p + ".") || p.startsWith(q + "."))))
-    }
-    check(Prop.forAll(validPaths) { paths =>
-      paths.isEmpty ||
-        Nested.leafPaths(Nested.structFromPaths(paths.toSeq.sorted)).toSet == paths
     })
   }
 

@@ -6,34 +6,52 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps `src/main` free of code nothing runs. Every public `def`/`val`
-  * member of a top-level object in `src/main/scala` or
-  * `perfbench/src/main/scala` must be reached: its name appears in another
-  * main file, or again in its own file outside its definition. A member
-  * that is neither is either deleted or listed, with its reason, in the
-  * "Reachability keep list" section of STATUS.md. Comments do not count:
-  * names are matched in the code with its `//` and `/* */` comments
-  * removed. The rule is one level deep and matches names, so a call from
-  * an unreached caller or a shared name still counts as reached. */
+/** Keeps `src/main` free of code nothing runs, at two levels.
+  *
+  * Types: every top-level object, class and trait in `src/main/scala` must
+  * be reached from a root (`SparkEntry`, `PipelineRunner`,
+  * `IngestPipeline`, `Bench`, `Verify`, the `graft.tools` mains and
+  * everything under `perfbench/src/main/scala`). A type is reached when
+  * the code of a reached type names it, in any file.
+  *
+  * Members: every public `def`/`val` of a reached top-level object must be
+  * used by reached code outside its own definition. A member whose name
+  * another top-level object also defines is used only through its owner:
+  * `Obj.name`, `X.name` after a `val X = …Obj` alias, a bare `name` in a
+  * file that imports `Obj._` or `Obj.{name}`, `Obj(…)` for `apply`, or a
+  * bare `name` inside its own file.
+  *
+  * What no root reaches is deleted, or listed with its reason in the
+  * "Reachability keep list" section of STATUS.md; the spec checks that
+  * each listed reason holds. Names are matched in the code with its `//`
+  * and `/* */` comments removed; string literals are kept, so a class
+  * named in a `.format("…")` string counts. */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
-  private val mainDirs = Seq("src/main/scala", "perfbench/src/main/scala")
+  private val mainDir = root.resolve("src/main/scala")
+  private val benchDir = root.resolve("perfbench/src/main/scala")
+  private val toolsDir = mainDir.resolve("graft/tools")
+  private val rootNames =
+    Set("SparkEntry", "PipelineRunner", "IngestPipeline", "Bench", "Verify")
 
-  private val ObjectLine =
-    """^(?:(?:private\[\w+\]|final|case)\s+)*object\s+(\w+).*""".r
+  private val TypeLine =
+    """^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+(\w+).*""".r
   private val MemberLine =
     """^  (?:@\w+\s+)*((?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|override\s+|implicit\s+|lazy\s+)*)(?:def|val|var)\s+(\w+).*""".r
-  private val KeepLine = """^- `(\w+)\.(\w+)` — \S.*$""".r
+  private val KeepLine = """^- `(\w+)(?:\.(\w+))?` — (\S.*)$""".r
   private val Token = """[A-Za-z_][A-Za-z0-9_]*""".r
+  private val BackTicked = """`(\w+)`""".r
 
-  private case class Member(file: Path, obj: String, name: String,
-                            from: Int, until: Int) {
-    def id: String = s"$obj.$name"
+  private case class TopType(file: Path, name: String, isObject: Boolean,
+                             from: Int, until: Int) {
+    def where: String = s"${root.relativize(file)}:${from + 1}"
   }
 
-  private def tokens(lines: Seq[String]): Map[String, Int] =
-    lines.flatMap(l => Token.findAllIn(l)).groupMapReduce(identity)(_ => 1)(_ + _)
+  private case class Member(file: Path, obj: String, name: String,
+                            public: Boolean, from: Int, until: Int) {
+    def id: String = s"$obj.$name"
+  }
 
   /** `text` with its comments blanked out, line breaks kept so line
     * numbers stay; string and character literals are left as they are. */
@@ -69,82 +87,242 @@ class ReachabilitySpec extends AnyFunSuite {
     out.result()
   }
 
-  private lazy val files: Map[Path, Vector[String]] = mainDirs.flatMap { d =>
-    val s = Files.walk(root.resolve(d))
+  private def readTree(dir: Path): Seq[Path] = {
+    val s = Files.walk(dir)
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
     finally s.close()
-  }.map { p =>
-    p -> stripComments(new String(Files.readAllBytes(p), "UTF-8"))
-      .split("\n", -1).toVector
-  }.toMap
+  }
 
-  /** Public members of top-level objects; a member's definition runs to
-    * the next member line or the object's closing brace. */
-  private lazy val members: Seq[Member] = files.toSeq.flatMap {
+  private lazy val files: Map[Path, Vector[String]] =
+    (readTree(mainDir) ++ readTree(benchDir)).map { p =>
+      p -> stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+        .split("\n", -1).toVector
+    }.toMap
+
+  private def isTopLevelBreak(l: String): Boolean =
+    TypeLine.matches(l) || l.startsWith("import ") || l.startsWith("package ")
+
+  /** Top-level types; a type's code runs to the next top-level type,
+    * import or package line of its file. */
+  private lazy val types: Seq[TopType] = files.toSeq.flatMap {
     case (p, lines) =>
-      var obj: Option[String] = None
-      val starts = Seq.newBuilder[(String, String, Boolean, Int)]
-      val ends = Seq.newBuilder[Int]
-      lines.zipWithIndex.foreach { case (l, i) =>
-        l match {
-          case ObjectLine(o) => obj = Some(o)
-          case _ if l.startsWith("}") =>
-            if (obj.isDefined) ends += i
-            obj = None
-          case MemberLine(mods, name) if obj.isDefined =>
-            val public = !mods.contains("private") &&
-              !mods.contains("protected") && !mods.contains("override")
-            starts += ((obj.get, name, public, i))
-          case _ =>
-        }
-      }
-      val bounds = (starts.result().map(_._4) ++ ends.result()).sorted
-      starts.result().collect { case (o, n, true, i) =>
-        Member(p, o, n, i, bounds.find(_ > i).getOrElse(lines.size))
+      lines.indices.collect { case i if TypeLine.matches(lines(i)) =>
+        val TypeLine(kind, name) = lines(i)
+        val until = lines.indices.find(j => j > i && isTopLevelBreak(lines(j)))
+          .getOrElse(lines.size)
+        TopType(p, name, kind == "object", i, until)
       }
   }
 
-  private lazy val fileTokens: Map[Path, Map[String, Int]] =
-    files.map { case (p, lines) => p -> tokens(lines) }
-
-  private def reached(m: Member): Boolean = {
-    val elsewhere = fileTokens.exists { case (p, t) =>
-      p != m.file && t.contains(m.name)
+  /** Members of top-level objects; a member's definition runs to the next
+    * member line or the object's closing brace. */
+  private lazy val members: Seq[Member] = types.filter(_.isObject).flatMap { t =>
+    val lines = files(t.file)
+    val starts = (t.from until t.until).collect { i =>
+      lines(i) match {
+        case MemberLine(mods, name) =>
+          val public = !mods.contains("private") &&
+            !mods.contains("protected") && !mods.contains("override")
+          Some((name, public, i))
+        case _ => None
+      }
+    }.flatten
+    val ends = (t.from until t.until).filter(i => lines(i).startsWith("}"))
+    val bounds = (starts.map(_._3) ++ ends).sorted
+    starts.map { case (n, pub, i) =>
+      Member(t.file, t.name, n, pub, i, bounds.find(_ > i).getOrElse(t.until))
     }
-    lazy val inOwnDef =
-      tokens(files(m.file).slice(m.from, m.until)).getOrElse(m.name, 0)
-    elsewhere || fileTokens(m.file).getOrElse(m.name, 0) > inOwnDef
   }
 
-  /** `Object.member` ids of the keep list; a line without a reason does
-    * not count. */
-  private lazy val keepList: Set[String] = {
-    val status = Files.readAllLines(root.resolve("STATUS.md")).asScala
-    val section = status.dropWhile(_ != "## Reachability keep list").drop(1)
+  private def tokens(lines: Seq[String]): Set[String] =
+    lines.flatMap(l => Token.findAllIn(l)).toSet
+
+  private def isRoot(t: TopType): Boolean = rootNames(t.name) ||
+    t.file.startsWith(benchDir) || t.file.startsWith(toolsDir)
+
+  /** The types reached from the roots and from `kept`, by the names their
+    * code mentions. */
+  private def reachFrom(kept: Set[String]): Set[TopType] = {
+    val byName = types.groupBy(_.name)
+    var seen = types.filter(t => isRoot(t) || kept(t.name)).toSet
+    var frontier = seen
+    while (frontier.nonEmpty) {
+      val named = frontier.flatMap(t => tokens(files(t.file).slice(t.from, t.until)))
+      frontier = named.flatMap(byName.getOrElse(_, Nil)).diff(seen)
+      seen ++= frontier
+    }
+    seen
+  }
+
+  private case class Keep(owner: String, member: Option[String], reason: String,
+                          line: String)
+
+  private lazy val status: Seq[String] =
+    Files.readAllLines(root.resolve("STATUS.md")).asScala.toSeq
+
+  /** The keep list; a line without a reason does not count. */
+  private lazy val keepList: Seq[Keep] =
+    status.dropWhile(_ != "## Reachability keep list").drop(1)
       .takeWhile(!_.startsWith("## "))
-    section.collect { case KeepLine(o, n) => s"$o.$n" }.toSet
+      .collect { case l @ KeepLine(o, n, why) => Keep(o, Option(n), why, l) }
+
+  private lazy val keptTypes = keepList.filter(_.member.isEmpty).map(_.owner).toSet
+  private lazy val keptMembers =
+    keepList.flatMap(k => k.member.map(n => s"${k.owner}.$n")).toSet
+
+  private lazy val reachedTypes: Set[TopType] = reachFrom(keptTypes)
+
+  /** Per file, the line numbers of reached code. */
+  private lazy val reachedLines: Map[Path, Seq[Int]] =
+    reachedTypes.toSeq.groupBy(_.file).map { case (p, ts) =>
+      p -> ts.flatMap(t => t.from until t.until).sorted
+    }
+
+  private def code(p: Path, skip: Range = 0 until 0): Seq[String] =
+    reachedLines.getOrElse(p, Nil).filterNot(skip.contains).map(files(p))
+
+  /** Member names that more than one top-level object defines. */
+  private lazy val sharedNames: Set[String] =
+    members.groupBy(_.name).collect {
+      case (n, ms) if ms.map(_.obj).distinct.size > 1 => n
+    }.toSet
+
+  private def word(s: String) = java.util.regex.Pattern.quote(s)
+
+  /** Per file, its reached code as one text and as a token set. */
+  private lazy val codeText: Map[Path, String] =
+    reachedLines.map { case (p, _) => p -> code(p).mkString("\n") }
+  private lazy val codeTokens: Map[Path, Set[String]] =
+    reachedLines.map { case (p, _) => p -> tokens(code(p)) }
+
+  /** Whether reached code in `p` uses `m` through its owner object. */
+  private def usedThroughOwner(m: Member, p: Path): Boolean =
+    codeTokens(p).contains(if (m.name == "apply") m.obj else m.name) && {
+      val text = codeText(p)
+      val o = word(m.obj)
+      val n = word(m.name)
+      val Alias = s"""\\bval\\s+(\\w+)\\s*=\\s*(?:[\\w.]*\\.)?$o\\s*\\n""".r
+      val owners = m.obj +: Alias.findAllMatchIn(text).map(_.group(1)).toSeq
+      val Import =
+        s"""\\bimport\\s+(?:[\\w.]*\\.)?$o\\.(?:_|\\{[^}]*\\b$n\\b[^}]*\\}|$n\\b)""".r
+      val Apply = s"""(?<!new |class |object )\\b$o\\s*(?:\\[[^\\]]*\\])?\\s*\\(""".r
+      owners.exists(x => s"\\b${word(x)}\\s*\\.\\s*$n\\b".r.findFirstIn(text).isDefined) ||
+        files(p).exists(l => Import.findFirstIn(l).isDefined) ||
+        (m.name == "apply" && Apply.findFirstIn(text).isDefined)
+    }
+
+  private def used(m: Member): Boolean = {
+    val inOwnFile = tokens(code(m.file, m.from until m.until)).contains(m.name)
+    val others = reachedLines.keys.filter(_ != m.file)
+    inOwnFile || (
+      if (sharedNames(m.name)) others.exists(usedThroughOwner(m, _))
+      else others.exists(p => codeTokens(p).contains(m.name)))
+  }
+
+  private lazy val reachedObjects = reachedTypes.filter(_.isObject).map(_.name)
+
+  /** Unused public members of reached objects; a kept type keeps its
+    * members. */
+  private lazy val unusedMembers: Seq[Member] = members.filter(m =>
+    m.public && m.name != "main" && reachedObjects(m.obj) &&
+      !keptTypes(m.obj) && !used(m))
+
+  /** The types the roots reach without the keep list. */
+  private lazy val reachedAnyway: Set[String] = reachFrom(Set.empty).map(_.name)
+
+  /** Names of the types the roots reach without the keep list, and of
+    * their objects' members that are used or private: the main paths a
+    * reason (b) may name. */
+  private lazy val reachedNames: Set[String] = {
+    val unused = unusedMembers.toSet
+    reachedAnyway ++
+      members.filter(m => reachedAnyway(m.obj) && !unused(m)).map(_.name)
+  }
+
+  /** The spec files, by class name. */
+  private lazy val specs: Map[String, String] =
+    readTree(root.resolve("src/test/scala")).map { p =>
+      p.getFileName.toString.stripSuffix(".scala") ->
+        new String(Files.readAllBytes(p), "UTF-8")
+    }.toMap
+
+  /** §2 table rows of STATUS.md, by reference operator code. */
+  private lazy val refRows: Map[String, String] =
+    status.takeWhile(_ != "## Reachability keep list")
+      .collect { case l if l.startsWith("| ") => l.drop(2).takeWhile(_ != ' ') -> l }
+      .toMap
+
+  /** Why `k`'s reason does not hold, if it does not. */
+  private def badReason(k: Keep): Option[String] = {
+    val name = k.member.getOrElse(k.owner)
+    k.reason.split(" ", 3).toList match {
+      case "(a)" :: code :: _ =>
+        refRows.get(code) match {
+          case None => Some(s"no §2 row for $code")
+          case Some(row) if !Token.findAllIn(row).contains(name) =>
+            Some(s"the $code row does not name $name")
+          case _ => None
+        }
+      case "(b)" :: spec :: _ =>
+        val specName = spec.takeWhile(_.isLetterOrDigit)
+        val paths = BackTicked.findAllMatchIn(k.reason).map(_.group(1)).toSeq
+        specs.get(specName) match {
+          case None => Some(s"no spec $specName")
+          case Some(text) if !Token.findAllIn(stripComments(text)).contains(name) =>
+            Some(s"$specName does not use $name")
+          case _ if paths.isEmpty => Some("names no main path in backticks")
+          case _ => paths.filterNot(reachedNames).headOption
+            .map(p => s"the main path `$p` is not reached")
+        }
+      case "(c)" :: _ =>
+        if (k.owner == "SparkEntry") None else Some("not in SparkEntry")
+      case _ => Some("the reason is not (a), (b) or (c)")
+    }
   }
 
   test("the sweep sees the main sources and the keep list") {
     assert(files.size > 100, s"only ${files.size} main files under $root")
+    assert(types.size > 150, s"only ${types.size} top-level types")
     assert(members.size > 500, s"only ${members.size} members")
+    assert(rootNames.forall(n => types.exists(_.name == n)), "a root is missing")
     assert(keepList.nonEmpty, "STATUS.md has no reachability keep list")
   }
 
+  test("every top-level type in main is reached from a root or on the keep list") {
+    val unreached = types.filterNot(reachedTypes)
+      .map(t => s"${t.name} (${t.where})").distinct.sorted
+    assert(unreached.isEmpty,
+      s"${unreached.size} types no root reaches; delete them or add them " +
+        "to STATUS.md's keep list:\n" + unreached.mkString("\n"))
+  }
+
   test("every public object member in main is reached or on the keep list") {
-    val unreached = members
-      .filter(m => m.name != "main" && !reached(m))
-      .filterNot(m => keepList.contains(m.id))
+    val unused = unusedMembers.filterNot(m => keptMembers(m.id))
       .map(m => s"${m.id} (${root.relativize(m.file)}:${m.from + 1})")
       .distinct.sorted
-    assert(unreached.isEmpty,
-      s"${unreached.size} members nothing reaches; delete them or add " +
-        "them to STATUS.md's keep list:\n" + unreached.mkString("\n"))
+    assert(unused.isEmpty,
+      s"${unused.size} members nothing reaches; delete them or add " +
+        "them to STATUS.md's keep list:\n" + unused.mkString("\n"))
   }
 
   test("every keep-list entry names a member that exists") {
-    val ids = members.map(_.id).toSet
-    val stale = keepList.filterNot(ids).toSeq.sorted
-    assert(stale.isEmpty, s"keep-list entries with no such member: $stale")
+    val stale = keepList.filterNot(k => k.member match {
+      case None => types.exists(_.name == k.owner)
+      case Some(n) => members.exists(m => m.obj == k.owner && m.name == n && m.public)
+    }).map(_.line)
+    assert(stale.isEmpty, s"keep-list entries with no such type or member: $stale")
+  }
+
+  test("every keep-list entry is needed and its reason holds") {
+    val unusedIds = unusedMembers.map(_.id).toSet
+    val bad = keepList.flatMap { k =>
+      val problem = k.member match {
+        case None if reachedAnyway(k.owner) => Some("reached without the keep list")
+        case Some(n) if !unusedIds(s"${k.owner}.$n") => Some("used without the keep list")
+        case _ => badReason(k)
+      }
+      problem.map(why => s"${k.line}\n    $why")
+    }
+    assert(bad.isEmpty, s"keep-list entries that do not hold:\n${bad.mkString("\n")}")
   }
 }

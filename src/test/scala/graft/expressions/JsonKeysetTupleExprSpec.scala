@@ -140,22 +140,4 @@ class JsonKeysetTupleExprSpec extends SparkSpec {
       .forall(_.contains("*(1)")), plan)
     assert(plan.contains("Range"))
   }
-
-  test("registered for SQL: json_keyset_tuple + nested variant") {
-    GraftExtensions.register(spark)
-    val flat = spark.sql(
-      """SELECT r._keyset AS ks, r.a AS a, r.b AS b FROM (
-        |  SELECT json_keyset_tuple('{"b": 2, "a": "x"}', 'a', 'b') AS r)"""
-        .stripMargin).collect().head
-    assert(flat.getString(0) == "a,b" && flat.getString(1) == "x" &&
-      flat.getString(2) == "2")
-    val nested = spark.sql(
-      """SELECT r._keyset AS ks FROM (
-        |  SELECT json_keyset_tuple_nested('{"a": {"b": 1}, "c": 2}') AS r)"""
-        .stripMargin).collect().head
-    assert(nested.getString(0) == "a.b,c")
-    intercept[Exception] {
-      spark.sql("SELECT json_keyset_tuple('{}', 1)").collect()
-    }
-  }
 }

@@ -89,10 +89,10 @@ class KllSketchAggSpec extends SparkSpec {
     val eps = 0.02
     val df = (0 until n).map(i => (i % 7, ((i * 69621L) % n + n) % n))
       .toDF("shard", "v")
-    val shards = df.groupBy($"shard")
+    // seven hash partitions by shard: the final aggregate merges their
+    // partial sketches
+    val merged = df.repartition(7, $"shard")
       .agg(Sketches.kllSketch($"v", K).as("sk"))
-    GraftExtensions.register(spark)
-    val merged = shards.agg(expr(s"kll_merge(sk, $K)").as("sk"))
       .withColumn("n", Sketches.kllMass($"sk"))
     val got = merged.select($"n",
         Sketches.kllQuantile($"sk", $"n", 1, 2).as("p50"),
@@ -109,23 +109,6 @@ class KllSketchAggSpec extends SparkSpec {
       .as[(Long, Long)].collect().head
     assert(direct._1 == n.toLong)
     assert(math.abs(direct._2 + 1 - math.ceil(0.5 * n).toLong) <= eps * n)
-  }
-
-  test("SQL registration: kll_sketch / kll_merge run from SQL") {
-    graft.expressions.GraftExtensions.register(spark)
-    (1L to 500L).toDF("v").createOrReplaceTempView("kll_in")
-    val mass = spark.sql(
-      """SELECT aggregate(kll_sketch(v, 64), 0L,
-        |  (acc, e) -> acc + shiftleft(1L, e.level)) AS n
-        |FROM kll_in""".stripMargin).as[Long].collect().head
-    assert(mass == 500L)
-    val merged = spark.sql(
-      """WITH s AS (SELECT v % 3 AS g, kll_sketch(v, 64) AS sk
-        |           FROM kll_in GROUP BY 1)
-        |SELECT aggregate(kll_merge(sk, 64), 0L,
-        |  (acc, e) -> acc + shiftleft(1L, e.level)) FROM s""".stripMargin)
-      .as[Long].collect().head
-    assert(merged == 500L)
   }
 
   test("guards: odd or tiny k fails fast; nulls are skipped") {

@@ -62,18 +62,6 @@ class KmvSketchAggSpec extends SparkSpec {
       .isEmpty)
   }
 
-  test("SQL registration: kmv_sketch / kmv_merge usable from spark.sql") {
-    GraftExtensions.register(spark)
-    Seq(1L, 2L, 2L, 3L).toDF("h").createOrReplaceTempView("kmv_in")
-    val viaSql = spark.sql(
-      "SELECT kmv_sketch(h, 4) AS sk FROM kmv_in").head().getSeq[Long](0)
-    assert(viaSql == Seq(1L, 2L, 3L))
-    val merged = spark.sql(
-      "SELECT kmv_merge(sk, 4) FROM (SELECT kmv_sketch(h, 4) AS sk " +
-        "FROM kmv_in GROUP BY h % 2)").head().getSeq[Long](0)
-    assert(merged == Seq(1L, 2L, 3L))
-  }
-
   test("property: buffer insert and merge equal brute bottom-k (seeded sweep)") {
     import scala.jdk.CollectionConverters._
     val rnd = new scala.util.Random(42)

@@ -37,12 +37,4 @@ class NfcNormalizeExprSpec extends SparkSpec {
       .select(md5(NfcNormalizeExpr.nfcNormalize($"t"))).distinct().count()
     assert(distinctRaw == 2 && distinctNorm == 1)
   }
-
-  test("SQL registration + arity gate") {
-    GraftExtensions.register(spark)
-    assert(spark.sql("SELECT nfc_normalize('café')").as[String].head()
-      == "café")
-    val e = intercept[Exception](spark.sql("SELECT nfc_normalize()"))
-    assert(e.getMessage.contains("nfc_normalize requires exactly 1"))
-  }
 }

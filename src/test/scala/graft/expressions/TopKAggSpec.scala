@@ -62,16 +62,6 @@ class TopKAggSpec extends SparkSpec {
     assert(empty == 0)
   }
 
-  test("SQL registration: top_k usable from spark.sql") {
-    GraftExtensions.register(spark)
-    Seq(("g", "x", 3L), ("g", "y", 8L), ("g", "z", 1L)).toDF("g", "item", "w")
-      .createOrReplaceTempView("topk_in")
-    val out = spark.sql(
-      "SELECT g, top_k(item, w, 2) AS t FROM topk_in GROUP BY g")
-      .select($"t.item").as[Seq[String]].head()
-    assert(out == Seq("y", "x"))
-  }
-
   test("buffer insert keeps the k best under the (weight desc, item asc) order") {
     val buf = new java.util.TreeSet[TopKAgg.Entry]()
     val rnd = new scala.util.Random(3)

@@ -25,20 +25,6 @@ class BitmapSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("merge is an idempotent OR: overlap and re-delivery are free") {
-    val a = Bitmap.bitmaps(Seq(("g", 1L), ("g", 2L)).toDF("g", "v"), "g", "v")
-    val b = Bitmap.bitmaps(Seq(("g", 2L), ("g", 100L)).toDF("g", "v"), "g", "v")
-    val merged = Bitmap.merge(Bitmap.merge(a, b, "g"), b, "g") // b twice
-    val got = Bitmap.distinctCounts(merged, "g")
-      .as[(String, Long)].collect().toMap
-    assert(got == Map("g" -> 3L))
-    // merged state equals the one-shot bitmap of the union
-    val oneShot = Bitmap.bitmaps(
-      Seq(("g", 1L), ("g", 2L), ("g", 100L)).toDF("g", "v"), "g", "v")
-    assert(merged.as[(String, Long, Long)].collect().toSet ==
-      oneShot.as[(String, Long, Long)].collect().toSet)
-  }
-
   test("negative values fail loudly") {
     val e = intercept[Exception] {
       Bitmap.bitmaps(Seq(("g", -1L)).toDF("g", "v"), "g", "v").collect()

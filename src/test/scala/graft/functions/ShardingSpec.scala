@@ -187,8 +187,9 @@ class ShardingSpec extends SparkSpec {
     val got = Sharding.rendezvousAssign(keys, "k", ring)
       .as[(Long, String)].collect().toMap
     val ref = keys.select((col("k") +:
-        ring.map(s => Sketches.hash60Sql(
-          concat(col("k").cast("string"), lit("#" + s))).as(s))): _*)
+        ring.map(s => conv(substring(md5(
+          concat(col("k").cast("string"), lit("#" + s)).cast("binary")),
+          1, 15), 16, 10).cast("long").as(s))): _*)
       .collect().map { r =>
         r.getLong(0) -> ring.zipWithIndex
           .map { case (s, i) => (r.getLong(i + 1), s) }.max._2

@@ -102,17 +102,4 @@ class UnigramSpec extends SparkSpec {
     assert(rows == Seq(("[UNK]", 3L, false), ("ab", 15L, true),
       ("c", 5L, false)))
   }
-
-  test("unigram_apply resolves from SQL with a JSON scored-vocab literal " +
-       "and matches the Column API; malformed entries fail at analysis") {
-    graft.expressions.GraftExtensions.register(spark)
-    val got = spark.sql(
-      """SELECT unigram_apply('abc', '[["ab",3],["abc",5],["c",4]]')""")
-      .head().getString(0)
-    assert(got == "|ab|c")
-    val err = intercept[Exception] {
-      spark.sql("""SELECT unigram_apply('a', '[["a","notanint"]]')""").collect()
-    }
-    assert(err.getMessage.contains("unigram_apply"), err.getMessage)
-  }
 }

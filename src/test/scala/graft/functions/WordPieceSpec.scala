@@ -86,18 +86,4 @@ class WordPieceSpec extends SparkSpec {
       assert(got == want, s"round $round vocab=$vocab")
     }
   }
-
-  test("wordpiece_apply resolves from SQL with a JSON vocab literal and " +
-       "matches the Column API; malformed vocab fails at analysis") {
-    graft.expressions.GraftExtensions.register(spark)
-    val got = spark.sql(
-      """SELECT wordpiece_apply('playing', '["play","##ing"]')""")
-      .head().getString(0)
-    assert(got == "|play|##ing")
-    assert(got == run(Seq("playing"), Seq("play", "##ing")).head)
-    val err = intercept[Exception] {
-      spark.sql("SELECT wordpiece_apply('a', '{\"not\":\"array\"}')").collect()
-    }
-    assert(err.getMessage.contains("wordpiece_apply"), err.getMessage)
-  }
 }

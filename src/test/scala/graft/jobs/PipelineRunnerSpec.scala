@@ -6,41 +6,18 @@ import graft.SparkSpec
 
 class PipelineRunnerSpec extends SparkSpec {
 
-  val tableJson =
-    """{
-      |  "gl_transaction_detail": {
-      |    "business_class_name": "FSM_GLTransactionDetail",
-      |    "staging_table_name": "luma_dl_gl_transaction_detail",
-      |    "replication_set_name": "GeneralLedgerRepSet",
-      |    "incremental": true
-      |  },
-      |  "account": {
-      |    "business_class_name": "FSM_Account",
-      |    "staging_table_name": "luma_dl_account",
-      |    "replication_set_name": "GeneralLedgerRepSet",
-      |    "incremental": false
-      |  },
-      |  "missing_bc": {
-      |    "business_class_name": "FSM_DoesNotExist",
-      |    "staging_table_name": "luma_dl_missing",
-      |    "replication_set_name": "X",
-      |    "incremental": false
-      |  }
-      |}""".stripMargin
+  private val glTable = TableConfig("FSM_GLTransactionDetail",
+    "luma_dl_gl_transaction_detail", "GeneralLedgerRepSet", incremental = true)
 
-  val subjectAreaJson =
-    """{"general_ledger": ["gl_transaction_detail", "account", "missing_bc"]}"""
-
-  test("config parses tables, areas, naming and incremental flags") {
-    val cfg = EngineConfig.fromJson(tableJson, subjectAreaJson)
-    assert(cfg.tables.size == 3)
-    assert(cfg.tables("gl_transaction_detail").incremental)
-    assert(!cfg.tables("account").incremental)
-    assert(cfg.tables("gl_transaction_detail").warehouseTableName ==
-      "luma_gl_transaction_detail")
-    assert(cfg.tablesFor("general_ledger").map(_._1) ==
-      Seq("gl_transaction_detail", "account", "missing_bc"))
-  }
+  /** The general-ledger area: one incremental class, one full-load class
+    * and one class the lake does not hold. */
+  val config = EngineConfig(
+    Map("gl_transaction_detail" -> glTable,
+      "account" -> TableConfig("FSM_Account", "luma_dl_account",
+        "GeneralLedgerRepSet", incremental = false),
+      "missing_bc" -> TableConfig("FSM_DoesNotExist", "luma_dl_missing", "X",
+        incremental = false)),
+    Map("general_ledger" -> Seq("gl_transaction_detail", "account", "missing_bc")))
 
   test("subject-area run ingests each class, isolates failures, reports jobs") {
     val base = tempDir("graft_runner").toString
@@ -54,8 +31,7 @@ class PipelineRunnerSpec extends SparkSpec {
     Files.writeString(Paths.get(s"$lake/FSM_Account.ndjson"),
       """{"Account": "1000", "Description": "Cash"}""")
 
-    val cfg = EngineConfig.fromJson(tableJson, subjectAreaJson)
-    val reports = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val reports = PipelineRunner.runSubjectArea(spark, config, "general_ledger",
       lake, bronze, silver)
 
     assert(reports.map(_.success) == Seq(true, true, false))
@@ -73,16 +49,11 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(reports.last.error.isDefined)
   }
 
-  val incTableJson =
-    """{
-      |  "gl_transaction_detail": {
-      |    "business_class_name": "FSM_GLTransactionDetail",
-      |    "staging_table_name": "luma_dl_gl_transaction_detail",
-      |    "replication_set_name": "GeneralLedgerRepSet",
-      |    "incremental": true,
-      |    "key_column": "GLTransactionDetail"
-      |  }
-      |}""".stripMargin
+  /** The general-ledger area with its one class keyed for incremental
+    * loads. */
+  val incConfig = EngineConfig(
+    Map("gl_transaction_detail" -> glTable.copy(keyColumn = Some("GLTransactionDetail"))),
+    Map("general_ledger" -> Seq("gl_transaction_detail")))
 
   test("incremental re-run loads only new keys and keeps registry ids stable") {
     val base = tempDir("graft_runner_inc").toString
@@ -94,10 +65,8 @@ class PipelineRunnerSpec extends SparkSpec {
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""",
       """{"GLTransactionDetail": 2, "TransactionAmount": 20.5, "JournalCode": "GJ"}"""
     ).mkString("\n"))
-    val cfg = EngineConfig.fromJson(incTableJson,
-      """{"general_ledger": ["gl_transaction_detail"]}""")
 
-    val r1 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r1 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake, bronze, silver, registryRoot = Some(reg))
     assert(r1.head.success && r1.head.rows == 2)
     val saved1 = graft.schema.SchemaRegistry.loadOrSeed(spark,
@@ -116,7 +85,7 @@ class PipelineRunnerSpec extends SparkSpec {
       """{"GLTransactionDetail": 2, "TransactionAmount": 20.5, "JournalCode": "GJ"}""",
       """{"GLTransactionDetail": 3, "Amount": 1.0}"""
     ).mkString("\n"))
-    val r2 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r2 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake2, bronze, silver, registryRoot = Some(reg))
     // only the new key loads; silver holds the union without duplicates
     assert(r2.head.success && r2.head.rows == 1)
@@ -134,9 +103,7 @@ class PipelineRunnerSpec extends SparkSpec {
     Files.createDirectories(Paths.get(lake))
     Files.writeString(Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"),
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""")
-    val cfg = EngineConfig.fromJson(incTableJson,
-      """{"general_ledger": ["gl_transaction_detail"]}""")
-    val r1 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r1 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake, bronze, silver)
     assert(r1.head.success && r1.head.rows == 1)
     // the run left a narrow id-only history beside the warehouse table
@@ -154,7 +121,7 @@ class PipelineRunnerSpec extends SparkSpec {
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""",
       """{"GLTransactionDetail": 99, "TransactionAmount": 99.0}"""
     ).mkString("\n"))
-    val r2 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r2 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake2, bronze, silver)
     assert(r2.head.success && r2.head.rows == 1)
     // and the history now covers the loaded key
@@ -170,14 +137,12 @@ class PipelineRunnerSpec extends SparkSpec {
     Seq(("1", "10.5"), ("2", "20.5"))
       .toDF("GLTransactionDetail", "TransactionAmount")
       .write.parquet(s"$silver/luma_gl_transaction_detail")
-    val cfg = EngineConfig.fromJson(incTableJson,
-      """{"general_ledger": ["gl_transaction_detail"]}""")
     // run 1: lake has one old key and one new key
     Files.writeString(Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"), Seq(
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""",
       """{"GLTransactionDetail": 3, "TransactionAmount": 30.5}"""
     ).mkString("\n"))
-    val r1 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r1 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake, bronze, silver)
     assert(r1.head.success && r1.head.rows == 1)
     // the backfill was persisted: history = pre-existing keys + the new one
@@ -192,7 +157,7 @@ class PipelineRunnerSpec extends SparkSpec {
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""",
       """{"GLTransactionDetail": 2, "TransactionAmount": 20.5}"""
     ).mkString("\n"))
-    val r2 = PipelineRunner.runSubjectArea(spark, cfg, "general_ledger",
+    val r2 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake2, bronze, silver)
     assert(r2.head.success && r2.head.rows == 0)
     assert(spark.read.parquet(s"$silver/luma_gl_transaction_detail")

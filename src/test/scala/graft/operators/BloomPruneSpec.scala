@@ -20,14 +20,6 @@ class BloomPruneSpec extends SparkSpec {
     assert(plain.size == 200)
   }
 
-  test("bloom-pruned semi join equals the plain semi join") {
-    val plain = probe.join(build, $"pk" === $"bk", "left_semi")
-      .as[(Long, String)].collect().toSet
-    val pruned = BloomPrune.semiJoin(probe, "pk", build, "bk", 200)
-      .as[(Long, String)].collect().toSet
-    assert(pruned == plain)
-  }
-
   test("the prefilter actually prunes: survivors ≈ matches + fpp of the rest") {
     val survivors = BloomPrune.prune(probe, "pk", build, "bk",
       expectedItems = 200).count()
@@ -58,9 +50,6 @@ class BloomPruneSpec extends SparkSpec {
     val joined = BloomPrune.join(p, "k", b, "k", 10)
       .select("pv", "bv").as[(String, String)].collect().toSet
     assert(joined == Set(("a", "x")))
-    val semi = BloomPrune.semiJoin(p, "k", b, "k", 10)
-      .select("pv").as[String].collect().toSet
-    assert(semi == Set("a"))
   }
 
   test("a build larger than the runtime-filter conf caps still gets its requested bits") {

@@ -1,52 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.expressions.JsonLeafKeysExpr
 
-/** Nested-schema modelling: leaf paths, flatten/unflatten round trip,
-  * keyset→schema construction, nested drift keysets. */
+/** Nested records: leaf-path keysets and the nested drift ingest. */
 class NestedSpec extends SparkSpec {
   import spark.implicits._
-
-  val nested = Seq((1L, ("x", 2.0), "top")).toDF("id", "pair", "plain")
-    .select($"id",
-      struct($"pair._1".as("a"), struct($"pair._2".as("deep")).as("inner"))
-        .as("meta"), $"plain")
-
-  test("leafPaths walks structs depth-first with dotted names") {
-    assert(Nested.leafPaths(nested.schema) ==
-      Seq("id", "meta.a", "meta.inner.deep", "plain"))
-  }
-
-  test("flatten → unflatten round-trips schema and data exactly") {
-    val flat = Nested.flatten(nested)
-    assert(flat.columns.toSeq ==
-      Seq("id", "meta_a", "meta_inner_deep", "plain"))
-    val back = Nested.unflatten(flat)
-    // sibling order is sorted per level; compare field sets and values
-    assert(Nested.leafPaths(back.schema).sorted ==
-      Nested.leafPaths(nested.schema).sorted)
-    assert(Nested.flatten(back).orderBy("id").collect().toSeq ==
-      flat.orderBy("id").collect().toSeq)
-  }
-
-  test("unflatten rejects a name that is both leaf and struct prefix") {
-    val bad = Seq((1, 2)).toDF("a", "a_b")
-    intercept[IllegalArgumentException] { Nested.unflatten(bad) }
-  }
-
-  test("structFromPaths builds the nested all-string read schema") {
-    val st = Nested.structFromPaths(Seq("meta.cust", "meta.status", "k"))
-    assert(st == StructType(Seq(
-      StructField("k", StringType),
-      StructField("meta", StructType(Seq(
-        StructField("cust", StringType), StructField("status", StringType)))))))
-    intercept[IllegalArgumentException] {
-      Nested.structFromPaths(Seq("a", "a.b"))
-    }
-  }
 
   test("json_leaf_keys canonicalizes nested keysets; null on malformed") {
     val df = Seq(

@@ -97,15 +97,17 @@ class FunnelStreamSpec extends SparkSpec {
     }
     val before = standing(dir)
     // mid-chain compact: batch 0 absorbs into the base, batch 1 stays
-    FunnelStream.compact(spark, s"$dir/state", "user_id")
+    def compact(): Unit =
+      StreamState.compact(spark, s"$dir/state/delta", Seq("user_id"))
+    compact()
     assert(dirs() == Set("batch_id=-1", "batch_id=1"))
     assert(standing(dir) == before)
-    FunnelStream.compact(spark, s"$dir/state", "user_id") // no-op
+    compact() // no-op
     assert(standing(dir) == before)
     // the compacted base is a valid fold input, not just a valid read
     StreamWaves.stage(src, Seq(wave3.toDF("user_id", "ts", "etype")))
     assert(run() == 1L)
-    FunnelStream.compact(spark, s"$dir/state", "user_id")
+    compact()
     val want = Funnels.funnelTimes(
         (wave1 ++ wave2 ++ wave3).toDF("user_id", "ts", "etype"),
         "user_id", "ts", "etype", steps)

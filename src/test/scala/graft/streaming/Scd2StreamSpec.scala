@@ -366,6 +366,39 @@ class Scd2StreamSpec extends SparkSpec {
     }
   }
 
+  test("a manifest whose publishing rename fails fails its batch; the " +
+       "replay publishes it and the history is unchanged") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failrename.impl",
+      classOf[FailingRenameFileSystem].getName)
+    withBase { base =>
+      val src = s"$base/landing"
+      val state = s"failrename://$base/state"
+      val log = mkLog(all)
+      def run(): Long = Scd2Stream.runAvailableNow(spark, src, log.schema,
+        Seq("user_id"), "ts", Seq("event_type"), Seq("event_id"),
+        state, s"$base/ckpt")
+      def wave(lo: Int, hi: Int) =
+        StreamWaves.stage(src,
+          Seq(mkLog(all.filter(r => r._3 >= lo && r._3 <= hi))))
+      wave(1, 2); assert(run() == 1L)
+      wave(3, 4)
+      val e = FailingRenameFileSystem.refusing(
+          (_, dst) => dst.getName.startsWith("manifest_")) {
+        intercept[Exception](run())
+      }
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x =>
+          Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("could not rename")))
+      assert(run() == 1L) // the uncommitted batch replays
+      wave(5, 6); assert(run() == 1L)
+      val got = histOf(Scd2Stream.currentHistory(spark, state))
+      val want = histOf(graft.operators.Scd2.fromChangeLog(log,
+        Seq("user_id"), "ts", Seq("event_type"), Seq("event_id")))
+      assert(got == want)
+    }
+  }
+
   test("currentHistory without any snapshot fails loudly") {
     val e = intercept[IllegalStateException] {
       Scd2Stream.currentHistory(spark, "/tmp/graft_scd2stream_nowhere")

@@ -55,7 +55,8 @@ class StreamContaminationSpec extends SparkSpec {
     // compaction folds older batch dirs into the batch_id=-1 base
     // (the newest batch stays as the replay candidate) without
     // changing membership
-    StreamContamination.compact(spark, s"$dir/state")
+    Seq("admitted", "quarantined", "reports").foreach(t =>
+      StreamState.compact(spark, s"$dir/state/$t", Nil))
     assert(ids("quarantined") == Map(1L -> -1L))
     assert(ids("admitted") == Map(2L -> -1L, 3L -> 1L, 4L -> 1L))
   }

@@ -1,12 +1,12 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.multimodal.ImagePixels
+import graft.multimodal.{AudioSamples, FlacCodec, ImagePixels}
 
-/** Streaming perceptual image dedup: stored-index drops across waves,
-  * keep path for undecodable payloads, replay stability. */
+/** Streaming perceptual media dedup: stored-index drops across waves,
+  * keep path for undecodable payloads, replay stability, and the same
+  * runner over the audio hash frame. */
 class StreamImageDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,8 +20,9 @@ class StreamImageDedupSpec extends SparkSpec {
     val dir = tempDir("img_dedup").toString
     val src = s"$dir/landing"
     val schema = fixture(Seq(1L), 36, 32, "png").schema
-    def run(): Long = StreamImageDedup.runAvailableNow(spark, src, schema,
-      "media_id", "payload", s"$dir/state", s"$dir/ckpt")
+    def run(): Long = StreamMediaDedup.runAvailableNow(spark, src, schema,
+      "media_id", "payload", s"$dir/state", s"$dir/ckpt",
+      ImagePixels.dhashFrame, "dhash")
     // wave 1: four originals
     StreamWaves.stage(src, Seq(fixture(Seq(0L, 1L, 2L, 3L), 72, 64, "png")))
     assert(run() == 1L)
@@ -53,8 +54,9 @@ class StreamImageDedupSpec extends SparkSpec {
     val dir = tempDir("img_dedup2").toString
     val src = s"$dir/landing"
     val schema = fixture(Seq(1L), 36, 32, "png").schema
-    def run(): Long = StreamImageDedup.runAvailableNow(spark, src, schema,
-      "media_id", "payload", s"$dir/state", s"$dir/ckpt")
+    def run(): Long = StreamMediaDedup.runAvailableNow(spark, src, schema,
+      "media_id", "payload", s"$dir/state", s"$dir/ckpt",
+      ImagePixels.dhashFrame, "dhash")
     // original + its clone land TOGETHER: both accepted (cross-batch
     // semantics), like StreamNearDup
     StreamWaves.stage(src, Seq(fixture(Seq(5L), 72, 64, "png")
@@ -69,5 +71,31 @@ class StreamImageDedupSpec extends SparkSpec {
     val a2 = spark.read.parquet(s"$dir/state/accepted")
       .select($"media_id").as[Long].collect().toSet
     assert(a2 == Set(5L, 55L))
+  }
+
+  test("over the audio hash frame, a FLAC re-encode of an accepted WAV " +
+      "drops against the stored index; a fresh recording is kept") {
+    val dir = tempDir("audio_dedup").toString
+    val src = s"$dir/landing"
+    val n = 65 * 60
+    val wavs = AudioSamples.fixtureFrameDepth(Seq(1L, 2L).toDF("id"), "id",
+      n, 44100, "pcm16")
+    def run(): Long = StreamMediaDedup.runAvailableNow(spark, src,
+      wavs.schema, "media_id", "payload", s"$dir/state", s"$dir/ckpt",
+      AudioSamples.audioHashFrameAny, "ahash")
+    def accepted(): Set[Long] = spark.read
+      .parquet(s"$dir/state/accepted").select($"media_id")
+      .as[Long].collect().toSet
+    StreamWaves.stage(src, Seq(wavs))
+    assert(run() == 1L)
+    assert(accepted() == Set(1L, 2L))
+    // wave 2: recording 1 re-encoded as FLAC, one fresh WAV
+    StreamWaves.stage(src, Seq(
+      FlacCodec.fixtureFrame(Seq(1L).toDF("id"), "id", n, 44100,
+        idOffset = 100L)
+      .unionByName(AudioSamples.fixtureFrameDepth(Seq(3L).toDF("id"), "id",
+        n, 44100, "pcm16", idOffset = 200L))))
+    assert(run() == 1L)
+    assert(accepted() == Set(1L, 2L, 203L))
   }
 }

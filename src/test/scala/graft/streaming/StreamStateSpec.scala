@@ -8,20 +8,24 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** A local file system under its own scheme that, while `failLanding` is
-  * set, refuses to rename a compacted snapshot into `batch_id=-1` — the
-  * way a Hadoop rename reports failure, by returning false. */
+/** A local file system under its own scheme that refuses every rename
+  * `refuse` matches — the way a Hadoop rename reports failure, by
+  * returning false. */
 class FailingRenameFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("failrename:///")
   override def getScheme: String = "failrename"
   override def rename(src: Path, dst: Path): Boolean =
-    if (FailingRenameFileSystem.failLanding && dst.getName == "batch_id=-1" &&
-        src.getName.endsWith("_compacting")) false
-    else super.rename(src, dst)
+    !FailingRenameFileSystem.refuse(src, dst) && super.rename(src, dst)
 }
 
 object FailingRenameFileSystem {
-  @volatile var failLanding = false
+  @volatile var refuse: (Path, Path) => Boolean = (_, _) => false
+
+  /** Runs `f` with the renames `r` matches refused. */
+  def refusing[T](r: (Path, Path) => Boolean)(f: => T): T = {
+    refuse = r
+    try f finally refuse = (_, _) => false
+  }
 }
 
 /** The `batch_id` state protocol in one place: the AvailableNow drain's
@@ -148,18 +152,19 @@ class StreamStateSpec extends SparkSpec {
     def rows(): Seq[(Long, String)] = spark.read.parquet(path)
       .select($"id", $"payload").as[(Long, String)].collect().toSeq.sorted
     batch(0); batch(1)
-    StreamState.compact(spark, path)
+    StreamState.compact(spark, path, Nil)
     batch(2)
-    StreamState.compact(spark, path)
+    StreamState.compact(spark, path, Nil)
     batch(3)
     val before = rows()
     assert(before.size == 8)
-    FailingRenameFileSystem.failLanding = true
-    try intercept[java.io.IOException](StreamState.compact(spark, path))
-    finally FailingRenameFileSystem.failLanding = false
+    FailingRenameFileSystem.refusing((src, dst) =>
+        dst.getName == "batch_id=-1" && src.getName.endsWith("_compacting")) {
+      intercept[java.io.IOException](StreamState.compact(spark, path, Nil))
+    }
     assert(rows() == before)
     // the next compaction completes over the same state
-    StreamState.compact(spark, path)
+    StreamState.compact(spark, path, Nil)
     assert(rows() == before)
   }
 
@@ -172,13 +177,13 @@ class StreamStateSpec extends SparkSpec {
     def rows(): Seq[Long] = spark.read.parquet(path).select($"id")
       .as[Long].collect().toSeq.sorted
     batch(0); batch(1); batch(2)
-    StreamState.compact(spark, path)
+    StreamState.compact(spark, path, Nil)
     assert(rows() == Seq(0L, 1L, 2L))
     // the crash window: the snapshot landed, the folded dirs survived
     batch(0); batch(1)
     assert(rows() == Seq(0L, 0L, 1L, 1L, 2L))
     batch(3)
-    StreamState.compact(spark, path)
+    StreamState.compact(spark, path, Nil)
     assert(rows() == Seq(0L, 1L, 2L, 3L))
   }
 }
