@@ -1,9 +1,10 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cleanse, UnionBySchema, Validation}
+import graft.expressions.JsonKeysetTupleExpr
+import graft.operators.{Cleanse, UnionBySchema}
 import graft.schema.SchemaRegistry
 
 /** The reference's full pipeline (SURVEY.md §3.1) as one driver program:
@@ -20,19 +21,7 @@ import graft.schema.SchemaRegistry
   */
 object IngestPipeline {
 
-  final case class IngestResult(
-      registry: SchemaRegistry,
-      silver: DataFrame,
-      declared: Option[Long]) {
-
-    /** Count reconciliation (A3) — executes a count job over the silver
-      * frame, so it is opt-in rather than a hidden second execution paid by
-      * every caller of `ingest`. */
-    def reconcile(): Validation.CountCheck = {
-      val actual = silver.count()
-      Validation.reconcile(actual, declared.getOrElse(actual))
-    }
-  }
+  final case class IngestResult(registry: SchemaRegistry, silver: DataFrame)
 
   /** Parse an NDJSON record column with DEAD-LETTER routing: every input
     * row survives — well-formed records carry their typed fields with a
@@ -83,15 +72,32 @@ object IngestPipeline {
     *
     * @param raw        one JSON record per row (column `recordCol`)
     * @param registry   prior schema registry (seed for a full load)
-    * @param declared   source-declared record count for reconciliation
-    *                   (reference `dl_instance_count` sums); None skips
     */
   def ingest(spark: SparkSession, raw: DataFrame, recordCol: String,
-             registry: SchemaRegistry = SchemaRegistry.seed,
-             declared: Option[Long] = None): IngestResult = {
+             registry: SchemaRegistry = SchemaRegistry.seed): IngestResult =
+    ingestWith(raw, recordCol, registry, JsonKeysetTupleExpr.jsonKeysetTuple)
+
+  /** Nested-record variant of [[ingest]] (SURVEY.md §1.1): drift identity
+    * is the set of dotted LEAF paths (the fused `JsonKeysetTupleExpr`
+    * nested kernel), and silver carries the flattened `_`-joined leaf
+    * columns the reference's sinks expect (`utilities/utilities.py:109-115`)
+    * — so a truly-nested lake and the reference's pre-flattened dotted
+    * world land in the same warehouse shape. */
+  def ingestNested(spark: SparkSession, raw: DataFrame,
+                   recordCol: String): IngestResult =
+    ingestWith(raw, recordCol, SchemaRegistry.seed,
+      JsonKeysetTupleExpr.jsonLeafKeysetTuple)
+
+  /** The one ingest body; `kernel` is the fused keyset-and-values parse
+    * (top-level keys, or dotted leaf paths). Values are selected under
+    * their raw names, so a dotted leaf path and a dotted flat key (`A.B`
+    * ERP names) both reach silver through `Cleanse.cleanNames`. */
+  private def ingestWith(raw: DataFrame, recordCol: String,
+                         registry: SchemaRegistry,
+                         kernel: (Column, Seq[String]) => Column): IngestResult = {
     // 1. drift detection: distinct keysets → driver-minted version ids
     val updated = registry.observeSorted(
-      SchemaRegistry.discoverKeysets(raw, recordCol))
+      SchemaRegistry.discoverKeysetsWith(raw, recordCol, kernel))
 
     // 2+3 fused: ONE native Jackson pass per record yields the keyset (for
     //    the broadcast version lookup) AND every column of the
@@ -100,9 +106,7 @@ object IngestPipeline {
     //    JsonKeysetTupleExpr replaces both (subexpression elimination keeps
     //    the struct evaluated once per row across the projected fields).
     val allCols = updated.withoutSeed.allColumns.toSeq.sorted
-    val fused = raw.select(
-      graft.expressions.JsonKeysetTupleExpr
-        .jsonKeysetTuple(col(recordCol), allCols).as("_graft_rec"))
+    val fused = raw.select(kernel(col(recordCol), allCols).as("_graft_rec"))
     // ordinal struct access + a keyset alias uniquified AGAINST THE DATA:
     // records may legitimately carry keys named "_keyset" or even
     // "_graft_keyset" — none of them can shadow the internal column.
@@ -112,59 +116,22 @@ object IngestPipeline {
       .find(a => !allCols.contains(a)).get
     val parsed = SchemaRegistry.assignVersionsByKeyset(
         fused.select(
-          graft.expressions.JsonKeysetTupleExpr.keysetField(col("_graft_rec"))
-            .as(ksAlias) +:
+          JsonKeysetTupleExpr.keysetField(col("_graft_rec")).as(ksAlias) +:
           allCols.zipWithIndex.map { case (c, i) =>
-            graft.expressions.JsonKeysetTupleExpr
-              .valueField(col("_graft_rec"), i, c).as(c)
+            JsonKeysetTupleExpr.valueField(col("_graft_rec"), i, c).as(c)
           }: _*),
         ksAlias, updated)
       .drop(ksAlias)
-      // backtick-quote: raw lake columns may carry dots (`A.B` ERP names);
-      // a record field named schema_version was superseded above — selecting
-      // it again would duplicate the column
+      // the version column first, so a field that formats to its name
+      // (`schema.version`) becomes `schema_version_dupe`, not a clash;
+      // backtick-quote: raw names may carry dots; a record field named
+      // schema_version was superseded above — selecting it again would
+      // duplicate the column
       .select(col("schema_version") +:
         allCols.filterNot(_ == "schema_version")
           .map(c => col(s"`$c`")): _*)
 
     // 4. cleanse: SQL-safe names, dupe resolution, sorted columns
-    val cleansed = UnionBySchema.sortColumns(Cleanse.cleanNames(parsed))
-
-    IngestResult(updated, cleansed, declared)
-  }
-
-  /** Nested-record variant of [[ingest]] (SURVEY.md §1.1): drift identity
-    * is the set of dotted LEAF paths (the fused `JsonKeysetTupleExpr` nested kernel), the parse
-    * is ONE `from_json` against the union-of-keysets nested all-string
-    * schema, and silver carries the flattened `_`-joined leaf columns the
-    * reference's sinks expect (`utilities/utilities.py:109-115`) — so a
-    * truly-nested lake and the reference's pre-flattened dotted world land
-    * in the same warehouse shape. */
-  def ingestNested(spark: SparkSession, raw: DataFrame,
-                   recordCol: String): IngestResult = {
-    val updated = SchemaRegistry.seed.observeSorted(
-      SchemaRegistry.discoverKeysetsNested(raw, recordCol))
-    // same fused one-parse shape as the flat ingest: leaf keyset (version
-    // lookup) + every leaf value from a single streaming pass
-    val allPaths = updated.withoutSeed.allColumns.toSeq.sorted
-    val fused = raw.select(
-      graft.expressions.JsonKeysetTupleExpr
-        .jsonLeafKeysetTuple(col(recordCol), allPaths).as("_graft_rec"))
-    val flatNames = allPaths.map(_.split('.').mkString("_"))
-    val ksAlias = Iterator.iterate("_graft_keyset")(_ + "_")
-      .find(a => !flatNames.contains(a)).get
-    val flat = SchemaRegistry.assignVersionsByKeyset(
-        fused.select(
-          graft.expressions.JsonKeysetTupleExpr.keysetField(col("_graft_rec"))
-            .as(ksAlias) +:
-          allPaths.zipWithIndex.map { case (p, i) =>
-            graft.expressions.JsonKeysetTupleExpr
-              .valueField(col("_graft_rec"), i, p)
-              .as(p.split('.').mkString("_"))
-          }: _*),
-        ksAlias, updated)
-      .drop(ksAlias)
-    val cleansed = UnionBySchema.sortColumns(Cleanse.cleanNames(flat))
-    IngestResult(updated, cleansed, None)
+    IngestResult(updated, UnionBySchema.sortColumns(Cleanse.cleanNames(parsed)))
   }
 }

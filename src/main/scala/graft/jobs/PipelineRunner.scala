@@ -37,28 +37,25 @@ object PipelineRunner {
     * Load mode mirrors the reference's `--il` vs `--fl` dispatch
     * (`datalakewrapper.py:252-257`, `workflow.ps1:266-267`): a table marked
     * incremental (with a configured key column) anti-joins the incoming rows
-    * against a narrow KEY-HISTORY table and APPENDS only the new ones; a
-    * full load overwrites silver (and resets the history). Bronze always
-    * appends (versioned history). `JobReport.rows` is the number of rows
-    * loaded by THIS run.
+    * against the keys silver already holds, null-safe
+    * ([[graft.operators.Upsert.insertOnly]]), and APPENDS only the new
+    * ones; a full load overwrites silver. Bronze always appends (versioned
+    * history). `JobReport.rows` is the number of rows loaded by THIS run.
     *
-    * The key history (`{silverRoot}/_keyhistory/{table}`) is the reference's
-    * extraction-history id file (`utilities/utilities.py:208-224`): ids
-    * only, so the anti-join's build side stays small — the warehouse table
-    * itself is never scanned for the diff. A silver table predating the
-    * history is backfilled from one silver key scan. History is appended
-    * AFTER the data writes, matching the reference's at-least-once ordering
-    * (`datalakewrapper.py:180-195`): a crash between the two re-loads rows
-    * on retry rather than losing them; the checkpointed
-    * `streaming.IncrementalIngest` is the exactly-once variant.
+    * Silver is its own extraction history (the reference keeps a separate
+    * id file, `utilities/utilities.py:208-224`): the diff reads only
+    * silver's key column, which a Parquet scan prunes to, so a key-only
+    * copy would buy no narrower build side. The silver append is the one
+    * commit of an incremental load; there is no second write a crash
+    * could fall between.
     */
   def runSubjectArea(spark: SparkSession, config: EngineConfig,
                      subjectArea: String, lakeRoot: String,
                      bronzeRoot: String, silverRoot: String,
                      registryRoot: Option[String] = None): Seq[JobReport] = {
     // business classes are INDEPENDENT (per-class lake files, bronze and
-    // silver paths, key histories, registries, observation names, and
-    // per-class failure isolation), so they run CONCURRENTLY on a small
+    // silver paths, registries, observation names, and per-class
+    // failure isolation), so they run CONCURRENTLY on a small
     // driver pool: Spark schedules several jobs at once and the next
     // class's tasks back-fill executors idled by the current class's
     // stage tails (the reference loops sequentially only because its
@@ -80,23 +77,13 @@ object PipelineRunner {
         val result = IngestPipeline.ingest(spark, raw, "rec", prior)
 
         val silverPath = s"$silverRoot/${tc.warehouseTableName}"
-        val historyPath = s"$silverRoot/_keyhistory/${tc.warehouseTableName}"
         val incrementalRun = tc.incremental && tc.keyColumn.isDefined &&
           pathExists(spark, silverPath)
         val loaded =
-          if (incrementalRun) {
-            if (!pathExists(spark, historyPath)) {
-              // silver predates the key history: PERSIST the backfill —
-              // diffing against an unsaved scan would leave later runs an
-              // incomplete history and re-append every pre-history row
-              spark.read.parquet(silverPath).select(tc.keyColumn.get)
-                .distinct().write
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(historyPath)
-            }
-            graft.operators.Incremental.notExtracted(result.silver,
-              spark.read.parquet(historyPath), tc.keyColumn.get)
-          } else result.silver
+          if (incrementalRun)
+            graft.operators.Upsert.insertOnly(spark.read.parquet(silverPath),
+              result.silver, tc.keyColumn.toSeq)
+          else result.silver
         // one computation feeds bronze, silver, and the row count
         val data = loaded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -108,29 +95,10 @@ object PipelineRunner {
           val (observed, obs) = Metrics.observed(data, tc.stagingTableName)
           Sinks.writeVersioned(observed, s"$bronzeRoot/${tc.stagingTableName}")
           val rows = Metrics.rows(obs)
-          // the run's distinct keys, MATERIALIZED before the silver append:
-          // a persist alone is not enough — if cached partitions are lost
-          // after the append, recomputation re-runs the anti-join against
-          // silver that now CONTAINS this run's rows, yielding an empty key
-          // set, so the keys never enter history and the rows re-append as
-          // duplicates on every later run. localCheckpoint cuts the lineage
-          // to the pre-append result (and fails loudly, not silently, if
-          // its blocks are lost). Computed only when it will be written: a
-          // zero-row incremental run appends nothing — otherwise every
-          // no-op scheduled run would litter one empty file set.
-          val runKeys = tc.keyColumn
-            .filter(_ => !incrementalRun || rows > 0)
-            .map(k => data.select(k).distinct().localCheckpoint())
           if (incrementalRun)
             data.drop("schema_version").write
               .mode(org.apache.spark.sql.SaveMode.Append).parquet(silverPath)
           else Sinks.writeMerged(data.drop("schema_version"), silverPath)
-          // record THIS run's keys after the data lands (at-least-once);
-          // a full load resets the history to exactly its own keys
-          runKeys.foreach(_.write
-            .mode(if (incrementalRun) org.apache.spark.sql.SaveMode.Append
-                  else org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(historyPath))
           registryPath.foreach(p =>
             graft.schema.SchemaRegistry.save(spark, result.registry, p))
           JobReport(name, tc.businessClassName, success = true, rows,

@@ -1,22 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Incremental-extraction logic (SURVEY.md §2.6).
   *
   * The reference tracks extracted data-object ids in an append-only history
   * and pulls `lake_ids − history` each run (`utilities/utilities.py:208-224`,
-  * `datalakewrapper.py:180-195`). That set-difference is a left-anti join —
-  * shuffle on the id only (no payload), broadcast when the history fits.
+  * `datalakewrapper.py:180-195`). That set-difference is
+  * [[Upsert.insertOnly]]; this object keeps the watermark-id math.
   */
 object Incremental {
-
-  /** Ids still to extract: `lakeIds − history` (reference
-    * `not_extracted_ids`). */
-  def notExtracted(lakeIds: DataFrame, history: DataFrame,
-                   idCol: String): DataFrame =
-    lakeIds.join(history.select(idCol), Seq(idCol), "left_anti")
 
   /** The reference's watermark: 05:00 local at a fixed UTC−6 offset. */
   private val CutoffHour = 5

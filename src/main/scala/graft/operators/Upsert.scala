@@ -68,11 +68,17 @@ object Upsert {
   }
 
   /** Source rows whose key is absent from the target (null-safe) — the
-    * MERGE insert-only execution: the result APPENDS, nothing rewrites. */
+    * one insert-only diff: the MERGE insert-only execution, the
+    * incremental subject-area load and the extract set-difference (I1,
+    * the reference's `lake_ids − history`). The result APPENDS, nothing
+    * rewrites. Only the target's key columns are read, so a columnar
+    * target prunes its scan to them; no distinct over the target, since
+    * a left-anti join's output does not depend on duplicates on its
+    * build side. */
   def insertOnly(target: DataFrame, source: DataFrame,
                  keys: Seq[String]): DataFrame = {
     val marked = keys.map(k => s"_graft_tk_$k")
-    val tgtKeys = target.select(keys.map(col): _*).distinct().toDF(marked: _*)
+    val tgtKeys = target.select(keys.map(col): _*).toDF(marked: _*)
     val cond = keys.zip(marked)
       .map { case (k, m) => source(k) <=> tgtKeys(m) }.reduce(_ && _)
     source.join(tgtKeys, cond, "left_anti")

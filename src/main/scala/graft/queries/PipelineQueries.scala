@@ -574,10 +574,11 @@ object PipelineQueries {
     * lake under a hostile column name, extract-by-set-difference on
     * ids only (updated day-2 values for standing ids are NOT
     * re-extracted — the reference's watermark-id semantics), name
-    * cleansing, and a MERGE insert-only append. Every stage is the
-    * production operator — V2 writer/scanner, `Incremental
-    * .notExtracted`, `Cleanse.cleanNames`, `Upsert.insertOnly` — and
-    * the oracle restates the whole composition as one CASE. */
+    * cleansing, and a MERGE insert-only append (one null-safe
+    * anti-join on the id is both the set-difference and the append).
+    * Every stage is the production operator — V2 writer/scanner,
+    * `Cleanse.cleanNames`, `Upsert.insertOnly` — and the oracle
+    * restates the whole composition as one CASE. */
   def dailyPipelineQ(s: SparkSession, dir: String): DataFrame =
     withTempDir("graft_q183") { base =>
       import org.apache.spark.sql.types._
@@ -595,13 +596,8 @@ object PipelineQueries {
         StructField("n.chars", LongType)))
       val lake = s.read.format(fmt).schema(lakeSchema)
         .option("path", s"$base/lake").load()
-      val newIds = graft.operators.Incremental.notExtracted(
-        lake.select(col("doc_id")), warehouse.select(col("doc_id")),
-        "doc_id")
-      val extracted = graft.operators.Cleanse.cleanNames(
-        lake.join(newIds, Seq("doc_id")))
       val appended = graft.operators.Upsert.insertOnly(
-        warehouse, extracted, Seq("doc_id"))
+        warehouse, graft.operators.Cleanse.cleanNames(lake), Seq("doc_id"))
       warehouse.unionByName(appended)
         .orderBy(col("doc_id"))
         .localCheckpoint()
@@ -617,8 +613,8 @@ object PipelineQueries {
     *
     *  - `bc_clicks` (incremental on event_id): wave A lands the even
     *    click ids; wave B redelivers EVERY click with a drifted record
-    *    shape (new `cents` field — version 2) and the key-history
-    *    anti-join appends only the odds.
+    *    shape (new `cents` field — version 2) and the anti-join
+    *    against silver's own keys appends only the odds.
     *  - `bc_views` (full load): wave A evens, wave B the full drifted
     *    set — run 2 OVERWRITES, so silver is exactly wave B.
     *  - `bc_signups` (incremental, stable schema): id%3==0 then the

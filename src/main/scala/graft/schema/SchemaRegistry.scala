@@ -113,36 +113,26 @@ object SchemaRegistry {
   def keysetExpr(rawJson: Column): Column =
     array_join(array_sort(array_distinct(json_object_keys(rawJson))), ",")
 
-  /** Native single-pass keyset (same canonical string as [[keysetExpr]],
-    * pinned by JsonKeysetTupleExprSpec) — skips the generic-array
-    * sort/join stack, one Jackson pass per record. */
-  def keysetExprNative(rawJson: Column): Column =
-    graft.expressions.JsonKeysetTupleExpr.keysetField(
-      graft.expressions.JsonKeysetTupleExpr.jsonKeysetTuple(rawJson, Nil))
-
-  /** Distinct keysets present in a column of raw JSON records. One
-    * distinct-shuffle over short strings; safe to collect (cardinality =
-    * number of schema versions, not rows). Malformed records (null
-    * keyset) are ignored — they tag as version null downstream. */
+  /** Distinct keysets present in a column of raw JSON records, through
+    * the fused native kernel (same canonical string as [[keysetExpr]],
+    * pinned by JsonKeysetTupleExprSpec). One distinct-shuffle over short
+    * strings; safe to collect (cardinality = number of schema versions,
+    * not rows). Malformed records (null keyset) are ignored — they tag as
+    * version null downstream. */
   def discoverKeysets(df: DataFrame, rawJsonCol: String): Seq[Set[String]] =
-    df.select(keysetExprNative(col(rawJsonCol)).as("ks")).distinct()
+    discoverKeysetsWith(df, rawJsonCol,
+      graft.expressions.JsonKeysetTupleExpr.jsonKeysetTuple)
+
+  /** [[discoverKeysets]] through any fused keyset kernel: the flat one's
+    * top-level keys, or the nested one's dotted LEAF paths (the same
+    * canonical sorted comma-joined form — a flat record's leaf paths ARE
+    * its top-level keys). */
+  def discoverKeysetsWith(df: DataFrame, rawJsonCol: String,
+                          kernel: (Column, Seq[String]) => Column): Seq[Set[String]] =
+    df.select(graft.expressions.JsonKeysetTupleExpr.keysetField(
+        kernel(col(rawJsonCol), Nil)).as("ks")).distinct()
       .collect().map(_.getString(0)).filter(_ != null)
       .map(s => if (s.isEmpty) Set.empty[String] else s.split(",").toSet)
-      .toSeq
-
-  /** Distinct nested keysets in a raw JSON column: sorted comma-joined
-    * dotted LEAF paths, the same canonical form as the flat keyset (a flat
-    * record's leaf paths ARE its top-level keys). Fused streaming kernel,
-    * identical canonical string to `JsonLeafKeysExpr` (pinned by
-    * JsonKeysetTupleExprSpec). */
-  def discoverKeysetsNested(df: DataFrame, rawJsonCol: String): Seq[Set[String]] =
-    df.select(graft.expressions.JsonKeysetTupleExpr.keysetField(
-        graft.expressions.JsonKeysetTupleExpr
-          .jsonLeafKeysetTuple(col(rawJsonCol), Nil)).as("ks"))
-      .distinct()
-      .collect().map(_.getString(0))
-      .map(s => if (s == null || s.isEmpty) Set.empty[String]
-                else s.split(",").toSet)
       .toSeq
 
   /** Tag each record with its schema version via a broadcast lookup of the

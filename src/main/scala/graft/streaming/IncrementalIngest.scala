@@ -5,7 +5,8 @@ import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming restatement of the reference's incremental extract
   * loop (SURVEY.md §2.11): the extraction-history file becomes a history
-  * table, the id set-difference becomes a per-batch left-anti join, and the
+  * table, the id set-difference becomes a per-batch null-safe left-anti
+  * join (`Upsert.insertOnly`), and the
   * schedule/retry loop becomes a file-source stream with checkpointed
   * offsets (`datalakewrapper.py:180-195, 286-297`).
   *
@@ -25,8 +26,9 @@ object IncrementalIngest {
     * At scale: the history table holds only ids (narrow), so the anti-join
     * broadcasts while the history fits and shuffle-joins beyond that; the
     * data path appends partition-parallel with no wide transform. Run
-    * [[StreamState.compact]] on sink and history together (the same
-    * committed batch set) to keep the per-batch file sets bounded.
+    * [[StreamState.compact]] keyed on `idCol` on sink and history together
+    * (the same committed batch set; each holds one row per id) to keep the
+    * per-batch file sets bounded.
     */
   def runAvailableNow(spark: SparkSession, sourcePath: String,
                       schema: StructType, idCol: String, sinkPath: String,
@@ -37,9 +39,8 @@ object IncrementalIngest {
       // attempt's ids, or the overwrite would empty it
       val history = StreamState.readExcluding(batch.sparkSession,
         historyPath, batchId, StructType(batch.schema.filter(_.name == idCol)))
-      val fresh = batch
-        .dropDuplicates(idCol)
-        .join(history.select(idCol), Seq(idCol), "left_anti")
+      val fresh = graft.operators.Upsert.insertOnly(history,
+          batch.dropDuplicates(idCol), Seq(idCol))
         .cache()
       try {
         StreamState.writeBatch(fresh, sinkPath, batchId)

@@ -125,9 +125,9 @@ object StreamState {
 
   /** Fold every batch directory but the newest into the `batch_id=-1`
     * snapshot and delete the folded directories, so reads scan the state
-    * plus one live batch, not one directory per batch elapsed. With
-    * `keys`, the snapshot keeps only each key's [[latest]] rows; with `Nil`,
-    * it is the union of the folded rows.
+    * plus one live batch, not one directory per batch elapsed. The
+    * snapshot keeps each value of `keys` (non-empty) with its [[latest]]
+    * rows; a sink that holds one row per key keeps all its rows.
     *
     * The newest batch is never folded: if its checkpoint did not commit,
     * its replay reads the state excluding its own directory, and that
@@ -142,6 +142,7 @@ object StreamState {
     * left behind by a crash after the landing are deleted, which the
     * snapshot's `_absorbed_through_N` marker names. */
   def compact(spark: SparkSession, path: String, keys: Seq[String]): Unit = {
+    require(keys.nonEmpty, "StreamState.compact: keys must be non-empty")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
@@ -165,8 +166,7 @@ object StreamState {
     val folded = spark.read.option("basePath", path)
       .parquet(sources.map(_.toString): _*)
     val tmp = new Path(path + "_compacting")
-    (if (keys.isEmpty) folded.drop("batch_id") else latest(folded, keys))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    latest(folded, keys).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     fs.create(new Path(tmp, s"$Marker${absorb.last._1}")).close()
     if (fs.exists(retired)) fs.delete(retired, true)
     if (fs.exists(prior)) renameOrThrow(fs, prior, retired)

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -20,9 +21,13 @@ class JsonKeysetTupleExprSpec extends SparkSpec {
 
   val fields = Seq("a", "b", "c", "num", "sci", "dup", "nested", "arr", "missing")
 
+  /** The keyset the flat ingest discovers and tags with. */
+  def native(rec: Column): Column =
+    JsonKeysetTupleExpr.keysetField(JsonKeysetTupleExpr.jsonKeysetTuple(rec, Nil))
+
   test("keyset matches json_object_keys + sort + join exactly") {
     val df = records.toDF("rec").select(
-      graft.schema.SchemaRegistry.keysetExprNative($"rec").as("native"),
+      native($"rec").as("native"),
       graft.schema.SchemaRegistry.keysetExpr($"rec").as("builtin"))
     df.collect().foreach { r =>
       assert(Option(r.getString(0)) == Option(r.getString(1)),
@@ -35,7 +40,7 @@ class JsonKeysetTupleExprSpec extends SparkSpec {
     // registry storage is set-based: {"a":1,"a":2} must resolve to the
     // same version as {"a":1} through every kernel
     val flat = Seq("""{"a": 1, "a": 2}""").toDF("rec")
-    assert(flat.select(SchemaRegistry.keysetExprNative($"rec"))
+    assert(flat.select(native($"rec"))
       .head().getString(0) == "a")
     assert(flat.select(SchemaRegistry.keysetExpr($"rec"))
       .head().getString(0) == "a")
@@ -45,7 +50,8 @@ class JsonKeysetTupleExprSpec extends SparkSpec {
     val nested = Seq("""{"a": {"x": 1}, "a": {"y": 2}}""",
       """{"a": {"x": 1}}""").toDF("rec")
     val reg = SchemaRegistry.seed.observeSorted(
-      SchemaRegistry.discoverKeysetsNested(nested, "rec"))
+      SchemaRegistry.discoverKeysetsWith(nested, "rec",
+        JsonKeysetTupleExpr.jsonLeafKeysetTuple))
     // the tagging ingestNested runs: the same streaming kernel's keyset
     val versions = SchemaRegistry.assignVersionsByKeyset(
         nested.withColumn("ks", JsonKeysetTupleExpr.keysetField(

@@ -97,42 +97,34 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(saved2.withoutSeed.versions.size == 3)
   }
 
-  test("incremental diff reads the key history, not the silver table") {
-    val base = tempDir("graft_runner_hist").toString
-    val (lake, bronze, silver) = (s"$base/lake", s"$base/bronze", s"$base/silver")
-    Files.createDirectories(Paths.get(lake))
-    Files.writeString(Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"),
-      """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""")
-    val r1 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
-      lake, bronze, silver)
-    assert(r1.head.success && r1.head.rows == 1)
-    // the run left a narrow id-only history beside the warehouse table
-    val hist = s"$silver/_keyhistory/luma_gl_transaction_detail"
-    assert(spark.read.parquet(hist).columns.toSeq == Seq("GLTransactionDetail"))
-    // plant key 99 in SILVER ONLY (never extracted per the history): if the
-    // runner diffed against silver it would skip 99; diffing against the
-    // history must load it
-    import spark.implicits._
-    Seq(("99", "99.0")).toDF("GLTransactionDetail", "TransactionAmount")
-      .write.mode("append").parquet(s"$silver/luma_gl_transaction_detail")
-    val lake2 = s"$base/lake2"
-    Files.createDirectories(Paths.get(lake2))
-    Files.writeString(Paths.get(s"$lake2/FSM_GLTransactionDetail.ndjson"), Seq(
+  test("a null-key record loads once: the incremental diff is null-safe") {
+    val base = tempDir("graft_runner_null").toString
+    val (bronze, silver) = (s"$base/bronze", s"$base/silver")
+    val extract = Seq(
       """{"GLTransactionDetail": 1, "TransactionAmount": 10.5}""",
-      """{"GLTransactionDetail": 99, "TransactionAmount": 99.0}"""
-    ).mkString("\n"))
-    val r2 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
-      lake2, bronze, silver)
-    assert(r2.head.success && r2.head.rows == 1)
-    // and the history now covers the loaded key
-    assert(spark.read.parquet(hist).as[String].collect().toSet == Set("1", "99"))
+      """{"TransactionAmount": 5.0}""").mkString("\n")
+    // the same extract lands twice, each time in a fresh lake dir
+    def run(lake: String) = {
+      Files.createDirectories(Paths.get(lake))
+      Files.writeString(
+        Paths.get(s"$lake/FSM_GLTransactionDetail.ndjson"), extract)
+      PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
+        lake, bronze, silver).head
+    }
+    val r1 = run(s"$base/lake")
+    assert(r1.success && r1.rows == 2)
+    val r2 = run(s"$base/lake2")
+    assert(r2.success && r2.rows == 0)
+    val keys = spark.read.parquet(s"$silver/luma_gl_transaction_detail")
+      .select("GLTransactionDetail").collect().map(r => Option(r.getString(0)))
+    assert(keys.sortBy(_.toString).toSeq == Seq(None, Some("1")))
   }
 
-  test("silver predating the history backfills it PERSISTENTLY (no re-append)") {
+  test("a pre-existing silver table is the diff's key set (no re-append)") {
     val base = tempDir("graft_runner_bf").toString
     val (lake, bronze, silver) = (s"$base/lake", s"$base/bronze", s"$base/silver")
     Files.createDirectories(Paths.get(lake))
-    // pre-existing silver from an older deployment, no key history
+    // pre-existing silver from an older deployment
     import spark.implicits._
     Seq(("1", "10.5"), ("2", "20.5"))
       .toDF("GLTransactionDetail", "TransactionAmount")
@@ -145,12 +137,7 @@ class PipelineRunnerSpec extends SparkSpec {
     val r1 = PipelineRunner.runSubjectArea(spark, incConfig, "general_ledger",
       lake, bronze, silver)
     assert(r1.head.success && r1.head.rows == 1)
-    // the backfill was persisted: history = pre-existing keys + the new one
-    val hist = s"$silver/_keyhistory/luma_gl_transaction_detail"
-    assert(spark.read.parquet(hist).as[String].collect().toSet ==
-      Set("1", "2", "3"))
-    // run 2 over the SAME old keys must load nothing (the bug re-appended
-    // every pre-history row on each run)
+    // run 2 over the SAME old keys must load nothing
     val lake2 = s"$base/lake2"
     Files.createDirectories(Paths.get(lake2))
     Files.writeString(Paths.get(s"$lake2/FSM_GLTransactionDetail.ndjson"), Seq(

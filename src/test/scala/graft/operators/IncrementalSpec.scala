@@ -5,18 +5,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Incremental set-difference (I1) and watermark-id math (I4) — the
-  * cutoff-hour boundary is property-tested per SURVEY.md §5. */
+/** Watermark-id math (I4) — the cutoff-hour boundary is property-tested
+  * per SURVEY.md §5. The set-difference (I1) is UpsertSpec's. */
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
-
-  test("notExtracted = lake ids minus history (left-anti)") {
-    val lake = Seq("a", "b", "c", "d").toDF("dl_id")
-    val history = Seq("b", "d").toDF("dl_id")
-    val out = Incremental.notExtracted(lake, history, "dl_id")
-      .as[String].collect().toSet
-    assert(out == Set("a", "c"))
-  }
 
   test("incrementalId: after local cutoff → same day 05:00 local epoch") {
     // 2024-01-15 18:00 UTC = 12:00 local (UTC-6) → id = 2024-01-15 05:00 local

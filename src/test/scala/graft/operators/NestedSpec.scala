@@ -37,4 +37,18 @@ class NestedSpec extends SparkSpec {
     assert(rows == Seq(("1", "10", None), ("2", "20", Some("O")),
       ("3", "30", None)))
   }
+
+  test("a field formatting to schema_version survives as _dupe, flat or nested") {
+    val flat = Seq("""{"k": 1, "schema.version": "x"}""").toDF("rec")
+    val nested = Seq("""{"k": 1, "schema": {"version": "x"}}""").toDF("rec")
+    for (silver <- Seq(
+        graft.jobs.IngestPipeline.ingest(spark, flat, "rec").silver,
+        graft.jobs.IngestPipeline.ingestNested(spark, nested, "rec").silver)) {
+      assert(silver.columns.toSeq ==
+        Seq("k", "schema_version", "schema_version_dupe"))
+      // the version column holds the version id, the field keeps its value
+      assert(silver.as[(String, Int, String)].collect().toSeq ==
+        Seq(("1", 1, "x")))
+    }
+  }
 }

@@ -54,8 +54,8 @@ class IncrementalIngestSpec extends SparkSpec {
     val newestSink = batchDirs(sink).map(_.stripPrefix("batch_id=").toLong).max
     val newestFiles = new java.io.File(s"$sink/batch_id=$newestSink")
       .listFiles().map(f => f.getName -> f.lastModified()).toMap
-    StreamState.compact(spark, hist, Nil)
-    StreamState.compact(spark, sink, Nil)
+    StreamState.compact(spark, hist, Seq("dl_id"))
+    StreamState.compact(spark, sink, Seq("dl_id"))
     assert(parquetFiles(hist) < before)
     // everything absorbed into batch_id=-1 EXCEPT the newest batch, which
     // stays replayable (its checkpoint commit may not have landed)

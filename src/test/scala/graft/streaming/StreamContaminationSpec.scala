@@ -56,7 +56,7 @@ class StreamContaminationSpec extends SparkSpec {
     // (the newest batch stays as the replay candidate) without
     // changing membership
     Seq("admitted", "quarantined", "reports").foreach(t =>
-      StreamState.compact(spark, s"$dir/state/$t", Nil))
+      StreamState.compact(spark, s"$dir/state/$t", Seq("doc_id")))
     assert(ids("quarantined") == Map(1L -> -1L))
     assert(ids("admitted") == Map(2L -> -1L, 3L -> 1L, 4L -> 1L))
   }

@@ -152,19 +152,19 @@ class StreamStateSpec extends SparkSpec {
     def rows(): Seq[(Long, String)] = spark.read.parquet(path)
       .select($"id", $"payload").as[(Long, String)].collect().toSeq.sorted
     batch(0); batch(1)
-    StreamState.compact(spark, path, Nil)
+    StreamState.compact(spark, path, Seq("id"))
     batch(2)
-    StreamState.compact(spark, path, Nil)
+    StreamState.compact(spark, path, Seq("id"))
     batch(3)
     val before = rows()
     assert(before.size == 8)
     FailingRenameFileSystem.refusing((src, dst) =>
         dst.getName == "batch_id=-1" && src.getName.endsWith("_compacting")) {
-      intercept[java.io.IOException](StreamState.compact(spark, path, Nil))
+      intercept[java.io.IOException](StreamState.compact(spark, path, Seq("id")))
     }
     assert(rows() == before)
     // the next compaction completes over the same state
-    StreamState.compact(spark, path, Nil)
+    StreamState.compact(spark, path, Seq("id"))
     assert(rows() == before)
   }
 
@@ -177,13 +177,13 @@ class StreamStateSpec extends SparkSpec {
     def rows(): Seq[Long] = spark.read.parquet(path).select($"id")
       .as[Long].collect().toSeq.sorted
     batch(0); batch(1); batch(2)
-    StreamState.compact(spark, path, Nil)
+    StreamState.compact(spark, path, Seq("id"))
     assert(rows() == Seq(0L, 1L, 2L))
     // the crash window: the snapshot landed, the folded dirs survived
     batch(0); batch(1)
     assert(rows() == Seq(0L, 0L, 1L, 1L, 2L))
     batch(3)
-    StreamState.compact(spark, path, Nil)
+    StreamState.compact(spark, path, Seq("id"))
     assert(rows() == Seq(0L, 1L, 2L, 3L))
   }
 }
