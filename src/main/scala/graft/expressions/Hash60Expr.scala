@@ -68,13 +68,19 @@ object Hash60Expr {
       MessageDigest.getInstance("MD5")
   }
 
-  /** Top 60 bits of md5: the first 15 hex digits are the digest's first
-    * 60 bits, so conv(..., 16, 10) == (first-8-bytes-big-endian >>> 4). */
-  def hash60(bytes: Array[Byte]): Long = {
+  /** The calling thread's MD5, reset: a kernel that streams several
+    * byte runs into one digest feeds them here and reads the result with
+    * [[top60]]. */
+  def md5(): MessageDigest = {
     val md = digests.get()
     md.reset()
-    md.update(bytes)
-    val d = md.digest()
+    md
+  }
+
+  /** Top 60 bits of an md5 digest: the first 15 hex digits are the
+    * digest's first 60 bits, so conv(..., 16, 10) ==
+    * (first-8-bytes-big-endian >>> 4). */
+  def top60(d: Array[Byte]): Long = {
     val top64 =
       ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
       ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
@@ -82,6 +88,9 @@ object Hash60Expr {
       ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
     top64 >>> 4
   }
+
+  /** Top 60 bits of md5(`bytes`). */
+  def hash60(bytes: Array[Byte]): Long = top60(md5().digest(bytes))
 
   /** Column entry point. */
   def hash60(value: Column): Column =

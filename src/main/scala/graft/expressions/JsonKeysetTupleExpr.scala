@@ -132,16 +132,7 @@ class JsonKeysetTuple(fields: Array[String], nested: Boolean = false)
           }
         }
 
-        // flat mode never descends: the walk's prefix stays ""
-        if (nested) walk("", parser.nextToken())
-        else {
-          var tok = parser.nextToken()
-          while (tok == JsonToken.FIELD_NAME) {
-            parser.nextToken()
-            capture(parser.currentName(), parser.currentToken())
-            tok = parser.nextToken()
-          }
-        }
+        walk("", parser.nextToken())
         // sorted DISTINCT keys: the registry stores keysets as sets, and
         // the readTree-based JsonLeafKeysExpr collapses duplicate keys —
         // a record like {"a":1,"a":2} must canonicalize to "a" through

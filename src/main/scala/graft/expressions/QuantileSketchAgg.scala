@@ -164,26 +164,9 @@ object QuantileSketchAgg {
   /** Portable hash60 of a long's decimal rendering — the Scala-side twin
     * of `Sketches.hash60(value.cast("string"))` and the oracle's
     * `md5(CAST(v AS VARCHAR))`, for stateful consumers that maintain a
-    * sketch outside an aggregation (StreamStats). Called once per input
-    * row in the streaming hot path, so the digest is thread-local
-    * (MessageDigest.getInstance is a provider lookup) and the top 15 hex
-    * digits are read numerically — the big-endian first-8-bytes value
-    * shifted right 4 IS the 60-bit hex prefix, no string round-trip. */
-  private val localMd5 =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
-  def hash60OfLong(v: Long): Long = {
-    val md = localMd5.get()
-    md.reset()
-    val d = md.digest(
-      java.lang.Long.toString(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val be = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-      ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-    be >>> 4
-  }
+    * sketch outside an aggregation (StreamStats). */
+  def hash60OfLong(v: Long): Long = Hash60Expr.hash60(
+    java.lang.Long.toString(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Bounded weighted insert keyed by hash (see class invariant). */
   private[graft] def add(buf: java.util.TreeMap[java.lang.Long, Array[Long]],

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * 64-bit long with no unsigned edge cases anywhere.
   *
   * Single pass: bit b of the result is the sign of Σ_tokens ±1 by bit b of
-  * hash60(token). Null tokens are skipped (md5 of null is null — no vote).
+  * [[Hash60Expr.hash60]](token). Null tokens are skipped (md5 of null is
+  * null — no vote).
   */
 case class SimHashPortableExpr(child: Expression) extends UnaryExpression {
 
@@ -52,14 +53,6 @@ object SimHashPortableExpr {
 
   val Bits = 60
 
-  /** Top-60-bit md5 token hash — the portable seam. Identical value to
-    * DuckDB `('0x' || substring(md5(t),1,15))::BIGINT` and Spark SQL
-    * `conv(substring(md5(binary(t)),1,15),16,10)`. */
-  def hash60(utf8Bytes: Array[Byte]): Long = {
-    val hex = org.apache.commons.codec.digest.DigestUtils.md5Hex(utf8Bytes)
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   /** Single-pass portable-simhash kernel (shared by eval and codegen). */
   def simhashOf(arr: ArrayData): Long = {
     val votes = new Array[Int](Bits)
@@ -67,7 +60,7 @@ object SimHashPortableExpr {
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = hash60(arr.getUTF8String(i).getBytes)
+        val h = Hash60Expr.hash60(arr.getUTF8String(i).getBytes)
         var b = 0
         while (b < Bits) {
           if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1

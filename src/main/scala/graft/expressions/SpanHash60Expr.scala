@@ -1,7 +1,5 @@
 package graft.expressions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -12,15 +10,15 @@ import org.apache.spark.sql.types._
   * the top-60-bit md5 of every space-joined n-token window (stride 1, one
   * hash per position, duplicates preserved). Bit-exact with the built-in
   * chain `conv(substring(md5(cast(concat_ws(' ', slice(toks, i, n)) as
-  * binary)), 1, 15), 16, 10)` — i.e. the [[SimHashPortableExpr.hash60]]
+  * binary)), 1, 15), 16, 10)` — i.e. the [[Hash60Expr.hash60]]
   * seam a DuckDB oracle restates as
   * `('0x' || substring(md5(join), 1, 15))::BIGINT` — but computed in one
   * kernel pass: token bytes are extracted once, each window streams
-  * through a reused MessageDigest (token bytes + single-space separators),
-  * and the 60-bit value is read straight off the digest's first eight
-  * bytes. The Column-chain form allocates a sliced array, a joined
-  * UTF8String, a 32-char hex string, and a base-16 parse PER WINDOW; this
-  * kernel allocates nothing per window beyond the digest's own state.
+  * through [[Hash60Expr.md5]]'s reused digest (token bytes + single-space
+  * separators), and [[Hash60Expr.top60]] reads the 60-bit value. The
+  * Column-chain form allocates a sliced array, a joined UTF8String, a
+  * 32-char hex string, and a base-16 parse PER WINDOW; this kernel
+  * allocates nothing per window beyond the digest's own state.
   *
   * The md5 hash keeps span-dedup pipelines bit-portable to a second
   * engine (the q74/q90 span-dedup correctness seam).
@@ -61,14 +59,8 @@ case class SpanHash60Expr(child: Expression, n: Int) extends UnaryExpression {
 
 object SpanHash60Expr {
 
-  private val digests = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
-
-  /** One-pass kernel: top-60-bit md5 of every space-joined n-token window.
-    * The first 15 hex digits of an md5 are the digest's first 60 bits, so
-    * the conv(..., 16, 10) value is (first-8-bytes-big-endian >>> 4). */
+  /** One-pass kernel: top-60-bit md5 of every space-joined n-token
+    * window. */
   def spansOf(toks: ArrayData, n: Int): GenericArrayData = {
     val cnt = toks.numElements()
     if (cnt < n) return new GenericArrayData(new Array[Long](0))
@@ -79,12 +71,11 @@ object SpanHash60Expr {
       words(i) = if (toks.isNullAt(i)) null else toks.getUTF8String(i).getBytes
       i += 1
     }
-    val md = digests.get()
+    val md = Hash60Expr.md5()
     val count = cnt - n + 1
     val hashes = new Array[Long](count)
     i = 0
-    while (i < count) {
-      md.reset()
+    while (i < count) { // digest() leaves md reset for the next window
       var j = 0
       var emitted = false
       while (j < n) {
@@ -96,13 +87,7 @@ object SpanHash60Expr {
         }
         j += 1
       }
-      val d = md.digest()
-      val top64 =
-        ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-        ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-        ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-      hashes(i) = top64 >>> 4
+      hashes(i) = Hash60Expr.top60(md.digest())
       i += 1
     }
     new GenericArrayData(hashes)

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.expressions.Hash60Expr
+
 /** Model-based and repetition-based quality filters for training corpora —
   * the two standard gates after rule-based cleaning:
   *
@@ -15,24 +17,19 @@ import org.apache.spark.sql.functions._
   *     fraction. Per-row higher-order functions only.
   *
   * Arithmetic is engine-portable by construction: the token hash is the
-  * md5-derived 60-bit portable hash (same seam as SimHashPortableExpr),
+  * md5-derived 60-bit portable hash ([[Hash60Expr]], the seam every
+  * portable sketch and dedup family shares),
   * weights are integer-derived dyadic rationals, and the only float ops are
   * sequential sums and a final division.
   */
 object QualityFilters {
-
-  /** Portable 60-bit token hash (md5 top 15 hex digits), non-negative —
-    * the fused [[graft.expressions.Hash60Expr]] kernel, bit-exact with the
-    * `conv(substring(md5(...)))` chain the oracles restate. */
-  private def hash60(t: Column): Column =
-    graft.expressions.Hash60Expr.hash60(t.cast("binary"))
 
   /** Fixed deterministic weight for a token: hash to one of `buckets`
     * feature buckets, then a Knuth-multiplicative integer mix mapped onto
     * [-1, 1) in steps of 1/2048 — exactly representable doubles, so the
     * identical value is statable in any engine. */
   def tokenWeight(t: Column): Column =
-    ((pmod(hash60(t), lit(1024L)) * lit(2654435761L)) % lit(4096L)
+    ((pmod(Hash60Expr.hash60(t.cast("binary")), lit(1024L)) * lit(2654435761L)) % lit(4096L)
       - lit(2048L)).cast("double") / lit(2048.0)
 
   /** Mean token logit over an already-lowercased token-array column.

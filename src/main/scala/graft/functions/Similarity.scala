@@ -849,7 +849,7 @@ object Similarity {
     * seam). Rows are output dims, columns input dims (1-based i). */
   def signMatrix(inDim: Int, outDim: Int): Seq[Seq[Double]] =
     (0 until outDim).map(j => (1 to inDim).map(i =>
-      if (graft.expressions.SimHashPortableExpr
+      if (graft.expressions.Hash60Expr
             .hash60(s"$i:$j".getBytes("UTF-8")) % 2 == 0) 1.0 else -1.0).toSeq)
 
   /** Sign (Achlioptas-style) random projection of a float vector onto

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * equi-join on the span hash that AQE sizes at runtime. Nothing driver-side.
   *
   * The span hash is the portable md5-top-60-bit seam
-  * (`SimHashPortableExpr.hash60`'s SQL form), so a DuckDB oracle restates
+  * (`Hash60Expr.hash60`'s SQL form), so a DuckDB oracle restates
   * the whole report bit-for-bit; with 60-bit hashes a corpus of 10¹²
   * windows sees ~0.4 collisions (birthday bound), and a collision only
   * flags one extra window — acceptable for a curation gate.

@@ -147,8 +147,14 @@ object TarShards {
       StructField("key", StringType),
       StructField("payload", BinaryType),
       StructField("meta_json", StringType)))
+    // the glob expands here: handed to `load`, a single glob path is
+    // stat-ed as a literal first, which logs a FileNotFoundException
+    val glob = new Path(s"$shardsDir/*.tar")
+    val shards = Option(glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    // no shard: load the glob itself, which fails as a missing path
     val rows = spark.read.format("binaryFile")
-      .load(s"$shardsDir/*.tar")
+      .load((if (shards.isEmpty) Seq(glob.toString) else shards): _*)
       .select(col("path"), col("content"))
       .rdd.flatMap { r =>
         val path = r.getString(0)

@@ -950,19 +950,18 @@ object PipelineQueries {
     * by the checkpointed AvailableNow incremental stream — a real
     * `writeStream` + `foreachBatch` run, not a batch restatement. Wave 1
     * lands the even doc_ids (micro-batch 0); wave 2 redelivers EVERY doc
-    * and the id-history anti-join keeps only the odd ones (micro-batch 1);
-    * a third run with no new files must be a no-op. The final frame reads
-    * the sink back WITH its batch_id partition column, so the oracle pins
-    * the payload AND which incremental wave each row landed in — and any
-    * replay duplication or loss breaks the hash. */
+    * and the anti-join against the sink's ids keeps only the odd ones
+    * (micro-batch 1); a third run with no new files must be a no-op. The
+    * final frame reads the sink back WITH its batch_id partition column,
+    * so the oracle pins the payload AND which incremental wave each row
+    * landed in — and any replay duplication or loss breaks the hash. */
   def streamIngestQ(s: SparkSession, dir: String): DataFrame =
     withTempDir("graft_q98") { base =>
       val src = s"$base/landing"
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       def run(): Unit = graft.streaming.IncrementalIngest.runAvailableNow(
-        s, src, docs.schema, "doc_id", s"$base/sink", s"$base/history",
-        s"$base/ckpt")
+        s, src, docs.schema, "doc_id", s"$base/sink", s"$base/ckpt")
       docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
       run()
       docs.write.mode("append").parquet(src) // evens again + the odds

@@ -3376,7 +3376,7 @@ object TrainingData {
   }
 
   /** Portable token hash: identical value in both engines (the seam
-    * SimHashPortableExpr.hash60 implements natively). */
+    * Hash60Expr.hash60 implements natively). */
   private val hash60Sql = "('0x' || substring(md5(t), 1, 15))::BIGINT"
 
   /** Portable 60-bit simhash of a token-hash list column `hs`. */

@@ -63,7 +63,12 @@ object SchemaRegistry {
     * columns sorted. Written through the Hadoop filesystem so the path may
     * use any supported scheme (file:, hdfs:, s3a:, …) — registry size is
     * the number of schema versions, so a driver-side write is correct at
-    * any data scale. */
+    * any data scale.
+    *
+    * The JSON goes to a temp file beside `path` first and is renamed into
+    * place only once it is written and closed, so a save that fails part
+    * way (full disk, killed driver, an error on close) leaves the previous
+    * registry readable instead of a truncated file. */
   def save(spark: org.apache.spark.sql.SparkSession,
            registry: SchemaRegistry, path: String): Unit = {
     // Jackson escapes each name, so any key `load` can parse round-trips
@@ -74,9 +79,14 @@ object SchemaRegistry {
     }.mkString("{", ", ", "}")
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
+    val out = fs.create(tmp, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    // a POSIX rename replaces `p` in one step; stores whose rename refuses
+    // an existing target (HDFS) get the old file deleted first
+    if (!fs.rename(tmp, p) && !(fs.delete(p, false) && fs.rename(tmp, p)))
+      throw new java.io.IOException(s"could not rename $tmp to $p")
   }
 
   /** Load a persisted registry; None when the file does not exist. Version

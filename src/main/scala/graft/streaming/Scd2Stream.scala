@@ -26,18 +26,16 @@ import graft.operators.Scd2
   * 1 TB (the partition-pruned MERGE discipline of
   * [[graft.plans.MergeInto]]).
   *
-  * The bucket count is ADAPTIVE by default (`nBuckets = Adaptive`): each
-  * batch derives K = clamp(nextPow2(rows / TargetRowsPerBucket), 1, 256)
-  * from the manifest-carried snapshot row count plus the batch's own,
-  * so a fixture-scale state folds through ONE bucket (no small-file
-  * storm) while a warehouse-scale dimension spreads across 256. When K
-  * grows (O(log) times over a state's lifetime, and only while the
-  * state is still small), that batch rebuilds the snapshot under the
-  * new K — all later batches prune again. Because K and the row counts
-  * ride in the manifest, a replayed batch recomputes the identical K
-  * from the identical inputs — determinism survives replay. Passing an
-  * explicit `nBuckets > 0` pins K (the large-dimension deployment that
-  * knows its size up front).
+  * The bucket count K is ADAPTIVE: each batch derives
+  * K = clamp(nextPow2(rows / targetRowsPerBucket), 1, 256) from the
+  * manifest-carried snapshot row count plus the batch's own, so a
+  * fixture-scale state folds through ONE bucket (no small-file storm)
+  * while a warehouse-scale dimension spreads across 256. When K grows
+  * (O(log) times over a state's lifetime, and only while the state is
+  * still small), that batch rebuilds the snapshot under the new K — all
+  * later batches prune again. Because K and the row counts ride in the
+  * manifest, a replayed batch recomputes the identical K from the
+  * identical inputs — determinism survives replay.
   *
   * Replay safety: batch N merges against the latest manifest with id < N,
   * so a replayed batch (failure between state write and checkpoint commit)
@@ -53,17 +51,14 @@ import graft.operators.Scd2
   */
 object Scd2Stream {
 
-  /** Sentinel: derive the bucket count from observed state size. */
-  val Adaptive: Int = 0
-
-  /** Adaptive cap: wide enough that a typical batch touches a small
+  /** Bucket cap: wide enough that a typical batch touches a small
     * fraction of a large dimension, narrow enough that bucket files
     * stay right-sized at warehouse scale. */
-  val MaxAdaptiveBuckets: Int = 256
+  private val MaxBuckets: Int = 256
 
-  /** Adaptive sizing target: one bucket per this many snapshot rows
-    * (power-of-two growth), so fixture-scale states stay single-bucket
-    * and billion-row dimensions saturate [[MaxAdaptiveBuckets]]. */
+  /** Sizing target: one bucket per this many snapshot rows (power-of-two
+    * growth), so fixture-scale states stay single-bucket and billion-row
+    * dimensions saturate [[MaxBuckets]]. */
   val TargetRowsPerBucket: Long = 1L << 20
 
   private val BucketCol = "_gbucket"
@@ -72,30 +67,20 @@ object Scd2Stream {
     * current version, the bucket count it was built under, and the
     * running observed-row total (cumulative batch sizes — a cheap,
     * deterministic OVERESTIMATE of snapshot rows; merges only shrink
-    * it, so adaptive K errs toward more buckets, never fewer) —
+    * it, so K errs toward more buckets, never fewer) —
     * everything a replayed successor needs to reproduce its own K and
     * input paths deterministically. */
   private case class Manifest(k: Int, totalRows: Long,
                               entries: Map[Int, Long])
 
-  private def bucketOf(keyCols: Seq[String], nBuckets: Int): Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets)).cast("int")
+  private def bucketOf(keyCols: Seq[String], k: Int): Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(k)).cast("int")
 
   private def nextPow2(n: Long): Int = {
     var k = 1
     while (k < n && k < (1 << 30)) k <<= 1
     k
   }
-
-  /** The bucket count for this batch: the caller's pin, or the adaptive
-    * power-of-two derived from (prior snapshot rows + batch rows). */
-  private def resolveBuckets(nBuckets: Int, prior: Option[Manifest],
-                             batchRows: Long, target: Long): Int =
-    if (nBuckets > 0) nBuckets
-    else {
-      val est = prior.map(_.totalRows).getOrElse(0L) + batchRows
-      math.min(MaxAdaptiveBuckets, nextPow2((est + target - 1) / target))
-    }
 
   /** Drain `sourcePath` with AvailableNow, folding each micro-batch into
     * the standing bucketed SCD2 snapshot. When `opCol` is set, the
@@ -109,14 +94,13 @@ object Scd2Stream {
                       schema: StructType, keyCols: Seq[String], tsCol: String,
                       attrCols: Seq[String], tieCols: Seq[String],
                       statePath: String, checkpointPath: String,
-                      nBuckets: Int = Adaptive,
                       targetRowsPerBucket: Long = TargetRowsPerBucket,
                       opCol: Option[String] = None): Long =
     StreamState.drain(StreamWaves.reader(spark, schema, sourcePath),
         checkpointPath)(_.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, keyCols, tsCol, attrCols, tieCols,
-          statePath, nBuckets, targetRowsPerBucket, opCol)
+          statePath, targetRowsPerBucket, opCol)
         ()
     })
 
@@ -151,7 +135,7 @@ object Scd2Stream {
       (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
         val affected = foldBatch(batch, batchId, keyCols, tsCol, attrCols,
-          tieCols, statePath, Adaptive, TargetRowsPerBucket, None)
+          tieCols, statePath, TargetRowsPerBucket, None)
         // enrich from the WRITTEN delta — one computation of the merge,
         // and only the batch's own buckets are read back; an empty batch
         // enriches an empty frame so the per-batch directory still lands
@@ -177,42 +161,30 @@ object Scd2Stream {
     * affected buckets' current versions, re-compact them with the batch,
     * write the result as this batch's delta (one file per bucket), and
     * publish the updated bucket map as this batch's manifest. When the
-    * resolved bucket count differs from the standing one (adaptive
-    * growth, or a caller-pinned change), the whole snapshot rebuilds
-    * under the new K instead. Returns the affected bucket ids (empty
-    * for an empty batch — nothing written, manifest carried forward
-    * unchanged). */
+    * bucket count grows past the standing one, the whole snapshot
+    * rebuilds under the new K instead. Returns the affected bucket ids
+    * (empty for an empty batch — nothing written, manifest carried
+    * forward unchanged). */
   private def foldBatch(batch: DataFrame, batchId: Long,
                         keyCols: Seq[String], tsCol: String,
                         attrCols: Seq[String], tieCols: Seq[String],
-                        statePath: String, nBuckets: Int,
-                        targetRowsPerBucket: Long,
+                        statePath: String, targetRowsPerBucket: Long,
                         opCol: Option[String]): Seq[Int] = {
     val session = batch.sparkSession
     val snapRoot = s"$statePath/snap"
     val maniRoot = s"$statePath/manifests"
     val prior = latestManifestBefore(session, maniRoot, batchId)
-    // ONE driver-bounded job decides K and the affected buckets: in
-    // adaptive mode the batch aggregates under the MAX bucket count and
-    // the resolved-K buckets fall out arithmetically (every adaptive K
-    // is a power of two dividing MaxAdaptiveBuckets, so
-    // h mod K = (h mod Max) mod K)
-    val (k, affected, batchRows) =
-      if (nBuckets > 0) {
-        val aff = batch.select(bucketOf(keyCols, nBuckets).as(BucketCol))
-          .groupBy(col(BucketCol)).count()
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-        (nBuckets, aff.map(_._1).toSeq.sorted, aff.map(_._2).sum)
-      } else {
-        val fine = batch
-          .select(bucketOf(keyCols, MaxAdaptiveBuckets).as(BucketCol))
-          .groupBy(col(BucketCol)).count()
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-        val kk = resolveBuckets(Adaptive, prior, fine.map(_._2).sum,
-          targetRowsPerBucket)
-        (kk, fine.map(_._1 % kk).distinct.toSeq.sorted, fine.map(_._2).sum)
-      }
-    val total = prior.map(_.totalRows).getOrElse(0L) + batchRows
+    // ONE driver-bounded job decides K and the affected buckets: the
+    // batch aggregates under the MAX bucket count and the K buckets fall
+    // out arithmetically (every K is a power of two dividing MaxBuckets,
+    // so h mod K = (h mod Max) mod K)
+    val fine = batch.select(bucketOf(keyCols, MaxBuckets).as(BucketCol))
+      .groupBy(col(BucketCol)).count()
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
+    val total = prior.map(_.totalRows).getOrElse(0L) + fine.map(_._2).sum
+    val k = math.min(MaxBuckets, nextPow2(
+      (total + targetRowsPerBucket - 1) / targetRowsPerBucket))
+    val affected = fine.map(_._1 % k).distinct.toSeq.sorted
     val priorEntries = prior.map(_.entries).getOrElse(Map.empty)
     val rebuild = prior.exists(_.k != k) && priorEntries.nonEmpty
     if (affected.isEmpty && !rebuild) {
@@ -271,12 +243,9 @@ object Scd2Stream {
     * newest manifest. */
   def currentHistory(spark: SparkSession, statePath: String): DataFrame = {
     val m = latestManifestBefore(spark, s"$statePath/manifests",
-        Long.MaxValue)
+        Long.MaxValue).filter(_.entries.nonEmpty)
       .getOrElse(throw new IllegalStateException(
         s"Scd2Stream: no snapshot under $statePath/snap"))
-    if (m.entries.isEmpty)
-      throw new IllegalStateException(
-        s"Scd2Stream: no snapshot under $statePath/snap")
     spark.read.parquet(m.entries.toSeq.map { case (b, id) =>
       s"$statePath/snap/batch_id=$id/$BucketCol=$b"
     }: _*)
@@ -295,38 +264,17 @@ object Scd2Stream {
     * delta. Run between drains (not concurrently with one) — same
     * offline contract as [[StreamState.compact]].
     *
-    * Crash-recoverable swap: the new base is written to `_compacting`,
-    * the old base is renamed ASIDE (`.base_old`) — never deleted while
-    * it is the only copy — then the tmp renames into place and the old
-    * copy drops. A re-run after a crash at any point either discards a
-    * partial tmp (old base still authoritative) or completes the swap
-    * (tmp is complete by construction once the old base moved aside). */
+    * The new base lands through [[StreamState.swapSnapshot]] under
+    * `snap`, after [[StreamState.healSnapshot]] has repaired a crashed
+    * earlier swap. Restoring the retired base is always right here: the
+    * absorbed deltas and the manifests are rewritten only after the
+    * landing. */
   def compact(spark: SparkSession, statePath: String): Unit = {
     val snapRoot = s"$statePath/snap"
     val maniRoot = s"$statePath/manifests"
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val base = new Path(s"$snapRoot/batch_id=-1")
-    val tmp = new Path(s"$snapRoot/_compacting")
-    val aside = new Path(s"$snapRoot/.base_old")
-    // recover from a crashed prior compaction before reading anything
-    if (fs.exists(base)) {
-      // base authoritative: any leftover tmp/aside is stale
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(aside)) fs.delete(aside, true)
-    } else if (fs.exists(tmp) && fs.exists(aside)) {
-      // crash between rename-aside and rename-into-place: the tmp was
-      // fully written before the old base moved aside — finish the swap
-      StreamState.renameOrThrow(fs, tmp, base)
-      fs.delete(aside, true)
-    } else if (fs.exists(tmp)) {
-      // first-ever compaction crashed mid-write: deltas + manifests are
-      // untouched, the partial tmp is garbage
-      fs.delete(tmp, true)
-    } else if (fs.exists(aside)) {
-      // defensive (unreachable by the protocol order): restore
-      StreamState.renameOrThrow(fs, aside, base)
-    }
+    val snapP = new Path(snapRoot)
+    val fs = snapP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StreamState.healSnapshot(fs, snapP)
     val ids = manifestIds(spark, maniRoot)
     if (ids.size < 2) return // nothing superseded below the newest batch
     val newest = ids.max
@@ -337,25 +285,18 @@ object Scd2Stream {
     val foldPaths = mapPrior.entries.toSeq.filter(_._2 != -1L)
       .map { case (b, id) => s"$snapRoot/batch_id=$id/$BucketCol=$b" }
     if (foldPaths.nonEmpty) {
-      if (fs.exists(tmp)) fs.delete(tmp, true)
       // basePath retains the bucket partition column for the re-write;
       // carry already-based buckets forward so the base stays complete
       val basedPaths = mapPrior.entries.toSeq.filter(_._2 == -1L)
         .map { case (b, _) => s"$snapRoot/batch_id=-1/$BucketCol=$b" }
-      spark.read.option("basePath", snapRoot)
-        .parquet((foldPaths ++ basedPaths): _*)
-        .drop("batch_id")
-        .repartition(col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol)
-        .parquet(tmp.toString)
-      if (fs.exists(base)) {
-        if (fs.exists(aside)) fs.delete(aside, true)
-        StreamState.renameOrThrow(fs, base, aside)
+      StreamState.swapSnapshot(fs, snapP) { tmp =>
+        spark.read.option("basePath", snapRoot)
+          .parquet((foldPaths ++ basedPaths): _*)
+          .drop("batch_id")
+          .repartition(col(BucketCol))
+          .write.mode("overwrite").partitionBy(BucketCol)
+          .parquet(tmp.toString)
       }
-      // a failed rename here leaves aside intact — the recovery branch
-      // above restores it on the next run; NOTHING below may run first
-      StreamState.renameOrThrow(fs, tmp, base)
-      if (fs.exists(aside)) fs.delete(aside, true)
     }
     // republish: the pre-newest state lives wholly in the base; the
     // newest batch's own buckets stay in its delta
@@ -369,7 +310,6 @@ object Scd2Stream {
     ids.filterNot(id => id == newest || id == priorId)
       .foreach(id => fs.delete(new Path(s"$maniRoot/manifest_$id"), false))
     val live = Set(-1L, newest)
-    val snapP = new Path(snapRoot)
     if (fs.exists(snapP)) fs.listStatus(snapP)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
       .map(s => s.getPath.getName.stripPrefix("batch_id=").toLong -> s.getPath)
@@ -427,25 +367,14 @@ object Scd2Stream {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    def parseEntries(ls: Seq[String]): Map[Int, Long] = ls.map { l =>
-      val Array(b, id) = l.split(',')
-      b.toInt -> id.toLong
-    }.toMap
-    lines.headOption.filter(_.startsWith("#k=")) match {
-      case Some(header) =>
-        val Array(kPart, tPart) = header.stripPrefix("#").split(',')
-        Manifest(kPart.stripPrefix("k=").toInt,
-          tPart.stripPrefix("t=").toLong, parseEntries(lines.tail))
-      case None =>
-        // LEGACY manifest (pre-adaptive format: bucket,batchId lines
-        // only, written under fixed K=256). Don't strand the standing
-        // state: carry K=256 forward, and report a row count that
-        // keeps the adaptive resolver AT 256 (a legacy state has no
-        // count; under-reporting would trigger a surprise full
-        // rebuild, and 256 is simply the status quo it was built with)
-        Manifest(MaxAdaptiveBuckets,
-          MaxAdaptiveBuckets.toLong * TargetRowsPerBucket,
-          parseEntries(lines))
-    }
+    val header = lines.headOption.filter(_.startsWith("#k=")).getOrElse(
+      throw new IllegalStateException(
+        s"Scd2Stream: manifest $p has no #k=<buckets>,t=<rows> header"))
+    val Array(kPart, tPart) = header.stripPrefix("#").split(',')
+    Manifest(kPart.stripPrefix("k=").toInt, tPart.stripPrefix("t=").toLong,
+      lines.tail.map { l =>
+        val Array(b, id) = l.split(',')
+        b.toInt -> id.toLong
+      }.toMap)
   }
 }

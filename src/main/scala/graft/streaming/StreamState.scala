@@ -25,6 +25,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - serving reads resolve each key's newest batch with [[latest]];
   *  - between drains, [[compact]] folds all but the newest batch into
   *    `batch_id=-1`, which sorts below every live batch.
+  *
+  * [[swapSnapshot]] and [[healSnapshot]] are the one crash-safe way a
+  * `batch_id=-1` snapshot is replaced; `Scd2Stream.compact` lands its
+  * bucketed base through them too.
   */
 object StreamState {
 
@@ -133,23 +137,17 @@ object StreamState {
     * its replay reads the state excluding its own directory, and that
     * state must not already hold its rows. Run between drains.
     *
-    * The swap is retire → land → delete: the old snapshot is renamed
-    * aside to `<path>_retired`, the new one renamed into place, and only
-    * then are the retired snapshot and the folded directories deleted.
-    * Every rename is checked; a failed landing renames the old snapshot
-    * back and throws. The next call heals a crash at any step: a retired
-    * snapshot with none in place is restored, and folded directories
-    * left behind by a crash after the landing are deleted, which the
-    * snapshot's `_absorbed_through_N` marker names. */
+    * The new snapshot lands through [[swapSnapshot]], after
+    * [[healSnapshot]] has repaired a crashed earlier swap. Folded
+    * directories left behind by a crash after the landing are deleted,
+    * which the snapshot's `_absorbed_through_N` marker names. */
   def compact(spark: SparkSession, path: String, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "StreamState.compact: keys must be non-empty")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
+    healSnapshot(fs, p)
     val prior = new Path(p, "batch_id=-1")
-    val retired = new Path(path + "_retired")
-    if (!fs.exists(prior) && fs.exists(retired))
-      renameOrThrow(fs, retired, prior)
     val absorbedThrough = if (!fs.exists(prior)) Long.MinValue
       else fs.listStatus(prior).map(_.getPath.getName)
         .collectFirst { case n if n.startsWith(Marker) =>
@@ -165,19 +163,47 @@ object StreamState {
     // resolution runs across the folded set (the snapshot counts as -1)
     val folded = spark.read.option("basePath", path)
       .parquet(sources.map(_.toString): _*)
-    val tmp = new Path(path + "_compacting")
-    latest(folded, keys).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.create(new Path(tmp, s"$Marker${absorb.last._1}")).close()
-    if (fs.exists(retired)) fs.delete(retired, true)
-    if (fs.exists(prior)) renameOrThrow(fs, prior, retired)
-    if (!fs.rename(tmp, prior)) {
-      if (fs.exists(retired)) fs.rename(retired, prior)
-      throw new java.io.IOException(
-        s"StreamState.compact: could not land $tmp as $prior")
+    swapSnapshot(fs, p) { tmp =>
+      latest(folded, keys).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      fs.create(new Path(tmp, s"$Marker${absorb.last._1}")).close()
     }
-    fs.delete(retired, true)
     absorb.foreach { case (_, d) => fs.delete(d, true) }
   }
+
+  /** Replace the `batch_id=-1` snapshot under `path` with the one `write`
+    * puts at `<path>_compacting`. The swap is retire → land → delete: the
+    * old snapshot is renamed aside to `<path>_retired`, the new one
+    * renamed into place, and only then is the retired one deleted. Every
+    * rename is checked; a failed landing renames the old snapshot back
+    * and throws. A caller rewrites whatever points into the old snapshot
+    * only after this returns, so [[healSnapshot]] may always restore the
+    * retired copy. */
+  private[streaming] def swapSnapshot(fs: FileSystem, path: Path)
+                                     (write: Path => Unit): Unit = {
+    val (snap, tmp, retired) = swapPaths(path)
+    write(tmp)
+    if (fs.exists(retired)) fs.delete(retired, true)
+    if (fs.exists(snap)) renameOrThrow(fs, snap, retired)
+    if (!fs.rename(tmp, snap)) {
+      if (fs.exists(retired)) fs.rename(retired, snap)
+      throw new java.io.IOException(s"could not land $tmp as $snap")
+    }
+    fs.delete(retired, true)
+  }
+
+  /** Repair a [[swapSnapshot]] that crashed: a retired snapshot with none
+    * in place is restored, and a half-written `<path>_compacting` is
+    * deleted. Run before reading the snapshot to compact again. */
+  private[streaming] def healSnapshot(fs: FileSystem, path: Path): Unit = {
+    val (snap, tmp, retired) = swapPaths(path)
+    if (!fs.exists(snap) && fs.exists(retired))
+      renameOrThrow(fs, retired, snap)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+  }
+
+  private def swapPaths(path: Path): (Path, Path, Path) =
+    (new Path(path, "batch_id=-1"), new Path(path.toString + "_compacting"),
+      new Path(path.toString + "_retired"))
 
   /** The live `batch_id=N` directories (N ≥ 0) under `p`, oldest first. */
   private def batchDirs(fs: FileSystem, p: Path): Seq[(Long, Path)] =

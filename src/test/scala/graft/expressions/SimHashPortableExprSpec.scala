@@ -30,7 +30,7 @@ class SimHashPortableExprSpec extends SparkSpec {
         .cast("long").as("h"))
       .as[Long].collect()
     val viaKernel = toks.map(t =>
-      SimHashPortableExpr.hash60(t.getBytes("UTF-8")))
+      Hash60Expr.hash60(t.getBytes("UTF-8")))
     assert(viaSql.toSeq == viaKernel)
     // 60-bit: always non-negative, below 2^60
     viaKernel.foreach(h => assert(h >= 0L && h < (1L << 60)))

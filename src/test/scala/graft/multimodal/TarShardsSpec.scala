@@ -177,4 +177,12 @@ class TarShardsSpec extends SparkSpec {
       c.isInstanceOf[IllegalStateException] &&
         c.getMessage.contains("pairing")), err.getMessage)
   }
+
+  test("a directory with no shard fails as a missing path") {
+    val empty = tempDir("graft_tar_none").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      TarShards.readTarShards(spark, empty)
+    }
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
 }

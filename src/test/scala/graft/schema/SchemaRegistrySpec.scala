@@ -1,6 +1,38 @@
 package graft.schema
 
+import java.io.{IOException, OutputStream}
+import java.net.URI
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import graft.SparkSpec
+
+/** A local file system under its own scheme whose next `create` stream,
+  * once armed, loses its bytes and throws on `close` — the way a write
+  * whose final flush hits a full disk fails. */
+class FailingCloseFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("failclose:///")
+  override def getScheme: String = "failclose"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize,
+      progress)
+    if (!FailingCloseFileSystem.armed.getAndSet(false)) out
+    else new FSDataOutputStream(new OutputStream {
+      override def write(b: Int): Unit = ()
+      override def close(): Unit = {
+        out.close()
+        throw new IOException("no space left on close")
+      }
+    }, null)
+  }
+}
+
+object FailingCloseFileSystem {
+  val armed = new AtomicBoolean(false)
+}
 
 /** Pins the reference's schema-versioning semantics
   * (`utilities/utilities.py:639-704`; SURVEY.md §7.4). */
@@ -49,6 +81,24 @@ class SchemaRegistrySpec extends SparkSpec {
       Set("a\tb", "line\nbreak"), Set("say \"hi\"", "back\\slash", "plain")))
     SchemaRegistry.save(spark, r, path)
     assert(SchemaRegistry.load(spark, path).contains(r))
+  }
+
+  test("a save that fails on close leaves the previous registry " +
+      "readable") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failclose.impl",
+      classOf[FailingCloseFileSystem].getName)
+    val dir = tempDir("graft_reg_close").toString
+    val path = s"failclose://$dir/bc_schemas.json"
+    val r1 = SchemaRegistry.seed.observe(Seq(Set("a", "b")))
+    SchemaRegistry.save(spark, r1, path)
+    val r2 = r1.observe(Seq(Set("a", "b", "c")))
+    FailingCloseFileSystem.armed.set(true)
+    intercept[IOException](SchemaRegistry.save(spark, r2, path))
+    assert(!FailingCloseFileSystem.armed.get)
+    assert(SchemaRegistry.load(spark, path).contains(r1))
+    // the next save replaces it
+    SchemaRegistry.save(spark, r2, path)
+    assert(SchemaRegistry.load(spark, path).contains(r2))
   }
 
   test("discover + assign tags rows with their keyset version") {
