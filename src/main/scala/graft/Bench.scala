@@ -19,6 +19,28 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, err)
   }
 
+  /** The bench's one-line JSON: the suite total, each query's time and
+    * each failed query's error, keyed by query name. Jackson escapes every
+    * string, so an error message or a path of any content stays valid
+    * JSON. */
+  def report(results: Seq[(String, (Double, Option[String]))],
+             sfDir: String): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val out = mapper.createObjectNode()
+    out.put("metric", "total")
+    out.put("value", results.map(_._2._1).sum)
+    out.put("unit", "sec")
+    val qs = out.putObject("queries")
+    results.foreach { case (name, (t, _)) => qs.put(name, t) }
+    val errs = out.putObject("errors")
+    results.foreach { case (name, (_, e)) => e.foreach(errs.put(name, _)) }
+    out.put("sf", sfDir)
+    out.put("runs_per_query", 3)
+    out.put("reported", "min")
+    out.put("schedule", "interleaved-passes")
+    mapper.writeValueAsString(out)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -54,14 +76,8 @@ object Bench {
     val results = suite.map { case (name, _) =>
       val runs = passes.map(_.find(_._1 == name).get._2)
       name -> (runs.map(_._1).min, runs.flatMap(_._2).headOption)
-    }.toMap
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (_, Some(e))) =>
-      "\"" + k + "\":\"" + e.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","runs_per_query":3,"reported":"min","schedule":"interleaved-passes"}"""
+    }
+    val json = report(results, sfDir)
     println(json)
     // the full per-query JSON also lands in a FILE: the stdout tail gets
     // truncated in round artifacts (BENCH_r07 lost its first ~35 queries),
@@ -71,6 +87,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"bench_out write failed: ${e.getMessage}") }
     spark.stop()
-    if (results.values.exists(_._2.isDefined)) sys.exit(1)
+    if (results.exists(_._2._2.isDefined)) sys.exit(1)
   }
 }

@@ -161,16 +161,9 @@ case class QuantileSketchAgg(
 
 object QuantileSketchAgg {
 
-  /** Portable hash60 of a long's decimal rendering — the Scala-side twin
-    * of `Sketches.hash60(value.cast("string"))` and the oracle's
-    * `md5(CAST(v AS VARCHAR))`, for stateful consumers that maintain a
-    * sketch outside an aggregation (StreamStats). */
-  def hash60OfLong(v: Long): Long = Hash60Expr.hash60(
-    java.lang.Long.toString(v).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
   /** Bounded weighted insert keyed by hash (see class invariant). */
-  private[graft] def add(buf: java.util.TreeMap[java.lang.Long, Array[Long]],
-                         h: Long, v: Long, w: Long, capacity: Int): Unit = {
+  private def add(buf: java.util.TreeMap[java.lang.Long, Array[Long]],
+                  h: Long, v: Long, w: Long, capacity: Int): Unit = {
     val existing = buf.get(h)
     if (existing != null) {
       existing(1) += w

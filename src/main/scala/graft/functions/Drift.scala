@@ -45,18 +45,21 @@ object Drift {
     * category is a category like any other (null-safe join; it reports as
     * a null-valued row). */
   def chiSquaredAudit(ref: DataFrame, cur: DataFrame, catCol: String,
-                      tNum: Long, tDen: Long): DataFrame = {
-    def counts(df: DataFrame, as: String) =
-      df.groupBy(col(catCol).as("category"))
-        .agg(count(lit(1)).as(as))
-    chiSquaredAuditFromCounts(counts(ref, "ref_n"), counts(cur, "cur_n"),
-      tNum, tDen)
-  }
+                      tNum: Long, tDen: Long): DataFrame =
+    chiSquaredAuditFromCounts(categoryCounts(ref, catCol, "ref_n"),
+      categoryCounts(cur, catCol, "cur_n"), tNum, tDen)
+
+  /** `(category, <as>)`: the rows per value of `catCol`, a null category
+    * counting as one. The one count both audit sides use; run on a
+    * stream through `StreamState.maintain`, it is the streaming
+    * monitor's standing state. */
+  def categoryCounts(df: DataFrame, catCol: String, as: String): DataFrame =
+    df.groupBy(col(catCol).as("category")).agg(count(lit(1)).as(as))
 
   /** The audit from PRE-AGGREGATED count frames — `(category, ref_n)` /
-    * `(category, cur_n)` — the seam the streaming monitor folds its
-    * maintained state through (its counts come from incremental state,
-    * not a rescan); [[chiSquaredAudit]] is this on two fresh groupBys. */
+    * `(category, cur_n)`, each a [[categoryCounts]] — the seam the
+    * streaming monitor serves its standing counts through;
+    * [[chiSquaredAudit]] is this on two fresh counts. */
   def chiSquaredAuditFromCounts(refCounts: DataFrame, curCounts: DataFrame,
                                 tNum: Long, tDen: Long): DataFrame = {
     require(tNum >= 0 && tDen > 0, s"threshold $tNum/$tDen must be >= 0")
@@ -100,17 +103,21 @@ object Drift {
     * Scale shape: two map-side-combinable counts, a bucket-grid full
     * outer join, one group-cardinality total broadcast back. */
   def tvdDrift(a: DataFrame, b: DataFrame, groupCol: String,
-               bucketCol: String, tNum: Long, tDen: Long): DataFrame = {
-    def counts(df: DataFrame, out: String) = df
-      .groupBy(col(groupCol).as("_g"), col(bucketCol).as("_b"))
-      .agg(count(lit(1)).as(out))
-    tvdDriftFromCounts(counts(a, "c"), counts(b, "c"), groupCol,
-      bucketCol, tNum, tDen)
-  }
+               bucketCol: String, tNum: Long, tDen: Long): DataFrame =
+    tvdDriftFromCounts(tvdCounts(a, groupCol, bucketCol),
+      tvdCounts(b, groupCol, bucketCol), groupCol, bucketCol, tNum, tDen)
 
-  /** [[tvdDrift]] off pre-aggregated `(_g, _b, c)` count frames — the
-    * entry the streaming monitor serves from (its standing state IS
-    * the current-side counts). */
+  /** `(_g, _b, c)`: the rows per (group, bucket) — the count both
+    * [[tvdDrift]] sides use. Counts are additive, so the streaming
+    * monitor sums per-batch [[tvdCounts]] into the same frame. */
+  def tvdCounts(df: DataFrame, groupCol: String,
+                bucketCol: String): DataFrame =
+    df.groupBy(col(groupCol).as("_g"), col(bucketCol).as("_b"))
+      .agg(count(lit(1)).as("c"))
+
+  /** [[tvdDrift]] off pre-aggregated [[tvdCounts]] frames — the entry
+    * the streaming monitor serves from (its standing state IS the
+    * current-side counts). */
   def tvdDriftFromCounts(aCounts: DataFrame, bCounts: DataFrame,
                          groupCol: String, bucketCol: String,
                          tNum: Long, tDen: Long): DataFrame = {

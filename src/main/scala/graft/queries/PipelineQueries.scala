@@ -896,12 +896,12 @@ object PipelineQueries {
   /** STREAMING quantile monitor under the oracle gate: the documents
     * table arrives in two disjoint waves (evens, then odds — staged
     * files, one micro-batch each under [[graft.streaming.StreamWaves]]) and
-    * [[graft.streaming.StreamStats]] maintains per-source quantile
-    * sketches as flatMapGroupsWithState STATE across the micro-batches —
-    * wave 2's report must reflect wave-1 state committed to and loaded
+    * q110's own [[graft.functions.Sketches.groupQuantiles]] runs on the
+    * stream through [[graft.streaming.StreamState.maintain]] — wave 2's
+    * report must reflect wave-1 sketch state committed to and loaded
     * from the state store (restart/replay safety is StreamStatsSpec's
     * pin). Because the sketch is a pure set function, the final
-    * per-source quantiles are provably identical to the one-shot batch
+    * per-source quantiles are identical to the one-shot batch
     * aggregate — so the oracle is exactly q110's whole-corpus
     * restatement. */
   def streamStatsQ(s: SparkSession, dir: String): DataFrame =
@@ -916,14 +916,14 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src, Seq(
         narrow.filter(col("doc_id") % 2 === 0).drop("doc_id"),
         narrow.filter(col("doc_id") % 2 === 1).drop("doc_id")))
-      graft.streaming.StreamStats.runAvailableNow(
-        s, src, narrow.drop("doc_id").schema, "source", "n_chars",
+      graft.streaming.StreamState.maintain(
+        graft.functions.Sketches.groupQuantiles(
+          graft.streaming.StreamWaves.reader(s, narrow.drop("doc_id").schema,
+            src), Seq("source"), "n_chars",
+          Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99)), capacity = 256),
         s"$base/sink", s"$base/ckpt")
-      graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"), Seq("g"))
-        .select(col("g").as("source"), col("sketch_size"), col("sketch_mass"),
-          element_at(col("quantiles"), 1).as("p50"),
-          element_at(col("quantiles"), 2).as("p90"),
-          element_at(col("quantiles"), 3).as("p99"))
+      graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"),
+          Seq("source"))
         .orderBy(col("source"))
         .localCheckpoint()
     }
@@ -1331,12 +1331,12 @@ object PipelineQueries {
 
   /** STREAMING drift monitor under the gate (q210): the q207 chi-squared
     * audit's batch≡stream invariant — the high-value event slice drains
-    * through [[graft.streaming.StreamDrift]] in three waves (per-category
-    * cumulative counts as flatMapGroupsWithState state, batch_id-keyed
-    * emission), and the audit computed from the monitor's STANDING
+    * in three waves while [[graft.functions.Drift.categoryCounts]] runs
+    * on the stream through [[graft.streaming.StreamState.maintain]]
+    * (per-category cumulative counts as streaming aggregate state,
+    * batch_id-keyed emission), and the audit computed from the STANDING
     * counts against the batch reference slice must hash-equal the batch
-    * [[graft.functions.Drift.chiSquaredAudit]] — q207's oracle verbatim.
-    * A no-data fourth drain must leave the sink untouched. */
+    * [[graft.functions.Drift.chiSquaredAudit]] — q207's oracle verbatim. */
   def streamDriftQ(s: SparkSession, dir: String): DataFrame =
     withTempDir("graft_q210") { base =>
       val src = s"$base/landing"
@@ -1347,13 +1347,15 @@ object PipelineQueries {
       // replay safety is StreamDriftSpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(w =>
         cur.filter(col("event_id") % 3 === w)))
-      graft.streaming.StreamDrift.runAvailableNow(
-        s, src, cur.schema, "event_type", s"$base/sink", s"$base/ckpt")
-      val refCounts = e.filter(col("value") <= 50)
-        .groupBy(col("event_type").as("category"))
-        .agg(count(lit(1)).as("ref_n"))
-      graft.functions.Drift.chiSquaredAuditFromCounts(refCounts,
-          graft.streaming.StreamDrift.currentCounts(s, s"$base/sink"),
+      graft.streaming.StreamState.maintain(graft.functions.Drift
+          .categoryCounts(graft.streaming.StreamWaves.reader(s, cur.schema,
+            src), "event_type", "cur_n"),
+        s"$base/sink", s"$base/ckpt")
+      graft.functions.Drift.chiSquaredAuditFromCounts(
+          graft.functions.Drift.categoryCounts(e.filter(col("value") <= 50),
+            "event_type", "ref_n"),
+          graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"),
+            Seq("category")),
           tNum = 1, tDen = 4)
         .withColumn("chi_num", col("chi_num").cast("long"))
         .withColumn("chi_den", col("chi_den").cast("long"))
@@ -1399,15 +1401,15 @@ object PipelineQueries {
 
   /** STREAMING heavy-hitter sketch under the gate (q225): the q93
     * count-min family's batch≡stream invariant — the corpus token
-    * stream drains through [[graft.streaming.StreamSketch]] in three
-    * doc-keyed waves (per-cell cumulative counts as
-    * flatMapGroupsWithState state, batch_id-keyed emission). The
-    * standing 4×1024 grid must equal the one-shot batch
-    * [[graft.functions.Sketches.countMinCells]] REGISTER FOR REGISTER
-    * (StreamSketchSpec's pin), and the top-20 heavy hitters
-    * SERVED off the maintained grid must hash-equal the batch
-    * estimates — q93's oracle verbatim. A no-data fourth drain must
-    * leave the sink untouched. [[graft.streaming.StreamState.compact]]
+    * stream drains in three doc-keyed waves while
+    * [[graft.functions.Sketches.countMinCells]] runs on it through
+    * [[graft.streaming.StreamState.maintain]] (per-cell cumulative
+    * counts as streaming aggregate state, batch_id-keyed emission). The
+    * standing 4×1024 grid therefore equals the one-shot batch grid
+    * REGISTER FOR REGISTER (StreamSketchSpec's pin), and the top-20
+    * heavy hitters SERVED off the maintained grid must hash-equal the
+    * batch estimates — q93's oracle verbatim.
+    * [[graft.streaming.StreamState.compact]]
     * runs MID-CHAIN (after wave 2) and again before serving: the
     * folded `batch_id=-1` snapshot must be a valid maintenance
     * substrate and leave the served grid identical, while bounding the
@@ -1420,8 +1422,9 @@ object PipelineQueries {
         .select(col("doc_id"),
           explode(graft.functions.TextAnalysis.tokens(lower(col("text"))))
             .as("term"))
-      def run(): Unit = graft.streaming.StreamSketch.runAvailableNow(
-        s, src, toks.select("term").schema, "term",
+      def run(): Unit = graft.streaming.StreamState.maintain(
+        graft.functions.Sketches.countMinCells(graft.streaming.StreamWaves
+          .reader(s, toks.select("term").schema, src), "term"),
         s"$base/sink", s"$base/ckpt")
       def wave(wv: Int) = toks.filter(col("doc_id") % 3 === wv)
         .select("term")
@@ -1440,8 +1443,8 @@ object PipelineQueries {
       // pin and maintained ≡ batch sketch is StreamSketchSpec's; the
       // oracle restates the estimates, so the gate no longer runs a
       // third compaction round or rebuilds the batch sketch per bench run
-      val cells = graft.streaming.StreamSketch
-        .currentCells(s, s"$base/sink").localCheckpoint()
+      val cells = graft.streaming.StreamState.latest(
+        s.read.parquet(s"$base/sink"), Seq("depth", "bucket")).localCheckpoint()
       val top = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("term")).limit(20)
       graft.functions.Sketches.countMinEstimate(cells, top, "term")
@@ -1523,16 +1526,16 @@ object PipelineQueries {
 
   /** STREAMING exact-bitmap monitor under the gate (q258): the q249
     * family's batch≡stream invariant on the EXACT side — the full
-    * event stream drains through [[graft.streaming.StreamBitmap]] in
-    * three waves (per-(type, bucket) OR-word state), and the standing
-    * words must equal the one-shot batch
-    * [[graft.functions.Bitmap.bitmaps]] WORD FOR WORD (asserted
-    * StreamBitmapSpec's pin); the output serves the words plus popcounts —
-    * q249's oracle shape over the full corpus. Waves OVERLAP on
-    * purpose (the %3 split re-delivers boundary users' events across
-    * waves): idempotent OR state must absorb re-delivery, the property
-    * the HLL monitors share and counters lack. A no-data fourth drain
-    * must leave the sink untouched. */
+    * event stream drains in four waves while
+    * [[graft.functions.Bitmap.bitmaps]] runs on it through
+    * [[graft.streaming.StreamState.maintain]] (per-(type, bucket)
+    * OR-word state), so the standing words equal the one-shot batch
+    * bitmap WORD FOR WORD (StreamBitmapSpec's pin); the output serves
+    * the words plus popcounts — q249's oracle shape over the full
+    * corpus. Waves OVERLAP on purpose (the %3 split re-delivers
+    * boundary users' events across waves): idempotent OR state must
+    * absorb re-delivery, the property the HLL monitors share and
+    * counters lack. */
   def streamBitmapQ(s: SparkSession, dir: String): DataFrame =
     withTempDir("graft_q258") { base =>
       val src = s"$base/landing"
@@ -1543,15 +1546,15 @@ object PipelineQueries {
       graft.streaming.StreamWaves.stage(src,
         (0 to 2).map(wv => e.filter(col("event_id") % 3 === wv ||
           col("event_id") % 7 === wv)) :+ e)
-      graft.streaming.StreamBitmap.runAvailableNow(
-        s, src, e.schema, "event_type", "user_id",
+      graft.streaming.StreamState.maintain(graft.functions.Bitmap.bitmaps(
+          graft.streaming.StreamWaves.reader(s, e.schema, src),
+          "event_type", "user_id"),
         s"$base/sink", s"$base/ckpt")
-      // standing ≡ the batch Bitmap.bitmaps is StreamBitmapSpec's pin;
-      // the oracle restates the expected words, so the gate no longer
-      // rebuilds the batch bitmap per bench run
-      graft.streaming.StreamBitmap
-        .currentBitmap(s, s"$base/sink")
-        .select(col("g").as("event_type"), col("bucket"), col("bits"),
+      // the oracle restates the expected words, so the gate does not
+      // rebuild the batch bitmap per bench run
+      graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"),
+          Seq("event_type", "bucket"))
+        .select(col("event_type"), col("bucket"), col("bits"),
           bit_count(col("bits")).cast("long").as("n_bits"))
         .orderBy(col("event_type"), col("bucket"))
         .localCheckpoint()
@@ -1559,14 +1562,14 @@ object PipelineQueries {
 
   /** STREAMING quantile-sketch monitor under the gate (q260): the
     * q237 maintenance invariant, streamed — the per-event-type cent
-    * histogram (capacity 256, SATURATED) maintained by
-    * [[graft.streaming.StreamQuantile]] across three waves; the
-    * standing entries must equal the one-shot batch
-    * [[graft.operators.AggMaintain.quantileState]] ENTRY FOR ENTRY
+    * histogram (capacity 256, SATURATED) maintained across three waves
+    * by [[graft.operators.AggMaintain.quantileState]] run on the stream
+    * through [[graft.streaming.StreamState.maintain]]; the standing
+    * entries equal the one-shot batch sketch ENTRY FOR ENTRY
     * (StreamQuantileSpec's pin — the once-evicted-never-returns
     * hash-rank argument is what makes bounded streaming state exact),
     * and the output is the standing histogram under q237's oracle
-    * verbatim. A no-data fourth drain must leave the sink untouched. */
+    * verbatim. */
   def streamQuantileQ(s: SparkSession, dir: String): DataFrame =
     withTempDir("graft_q260") { base =>
       val src = s"$base/landing"
@@ -1577,15 +1580,17 @@ object PipelineQueries {
       // StreamQuantileSpec's pin
       graft.streaming.StreamWaves.stage(src, (0 to 2).map(wv =>
         e.filter(col("event_id") % 3 === wv)))
-      graft.streaming.StreamQuantile.runAvailableNow(
-        s, src, e.schema, "event_type", "cents", 256,
+      graft.streaming.StreamState.maintain(
+        graft.operators.AggMaintain.quantileState(
+          graft.streaming.StreamWaves.reader(s, e.schema, src),
+          "event_type", "cents", 256),
         s"$base/sink", s"$base/ckpt")
-      // standing ≡ the one-shot AggMaintain.quantileState is
-      // StreamQuantileSpec's pin; the oracle restates the maintained
-      // histogram, so the gate no longer rebuilds the batch sketch
-      graft.streaming.StreamQuantile
-        .currentEntries(s, s"$base/sink")
-        .select(col("g").as("event_type"), col("value"), col("count"))
+      // the oracle restates the maintained histogram, so the gate does
+      // not rebuild the batch sketch
+      graft.streaming.StreamState.latest(s.read.parquet(s"$base/sink"),
+          Seq("event_type"))
+        .select(col("event_type"), explode(col("q_sketch")).as("e"))
+        .select(col("event_type"), col("e.value"), col("e.count"))
         .orderBy(col("event_type"), col("value"))
         .localCheckpoint()
     }

@@ -91,9 +91,16 @@ object SchemaRegistry {
 
   /** Load a persisted registry; None when the file does not exist. Version
     * ids survive the round-trip, so a re-run over drifted data reuses prior
-    * ids no matter what order drift is rediscovered in. */
+    * ids no matter what order drift is rediscovered in.
+    *
+    * A file that is not the `save` shape — not JSON, a root that is not an
+    * object (an empty file included), a key that is not an integer, or a
+    * value that is not an array of strings — fails with an `IOException`
+    * naming `path`: read as an empty registry, it would mint ids from 0
+    * against tables that already carry the old ones. */
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): Option[SchemaRegistry] = {
+    import scala.jdk.CollectionConverters._
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -101,11 +108,21 @@ object SchemaRegistry {
       val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
       val in = fs.open(p)
       try in.readFully(0L, bytes) finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      import scala.jdk.CollectionConverters._
+      def bad(why: String) =
+        new java.io.IOException(s"schema registry $path: $why")
+      val node =
+        try new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+        catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw bad(s"not valid JSON: ${e.getOriginalMessage}").initCause(e) }
+      if (node == null || !node.isObject) throw bad("the root is not a JSON object")
       Some(SchemaRegistry(node.properties().asScala.map { e =>
-        e.getKey.toInt -> e.getValue.elements().asScala.map(_.asText()).toSet
+        val id = e.getKey.toIntOption.getOrElse(
+          throw bad(s"version key '${e.getKey}' is not an integer"))
+        val cols = e.getValue
+        if (!cols.isArray || !cols.elements().asScala.forall(_.isTextual))
+          throw bad(s"version $id is not an array of strings")
+        id -> cols.elements().asScala.map(_.asText()).toSet
       }.toMap))
     }
   }

@@ -72,9 +72,7 @@ object StreamCusum {
           }
       }
       .toDF("k", "day", "x", "cusum")
-    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamState.writeBatch(batch, sinkPath, batchId) })
+    StreamState.maintain(updates, sinkPath, checkpointPath)
   }
 
   /** The monitor's full emitted series: every (k, day, x, cusum) row

@@ -75,9 +75,7 @@ object StreamLateness {
           }
       }
       .toDF("k", "last_arrival", "n", "n_late", "max_late_us")
-    StreamState.drain(updates, checkpointPath)(_.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamState.writeBatch(batch, sinkPath, batchId) })
+    StreamState.maintain(updates, sinkPath, checkpointPath)
   }
 
   /** The standing audit: each key's newest batch row (state is

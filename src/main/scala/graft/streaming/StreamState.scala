@@ -13,6 +13,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The protocol, in the order a runner meets it:
   *  - [[drain]] runs one AvailableNow lifecycle of a stream;
+  *  - [[maintain]] drains a streaming aggregate in update mode and writes
+  *    each micro-batch's updated rows as its own batch: a monitor is its
+  *    batch twin's aggregate (`Bitmap.bitmaps`, `Sketches.countMinCells`,
+  *    `Sketches.groupQuantiles`, …) run on a [[StreamWaves.reader]]
+  *    stream, so the standing rows [[latest]] serves equal the one-shot
+  *    batch output under any split into micro-batches;
   *  - inside `foreachBatch`, [[readExcluding]] reads the standing state
   *    WITHOUT the current batch's own directory, so a replayed batch
   *    (crash between its writes and its checkpoint commit) recomputes
@@ -61,6 +67,17 @@ object StreamState {
     query.recentProgress.count(_.sources.exists(s =>
       s.startOffset != s.endOffset)).toLong
   }
+
+  /** Drain `updates` in update mode, writing each micro-batch's rows with
+    * [[writeBatch]]; a replayed batch rewrites the same rows. When
+    * `updates` is a streaming aggregate, every updated row carries its
+    * key's cumulative state, so [[latest]] over the aggregate's keys is
+    * the standing aggregate. Returns [[drain]]'s micro-batch count. */
+  def maintain(updates: DataFrame, sinkPath: String,
+               checkpointPath: String): Long =
+    drain(updates, checkpointPath)(_.outputMode("update")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatch(batch, sinkPath, batchId) })
 
   /** Run `body` with `spark.sql.shuffle.partitions` = `n`, restoring the
     * previous value after, also when `body` throws. */

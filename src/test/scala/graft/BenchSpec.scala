@@ -16,4 +16,18 @@ class BenchSpec extends SparkSpec {
       (s, _) => Seq(1, 2, 3).toDF("x"))
     assert(err.isEmpty && t > 0.0)
   }
+
+  test("report escapes an error holding a quote, a backslash, a newline " +
+      "and a control character") {
+    val err = "bad \"q\" at C:\\tmp\nline two \u0001 end"
+    val json = Bench.report(Seq("q01_a" -> ((1.5, None)),
+      "q02_b" -> ((2.0, Some(err)))), "/data/sf\"0.01")
+    assert(!json.contains("\n") && !json.contains("\u0001"))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(back.get("errors").get("q02_b").asText() == err)
+    assert(back.get("queries").get("q01_a").asDouble() == 1.5)
+    assert(back.get("value").asDouble() == 3.5)
+    assert(back.get("sf").asText() == "/data/sf\"0.01")
+    assert(back.get("metric").asText() == "total")
+  }
 }

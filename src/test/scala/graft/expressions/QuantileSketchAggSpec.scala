@@ -86,17 +86,6 @@ class QuantileSketchAggSpec extends SparkSpec {
     assert(got == ((0L, None)))
   }
 
-  test("hash60OfLong: the numeric fast path equals the string-parse reference") {
-    def ref(v: Long): Long = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(v.toString.getBytes("UTF-8"))
-      java.lang.Long.parseLong(
-        d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15), 16)
-    }
-    Seq(0L, 1L, -1L, 42L, 999999937L, Long.MaxValue, Long.MinValue)
-      .foreach(v => assert(QuantileSketchAgg.hash60OfLong(v) == ref(v), v))
-  }
-
   test("partial aggregation runs before the exchange (bounded map-side state)") {
     val df = (1L to 100L).toDF("v").withColumn("g", $"v" % 4)
     val plan = Sketches.groupQuantiles(df, Seq("g"), "v",

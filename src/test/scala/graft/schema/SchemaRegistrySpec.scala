@@ -83,6 +83,26 @@ class SchemaRegistrySpec extends SparkSpec {
     assert(SchemaRegistry.load(spark, path).contains(r))
   }
 
+  test("an empty registry file fails to load, naming the path") {
+    val dir = tempDir("graft_reg_empty").toString
+    val path = s"$dir/bc_schemas.json"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), Array.emptyByteArray)
+    val e = intercept[IOException](SchemaRegistry.load(spark, path))
+    assert(e.getMessage.contains(path))
+  }
+
+  test("a registry file that is not a JSON object of string arrays fails " +
+      "to load, naming the path") {
+    val dir = tempDir("graft_reg_shape").toString
+    Seq("[]", """{"x": ["a"]}""", """{"1": "a"}""", """{"1": [1]}""",
+        """{"1": ["a"]""").zipWithIndex.foreach { case (json, i) =>
+      val path = s"$dir/bc$i" + "_schemas.json"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
+      val e = intercept[IOException](SchemaRegistry.load(spark, path))
+      assert(e.getMessage.contains(path), json)
+    }
+  }
+
   test("a save that fails on close leaves the previous registry " +
       "readable") {
     spark.sparkContext.hadoopConfiguration.set("fs.failclose.impl",

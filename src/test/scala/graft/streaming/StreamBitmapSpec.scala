@@ -1,13 +1,24 @@
 package graft.streaming
 
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
+import graft.functions.Bitmap
 
-/** The streaming exact-bitmap monitor's input contract: negative ids
-  * fail loudly (mirroring batch [[graft.functions.Bitmap.bitmaps]])
-  * instead of silently corrupting the maintained words. */
+/** The streaming exact-bitmap monitor is [[graft.functions.Bitmap.bitmaps]]
+  * run on a stream through [[StreamState.maintain]]: negative ids fail
+  * loudly (the batch contract) instead of silently corrupting the
+  * maintained words, and the standing words are the batch words. */
 class StreamBitmapSpec extends SparkSpec {
   import spark.implicits._
+
+  private def run(src: String, schema: StructType, dir: String): Long =
+    StreamState.maintain(
+      Bitmap.bitmaps(StreamWaves.reader(spark, schema, src), "g", "v"),
+      s"$dir/sink", s"$dir/ckpt")
+
+  private def served(dir: String) =
+    StreamState.latest(spark.read.parquet(s"$dir/sink"), Seq("g", "bucket"))
 
   test("a negative id fails the stream loudly, like the batch contract") {
     val dir = tempDir("sbitmap").toString
@@ -15,10 +26,7 @@ class StreamBitmapSpec extends SparkSpec {
     val rows = Seq(("k", 5L), ("k", -1L))
     val schema = rows.toDF("g", "v").schema
     StreamWaves.stage(src, Seq(rows.toDF("g", "v")))
-    val e = intercept[Exception] {
-      StreamBitmap.runAvailableNow(spark, src, schema, "g", "v",
-        s"$dir/sink", s"$dir/ckpt")
-    }
+    val e = intercept[Exception](run(src, schema, dir))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
         Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -32,11 +40,9 @@ class StreamBitmapSpec extends SparkSpec {
       ("a", 62L))
     val schema = rows.toDF("g", "v").schema
     StreamWaves.stage(src, Seq(rows.toDF("g", "v")))
-    assert(StreamBitmap.runAvailableNow(spark, src, schema, "g", "v",
-      s"$dir/sink", s"$dir/ckpt") == 1L)
-    val got = StreamBitmap.currentBitmap(spark, s"$dir/sink")
-      .as[(String, Long, Long)].collect().toSet
-    val want = graft.functions.Bitmap.bitmaps(
+    assert(run(src, schema, dir) == 1L)
+    val got = served(dir).as[(String, Long, Long)].collect().toSet
+    val want = Bitmap.bitmaps(
         rows.toDF("g", "v"), "g", "v")
       .as[(String, Long, Long)].collect().toSet
     assert(got == want)
@@ -50,15 +56,13 @@ class StreamBitmapSpec extends SparkSpec {
     StreamWaves.stage(src, Seq(rows.limit(2), rows.filter($"v" === 70L ||
       $"v" === 3L), rows.filter($"v" === 64L || ($"v" === 1L))))
     // one micro-batch per staged wave
-    assert(StreamBitmap.runAvailableNow(spark, src, rows.schema, "g", "v",
-      s"$dir/sink", s"$dir/ckpt") == 3L)
-    val want = graft.functions.Bitmap.bitmaps(rows, "g", "v")
+    assert(run(src, rows.schema, dir) == 3L)
+    val want = Bitmap.bitmaps(rows, "g", "v")
       .as[(String, Long, Long)].collect().toSet
     assert(want.exists(_._1 == null))
-    def served = StreamBitmap.currentBitmap(spark, s"$dir/sink")
-      .as[(String, Long, Long)].collect().toSet
-    assert(served == want)
+    def got = served(dir).as[(String, Long, Long)].collect().toSet
+    assert(got == want)
     StreamState.compact(spark, s"$dir/sink", Seq("g", "bucket"))
-    assert(served == want)
+    assert(got == want)
   }
 }

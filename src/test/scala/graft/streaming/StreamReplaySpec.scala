@@ -25,18 +25,19 @@ class StreamReplaySpec extends SparkSpec {
     val dir = tempDir("sbr").toString
     val src = s"$dir/landing"
     val rows = (1L to 40L).map(i => (s"t${i % 3}", i)).toDF("g", "v")
-    def run(): Long = StreamBitmap.runAvailableNow(
-      spark, src, rows.schema, "g", "v", s"$dir/sink", s"$dir/ckpt")
+    def run(): Long = StreamState.maintain(graft.functions.Bitmap.bitmaps(
+        StreamWaves.reader(spark, rows.schema, src), "g", "v"),
+      s"$dir/sink", s"$dir/ckpt")
+    def currentBitmap = StreamState.latest(spark.read.parquet(s"$dir/sink"),
+      Seq("g", "bucket"))
     StreamWaves.stage(src, Seq(rows.filter($"v" <= 20), rows.filter($"v" > 20)))
     assert(run() == 2L)
-    val before = StreamBitmap.currentBitmap(spark, s"$dir/sink")
-      .localCheckpoint()
+    val before = currentBitmap.localCheckpoint()
     val sinkRows = spark.read.parquet(s"$dir/sink").count()
     assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == sinkRows,
       "StreamBitmap: replay appended sink rows")
-    unchanged("StreamBitmap", before,
-      StreamBitmap.currentBitmap(spark, s"$dir/sink"))
+    unchanged("StreamBitmap", before, currentBitmap)
   }
 
   test("StreamComponents: a no-data restart leaves the assignment") {

@@ -12,6 +12,9 @@ import graft.SparkSpec
 class StreamSinkCompactSpec extends SparkSpec {
   import spark.implicits._
 
+  private def currentCells(sink: String) =
+    StreamState.latest(spark.read.parquet(sink), Seq("depth", "bucket"))
+
   private def dirs(path: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -30,17 +33,17 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.parquet(s"$sink/batch_id=1")
     Seq((0, 1L, 12L), (1, 1L, 4L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=2")
-    val before = StreamSketch.currentCells(spark, sink)
+    val before = currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet
     StreamState.compact(spark, sink, Seq("depth", "bucket"))
-    val after = StreamSketch.currentCells(spark, sink)
+    val after = currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet
     assert(after == before)
     assert(after == Set((0, 1L, 12L), (0, 2L, 3L), (1, 1L, 4L)))
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=2"))
     // idempotent: nothing left to absorb
     StreamState.compact(spark, sink, Seq("depth", "bucket"))
-    assert(StreamSketch.currentCells(spark, sink)
+    assert(currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet == after)
   }
 
@@ -60,10 +63,10 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.mode("append").parquet(s"$sink/batch_id=0")
     Seq(("z", 8L, 1L)).toDF("g", "value", "count")
       .write.parquet(s"$sink/batch_id=2")
-    val before = StreamQuantile.currentEntries(spark, sink)
+    val before = StreamState.latest(spark.read.parquet(sink), Seq("g"))
       .as[(String, Long, Long)].collect().toSet
     StreamState.compact(spark, sink, Seq("g"))
-    val after = StreamQuantile.currentEntries(spark, sink)
+    val after = StreamState.latest(spark.read.parquet(sink), Seq("g"))
       .as[(String, Long, Long)].collect().toSet
     assert(after == before)
     assert(after == Set(("k", 10L, 2L), ("k", 30L, 1L), ("z", 8L, 1L)))
@@ -81,7 +84,7 @@ class StreamSinkCompactSpec extends SparkSpec {
     StreamState.compact(spark, sink, Seq("depth", "bucket"))
     // cell (0,2) now lives ONLY in batch_id=-1 (its source dir is gone)
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=1"))
-    val before = StreamSketch.currentCells(spark, sink)
+    val before = currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet
     assert(before.contains((0, 2L, 3L)))
     // simulate the crash window: the old snapshot was renamed aside
@@ -93,7 +96,7 @@ class StreamSinkCompactSpec extends SparkSpec {
     Seq((0, 1L, 12L)).toDF("depth", "bucket", "c")
       .write.parquet(s"$sink/batch_id=2")
     StreamState.compact(spark, sink, Seq("depth", "bucket"))
-    val after = StreamSketch.currentCells(spark, sink)
+    val after = currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet
     // (0,2)=3 survived the crash; (0,1) advanced to batch 2's value
     assert(after == Set((0, 1L, 12L), (0, 2L, 3L)))
@@ -117,7 +120,7 @@ class StreamSinkCompactSpec extends SparkSpec {
       .write.parquet(s"$sink/batch_id=2")
     StreamState.compact(spark, sink, Seq("depth", "bucket"))
     assert(dirs(sink) == Set("batch_id=-1", "batch_id=2"))
-    assert(StreamSketch.currentCells(spark, sink)
+    assert(currentCells(sink)
       .as[(Int, Long, Long)].collect().toSet ==
       Set((0, 1L, 8L), (0, 2L, 2L)))
   }

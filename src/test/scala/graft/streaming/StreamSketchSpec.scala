@@ -1,29 +1,34 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.Sketches
 
-/** The streaming count-min monitor must fold new batches into RESTORED
-  * per-cell counts, emit cumulative rows per batch, and converge to the
-  * one-shot batch sketch register for register. */
+/** The streaming count-min monitor, [[Sketches.countMinCells]] run on a
+  * stream through [[StreamState.maintain]], must fold new batches into
+  * RESTORED per-cell counts, emit cumulative rows per batch, and converge
+  * to the one-shot batch sketch register for register. */
 class StreamSketchSpec extends SparkSpec {
   import spark.implicits._
 
+  private def maintain(src: String, dir: String): Long =
+    StreamState.maintain(Sketches.countMinCells(StreamWaves.reader(spark,
+      Seq("x").toDF("term").schema, src), "term"),
+      s"$dir/sink", s"$dir/ckpt")
+
+  private def currentCells(dir: String) =
+    StreamState.latest(spark.read.parquet(s"$dir/sink"), Seq("depth", "bucket"))
 
   test("cells accumulate across batches and survive replay") {
     val dir = tempDir("ssk").toString
     val src = s"$dir/landing"
-    val schema = Seq("x").toDF("term").schema
-    def run(): Long = StreamSketch.runAvailableNow(
-      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt")
+    def run(): Long = maintain(src, dir)
 
     StreamWaves.stage(src, Seq(Seq("a", "a", "b").toDF("term")))
     assert(run() == 1L)
     StreamWaves.stage(src, Seq(Seq("a", "c").toDF("term")))
     assert(run() == 1L)
-    val got = StreamSketch.currentCells(spark, s"$dir/sink")
+    val got = currentCells(dir)
     val batch = Sketches.countMinCells(
       Seq("a", "a", "a", "b", "c").toDF("term"), "term")
     // register for register, both directions
@@ -42,9 +47,7 @@ class StreamSketchSpec extends SparkSpec {
     val dir = tempDir("sske").toString
     val src = s"$dir/landing"
     val terms = (1 to 50).flatMap(i => Seq.fill(i % 7 + 1)(s"t$i"))
-    val schema = Seq("x").toDF("term").schema
-    def run(): Long = StreamSketch.runAvailableNow(
-      spark, src, schema, "term", s"$dir/sink", s"$dir/ckpt")
+    def run(): Long = maintain(src, dir)
     val (w1, w2) = terms.splitAt(terms.size / 2)
     StreamWaves.stage(src, Seq(w1.toDF("term")))
     assert(run() == 1L)
@@ -52,7 +55,7 @@ class StreamSketchSpec extends SparkSpec {
     assert(run() == 1L)
     val probe = terms.distinct.toDF("term")
     val served = Sketches.countMinEstimate(
-        StreamSketch.currentCells(spark, s"$dir/sink"), probe, "term")
+        currentCells(dir), probe, "term")
       .as[(String, Long)].collect().toMap
     val batch = Sketches.countMinEstimate(
         Sketches.countMinCells(terms.toDF("term"), "term"),

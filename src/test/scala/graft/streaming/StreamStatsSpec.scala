@@ -1,12 +1,14 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.functions.Sketches
 
-/** The streaming quantile monitor must fold new batches into RESTORED
-  * sketch state (not recompute), emit one report row per updated group
-  * per batch, and converge to exactly the batch aggregate. */
+/** The streaming quantile monitor, [[Sketches.groupQuantiles]] run on a
+  * stream through [[StreamState.maintain]], must fold new batches into
+  * RESTORED sketch state (not recompute), emit one report row per
+  * updated group per batch, and converge to exactly the batch
+  * aggregate. */
 class StreamStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -14,15 +16,19 @@ class StreamStatsSpec extends SparkSpec {
     val dir = tempDir("sst").toString
     val src = s"$dir/landing"
     val schema = Seq(("a", 1L)).toDF("g", "v").schema
-    def run(): Long = StreamStats.runAvailableNow(
-      spark, src, schema, "g", "v", s"$dir/sink", s"$dir/ckpt")
+    def run(): Long = StreamState.maintain(Sketches.groupQuantiles(
+        StreamWaves.reader(spark, schema, src), Seq("g"), "v",
+        Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99)), capacity = 256),
+      s"$dir/sink", s"$dir/ckpt")
+    def report(batch: Int) =
+      spark.read.parquet(s"$dir/sink/batch_id=$batch")
+        .as[(String, Long, Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3, Seq(r._4, r._5, r._6)))).toMap
 
     // wave 1: group a sees 1..10 → p50 = 5, p90 = 9, p99 = 10
     StreamWaves.stage(src, Seq((1L to 10L).map(("a", _)).toDF("g", "v")))
     assert(run() == 1L)
-    val b0 = spark.read.parquet(s"$dir/sink/batch_id=0")
-      .as[(String, Long, Long, Seq[Long])].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    val b0 = report(0)
     assert(b0("a") == ((10L, 10L, Seq(5L, 9L, 10L))))
 
     // wave 2: group a sees 11..30 (state must carry the first 10: mass
@@ -32,9 +38,7 @@ class StreamStatsSpec extends SparkSpec {
     StreamWaves.stage(src,
       Seq(((11L to 30L).map(("a", _)) ++ Seq(("b", 7L))).toDF("g", "v")))
     assert(run() == 1L)
-    val b1 = spark.read.parquet(s"$dir/sink/batch_id=1")
-      .as[(String, Long, Long, Seq[Long])].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    val b1 = report(1)
     assert(b1("a") == ((30L, 30L, Seq(15L, 27L, 30L))))
     assert(b1("b") == ((1L, 1L, Seq(7L, 7L, 7L))))
 
@@ -42,13 +46,5 @@ class StreamStatsSpec extends SparkSpec {
     val before = spark.read.parquet(s"$dir/sink").count()
     assert(run() == 0L)
     assert(spark.read.parquet(s"$dir/sink").count() == before)
-  }
-
-  test("quantileOf matches the sketchQuantile arithmetic") {
-    val entries = Seq((1L, 40L), (5L, 80L), (9L, 40L), (100L, 40L))
-    assert(StreamStats.quantileOf(entries, 200L, 0.25) == 5L) // rank 50
-    assert(StreamStats.quantileOf(entries, 200L, 0.5) == 5L)  // rank 100
-    assert(StreamStats.quantileOf(entries, 200L, 1.0) == 100L)
-    assert(StreamStats.quantileOf(entries, 200L, 0.0) == 1L)  // floor rank 1
   }
 }
